@@ -3574,8 +3574,10 @@ def _q_dedup_rep_pagerank(spark, sf):
     min-id election that picks the doc most representative of the
     cluster.  The candidate pipeline materializes ONCE (truncated
     lineage) and feeds both the components loop and the rank loop."""
+    from mapreduce_faultolerrant_localityaware_spark.operators._materialize import (
+        materialize_once,
+    )
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        _truncate_lineage,
         connected_components,
         pagerank,
     )
@@ -3583,7 +3585,7 @@ def _q_dedup_rep_pagerank(spark, sf):
     pairs = dedup.dedup_simhash_pairs(
         scan(spark, sf, "documents"), max_hamming=3
     ).select("doc_a", "doc_b")
-    pairs = _truncate_lineage(pairs)
+    pairs = materialize_once(pairs)
     labels = connected_components(pairs)
     pr = pagerank(pairs, iters=5)
     j = labels.join(pr, labels["doc_id"] == pr["node"]).select(

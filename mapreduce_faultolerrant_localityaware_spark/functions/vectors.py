@@ -83,9 +83,15 @@ def lit_int_array(values) -> Column:
     from STRING like :func:`lit_long_array` — a bare ``-2147483648``
     parses as unary-minus over a BIGINT literal and would silently
     widen the whole array to ``array<bigint>`` (ADVICE r11); the
-    string cast keeps INT_MIN an INT."""
+    string cast keeps INT_MIN an INT.  A value outside int32 range
+    raises ``ValueError`` here: the cast would turn it into a NULL
+    element."""
+    ints = [int(v) for v in values]
+    bad = [v for v in ints if not -(2**31) <= v <= 2**31 - 1]
+    if bad:
+        raise ValueError(f"lit_int_array: {bad[:3]} outside the int32 range")
     return F.expr(
-        "cast(array(" + ",".join(f"'{int(v)}'" for v in values) + ") as array<int>)"
+        "cast(array(" + ",".join(f"'{v}'" for v in ints) + ") as array<int>)"
     )
 
 
@@ -104,6 +110,10 @@ def agg_array_expr(per_term_sql: str, dim: int) -> Column:
     parsed JVM-side in ONE ``F.expr`` call.  ``per_term_sql`` is a SQL
     template with ``{i}`` the 1-based element index, e.g.
     ``"sum(CAST(round(element_at(__v, {i}) * 1e6) AS BIGINT))"``.
+    ``{i}`` is the only placeholder allowed: the template goes through
+    ``str.format``, so any other brace must be doubled (``{{``/``}}``),
+    and identifiers spliced into it must already be backtick-quoted
+    and escaped.
 
     Round-12 (guide §7.3 driver-cost class, the lit_* sibling for
     aggregates): the embedding fits built their packed per-dimension

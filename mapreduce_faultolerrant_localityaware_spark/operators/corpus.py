@@ -893,9 +893,10 @@ def bpe_train(
     pairs.  No end-of-word marker is appended (whole-word tokens
     already come from the whitespace/letter pre-tokenizer).
     """
-    from .graph import _truncate_lineage
+    from ._materialize import Rounds, release_checkpoint
 
     spark = docs.sparkSession
+    rounds = Rounds(spark, "vocab")
     words = (
         ensure_parallelism(docs)
         .select(F.explode(tokens(text_col, lowercase=True)).alias("w"))
@@ -904,16 +905,16 @@ def bpe_train(
     )
     # symbols start as single characters: an in-row transform over the
     # word (substring(w, i, 1)) -- no UDF, no explode
-    vocab = _truncate_lineage(
+    vocab = rounds.cut(
+        0,
         words.select(
             "freq",
             F.expr(
                 "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
             ).alias("syms"),
-        )
+        ),
     )
     merges: list[tuple] = []
-    prev = None
     for step in range(1, n_merges + 1):
         pairs = (
             vocab.select(
@@ -946,22 +947,11 @@ def bpe_train(
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        new_vocab = _truncate_lineage(vocab.select("freq", apply_merge.alias("syms")))
-        if prev is not None:
-            from .graph import _release_checkpoint
-
-            _release_checkpoint(prev)
-        prev = vocab
-        vocab = new_vocab
+        vocab = rounds.cut(step, vocab.select("freq", apply_merge.alias("syms")))
     # the returned frame is built from DRIVER-side scalars (the merge
     # rules were collected per-iteration), so the surviving vocab
-    # checkpoints are dead weight — release them before returning
-    # (connected_components/pagerank discipline)
-    from .graph import _release_checkpoint
-
-    if prev is not None:
-        _release_checkpoint(prev)
-    _release_checkpoint(vocab)
+    # checkpoint is dead weight — release it before returning
+    release_checkpoint(vocab)
     return spark.createDataFrame(
         merges, "step long, left string, right string, merged string, pair_count long"
     )
@@ -989,7 +979,7 @@ def bpe_encode(
 
     Returns ``id_col, n_words, n_subwords, fertility`` (6 dp).
     """
-    from .graph import _truncate_lineage
+    from ._materialize import Rounds
 
     tk = ensure_parallelism(docs).select(
         F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("w")
@@ -1011,9 +1001,9 @@ def bpe_encode(
 
         return fold
 
-    # superseded checkpoints release as soon as the next one lands;
-    # the LAST one must stay alive — the returned lazy frame reads it
-    prev_ck = None
+    # each cut releases the one it supersedes; the LAST one stays
+    # alive — the returned lazy frame reads it
+    rounds = Rounds(docs.sparkSession, "vocab")
     for step, (a, b) in enumerate(merges, start=1):
         apply_merge = F.aggregate(
             "syms", F.array().cast("array<string>"), _merge_fold(a, b)
@@ -1022,12 +1012,7 @@ def bpe_encode(
         # keep the chained-fold expression tree codegen-sized: truncate
         # the (small) vocab frame every 4 rules
         if step % 4 == 0:
-            vocab = _truncate_lineage(vocab)
-            if prev_ck is not None:
-                from .graph import _release_checkpoint
-
-                _release_checkpoint(prev_ck)
-            prev_ck = vocab
+            vocab = rounds.cut(step, vocab)
     encoded = vocab.select("w", F.size("syms").alias("n_sub"))
     per_doc = tk.join(F.broadcast(encoded), "w").groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
@@ -2274,6 +2259,8 @@ def js_divergence(
     ``(source_a, source_b, n_a, n_b, union_types, jsd)`` ordered by
     the pair.
     """
+    from ._materialize import materialize_once
+
     tok = docs.select(
         F.col(group_col).alias("grp"), F.explode(tokens(F.col(text_col))).alias("t")
     )
@@ -2286,13 +2273,7 @@ def js_divergence(
     # garbage-collected (session.py sets
     # spark.cleaner.referenceTracking.cleanCheckpoints — without it,
     # reliable checkpoint FILES would outlive the frame)
-    try:
-        reliable = (
-            docs.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-        )
-    except Exception:  # noqa: BLE001
-        reliable = False
-    sc = sc.checkpoint(eager=False) if reliable else sc.localCheckpoint(eager=False)
+    sc = materialize_once(sc, eager=False)
     # the pair table is SOURCE-DOMAIN-sized (one row per slice pair):
     # build it driver-side from ONE bounded rollup aggregate — the
     # codebook-collect pattern (similarity.ann_ivf) — so the fan-out

@@ -1,14 +1,19 @@
 """Iterative graph operators: connected components over a pair list —
 the endgame of near-dup detection (candidate pairs → duplicate
-CLUSTERS, one representative per cluster).
+CLUSTERS, one representative per cluster) — plus PageRank, BFS, k-core
+and the other graph statistics of the near-dup graph.
 
 The reference has no iterative operators (single-shot batch, SURVEY
 §1.4); this is the canonical Spark-idiomatic iteration: a driver loop
-of DataFrame joins with ``localCheckpoint`` truncating the lineage
-each round so the plan doesn't grow unboundedly (the classic iterative
--algorithm failure mode).
+of DataFrame joins with a checkpoint cutting the lineage each round so
+the plan doesn't grow unboundedly (the classic iterative-algorithm
+failure mode).  How a round's state is persisted is decided in one
+place, :mod:`._materialize`.  ``connected_components`` and
+``pagerank`` run ONE loop either way: in memory by default, or
+journaled to ``journal_dir`` so a fresh driver resumes a killed run
+from its last committed round (:class:`._materialize.Rounds`).
 
-Two algorithms:
+Two connected-components algorithms:
   * ``connected_components`` — min-label propagation, O(diameter)
     rounds.  Near-dup graphs are overwhelmingly tiny cliques and
     chains (diameter ≤ ~3), so 5–10 rounds close ~all real corpora.
@@ -28,51 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._materialize import materialize_once
+from ._materialize import Rounds, materialize_once, release_checkpoint
 
-
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage — per-round plan
-    reset for the iterative loops.
-
-    When the session has a checkpoint directory configured
-    (``sc.setCheckpointDir``), uses a RELIABLE checkpoint: blocks are
-    backed by files on shared storage, so losing an executor mid-loop
-    re-reads the round's state instead of failing the job (a local
-    checkpoint's blocks die with their executor and its lineage is
-    already truncated — unrecoverable).  On a 1000-executor cluster
-    running a 20-round loop, executor loss is an expectation, not an
-    edge case; reliable checkpointing is the production posture, and
-    ``localCheckpoint`` the zero-setup local default.
-    """
-    sc = df.sparkSession.sparkContext
-    try:
-        reliable = sc._jsc.sc().getCheckpointDir().isDefined()
-    except Exception:
-        reliable = False
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a ``localCheckpoint``'s storage blocks deterministically.
-
-    Called only once NO future job can read them (the next round's
-    checkpoint has already materialized); without this, every round's
-    blocks linger until the ContextCleaner notices, and a long session
-    iterating many graphs accumulates executor storage.
-    ``DataFrame.unpersist`` only talks to the SQL cache manager, so
-    reach the checkpointed internal RDD through the plan's LogicalRDD
-    node.  Best-effort: on any reflection mismatch the blocks simply
-    age out via GC as before.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
+# the per-round barrier under the name perfbench/tracing.py wraps
+_truncate_lineage = materialize_once
 
 
 def connected_components(
@@ -81,6 +45,7 @@ def connected_components(
     dst: str = "doc_b",
     max_iter: int = 20,
     allow_partial: bool = False,
+    journal_dir: str | None = None,
 ) -> DataFrame:
     """(src, dst) undirected edge list → (id, cluster_id) where
     cluster_id is the minimum node id reachable from ``id``.
@@ -94,42 +59,48 @@ def connected_components(
     budget); pass ``allow_partial=True`` to get the partial labels
     instead, or use ``connected_components_two_phase`` for
     high-diameter graphs.
+
+    ``journal_dir`` makes the loop survive a DRIVER crash: the edges
+    and every round's labels are journaled there (``edges/``,
+    ``labels_rNNNN/``), and a call in a fresh session resumes from the
+    last committed round with identical labels.  The per-row ``chg``
+    flag is journaled WITH the labels, so a call over a converged
+    journal replays it without adding rounds; ``max_iter`` bounds
+    TOTAL rounds across all attempts.  Point it at shared storage
+    (s3a://, hdfs://) on a real cluster.
     """
+    rounds = Rounds(pairs.sparkSession, "labels", journal_dir)
     fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     rev = pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    edges = _truncate_lineage(fwd.unionByName(rev).distinct())
-
-    labels = edges.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
-
-    changed = -1
-    prev_ckpt = None
-    for _ in range(max_iter):
+    edges = rounds.once("edges", fwd.unionByName(rev).distinct())
+    init = edges.select(F.col("a").alias("id")).distinct().select(
+        "id", F.col("id").alias("label"), F.lit(True).alias("chg")
+    )
+    rnd, labels = rounds.resume(max_iter, init)
+    # round 0 flags every node as changed: no job needed to count it
+    changed = labels.filter("chg").count() if rnd else -1
+    while changed != 0 and rnd < max_iter:
+        rnd += 1
+        cur = labels.drop("chg")
         nbr_min = (
             edges.join(
-                labels.select(F.col("id").alias("b"), F.col("label").alias("nbr_label")), "b"
+                cur.select(F.col("id").alias("b"), F.col("label").alias("nbr_label")), "b"
             )
             .groupBy("a")
             .agg(F.min("nbr_label").alias("min_nbr"))
         )
         # the chg flag rides along in the SAME join pass that produces
-        # the new labels; the checkpoint materializes both at once and
-        # the count below reads cached blocks (no second join job).
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.a, "left")
-            .select(
-                labels.id,
-                F.least(labels.label, F.coalesce(F.col("min_nbr"), labels.label)).alias("label"),
-                (F.coalesce(F.col("min_nbr"), labels.label) < labels.label).alias("chg"),
-            )
+        # the new labels; the cut materializes both at once and the
+        # count below reads its blocks (no second join job).
+        labels = rounds.cut(
+            rnd,
+            cur.join(nbr_min, cur.id == nbr_min.a, "left").select(
+                cur.id,
+                F.least(cur.label, F.coalesce(F.col("min_nbr"), cur.label)).alias("label"),
+                (F.coalesce(F.col("min_nbr"), cur.label) < cur.label).alias("chg"),
+            ),
         )
-        new_labels = _truncate_lineage(new_labels)  # truncate lineage every round
-        if prev_ckpt is not None:
-            _release_checkpoint(prev_ckpt)  # new round materialized; old blocks dead
-        prev_ckpt = new_labels
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
+        changed = labels.filter("chg").count()
     if changed != 0 and not allow_partial:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
@@ -137,10 +108,9 @@ def connected_components(
             "the budget — raise max_iter, use connected_components_two_phase, "
             "or pass allow_partial=True."
         )
-
-    # the final labels checkpoint is self-contained — the edge blocks
-    # can be released before handing the result back.
-    _release_checkpoint(edges)
+    # the final labels cut is self-contained — the edge blocks can be
+    # released before handing the result back.
+    release_checkpoint(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -173,8 +143,8 @@ def connected_components_two_phase(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    edges = _truncate_lineage(edges)
-    all_nodes = _truncate_lineage(
+    edges = materialize_once(edges)
+    all_nodes = materialize_once(
         edges.select(F.col("u").alias("id"))
         .unionByName(edges.select(F.col("v").alias("id")))
         .distinct()
@@ -213,8 +183,8 @@ def connected_components_two_phase(
     prev = _digest(edges)
     prev_ckpt = edges
     for _ in range(max_iter):
-        edges = _truncate_lineage(_star(_star(edges, large=True), large=False))
-        _release_checkpoint(prev_ckpt)  # contracted edge set materialized; old blocks dead
+        edges = materialize_once(_star(_star(edges, large=True), large=False))
+        release_checkpoint(prev_ckpt)  # contracted edge set materialized; old blocks dead
         prev_ckpt = edges
         cur = _digest(edges)
         if cur == prev:
@@ -407,7 +377,7 @@ def bfs_hops(
     # materialize the (possibly expensive) edge derivation ONCE —
     # every round re-references `edges`, and without truncation each
     # round's lazy plan would re-run the upstream pair pipeline.
-    edges = _truncate_lineage(
+    edges = materialize_once(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .filter(F.col("u") != F.col("v"))
@@ -428,7 +398,7 @@ def bfs_hops(
         # are referenced by BOTH the next round's anti-join and the
         # final union — without materialization every reference
         # re-executes all prior rounds (2^rounds plan blowup).
-        new = _truncate_lineage(
+        new = materialize_once(
             nbrs.join(seen.select("node"), "node", "left_anti").withColumn(
                 "hops", F.lit(h)
             )
@@ -438,111 +408,12 @@ def bfs_hops(
     return seen.withColumn("hops", F.col("hops").cast("long"))
 
 
-def connected_components_resumable(
-    pairs: DataFrame,
-    journal_dir: str,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-    allow_partial: bool = False,
-) -> DataFrame:
-    """DRIVER-crash-resumable connected components: identical labels to
-    :func:`connected_components`, with every round's state journaled to
-    ``journal_dir`` as committed parquet so a FRESH session can pick up
-    where a dead driver stopped — the Spark analog of the reference's
-    master checkpoint/replica recovery (master/recovery.go:222-273,
-    ~900 LoC: the replica replays the master's persisted state and
-    resumes the job).  Reliable RDD checkpoints already survive
-    EXECUTOR loss, but they die with the SparkContext that wrote them;
-    a 100-TB multi-hour label propagation also has to survive the
-    driver pod being rescheduled, and this journal is that posture
-    (point ``journal_dir`` at shared storage — s3a://, hdfs:// — on a
-    real cluster).
-
-    Protocol: ``edges`` once, then ``labels_rNNNN`` per round, each
-    committed by Spark's ``_SUCCESS`` marker (a kill mid-write leaves
-    no marker, so resume deterministically redoes that round from the
-    previous committed one).  Convergence needs no extra marker: the
-    per-row ``chg`` flag is journaled WITH the labels, so a resumed
-    run re-aggregates it from the last committed round and returns
-    immediately if the loop had already converged.  ``max_iter``
-    bounds TOTAL rounds across all attempts.
-    """
-    import os
-
-    spark = pairs.sparkSession
-
-    def _committed(path: str) -> bool:
-        # Hadoop FS API, not os.path: the journal may be s3a://+hdfs://
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-        return p.getFileSystem(hconf).exists(p)
-
-    edges_path = os.path.join(journal_dir, "edges")
-    if not _committed(edges_path):
-        fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        rev = pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        fwd.unionByName(rev).distinct().write.mode("overwrite").parquet(edges_path)
-    edges = spark.read.parquet(edges_path)
-
-    def _round_path(i: int) -> str:
-        return os.path.join(journal_dir, f"labels_r{i:04d}")
-
-    last = None
-    for i in range(max_iter + 1):
-        if _committed(_round_path(i)):
-            last = i
-        else:
-            break
-    if last is None:
-        (
-            edges.select(F.col("a").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("label"), F.lit(True).alias("chg"))
-            .write.mode("overwrite")
-            .parquet(_round_path(0))
-        )
-        last = 0
-    labels = spark.read.parquet(_round_path(last))
-    changed = labels.filter("chg").count()
-    rnd = last
-    while changed and rnd < max_iter:
-        rnd += 1
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("id").alias("b"), F.col("label").alias("nbr_label")), "b"
-            )
-            .groupBy("a")
-            .agg(F.min("nbr_label").alias("min_nbr"))
-        )
-        cur = labels.drop("chg")
-        new_labels = cur.join(nbr_min, cur.id == nbr_min.a, "left").select(
-            cur.id,
-            F.least(cur.label, F.coalesce(F.col("min_nbr"), cur.label)).alias("label"),
-            (F.coalesce(F.col("min_nbr"), cur.label) < cur.label).alias("chg"),
-        )
-        new_labels.write.mode("overwrite").parquet(_round_path(rnd))
-        # read back the committed round: the journal IS the lineage
-        # truncation (no localCheckpoint needed), and a crash after
-        # this point resumes from exactly these files.
-        labels = spark.read.parquet(_round_path(rnd))
-        changed = labels.filter("chg").count()
-    if changed and not allow_partial:
-        raise RuntimeError(
-            f"connected_components_resumable did not converge in {max_iter} total "
-            f"rounds ({changed} labels still changing); raise max_iter or pass "
-            "allow_partial=True.  The journal is intact — a rerun with a larger "
-            "budget resumes from the last committed round."
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
 def pagerank(
     pairs: DataFrame,
     iters: int = 5,
     src: str = "doc_a",
     dst: str = "doc_b",
+    journal_dir: str | None = None,
 ) -> DataFrame:
     """Deterministic PageRank over an undirected edge list — the
     centrality score that ranks a near-dup cluster's "canonical"
@@ -563,34 +434,45 @@ def pagerank(
     The symmetrized graph has no dangling nodes by construction
     (every node has degree >= 1).
 
-    Returns ``node, rank_micro (bigint), rank (double, 6dp)``.
+    ``journal_dir`` journals the symmetrized edges (``edges/``) and
+    every round (``ranks_rNNNN/``, carrying ``node, deg, teleport,
+    rank_micro`` — all the next round needs) so a fresh session
+    resumes a killed run from its last committed round.  The integer
+    arithmetic makes a resumed run BIT-identical to an uninterrupted
+    one; ``iters`` counts TOTAL rounds, and a call over a finished
+    journal is a pure replay.
+
+    Returns ``node, rank_micro (bigint), pr (double, 6dp)``.
     """
-    sym = _truncate_lineage(
+    rounds = Rounds(pairs.sparkSession, "ranks", journal_dir)
+    sym = rounds.once(
+        "edges",
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .filter(F.col("s") != F.col("d"))
-        .distinct()
+        .distinct(),
     )
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n"))
     # init + teleport are integer functions of N, broadcast as a
     # 1-row scalar (computed IN the plan, not on the driver, so the
     # oracle's scalar subquery sees the identical value)
-    ranks = deg.crossJoin(F.broadcast(n_nodes)).select(
+    init = deg.crossJoin(F.broadcast(n_nodes)).select(
         F.col("s").alias("node"),
         "deg",
-        F.floor(1000000 / F.col("n")).cast("long").alias("rank_micro"),
         F.floor(150000 / F.col("n")).cast("long").alias("teleport"),
+        F.floor(1000000 / F.col("n")).cast("long").alias("rank_micro"),
     )
-    # the edge list is checkpointed ONCE (without it every round
-    # re-derives the whole candidate-pair pipeline: measured 14 s at
-    # sf0.1 for 5 rounds); ranks lineage is truncated only every
+    # the edge list is cut ONCE (without it every round re-derives the
+    # whole candidate-pair pipeline: measured 14 s at sf0.1 for 5
+    # rounds); in memory, ranks lineage is cut only every
     # CHECKPOINT_EVERY rounds — plan depth stays bounded for long
     # runs, while short runs skip the per-round eager-job overhead
-    # (5 rounds: 4.4 s with per-round checkpoints, 3.7 s without)
+    # (5 rounds: 4.4 s with per-round checkpoints, 3.7 s without).
+    # A journal commits every round.
     CHECKPOINT_EVERY = 5
-    prev = None
-    for i in range(iters):
+    rnd, ranks = rounds.resume(iters, init)
+    for i in range(rnd + 1, iters + 1):
         contrib = sym.join(
             ranks.withColumnRenamed("node", "s"), "s"
         ).select(F.col("d"), F.floor(F.col("rank_micro") / F.col("deg")).alias("c"))
@@ -607,119 +489,8 @@ def pagerank(
                 ).cast("long").alias("rank_micro"),
             )
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = _truncate_lineage(ranks)
-            if prev is not None:
-                _release_checkpoint(prev)
-            prev = ranks
-    return ranks.select(
-        "node",
-        "rank_micro",
-        F.round(F.col("rank_micro") / 1e6, 6).alias("pr"),
-    )
-
-
-def pagerank_resumable(
-    pairs: DataFrame,
-    journal_dir: str,
-    iters: int = 5,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
-    """DRIVER-crash-resumable PageRank: row-identical to
-    :func:`pagerank` (same integer fixed-point arithmetic), with every
-    power-iteration round journaled to ``journal_dir`` as committed
-    parquet so a fresh session resumes the loop where a dead driver
-    stopped — the same ``_SUCCESS``-marker protocol as
-    :func:`connected_components_resumable`, extending the reference's
-    master-replica recovery posture (master/recovery.go:222-273: the
-    replica replays ALL persisted phase state, not just one
-    algorithm's) to the second iterative operator.
-
-    Protocol: ``edges`` (symmetrized, distinct) journals once;
-    ``ranks_rNNNN`` journals per round carrying ``node, deg, teleport,
-    rank_micro`` — everything round N+1 needs, so resume never
-    re-derives degrees or the node count.  A kill mid-write leaves no
-    ``_SUCCESS`` marker and that round deterministically recomputes
-    from the previous committed one; because every step is integer
-    floor arithmetic, a resumed run is BIT-identical to an
-    uninterrupted one.  ``iters`` counts TOTAL rounds across all
-    attempts; a call over a finished journal is a pure replay (no new
-    rounds, no recompute of the committed prefix).
-
-    Returns ``node, rank_micro (bigint), pr (double, 6dp)``.
-    """
-    import os
-
-    spark = pairs.sparkSession
-
-    def _committed(path: str) -> bool:
-        # Hadoop FS API, not os.path: the journal may be s3a://+hdfs://
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-        return p.getFileSystem(hconf).exists(p)
-
-    edges_path = os.path.join(journal_dir, "edges")
-    if not _committed(edges_path):
-        (
-            pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-            .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-            .filter(F.col("s") != F.col("d"))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(edges_path)
-        )
-    sym = spark.read.parquet(edges_path)
-
-    def _round_path(i: int) -> str:
-        return os.path.join(journal_dir, f"ranks_r{i:04d}")
-
-    last = None
-    for i in range(iters + 1):
-        if _committed(_round_path(i)):
-            last = i
-        else:
-            break
-    if last is None:
-        deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        n_nodes = deg.agg(F.count(F.lit(1)).alias("n"))
-        (
-            deg.crossJoin(F.broadcast(n_nodes))
-            .select(
-                F.col("s").alias("node"),
-                "deg",
-                F.floor(150000 / F.col("n")).cast("long").alias("teleport"),
-                F.floor(1000000 / F.col("n")).cast("long").alias("rank_micro"),
-            )
-            .write.mode("overwrite")
-            .parquet(_round_path(0))
-        )
-        last = 0
-    ranks = spark.read.parquet(_round_path(last))
-    for rnd in range(last + 1, iters + 1):
-        contrib = sym.join(
-            ranks.withColumnRenamed("node", "s"), "s"
-        ).select(F.col("d"), F.floor(F.col("rank_micro") / F.col("deg")).alias("c"))
-        summed = contrib.groupBy("d").agg(F.sum("c").alias("in_mass"))
-        (
-            ranks.join(summed, ranks["node"] == summed["d"], "left")
-            .select(
-                "node",
-                "deg",
-                "teleport",
-                (
-                    F.col("teleport")
-                    + F.floor(F.coalesce(F.col("in_mass"), F.lit(0)) * 85 / 100)
-                ).cast("long").alias("rank_micro"),
-            )
-            .write.mode("overwrite")
-            .parquet(_round_path(rnd))
-        )
-        # read back the committed round: the journal IS the lineage
-        # truncation, and a crash after this point resumes from
-        # exactly these files.
-        ranks = spark.read.parquet(_round_path(rnd))
+        if journal_dir is not None or (i % CHECKPOINT_EVERY == 0 and i < iters):
+            ranks = rounds.cut(i, ranks)
     return ranks.select(
         "node",
         "rank_micro",
@@ -753,7 +524,7 @@ def label_propagation(
 
     Returns ``node, label`` for every node with at least one edge.
     """
-    edges = _truncate_lineage(
+    edges = materialize_once(
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .filter(F.col("s") != F.col("d"))
@@ -769,7 +540,7 @@ def label_propagation(
             .groupBy("s", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = _truncate_lineage(
+        labels = materialize_once(
             votes.groupBy("s")
             .agg(
                 (
@@ -802,14 +573,14 @@ def kcore_peel(
 
     Per round: ONE partial-agged degree groupBy + two semi-joins to
     keep edges whose BOTH endpoints have degree >= k; the edge frame
-    is lineage-truncated per round (bounded plan depth, journaling
-    posture identical to the other iterative loops).  Shuffles carry
+    is lineage-truncated per round (bounded plan depth, the same
+    per-round cut as the other iterative loops).  Shuffles carry
     (node) / (node, node) ids only.
 
     Returns ``node, core_deg`` for nodes still present after
     ``rounds`` peels, with their degree in the surviving subgraph.
     """
-    edges = _truncate_lineage(
+    edges = materialize_once(
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .filter(F.col("s") != F.col("d"))
@@ -818,7 +589,7 @@ def kcore_peel(
     for _ in range(rounds):
         deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
         keep = deg.filter(F.col("c") >= k).select("s")
-        edges = _truncate_lineage(
+        edges = materialize_once(
             edges.join(keep, "s", "left_semi").join(
                 keep.withColumnRenamed("s", "d"), "d", "left_semi"
             )
@@ -1042,7 +813,7 @@ def boruvka_msf(
     while cross-component edges remain, raises ``RuntimeError`` rather
     than returning a silently partial forest (ADVICE r8).
     """
-    e = _truncate_lineage(
+    e = materialize_once(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -1069,26 +840,26 @@ def boruvka_msf(
         offers = lab.select(F.col("ca").alias("comp"), "w", "a", "b").unionByName(
             lab.select(F.col("cb").alias("comp"), "w", "a", "b")
         )
-        elected = _truncate_lineage(
+        elected = materialize_once(
             offers.groupBy("comp")
             .agg(F.min(F.struct("w", "a", "b")).alias("m"))
             .select(F.col("m.a").alias("a"), F.col("m.b").alias("b"), F.col("m.w").alias("w"))
             .distinct()
         )
         if elected.isEmpty():
-            _release_checkpoint(elected)
+            release_checkpoint(elected)
             converged = True
             break
         if chosen is None:
             chosen = elected
         else:
-            new_chosen = _truncate_lineage(chosen.unionByName(elected).distinct())
+            new_chosen = materialize_once(chosen.unionByName(elected).distinct())
             # the union is materialized: the superseded accumulator's
             # blocks are dead — release now, not at GC time (a
             # many-round run would otherwise pile up one dead
             # checkpoint per round on executor storage).  `elected`
             # stays live: the contraction below still reads it.
-            _release_checkpoint(chosen)
+            release_checkpoint(chosen)
             chosen = new_chosen
         # contract: merge components along the elected edges.  The
         # election graph has ≤ |components| edges — model-sized
@@ -1102,7 +873,7 @@ def boruvka_msf(
             .select("ca", "cb")
         )
         merged = connected_components_two_phase(comp_edges, src="ca", dst="cb")
-        new_comp = _truncate_lineage(
+        new_comp = materialize_once(
             comp.join(
                 merged.select(F.col("doc_id").alias("c"), F.col("cluster_id")),
                 "c",
@@ -1110,14 +881,14 @@ def boruvka_msf(
             ).select("id", F.coalesce("cluster_id", F.col("c")).alias("c"))
         )
         if prev_comp_ckpt is not None:
-            _release_checkpoint(prev_comp_ckpt)
+            release_checkpoint(prev_comp_ckpt)
         prev_comp_ckpt = new_comp
         comp = new_comp
         # both consumers of this round's election (the chosen union and
         # the contraction) are materialized; its blocks are now dead —
         # unless it IS the accumulator (first round).
         if elected is not chosen:
-            _release_checkpoint(elected)
+            release_checkpoint(elected)
     if not converged:
         # max_iter exhausted without an empty election round: a
         # silently partial forest is corruption, not a result — verify
@@ -1143,9 +914,9 @@ def boruvka_msf(
         result = e.sparkSession.createDataFrame([], out_schema)
     else:
         result = chosen.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-    _release_checkpoint(e)
+    release_checkpoint(e)
     if prev_comp_ckpt is not None:
-        _release_checkpoint(prev_comp_ckpt)
+        release_checkpoint(prev_comp_ckpt)
     return result
 
 
@@ -1297,7 +1068,7 @@ def modularity(
     # (AQE does NOT reuse the shared aggregate stage across branches —
     # measured, not assumed; the k-row footprint makes this the
     # bounded-codebook checkpoint shape, not a raw-data cache)
-    dmass = _truncate_lineage(dmass)
+    dmass = materialize_once(dmass)
     # Σ D_c over all communities counts every edge end once = 2m;
     # `div` keeps both halvings exact BIGINT arithmetic
     tot = dmass.agg(F.sum("d_total").cast("long").alias("dd"))

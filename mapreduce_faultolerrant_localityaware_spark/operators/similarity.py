@@ -38,9 +38,12 @@ def _xm_sql(vec_col: str, dim: int) -> str:
     """SQL template (``{i}`` = 1-based index) for the integer-micro
     component — the exact tree ``F.round(F.element_at(slice(cast(vc
     as array<double>), 1, dim), i) * 1e6).cast("long")`` builds, for
-    :func:`~..functions.vectors.agg_array_expr` packing."""
+    :func:`~..functions.vectors.agg_array_expr` packing.  The column
+    name is escaped for both the backtick quoting and the template's
+    ``str.format``."""
+    quoted = vec_col.replace("`", "``").replace("{", "{{").replace("}", "}}")
     return (
-        f"CAST(round(element_at(slice(cast(`{vec_col}` as array<double>),"
+        f"CAST(round(element_at(slice(cast(`{quoted}` as array<double>),"
         f" 1, {dim}), {{i}}) * 1e6) AS BIGINT)"
     )
 

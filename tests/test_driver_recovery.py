@@ -5,7 +5,7 @@ round-5 review called out as the one reference subsystem without a
 demonstrated engine counterpart.
 
 A subprocess driver runs the journaled connected-components loop
-(``connected_components_resumable``) over the SAME near-dup candidate
+(``connected_components(..., journal_dir=...)``) over the SAME near-dup candidate
 edges ``dedup_clusters`` uses, gets SIGKILLed mid-loop, and a FRESH
 driver process pointed at the same journal must (a) resume from the
 last committed round instead of round 0 and (b) produce labels
@@ -37,7 +37,7 @@ SCRIPT = textwrap.dedent(
     sys.path.insert(0, ".")
     from pyspark.sql import SparkSession, functions as F
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        connected_components_resumable,
+        connected_components,
     )
 
     journal = sys.argv[1]
@@ -53,7 +53,7 @@ SCRIPT = textwrap.dedent(
         spark.range(N).filter("id % 8 != 7")
         .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
     )
-    labels = connected_components_resumable(edges, journal, max_iter=15).collect()
+    labels = connected_components(edges, max_iter=15, journal_dir=journal).collect()
     assert len(labels) == N, len(labels)
     bad = [r for r in labels if r["cluster_id"] != r["doc_id"] - r["doc_id"] % 8]
     assert not bad, bad[:3]
@@ -134,7 +134,6 @@ def test_resumable_matches_plain_cc_on_dedup_clusters_edges(spark, sf_dir):
     from mapreduce_faultolerrant_localityaware_spark.operators import dedup
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
         connected_components,
-        connected_components_resumable,
     )
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 
@@ -146,7 +145,7 @@ def test_resumable_matches_plain_cc_on_dedup_clusters_edges(spark, sf_dir):
         }
         resumed = {
             (r["doc_id"], r["cluster_id"])
-            for r in connected_components_resumable(pairs, journal).collect()
+            for r in connected_components(pairs, journal_dir=journal).collect()
         }
         assert plain == resumed
         # and a SECOND call over the finished journal is a pure replay:
@@ -154,7 +153,7 @@ def test_resumable_matches_plain_cc_on_dedup_clusters_edges(spark, sf_dir):
         n_rounds = len(_committed_rounds(journal))
         again = {
             (r["doc_id"], r["cluster_id"])
-            for r in connected_components_resumable(pairs, journal).collect()
+            for r in connected_components(pairs, journal_dir=journal).collect()
         }
         assert again == plain
         assert len(_committed_rounds(journal)) == n_rounds

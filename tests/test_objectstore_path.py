@@ -81,7 +81,7 @@ def test_resumable_journal_over_nonlocal_scheme(spark):
     storage (s3a/hdfs) because it uses the Hadoop FS API for commit
     checks — prove it by journaling through viewfs://."""
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        connected_components_resumable,
+        connected_components,
     )
 
     tmp = tempfile.mkdtemp(prefix="sparkgraft_viewfs_journal_")
@@ -92,7 +92,7 @@ def test_resumable_journal_over_nonlocal_scheme(spark):
             .filter("id % 8 != 7")
             .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
         )
-        labels = connected_components_resumable(edges, f"{root}/journal").collect()
+        labels = connected_components(edges, journal_dir=f"{root}/journal").collect()
         assert len(labels) == 64
         assert all(r["cluster_id"] == r["doc_id"] - r["doc_id"] % 8 for r in labels)
         # journal rounds really landed behind the mount
@@ -171,7 +171,7 @@ MOCKS3_SCRIPT = textwrap.dedent(
     from mapreduce_faultolerrant_localityaware_spark.sources import sinks
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        connected_components_resumable,
+        connected_components,
     )
 
     nation = scan(spark, sf_dir, "nation")
@@ -204,7 +204,7 @@ MOCKS3_SCRIPT = textwrap.dedent(
     # resumable journal (_SUCCESS commit checks via the Hadoop FS API)
     edges = (spark.range(64).filter("id % 8 != 7")
              .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")))
-    labels = connected_components_resumable(edges, "mocks3://bucket/journal").collect()
+    labels = connected_components(edges, journal_dir="mocks3://bucket/journal").collect()
     assert len(labels) == 64
     assert all(r["cluster_id"] == r["doc_id"] - r["doc_id"] % 8 for r in labels)
     assert any(d.startswith("labels_r")

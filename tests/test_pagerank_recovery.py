@@ -3,7 +3,7 @@ master-replica recovery posture (reference master/recovery.go:222-273:
 the replica replays ALL persisted phase state) beyond connected
 components to the second iterative operator, per round-6 review item 7.
 
-A subprocess driver runs ``pagerank_resumable``, is SIGKILLed after at
+A subprocess driver runs ``pagerank(..., journal_dir=...)``, is SIGKILLed after at
 least two committed power-iteration rounds, and a FRESH driver pointed
 at the same journal must (a) reuse the committed prefix (no recompute)
 and (b) finish with ranks BIT-identical to an uninterrupted
@@ -34,7 +34,7 @@ SCRIPT = textwrap.dedent(
     sys.path.insert(0, ".")
     from pyspark.sql import SparkSession, functions as F
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        pagerank, pagerank_resumable,
+        pagerank,
     )
 
     journal = sys.argv[1]
@@ -50,7 +50,7 @@ SCRIPT = textwrap.dedent(
         spark.range(N).filter("id % 8 != 7")
         .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
     )
-    got = pagerank_resumable(edges, journal, iters=10).collect()
+    got = pagerank(edges, iters=10, journal_dir=journal).collect()
     want = pagerank(edges, iters=10).collect()
     gm = {r["node"]: (r["rank_micro"], r["pr"]) for r in got}
     wm = {r["node"]: (r["rank_micro"], r["pr"]) for r in want}
@@ -124,7 +124,6 @@ def test_pagerank_resumable_matches_plain_on_dedup_edges(spark, sf_dir):
     from mapreduce_faultolerrant_localityaware_spark.operators import dedup
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
         pagerank,
-        pagerank_resumable,
     )
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 
@@ -137,13 +136,13 @@ def test_pagerank_resumable_matches_plain_on_dedup_edges(spark, sf_dir):
         }
         resumed = {
             r["node"]: (r["rank_micro"], r["pr"])
-            for r in pagerank_resumable(pairs, journal, iters=5).collect()
+            for r in pagerank(pairs, iters=5, journal_dir=journal).collect()
         }
         assert plain == resumed
         n_rounds = len(_committed_rounds(journal))
         again = {
             r["node"]: (r["rank_micro"], r["pr"])
-            for r in pagerank_resumable(pairs, journal, iters=5).collect()
+            for r in pagerank(pairs, iters=5, journal_dir=journal).collect()
         }
         assert again == plain
         assert len(_committed_rounds(journal)) == n_rounds

@@ -3,16 +3,8 @@
 workload — for regression adjudication without the full suite.
 
 Usage: python tools/bench_subset.py q1 q2 ...
-       python tools/bench_subset.py --slope [q1 q2 ...]
 
-``--slope``: run each query at sf0.001/0.01/0.1 IN ONE SESSION and
-print the scaling slope per 10x data step — the check that catches a
-superlinear operator while it still looks fine at sf0.1 (at 100x it
-doesn't).  With no queries given, defaults to the 10 slowest
-headliners of the committed local bench.  A step ratio is flagged when
-warm(sf_hi)/warm(sf_lo) > 1.3 x the 10x row-count ratio; the sf0.001 →
-0.01 step is reported but overhead-dominated (fixed per-query cost
-floors it), so the 0.01 → 0.1 step is the adjudication signal.
+For scaling slopes across SFs use ``tools/slopes.py``.
 """
 
 from __future__ import annotations
@@ -28,57 +20,8 @@ import __spark_entry__ as entry_mod
 from mapreduce_faultolerrant_localityaware_spark.session import get_spark
 
 
-#: default --slope set: the 10 slowest headliners (by the committed
-#: local bench at the time of writing; pass names to override)
-SLOWEST = [
-    "graph_pagerank", "simjoin_cosine", "dedup_incremental_fuzzy",
-    "lm_score", "dedup_pipeline", "simjoin_prefix", "dedup_embedding_srp",
-    "bm25_search", "dedup_clusters", "contamination_fuzzy",
-]
-
-SLOPE_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-
-
-def _slope(names: list[str]) -> None:
-    import json as _json
-
-    spark = get_spark("bench-slope")
-    qs = entry_mod.queries()
-
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    materialize(qs["sort_limit"](spark, SLOPE_SFS[0]))
-    out = {"sfs": SLOPE_SFS, "queries": {}}
-    for name in names or SLOWEST:
-        warms_by_sf = []
-        for sf_dir in SLOPE_SFS:
-            materialize(qs[name](spark, sf_dir))  # cold (codegen/footers)
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                materialize(qs[name](spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-            warms_by_sf.append(round(min(runs), 3))
-        r01 = round(warms_by_sf[1] / warms_by_sf[0], 2) if warms_by_sf[0] else None
-        r12 = round(warms_by_sf[2] / warms_by_sf[1], 2) if warms_by_sf[1] else None
-        flag = bool(r12 and r12 > 13.0)  # 1.3 x the 10x row-count step
-        out["queries"][name] = {
-            "warm_sec": warms_by_sf,
-            "ratio_001_01": r01,
-            "ratio_01_1": r12,
-            "superlinear": flag,
-        }
-        print(f"{name:28s} {warms_by_sf}  x{r01} x{r12}"
-              + ("  <-- SUPERLINEAR" if flag else ""))
-    print(_json.dumps(out))
-
-
 def main() -> None:
     names = sys.argv[1:]
-    if names and names[0] == "--slope":
-        _slope(names[1:])
-        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench-subset")
     qs = entry_mod.queries()
