@@ -3,8 +3,14 @@
 ``entry(spark)`` — flagship word-count query on sf0.001.
 ``queries()`` — every implemented operator from SURVEY.md §2.3 plus
 the training-data-pipeline extensions (dedup / similarity / text
-analysis / multimodal metadata), each as (spark, sf_dir) -> DataFrame.
+analysis / multimodal metadata), each as (spark, sf_dir) -> DataFrame,
+derived from the module's ``_q_<name>`` functions.
 ``oracle_sql()`` — the DuckDB-equivalent ANSI SQL for each query.
+
+To add a query, define ``_q_<name>``, then add its ``oracle_sql()``
+entry or a ``NO_ORACLE`` reason (tests/test_artifact_freshness.py),
+then regenerate the CORRECTNESS artifacts (tools/check_oracle.py
+--json).
 
 Column-name + type parity rules used throughout: every computed
 column is aliased identically on both sides; integer outputs are cast
@@ -3791,7 +3797,7 @@ def _q_streaming_join_agg(spark, sf):
     )
 
 
-def _q_attribution(spark, sf):
+def _q_attribution_multi_touch(spark, sf):
     """Multi-touch attribution (operators/events.py:
     attribution_multi_touch): purchases credit their 7-day-lookback
     view/click touches — linear credit in exact integer milli-cents
@@ -3800,7 +3806,7 @@ def _q_attribution(spark, sf):
     return events_ops.attribution_multi_touch(ev)
 
 
-def _q_changepoint(spark, sf):
+def _q_changepoint_detect(spark, sf):
     """Exact single-changepoint split of the daily order-count series
     (operators/events.py:changepoint_detect): CUSUM-style separation
     maximized over exact BIGINT prefix sums, earliest-split tiebreak."""
@@ -3824,7 +3830,7 @@ def _q_crosscorr(spark, sf):
     return events_ops.crosscorr(daily, "d", "x", "y", max_lag=3)
 
 
-def _q_spearman(spark, sf):
+def _q_spearman_corr(spark, sf):
     """Spearman rank correlation of daily click vs purchase counts
     (operators/events.py:spearman_corr): doubled average ranks stay
     exact BIGINTs, one float closed form."""
@@ -4160,7 +4166,7 @@ def _q_percentile_trend(spark, sf):
     )
 
 
-def _q_readability(spark, sf):
+def _q_readability_scores(spark, sf):
     """Flesch + Flesch-Kincaid readability per doc
     (operators/textstats.py:readability_scores): vowel-group syllable
     estimator, exact in-row counts, map-only."""
@@ -4187,7 +4193,7 @@ def _q_graph_clustering(spark, sf):
     return clustering_coefficient(pairs)
 
 
-def _q_price_volume(spark, sf):
+def _q_price_volume_decomposition(spark, sf):
     """Month-over-month Laspeyres revenue waterfall
     (operators/events.py:price_volume_decomposition): price vs volume
     vs joint effects from exact cent/quantity month aggregates."""
@@ -4663,375 +4669,8 @@ def _q_graph_modularity(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "wordcount": _q_wordcount,
-        "filter_project": _q_filter_project,
-        "group_agg": _q_group_agg,
-        "group_agg_distinct": _q_group_agg_distinct,
-        "sort_limit": _q_sort_limit,
-        "distinct": _q_distinct,
-        "union": _q_union,
-        "join_broadcast": _q_join_broadcast,
-        "join_large": _q_join_large,
-        "join_semi": _q_join_semi,
-        "join_anti": _q_join_anti,
-        "join_null_safe": _q_join_null_safe,
-        "merge_upsert": _q_merge_upsert,
-        "window_rank": _q_window_rank,
-        "window_running": _q_window_running,
-        "rollup": _q_rollup,
-        "events_tumbling": _q_events_tumbling,
-        "repartition_agg": _q_repartition_agg,
-        "pivot": _q_pivot,
-        "cube": _q_cube,
-        "intersect": _q_intersect,
-        "except": _q_except,
-        "intersect_all": _q_intersect_all,
-        "except_all": _q_except_all,
-        "join_part": _q_join_part,
-        "subquery_above_avg": _q_subquery_above_avg,
-        "events_json": _q_events_json,
-        "events_variant": _q_events_variant,
-        "window_lag": _q_window_lag,
-        "sessionize": _q_sessionize,
-        "minhash_signatures": _q_minhash_signatures,
-        "minhash_accuracy": _q_minhash_accuracy,
-        "text_tokens": _q_text_tokens,
-        "token_bpe": _q_token_bpe,
-        "text_quality": _q_text_quality,
-        "text_entropy": _q_text_entropy,
-        "tokens_to_ids": _q_tokens_to_ids,
-        "lm_score": _q_lm_score,
-        "chunk_overlap": _q_chunk_overlap,
-        "zipf_fit": _q_zipf_fit,
-        "lang_id": _q_lang_id,
-        "fingerprint": _q_fingerprint,
-        "scrub_text": _q_scrub_text,
-        "sample_stratified": _q_sample_stratified,
-        "vocab_top_tokens": _q_vocab_top_tokens,
-        "repetition_ratio": _q_repetition_ratio,
-        "embedding_norms": _q_embedding_norms,
-        "tfidf_top_terms": _q_tfidf_top_terms,
-        "bigram_counts": _q_bigram_counts,
-        "contamination": _q_contamination,
-        "contamination_fuzzy": _q_contamination_fuzzy,
-        "dsir_weights": _q_dsir_weights,
-        "bm25_search": _q_bm25_search,
-        "length_filter": _q_length_filter,
-        "pack_sequences": _q_pack_sequences,
-        "mixture_report": _q_mixture_report,
-        "mixture_weights": _q_mixture_weights,
-        "sentence_stats": _q_sentence_stats,
-        "unicode_stats": _q_unicode_stats,
-        "decayed_sum": _q_decayed_sum,
-        "sample_weighted": _q_sample_weighted,
-        "heavy_hitters": _q_heavy_hitters,
-        "quality_gate": _q_quality_gate,
-        "gopher_rules": _q_gopher_rules,
-        "quality_logit": _q_quality_logit,
-        "pii_extended": _q_pii_extended,
-        "html_clean": _q_html_clean,
-        "c4_line_filter": _q_c4_line_filter,
-        "softdedup_weights": _q_softdedup_weights,
-        "gopher_repetition": _q_gopher_repetition,
-        "ccnet_buckets": _q_ccnet_buckets,
-        "pii_report": _q_pii_report,
-        "split_leakage": _q_split_leakage,
-        "winsorize": _q_winsorize,
-        "lang_confusion": _q_lang_confusion,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_url": _q_dedup_url,
-        "dedup_minhash": _q_dedup_minhash,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_simhash_pairs": _q_dedup_simhash_pairs,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "simjoin_prefix": _q_simjoin_prefix,
-        "dedup_sorted_neighborhood": _q_dedup_sorted_neighborhood,
-        "dedup_snm_multikey": _q_dedup_snm_multikey,
-        "simjoin_cosine": _q_simjoin_cosine,
-        "dedup_substring": _q_dedup_substring,
-        "dedup_report": _q_dedup_report,
-        "dedup_exact_keep_best": _q_dedup_exact_keep_best,
-        "keyword_contexts": _q_keyword_contexts,
-        "dedup_editdist": _q_dedup_editdist,
-        "dedup_chunks": _q_dedup_chunks,
-        "dedup_incremental": _q_dedup_incremental,
-        "dedup_incremental_fuzzy": _q_dedup_incremental_fuzzy,
-        "streaming_fuzzy_dedup": _q_streaming_fuzzy_dedup,
-        "dedup_incremental_jaccard": _q_dedup_incremental_jaccard,
-        "cms_counts": _q_cms_counts,
-        "lsh_recall_report": _q_lsh_recall_report,
-        "graph_bfs": _q_graph_bfs,
-        "key_skew_report": _q_key_skew_report,
-        "mixture_sample": _q_mixture_sample,
-        "embedding_quantize": _q_embedding_quantize,
-        "dedup_embedding": _q_dedup_embedding,
-        "dedup_semantic": _q_dedup_semantic,
-        "dedup_semantic_pipeline": _q_dedup_semantic_pipeline,
-        "rp_project_audit": _q_rp_project_audit,
-        "dedup_embedding_srp": _q_dedup_embedding_srp,
-        "lsh_bucket_stats": _q_lsh_bucket_stats,
-        "ann_bruteforce": _q_ann_bruteforce,
-        "ann_filtered": _q_ann_filtered,
-        "embedding_outliers": _q_embedding_outliers,
-        "ann_hard_negatives": _q_ann_hard_negatives,
-        "ann_recall_report": _q_ann_recall_report,
-        "ann_ivf": _q_ann_ivf,
-        "ann_ivf_kmeans": _q_ann_ivf_kmeans,
-        "ann_incremental": _q_ann_incremental,
-        "ann_index_drift": _q_ann_index_drift,
-        "csv_roundtrip": _q_csv_roundtrip,
-        "orc_roundtrip": _q_orc_roundtrip,
-        "json_roundtrip": _q_json_roundtrip,
-        "partitioned_roundtrip": _q_partitioned_roundtrip,
-        "clustered_roundtrip": _q_clustered_roundtrip,
-        "zorder_roundtrip": _q_zorder_roundtrip,
-        "multimodal_meta": _q_multimodal_meta,
-        "multimodal_phash": _q_multimodal_phash,
-        "multimodal_resize": _q_multimodal_resize,
-        "multimodal_frames": _q_multimodal_frames,
-        "ann_sq8": _q_ann_sq8,
-        "ann_pq": _q_ann_pq,
-        "ann_ivfpq": _q_ann_ivfpq,
-        "streaming_wordcount": _q_streaming_wordcount,
-        "streaming_quality_filter": _q_streaming_quality_filter,
-        "streaming_ohlc": _q_streaming_ohlc,
-        "streaming_tumbling": _q_streaming_tumbling,
-        "streaming_enrich": _q_streaming_enrich,
-        "streaming_sliding": _q_streaming_sliding,
-        "streaming_dedup_keys": _q_streaming_dedup_keys,
-        "streaming_incremental_dedup": _q_streaming_incremental_dedup,
-        "streaming_sessionize": _q_streaming_sessionize,
-        "streaming_session_window": _q_streaming_session_window,
-        "streaming_sessionize_flush": _q_streaming_sessionize_flush,
-        "streaming_idempotent_sink": _q_streaming_idempotent_sink,
-        "streaming_dedup_update": _q_streaming_dedup_update,
-        "ann_range_search": _q_ann_range_search,
-        "srm_check": _q_srm_check,
-        "token_budget_sample": _q_token_budget_sample,
-        "streaming_cdc_apply": _q_streaming_cdc_apply,
-        "streaming_topk": _q_streaming_topk,
-        "lateral_topk": _q_lateral_topk,
-        "events_pattern": _q_events_pattern,
-        "rolling_median": _q_rolling_median,
-        "graph_degree_hist": _q_graph_degree_hist,
-        "graph_assortativity": _q_graph_assortativity,
-        "graph_msf": _q_graph_msf,
-        "neyman_allocation": _q_neyman_allocation,
-        "isotonic_fit": _q_isotonic_fit,
-        "spearman_corr": _q_spearman,
-        "mutual_information": _q_mutual_information,
-        "session_rules": _q_session_rules,
-        "chisq_independence": _q_chisq_independence,
-        "benford_digits": _q_benford_digits,
-        "autocorr": _q_autocorr,
-        "hampel_outliers": _q_hampel_outliers,
-        "window_distinct": _q_window_distinct,
-        "attribution_multi_touch": _q_attribution,
-        "changepoint_detect": _q_changepoint,
-        "crosscorr": _q_crosscorr,
-        "ab_test": _q_ab_test,
-        "weighted_median": _q_weighted_median,
-        "seasonal_decompose": _q_seasonal_decompose,
-        "survival_km": _q_survival_km,
-        "theil_sen": _q_theil_sen,
-        "class_diversity": _q_class_diversity,
-        "k_anonymity": _q_k_anonymity,
-        "multimodal_dedup": _q_multimodal_dedup,
-        "simjoin_containment": _q_simjoin_containment,
-        "session_paths": _q_session_paths,
-        "percentile_trend": _q_percentile_trend,
-        "readability_scores": _q_readability,
-        "lang_mixture": _q_lang_mixture,
-        "graph_clustering": _q_graph_clustering,
-        "price_volume_decomposition": _q_price_volume,
-        "new_vs_returning": _q_new_vs_returning,
-        "roc_auc": _q_roc_auc,
-        "lift_table": _q_lift_table,
-        "calibration_table": _q_calibration_table,
-        "welch_ttest": _q_welch_ttest,
-        "cohens_kappa": _q_cohens_kappa,
-        "wilson_ci": _q_wilson_ci,
-        "anova_oneway": _q_anova_oneway,
-        "kruskal_wallis": _q_kruskal_wallis,
-        "levene_test": _q_levene_test,
-        "cochran_armitage": _q_cochran_armitage,
-        "power_sample_size": _q_power_sample_size,
-        "interval_sweep": _q_interval_sweep,
-        "graph_jaccard_neighbors": _q_graph_jaccard_neighbors,
-        "js_divergence": _q_js_divergence,
-        "contamination_embedding": _q_contamination_embedding,
-        "bh_significance": _q_bh_significance,
-        "hll_rollup": _q_hll_rollup,
-        "quantile_rollup": _q_quantile_rollup,
-        "roc_auc_continuous": _q_roc_auc_continuous,
-        "percent_rank_global": _q_percent_rank_global,
-        "ndcg_eval": _q_ndcg_eval,
-        "retrieval_metrics": _q_retrieval_metrics,
-        "forecast_baseline": _q_forecast_baseline,
-        "delta_method_ratio": _q_delta_method_ratio,
-        "tokenizer_fertility": _q_tokenizer_fertility,
-        "column_profile": _q_column_profile,
-        "referential_audit": _q_referential_audit,
-        "tpch_refresh": _q_tpch_refresh,
-        "growth_accounting": _q_growth_accounting,
-        "diff_in_diff": _q_diff_in_diff,
-        "cramers_v": _q_cramers_v,
-        "durbin_watson": _q_durbin_watson,
-        "token_dispersion": _q_token_dispersion,
-        "centroid_cosine_matrix": _q_centroid_cosine_matrix,
-        "ewma_smooth": _q_ewma_smooth,
-        "kendall_tau": _q_kendall_tau,
-        "mh_odds_ratio": _q_mh_odds_ratio,
-        "mannwhitney_u": _q_mannwhitney_u,
-        "cuped_adjust": _q_cuped_adjust,
-        "runs_test": _q_runs_test,
-        "cohort_ltv": _q_cohort_ltv,
-        "gini_index": _q_gini_index,
-        "rfm_segments": _q_rfm_segments,
-        "streaming_join": _q_streaming_join,
-        "streaming_join_outer": _q_streaming_join_outer,
-        "streaming_join_full": _q_streaming_join_full,
-        "streaming_join_agg": _q_streaming_join_agg,
-        "events_funnel": _q_events_funnel,
-        "pipeline_clean": _q_pipeline_clean,
-        "resample_ffill": _q_resample_ffill,
-        "resample_interp": _q_resample_interp,
-        "asof_join_nearest": _q_asof_join_nearest,
-        "group_mode": _q_group_mode,
-        "twap": _q_twap,
-        "events_cusum": _q_events_cusum,
-        "bloom_semi_audit": _q_bloom_semi_audit,
-        "rrf_fusion": _q_rrf_fusion,
-        "pareto_front": _q_pareto_front,
-        "ngram_novelty": _q_ngram_novelty,
-        "mad_outliers": _q_mad_outliers,
-        "mmr_diversify": _q_mmr_diversify,
-        "markov_transitions": _q_markov_transitions,
-        "embedding_centroids": _q_embedding_centroids,
-        "embedding_covariance": _q_embedding_covariance,
-        "pca_project": _q_pca_project,
-        "quantile_normalize": _q_quantile_normalize,
-        "unigram_kl": _q_unigram_kl,
-        "events_regression": _q_events_regression,
-        "corr_matrix": _q_corr_matrix,
-        "streaming_late_data": _q_streaming_late_data,
-        "dedup_overlap_matrix": _q_dedup_overlap_matrix,
-        "interarrival_stats": _q_interarrival_stats,
-        "session_stats": _q_session_stats,
-        "active_users": _q_active_users,
-        "split_stratified_exact": _q_split_stratified_exact,
-        "psi_drift": _q_psi_drift,
-        "textrank_keywords": _q_textrank_keywords,
-        "histogram_equidepth": _q_histogram_equidepth,
-        "cdc_apply": _q_cdc_apply,
-        "join_cardinality": _q_join_cardinality,
-        "revenue_concentration": _q_revenue_concentration,
-        "inverted_index": _q_inverted_index,
-        "ks_test": _q_ks_test,
-        "sample_weighted_k": _q_sample_weighted_k,
-        "user_growth": _q_user_growth,
-        "conversion_latency": _q_conversion_latency,
-        "heaps_fit": _q_heaps_fit,
-        "source_vocab_overlap": _q_source_vocab_overlap,
-        "supplier_affinity": _q_supplier_affinity,
-        "asof_join": _q_asof_join,
-        "asof_join_forward": _q_asof_join_forward,
-        "resample_ohlc": _q_resample_ohlc,
-        "scd2_intervals": _q_scd2_intervals,
-        "events_zscore": _q_events_zscore,
-        "retention_cohorts": _q_retention_cohorts,
-        "event_type_pairs": _q_event_type_pairs,
-        "profile_columns": _q_profile_columns,
-        "dq_checks": _q_dq_checks,
-        "incremental_agg": _q_incremental_agg,
-        "table_diff": _q_table_diff,
-        "sample_topk_per_group": _q_sample_topk_per_group,
-        "period_over_period": _q_period_over_period,
-        "histogram_2d": _q_histogram_2d,
-        "embedding_dim_ranges": _q_embedding_dim_ranges,
-        "range_join": _q_range_join,
-        "grouping_sets": _q_grouping_sets,
-        "percentiles": _q_percentiles,
-        "approx_percentiles": _q_approx_percentiles,
-        "minmax_by": _q_minmax_by,
-        "window_ntile": _q_window_ntile,
-        "string_funcs": _q_string_funcs,
-        "hash_funcs": _q_hash_funcs,
-        "bitwise_funcs": _q_bitwise_funcs,
-        "regex_funcs": _q_regex_funcs,
-        "url_funcs": _q_url_funcs,
-        "date_funcs": _q_date_funcs,
-        "math_funcs": _q_math_funcs,
-        "stats_agg": _q_stats_agg,
-        "array_funcs": _q_array_funcs,
-        "posexplode_tokens": _q_posexplode_tokens,
-        "conditional_agg": _q_conditional_agg,
-        "corr_subquery": _q_corr_subquery,
-        "scalar_subquery": _q_scalar_subquery,
-        "null_funcs": _q_null_funcs,
-        "array_agg": _q_array_agg,
-        "unpivot": _q_unpivot,
-        "sample_hash": _q_sample_hash,
-        "split_assign": _q_split_assign,
-        "domain_cap": _q_domain_cap,
-        "pmi_collocations": _q_pmi_collocations,
-        "bpe_train": _q_bpe_train,
-        "bpe_encode": _q_bpe_encode,
-        "modality_alignment": _q_modality_alignment,
-        "shard_assign": _q_shard_assign,
-        "ngram_coverage": _q_ngram_coverage,
-        "embedding_dim_stats": _q_embedding_dim_stats,
-        "window_first_last": _q_window_first_last,
-        "window_range_frame": _q_window_range_frame,
-        "window_rows_frame": _q_window_rows_frame,
-        "struct_funcs": _q_struct_funcs,
-        "map_funcs": _q_map_funcs,
-        "tpch_q1": _q_tpch_q1,
-        "tpch_q2": _q_tpch_q2,
-        "tpch_q8": _q_tpch_q8,
-        "tpch_q9": _q_tpch_q9,
-        "tpch_q11": _q_tpch_q11,
-        "tpch_q12": _q_tpch_q12,
-        "tpch_q13": _q_tpch_q13,
-        "tpch_q15": _q_tpch_q15,
-        "tpch_q16": _q_tpch_q16,
-        "tpch_q17": _q_tpch_q17,
-        "tpch_q20": _q_tpch_q20,
-        "tpch_q21": _q_tpch_q21,
-        "tpch_q22": _q_tpch_q22,
-        "tpch_q18": _q_tpch_q18,
-        "multimodal_decode": _q_multimodal_decode,
-        "tpch_q5": _q_tpch_q5,
-        "tpch_q3": _q_tpch_q3,
-        "tpch_q4": _q_tpch_q4,
-        "tpch_q6": _q_tpch_q6,
-        "tpch_q7": _q_tpch_q7,
-        "tpch_q10": _q_tpch_q10,
-        "tpch_q14": _q_tpch_q14,
-        "tpch_q19": _q_tpch_q19,
-        "join_full_outer": _q_join_full_outer,
-        "histogram_bins": _q_histogram_bins,
-        "join_skew_salted": _q_join_skew_salted,
-        "dedup_pipeline": _q_dedup_pipeline,
-        "dedup_clusters": _q_dedup_clusters,
-        "dedup_clusters_two_phase": _q_dedup_clusters_two_phase,
-        "triangle_count": _q_triangle_count,
-        "graph_pagerank": _q_graph_pagerank,
-        "graph_kcore": _q_graph_kcore,
-        "graph_common_neighbors": _q_graph_common_neighbors,
-        "graph_label_prop": _q_graph_label_prop,
-        "interval_merge": _q_interval_merge,
-        "dedup_rep_pagerank": _q_dedup_rep_pagerank,
-        "approx_distinct": _q_approx_distinct,
-        "logrank_test": _q_logrank_test,
-        "info_gain": _q_info_gain,
-        "ab_sequential": _q_ab_sequential,
-        "offpolicy_eval": _q_offpolicy_eval,
-        "simpsons_check": _q_simpsons_check,
-        "feature_hash": _q_feature_hash,
-        "graph_modularity": _q_graph_modularity,
-    }
+    """Every query builder, keyed by name: ``_q_<name>`` serves ``<name>``."""
+    return {n[3:]: f for n, f in globals().items() if n.startswith("_q_")}
 
 
 # ---------------------------------------------------------------- oracles

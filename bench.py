@@ -145,6 +145,25 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def calibrate(spark) -> float:
+    """Min-of-3 wall of a fixed synthetic workload (data-independent:
+    an aggregation over spark.range).  Its steady-state wall on an idle
+    32-thread host is stable run-to-run, so round-over-round query
+    deltas can be normalized for external machine load — divide a
+    query time by (calibration_sec of that run / calibration_sec of
+    the reference run) before comparing rounds."""
+    cal = (
+        spark.range(0, 200_000_000, 1, 32)
+        .selectExpr("sum(id * 2654435761 % 1000003) AS s")
+    )
+    runs = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        materialize(cal)
+        runs.append(time.perf_counter() - t0)
+    return round(min(runs), 3)
+
+
 #: a record whose calibration exceeds this multiple of the previous
 #: committed record's calibration is NOISY — the host is too loaded
 #: for the numbers to be comparable round-over-round
@@ -194,24 +213,6 @@ def main() -> None:
 
     warm_passes = max(3, int(os.environ.get("SPARK_GRAFT_BENCH_WARM", "3")))
 
-    # fixed synthetic calibration workload (data-independent: an
-    # aggregation over spark.range): its steady-state wall on an idle
-    # 32-thread host is stable run-to-run, so round-over-round query
-    # deltas can be normalized for external machine load — divide a
-    # query time by (calibration_sec of that run / calibration_sec of
-    # the reference run) before comparing rounds.
-    def calibrate() -> float:
-        cal = (
-            spark.range(0, 200_000_000, 1, 32)
-            .selectExpr("sum(id * 2654435761 % 1000003) AS s")
-        )
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(cal)
-            runs.append(time.perf_counter() - t0)
-        return round(min(runs), 3)
-
     # mechanical commit gate (round 11, VERDICT r10 "what's wrong" #3):
     # a run whose calibration exceeds CAL_GATE_RATIO× the previous
     # committed record's is host noise, not code — retry for a quiet
@@ -221,7 +222,7 @@ def main() -> None:
     prev_cal = previous_committed_calibration()
     max_attempts = int(os.environ.get("SPARK_GRAFT_BENCH_CAL_ATTEMPTS", "4"))
     retry_sleep = float(os.environ.get("SPARK_GRAFT_BENCH_CAL_SLEEP", "20"))
-    calibration = calibrate()
+    calibration = calibrate(spark)
     attempt = 1
     while calibration_noisy(calibration, prev_cal) and attempt < max_attempts:
         print(
@@ -231,7 +232,7 @@ def main() -> None:
             file=sys.stderr,
         )
         time.sleep(retry_sleep)
-        calibration = calibrate()
+        calibration = calibrate(spark)
         attempt += 1
     noisy = calibration_noisy(calibration, prev_cal)
     if noisy:

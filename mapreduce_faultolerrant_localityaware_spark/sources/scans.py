@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -36,22 +37,38 @@ TABLES = (
 #: schema on EVERY call (~0.1 s of footer read + driver resolution,
 #: measured warm), and scan() runs inside every query construction —
 #: a production engine resolves table schemas from a catalog, not
-#: from the files per query.  Keyed by the (immutable, read-only)
-#: parquet path; caches ONLY the StructType — never a DataFrame, a
-#: plan, or any computed rows, so every action still reads the
-#: parquet inputs in full.
+#: from the files per query.  Keyed by the parquet path plus its
+#: modification time and length, so a table rewritten in place with
+#: another schema is re-inferred instead of read through the old one
+#: (a new column would come back as all NULL); caches ONLY the
+#: StructType — never a DataFrame, a plan, or any computed rows, so
+#: every action still reads the parquet inputs in full.
 _SCHEMA_CACHE: dict = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    sc = spark.sparkContext
+    try:
+        # file identity from the Hadoop FileSystem status, so every
+        # scheme the session reads (file://, viewfs://, s3a://) is covered
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        st = p.getFileSystem(sc._jsc.hadoopConfiguration()).getFileStatus(p)
+    except Py4JJavaError:
+        # no status (missing path, glob): uncached, so Spark's reader
+        # resolves the path and raises its own error
+        return spark.read.parquet(path)
     # the inferred schema can depend on session conf (nanosAsLong
     # surfaces TIMESTAMP(NANOS) as BIGINT; inferTimestampNTZ picks the
-    # timestamp flavor), so those participate in the key — a foreign
-    # session with different flags never sees a mismatched catalog hit
+    # timestamp flavor; binaryAsString turns BINARY into STRING), so
+    # those participate in the key — a foreign session with different
+    # flags never sees a mismatched catalog hit
     key = (
         path,
+        st.getModificationTime(),
+        st.getLen(),
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
         spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+        spark.conf.get("spark.sql.parquet.binaryAsString", "false"),
     )
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:

@@ -106,6 +106,22 @@ def _check(sf: str) -> None:
     )
 
 
+def test_every_oracle_names_a_query():
+    """An oracle key with no ``_q_<name>`` builder (say, one left behind
+    by a rename) would otherwise be skipped silently by check_oracle."""
+    orphans = set(entry_mod.oracle_sql()) - set(entry_mod.queries())
+    assert not orphans, f"oracle_sql() keys with no query: {sorted(orphans)}"
+
+
+def test_queries_without_oracle_are_declared():
+    """A query loses its oracle only by a NO_ORACLE entry with a reason."""
+    unchecked = set(entry_mod.queries()) - set(entry_mod.oracle_sql())
+    assert unchecked == NO_ORACLE, (
+        f"undeclared: {sorted(unchecked - NO_ORACLE)}; "
+        f"stale NO_ORACLE entries: {sorted(NO_ORACLE - unchecked)}"
+    )
+
+
 def test_sf0001_artifact_fresh_and_green():
     _check("0.001")
 

@@ -17,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from bench import calibrate, materialize
 from mapreduce_faultolerrant_localityaware_spark.session import get_spark
 
 
@@ -25,20 +26,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench-subset")
     qs = entry_mod.queries()
-
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
     materialize(qs["sort_limit"](spark, sf_dir))
-    cal_runs = []
-    cal = spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(id * 2654435761 % 1000003) AS s"
-    )
-    for _ in range(3):
-        t0 = time.perf_counter()
-        materialize(cal)
-        cal_runs.append(time.perf_counter() - t0)
-    out = {"calibration_sec": round(min(cal_runs), 3), "queries": {}, "queries_cold": {}}
+    out = {"calibration_sec": calibrate(spark), "queries": {}, "queries_cold": {}}
     for name in names:
         t0 = time.perf_counter()
         materialize(qs[name](spark, sf_dir))

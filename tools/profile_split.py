@@ -29,6 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from bench import materialize
 from mapreduce_faultolerrant_localityaware_spark.session import get_spark
 
 
@@ -37,10 +38,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile-split")
     qs = entry_mod.queries()
-
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
     materialize(qs["sort_limit"](spark, sf_dir))
     out = {}
     for name in names:

@@ -21,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from bench import materialize
 from mapreduce_faultolerrant_localityaware_spark.session import get_spark
 
 SFS = [
@@ -50,10 +51,6 @@ DEFAULT = [
     "simpsons_check", "feature_hash", "graph_modularity",
     "triangle_count", "graph_clustering",
 ]
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
