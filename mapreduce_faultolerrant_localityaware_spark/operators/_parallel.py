@@ -15,14 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     if df.isStreaming:
         # streams take their parallelism from the source's file/offset
         # batching (and .rdd is illegal on a streaming relation);
         # stateless operators built on this helper stay stream-capable
         return df
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -1,22 +1,28 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Two tiers, per the standard ANN playbook:
-  * ann_bruteforce — exact cosine top-k: every (query, corpus) pair is
-    scored.  Correctness baseline; cost O(|Q|·|C|·d).  Distributed
-    shape: broadcast the (small) query set against the partitioned
-    corpus, per-partition top-k via window, so the shuffle carries
-    only |Q|·k·partitions candidate rows (TakeOrderedAndProject-like).
-  * ann_ivf — IVF-style pruned search: score only corpus vectors in
-    the query's coarse cell (the ``label`` column stands in for a
-    nearest-centroid assignment).  Cost drops by the cell fan-out
-    factor; the join is an equi-join on the cell id.
-  * ann_ivf_kmeans — same search shape but with a REAL coarse
-    quantizer: kmeans_fit (deterministic DataFrame-native Lloyd's)
-    assigns cells from raw embeddings, and nprobe>1 trades cost for
-    recall.
+Every search operator is one pipeline — candidates, exact score,
+per-query top-k — built from the same stages:
 
-Vector math is built-in higher-order functions (functions.vectors) —
-JVM-side, no Python in the scoring loop.
+  * ``_query_side``: the query batch as (query_id, qv, ...), always the
+    broadcast side of the candidate join (queries are the small side);
+  * ``_probe_cells``: a vector's ``nprobe`` nearest coarse cells, one
+    row each (the IVF candidate filter);
+  * ``_cos_scored``: exact cosine, rounded to 6 dp;
+  * ``_top_k``: the per-query cut with a total order (score DESC,
+    neighbor ASC), so results are deterministic.
+
+The operators differ only in how candidates are generated:
+  * exact: ann_bruteforce (every pair), ann_range_search (threshold
+    instead of k), hard_negatives (label-inequality join);
+  * IVF: ann_ivf (a precomputed ``label`` cell), ann_ivf_kmeans and
+    ann_incremental (fitted k-means cells, ``nprobe`` probes);
+  * quantized: ann_sq8 (int8 dot product), ann_pq (PQ-ADC shortlist,
+    then exact re-rank) and ann_ivfpq (the same behind IVF probes).
+
+The k-means and PQ fits draw one deterministic sample and run Lloyd
+on the driver in numpy (``_lloyd``); assignment, encoding and search
+stay cluster-side.  Vector math is built-in higher-order functions
+(functions.vectors) — JVM-side, no Python in the scoring loop.
 """
 
 from __future__ import annotations
@@ -27,6 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import (
     agg_array_expr,
     cosine_similarity,
+    l2_norm,
     lit_double_array,
     lit_double_cube,
     lit_double_matrix,
@@ -54,6 +61,33 @@ def _prep(emb: DataFrame, id_col: str, vec_col: str, extra: list[str] | None = N
     return emb.select(*cols)
 
 
+def _query_side(queries: DataFrame, id_col: str, vec_col: str, *cols, extra=None) -> DataFrame:
+    """The query batch as ``(query_id, qv, *cols)``; ``cols`` may use
+    ``v`` and the ``extra`` columns."""
+    return _prep(queries, id_col, vec_col, extra).select(
+        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), *cols
+    )
+
+
+def _cos_scored(pairs: DataFrame, id_col: str, *cols) -> DataFrame:
+    """Candidate (query, corpus) pairs as ``(query_id, neighbor_id,
+    *cols, cos_sim)``, the cosine of ``qv`` and ``v`` rounded to 6 dp."""
+    return pairs.select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        *cols,
+        F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str = "cos_sim", drop_score: bool = False) -> DataFrame:
+    """The ``k`` best rows per query under the total order (``score``
+    DESC, neighbor_id ASC); ``drop_score`` also drops the score."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    drop = ("rk", score) if drop_score else ("rk",)
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop(*drop)
+
+
 def ann_bruteforce(
     emb: DataFrame,
     queries: DataFrame,
@@ -66,20 +100,9 @@ def ann_bruteforce(
     Returns (query_id, neighbor_id, cos_sim) with a total tiebreak
     (sim DESC, neighbor ASC) so results are deterministic.
     """
-    corpus = _prep(emb, id_col, vec_col)
-    q = _prep(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        corpus.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    q = _query_side(queries, id_col, vec_col)
+    pairs = _prep(emb, id_col, vec_col).join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
+    return _top_k(_cos_scored(pairs, id_col), k)
 
 
 def ann_range_search(
@@ -103,19 +126,9 @@ def ann_range_search(
     corpus.  Zero-norm vectors score NULL cosine and never pass the
     threshold.  Returns (query_id, neighbor_id, cos_sim).
     """
-    corpus = _prep(emb, id_col, vec_col)
-    q = _prep(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
-    return (
-        corpus.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    q = _query_side(queries, id_col, vec_col)
+    pairs = _prep(emb, id_col, vec_col).join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
+    return _cos_scored(pairs, id_col).filter(F.col("cos_sim") >= threshold)
 
 
 def kmeans_fit(
@@ -149,24 +162,42 @@ def kmeans_fit(
     lowest cell (argmin), and updates are numpy double reductions in
     fixed sample order, so repeated fits are bit-identical.
     """
-    import numpy as np
-
     if k <= 0:
         raise ValueError("kmeans_fit needs k > 0")
-    v = _prep(emb, id_col, vec_col).select(F.col(id_col).alias("_id"), "v")
-    rows = v.orderBy(F.xxhash64("_id"), "_id").limit(k * train_per_centroid).collect()
-    if not rows:
+    X = _train_sample(emb, id_col, vec_col, k * train_per_centroid)
+    if X is None:
         # empty corpus: a 1-centroid dim-1 placeholder model — callers
         # only use it to shape score/assign expressions, which never
         # evaluate over the zero input rows, so every downstream
         # result is schema-stable empty (tests/test_empty_surface.py)
         return [[0.0]]
-    X = np.array([list(r["v"]) for r in rows], dtype=np.float64)
+    return _lloyd(X, k, max_iter)
+
+
+def _train_sample(emb: DataFrame, id_col: str, vec_col: str, n: int):
+    """The fits' training sample: the ``n`` lowest id-hash vectors
+    (one TakeOrderedAndProject corpus pass) as a float64 matrix, or
+    None on an empty corpus."""
+    import numpy as np
+
+    v = _prep(emb, id_col, vec_col).select(F.col(id_col).alias("_id"), "v")
+    rows = v.orderBy(F.xxhash64("_id"), "_id").limit(n).collect()
+    if not rows:
+        return None
+    return np.array([list(r["v"]) for r in rows], dtype=np.float64)
+
+
+def _lloyd(X, k: int, max_iter: int) -> list[list[float]]:
+    """Lloyd's k-means on the rows of ``X``, seeded with its first
+    ``k`` rows: argmin assignment (ties to the lowest cell), empty
+    cells keep their centroid, stops early at a fixed point."""
+    import numpy as np
+
     C = X[: min(k, len(X))].copy()
     for _ in range(max_iter):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         cell = d2.argmin(axis=1)
-        newC = C.copy()  # empty cells keep old
+        newC = C.copy()
         for c in range(len(C)):
             members = X[cell == c]
             if len(members):
@@ -177,12 +208,7 @@ def kmeans_fit(
     return [[float(x) for x in c] for c in C]
 
 
-def _sqdist_to(vec, centroid):
-    c = (
-        lit_double_array(centroid)
-        if isinstance(centroid, (list, tuple))
-        else centroid
-    )
+def _sqdist_to(vec, c):
     return F.aggregate(
         F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -230,6 +256,17 @@ def _nearest_cell(vec, centroids):
     return F.element_at(F.array_sort(_cell_dists(vec, centroids)), 1)["cell"]
 
 
+def _probe_cells(vec, centroids, nprobe: int):
+    """One ``cell`` row for each of ``vec``'s ``nprobe`` nearest cells
+    (same (d, cell) order as :func:`_nearest_cell`)."""
+    return F.explode(
+        F.transform(
+            F.slice(F.array_sort(_cell_dists(vec, centroids)), 1, nprobe),
+            lambda s: s["cell"],
+        )
+    ).alias("cell")
+
+
 def assign_cells(
     emb: DataFrame,
     centroids,
@@ -244,6 +281,19 @@ def assign_cells(
     return _prep(emb, id_col, vec_col).withColumn(
         "cell", _nearest_cell(F.col("v"), centroids)
     )
+
+
+def _ivf_search(
+    corpus: DataFrame, queries: DataFrame, cells, k: int, id_col: str, vec_col: str,
+    cell_col: str = "cell", extra: list[str] | None = None,
+) -> DataFrame:
+    """Top-k over a cell-assigned ``corpus``: each query carries its
+    probed cell(s) ``cells`` (a column over ``v``/``extra``), the
+    candidates are the equi-join on ``cell_col`` (query side
+    broadcast), then exact cosine and the top-k cut."""
+    q = _query_side(queries, id_col, vec_col, cells, extra=extra)
+    pairs = corpus.join(F.broadcast(q), cell_col).filter(F.col(id_col) != F.col("query_id"))
+    return _top_k(_cos_scored(pairs, id_col), k)
 
 
 def ann_ivf_kmeans(
@@ -270,27 +320,8 @@ def ann_ivf_kmeans(
     centroids = kmeans_fit(emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
     mat = _centroid_matrix(centroids)  # one shared literal codebook column
     corpus = assign_cells(emb, mat, id_col, vec_col)
-    q = _prep(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(_cell_dists(F.col("v"), mat)), 1, nprobe),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
-    scored = (
-        corpus.join(F.broadcast(q), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    probe = _probe_cells(F.col("v"), mat, nprobe)
+    return _ivf_search(corpus, queries, probe, k, id_col, vec_col)
 
 
 def ann_incremental(
@@ -332,27 +363,8 @@ def ann_incremental(
     base = assign_cells(emb, mat, id_col, vec_col)
     fresh = assign_cells(new_batch, mat, id_col, vec_col)
     corpus = base.unionByName(fresh)
-    q = _prep(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(_cell_dists(F.col("v"), mat)), 1, nprobe),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
-    scored = (
-        corpus.join(F.broadcast(q), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    probe = _probe_cells(F.col("v"), mat, nprobe)
+    return _ivf_search(corpus, queries, probe, k, id_col, vec_col)
 
 
 def index_drift_report(
@@ -427,20 +439,9 @@ def ann_ivf(
     ~|cells|× cheaper than brute force; recall bounded by cell quality.
     """
     corpus = _prep(emb, id_col, vec_col, [cell_col])
-    q = _prep(queries, id_col, vec_col, [cell_col]).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col(cell_col)
+    return _ivf_search(
+        corpus, queries, F.col(cell_col), k, id_col, vec_col, cell_col, extra=[cell_col]
     )
-    scored = (
-        corpus.join(F.broadcast(q), cell_col)
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
 
 
 def embedding_norms(
@@ -699,8 +700,7 @@ def ann_sq8(
         F.col(id_col).alias("neighbor_id"),
         score.cast("long").alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    return _top_k(scored, k, "score")
 
 
 def pq_fit(
@@ -729,8 +729,6 @@ def pq_fit(
     double reductions in fixed sample order — repeated fits are
     bit-identical.
     """
-    import numpy as np
-
     probe = emb.select(F.size(vec_col).alias("n")).limit(1).collect()
     if not probe or probe[0]["n"] is None:
         # empty corpus: m one-code dim-1 placeholder books — encode
@@ -741,28 +739,10 @@ def pq_fit(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     ds = dim // m
-    v = _prep(emb, id_col, vec_col).select(F.col(id_col).alias("_id"), "v")
-    rows = v.orderBy(F.xxhash64("_id"), "_id").limit(n_codes * train_per_centroid).collect()
-    if not rows:
-        return [[[0.0] * ds for _ in range(1)] for _ in range(m)]
-    X = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    books = []
-    for j in range(m):
-        Xj = X[:, j * ds : (j + 1) * ds]
-        C = Xj[: min(n_codes, len(Xj))].copy()
-        for _ in range(max_iter):
-            d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cell = d2.argmin(axis=1)
-            newC = C.copy()  # empty cells keep old
-            for c in range(len(C)):
-                members = Xj[cell == c]
-                if len(members):
-                    newC[c] = members.mean(axis=0)
-            if np.array_equal(newC, C):
-                break
-            C = newC
-        books.append([[float(x) for x in c] for c in C])
-    return books
+    X = _train_sample(emb, id_col, vec_col, n_codes * train_per_centroid)
+    if X is None:
+        return [[[0.0] * ds] for _ in range(m)]
+    return [_lloyd(X[:, j * ds : (j + 1) * ds], n_codes, max_iter) for j in range(m)]
 
 
 def pq_encode(
@@ -801,6 +781,74 @@ def pq_encode(
         lambda acc, x: acc + x,
     )
     return coded.select(F.col(id_col), "codes", rnorm2.alias("rnorm2"))
+
+
+def _pq_search(
+    emb: DataFrame, enc: DataFrame, queries: DataFrame, books, k: int, rerank: int,
+    id_col: str, vec_col: str, centroids=None, nprobe: int = 0,
+) -> DataFrame:
+    """PQ-ADC shortlist of ``k·rerank`` per query over the codes
+    ``enc``, then exact cosine re-rank of the shortlist to ``k``.
+    Candidates are every other corpus row or, given ``centroids``
+    (``enc`` then carries ``cell``), the rows in the query's ``nprobe``
+    nearest cells."""
+    ds = len(books[0][0])
+    q = _query_side(queries, id_col, vec_col)
+    # one nested transform over the literal sub-codebook cube, not
+    # m×n_codes unrolled aggregates (round-11 optimization pass; same
+    # zip_with/ordered-aggregate arithmetic per entry, bit-identical)
+    lut = F.transform(
+        lit_double_cube(books),
+        lambda book, j: F.transform(
+            book,
+            lambda c: F.aggregate(
+                F.zip_with(
+                    F.slice("qv", j * ds + 1, ds),
+                    c,
+                    lambda a, b: a * b,
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+        ),
+    )
+    qcols = [lut.alias("lut"), l2_norm(F.col("qv")).alias("qnorm")]
+    if centroids is not None:
+        qcols.append(_probe_cells(F.col("qv"), centroids, nprobe))
+    qside = q.select("query_id", "qv", *qcols)
+    adc_dot = F.aggregate(
+        F.zip_with("codes", "lut", lambda c, tbl: F.element_at(tbl, c + F.lit(1))),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    adc_cos = F.when(
+        (F.col("qnorm") > 0) & (F.col("rnorm2") > 0),
+        adc_dot / (F.col("qnorm") * F.sqrt("rnorm2")),
+    ).otherwise(F.lit(-2.0))
+    if centroids is None:
+        pairs = enc.join(F.broadcast(qside), F.col(id_col) != F.col("query_id"))
+    else:
+        pairs = enc.join(F.broadcast(qside), "cell").filter(F.col(id_col) != F.col("query_id"))
+    # qv stays OUT of the scored rows: the shortlist window shuffles
+    # |candidates| rows, and carrying the 64-double query vector
+    # through that exchange multiplies its width ~20×; re-attach qv
+    # to the k·rerank survivors with a second broadcast of the tiny
+    # query side instead.
+    shortlisted = pairs.select(
+        "query_id", F.col(id_col).alias("neighbor_id"), adc_cos.alias("adc_cos")
+    )
+    shortlist = _top_k(shortlisted, k * rerank, "adc_cos", drop_score=True).join(
+        F.broadcast(q), "query_id"
+    )
+    corpus = _prep(emb, id_col, vec_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")
+    )
+    exact = shortlist.join(corpus, "neighbor_id").select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine_similarity(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
+    )
+    return _top_k(exact, k)
 
 
 def ann_pq(
@@ -843,72 +891,9 @@ def ann_pq(
     generous); real clustered corpora reach the same recall with far
     smaller shortlists.
     """
-    from ..functions.vectors import l2_norm
-
     books = pq_fit(emb, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
-    ds = len(books[0][0])
     enc = pq_encode(emb, books, id_col=id_col, vec_col=vec_col)
-    q = _prep(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
-    # one nested transform over the literal sub-codebook cube, not
-    # m×n_codes unrolled aggregates (round-11 optimization pass; same
-    # zip_with/ordered-aggregate arithmetic per entry, bit-identical)
-    lut = F.transform(
-        lit_double_cube(books),
-        lambda book, j: F.transform(
-            book,
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.slice("qv", j * ds + 1, ds),
-                    c,
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        ),
-    )
-    qside = q.select("query_id", "qv", lut.alias("lut"), l2_norm(F.col("qv")).alias("qnorm"))
-    adc_dot = F.aggregate(
-        F.zip_with("codes", "lut", lambda c, tbl: F.element_at(tbl, c + F.lit(1))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    adc_cos = F.when(
-        (F.col("qnorm") > 0) & (F.col("rnorm2") > 0),
-        adc_dot / (F.col("qnorm") * F.sqrt("rnorm2")),
-    ).otherwise(F.lit(-2.0))
-    # qv stays OUT of the scored rows: the shortlist window shuffles
-    # |corpus|×|Q| rows, and carrying the 64-double query vector
-    # through that exchange multiplies its width ~20×; re-attach qv
-    # to the k·rerank survivors with a second broadcast of the tiny
-    # query side instead.
-    shortlisted = (
-        enc.join(F.broadcast(qside), F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            adc_cos.alias("adc_cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_cos"), F.asc("neighbor_id"))
-    shortlist = (
-        shortlisted.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k * rerank)
-        .drop("rk", "adc_cos")
-        .join(F.broadcast(q), "query_id")
-    )
-    corpus = _prep(emb, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")
-    )
-    exact = shortlist.join(corpus, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return exact.withColumn("rk", F.row_number().over(w2)).filter(F.col("rk") <= k).drop("rk")
+    return _pq_search(emb, enc, queries, books, k, rerank, id_col, vec_col)
 
 
 def ann_ivfpq(
@@ -944,81 +929,14 @@ def ann_ivfpq(
     ann_bruteforce.  Recall compounds BOTH prune and quantization
     losses, so the isotropic-data defaults are generous (see ann_pq).
     """
-    from ..functions.vectors import l2_norm
-
     centroids = kmeans_fit(emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
     books = pq_fit(emb, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
-    ds = len(books[0][0])
     enc = pq_encode(emb, books, id_col=id_col, vec_col=vec_col).join(
         assign_cells(emb, centroids, id_col, vec_col).select(id_col, "cell"), id_col
     )
-    q = _prep(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
+    return _pq_search(
+        emb, enc, queries, books, k, rerank, id_col, vec_col, centroids, nprobe
     )
-    # one nested transform over the literal sub-codebook cube, not
-    # m×n_codes unrolled aggregates (round-11 optimization pass; same
-    # zip_with/ordered-aggregate arithmetic per entry, bit-identical)
-    lut = F.transform(
-        lit_double_cube(books),
-        lambda book, j: F.transform(
-            book,
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.slice("qv", j * ds + 1, ds),
-                    c,
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        ),
-    )
-    qside = q.select(
-        "query_id",
-        "qv",
-        lut.alias("lut"),
-        l2_norm(F.col("qv")).alias("qnorm"),
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(_cell_dists(F.col("qv"), centroids)), 1, nprobe),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
-    adc_dot = F.aggregate(
-        F.zip_with("codes", "lut", lambda c, tbl: F.element_at(tbl, c + F.lit(1))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    adc_cos = F.when(
-        (F.col("qnorm") > 0) & (F.col("rnorm2") > 0),
-        adc_dot / (F.col("qnorm") * F.sqrt("rnorm2")),
-    ).otherwise(F.lit(-2.0))
-    # as in ann_pq: qv is NOT carried through the shortlist window
-    # exchange — re-attached to the k·rerank survivors via a second
-    # broadcast of the tiny query side.
-    shortlisted = (
-        enc.join(F.broadcast(qside), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), adc_cos.alias("adc_cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_cos"), F.asc("neighbor_id"))
-    shortlist = (
-        shortlisted.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k * rerank)
-        .drop("rk", "adc_cos")
-        .join(F.broadcast(q), "query_id")
-    )
-    corpus = _prep(emb, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")
-    )
-    exact = shortlist.join(corpus, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return exact.withColumn("rk", F.row_number().over(w2)).filter(F.col("rk") <= k).drop("rk")
 
 
 def hard_negatives(
@@ -1045,21 +963,11 @@ def hard_negatives(
     tiebroken (sim DESC, neighbor ASC) for determinism.
     """
     corpus = _prep(emb, id_col, vec_col, extra=[label_col])
-    q = _prep(queries, id_col, vec_col, extra=[label_col]).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col(label_col).alias("qlabel"),
+    q = _query_side(
+        queries, id_col, vec_col, F.col(label_col).alias("qlabel"), extra=[label_col]
     )
-    scored = corpus.join(
-        F.broadcast(q), F.col(label_col) != F.col("qlabel")
-    ).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    pairs = corpus.join(F.broadcast(q), F.col(label_col) != F.col("qlabel"))
+    return _top_k(_cos_scored(pairs, id_col, F.col(label_col).alias("neighbor_label")), k)
 
 
 def ann_recall_report(
@@ -1105,7 +1013,7 @@ def ann_recall_report(
     )
 
 
-def _infer_dim(emb: DataFrame, vec_col: str, caller: str) -> int:
+def _infer_dim(emb: DataFrame, vec_col: str) -> int:
     """Probe one non-null vector for the dimensionality.  An empty
     table (or all-NULL column) implies no downstream rows at all, so
     it returns a dim-1 placeholder: every consumer only uses dim to
@@ -1154,7 +1062,7 @@ def embedding_dim_stats(
     Returns ``dim (1-based), n, mean, var, vmin, vmax`` (6 dp).
     """
     if dim is None:
-        dim = _infer_dim(emb, vec_col, "embedding_dim_stats")
+        dim = _infer_dim(emb, vec_col)
     # per-dim aggregate arrays built with ONE expr parse each instead
     # of ~4·dim py4j Column calls (round 12 — functions.vectors.
     # agg_array_expr; identical Round/Cast/Sum trees, identical values)
@@ -1276,23 +1184,11 @@ def dedup_semantic(
     rows-only in the oracle gate, recall-bounded in pytest like the
     other fitted-quantizer ops.
     """
-    from ..functions.vectors import cosine_similarity
-
     centroids = kmeans_fit(
         emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter
     )
     base = _prep(emb, id_col, vec_col)
-    probes = base.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(_cell_dists(F.col("v"), centroids)), 1, n_probe
-                ),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
+    probes = base.select(F.col(id_col), _probe_cells(F.col("v"), centroids, n_probe))
     a, b = probes.alias("a"), probes.alias("b")
     pairs = (
         a.join(b, "cell")
@@ -1567,7 +1463,7 @@ def embedding_centroids(
     Returns (label, dim (1-based), n, centroid) ordered by (label, dim).
     """
     if dim is None:
-        dim = _infer_dim(emb, vec_col, "embedding_centroids")
+        dim = _infer_dim(emb, vec_col)
     # n must count the rows the sums actually saw: a NULL/short vector
     # contributes nothing to Σxᵢ, and counting it would silently treat
     # it as the zero vector (biased centroid, oracle divergence)
@@ -1625,7 +1521,7 @@ def embedding_covariance(
     import pandas as pd
 
     if dim is None:
-        dim = _infer_dim(emb, vec_col, "embedding_covariance")
+        dim = _infer_dim(emb, vec_col)
     v = F.slice(F.col(vec_col).cast("array<double>"), 1, dim)
     # NULL/short vectors cannot contribute a full row to the Gram —
     # drop them up front (list(None) would crash the Arrow worker,
@@ -1716,7 +1612,7 @@ def pca_project(
     import numpy as np
 
     if dim is None:
-        dim = _infer_dim(emb, vec_col, "pca_project")
+        dim = _infer_dim(emb, vec_col)
     cov_rows = embedding_covariance(emb, dim=dim, vec_col=vec_col).collect()
     C = np.zeros((dim, dim), dtype=np.float64)
     for r in cov_rows:  # d² driver rows — model-sized, not data-sized
@@ -1794,7 +1690,7 @@ def centroid_cosine_matrix(
     rows.  Returns ``(label_a, label_b, n_a, n_b, cosine)``.
     """
     if dim is None:
-        dim = _infer_dim(emb, vec_col, "centroid_cosine_matrix")
+        dim = _infer_dim(emb, vec_col)
     per = (
         emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim))
         .groupBy(F.col(label_col).alias("lbl"))
@@ -1874,8 +1770,6 @@ def contamination_embedding(
     typically small enough to broadcast, and the partial-agged
     groupBy(train id) is the only row-scale shuffle.
     """
-    from ..functions.vectors import cosine_similarity
-
     e = emb.select(
         F.col(id_col).alias("vid"),
         F.col(block_col).alias("blk"),

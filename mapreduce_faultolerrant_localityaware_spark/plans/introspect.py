@@ -368,7 +368,3 @@ def scan_counts_from_plan(plan: str) -> dict[str, int]:
             if m:
                 tabs[m.group(1)] = tabs.get(m.group(1), 0) + 1
     return tabs
-
-
-def scan_counts(df: DataFrame) -> dict[str, int]:
-    return scan_counts_from_plan(formatted_plan(df))

@@ -113,6 +113,28 @@ def ensure_nanos_readable(spark: SparkSession, path: str) -> None:
         return
 
 
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """``events`` with ``ts`` as a session-zone TIMESTAMP — the one
+    normalization behind both :func:`scan` and the streaming source.
+
+    events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
+    generations and TIMESTAMP(MICROS) in others, so the normalization
+    is schema-driven: nanos (surfaced as long via the nanosAsLong flag)
+    are truncated to micros — matching DuckDB's microsecond TIMESTAMP
+    on the same file — and micros (surfaced as TIMESTAMP_NTZ) are cast
+    to the session-zone timestamp, a no-op instant-wise because the
+    session zone is pinned to UTC.
+    """
+    from pyspark.sql import functions as F
+
+    ts_type = dict(df.dtypes).get("ts", "")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type != "timestamp":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Columnar scan of one synthetic table.
 
@@ -123,25 +145,9 @@ def scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in TABLES:
         raise KeyError(f"unknown table {table!r}; have {TABLES}")
     if table == "events":
-        # events.ts has shipped as parquet TIMESTAMP(NANOS) in some
-        # testdata generations and TIMESTAMP(MICROS) in others, so the
-        # normalization is schema-driven: nanos (surfaced as long via
-        # the nanosAsLong flag) are truncated to micros — matching
-        # DuckDB's microsecond TIMESTAMP on the same file — and micros
-        # (surfaced as TIMESTAMP_NTZ) are cast to the session-zone
-        # timestamp, a no-op instant-wise because the session zone is
-        # pinned to UTC.
         path = os.path.join(sf_dir, "events.parquet")
         ensure_nanos_readable(spark, path)
-        df = _read_parquet(spark, path)
-        from pyspark.sql import functions as F
-
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type != "timestamp":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return _normalize_events_ts(_read_parquet(spark, path))
     return _read_parquet(spark, os.path.join(sf_dir, f"{table}.parquet"))
 
 

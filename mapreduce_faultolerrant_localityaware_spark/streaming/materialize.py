@@ -18,15 +18,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Streaming file-source view of a synthetic table (schema from a
     one-time static footer read; file sources require explicit schema).
-    Mirrors sources.scans.scan's events TIMESTAMP(NANOS) handling."""
+    ``events.ts`` is normalized exactly as in sources.scans.scan."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    from ..sources.scans import ensure_nanos_readable
+    from ..sources.scans import _normalize_events_ts, ensure_nanos_readable
 
     ensure_nanos_readable(spark, path)
     schema = spark.read.parquet(path).schema
@@ -35,11 +34,7 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # the "file" is a directory-tree of part files on a real cluster).
     stream = spark.readStream.schema(schema).parquet(path + "*")
     if table == "events":
-        ts_type = dict(stream.dtypes).get("ts", "")
-        if ts_type == "bigint":
-            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type != "timestamp":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        return _normalize_events_ts(stream)
     return stream
 
 

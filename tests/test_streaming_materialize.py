@@ -77,3 +77,43 @@ def test_streaming_tumbling_equals_batch(spark, sf_dir):
         for r in df.collect()
     }
     assert canon(got) == canon(want)
+
+
+def test_streaming_nanos_events_equal_batch_scan(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events.parquet streams with the same ts
+    normalization as the batch scan: the footer sniff sets the legacy
+    flag, nanos truncate to micro timestamps, and the streamed
+    (event_id, ts) rows equal scan()'s."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    micros = [1700000000_000000 + i * 1_500_000 for i in range(10)]
+    nanos_dir = tmp_path / "nanos_sf"
+    nanos_dir.mkdir()
+    table = pa.table(
+        {
+            "event_id": pa.array(range(10), pa.int64()),
+            "ts": pa.array([m * 1000 + 777 for m in micros], pa.timestamp("ns")),
+            "user_id": pa.array([i % 3 for i in range(10)], pa.int64()),
+            "event_type": pa.array(["click"] * 10),
+            "value": pa.array([float(i) for i in range(10)]),
+            "props": pa.array(["{}"] * 10),
+        }
+    )
+    pq.write_table(table, nanos_dir / "events.parquet")
+
+    # a foreign session: the flag unset, stream_table() must sniff the
+    # footer and set it (restore afterwards — get_spark sets it true)
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    try:
+        stream = S.stream_table(spark, str(nanos_dir), "events")
+        assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+        got = S.run_to_batch(stream.select("event_id", "ts"), spark, output_mode="append")
+        want = scan(spark, str(nanos_dir), "events").select("event_id", "ts")
+        rows = lambda df: sorted(  # noqa: E731
+            (r["event_id"], r["us"])
+            for r in df.select("event_id", F.unix_micros("ts").alias("us")).collect()
+        )
+        assert rows(got) == rows(want) == list(enumerate(micros))
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
