@@ -615,6 +615,21 @@ def chunk_overlap(
     )
 
 
+def _ols_fit(x: Column, y: Column) -> tuple[Column, Column]:
+    """(slope, intercept) of the least-squares line through the points
+    ``(x[i], y[i])`` of two equal-length double arrays, as fixed-order
+    in-row folds (summation order never depends on the plan).  Fewer
+    than two distinct x values leave the line undefined: NULL, not an
+    ANSI error."""
+    k = F.size(x).cast("double")
+    fold = lambda col: F.aggregate(col, F.lit(0.0), lambda a, b: a + b)  # noqa: E731
+    sx, sy = fold(x), fold(y)
+    sxx = fold(F.transform(x, lambda v: v * v))
+    sxy = fold(F.zip_with(x, y, lambda a, b: a * b))
+    slope = F.try_divide(k * sxy - sx * sy, k * sxx - sx * sx)
+    return slope, F.try_divide(sy - slope * sx, k)
+
+
 def zipf_fit(
     docs: DataFrame,
     top_n: int = 200,
@@ -635,7 +650,8 @@ def zipf_fit(
     count groupBy; the top-n cut is TakeOrderedAndProject and the fit
     is arithmetic over a 200-element array on the driver-bound row.
 
-    Returns one row: ``n_points, slope, intercept`` (6 dp).
+    Returns one row: ``n_points, slope, intercept`` (6 dp; the fit is
+    NULL below two points).
     """
     tk = ensure_parallelism(docs).select(
         F.explode(tokens(text_col, lowercase=True)).alias("token")
@@ -645,30 +661,13 @@ def zipf_fit(
     arr = F.sort_array(
         F.collect_list(F.struct((-F.col("n")).alias("negn"), F.col("token")))
     )
-    packed = top.agg(arr.alias("a")).select(
-        F.zip_with(
-            "a",
-            F.sequence(F.lit(1), F.size("a")),
-            lambda s, r: F.struct(
-                F.log(r.cast("double")).alias("x"),
-                F.log((-s["negn"]).cast("double")).alias("y"),
-            ),
-        ).alias("pts")
+    # rank = array position + 1
+    slope, intercept = _ols_fit(
+        F.transform("a", lambda s, i: F.log((i + 1).cast("double"))),
+        F.transform("a", lambda s: F.log((-s["negn"]).cast("double"))),
     )
-
-    def fold(expr):
-        return F.aggregate(expr, F.lit(0.0), lambda acc, v: acc + v)
-
-    xs = F.transform("pts", lambda p: p["x"])
-    ys = F.transform("pts", lambda p: p["y"])
-    xys = F.transform("pts", lambda p: p["x"] * p["y"])
-    x2s = F.transform("pts", lambda p: p["x"] * p["x"])
-    n = F.size("pts").cast("double")
-    sx, sy, sxy, sx2 = fold(xs), fold(ys), fold(xys), fold(x2s)
-    slope = (n * sxy - sx * sy) / (n * sx2 - sx * sx)
-    intercept = (sy - slope * sx) / n
-    return packed.select(
-        F.size("pts").cast("long").alias("n_points"),
+    return top.agg(arr.alias("a")).select(
+        F.size("a").cast("long").alias("n_points"),
         F.round(slope, 6).alias("slope"),
         F.round(intercept, 6).alias("intercept"),
     )
@@ -2000,21 +1999,14 @@ def heaps_fit(
     arr = pts.agg(
         F.sort_array(F.collect_list(F.struct("tile", "n", "v"))).alias("p")
     )
-    x = F.transform("p", lambda s: F.log(s["n"].cast("double")))
-    y = F.transform("p", lambda s: F.log(s["v"].cast("double")))
-    k = F.size("p").cast("double")
-    fold = lambda col: F.aggregate(col, F.lit(0.0), lambda a, b: a + b)
-    sx, sy = fold(x), fold(y)
-    sxx = fold(F.transform(x, lambda v: v * v))
-    sxy = fold(F.zip_with(x, y, lambda a, b: a * b))
-    # try_divide: an empty corpus (0 points) or a single tile has zero
-    # x-variance — the fit is undefined (NULL), not an ANSI error; on
-    # every real corpus (k ≥ 2 distinct tiles) the value is unchanged
-    beta = F.try_divide(k * sxy - sx * sy, k * sxx - sx * sx)
+    beta, log_k = _ols_fit(
+        F.transform("p", lambda s: F.log(s["n"].cast("double"))),
+        F.transform("p", lambda s: F.log(s["v"].cast("double"))),
+    )
     return arr.select(
         F.size("p").cast("long").alias("n_points"),
         F.round(beta, 6).alias("beta"),
-        F.round(F.try_divide(sy - beta * sx, k), 6).alias("log_k"),
+        F.round(log_k, 6).alias("log_k"),
     )
 
 

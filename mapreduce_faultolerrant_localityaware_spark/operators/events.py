@@ -1,16 +1,143 @@
-"""Event-stream batch operators — JSON property extraction, ordered
-windows (lag), and gap-based sessionization.
+"""Event-stream and statistical-test batch operators.
 
-All built-ins: JSON parsing via get_json_object (JVM-side Jackson),
-sessionization as the classic two-window composition (lag → gap flag →
-running sum), which shuffles once per window partition key and scales
-with the per-user event count, not the total row count.
+Families: event shaping (JSON/VARIANT properties, lag windows, gap
+sessions and their stats, rules and paths, funnels, patterns, Markov
+transitions, attribution); users and cohorts (growth, actives, LTV,
+survival, log-rank); anomaly and drift (z-score, MAD, Hampel, CUSUM,
+changepoint, PSI, KS, Benford); series (ACF, cross-correlation,
+smoothers, seasonality, forecast, Durbin-Watson, runs, Theil-Sen,
+isotonic); experiments (A/B, SRM, CUPED, diff-in-diff, Welch,
+Mann-Whitney, power, delta method, BH, sequential, off-policy);
+association and k-sample tests (chi-square, Cramér's V, MI, Spearman,
+Kendall, ANOVA, Kruskal-Wallis, Levene, Cochran-Armitage); model
+evaluation (ROC-AUC, lift, calibration, Wilson) and sketch rollups.
+
+Each test is one pass of mergeable exact-integer sums (values in
+cents, :func:`_cents`), then a closed form on a one-row or
+domain-sized table.  The stages tests share are written once:
+:func:`_xy_sums` + :func:`_pearson`, :func:`_doubled_ranks` +
+:func:`_tie3`, :func:`_one_way_f`, :func:`_contingency`,
+:func:`_split_at_midpoint` and :func:`_parity_pre_post_sums`.  The two
+midpoints differ on purpose: :func:`_split_at_midpoint` (PSI, KS) puts
+``t < t0 + floor((t1 − t0)/2)`` in the first half, while
+:func:`_parity_pre_post_sums` (CUPED, diff-in-diff) puts
+``t <= (lo + hi) div 2`` in the pre period.  Spearman ranks with
+windows, not with :func:`_doubled_ranks`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.vectors import lit_double_array
+from ._materialize import materialize_once
+from .relational import bucketed_cum_counts, equidepth_bins, exact_ntile
+
+
+def _cents(col: str) -> Column:
+    """``col`` (a 2-dp value) as exact integer cents."""
+    return F.round(F.col(col) * 100).cast("long")
+
+
+def _xy_sums(x: str, y: str, n: str) -> list[Column]:
+    """The pair count (as ``n``) and the five exact Pearson sums of
+    integer columns ``x``, ``y``: ``sx sy sxy sxx syy``."""
+    return [
+        F.count(F.lit(1)).cast("long").alias(n),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(F.col(x) * F.col(y)).alias("sxy"),
+        F.sum(F.col(x) * F.col(x)).alias("sxx"),
+        F.sum(F.col(y) * F.col(y)).alias("syy"),
+    ]
+
+
+def _pearson(n: str) -> Column:
+    """Pearson r over :func:`_xy_sums`'s columns, one double closed
+    form; NULL when a side is constant."""
+    n, sx, sy = F.col(n), F.col("sx"), F.col("sy")
+    cov = F.col("sxy") * n - sx * sy
+    varx = F.col("sxx") * n - sx * sx
+    vary = F.col("syy") * n - sy * sy
+    return F.try_divide(cov, F.sqrt(varx.cast("double") * vary.cast("double")))
+
+
+def _doubled_ranks(per: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` plus ``r2 = 2·cum_below(v) + t + 1``, the exact doubled
+    average rank of the ``t`` rows at value ``v`` of the value-domain
+    table ``per`` (cumulative counts via ``bucketed_cum_counts``, so a
+    near-unique domain stays parallel)."""
+    return bucketed_cum_counts(per, "v", [("t", "ct")]).select(
+        *keep,
+        (2 * (F.col("ct") - F.col("t")) + F.col("t") + 1).cast("long").alias("r2"),
+    )
+
+
+def _tie3() -> Column:
+    """``tie3`` = Σ(t³ − t) over the tie counts ``t``, exact (0 on no rows)."""
+    return F.coalesce(
+        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")), F.lit(0)
+    ).cast("long").alias("tie3")
+
+
+def _one_way_f(per_g: DataFrame) -> tuple[DataFrame, Column, Column, Column]:
+    """(1-row rollup ``(n, k, s, q, a)`` of the group table ``(n_g, s_g,
+    q_g)``, F ratio, SSB, SSW) with ``A = Σ s_g²/n_g``, ``SSB = A −
+    S²/N``, ``SSW = Q − A``; F is NULL for k < 2 or SSW = 0."""
+    a_term = F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
+    roll = per_g.groupBy().agg(
+        F.sum("n_g").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.sum("s_g").cast("long").alias("s"),
+        F.sum("q_g").alias("q"),
+        F.sum(a_term).alias("a"),
+    )
+    ssb = F.col("a") - F.col("s").cast("double") * F.col("s") / F.col("n")
+    ssw = F.col("q").cast("double") - F.col("a")
+    f = F.try_divide(
+        F.try_divide(ssb, (F.col("k") - 1).cast("double")),
+        F.nullif(
+            F.try_divide(ssw, (F.col("n") - F.col("k")).cast("double")),
+            F.lit(0.0),
+        ),
+    )
+    return roll, f, ssb, ssw
+
+
+def _contingency(df: DataFrame, col_a: str, col_b: str) -> tuple[DataFrame, ...]:
+    """(cells ``(a, b, o)`` joined with their margins ``r``, ``c`` and
+    ``n``; row, column and total margin tables) of the R×C table.  The
+    domain-sized table feeds every branch, so it is materialized once
+    and the input is scanned once."""
+    obs = df.groupBy(
+        F.col(col_a).alias("a"), F.col(col_b).alias("b")
+    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
+    obs = materialize_once(obs)
+    rows = obs.groupBy("a").agg(F.sum("o").alias("r"))
+    cols = obs.groupBy("b").agg(F.sum("o").alias("c"))
+    tot = obs.agg(F.sum("o").alias("n"))
+    cell = (
+        obs.join(F.broadcast(rows), "a")
+        .join(F.broadcast(cols), "b")
+        .join(F.broadcast(tot))
+    )
+    return cell, rows, cols, tot
+
+
+def _split_at_midpoint(events: DataFrame, value_col: str, ts_col: str) -> DataFrame:
+    """``(c, is_ref)``: value in cents, and whether the event falls in
+    the first half of the time range (integer-µs midpoint of a 1-row
+    min/max, broadcast back)."""
+    base = events.select(
+        _cents(value_col).alias("c"), F.unix_micros(F.col(ts_col)).alias("t")
+    )
+    bounds = base.agg(F.min("t").alias("t0"), F.max("t").alias("t1")).select(
+        (F.col("t0") + F.floor((F.col("t1") - F.col("t0")) / 2)).alias("tmid")
+    )
+    return base.join(F.broadcast(bounds)).select(
+        "c", (F.col("t") < F.col("tmid")).alias("is_ref")
+    )
 
 
 def extract_json_prop(
@@ -141,9 +268,7 @@ def zscore_outliers(
 
     Returns flagged events only: ``event_id, key, value, z``.
     """
-    from pyspark.sql import Window
-
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     w = Window.partitionBy(key_col)
     n = F.count(F.lit(1)).over(w)
     s1 = F.sum(cents).over(w)
@@ -242,11 +367,9 @@ def mad_outliers(
     Returns (key, n_events, median_value, mad_value, n_outliers)
     ordered by key.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy(key_col)
     base = events.select(
-        F.col(key_col), F.round(F.col(value_col) * 100).cast("long").alias("cents")
+        F.col(key_col), _cents(value_col).alias("cents")
     )
     d = base.withColumn("med", F.percentile("cents", F.lit(0.5)).over(w))
     d = d.withColumn("dev", F.abs(F.col("cents") - F.col("med")))
@@ -340,7 +463,7 @@ def group_regression(
     base = events.select(
         F.col(key_col),
         F.floor((F.unix_micros(F.col(ts_col)) - mins) / 60_000_000).alias("x"),
-        F.round(F.col(value_col) * 100).cast("long").alias("y"),
+        _cents(value_col).alias("y"),
     )
     agg = base.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("n"),
@@ -444,7 +567,7 @@ def session_stats(
                 (F.max(F.unix_micros(F.col(ts_col))) - F.min(F.unix_micros(F.col(ts_col))))
                 / 1_000_000
             ).cast("long").alias("duration_s"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+            F.sum(_cents("value")).alias("sum_cents"),
         )
         .orderBy(user_col, "session_id")
     )
@@ -519,22 +642,10 @@ def psi_drift(
     counts, ordered by bin; total PSI = sum of psi_term (left to the
     reader/alert so bins stay auditable).
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    us = F.unix_micros(F.col(ts_col))
-    base = events.select(cents.alias("c"), us.alias("t"))
-    # exact integer midpoint of the observed time range (1-row agg)
-    bounds = base.agg(
-        F.min("t").alias("t0"),
-        F.max("t").alias("t1"),
-    ).select((F.col("t0") + F.floor((F.col("t1") - F.col("t0")) / 2)).alias("tmid"))
-    tagged = base.join(F.broadcast(bounds)).select(
-        "c", (F.col("t") < F.col("tmid")).alias("is_ref")
-    )
+    tagged = _split_at_midpoint(events, value_col, ts_col)
     # reference-decile edges + binning via the shared equi-depth core
     # (relational.equidepth_bins — exact integer percentiles, map-side
     # comparison chain, no sort)
-    from .relational import equidepth_bins
-
     binned = equidepth_bins(
         tagged, tagged.filter("is_ref"), "c", n_bins
     ).select("bin", "is_ref")
@@ -583,23 +694,14 @@ def ks_test(
 
     Returns one row (n_ref, n_cmp, d_stat, at_value) — the KS
     statistic and the value where the CDF gap peaks (smallest such
-    value on ties).
+    value on ties).  ``d_stat`` is NULL when a half is empty (every
+    event at one timestamp, or a single event).
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    us = F.unix_micros(F.col(ts_col))
-    base = events.select(cents.alias("c"), us.alias("t"))
-    bounds = base.agg(F.min("t").alias("t0"), F.max("t").alias("t1")).select(
-        (F.col("t0") + F.floor((F.col("t1") - F.col("t0")) / 2)).alias("tmid")
-    )
-    tagged = base.join(F.broadcast(bounds)).select(
-        "c", (F.col("t") < F.col("tmid")).alias("is_ref")
-    )
+    tagged = _split_at_midpoint(events, value_col, ts_col)
     per_val = tagged.groupBy("c").agg(
         F.sum(F.col("is_ref").cast("long")).alias("r"),
         F.sum((~F.col("is_ref")).cast("long")).alias("q"),
     )
-    from .relational import bucketed_cum_counts
-
     cum = bucketed_cum_counts(
         per_val, "c", [("r", "c1"), ("q", "c2")], with_totals=True
     ).select(
@@ -628,7 +730,7 @@ def ks_test(
         F.col("n1").cast("long").alias("n_ref"),
         F.col("n2").cast("long").alias("n_cmp"),
         F.round(
-            F.col("b.g") / (F.col("n1").cast("double") * F.col("n2")), 6
+            F.try_divide(F.col("b.g"), F.col("n1").cast("double") * F.col("n2")), 6
         ).alias("d_stat"),
         F.round(-F.col("b.nc") / 100.0, 6).alias("at_value"),
     )
@@ -842,23 +944,7 @@ def chisq_independence(
     then broadcast margins onto it; the result is one row
     ``(n, r_levels, c_levels, dof, chi2)``.
     """
-    obs = df.groupBy(
-        F.col(col_a).alias("a"), F.col(col_b).alias("b")
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    # the R×C contingency table feeds every margin branch and the
-    # cell join — materialize the domain-sized frame once so the raw
-    # table is scanned once, not once per branch (round-11 audit)
-    from ._materialize import materialize_once
-
-    obs = materialize_once(obs)
-    rows = obs.groupBy("a").agg(F.sum("o").alias("r"))
-    cols = obs.groupBy("b").agg(F.sum("o").alias("c"))
-    tot = obs.agg(F.sum("o").alias("n"))
-    cell = (
-        obs.join(F.broadcast(rows), "a")
-        .join(F.broadcast(cols), "b")
-        .join(F.broadcast(tot))
-    )
+    cell = _contingency(df, col_a, col_b)[0]
     # (O·N − r·c)²/(r·c·N): numerator products stay exact in double
     # below 2^53 (N ≤ ~9e6 at sf1 keeps O·N ≤ ~8e13 — far inside);
     # summing per-cell doubles in a fixed order keeps both engines on
@@ -967,24 +1053,11 @@ def autocorr(
         args=", ".join(f"{k}, y_{k}" for k in range(1, max_lag + 1)),
     )
     pairs = base.selectExpr("y", stack_expr).filter(F.col("x").isNotNull())
-    s = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n, sx, sy = F.col("n_pairs"), F.col("sx"), F.col("sy")
-    cov = F.col("sxy") * n - sx * sy
-    varx = F.col("sxx") * n - sx * sx
-    vary = F.col("syy") * n - sy * sy
+    s = pairs.groupBy("lag").agg(*_xy_sums("x", "y", "n_pairs"))
     return s.select(
         F.col("lag").cast("long").alias("lag"),
         "n_pairs",
-        F.round(
-            F.try_divide(cov, F.sqrt(varx.cast("double") * vary.cast("double"))), 6
-        ).alias("acf"),
+        F.round(_pearson("n_pairs"), 6).alias("acf"),
     )
 
 
@@ -1021,7 +1094,7 @@ def hampel_outliers(
         .orderBy(*order_cols)
         .rowsBetween(-(n - 1), Window.currentRow)
     )
-    c = F.round(F.col(value_col) * 100).cast("long")
+    c = _cents(value_col)
 
     def med2_of(arr):
         sz = F.size(arr)
@@ -1102,7 +1175,7 @@ def attribution_multi_touch(
         F.col(user_col).alias("u"),
         F.col(ts_col).alias("cts"),
         F.col(id_col).alias("cid"),
-        F.round(F.col(value_col) * 100).cast("long").alias("vc"),
+        _cents(value_col).alias("vc"),
     )
     touch = events.filter(F.col(type_col).isin(*touch_types)).select(
         F.col(user_col).alias("u"),
@@ -1241,24 +1314,11 @@ def crosscorr(
         args=", ".join(f"{k}, y_{i}" for i, k in enumerate(lags)),
     )
     pairs = base.selectExpr("x", stack_expr).filter(F.col("y").isNotNull())
-    s = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n, sx, sy = F.col("n_pairs"), F.col("sx"), F.col("sy")
-    cov = F.col("sxy") * n - sx * sy
-    varx = F.col("sxx") * n - sx * sx
-    vary = F.col("syy") * n - sy * sy
+    s = pairs.groupBy("lag").agg(*_xy_sums("x", "y", "n_pairs"))
     return s.select(
         F.col("lag").cast("long").alias("lag"),
         "n_pairs",
-        F.round(
-            F.try_divide(cov, F.sqrt(varx.cast("double") * vary.cast("double"))), 6
-        ).alias("xcorr"),
+        F.round(_pearson("n_pairs"), 6).alias("xcorr"),
     )
 
 
@@ -1455,7 +1515,7 @@ def isotonic_fit(
     """
     import pandas as pd
 
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     # a NULL value is a missing observation, not a zero: filter before
     # aggregating so an all-NULL bucket vanishes instead of feeding
     # NaN sums into the integer PAVA pool (degenerate-surface sweep, r9)
@@ -1522,24 +1582,8 @@ def spearman_corr(
         return (2 * F.rank().over(wr) + F.count(F.lit(1)).over(wv) - 1).cast("long")
 
     ranked = series.select(r2(x_col).alias("rx"), r2(y_col).alias("ry"))
-    s = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("rx").alias("sx"),
-        F.sum("ry").alias("sy"),
-        F.sum(F.col("rx") * F.col("ry")).alias("sxy"),
-        F.sum(F.col("rx") * F.col("rx")).alias("sxx"),
-        F.sum(F.col("ry") * F.col("ry")).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    cov = F.col("sxy") * n - sx * sy
-    varx = F.col("sxx") * n - sx * sx
-    vary = F.col("syy") * n - sy * sy
-    return s.select(
-        "n",
-        F.round(
-            F.try_divide(cov, F.sqrt(varx.cast("double") * vary.cast("double"))), 6
-        ).alias("spearman"),
-    )
+    s = ranked.agg(*_xy_sums("rx", "ry", "n"))
+    return s.select("n", F.round(_pearson("n"), 6).alias("spearman"))
 
 
 def mutual_information(
@@ -1560,23 +1604,7 @@ def mutual_information(
     6-dp rounding; the repo's BM25/KL oracles pin the same class).
     Returns one row ``(n, h_a, h_b, h_ab, mi)``.
     """
-    obs = df.groupBy(
-        F.col(col_a).alias("a"), F.col(col_b).alias("b")
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    # the R×C contingency table feeds every margin branch and the
-    # cell join — materialize the domain-sized frame once so the raw
-    # table is scanned once, not once per branch (round-11 audit)
-    from ._materialize import materialize_once
-
-    obs = materialize_once(obs)
-    rows = obs.groupBy("a").agg(F.sum("o").alias("r"))
-    cols = obs.groupBy("b").agg(F.sum("o").alias("c"))
-    tot = obs.agg(F.sum("o").alias("n"))
-    cell = (
-        obs.join(F.broadcast(rows), "a")
-        .join(F.broadcast(cols), "b")
-        .join(F.broadcast(tot))
-    )
+    cell, rows, cols, tot = _contingency(df, col_a, col_b)
     o, r, c, n = (F.col(x).cast("double") for x in ("o", "r", "c", "n"))
     agg = cell.agg(
         F.max("n").alias("n"),
@@ -1634,8 +1662,6 @@ def session_rules(
     # the session-type basket feeds the session count, the per-type
     # margins and both self-join sides — materialize once (round-11
     # scan audit: 5 raw scans before this)
-    from ._materialize import materialize_once
-
     basket = materialize_once(basket)
     n_sessions = basket.select("u", "sid").distinct().agg(
         F.count(F.lit(1)).cast("long").alias("n_sessions")
@@ -1775,49 +1801,33 @@ def mannwhitney_u(
 
     Exactness: values quantize to cents; rows collapse to DISTINCT
     values with per-group counts FIRST (the :func:`ks_test`
-    discipline), then the DOUBLED average rank of every row at value
-    v is ``2r_v = 2·cum_below(v) + t_v + 1`` — an exact BIGINT
-    identity with the per-row ``2·rank() + count_over − 1`` form, so
-    the rank sum Σa_v·2r_v, tie-correction term Σ(t³−t), and the
-    doubled statistic 2·U_a = Σ2r·[a] − n_a(n_a+1) are all exact
-    integers; the normal-approximation z with tie-corrected variance
-    converts to double once.  ``try_divide``/``nullif`` make an empty
-    group or an all-tied sample NULL, not an ANSI error.
+    discipline), then :func:`_doubled_ranks` gives each value its
+    exact doubled average rank ``2r_v``, so the rank sum Σa_v·2r_v,
+    the tie term Σ(t³−t), and the doubled statistic
+    2·U_a = Σ2r·[a] − n_a(n_a+1) are all exact integers; the
+    normal-approximation z with tie-corrected variance converts to
+    double once.  ``try_divide``/``nullif`` make an empty group or an
+    all-tied sample NULL, not an ANSI error.
 
     Scale shape: one partial-agged groupBy to the distinct-value
-    domain, cumulative counts via
-    :func:`~.relational.bucketed_cum_counts` (range-bucket partials +
-    partitioned within-bucket ranks — fully parallel even when the
-    value domain is near-row-cardinality; a row-level
-    ``Window.orderBy`` funnels the whole pooled sample through a
-    single-partition sort, and round 10's single domain-table window
-    still funneled a continuous domain), one final 1-row rollup that
-    also folds in Σ(t³−t).
+    domain, :func:`_doubled_ranks`'s bucketed cumulative counts (a
+    row-level ``Window.orderBy`` would sort the whole pooled sample in
+    one partition), one final 1-row rollup.
     Returns one row ``(n_a, n_b, u_a, z_stat)``.
     """
-    from .relational import bucketed_cum_counts
-
     two = df.filter(F.col(group_col).isin(group_a, group_b)).select(
         (F.col(group_col) == group_a).cast("long").alias("is_a"),
-        F.round(F.col(value_col) * 100).cast("long").alias("v"),
+        _cents(value_col).alias("v"),
     )
     per = two.groupBy("v").agg(
         F.count(F.lit(1)).cast("long").alias("t"),
         F.coalesce(F.sum("is_a"), F.lit(0)).cast("long").alias("a"),
     )
-    cum = bucketed_cum_counts(per, "v", [("t", "ct")]).select(
-        "t",
-        "a",
-        (F.col("ct") - F.col("t")).cast("long").alias("cb"),
-    )
-    r2 = 2 * F.col("cb") + F.col("t") + 1  # doubled avg rank of value v
-    j = cum.groupBy().agg(
+    j = _doubled_ranks(per, "t", "a").groupBy().agg(
         F.coalesce(F.sum("a"), F.lit(0)).cast("long").alias("n_a"),
         F.coalesce(F.sum(F.col("t") - F.col("a")), F.lit(0)).cast("long").alias("n_b"),
-        F.coalesce(F.sum(F.col("a") * r2), F.lit(0)).cast("long").alias("ra2"),
-        F.coalesce(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")), F.lit(0)
-        ).cast("long").alias("tie3"),
+        F.coalesce(F.sum(F.col("a") * F.col("r2")), F.lit(0)).cast("long").alias("ra2"),
+        _tie3(),
     )
     n1, n2 = F.col("n_a"), F.col("n_b")
     n = n1 + n2
@@ -1845,18 +1855,20 @@ def mannwhitney_u(
 
 def _parity_pre_post_sums(
     events: DataFrame, user_col: str, ts_col: str, value_col: str
-):
+) -> tuple[DataFrame, list[Column]]:
     """(per_user DataFrame with exact cent sums ``x`` (pre-period) and
-    ``y`` (post-period), arm-A indicator column) — ONE definition of
-    the corpus-midpoint period boundary (integer-µs ``div 2`` on a
-    1-row min/max broadcast) and the ``user % 2`` parity split, shared
-    by :func:`cuped_adjust` and :func:`diff_in_diff` so the two
-    estimators provably read the identical cells."""
+    ``y`` (post-period), the six per-arm sums over it for one ``agg``:
+    ``n_a``, ``n_b``, ``sxa``, ``sxb``, ``sya``, ``syb``) — ONE
+    definition of the corpus-midpoint period boundary (integer-µs
+    ``div 2`` on a 1-row min/max broadcast, ``<=`` is pre-period) and
+    the ``user % 2`` parity split, shared by :func:`cuped_adjust` and
+    :func:`diff_in_diff` so the two estimators provably read the
+    identical cells."""
     bounds = events.agg(
         F.min(F.unix_micros(F.col(ts_col))).alias("lo"),
         F.max(F.unix_micros(F.col(ts_col))).alias("hi"),
     ).select(F.expr("(lo + hi) div 2").alias("mid_us"))
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     per_user = (
         events.join(F.broadcast(bounds))
         .groupBy(user_col)
@@ -1872,7 +1884,15 @@ def _parity_pre_post_sums(
         )
     )
     arm_a = (F.col(user_col) % 2 == 0).cast("long")
-    return per_user, arm_a
+    arm_sums = [
+        F.coalesce(F.sum(arm_a), F.lit(0)).cast("long").alias("n_a"),
+        F.coalesce(F.sum(1 - arm_a), F.lit(0)).cast("long").alias("n_b"),
+        F.coalesce(F.sum(F.when(arm_a == 1, F.col("x"))), F.lit(0)).alias("sxa"),
+        F.coalesce(F.sum(F.when(arm_a == 0, F.col("x"))), F.lit(0)).alias("sxb"),
+        F.coalesce(F.sum(F.when(arm_a == 1, F.col("y"))), F.lit(0)).alias("sya"),
+        F.coalesce(F.sum(F.when(arm_a == 0, F.col("y"))), F.lit(0)).alias("syb"),
+    ]
+    return per_user, arm_sums
 
 
 def cuped_adjust(
@@ -1904,17 +1924,12 @@ def cuped_adjust(
     global 1-row moment aggregate.  Returns one row ``(n_a, n_b,
     theta, lift_raw, lift_cuped, var_reduction)``.
     """
-    per_user, arm_a = _parity_pre_post_sums(events, user_col, ts_col, value_col)
+    per_user, arm_sums = _parity_pre_post_sums(events, user_col, ts_col, value_col)
     xd = F.col("x").cast("decimal(19,0)")
     yd = F.col("y").cast("decimal(19,0)")
     g = per_user.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(F.sum(arm_a), F.lit(0)).cast("long").alias("n_a"),
-        F.coalesce(F.sum(1 - arm_a), F.lit(0)).cast("long").alias("n_b"),
-        F.coalesce(F.sum(F.when(arm_a == 1, F.col("x"))), F.lit(0)).alias("sxa"),
-        F.coalesce(F.sum(F.when(arm_a == 0, F.col("x"))), F.lit(0)).alias("sxb"),
-        F.coalesce(F.sum(F.when(arm_a == 1, F.col("y"))), F.lit(0)).alias("sya"),
-        F.coalesce(F.sum(F.when(arm_a == 0, F.col("y"))), F.lit(0)).alias("syb"),
+        *arm_sums,
         F.coalesce(F.sum("x"), F.lit(0)).cast("decimal(38,0)").alias("sx"),
         F.coalesce(F.sum("y"), F.lit(0)).cast("decimal(38,0)").alias("sy"),
         F.sum(xd * yd).alias("sxy"),
@@ -2050,7 +2065,7 @@ def cohort_ltv(
     base = events.select(
         F.col(user_col).alias("u"),
         midx.alias("m"),
-        F.coalesce(F.round(F.col(value_col) * 100).cast("long"), F.lit(0)).alias("c"),
+        F.coalesce(_cents(value_col), F.lit(0)).alias("c"),
     ).select("u", "m", "c", F.min("m").over(wu).alias("cohort"))
     sizes = base.groupBy("cohort").agg(
         F.count_distinct(F.col("u")).cast("long").alias("cohort_users")
@@ -2454,7 +2469,7 @@ def price_volume_decomposition(
     monthly = lineitem.groupBy(
         (F.year(date_col) * 12 + F.month(date_col)).cast("long").alias("m")
     ).agg(
-        F.sum(F.round(F.col(price_col) * 100).cast("long")).cast("long").alias("rev"),
+        F.sum(_cents(price_col)).cast("long").alias("rev"),
         F.sum(F.col(qty_col).cast("long")).cast("long").alias("q"),
     )
     w = Window.orderBy("m")
@@ -2540,26 +2555,20 @@ def roc_auc(
     materialization, no threshold sweep, and NO row-level sort.  Rows
     collapse to DISTINCT score values with per-class counts first
     (the :func:`ks_test` discipline — a hash aggregate to the score
-    domain), then every row at score v carries the doubled average
-    rank ``2r_v = 2·cum_below(v) + t_v + 1`` (exact-BIGINT identity
-    with per-row ``2·rank() + count_over − 1``; ties get average-rank
+    domain), then every score v carries its doubled average rank
+    ``2r_v`` from :func:`_doubled_ranks` (ties get average-rank
     treatment, the standard trapezoidal-AUC equivalence), and the
-    rank sum is Σp_v·2r_v over the domain-sized table.  Cumulative
-    counts come from :func:`~.relational.bucketed_cum_counts` — range-
-    bucket partials, a bucket-domain offset window, PARTITIONED
-    within-bucket ranks — so even a NEAR-UNIQUE continuous score
-    domain (the realistic model-score shape, where the distinct-value
-    "domain" is row-sized) stays fully parallel; a row-level
+    rank sum is Σp_v·2r_v over the domain-sized table.  The bucketed
+    cumulative counts keep even a NEAR-UNIQUE continuous score domain
+    (the realistic model-score shape, where the distinct-value
+    "domain" is row-sized) fully parallel; a row-level
     ``Window.orderBy`` here would single-partition-sort the whole
-    eval set, and round 10's domain-collapse still funneled the
-    distinct-score table through one cumulative task.
+    eval set.
 
     AUC = (Σ2r⁺ − n⁺(n⁺+1)) / (2·n⁺·n⁻) — exact BIGINTs until the one
     final division; degenerate label sets (single class) are NULL.
     Returns one row ``(n_pos, n_neg, auc)``.
     """
-    from .relational import bucketed_cum_counts
-
     two = df.select(
         label_col.cast("long").alias("is_pos"), score_col.alias("v")
     )
@@ -2567,18 +2576,12 @@ def roc_auc(
         F.count(F.lit(1)).cast("long").alias("t"),
         F.coalesce(F.sum("is_pos"), F.lit(0)).cast("long").alias("p"),
     )
-    cum = bucketed_cum_counts(per, "v", [("t", "ct")]).select(
-        "t",
-        "p",
-        (F.col("ct") - F.col("t")).cast("long").alias("cb"),
-    )
-    r2 = 2 * F.col("cb") + F.col("t") + 1  # doubled avg rank of value v
-    s = cum.groupBy().agg(
+    s = _doubled_ranks(per, "t", "p").groupBy().agg(
         F.coalesce(F.sum("p"), F.lit(0)).cast("long").alias("n_pos"),
         F.coalesce(F.sum(F.col("t") - F.col("p")), F.lit(0))
         .cast("long")
         .alias("n_neg"),
-        F.coalesce(F.sum(F.col("p") * r2), F.lit(0)).cast("long").alias("rp2"),
+        F.coalesce(F.sum(F.col("p") * F.col("r2")), F.lit(0)).cast("long").alias("rp2"),
     )
     n1, n2 = F.col("n_pos"), F.col("n_neg")
     auc = F.try_divide(
@@ -2612,8 +2615,6 @@ def lift_table(
     window on the bucket domain finish it.  Returns ``(bucket, n,
     n_pos, response_rate, lift, cum_capture)``.
     """
-    from .relational import exact_ntile
-
     binned = exact_ntile(
         df.select(
             score_col.alias("__score"),
@@ -2738,8 +2739,6 @@ def calibration_table(
     calib_gap)`` — gap = predicted − observed, positive means the
     score OVERSTATES the outcome in that bucket.
     """
-    from .relational import exact_ntile
-
     base = df.select(
         score_col.cast("long").alias("__s"),
         id_col.alias("__id"),
@@ -2808,7 +2807,7 @@ def welch_ttest(
     Returns one row ``(n_a, n_b, mean_a, mean_b, t_stat, df_ws)``.
     """
     is_a = F.col(group_col) == group_a
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     two = df.filter(F.col(group_col).isin(group_a, group_b)).select(
         is_a.alias("a"), cents.alias("x")
     )
@@ -2976,15 +2975,8 @@ def diff_in_diff(
     Returns one row ``(n_a, n_b, pre_a, pre_b, post_a, post_b,
     did)`` — means in dollars, 6 dp.
     """
-    per_user, arm_a = _parity_pre_post_sums(events, user_col, ts_col, value_col)
-    g = per_user.groupBy().agg(
-        F.coalesce(F.sum(arm_a), F.lit(0)).cast("long").alias("n_a"),
-        F.coalesce(F.sum(1 - arm_a), F.lit(0)).cast("long").alias("n_b"),
-        F.coalesce(F.sum(F.when(arm_a == 1, F.col("x"))), F.lit(0)).alias("sxa"),
-        F.coalesce(F.sum(F.when(arm_a == 0, F.col("x"))), F.lit(0)).alias("sxb"),
-        F.coalesce(F.sum(F.when(arm_a == 1, F.col("y"))), F.lit(0)).alias("sya"),
-        F.coalesce(F.sum(F.when(arm_a == 0, F.col("y"))), F.lit(0)).alias("syb"),
-    )
+    per_user, arm_sums = _parity_pre_post_sums(events, user_col, ts_col, value_col)
+    g = per_user.groupBy().agg(*arm_sums)
 
     def mean(s, cnt):
         return F.try_divide(
@@ -3128,7 +3120,7 @@ def anova_oneway(
     Returns one row ``(n, k_groups, df_between, df_within, f_stat,
     eta_sq)``.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     per_g = df.select(F.col(group_col).alias("g"), cents.alias("v")).groupBy(
         "g"
     ).agg(
@@ -3136,23 +3128,7 @@ def anova_oneway(
         F.sum("v").cast("long").alias("s_g"),
         F.sum(F.col("v").cast("decimal(38,0)") * F.col("v")).alias("q_g"),
     )
-    a_term = F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-    roll = per_g.groupBy().agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("s_g").cast("long").alias("s"),
-        F.sum("q_g").alias("q"),
-        F.sum(a_term).alias("a"),
-    )
-    ssb = F.col("a") - F.col("s").cast("double") * F.col("s") / F.col("n")
-    ssw = F.col("q").cast("double") - F.col("a")
-    f_stat = F.try_divide(
-        F.try_divide(ssb, (F.col("k") - 1).cast("double")),
-        F.nullif(
-            F.try_divide(ssw, (F.col("n") - F.col("k")).cast("double")),
-            F.lit(0.0),
-        ),
-    )
+    roll, f_stat, ssb, ssw = _one_way_f(per_g)
     eta = F.try_divide(ssb, F.nullif(ssb + ssw, F.lit(0.0)))
     return roll.select(
         "n",
@@ -3177,47 +3153,31 @@ def kruskal_wallis(
 
     Exactness: values quantize to cents; rows collapse to the DISTINCT
     (group, value) count table, then the value-domain table ``(v, t)``,
-    and the DOUBLED average rank ``2r_v = 2·cum_below + t + 1`` makes
-    every per-group rank sum ``2R_g = Σ c_gv·2r_v`` an exact BIGINT
-    (the :func:`mannwhitney_u` identity).  The float stage is
-    ``Σ_g (2R_g)²/n_g`` (k deterministic terms), the H line, and the
-    tie correction ``1 − Σ(t³−t)/(N³−N)`` — each a correctly-rounded
-    expression over exact ints; an all-tied corpus nulls out via
-    ``nullif`` instead of dividing by zero.
+    and the doubled average rank ``2r_v`` of :func:`_doubled_ranks`
+    makes every per-group rank sum ``2R_g = Σ c_gv·2r_v`` an exact
+    BIGINT.  The float stage is ``Σ_g (2R_g)²/n_g`` (k deterministic
+    terms), the H line, and the tie correction ``1 − Σ(t³−t)/(N³−N)``
+    — each a correctly-rounded expression over exact ints; an all-tied
+    corpus or a single row nulls out via ``nullif``/``try_divide``
+    instead of dividing by zero.
 
     Scale shape: groupBy to the (g,v) domain, groupBy to the v domain,
-    cumulative counts via :func:`~.relational.bucketed_cum_counts`
-    (range-bucket partials + partitioned within-bucket ranks — the
-    value domain may be near-row-cardinality for continuous metrics,
-    so the ordered pass must be parallel, never the round-10 single
-    domain-table window; the plan-hygiene guard rejects both the naive
-    row-level rank and a non-reducing aggregate funnel), one equi-join
-    back on v, one k-row rollup.
+    :func:`_doubled_ranks`'s bucketed cumulative counts (the
+    plan-hygiene guard rejects both the naive row-level rank and a
+    non-reducing aggregate funnel), one equi-join back on v, one k-row
+    rollup.
     Returns one row ``(n, k_groups, h_stat)``.
     """
-    from .relational import bucketed_cum_counts
-
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     gv = df.select(F.col(group_col).alias("g"), cents.alias("v")).groupBy(
         "g", "v"
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
     per_v = gv.groupBy("v").agg(F.sum("c").cast("long").alias("t"))
-    ranked = bucketed_cum_counts(per_v, "v", [("t", "ct")]).select(
-        "v",
-        "t",
-        (2 * (F.col("ct") - F.col("t")) + F.col("t") + 1)
-        .cast("long")
-        .alias("r2"),
-    )
-    per_g = gv.join(ranked.select("v", "r2"), "v").groupBy("g").agg(
+    per_g = gv.join(_doubled_ranks(per_v, "v"), "v").groupBy("g").agg(
         F.sum("c").cast("long").alias("n_g"),
         F.sum(F.col("c") * F.col("r2")).cast("long").alias("r2g"),
     )
-    ties = per_v.groupBy().agg(
-        F.coalesce(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")), F.lit(0)
-        ).cast("long").alias("tie3")
-    )
+    ties = per_v.groupBy().agg(_tie3())
     roll = per_g.groupBy().agg(
         F.sum("n_g").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -3228,7 +3188,7 @@ def kruskal_wallis(
     n = F.col("n").cast("double")
     # H = 12/(N(N+1))·ΣR²/n − 3(N+1) with R=r2g/2 ⇒ 3/(N(N+1))·Σ(2R)²/n
     h_raw = 3.0 / (n * (n + 1.0)) * F.col("srn") - 3.0 * (n + 1.0)
-    corr = 1.0 - F.col("tie3").cast("double") / (n * n * n - n)
+    corr = 1.0 - F.try_divide(F.col("tie3").cast("double"), n * n * n - n)
     h = F.try_divide(h_raw, F.nullif(corr, F.lit(0.0)))
     return roll.select(
         "n",
@@ -3268,9 +3228,7 @@ def levene_test(
     median table; one k-row rollup.
     Returns one row ``(n, k_groups, w_stat)``.
     """
-    from .relational import bucketed_cum_counts
-
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     gv = df.select(F.col(group_col).alias("g"), cents.alias("v")).groupBy(
         "g", "v"
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -3294,23 +3252,7 @@ def levene_test(
         F.sum(F.col("c") * z).cast("long").alias("s_g"),
         F.sum(F.col("c").cast("decimal(38,0)") * z * z).alias("q_g"),
     )
-    a_term = F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-    roll = per_g.groupBy().agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("s_g").cast("long").alias("s"),
-        F.sum("q_g").alias("q"),
-        F.sum(a_term).alias("a"),
-    )
-    ssb = F.col("a") - F.col("s").cast("double") * F.col("s") / F.col("n")
-    ssw = F.col("q").cast("double") - F.col("a")
-    w = F.try_divide(
-        F.try_divide(ssb, (F.col("k") - 1).cast("double")),
-        F.nullif(
-            F.try_divide(ssw, (F.col("n") - F.col("k")).cast("double")),
-            F.lit(0.0),
-        ),
-    )
+    roll, w = _one_way_f(per_g)[:2]
     return roll.select(
         "n",
         F.col("k").alias("k_groups"),
@@ -3483,7 +3425,7 @@ def forecast_baseline(
     denominator, one 1-row rollup.  Returns
     ``(n_days, n_forecast, mase, smape)``.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     daily = df.groupBy(F.to_date(ts_col).alias("d")).agg(
         F.sum(cents).cast("long").alias("v")
     )
@@ -3555,7 +3497,7 @@ def delta_method_ratio(
     one groupBy(arm) to 2 rows, one 2-row pivot rollup.  Returns one
     row ``(n_a, n_b, ratio_a, ratio_b, diff, z_stat)``.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     per_user = events.groupBy(F.col(user_col).alias("u")).agg(
         F.sum(cents).cast("long").alias("x"),
         F.count(F.lit(1)).cast("long").alias("y"),
@@ -3637,7 +3579,7 @@ def bh_significance(
     family size, never the row count.  Returns per segment
     ``(grp, n, n_high, z_stat, p_value, bh_rank, significant)``.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = _cents(value_col)
     base = df.select(F.col(group_col).alias("grp"), cents.alias("v"))
     tot = base.agg(
         F.count(F.lit(1)).cast("long").alias("n_tot"),
@@ -3811,9 +3753,7 @@ def quantile_rollup(
     week ``(week, n_rows, p50, p95, p99)`` plus a ``week = NULL``
     all-time row, ordered with the all-time row last.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    from ..functions.vectors import lit_double_array
-
+    cents = _cents(value_col)
     probs = lit_double_array([(i + 0.5) / m_grid for i in range(m_grid)])
     daily = events.groupBy(F.to_date(ts_col).alias("d")).agg(
         F.count(F.lit(1)).cast("long").alias("n_d"),
@@ -3899,8 +3839,6 @@ def logrank_test(
     # the per-user frame feeds the cohort totals AND the death table
     # (and the totals re-attach twice) — materialize the entity-domain
     # collapse once (the engine-wide scan-once discipline)
-    from ._materialize import materialize_once
-
     per_user = materialize_once(per_user)
     totals = per_user.groupBy().agg(
         F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).cast("long").alias("na"),
@@ -4009,8 +3947,6 @@ def info_gain(
     # three entropy branches + two margin rollups read the contingency
     # table — materialize the domain-sized frame once (round-11 audit:
     # 9 raw-table scans before this)
-    from ._materialize import materialize_once
-
     xy = materialize_once(xy)
 
     def ent_sum(counts: DataFrame, key: str) -> DataFrame:
@@ -4100,8 +4036,6 @@ def ab_sequential(
     )
     # the day-domain table feeds the cumulative windows and the 1-row
     # grand total — materialize the bounded calendar frame once
-    from ._materialize import materialize_once
-
     daily = materialize_once(daily)
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     cum = daily.select(
@@ -4167,7 +4101,7 @@ def offpolicy_eval(
         F.pmod(F.col(user_col), F.lit(n_contexts)).cast("int").alias("x"),
         F.col(type_col).alias("a"),
         F.greatest(
-            F.round(F.col(value_col) * 100).cast("long"), F.lit(0)
+            _cents(value_col), F.lit(0)
         ).alias("r"),
     )
     prop = base.groupBy("x", "a").agg(F.count(F.lit(1)).cast("long").alias("c_xa"))
@@ -4267,8 +4201,6 @@ def simpsons_check(
         .cast("long")
         .alias("x_b"),
     )
-    from ._materialize import materialize_once
-
     # the segment table feeds the output AND the pooled rollup —
     # materialize the ≤7-row frame once
     per = materialize_once(per)

@@ -290,6 +290,15 @@ def test_kruskal_wallis_worked_example_with_ties(spark):
     assert abs(r["h_stat"] - h / corr) < 1e-6
 
 
+def test_kruskal_wallis_single_row_is_null(spark):
+    """n = 1 makes the tie-correction denominator N³ − N zero: H is
+    NULL (as anova_oneway and levene_test report), not an ANSI
+    division error."""
+    df = spark.createDataFrame([("a", 1.0)], "g string, v double")
+    r = ev_ops.kruskal_wallis(df, "g", "v").collect()[0]
+    assert (r["n"], r["k_groups"], r["h_stat"]) == (1, 1, None)
+
+
 def test_kruskal_wallis_two_groups_equals_mannwhitney_z_squared(spark):
     """The classic identity: for k = 2 the tie-corrected H IS z² of
     the rank-sum test — pins the two rank pipelines against each

@@ -485,6 +485,20 @@ def test_dedup_exact_keep_best_longest_copy(spark):
     assert out2 == {5: True, 7: False}
 
 
+@pytest.mark.parametrize(
+    "text, n_points", [("solo solo solo", 1), ("", 0)], ids=["one_word", "empty"]
+)
+def test_zipf_fit_degenerate_corpus_is_null(spark, text, n_points):
+    """A one-word corpus has one point and an empty corpus none: the
+    fit is NULL (as heaps_fit reports), not an ANSI division error,
+    and an empty corpus counts 0 points."""
+    from mapreduce_faultolerrant_localityaware_spark.operators import corpus
+
+    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    out = corpus.zipf_fit(df, top_n=20).collect()[0]
+    assert (out["n_points"], out["slope"], out["intercept"]) == (n_points, None, None)
+
+
 def test_zipf_fit_recovers_exponent(spark):
     """A synthetic corpus with freq(rank) ∝ rank^-1 must fit a slope
     near -1; the flat corpus (all tokens equal) fits ~0."""

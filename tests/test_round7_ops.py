@@ -3,6 +3,7 @@ query-surface outputs, and the merge-upsert tie-break contract."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_faultolerrant_localityaware_spark.operators import dedup
@@ -2174,6 +2175,20 @@ def test_ks_test_detects_shift_and_zero_on_identical(spark):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     r2 = events_ops.ks_test(df2).collect()[0]
     assert r2["d_stat"] < 0.05
+
+
+@pytest.mark.parametrize("n_rows", [1, 5])
+def test_ks_test_empty_half_is_null(spark, n_rows):
+    """Every event at one timestamp (or a single event) leaves the
+    reference half empty: D is NULL, not an ANSI division error."""
+    from mapreduce_faultolerrant_localityaware_spark.operators import events as events_ops
+
+    df = spark.createDataFrame(
+        [(i, 1, "a", "2024-01-01 00:00:00", 10.0 + i) for i in range(n_rows)],
+        "event_id LONG, user_id LONG, event_type STRING, ts STRING, value DOUBLE",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    r = events_ops.ks_test(df).collect()[0]
+    assert (r["n_ref"], r["n_cmp"], r["d_stat"]) == (0, n_rows, None)
 
 
 def test_sample_weighted_k_is_exact_k_and_weight_biased(spark):

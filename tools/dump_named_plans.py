@@ -1,14 +1,40 @@
 """Dump ``explain("formatted")`` for named queries to files, with the
-per-run ids normalised, so that two dumps of the same plan — from two
-commits, two sessions or two scale factors of the same shape — diff to
-nothing and a diff shows only a real plan change.
+per-run ids normalised, plus each query's rows and construction cost,
+so that two dumps of the same query — from two commits, two sessions
+or two scale factors of the same shape — diff to nothing and a diff
+shows only a real change of plan, result or construction cost.
+
+Each file holds the plan followed by two lines:
+
+    rows=<n> sha1=<digest of the sorted row reprs>
+    py4j=<non-"m" py4j commands of a second construction>
+
+``py4j`` counts the commands Python sends to the JVM while the
+query's ``_q_`` function runs a second time in the warm session (the
+first construction pays one-off costs such as schema resolution);
+``m`` commands (py4j object releases) follow the Python garbage
+collector, not the code, and are left out.  The digest hashes every collected
+row, so it also covers queries whose oracle check is rows-only.
 
 Normalised: expression ids (``o_orderkey#123L`` → ``o_orderkey#_L``),
-RDD ids (``MapPartitionsRDD[109]`` → ``MapPartitionsRDD[_]``), exchange
-plan ids (``[plan_id=42]`` → ``[plan_id=_]``), and lambda variables,
-whose session-wide counter (``lambda x_241``) is renumbered in order
-of first appearance within each plan (``lambda x_0``, ``lambda y_1``).
+RDD ids and creation sites (``MapPartitionsRDD[109] at localCheckpoint
+at NativeMethodAccessorImpl.java:0`` → ``MapPartitionsRDD[_] at
+localCheckpoint at _``; the site depends on what ran before), exchange
+plan ids (``[plan_id=42]`` → ``[plan_id=_]``), and two session-wide
+counters renumbered in order of first appearance within each plan:
+lambda variables (``lambda x_241`` → ``lambda x_0``) and common
+subexpression aliases (``_common_expr_7`` → ``_common_expr_0``).
 Operator numbers ``(7)`` are kept: they are positional, not per-run.
+
+Two plan differences are not code changes:
+- ``try_divide(a, b)`` prints as ``(a / b)``, so swapping ``/`` for
+  ``F.try_divide`` leaves the plan text unchanged (the py4j count
+  still moves);
+- the Expand order of a distinct aggregate (``count(DISTINCT ...)``)
+  can follow the session's expression-id history, so a query dumped
+  after a changed query may print a different Expand order than the
+  same query dumped alone.  Re-dump such a query alone before calling
+  the difference a change.
 
 Usage: python tools/dump_named_plans.py OUT_DIR SUFFIX q1 q2 ...
        (files land at OUT_DIR/<q>_<SUFFIX>.txt; sf dir from
@@ -19,29 +45,63 @@ Compare two dumps with ``diff -r OLD_DIR NEW_DIR`` (same SUFFIX).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _IDS = (
     (re.compile(r"#\d+"), "#_"),
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    (re.compile(r"(RDD\[_\] at \w+ at )[^\s,]+:\d+"), r"\1_"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
 )
-_LAMBDA = re.compile(r"\blambda (\w+?)_\d+\b")
+_COUNTERS = (
+    re.compile(r"\b(lambda \w+?)_\d+\b"),
+    re.compile(r"\b(_common_expr)_\d+\b"),
+)
 
 
 def normalise(plan: str) -> str:
     """``plan`` with its per-run expression, RDD and plan ids blanked
-    and its lambda variables renumbered from 0."""
+    and its lambda variables and common-expression aliases renumbered
+    from 0."""
     for pat, repl in _IDS:
         plan = pat.sub(repl, plan)
-    seen: dict[str, str] = {}
-    return _LAMBDA.sub(
-        lambda m: seen.setdefault(m.group(0), f"lambda {m.group(1)}_{len(seen)}"), plan
-    )
+    for pat in _COUNTERS:
+        seen: dict[str, str] = {}
+        plan = pat.sub(
+            lambda m: seen.setdefault(m.group(0), f"{m.group(1)}_{len(seen)}"), plan
+        )
+    return plan
+
+
+class _Py4jCounter:
+    """Counts the non-``m`` py4j commands the main thread sends while on."""
+
+    def __init__(self, spark) -> None:
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        main = threading.get_ident()
+        self.on, self.n = False, 0
+
+        def send_command(command, *args, **kwargs):
+            if self.on and command[:1] != "m" and threading.get_ident() == main:
+                self.n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = send_command
+
+    def count(self, fn) -> int:
+        self.n, self.on = 0, True
+        try:
+            fn()
+        finally:
+            self.on = False
+        return self.n
 
 
 def main() -> None:
@@ -52,6 +112,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-named-plans")
+    py4j = _Py4jCounter(spark)
     qs = entry_mod.queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -59,10 +120,15 @@ def main() -> None:
     for name in names:
         df = qs[name](spark, sf_dir)
         plan = normalise(df._jdf.queryExecution().explainString(mode))
+        rows = sorted(repr(r) for r in df.collect())
+        digest = hashlib.sha1("\n".join(rows).encode()).hexdigest()
+        calls = py4j.count(lambda: qs[name](spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
-        print(f"wrote {path} ({len(plan.splitlines())} lines)")
+            fh.write(f"\nrows={len(rows)} sha1={digest}\npy4j={calls}\n")
+        print(f"wrote {path} ({len(plan.splitlines())} plan lines, "
+              f"rows={len(rows)}, py4j={calls})")
 
 
 if __name__ == "__main__":
