@@ -4680,6 +4680,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _TOK = r"list_filter(regexp_split_to_array(text, '[^\p{L}]+'), t -> t <> '')"
 _TOK_LOWER = r"list_filter(regexp_split_to_array(lower(text), '[^\p{L}]+'), t -> t <> '')"
 _NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
+# dedup.content_hash: NULL text hashes as the empty text
+_CONTENT_HASH = f"md5(coalesce({_NORM}, ''))"
 
 _SHINGLES_LOWER = f"""
   WITH toks AS (SELECT doc_id, {_TOK_LOWER} AS tk FROM documents),
@@ -5803,7 +5805,7 @@ def oracle_sql() -> dict[str, str]:
             FROM dau JOIN wau USING (d) ORDER BY day
         """,
         "dedup_overlap_matrix": f"""
-            WITH ds AS (SELECT DISTINCT md5({_NORM}) AS h, source AS src
+            WITH ds AS (SELECT DISTINCT {_CONTENT_HASH} AS h, source AS src
                         FROM documents)
             SELECT a.src AS source_a, b.src AS source_b,
                    CAST(count(*) AS BIGINT) AS n_shared
@@ -6083,9 +6085,9 @@ def oracle_sql() -> dict[str, str]:
             ) WHERE quality >= 0.5
         """,
         "streaming_incremental_dedup": f"""
-            WITH bh AS (SELECT DISTINCT md5({_NORM}) AS content_hash
+            WITH bh AS (SELECT DISTINCT {_CONTENT_HASH} AS content_hash
                         FROM documents WHERE doc_id % 4 != 0),
-            dh AS (SELECT doc_id, md5({_NORM}) AS content_hash
+            dh AS (SELECT doc_id, {_CONTENT_HASH} AS content_hash
                    FROM documents WHERE doc_id % 4 = 0)
             SELECT content_hash, min(doc_id) AS keep_id,
                    CAST(count(*) AS BIGINT) AS n_delta
@@ -9095,7 +9097,7 @@ def oracle_sql() -> dict[str, str]:
                            + (1.0 - (chars - letters) * 1.0 / chars) * 0.5), 6) AS quality
               FROM base WHERE len(tk) > 0
             ),
-            keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5({_NORM})),
+            keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY {_CONTENT_HASH}),
             hits AS (SELECT doc_id, {{lang_hit_cols}} FROM (SELECT doc_id, {_TOK_LOWER} AS tk FROM documents)),
             best AS (SELECT doc_id, *, {{lang_best}} AS best FROM hits),
             lang AS (SELECT doc_id, {{lang_case}} AS lang_pred FROM best)
@@ -9254,7 +9256,7 @@ def oracle_sql() -> dict[str, str]:
             FROM best
         """,
         "fingerprint": f"""
-            SELECT doc_id, md5({_NORM}) AS content_md5,
+            SELECT doc_id, {_CONTENT_HASH} AS content_md5,
                    list_aggregate(list_transform({_TOK_LOWER}, t -> md5(t)), 'min') AS min_token_hash,
                    list_aggregate(list_transform({_TOK_LOWER}, t -> md5(t)), 'max') AS max_token_hash
             FROM documents
@@ -9289,7 +9291,7 @@ def oracle_sql() -> dict[str, str]:
             FROM canon GROUP BY 1 HAVING count(*) >= 2
         """,
         "dedup_exact": f"""
-            SELECT md5({_NORM}) AS content_hash, min(doc_id) AS keep_id,
+            SELECT {_CONTENT_HASH} AS content_hash, min(doc_id) AS keep_id,
                    CAST(count(*) AS BIGINT) AS n_dups
             FROM documents GROUP BY 1
         """,
@@ -9319,9 +9321,9 @@ def oracle_sql() -> dict[str, str]:
             FROM tot t LEFT JOIN agg a USING (doc_id)
         """,
         "dedup_incremental": f"""
-            WITH base AS (SELECT md5({_NORM}) AS content_hash, count(*) AS n_base
+            WITH base AS (SELECT {_CONTENT_HASH} AS content_hash, count(*) AS n_base
                           FROM documents WHERE doc_id % 4 <> 0 GROUP BY 1),
-            dh AS (SELECT doc_id, md5({_NORM}) AS content_hash
+            dh AS (SELECT doc_id, {_CONTENT_HASH} AS content_hash
                    FROM documents WHERE doc_id % 4 = 0),
             fd AS (SELECT content_hash, min(doc_id) AS first_id FROM dh GROUP BY 1)
             SELECT dh.doc_id,
@@ -9486,7 +9488,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "dedup_exact_keep_best": f"""
             WITH h AS (
-              SELECT doc_id, md5({_NORM}) AS content_hash, length(text) AS len
+              SELECT doc_id, {_CONTENT_HASH} AS content_hash, length(text) AS len
               FROM documents
             ),
             e AS (

@@ -44,11 +44,17 @@ def tokens(col: Column | str, lowercase: bool = False) -> Column:
     return F.filter(arr, lambda t: t != F.lit(""))
 
 
-def normalized_text(col: Column | str) -> Column:
+def normalized_sql(col: str) -> str:
+    """SQL for :func:`normalized_text` of column ``col``, backtick-quoted
+    so a name with a space, a hyphen or a reserved word still parses."""
+    quoted = col.replace("`", "``")
+    return rf"trim(regexp_replace(lower(`{quoted}`), '\\s+', ' '))"
+
+
+def normalized_text(col: str) -> Column:
     """Canonical form used for exact-dedup / fingerprinting: lowercase,
-    collapse whitespace runs, trim."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    collapse whitespace runs, trim (one SQL parse)."""
+    return F.expr(normalized_sql(col))
 
 
 def shingles(tokens_col: Column, n: int = 3) -> Column:

@@ -19,11 +19,22 @@ All built-in-function compositions (codegen'd, no Python):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
+from ._materialize import Rounds, materialize_once, release_checkpoint
 from ._parallel import ensure_parallelism
+from .dedup import (
+    NUM_HASHES,
+    _shingle_rows,
+    dedup_minhash_candidates,
+    minhash_bands,
+    minhash_signatures,
+    shingle_hashes,
+)
+from .graph import pagerank
+from .relational import top_k
 
 def tfidf_top_terms(
     docs: DataFrame,
@@ -57,8 +68,6 @@ def tfidf_top_terms(
     N attaches as a broadcast single-row join (one scalar shipped to
     every executor — no session-global view, no cartesian blowup).
     """
-    from pyspark.sql import Window
-
     tk = ensure_parallelism(docs).select(
         F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("token")
     )
@@ -121,8 +130,6 @@ def bigram_counts(
     (one codegen'd pass, zero shuffle); the only exchange carries
     (bigram, partial count) thanks to map-side combine, and the top-k
     is TakeOrderedAndProject (per-partition heads, no total sort)."""
-    from ..operators.relational import top_k
-
     tk = tokens(text_col, lowercase=True)
     grams = ensure_parallelism(docs).select(F.explode(_bigrams(tk)).alias("bigram"))
     counts = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("n"))
@@ -151,10 +158,7 @@ def contamination_check(
     table; the modulo split keeps the operator self-contained and
     oracle-checkable on one input.
     """
-    sh = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle"),
-    ).distinct()
+    sh = _shingle_rows(docs, text_col, id_col, n).distinct()
     is_bench = (F.col(id_col) % bench_mod) == 0
     bench = sh.filter(is_bench)
     train = sh.filter(~is_bench).select("shingle").distinct()
@@ -203,8 +207,6 @@ def pack_sequences(
     never span streams, each stream fills independently.  One shuffle
     (by stream), one sort (by id within stream), all codegen'd.
     """
-    from pyspark.sql import Window
-
     n_tok = F.size(tokens(text_col, lowercase=True))
     base = ensure_parallelism(docs).select(
         F.col(id_col), n_tok.cast("long").alias("n_tokens"),
@@ -237,8 +239,6 @@ def mixture_report(
     n_tokens); the share-of-total windows run over the AGGREGATED
     output, whose cardinality is |sources| × |langs| — a few hundred
     rows at any corpus size, so the unpartitioned window is safe."""
-    from pyspark.sql import Window
-
     keys = [F.col(c) for c in by]
     agg = ensure_parallelism(docs).groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -278,8 +278,6 @@ def mixture_weights(
     ``n_docs, n_tokens, token_share, weight, boost`` (boost =
     weight/token_share, the relative over/under-sampling factor the
     data loader applies)."""
-    from pyspark.sql import Window
-
     agg = ensure_parallelism(docs).groupBy(by).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(tokens(text_col, lowercase=True))).cast("long").alias("n_tokens"),
@@ -336,8 +334,6 @@ def mixture_sample(
     is a contiguous rank range), so the output is IDENTICAL to the
     single-window formulation, cum_tokens included.
     """
-    from pyspark.sql import Window
-
     base = docs.select(
         F.col(id_col),
         F.col(by),
@@ -417,8 +413,6 @@ def split_leakage_report(
 
     Returns ``split_a, split_b, n_pairs``.
     """
-    from .dedup import dedup_minhash_candidates
-
     pairs = dedup_minhash_candidates(docs, text_col=text_col, id_col=id_col)
     splits = split_assign(docs, weights=weights, names=names, key_col=id_col).select(
         F.col(id_col), F.col("split")
@@ -460,8 +454,6 @@ def tokens_to_ids(
 
     Returns ``doc_id, n_tokens, ids`` for docs with >= 1 token.
     """
-    from pyspark.sql import Window
-
     tk = ensure_parallelism(docs).select(
         F.col(id_col),
         F.posexplode(tokens(text_col, lowercase=True)).alias("pos", "token"),
@@ -526,8 +518,6 @@ def lm_bigram_score(
     # the per-doc bigram relation feeds the model aggregates AND the
     # scoring join; the model table feeds ctx/vocab/scored — each
     # materializes once (round-11 scan audit)
-    from ._materialize import materialize_once
-
     per = materialize_once(per)
     big = per.groupBy("w1", "w2").agg(F.sum("cnt").alias("c_big"))
     big = materialize_once(big)
@@ -699,8 +689,6 @@ def domain_cap(
     Returns ``id_col, source_col, quality_col, src_rank`` for kept
     docs.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy(source_col).orderBy(
         F.desc(quality_col), F.asc(id_col)
     )
@@ -740,8 +728,6 @@ def shard_assign(
 
     Returns ``id_col, shard, pos``.
     """
-    from pyspark.sql import Window
-
     digest = F.md5(F.col(id_col).cast("string"))
     shard = (F.conv(F.substring(digest, 1, 8), 16, 10).cast("long") % n_shards).alias(
         "shard"
@@ -810,8 +796,6 @@ def pmi_collocations(
 
     Returns ``w1, w2, n_pair, pmi`` (6 dp), pmi-desc.
     """
-    from .relational import top_k
-
     tk = tokens(text_col, lowercase=True)
     base = ensure_parallelism(docs)
     uni = (
@@ -819,8 +803,6 @@ def pmi_collocations(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from ._materialize import materialize_once
-
     # vocabulary-sized count tables each feed a scalar total and a
     # join side — materialize both so each tokenize pass runs once
     uni = materialize_once(uni)
@@ -892,8 +874,6 @@ def bpe_train(
     pairs.  No end-of-word marker is appended (whole-word tokens
     already come from the whitespace/letter pre-tokenizer).
     """
-    from ._materialize import Rounds, release_checkpoint
-
     spark = docs.sparkSession
     rounds = Rounds(spark, "vocab")
     words = (
@@ -978,8 +958,6 @@ def bpe_encode(
 
     Returns ``id_col, n_words, n_subwords, fertility`` (6 dp).
     """
-    from ._materialize import Rounds
-
     tk = ensure_parallelism(docs).select(
         F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("w")
     )
@@ -1049,8 +1027,6 @@ def heavy_hitters(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataF
     Returns ``rank, token, est_count`` for the top ``k`` surviving
     tokens (rank by est_count desc, token asc).
     """
-    from pyspark.sql import Window
-
     toks = ensure_parallelism(docs).select(
         F.explode(tokens(text_col, lowercase=True)).alias("token")
     )
@@ -1144,8 +1120,6 @@ def cms_counts(
     Returns the top-``k`` tokens by true count (tie → token asc):
     ``rank, token, true_cnt, cms_est``.
     """
-    from pyspark.sql import Window
-
     M = 1 << 40
     toks = ensure_parallelism(docs).select(
         F.explode(tokens(text_col, lowercase=True)).alias("token")
@@ -1247,15 +1221,9 @@ def contamination_fuzzy(
     Returns one row per benchmark doc: (doc_id, n_candidates,
     best_est, contaminated) — clean docs report 0 / 0.0 / false.
     """
-    from pyspark.sql import Window
-
-    from .dedup import NUM_HASHES, minhash_bands, minhash_signatures
-
     sig = minhash_signatures(docs, text_col, id_col)
     # signatures feed the band explode and both estimator sides —
     # materialize the 12-int-per-doc frame once (round-11 scan audit)
-    from ._materialize import materialize_once
-
     sig = materialize_once(sig)
     bands = minhash_bands(sig, id_col)
     is_bench = (F.col(id_col) % bench_mod) == 0
@@ -1492,8 +1460,6 @@ def ccnet_buckets(
     sort of (id, score) pairs only, and the group key keeps partitions
     independent.
     """
-    from pyspark.sql import Window
-
     scored = lm_bigram_score(docs, text_col=text_col, id_col=id_col)
     src = docs.select(F.col(id_col), F.col(by))
     j = src.join(scored, id_col)  # docs with >= 1 bigram
@@ -1539,20 +1505,7 @@ def ngram_novelty(
     at least one shingle; novelty_micro = n_novel*1e6 div n_shingles —
     integer floor-division microunits, bit-stable across engines.
     """
-    sh = (
-        ensure_parallelism(docs)
-        .select(
-            F.col(id_col),
-            F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle"),
-        )
-        .select(
-            F.col(id_col),
-            F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
-        )
-        .distinct()
-    )
+    sh = shingle_hashes(docs, text_col, id_col, n).distinct()
     first = sh.groupBy("h").agg(F.min(id_col).alias("first_id"))
     return (
         sh.join(first, "h")
@@ -1594,8 +1547,6 @@ def quantile_normalize(
 
     Returns (doc_id, <group_col>, score, pr, bucket) ordered by doc_id.
     """
-    from pyspark.sql import Window
-
     base = docs.select(
         F.col(id_col),
         F.col(group_col),
@@ -1649,8 +1600,6 @@ def unigram_kl(
     # the tokenize aggregate feeds the corpus rollup, the slice totals
     # and the in-support join — materialize once so the docstring's
     # "ONE tokenize pass" is what the engine executes (round-11 audit)
-    from ._materialize import materialize_once
-
     slice_counts = materialize_once(slice_counts)
     corpus_counts = slice_counts.groupBy("t").agg(F.sum("cs").alias("cc"))
     totals = slice_counts.groupBy("grp").agg(
@@ -1739,8 +1688,6 @@ def split_stratified_exact(
 
     Returns (doc_id, <group_col>, split) ordered by doc_id.
     """
-    from pyspark.sql import Window
-
     if len(weights) != len(names) or sum(weights) != 100:
         raise ValueError("weights must match names and sum to 100")
     h = F.md5(F.col(id_col).cast("string"))
@@ -1795,10 +1742,7 @@ def textrank_keywords(
     Returns the top-``k`` (token, rank_micro, pr) by (rank desc,
     token asc) — a deterministic total order.
     """
-    from .graph import pagerank
-    from ..functions.text import tokens as tok_fn
-
-    tk = docs.select(tok_fn(F.col(text_col), lowercase=True).alias("tk"))
+    tk = docs.select(tokens(F.col(text_col), lowercase=True).alias("tk"))
     freq = tk.select(F.explode("tk").alias("t")).groupBy("t").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1849,8 +1793,6 @@ def inverted_index(
     Returns (token, df, sample_postings) ordered by (df desc, token)
     limited to the 100 most frequent tokens.
     """
-    from pyspark.sql import Window
-
     pairs = (
         docs.select(F.col(id_col), F.explode(tokens(F.col(text_col), lowercase=True)).alias("t"))
         .distinct()
@@ -2251,8 +2193,6 @@ def js_divergence(
     ``(source_a, source_b, n_a, n_b, union_types, jsd)`` ordered by
     the pair.
     """
-    from ._materialize import materialize_once
-
     tok = docs.select(
         F.col(group_col).alias("grp"), F.explode(tokens(F.col(text_col))).alias("t")
     )

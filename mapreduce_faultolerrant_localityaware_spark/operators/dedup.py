@@ -4,31 +4,59 @@ large-scale-training-pipeline extension beyond the reference surface
 replay, core/map_reduce.go:167-182 — an execution mechanism, not a
 data operator).
 
-Every operator here is a composition of built-in DataFrame ops
-(tokenize → shingle → hash → group/join) so it scales the Spark way:
-group-bys are partial-agged before the exchange, self-joins are
-equi-joins on hash keys (shuffle-hash/sort-merge, AQE-skew-handled),
-and nothing touches Python row-at-a-time.
+Every operator has the reference's one data path — hash a key, group
+by it, work inside each group (map → hash partition → reduce) — and is
+a composition of built-in DataFrame ops, so nothing touches Python
+row-at-a-time.  Operator families:
 
-Design notes for 100 TB:
-  * exact dedup shuffles one md5 per doc, not the text — group key is
-    the 32-byte digest.
-  * MinHash-LSH never materializes the O(n²) pair space: candidate
-    pairs come from equi-joins on band signatures, so the shuffle is
-    O(n·bands) and the join fans out only within a bucket.
-  * SimHash reduces each doc to one 64-bit fingerprint; near-dup
-    search bands it into 8 byte-buckets (dedup_simhash_pairs).
-  * all hashes are md5-derived → deterministic, engine-portable
-    (hash-matchable against a DuckDB oracle), seedable per permutation.
+  * exact digest: dedup_exact, dedup_exact_keep_best,
+    dedup_incremental, dedup_overlap_matrix — one md5 of the
+    normalized text per doc, so the group key is the 32-byte digest,
+    never the text.
+  * MinHash-LSH: minhash_signatures → minhash_bands →
+    dedup_minhash_candidates, lsh_bucket_stats, minhash_accuracy_report
+    and the end-to-end dedup_pipeline.  Candidate pairs come from one
+    groupBy on band signatures, so the shuffle is O(n·bands) and pairs
+    expand only inside a bucket.
+  * SimHash: simhash (one 64-bit fingerprint per doc, zero shuffle),
+    dedup_simhash_pairs (byte bands), dedup_editdist (Levenshtein
+    verify) and dedup_incremental_fuzzy (16-bit pair bands).
+  * exact set-similarity joins: the prefix filter
+    (set_similarity_join_prefix, dedup_incremental_jaccard,
+    simjoin_cosine) and the df-capped inverted index
+    (dedup_ngram_jaccard, simjoin_containment).
+  * sorted neighbourhood: dedup_sorted_neighborhood.
+  * chunk / span: dedup_chunks, substring_spans.
+
+Shared stages, each written once: ``_shingle_rows`` (the
+tokenize → shingle explode), ``shingle_hashes`` (its 60-bit md5 hash),
+``_minhash`` (Kirsch-Mitzenmacher signatures), ``bucket_pairs``
+(all-pairs / star expansion inside a bucket), ``_attach`` (per-doc
+columns onto both sides of a pair), ``_shingle_sets`` +
+``_verify_jaccard`` (the exact 6-dp Jaccard verify), ``_ordered_sets``
++ ``_prefix`` + ``_lengths_ok`` (prefix filter), ``_distinct_shingles``
++ ``_common_shingles`` (inverted index), ``_simhash_bands`` +
+``simhash_pair_bands`` (SimHash banding) and ``content_hash``.  Other
+modules call them, not copies: ``bucket_pairs`` (similarity),
+``shingle_hashes``/``_shingle_rows`` (corpus), ``content_hash``
+(textstats, streaming) and ``simhash_pair_bands``/``_simhash_bands``
+(streaming/enrich_stream.py).
+
+All hashes are md5-derived, so they are deterministic,
+engine-portable (hash-matchable against a DuckDB oracle) and seedable
+per permutation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import normalized_text, shingles, tokens
+from ..functions.text import normalized_sql, normalized_text, shingles, tokens
+from ..functions.vectors import cosine_similarity, lit_int_array, lit_long_array
+from ._materialize import materialize_once
 from ._parallel import ensure_parallelism
+from .graph import connected_components
 
 # MinHash-LSH shape: NUM_HASHES = BANDS * ROWS_PER_BAND.  12 hashes /
 # 3 bands of 4 ⇒ P(candidate | jaccard=j) = 1-(1-j^4)^3: ~.05 at j=.5,
@@ -43,6 +71,212 @@ ROWS_PER_BAND = 4
 #: i*h2+h1 stays far below signed-64 overflow).
 MINHASH_MOD = 1 << 40
 
+#: guard against float ceil/compare overshoot in the prefix and length
+#: filters (ceil(t*s) must never exceed the exact rational ceiling, or
+#: the prefix loses legal pairs).
+_EPS = 1e-9
+
+
+def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, shingle) rows: every word ``n``-gram of the lowercased
+    tokens, duplicates kept."""
+    return ensure_parallelism(docs).select(
+        F.col(id_col), F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle")
+    )
+
+
+def _hex60(digest: str, pos: int) -> str:
+    """SQL for the 60-bit integer spelled by hex digits
+    ``pos .. pos+14`` of the md5 hex string ``digest``."""
+    return f"CAST(conv(substring({digest}, {pos}, 15), 16, 10) AS BIGINT)"
+
+
+def shingle_hashes(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, h) rows: each word ``n``-gram shingle of ``docs`` as a
+    60-bit md5-derived long (the first 15 hex digits), duplicates kept.
+
+    Exchanges downstream then ship 8-byte keys instead of ~30-byte
+    strings, and a SQL oracle hashing with the same md5 expression
+    sees identical set equality and intersection, even in the
+    (≈1e-13) event of a collision."""
+    return _shingle_rows(docs, text_col, id_col, n).select(
+        F.col(id_col), F.expr(_hex60("md5(shingle)", 1)).alias("h")
+    )
+
+
+def _minhash(rel: DataFrame, id_col: str, digest: str) -> DataFrame:
+    """(id, mh0 .. mh{NUM_HASHES-1}) MinHash signatures of ``rel``'s
+    rows, whose ``digest`` (SQL over ``rel``) is each shingle's md5
+    hex string: h1, h2 are its two 60-bit halves mod MINHASH_MOD and
+    ``mh_i = min((h1 + (i+1)·h2) mod MINHASH_MOD)`` (Kirsch-Mitzenmacher)."""
+    hashed = rel.select(
+        F.col(id_col),
+        F.expr(f"{_hex60(digest, 1)} % {MINHASH_MOD}").alias("h1"),
+        F.expr(f"{_hex60(digest, 16)} % {MINHASH_MOD}").alias("h2"),
+    )
+    return hashed.groupBy(id_col).agg(
+        *[
+            F.expr(f"min((h1 + {i + 1} * h2) % {MINHASH_MOD})").alias(f"mh{i}")
+            for i in range(NUM_HASHES)
+        ]
+    )
+
+
+def bucket_pairs(
+    buckets: DataFrame, members: str, a: str, b: str, max_bucket: int
+) -> DataFrame:
+    """(a, b) pairs from the sorted ``members`` array of each bucket row.
+
+    A bucket of at most ``max_bucket`` members emits all pairs in array
+    order; a larger one (the all-equal bucket a boilerplate corpus
+    produces) emits a STAR — its first member paired with every other —
+    so output stays linear in the bucket size while the bucket stays
+    one connected component.  Members may be structs; the pair columns
+    then hold whole members.  Not distinct: two buckets can emit the
+    same pair."""
+    # ONE expr parse instead of the Column-API nested lambda (62.7 ms
+    # -> 0.8 ms per construction, identical tree and values)
+    pairs = F.expr(
+        f"flatten(transform({members}, (a, i) -> transform("
+        f"slice({members}, i + 2, size({members})), b -> struct(a AS {a}, b AS {b}))))"
+    )
+    small = (
+        buckets.filter(F.size(members) <= max_bucket)
+        .select(F.explode(pairs).alias("p"))
+        .select(F.col(f"p.{a}"), F.col(f"p.{b}"))
+    )
+    star = buckets.filter(F.size(members) > max_bucket).select(
+        F.element_at(members, 1).alias(a),
+        F.explode(F.slice(F.col(members), 2, F.size(members) - 1)).alias(b),
+    )
+    return small.unionByName(star)
+
+
+def _attach(
+    pairs: DataFrame,
+    rel: DataFrame,
+    id_col: str,
+    a: dict,
+    b: dict,
+    keys: tuple = ("doc_a", "doc_b"),
+    rel_b: DataFrame | None = None,
+) -> DataFrame:
+    """``pairs`` with per-doc columns of ``rel`` joined onto both
+    sides: ``rel``'s column ``c`` lands as ``a[c]`` on the ``keys[0]``
+    side and ``b[c]`` on the ``keys[1]`` side.  ``rel_b`` (default
+    ``rel``) feeds the second side when the two sides come from
+    different corpora."""
+    for key, names, side in zip(keys, (a, b), (rel, rel if rel_b is None else rel_b)):
+        cols = [F.col(c).alias(name) for c, name in names.items()]
+        pairs = pairs.join(side.select(F.col(id_col).alias(key), *cols), key)
+    return pairs
+
+
+def _shingle_sets(rel: DataFrame, id_col: str, col: str = "h") -> DataFrame:
+    """(id, shs): each doc's distinct ``col`` values as one array."""
+    return rel.groupBy(id_col).agg(F.collect_set(col).alias("shs"))
+
+
+def _jaccard(na: str, nb: str) -> Column:
+    """Jaccard from a ``common`` count column and the two set sizes
+    (SQL), rounded to 6 dp."""
+    return F.expr(f"round(common / ({na} + {nb} - common), 6)")
+
+
+def _verify_jaccard(
+    pairs: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    threshold: float,
+    keys: tuple = ("doc_a", "doc_b"),
+    sets_b: DataFrame | None = None,
+) -> DataFrame:
+    """``pairs`` whose exact Jaccard over their ``_shingle_sets`` is at
+    least ``threshold``, with ``common`` and ``jaccard`` (6 dp)
+    columns; set intersection is in-row work on the attached arrays."""
+    return (
+        _attach(pairs, sets, id_col, {"shs": "sa"}, {"shs": "sb"}, keys, sets_b)
+        .withColumn("common", F.expr("size(array_intersect(sa, sb))"))
+        .withColumn("jaccard", _jaccard("size(sa)", "size(sb)"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _ordered_sets(rel: DataFrame, id_col: str) -> DataFrame:
+    """(id, ordered, n_sh): each doc's (df, h) structs in the prefix
+    filter's global order — ascending document frequency, ties broken
+    by hash — from ``rel``'s (id, h, df) rows."""
+    return (
+        rel.groupBy(id_col)
+        .agg(F.sort_array(F.collect_list(F.struct("df", "h"))).alias("ordered"))
+        .withColumn("n_sh", F.size("ordered"))
+    )
+
+
+def _prefix(threshold: float) -> Column:
+    """The hashes of an ``_ordered_sets`` row's prefix: its first
+    ``n_sh - ceil(t·n_sh) + 1`` elements, which any set with Jaccard
+    ≥ t must share at least one of (pigeonhole)."""
+    prefix_len = (
+        F.col("n_sh")
+        - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(_EPS)).cast("int")
+        + F.lit(1)
+    )
+    return F.transform(F.slice("ordered", F.lit(1), prefix_len), lambda s: s["h"])
+
+
+def _lengths_ok(na: str, nb: str, threshold: float) -> Column:
+    """Length filter: J ≥ t ⇒ min ≥ t·max (epsilon keeps boundary pairs)."""
+    return (F.col(na) >= F.col(nb) * F.lit(threshold) - F.lit(_EPS)) & (
+        F.col(nb) >= F.col(na) * F.lit(threshold) - F.lit(_EPS)
+    )
+
+
+def _distinct_shingles(
+    docs: DataFrame, text_col: str, id_col: str, n: int, max_df: int
+) -> tuple[DataFrame, DataFrame]:
+    """(raw, capped): the materialized distinct (id, shingle) set, and
+    its rows whose shingle occurs in at most ``max_df`` docs."""
+    # the collapsed set feeds the df count, the set sizes and both
+    # self-join sides — materialize it once (round-11 scan audit)
+    sh = materialize_once(_shingle_rows(docs, text_col, id_col, n).distinct())
+    rare = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= max_df)
+        .select("shingle")
+    )
+    return sh, sh.join(rare, "shingle")
+
+
+def _common_shingles(sh: DataFrame, sized: DataFrame, id_col: str) -> DataFrame:
+    """(doc_a, doc_b, common, na, nb), doc_a < doc_b: the
+    inverted-index self-join of ``sh``'s (id, shingle) rows, so only
+    docs sharing a shingle ever meet, with each side's set size — its
+    row count in ``sized``."""
+    a, b = sh.alias("a"), sh.alias("b")
+    common = (
+        a.join(b, "shingle")
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    sizes = sized.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    return _attach(common, sizes, id_col, {"n_sh": "na"}, {"n_sh": "nb"})
+
+
+def _normalized_or_empty(text_col: str) -> str:
+    """SQL: ``normalized_text`` of ``text_col``, NULL as the empty text."""
+    return f"coalesce({normalized_sql(text_col)}, '')"
+
+
+def content_hash(text_col: str) -> Column:
+    """``content_hash``: md5 of the ``normalized_text`` of ``text_col``,
+    the exact-dedup group key (32 bytes per doc, never the text).
+    NULL text hashes as the empty text, so a NULL-text doc still gets
+    a key."""
+    return F.expr(f"md5({_normalized_or_empty(text_col)})").alias("content_hash")
+
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """doc → NUM_HASHES-column MinHash signature over word n-gram shingles.
@@ -56,19 +290,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     duplicate shingles, so a dedup shuffle would be pure overhead —
     partial aggregation collapses duplicates map-side anyway.
     """
-    sh = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle")
-    )
-    h = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % MINHASH_MOD
-    h2 = F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % MINHASH_MOD
-    hashed = sh.select(F.col(id_col), h1.alias("h1"), h2.alias("h2"))
-    return hashed.groupBy(id_col).agg(
-        *[
-            F.min((F.col("h1") + F.lit(i + 1) * F.col("h2")) % MINHASH_MOD).alias(f"mh{i}")
-            for i in range(NUM_HASHES)
-        ]
-    )
+    return _minhash(_shingle_rows(docs, text_col, id_col, n), id_col, "md5(shingle)")
 
 
 def minhash_bands(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -128,34 +350,13 @@ def _lsh_pairs(sig: DataFrame, id_col: str, max_bucket_allpairs: int) -> DataFra
     tail of dedup_minhash_candidates, shared with compositions that
     build signatures from an already-materialized shingle relation
     (dedup_pipeline's single-pass prefix)."""
-    bands = minhash_bands(sig, id_col)
     buckets = (
-        bands.groupBy("band", "band_sig")
+        minhash_bands(sig, id_col)
+        .groupBy("band", "band_sig")
         .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    # ONE expr parse instead of the Column-API nested lambda (round 12:
-    # 62.7 ms -> 0.8 ms per construction, identical tree/values —
-    # this expression is rebuilt on every pass of every LSH consumer)
-    pairs = F.expr(
-        "flatten(transform(ids, (a, i) -> transform("
-        "slice(ids, i + 2, size(ids)), b -> struct(a AS doc_a, b AS doc_b))))"
-    )
-    small_pairs = (
-        buckets.filter(F.size("ids") <= max_bucket_allpairs)
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a"), F.col("p.doc_b"))
-    )
-    # star expansion: (min_id, other) for every other id — linear, not
-    # quadratic, in bucket size; one output row per member.
-    star_pairs = (
-        buckets.filter(F.size("ids") > max_bucket_allpairs)
-        .select(
-            F.element_at("ids", 1).alias("doc_a"),
-            F.explode(F.slice(F.col("ids"), 2, F.size("ids") - 1)).alias("doc_b"),
-        )
-    )
-    return small_pairs.unionByName(star_pairs).distinct()
+    return bucket_pairs(buckets, "ids", "doc_a", "doc_b", max_bucket_allpairs).distinct()
 
 
 def lsh_bucket_stats(
@@ -191,7 +392,7 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     duplicate count per distinct content hash.  Shuffles digests, not text.
     """
     return (
-        docs.select(F.col(id_col), F.md5(normalized_text(text_col)).alias("content_hash"))
+        docs.select(F.col(id_col), content_hash(text_col))
         .groupBy("content_hash")
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
     )
@@ -257,9 +458,6 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
     string-comparison reference formulation.
     """
 
-    def votes(h):
-        return F.array(*[_simhash_vote(h, b) for b in range(bits)])
-
     def chunk_votes(ch):
         # ch = [digits 0-7, 8-15, 16-23, 24-31] as 32-bit ints; digit i
         # occupies bits 4*(7 - i%8) .. +3 of chunk i//8.  Vote bit b<32
@@ -270,8 +468,6 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
         # ~0.4 s of py4j/analysis per construction; the per-bit
         # shift/mask/±1 arithmetic is unchanged, so fingerprints are
         # bit-identical).
-        from ..functions.vectors import lit_int_array
-
         cs, shifts = [], []
         for b in range(64):
             i, bitpos = (b, 3) if b < 32 else (b - 32, 2)
@@ -289,51 +485,26 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
             ).cast("int"),
         )
 
+    hs = F.transform(tokens(text_col, lowercase=True), lambda t: F.md5(t))
     if bits == 64:
-        base = ensure_parallelism(docs).select(
-            F.col(id_col),
-            F.transform(
-                F.transform(tokens(text_col, lowercase=True), lambda t: F.md5(t)),
-                lambda h: F.array(
-                    *[
-                        F.conv(F.substring(h, 1 + 8 * c, 8), 16, 10).cast("long")
-                        for c in range(4)
-                    ]
-                ),
-            ).alias("hs"),
-        )
-        counts = F.aggregate(
-            "hs",
-            F.array_repeat(F.lit(0), bits),
-            lambda acc, ch: F.zip_with(acc, chunk_votes(ch), lambda a, v: a + v),
-        )
-        from ..functions.vectors import lit_long_array
-
-        powers = lit_long_array(
-            [-(1 << 63) if b == 63 else (1 << b) for b in range(bits)]
-        )
-        packed = F.aggregate(
-            F.zip_with(
-                counts, powers, lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long"))
+        hs = F.transform(
+            hs,
+            lambda h: F.array(
+                *[F.conv(F.substring(h, 1 + 8 * c, 8), 16, 10).cast("long") for c in range(4)]
             ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
         )
-        return base.select(F.col(id_col), packed.alias("simhash"))
+        votes = chunk_votes
+    else:
+        def votes(h):
+            return F.array(*[_simhash_vote(h, b) for b in range(bits)])
 
-    base = ensure_parallelism(docs).select(
-        F.col(id_col), F.transform(tokens(text_col, lowercase=True), lambda t: F.md5(t)).alias("hs")
-    )
+    base = ensure_parallelism(docs).select(F.col(id_col), hs.alias("hs"))
     counts = F.aggregate(
         "hs",
         F.array_repeat(F.lit(0), bits),
         lambda acc, h: F.zip_with(acc, votes(h), lambda a, v: a + v),
     )
-    from ..functions.vectors import lit_long_array
-
-    powers = lit_long_array(
-        [-(1 << 63) if b == 63 else (1 << b) for b in range(bits)]
-    )
+    powers = lit_long_array([-(1 << 63) if b == 63 else (1 << b) for b in range(bits)])
     packed = F.aggregate(
         F.zip_with(counts, powers, lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long"))),
         F.lit(0).cast("long"),
@@ -374,35 +545,10 @@ def dedup_ngram_jaccard(
     Jaccard, which slightly UNDER-estimates — conservative) intact;
     the df histogram is observable via the same groupBy.
     """
-    sh = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle")
-    ).distinct()
-    # feeds sizes, the df filter and both self-join sides — materialize
-    # the collapsed (doc, shingle) set once (round-11 scan audit)
-    from ._materialize import materialize_once
-
-    sh = materialize_once(sh)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_shingle_df)
-        .select("shingle")
-    )
-    sh = sh.join(rare, "shingle")
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
+    sh, capped = _distinct_shingles(docs, text_col, id_col, n, max_shingle_df)
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6))
+        _common_shingles(capped, sh, id_col)
+        .withColumn("jaccard", _jaccard("na", "nb"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -421,8 +567,6 @@ def dedup_embedding_cosine(
     coarse quantizer cell; with no precomputed cells, substitute an
     LSH sign-bucket.  See similarity.ann_ivf for the search analog.
     """
-    from ..functions.vectors import cosine_similarity
-
     e = emb.select(
         F.col(id_col), F.col(block_col).alias("blk"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -444,6 +588,34 @@ def dedup_embedding_cosine(
 #: least one intact band, so banded candidate generation is COMPLETE
 #: for max_hamming <= SIMHASH_BANDS - 1.
 SIMHASH_BANDS = 8
+
+
+def _simhash_bands(width: int, n: int, col: str = "simhash") -> Column:
+    """Array of the ``width``-bit windows of the fingerprint ``col``
+    starting at bits 0, 8, .. 8·(n−1) — byte bands for width 8,
+    overlapping adjacent-band pairs for width 16."""
+    mask = F.lit((1 << width) - 1)
+    return F.array(*[F.shiftright(col, 8 * i).bitwiseAND(mask) for i in range(n)])
+
+
+def simhash_pair_bands(sig: DataFrame, id_col: str, side: str, max_hamming: int) -> DataFrame:
+    """(``side``_id, ``side``_sim, band, bv): one row per 16-bit
+    adjacent-band pair of each ``simhash`` fingerprint in ``sig`` — the
+    SIMHASH_BANDS − 1 overlapping two-byte windows.  Two fingerprints
+    within ``max_hamming`` share a (band, bv) key, so an equi-join on
+    it finds every pair: ≤3 flipped bits corrupt ≤3 of the 8
+    byte-bands, and 5 intact positions among 8 always contain an
+    adjacent pair.  Raises ValueError for ``max_hamming > 3``, where
+    that no longer holds."""
+    if max_hamming > 3:
+        raise ValueError(
+            "pair-band candidate generation is complete only for max_hamming <= 3"
+        )
+    return sig.select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.col("simhash").alias(f"{side}_sim"),
+        F.posexplode(_simhash_bands(16, SIMHASH_BANDS - 1)).alias("band", "bv"),
+    )
 
 
 def dedup_simhash_pairs(
@@ -475,14 +647,7 @@ def dedup_simhash_pairs(
     bands = sig.select(
         F.col(id_col),
         "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", 8 * i).bitwiseAND(F.lit(255))
-                    for i in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band", "bv"),
+        F.posexplode(_simhash_bands(8, SIMHASH_BANDS)).alias("band", "bv"),
     )
     member = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sim"))
     buckets = (
@@ -490,39 +655,15 @@ def dedup_simhash_pairs(
         .agg(F.sort_array(F.collect_set(member)).alias("ms"))
         .filter(F.size("ms") > 1)
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                lambda b: F.struct(
-                    a["id"].alias("doc_a"),
-                    b["id"].alias("doc_b"),
-                    a["sim"].alias("sim_a"),
-                    b["sim"].alias("sim_b"),
-                ),
-            ),
-        )
-    )
-    small = (
-        buckets.filter(F.size("ms") <= max_bucket)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.sim_a", "p.sim_b")
-    )
-    first = F.element_at("ms", 1)
-    star = (
-        buckets.filter(F.size("ms") > max_bucket)
-        .select(first.alias("a"), F.explode(F.slice(F.col("ms"), 2, F.size("ms") - 1)).alias("b"))
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    return (
+        bucket_pairs(buckets, "ms", "a", "b", max_bucket)
         .select(
             F.col("a.id").alias("doc_a"),
             F.col("b.id").alias("doc_b"),
             F.col("a.sim").alias("sim_a"),
             F.col("b.sim").alias("sim_b"),
         )
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        small.unionByName(star)
         .filter(hamming <= max_hamming)
         .distinct()
         .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
@@ -638,8 +779,6 @@ def dedup_pipeline(
         with their own id, and cluster_id IS the representative
         (min-label propagation elects the minimum member).
     """
-    from .graph import connected_components
-
     # ONE corpus pass for BOTH the signature and the verify stages
     # (the composition used to tokenize the corpus three times: once
     # for minhash and once per verify join side).  Per-doc DISTINCT
@@ -666,23 +805,10 @@ def dedup_pipeline(
         .select(F.col(id_col), F.md5("shingle").alias("dg"))
         .repartition(id_col)
     )
-    h1 = F.conv(F.substring("dg", 1, 15), 16, 10).cast("long") % MINHASH_MOD
-    h2 = F.conv(F.substring("dg", 16, 15), 16, 10).cast("long") % MINHASH_MOD
-    sig = sh.groupBy(id_col).agg(
-        *[
-            F.min((h1 + F.lit(i + 1) * h2) % MINHASH_MOD).alias(f"mh{i}")
-            for i in range(NUM_HASHES)
-        ]
+    cand = _lsh_pairs(_minhash(sh, id_col, "dg"), id_col, max_bucket_allpairs)
+    edges = _verify_jaccard(cand, _shingle_sets(sh, id_col, "dg"), id_col, threshold).select(
+        "doc_a", "doc_b"
     )
-    cand = _lsh_pairs(sig, id_col, max_bucket_allpairs)
-    sh_sets = sh.groupBy(id_col).agg(F.collect_set("dg").alias("shs"))
-    j = (
-        cand.join(sh_sets.select(F.col(id_col).alias("doc_a"), F.col("shs").alias("sh_a")), "doc_a")
-        .join(sh_sets.select(F.col(id_col).alias("doc_b"), F.col("shs").alias("sh_b")), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = F.round(inter / (F.size("sh_a") + F.size("sh_b") - inter), 6)
-    edges = j.filter(jac >= threshold).select("doc_a", "doc_b")
     labels = connected_components(edges, max_iter=max_iter).withColumnRenamed("doc_id", id_col)
     clus = (
         docs.select(F.col(id_col))
@@ -720,11 +846,11 @@ def dedup_incremental(
     Returns one row per delta doc: ``doc_id, in_base, keep``.
     """
     bh = (
-        base.select(F.md5(normalized_text(text_col)).alias("content_hash"))
+        base.select(content_hash(text_col))
         .groupBy("content_hash")
         .agg(F.count(F.lit(1)).alias("n_base"))
     )
-    dh = delta.select(F.col(id_col), F.md5(normalized_text(text_col)).alias("content_hash"))
+    dh = delta.select(F.col(id_col), content_hash(text_col))
     first_in_delta = dh.groupBy("content_hash").agg(F.min(id_col).alias("first_id"))
     return (
         dh.join(first_in_delta, "content_hash")
@@ -780,31 +906,19 @@ def substring_spans(
     ``doc_id, n_windows, dup_windows, dup_ratio`` where dup_windows
     counts window POSITIONS whose digest occurs in >= min_docs docs.
     """
-    from pyspark.sql import Window
-
-    wins = (
-        ensure_parallelism(docs)
-        .select(
-            F.col(id_col),
-            F.explode(shingles(tokens(text_col, lowercase=True), window)).alias("win"),
-        )
-        .select(id_col, F.md5("win").alias("wh"))
+    wins = _shingle_rows(docs, text_col, id_col, window).select(
+        id_col, F.md5("shingle").alias("wh")
     )
     per = wins.groupBy(id_col, "wh").agg(F.count(F.lit(1)).alias("cnt"))
     # per carries one row per DISTINCT (doc, digest), so count(*) per
     # digest IS the distinct-doc count — no countDistinct shuffle.
     nd = F.count(F.lit(1)).over(Window.partitionBy("wh"))
     flagged = per.withColumn("is_dup", (nd >= min_docs).cast("int"))
+    dup = F.sum(F.when(F.col("is_dup") == 1, F.col("cnt")).otherwise(0))
     return flagged.groupBy(id_col).agg(
         F.sum("cnt").cast("long").alias("n_windows"),
-        F.sum(F.when(F.col("is_dup") == 1, F.col("cnt")).otherwise(0))
-        .cast("long")
-        .alias("dup_windows"),
-        F.round(
-            F.sum(F.when(F.col("is_dup") == 1, F.col("cnt")).otherwise(0))
-            / F.sum("cnt"),
-            6,
-        ).alias("dup_ratio"),
+        dup.cast("long").alias("dup_windows"),
+        F.round(dup / F.sum("cnt"), 6).alias("dup_ratio"),
     )
 
 
@@ -837,11 +951,9 @@ def dedup_editdist(
         docs, max_hamming=max_hamming, text_col=text_col, id_col=id_col
     ).select("doc_a", "doc_b")
     norm = docs.select(F.col(id_col), normalized_text(text_col).alias("nt"))
-    joined = (
-        cand.join(norm.select(F.col(id_col).alias("doc_a"), F.col("nt").alias("ta")), "doc_a")
-        .join(norm.select(F.col(id_col).alias("doc_b"), F.col("nt").alias("tb")), "doc_b")
-    )
+    joined = _attach(cand, norm, id_col, {"nt": "ta"}, {"nt": "tb"})
     dist = F.levenshtein("ta", "tb")
+    longest = F.greatest(F.length("ta"), F.length("tb"))
     return (
         joined.select(
             "doc_a",
@@ -851,12 +963,7 @@ def dedup_editdist(
             # texts SimHash identically and band-match, and 0/0 would
             # be NULL (or an ANSI error); identical-empty pairs are
             # exact duplicates -> similarity 1.0 (round-6 advice)
-            F.when(
-                F.greatest(F.length("ta"), F.length("tb")) > 0,
-                F.round(
-                    1.0 - dist / F.greatest(F.length("ta"), F.length("tb")), 6
-                ),
-            )
+            F.when(longest > 0, F.round(1.0 - dist / longest, 6))
             .otherwise(F.lit(1.0))
             .alias("edit_sim"),
         )
@@ -898,10 +1005,6 @@ def dedup_incremental_fuzzy(
     Returns one row per delta doc: ``doc_id, n_matches (distinct base
     docs within the radius), keep``.
     """
-    if max_hamming > 3:
-        raise ValueError(
-            "pair-band candidate generation is complete only for max_hamming <= 3"
-        )
 
     def bands_of(docs, side):
         sig = simhash(docs, text_col=text_col, id_col=id_col)
@@ -914,18 +1017,7 @@ def dedup_incremental_fuzzy(
         # recomputable on executor loss (unlike a checkpoint), and the
         # exchange ships only (id, fingerprint).
         sig = sig.groupBy(id_col).agg(F.max("simhash").alias("simhash"))
-        return sig.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.col("simhash").alias(f"{side}_sim"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright("simhash", 8 * i).bitwiseAND(F.lit(65535))
-                        for i in range(SIMHASH_BANDS - 1)
-                    ]
-                )
-            ).alias("band", "bv"),
-        )
+        return simhash_pair_bands(sig, id_col, side, max_hamming)
 
     db = bands_of(delta, "delta")
     bb = bands_of(base, "base")
@@ -968,11 +1060,7 @@ def dedup_exact_keep_best(
 
     Returns ``doc_id, content_hash, n_copies, keep``.
     """
-    h = docs.select(
-        F.col(id_col),
-        F.md5(normalized_text(text_col)).alias("content_hash"),
-        F.length(text_col).alias("len"),
-    )
+    h = docs.select(F.col(id_col), content_hash(text_col), F.length(text_col).alias("len"))
     elected = h.groupBy("content_hash").agg(
         F.count(F.lit(1)).cast("long").alias("n_copies"),
         (
@@ -1021,27 +1109,15 @@ def minhash_accuracy_report(
     # the signature table feeds candidate generation AND both
     # estimator-attach sides — materialize the 12-int-per-doc frame
     # once so the minhash pipeline runs once (round-11 scan audit)
-    from ._materialize import materialize_once
-
     sig = materialize_once(sig)
     cand = _lsh_pairs(sig, id_col, max_bucket_allpairs)
-    sa = sig.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    sb = sig.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
+    sides = [{f"mh{i}": f"{s}{i}" for i in range(NUM_HASHES)} for s in "ab"]
     sh_sets = ensure_parallelism(docs).select(
         F.col(id_col),
         F.array_distinct(shingles(tokens(text_col, lowercase=True), n)).alias("shs"),
     )
-    j = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .join(sh_sets.select(F.col(id_col).alias("doc_a"), F.col("shs").alias("sh_a")), "doc_a")
-        .join(sh_sets.select(F.col(id_col).alias("doc_b"), F.col("shs").alias("sh_b")), "doc_b")
+    j = _attach(
+        _attach(cand, sig, id_col, *sides), sh_sets, id_col, {"shs": "sh_a"}, {"shs": "sh_b"}
     )
     matches = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(NUM_HASHES)
@@ -1099,69 +1175,32 @@ def set_similarity_join_prefix(
     shuffle route of core/map_reduce.go — this operator is part of the
     dedup extension surface, not a port.
     """
-    # guard against float ceil overshoot (ceil(t*s) must never exceed
-    # the exact rational ceiling, or the prefix loses legal pairs)
-    eps = 1e-9
     # shingles collapse to a 60-bit md5-derived long IMMEDIATELY: every
     # downstream exchange (df window, per-doc sets, prefix join, verify
     # arrays) ships 8-byte keys instead of ~30-byte strings — measured
     # 2.4 s → sub-2 s at sf0.1, and at 100 TB the verify-join payload
-    # is the dominant shuffle.  The oracle hashes with the SAME md5
-    # expression, so set equality/intersection is identical on both
-    # engines even in the (≈1e-13) event of a collision.
-    sh = (
-        ensure_parallelism(docs)
-        .select(
-            F.col(id_col),
-            F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle"),
-        )
-        .select(
-            F.col(id_col),
-            F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
-        )
-        .distinct()
-    )
-    # the hashed shingle set feeds the df window chain AND both verify
-    # set builds — materialize once (round-11 scan audit)
-    from ._materialize import materialize_once
-
-    sh = materialize_once(sh)
+    # is the dominant shuffle.  The hashed shingle set feeds the df
+    # window chain AND the verify sets — materialize once (round-11
+    # scan audit).
+    sh = materialize_once(shingle_hashes(docs, text_col, id_col, n).distinct())
     # df as a COUNT WINDOW over the shingle partition, not a separate
     # groupBy + join-back: one exchange on shingle serves both the df
     # computation and the (doc, shingle, df) attribution (same fusion
     # as dedup_substring — the join-back shape re-shuffles sh a second
     # time and splits the consumer tree).
-    from pyspark.sql import Window as _W
-
-    with_df = sh.withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("h")))
-    per_doc = (
-        with_df.groupBy(id_col)
-        .agg(F.sort_array(F.collect_list(F.struct("df", "h"))).alias("ordered"))
-        .withColumn("n_sh", F.size("ordered"))
-    )
-    prefix_len = (
-        F.col("n_sh")
-        - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(eps)).cast("int")
-        + F.lit(1)
-    )
-    pref = per_doc.select(
+    with_df = sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
+    pref = _ordered_sets(with_df, id_col).select(
         F.col(id_col),
         F.col("n_sh"),
-        F.posexplode(
-            F.transform(F.slice("ordered", F.lit(1), prefix_len), lambda s: s["h"])
-        ).alias("pos", "pshingle"),
+        F.posexplode(_prefix(threshold)).alias("pos", "pshingle"),
     )
     # the prefix relation is both self-join sides — materialize once
     pref = materialize_once(pref)
     a, b = pref.alias("a"), pref.alias("b")
     matched = (
         a.join(b, F.col("a.pshingle") == F.col("b.pshingle"))
+        .filter(_lengths_ok("a.n_sh", "b.n_sh", threshold))
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        # length filter: J ≥ t ⇒ min ≥ t·max (epsilon keeps boundary pairs)
-        .filter(F.col("a.n_sh") >= F.col("b.n_sh") * F.lit(threshold) - F.lit(eps))
-        .filter(F.col("b.n_sh") >= F.col("a.n_sh") * F.lit(threshold) - F.lit(eps))
         .select(
             F.col(f"a.{id_col}").alias("doc_a"),
             F.col(f"b.{id_col}").alias("doc_b"),
@@ -1186,7 +1225,7 @@ def set_similarity_join_prefix(
         (F.lit(threshold) - F.lit(1e-6))
         * (F.col("na") + F.col("nb"))
         / F.lit(1.0 + threshold)
-    ) - F.lit(eps)
+    ) - F.lit(_EPS)
     cand = (
         matched.groupBy("doc_a", "doc_b")
         .agg(
@@ -1202,39 +1241,10 @@ def set_similarity_join_prefix(
         .select("doc_a", "doc_b")
     )
     # verify sets come straight from sh (collect_set over the reused
-    # (doc, h) exchange), NOT from per_doc: the verify branch then
-    # skips the df window+sort entirely.
-    sets = (
-        sh.groupBy(id_col)
-        .agg(F.collect_set("h").alias("sset"))
-        .withColumn("n_sh", F.size("sset"))
-    )
-    return (
-        cand.join(
-            sets.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("sset").alias("sa"),
-                F.col("n_sh").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("sset").alias("sb"),
-                F.col("n_sh").alias("nb"),
-            ),
-            "doc_b",
-        )
-        .withColumn("common", F.size(F.array_intersect("sa", "sb")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    # (doc, h) exchange), NOT from the ordered sets: the verify branch
+    # then skips the df window+sort entirely.
+    return _verify_jaccard(cand, _shingle_sets(sh, id_col), id_col, threshold).select(
+        "doc_a", "doc_b", "jaccard"
     )
 
 
@@ -1244,8 +1254,6 @@ def _snm_window_pairs(
     """One sorted-neighborhood pass: global rank by ``key`` (bucketed
     two-pass — see dedup_sorted_neighborhood), then all id pairs within
     ``window`` positions, as (doc_a < doc_b) rows."""
-    from pyspark.sql import Window
-
     keyed = (
         ensure_parallelism(docs)
         .select(F.col(id_col), key.alias("k"))
@@ -1329,9 +1337,7 @@ def dedup_sorted_neighborhood(
     verify join.
     """
     keys = {
-        "prefix": F.substring(
-            F.coalesce(normalized_text(text_col), F.lit("")), 1, key_len
-        ),
+        "prefix": F.expr(f"substring({_normalized_or_empty(text_col)}, 1, {key_len})"),
         "sorted": F.substring(
             F.concat_ws(" ", F.sort_array(tokens(text_col, lowercase=True))),
             1,
@@ -1343,8 +1349,6 @@ def dedup_sorted_neighborhood(
         pairs = _snm_window_pairs(docs, keys[p], id_col, window)
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.distinct()
-    from ._materialize import materialize_once
-
     # candidate ids feed both verify joins; the hashed shingle sets
     # feed both sides too — materialize each once (round-11 scan audit)
     cand = materialize_once(cand)
@@ -1355,39 +1359,8 @@ def dedup_sorted_neighborhood(
     # explode → project → collect_set shape at sf0.1.  The extra
     # exchange ships (doc, 8-byte hash) pairs only, and the verify
     # join below then ships 8-byte set elements instead of strings.
-    sets = (
-        ensure_parallelism(docs)
-        .select(
-            F.col(id_col),
-            F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("s"),
-        )
-        .select(
-            id_col,
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long").alias("h"),
-        )
-        .groupBy(id_col)
-        .agg(F.collect_set("h").alias("shs"))
-    )
-    sets = materialize_once(sets)
-    return (
-        cand.join(
-            sets.select(F.col(id_col).alias("doc_a"), F.col("shs").alias("sa")), "doc_a"
-        )
-        .join(
-            sets.select(F.col(id_col).alias("doc_b"), F.col("shs").alias("sb")), "doc_b"
-        )
-        .withColumn("common", F.size(F.array_intersect("sa", "sb")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common")
-                / (F.size("sa") + F.size("sb") - F.col("common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    sets = materialize_once(_shingle_sets(shingle_hashes(docs, text_col, id_col, n), id_col))
+    return _verify_jaccard(cand, sets, id_col, threshold).select("doc_a", "doc_b", "jaccard")
 
 
 def dedup_incremental_jaccard(
@@ -1419,92 +1392,38 @@ def dedup_incremental_jaccard(
     text.  Returns one row per delta doc: ``doc_id, n_matches
     (distinct base docs with jaccard ≥ t), keep``.
     """
-    eps = 1e-9
-
-    def hashed(d: DataFrame) -> DataFrame:
-        return (
-            ensure_parallelism(d)
-            .select(
-                F.col(id_col),
-                F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("s"),
-            )
-            .select(
-                id_col,
-                F.conv(F.substring(F.md5("s"), 1, 15), 16, 10)
-                .cast("long")
-                .alias("h"),
-            )
-            .distinct()
-        )
-
-    from ._materialize import materialize_once
-
     # both hashed-shingle relations feed the df index, the ordered-set
     # build and the prefix explode — materialize the (id, 8-byte hash)
     # frames once (round-11 scan audit)
-    bh, dh = materialize_once(hashed(base)), materialize_once(hashed(delta))
+    bh, dh = (
+        materialize_once(shingle_hashes(d, text_col, id_col, n).distinct()) for d in (base, delta)
+    )
     dfb = bh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
 
-    def ordered_sets(rel: DataFrame) -> DataFrame:
-        withdf = rel.join(dfb, "h", "left").withColumn(
-            "df", F.coalesce("df", F.lit(0))
-        )
-        return (
-            withdf.groupBy(id_col)
-            .agg(F.sort_array(F.collect_list(F.struct("df", "h"))).alias("ordered"))
-            .withColumn("n_sh", F.size("ordered"))
-        )
-
-    prefix_len = (
-        F.col("n_sh")
-        - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(eps)).cast("int")
-        + F.lit(1)
-    )
-
-    def prefixes(per_doc: DataFrame, side: str) -> DataFrame:
-        return per_doc.select(
+    def prefixes(rel: DataFrame, side: str) -> DataFrame:
+        withdf = rel.join(dfb, "h", "left").withColumn("df", F.coalesce("df", F.lit(0)))
+        return _ordered_sets(withdf, id_col).select(
             F.col(id_col).alias(f"{side}_id"),
             F.col("n_sh").alias(f"{side}_n"),
-            F.explode(
-                F.transform(
-                    F.slice("ordered", F.lit(1), prefix_len), lambda s: s["h"]
-                )
-            ).alias("ph"),
+            F.explode(_prefix(threshold)).alias("ph"),
         )
 
     cand = (
-        prefixes(ordered_sets(dh), "d")
-        .join(prefixes(ordered_sets(bh), "b"), "ph")
-        .filter(F.col("d_n") >= F.col("b_n") * F.lit(threshold) - F.lit(eps))
-        .filter(F.col("b_n") >= F.col("d_n") * F.lit(threshold) - F.lit(eps))
+        prefixes(dh, "d")
+        .join(prefixes(bh, "b"), "ph")
+        .filter(_lengths_ok("d_n", "b_n", threshold))
         .select("d_id", "b_id")
         .distinct()
     )
-    dsets = dh.groupBy(id_col).agg(F.collect_set("h").alias("sset"))
-    bsets = bh.groupBy(id_col).agg(F.collect_set("h").alias("sset"))
     matches = (
-        cand.join(
-            dsets.select(
-                F.col(id_col).alias("d_id"),
-                F.col("sset").alias("sd"),
-                F.size("sset").alias("nd"),
-            ),
-            "d_id",
+        _verify_jaccard(
+            cand,
+            _shingle_sets(dh, id_col),
+            id_col,
+            threshold,
+            ("d_id", "b_id"),
+            _shingle_sets(bh, id_col),
         )
-        .join(
-            bsets.select(
-                F.col(id_col).alias("b_id"),
-                F.col("sset").alias("sb"),
-                F.size("sset").alias("nb"),
-            ),
-            "b_id",
-        )
-        .withColumn("common", F.size(F.array_intersect("sd", "sb")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("nd") + F.col("nb") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
         .groupBy("d_id")
         .agg(F.count(F.lit(1)).alias("n_matches"))
     )
@@ -1568,23 +1487,11 @@ def simjoin_cosine(
     once and the dot is in-row map_zip_with work (integer sum —
     commutative, so map iteration order is irrelevant).
     """
-    from pyspark.sql import Window
-
-    eps = 1e-9
-    feats = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("s"),
-    )
     counts = (
-        feats.select(
-            id_col,
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long").alias("h"),
-        )
+        shingle_hashes(docs, text_col, id_col, n)
         .groupBy(id_col, "h")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    from ._materialize import materialize_once
-
     # df via a COUNT window over the term partition instead of a
     # separate groupBy + join-back (round 12, guide §2.4): the rows of
     # ``counts`` are unique per (doc, h), so count(*) over (partition
@@ -1626,7 +1533,7 @@ def simjoin_cosine(
             "suffix2",
             F.sum((F.col("w") * F.col("w")) / F.col("n2")).over(w_suffix),
         )
-        .filter(F.col("suffix2") >= F.lit(threshold * threshold) - F.lit(eps))
+        .filter(F.col("suffix2") >= F.lit(threshold * threshold) - F.lit(_EPS))
         .select(id_col, "h")
     )
     pref = materialize_once(pref)
@@ -1655,18 +1562,14 @@ def simjoin_cosine(
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    na = norms.select(F.col(id_col).alias("doc_a"), F.col("n2").alias("na2"))
-    nb = norms.select(F.col(id_col).alias("doc_b"), F.col("n2").alias("nb2"))
     return (
-        cand.join(
-            dmaps.select(F.col(id_col).alias("doc_a"), F.col("m").alias("ma")), "doc_a"
+        _attach(
+            _attach(cand, dmaps, id_col, {"m": "ma"}, {"m": "mb"}).withColumn("dot", dot),
+            norms,
+            id_col,
+            {"n2": "na2"},
+            {"n2": "nb2"},
         )
-        .join(
-            dmaps.select(F.col(id_col).alias("doc_b"), F.col("m").alias("mb")), "doc_b"
-        )
-        .withColumn("dot", dot)
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
         .withColumn(
             "cos_sim",
             F.round(
@@ -1702,10 +1605,7 @@ def dedup_overlap_matrix(
     Returns (source_a, source_b, n_shared) for a <= b, ordered.
     """
     ds = (
-        docs.select(
-            F.md5(normalized_text(text_col)).alias("content_hash"),
-            F.col(source_col).alias("src"),
-        )
+        docs.select(content_hash(text_col), F.col(source_col).alias("src"))
         .distinct()
     )
     per_digest = ds.groupBy("content_hash").agg(
@@ -1761,51 +1661,20 @@ def simjoin_containment(
     direction reaches the threshold.
     Returns ``(doc_a, doc_b, common, c_a_in_b, c_b_in_a)``.
     """
-    sh = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle"),
-    ).distinct()
-    # the (doc, shingle) set feeds the df filter, the capped-universe
-    # sizes and both self-join sides — materialize the raw AND the
-    # capped relation once each (round-11 scan audit: 8 corpus scans)
-    from ._materialize import materialize_once
-
-    sh = materialize_once(sh)
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_shingle_df)
-        .select("shingle")
-    )
-    sh = materialize_once(sh.join(rare, "shingle"))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
-    scored = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "common",
-            F.round(
-                F.try_divide(F.col("common").cast("double"), F.col("na").cast("double")),
-                6,
-            ).alias("c_a_in_b"),
-            F.round(
-                F.try_divide(F.col("common").cast("double"), F.col("nb").cast("double")),
-                6,
-            ).alias("c_b_in_a"),
-        )
+    # the capped relation feeds the capped-universe sizes and both
+    # self-join sides — materialize it too (round-11 scan audit: 8
+    # corpus scans)
+    sh = materialize_once(_distinct_shingles(docs, text_col, id_col, n, max_shingle_df)[1])
+    scored = _common_shingles(sh, sh, id_col).select(
+        "doc_a",
+        "doc_b",
+        "common",
+        F.round(
+            F.try_divide(F.col("common").cast("double"), F.col("na").cast("double")), 6
+        ).alias("c_a_in_b"),
+        F.round(
+            F.try_divide(F.col("common").cast("double"), F.col("nb").cast("double")), 6
+        ).alias("c_b_in_a"),
     )
     return scored.filter(
         (F.col("c_a_in_b") >= threshold) | (F.col("c_b_in_a") >= threshold)

@@ -39,6 +39,7 @@ from ..functions.vectors import (
     lit_double_matrix,
     lit_long_array,
 )
+from .dedup import bucket_pairs
 
 
 def _xm_sql(vec_col: str, dim: int) -> str:
@@ -564,28 +565,7 @@ def dedup_embedding_srp(
         .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda b: F.struct(a.alias("vec_a"), b.alias("vec_b")),
-            ),
-        )
-    )
-    small = (
-        buckets.filter(F.size("ids") <= max_bucket)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.vec_a", "p.vec_b")
-    )
-    star = (
-        buckets.filter(F.size("ids") > max_bucket)
-        .select(
-            F.element_at("ids", 1).alias("vec_a"),
-            F.explode(F.slice(F.col("ids"), 2, F.size("ids") - 1)).alias("vec_b"),
-        )
-    )
-    cand = small.unionByName(star).distinct()
+    cand = bucket_pairs(buckets, "ids", "vec_a", "vec_b", max_bucket).distinct()
     va = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
     vb = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
     cos = cosine_similarity(

@@ -9,8 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import EN_STOPWORDS, IT_STOPWORDS, normalized_text, stopword_hits, tokens
+from ..functions.text import EN_STOPWORDS, IT_STOPWORDS, stopword_hits, tokens
 from ._parallel import ensure_parallelism
+from .dedup import content_hash
 
 # Per-language marker stopword sets for the n-gram/stopword-ratio
 # language-ID heuristic.  Deterministic and tiny on purpose.
@@ -186,14 +187,15 @@ def repetition_ratio(
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Content fingerprints: md5 of normalized text (exact identity)
+    """Content fingerprints: ``dedup.content_hash`` (md5 of the
+    normalized text, NULL read as the empty text — exact identity)
     plus a coarse structural sketch (min/max token hash — a 2-hash
     min-wise sketch usable for cheap similarity pre-grouping)."""
     tk = tokens(text_col, lowercase=True)
     hashed = F.transform(tk, lambda t: F.md5(t))
     return docs.select(
         F.col(id_col),
-        F.md5(normalized_text(text_col)).alias("content_md5"),
+        content_hash(text_col).alias("content_md5"),
         F.array_min(hashed).alias("min_token_hash"),
         F.array_max(hashed).alias("max_token_hash"),
     )

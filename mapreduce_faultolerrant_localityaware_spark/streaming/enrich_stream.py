@@ -22,6 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import (
+    SIMHASH_BANDS,
+    _simhash_bands,
+    content_hash,
+    simhash,
+    simhash_pair_bands,
+)
+
 
 def enrich_stream(
     events: DataFrame,
@@ -186,10 +194,8 @@ def incremental_dedup_stream(
 
     Returns ``content_hash, keep_id, n_delta``.
     """
-    from ..functions.text import normalized_text
-
-    bh = base.select(F.md5(normalized_text(text_col)).alias("content_hash")).distinct()
-    dh = delta.select(F.col(id_col), F.md5(normalized_text(text_col)).alias("content_hash"))
+    bh = base.select(content_hash(text_col)).distinct()
+    dh = delta.select(F.col(id_col), content_hash(text_col))
     return (
         dh.join(F.broadcast(bh), "content_hash", "left_anti")
         .groupBy("content_hash")
@@ -226,44 +232,21 @@ def fuzzy_dedup_stream(
     up live), and the 16-bit adjacent-band keys bound bucket fan-out
     exactly as in the batch operator.
     """
-    from ..operators.dedup import SIMHASH_BANDS, simhash
-
-    if max_hamming > 3:
-        raise ValueError(
-            "pair-band candidate generation is complete only for max_hamming <= 3"
-        )
-
-    def bands_of(sig, side):
-        return sig.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.col("simhash").alias(f"{side}_sim"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright("simhash", 8 * i).bitwiseAND(F.lit(65535))
-                        for i in range(SIMHASH_BANDS - 1)
-                    ]
-                )
-            ).alias("band", "bv"),
-        )
-
     base_sig = simhash(base, text_col=text_col, id_col=id_col).groupBy(id_col).agg(
         F.max("simhash").alias("simhash")
     )
-    bb = bands_of(base_sig, "base")
-    db = bands_of(simhash(delta, text_col=text_col, id_col=id_col), "delta")
+    bb = simhash_pair_bands(base_sig, id_col, "base", max_hamming)
+    db = simhash_pair_bands(
+        simhash(delta, text_col=text_col, id_col=id_col), id_col, "delta", max_hamming
+    )
     j = db.join(F.broadcast(bb), ["band", "bv"])
     hamming = F.bit_count(F.col("delta_sim").bitwiseXOR(F.col("base_sim")))
-    band_eq = F.array(
-        *[
-            (
-                F.shiftright("delta_sim", 8 * i).bitwiseAND(F.lit(65535))
-                == F.shiftright("base_sim", 8 * i).bitwiseAND(F.lit(65535))
-            ).cast("int")
-            for i in range(SIMHASH_BANDS - 1)
-        ]
+    band_eq = F.zip_with(
+        _simhash_bands(16, SIMHASH_BANDS - 1, "delta_sim"),
+        _simhash_bands(16, SIMHASH_BANDS - 1, "base_sim"),
+        lambda d, b: d == b,
     )
-    first_band = F.array_position(band_eq, 1) - 1
+    first_band = F.array_position(band_eq, True) - 1
     return (
         j.filter(hamming <= max_hamming)
         .filter(F.col("band") == first_band)

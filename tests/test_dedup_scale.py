@@ -185,6 +185,19 @@ def test_srp_identical_vectors_pair_with_cos_one(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
+def test_srp_bucket_cap_star_expands_flood(spark):
+    # 40 identical vectors -> both SRP band buckets hold all 40 ids; a
+    # cap of 10 degrades to star expansion around the min id (0)
+    from mapreduce_faultolerrant_localityaware_spark.operators import similarity
+
+    v = [float((i * 37 % 13) - 6) for i in range(64)]
+    df = spark.createDataFrame([(i, v) for i in range(40)], ["vec_id", "embedding"])
+    star = similarity.dedup_embedding_srp(df, max_bucket=10).collect()
+    assert {(r["vec_a"], r["vec_b"]) for r in star} == {(0, i) for i in range(1, 40)}
+    assert len(star) == 39 and all(r["cos_sim"] == 1.0 for r in star)
+    assert similarity.dedup_embedding_srp(df, max_bucket=64).count() == 40 * 39 // 2
+
+
 def test_srp_fingerprint_deterministic(spark):
     from mapreduce_faultolerrant_localityaware_spark.operators import similarity
 

@@ -3,6 +3,9 @@ flow through the operator surface without errors or row corruption."""
 
 from __future__ import annotations
 
+import hashlib
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -27,8 +30,50 @@ def test_wordcount_null_and_empty_text(spark):
 def test_dedup_exact_null_text(spark):
     df = _docs(spark, [(1, None), (2, None), (3, "x")])
     out = dedup.dedup_exact(df).collect()
-    # null text: md5(null) = null hash → its own group, not an error
+    # null text hashes as the empty text → one group for both, not an error
     assert sum(r["n_dups"] for r in out) == 3
+
+
+_NULL_DELTA = [(10, "a b c"), (11, None), (12, "x y z"), (13, None)]
+
+
+def test_dedup_incremental_keeps_null_text_docs(spark):
+    # one row per delta doc; the two NULL-text docs share the empty
+    # text's hash, so the first is kept and the second is a duplicate
+    base = _docs(spark, [(1, "a b c")])
+    got = {
+        r["doc_id"]: (r["in_base"], r["keep"])
+        for r in dedup.dedup_incremental(base, _docs(spark, _NULL_DELTA)).collect()
+    }
+    assert got == {
+        10: (True, False),
+        11: (False, True),
+        12: (False, True),
+        13: (False, False),
+    }
+
+
+def test_dedup_exact_keep_best_keeps_null_text_docs(spark):
+    got = {
+        r["doc_id"]: (r["n_copies"], r["keep"])
+        for r in dedup.dedup_exact_keep_best(_docs(spark, _NULL_DELTA)).collect()
+    }
+    # NULL length ties, so the min id (11) is the best NULL-text copy
+    assert got == {10: (1, True), 11: (2, True), 12: (1, True), 13: (2, False)}
+
+
+@pytest.mark.parametrize("name", ["text", "body text", "my-text", "select", "we`ird"])
+def test_content_hash_of_any_column_name(spark, name):
+    # the hash is one SQL template, so the column name is quoted into it;
+    # whitespace and case normalize away and NULL hashes as the empty text
+    df = _docs(spark, [(1, "  Hello \t World  "), (2, "hello world"), (3, None)])
+    got = [r[0] for r in df.withColumnRenamed("text", name).select(dedup.content_hash(name)).collect()]
+    assert got == [hashlib.md5(b"hello world").hexdigest()] * 2 + [hashlib.md5(b"").hexdigest()]
+
+
+def test_fingerprint_null_text_is_empty_text(spark):
+    rows = textstats.fingerprint(_docs(spark, [(1, None), (2, "")])).collect()
+    assert rows[0]["content_md5"] == rows[1]["content_md5"] == hashlib.md5(b"").hexdigest()
 
 
 def test_minhash_short_docs_empty_signatures(spark):

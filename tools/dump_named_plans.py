@@ -20,7 +20,11 @@ Normalised: expression ids (``o_orderkey#123L`` → ``o_orderkey#_L``),
 RDD ids and creation sites (``MapPartitionsRDD[109] at localCheckpoint
 at NativeMethodAccessorImpl.java:0`` → ``MapPartitionsRDD[_] at
 localCheckpoint at _``; the site depends on what ran before), exchange
-plan ids (``[plan_id=42]`` → ``[plan_id=_]``), and two session-wide
+plan ids (``[plan_id=42]`` → ``[plan_id=_]``), the scratch paths that
+sink round-trip and streaming queries write under
+(``sparkgraft_scratch_k3j9x2ab/stream-2`` →
+``sparkgraft_scratch__/stream-_``: a per-process ``mkdtemp`` root and a
+per-request counter, see ``_scratch.py``), and two session-wide
 counters renumbered in order of first appearance within each plan:
 lambda variables (``lambda x_241`` → ``lambda x_0``) and common
 subexpression aliases (``_common_expr_7`` → ``_common_expr_0``).
@@ -58,6 +62,7 @@ _IDS = (
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
     (re.compile(r"(RDD\[_\] at \w+ at )[^\s,]+:\d+"), r"\1_"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
+    (re.compile(r"sparkgraft_scratch_\w+(/[\w.-]+?-)\d+"), r"sparkgraft_scratch__\1_"),
 )
 _COUNTERS = (
     re.compile(r"\b(lambda \w+?)_\d+\b"),
