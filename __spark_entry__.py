@@ -42,7 +42,12 @@ from mapreduce_faultolerrant_localityaware_spark.operators import (
     temporal,
     textstats,
 )
-from mapreduce_faultolerrant_localityaware_spark.operators.wordcount import wordcount_from_text
+from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens
+from mapreduce_faultolerrant_localityaware_spark.operators.relational import top_k_per
+from mapreduce_faultolerrant_localityaware_spark.operators.wordcount import (
+    token_rows,
+    wordcount_from_text,
+)
 from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 from mapreduce_faultolerrant_localityaware_spark.sources.sinks import zvalue_sql
 from mapreduce_faultolerrant_localityaware_spark import streaming as streaming_ops
@@ -173,15 +178,10 @@ def _q_join_anti(spark, sf):
 
 
 def _q_window_rank(spark, sf):
-    from pyspark.sql import Window
-
     orders = scan(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rk")
-    )
+    return top_k_per(
+        orders, ["o_custkey"], 3, F.desc("o_totalprice"), F.asc("o_orderkey")
+    ).select("o_custkey", "o_orderkey", "o_totalprice", "rk")
 
 
 def _q_window_running(spark, sf):
@@ -452,25 +452,15 @@ def _q_sample_stratified(spark, sf):
 def _q_vocab_top_tokens(spark, sf):
     """Per-language vocabulary heavy hitters: lang-ID → token counts →
     top-5 per language (window top-k, total tiebreak)."""
-    from pyspark.sql import Window
-
-    from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens as tokens_fn
-
     docs = scan(spark, sf, "documents")
     lang = textstats.lang_id(docs).select("doc_id", "lang_pred")
-    toks = docs.select(
-        "doc_id", F.explode(tokens_fn("text", lowercase=True)).alias("token")
-    )
     counts = (
-        toks.join(lang, "doc_id")
+        token_rows(docs, "text", "doc_id", lowercase=True)
+        .join(lang, "doc_id")
         .groupBy("lang_pred", "token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy("lang_pred").orderBy(F.desc("n"), F.asc("token"))
-    return (
-        counts.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-    )
+    return top_k_per(counts, ["lang_pred"], 5, F.desc("n"), F.asc("token"))
 
 
 def _q_repetition_ratio(spark, sf):
@@ -515,11 +505,9 @@ def _q_length_filter(spark, sf):
     docs outside [p05, p95] of token length.  Exact percentiles come
     from a one-row agg broadcast-crossed back onto the lengths (both
     engines interpolate linearly, proven by the `percentiles` query)."""
-    from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens as tokens_fn
-
     docs = scan(spark, sf, "documents")
     lens = docs.select(
-        "doc_id", F.size(tokens_fn("text", lowercase=True)).cast("long").alias("n_tokens")
+        "doc_id", F.size(tokens("text", lowercase=True)).cast("long").alias("n_tokens")
     )
     bounds = lens.agg(
         F.percentile("n_tokens", 0.05).alias("p05"),
@@ -805,11 +793,9 @@ def _q_keyword_contexts(spark, sf):
     """KWIC concordance: every occurrence of a keyword with its
     ±3-token context window — the inspection drill-down a data
     curator runs on a flagged corpus."""
-    from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens as _tokens
-
     docs = scan(spark, sf, "documents")
     base = docs.select(
-        F.col("doc_id"), _tokens("text", lowercase=True).alias("tk")
+        F.col("doc_id"), tokens("text", lowercase=True).alias("tk")
     ).select("doc_id", "tk", F.posexplode("tk").alias("pos", "token"))
     hits = base.filter(F.col("token") == "data")
     ctx = F.concat_ws(
@@ -1739,8 +1725,6 @@ def _q_rrf_fusion(spark, sf):
     """Hybrid retrieval: BM25 top-50 and embedding-cosine top-50
     (query = vec 0) fused by reciprocal-rank 1/(60+rank); both
     shortlists are heap top-k, the fuse join is 50x50 rows."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.retrieval import rrf_fuse
-
     docs = scan(spark, sf, "documents")
     emb = scan(spark, sf, "embeddings")
     lex = retrieval.bm25_topk(docs, _BM25_TERMS, k=50)
@@ -1748,18 +1732,17 @@ def _q_rrf_fusion(spark, sf):
         similarity.ann_bruteforce(emb, emb.filter(F.col("vec_id") == 0), k=50)
         .select(F.col("neighbor_id").alias("doc_id"), "cos_sim")
     )
-    return rrf_fuse(lex, sem, k=20)
+    return retrieval.rrf_fuse(lex, sem, k=20)
 
 
 def _q_pareto_front(spark, sf):
     """2-D skyline data selection: docs non-dominated on (token
     length, lexical-diversity microunits) — aggregate to distinct
     metric points, then one running-max window; no pairwise test."""
-    from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens as tokens_fn
     from mapreduce_faultolerrant_localityaware_spark.operators.selection import pareto_front
 
     docs = scan(spark, sf, "documents")
-    tk = tokens_fn("text", lowercase=True)
+    tk = tokens("text", lowercase=True)
     pts = docs.select(
         "doc_id",
         F.size(tk).cast("long").alias("x"),
@@ -2092,20 +2075,11 @@ def _q_sample_topk_per_group(spark, sf):
     k smallest key-hashes per group — reproducible across runs and
     engines, balanced across groups regardless of group size (the
     eval-set construction rand() sampling can't do safely)."""
-    from pyspark.sql import Window
-
     orders = scan(spark, sf, "orders")
     h = F.md5(F.col("o_orderkey").cast("string"))
-    w = Window.partitionBy("o_orderstatus").orderBy(h.asc(), F.col("o_orderkey").asc())
     return (
-        orders.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(
-            "o_orderstatus",
-            F.col("rk").cast("long").alias("rk"),
-            "o_orderkey",
-            "o_custkey",
-        )
+        top_k_per(orders, ["o_orderstatus"], 5, h.asc(), F.col("o_orderkey").asc())
+        .select("o_orderstatus", "rk", "o_orderkey", "o_custkey")
     )
 
 
@@ -2629,11 +2603,9 @@ def _q_array_funcs(spark, sf):
 
 
 def _q_posexplode_tokens(spark, sf):
-    from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens as tok_expr
-
     docs = scan(spark, sf, "documents")
     return docs.select(
-        "doc_id", F.posexplode(tok_expr(F.col("text"))).alias("pos", "word")
+        "doc_id", F.posexplode(tokens("text")).alias("pos", "word")
     ).withColumn("pos", F.col("pos").cast("long"))
 
 
@@ -4531,36 +4503,32 @@ def _q_percent_rank_global(spark, sf):
     )
 
 
-def _q_ndcg_eval(spark, sf):
-    """Mean NDCG@10 of the per-customer order ranking (value cents
-    desc) against fulfilled status as relevance
-    (operators/retrieval.py:ndcg_at_k): partitioned rank windows,
-    shared literal discounts, nano-integer DCG sums."""
-    orders = scan(spark, sf, "orders")
-    return retrieval.ndcg_at_k(
-        orders,
+def _order_run(spark, sf) -> tuple:
+    """The retrieval-eval arguments (runs, query, score, relevance, id)
+    of the per-customer order ranking (value cents desc) against
+    fulfilled status as relevance."""
+    return (
+        scan(spark, sf, "orders"),
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long"),
         (F.col("o_orderstatus") == "F").cast("long"),
         F.col("o_orderkey"),
-        k=10,
     )
+
+
+def _q_ndcg_eval(spark, sf):
+    """Mean NDCG@10 of the per-customer order ranking
+    (operators/retrieval.py:ndcg_at_k): partitioned rank windows,
+    shared literal discounts, nano-integer DCG sums."""
+    return retrieval.ndcg_at_k(*_order_run(spark, sf), k=10)
 
 
 def _q_retrieval_metrics(spark, sf):
     """MRR@10 / recall@10 / precision@10 of the per-customer order
-    ranking vs fulfilled relevance
-    (operators/retrieval.py:retrieval_metrics_at_k): partitioned rank
-    window, nano-integer per-query ratios, exact BIGINT divisions."""
-    orders = scan(spark, sf, "orders")
-    return retrieval.retrieval_metrics_at_k(
-        orders,
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long"),
-        (F.col("o_orderstatus") == "F").cast("long"),
-        F.col("o_orderkey"),
-        k=10,
-    )
+    ranking (operators/retrieval.py:retrieval_metrics_at_k):
+    partitioned rank window, nano-integer per-query ratios, exact
+    BIGINT divisions."""
+    return retrieval.retrieval_metrics_at_k(*_order_run(spark, sf), k=10)
 
 
 def _q_roc_auc_continuous(spark, sf):

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 #: split rule — runs of non-letters (Unicode letter class), SURVEY Q2.
 TOKEN_SPLIT_RE = r"[^\p{L}]+"
+#: the same rule as a SQL string literal body (backslashes escaped)
+_TOKEN_SPLIT_SQL = TOKEN_SPLIT_RE.replace("\\", "\\\\")
 
 # Tiny deterministic stopword lists for the language-ID / quality
 # heuristics.  Chosen to be unambiguous between English and Italian on
@@ -33,22 +35,35 @@ EN_STOPWORDS = ("the", "and", "of", "to", "in", "is", "that", "with", "for", "wa
 IT_STOPWORDS = ("il", "la", "di", "che", "e", "un", "per", "con", "del", "una")
 
 
-def tokens(col: Column | str, lowercase: bool = False) -> Column:
-    """Array of word tokens of ``col`` under reference semantics (Q2):
-    split on non-letter runs, drop empties, preserve case by default.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
-    arr = F.split(c, TOKEN_SPLIT_RE)
-    return F.filter(arr, lambda t: t != F.lit(""))
+def _quoted(col: str) -> str:
+    """``col`` as a backtick-quoted SQL identifier, so a name with a
+    space, a backtick or a reserved word still parses."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def tokens(col: str, lowercase: bool = False) -> Column:
+    """Array of word tokens of column ``col`` under reference semantics
+    (Q2): split on non-letter runs, drop empties, preserve case by
+    default.  One SQL parse (the Column-API form costs ~55 more py4j
+    calls per use and builds the identical expression)."""
+    c = f"lower({_quoted(col)})" if lowercase else _quoted(col)
+    return F.expr(f"filter(split({c}, '{_TOKEN_SPLIT_SQL}'), x -> x != '')")
+
+
+def words(col: Column) -> Column:
+    """Whitespace-separated words of ``col`` (the usual LLM-data word
+    proxy), empties dropped."""
+    return F.filter(F.split(col, r"\s+"), lambda w: w != F.lit(""))
+
+
+def lines(col: Column) -> Column:
+    """The non-blank lines of ``col``."""
+    return F.filter(F.split(col, "\n"), lambda l: F.trim(l) != F.lit(""))
 
 
 def normalized_sql(col: str) -> str:
-    """SQL for :func:`normalized_text` of column ``col``, backtick-quoted
-    so a name with a space, a hyphen or a reserved word still parses."""
-    quoted = col.replace("`", "``")
-    return rf"trim(regexp_replace(lower(`{quoted}`), '\\s+', ' '))"
+    """SQL for :func:`normalized_text` of column ``col`` (backtick-quoted)."""
+    return rf"trim(regexp_replace(lower({_quoted(col)}), '\\s+', ' '))"
 
 
 def normalized_text(col: str) -> Column:

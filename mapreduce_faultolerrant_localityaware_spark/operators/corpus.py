@@ -15,6 +15,12 @@ All built-in-function compositions (codegen'd, no Python):
     only shingles that occur on both sides ever meet, never a cross
     product; the corpus side is collapsed to DISTINCT shingles first
     so the probe side is bounded by vocabulary, not corpus size.
+
+Shared stages, called here rather than copied: ``token_rows`` /
+``token_counts`` (wordcount), ``top_k_per`` (relational), ``_shingle_df``
+and the MinHash stages (dedup); local ones are ``_adjacent`` (adjacent
+token pairs), ``_chars``/``_apply_merge`` (BPE), ``_cms_hash``/
+``_cms_buckets`` (Count-Min), ``_split_of`` and ``_jsd_term_nano``.
 """
 
 from __future__ import annotations
@@ -22,11 +28,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles, tokens
+from ..functions.text import tokens
 from ._materialize import Rounds, materialize_once, release_checkpoint
 from ._parallel import ensure_parallelism
 from .dedup import (
+    MINHASH_MOD,
     NUM_HASHES,
+    _hex60,
+    _shingle_df,
     _shingle_rows,
     dedup_minhash_candidates,
     minhash_bands,
@@ -34,7 +43,8 @@ from .dedup import (
     shingle_hashes,
 )
 from .graph import pagerank
-from .relational import top_k
+from .relational import top_k, top_k_per
+from .wordcount import token_counts, token_rows
 
 def tfidf_top_terms(
     docs: DataFrame,
@@ -68,10 +78,7 @@ def tfidf_top_terms(
     N attaches as a broadcast single-row join (one scalar shipped to
     every executor — no session-global view, no cartesian blowup).
     """
-    tk = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("token")
-    )
-    counts = tk.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
+    counts = token_counts(ensure_parallelism(docs), text_col, id_col, lowercase=True, n="tf")
     # the tf>=1 filter is a semantic no-op (counts are >=1 by
     # construction) that REFERENCES tf: without it Catalyst prunes tf
     # and rewrites this two-level aggregate into a distinct-style agg
@@ -95,28 +102,29 @@ def tfidf_top_terms(
             * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf_raw"), F.asc("token"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col(id_col),
-            "token",
-            F.col("tf").alias("tf"),
-            F.col("df").alias("df"),
-            F.round("tfidf_raw", 6).alias("tfidf"),
-            "rk",
-        )
+    return top_k_per(scored, [id_col], k, F.desc("tfidf_raw"), F.asc("token")).select(
+        F.col(id_col),
+        "token",
+        "tf",
+        "df",
+        F.round("tfidf_raw", 6).alias("tfidf"),
+        "rk",
+    )
+
+
+def _adjacent(tk: Column, make) -> Column:
+    """``make(a, b)`` over each adjacent pair of the array ``tk``, in
+    order — array-native, no explode/self-join (``element_at`` is
+    1-based, the lambda index 0-based)."""
+    return F.transform(
+        F.slice(tk, 1, F.greatest(F.size(tk) - 1, F.lit(0))),
+        lambda x, i: make(x, F.element_at(tk, i + 2)),
     )
 
 
 def _bigrams(tk: Column) -> Column:
-    """Adjacent-pair bigrams from a token array — array-native, no
-    explode/self-join (``element_at`` is 1-based, lambda index 0-based)."""
-    return F.transform(
-        F.slice(tk, 1, F.greatest(F.size(tk) - 1, F.lit(0))),
-        lambda x, i: F.concat_ws(" ", x, F.element_at(tk, i + 2)),
-    )
+    """Space-joined adjacent-pair bigrams of the token array ``tk``."""
+    return _adjacent(tk, lambda a, b: F.concat_ws(" ", a, b))
 
 
 def bigram_counts(
@@ -250,7 +258,11 @@ def mixture_report(
         "n_docs",
         "n_tokens",
         F.round(F.col("n_docs") / F.sum("n_docs").over(w), 6).alias("doc_share"),
-        F.round(F.col("n_tokens") / F.sum("n_tokens").over(w), 6).alias("token_share"),
+        # a corpus with no tokens has no token shares (NULL), not an
+        # ANSI DIVIDE_BY_ZERO
+        F.round(F.try_divide(F.col("n_tokens"), F.sum("n_tokens").over(w)), 6).alias(
+            "token_share"
+        ),
     )
 
 
@@ -283,10 +295,12 @@ def mixture_weights(
         F.sum(F.size(tokens(text_col, lowercase=True))).cast("long").alias("n_tokens"),
     )
     w = Window.partitionBy()
-    share = F.col("n_tokens") / F.sum("n_tokens").over(w)
+    # a corpus with no tokens has no shares or weights (NULL), not an
+    # ANSI DIVIDE_BY_ZERO
+    share = F.try_divide(F.col("n_tokens"), F.sum("n_tokens").over(w))
     w_nano = F.round(F.pow(share, F.lit(alpha)) * 1e9).cast("long")
     scored = agg.select(by, "n_docs", "n_tokens", share.alias("p"), w_nano.alias("wn"))
-    weight = F.col("wn") / F.sum("wn").over(w)
+    weight = F.try_divide(F.col("wn"), F.sum("wn").over(w))
     return scored.select(
         by,
         "n_docs",
@@ -356,6 +370,19 @@ def mixture_sample(
     )
 
 
+def _split_of(pct: Column, weights: tuple, names: tuple) -> Column:
+    """The split name of percentile ``pct`` (0..100): ``names[i]`` for
+    the i-th cumulative ``weights`` band, the last name otherwise."""
+    if len(weights) != len(names) or sum(weights) != 100:
+        raise ValueError("weights must match names and sum to 100")
+    cut = 0
+    expr = None
+    for w, nm in zip(weights[:-1], names[:-1]):
+        cut += w
+        expr = F.when(pct < cut, nm) if expr is None else expr.when(pct < cut, nm)
+    return expr.otherwise(names[-1]) if expr is not None else F.lit(names[-1])
+
+
 def split_assign(
     docs: DataFrame,
     weights: tuple = (90, 5, 5),
@@ -374,19 +401,11 @@ def split_assign(
     Scale shape: one map-side expression per row, zero shuffles, zero
     RNG state.  Returns ``key_col, bucket, split``.
     """
-    if len(weights) != len(names) or sum(weights) != 100:
-        raise ValueError("weights must match names and sum to 100")
     bucket = (
         F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("long")
         % 100
     )
-    cut = 0
-    expr = None
-    for w, nm in zip(weights[:-1], names[:-1]):
-        cut += w
-        cond = bucket < cut
-        expr = F.when(cond, nm) if expr is None else expr.when(cond, nm)
-    split = expr.otherwise(names[-1]) if expr is not None else F.lit(names[-1])
+    split = _split_of(bucket, weights, names)
     return docs.select(F.col(key_col), bucket.alias("bucket"), split.alias("split"))
 
 
@@ -503,10 +522,9 @@ def lm_bigram_score(
 
     Returns ``doc_id, n_bigrams, h_bits`` for docs with >= 1 bigram.
     """
-    tk = tokens(text_col, lowercase=True)
-    pairs_arr = F.transform(
-        F.slice(tk, 1, F.greatest(F.size(tk) - 1, F.lit(0))),
-        lambda x, i: F.struct(x.alias("w1"), F.element_at(tk, i + 2).alias("w2")),
+    pairs_arr = _adjacent(
+        tokens(text_col, lowercase=True),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
     per = (
         ensure_parallelism(docs)
@@ -643,10 +661,7 @@ def zipf_fit(
     Returns one row: ``n_points, slope, intercept`` (6 dp; the fit is
     NULL below two points).
     """
-    tk = ensure_parallelism(docs).select(
-        F.explode(tokens(text_col, lowercase=True)).alias("token")
-    )
-    counts = tk.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
+    counts = token_counts(ensure_parallelism(docs), text_col, lowercase=True)
     top = counts.orderBy(F.desc("n"), F.asc("token")).limit(top_n)
     arr = F.sort_array(
         F.collect_list(F.struct((-F.col("n")).alias("negn"), F.col("token")))
@@ -689,14 +704,9 @@ def domain_cap(
     Returns ``id_col, source_col, quality_col, src_rank`` for kept
     docs.
     """
-    w = Window.partitionBy(source_col).orderBy(
-        F.desc(quality_col), F.asc(id_col)
-    )
     slim = ensure_parallelism(docs).select(id_col, source_col, quality_col)
-    return (
-        slim.withColumn("src_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("src_rank") <= cap)
-    )
+    top = top_k_per(slim, [source_col], cap, F.desc(quality_col), F.asc(id_col))
+    return top.withColumnRenamed("rk", "src_rank")
 
 
 def shard_assign(
@@ -796,18 +806,13 @@ def pmi_collocations(
 
     Returns ``w1, w2, n_pair, pmi`` (6 dp), pmi-desc.
     """
-    tk = tokens(text_col, lowercase=True)
     base = ensure_parallelism(docs)
-    uni = (
-        base.select(F.explode(tk).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    uni = token_counts(base, text_col, lowercase=True, token="w", n="c")
     # vocabulary-sized count tables each feed a scalar total and a
     # join side — materialize both so each tokenize pass runs once
     uni = materialize_once(uni)
     bcounts = (
-        base.select(F.explode(_bigrams(tk)).alias("bg"))
+        base.select(F.explode(_bigrams(tokens(text_col, lowercase=True))).alias("bg"))
         .select(
             F.split_part("bg", F.lit(" "), F.lit(1)).alias("w1"),
             F.split_part("bg", F.lit(" "), F.lit(2)).alias("w2"),
@@ -843,6 +848,25 @@ def pmi_collocations(
     )
 
 
+def _chars(w: str) -> Column:
+    """``syms``: the single-character symbols of the word column ``w``
+    (an in-row transform — no UDF, no explode)."""
+    return F.expr(f"transform(sequence(1, length({w})), i -> substring({w}, i, 1))").alias("syms")
+
+
+def _apply_merge(a: str, b: str) -> Column:
+    """``syms`` with the BPE rule (a, b) → ab applied: a greedy
+    left-to-right in-row fold over the symbol array."""
+    return F.aggregate(
+        "syms",
+        F.array().cast("array<string>"),
+        lambda acc, x: F.when(
+            (F.size(acc) > 0) & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
+            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))),
+        ).otherwise(F.concat(acc, F.array(x))),
+    ).alias("syms")
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
@@ -876,23 +900,8 @@ def bpe_train(
     """
     spark = docs.sparkSession
     rounds = Rounds(spark, "vocab")
-    words = (
-        ensure_parallelism(docs)
-        .select(F.explode(tokens(text_col, lowercase=True)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    # symbols start as single characters: an in-row transform over the
-    # word (substring(w, i, 1)) -- no UDF, no explode
-    vocab = rounds.cut(
-        0,
-        words.select(
-            "freq",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ).alias("syms"),
-        ),
-    )
+    words = token_counts(ensure_parallelism(docs), text_col, lowercase=True, token="w", n="freq")
+    vocab = rounds.cut(0, words.select("freq", _chars("w")))
     merges: list[tuple] = []
     for step in range(1, n_merges + 1):
         pairs = (
@@ -914,19 +923,7 @@ def bpe_train(
             break
         a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
         merges.append((step, a, b, a + b, n))
-        apply_merge = F.aggregate(
-            "syms",
-            F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a))
-                & (x == F.lit(b)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-        vocab = rounds.cut(step, vocab.select("freq", apply_merge.alias("syms")))
+        vocab = rounds.cut(step, vocab.select("freq", _apply_merge(a, b)))
     # the returned frame is built from DRIVER-side scalars (the merge
     # rules were collected per-iteration), so the surviving vocab
     # checkpoint is dead weight — release it before returning
@@ -958,34 +955,13 @@ def bpe_encode(
 
     Returns ``id_col, n_words, n_subwords, fertility`` (6 dp).
     """
-    tk = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("w")
-    )
-    vocab = tk.select("w").distinct().select(
-        "w",
-        F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").alias(
-            "syms"
-        ),
-    )
-    def _merge_fold(a: str, b: str):
-        def fold(acc, x):
-            return F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a))
-                & (x == F.lit(b)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        return fold
-
+    tk = token_rows(ensure_parallelism(docs), text_col, id_col, lowercase=True, token="w")
+    vocab = tk.select("w").distinct().select("w", _chars("w"))
     # each cut releases the one it supersedes; the LAST one stays
     # alive — the returned lazy frame reads it
     rounds = Rounds(docs.sparkSession, "vocab")
     for step, (a, b) in enumerate(merges, start=1):
-        apply_merge = F.aggregate(
-            "syms", F.array().cast("array<string>"), _merge_fold(a, b)
-        )
-        vocab = vocab.select("w", apply_merge.alias("syms"))
+        vocab = vocab.select("w", _apply_merge(a, b))
         # keep the chained-fold expression tree codegen-sized: truncate
         # the (small) vocab frame every 4 rules
         if step % 4 == 0:
@@ -1027,9 +1003,7 @@ def heavy_hitters(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataF
     Returns ``rank, token, est_count`` for the top ``k`` surviving
     tokens (rank by est_count desc, token asc).
     """
-    toks = ensure_parallelism(docs).select(
-        F.explode(tokens(text_col, lowercase=True)).alias("token")
-    )
+    toks = token_rows(ensure_parallelism(docs), text_col, lowercase=True)
 
     def mg(batches):
         import pandas as pd
@@ -1045,11 +1019,9 @@ def heavy_hitters(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataF
 
     summaries = toks.mapInPandas(mg, schema="token string, lb bigint")
     merged = summaries.groupBy("token").agg(F.sum("lb").alias("est_count"))
-    w = Window.partitionBy().orderBy(F.col("est_count").desc(), F.col("token").asc())
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("rank", "token", F.col("est_count").cast("long").alias("est_count"))
+    top = top_k_per(merged, [], k, F.col("est_count").desc(), F.col("token").asc())
+    return top.withColumnRenamed("rk", "rank").select(
+        "rank", "token", F.col("est_count").cast("long").alias("est_count")
     )
 
 
@@ -1090,6 +1062,32 @@ def sample_weighted(
     )
 
 
+def _cms_hash(pos: int) -> Column:
+    """One Count-Min base hash of ``token``: the 60-bit integer at hex
+    digit ``pos`` of its md5, mod MINHASH_MOD (the MinHash derivation)."""
+    return F.expr(f"{_hex60('md5(token)', pos)} % {MINHASH_MOD}")
+
+
+def _cms_buckets(
+    df: DataFrame, keep: list[str], h1: Column, h2: Column, depth: int, width: int
+) -> DataFrame:
+    """``(*keep, row, bucket)``: each row of ``df`` once per sketch row
+    i = 1..depth, in bucket ((h1 + i·h2) mod MINHASH_MOD) mod width
+    (Kirsch-Mitzenmacher)."""
+    buckets = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("row"),
+                ((h1 + F.lit(i) * h2) % MINHASH_MOD % width).alias("bucket"),
+            )
+            for i in range(1, depth + 1)
+        ]
+    )
+    return df.select(*keep, F.explode(buckets).alias("rb")).select(
+        *keep, F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
+    )
+
+
 def cms_counts(
     docs: DataFrame,
     k: int = 20,
@@ -1120,63 +1118,26 @@ def cms_counts(
     Returns the top-``k`` tokens by true count (tie → token asc):
     ``rank, token, true_cnt, cms_est``.
     """
-    M = 1 << 40
-    toks = ensure_parallelism(docs).select(
-        F.explode(tokens(text_col, lowercase=True)).alias("token")
+    base = ensure_parallelism(docs)
+    hashed = token_rows(base, text_col, lowercase=True).select(
+        "token", _cms_hash(1).alias("h1"), _cms_hash(16).alias("h2")
     )
-    h = F.md5("token")
-    hashed = toks.select(
-        "token",
-        (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % M).alias("h1"),
-        (F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % M).alias("h2"),
-    )
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("row"),
-                ((F.col("h1") + F.lit(i) * F.col("h2")) % M % width).alias("bucket"),
-            )
-            for i in range(1, depth + 1)
-        ]
-    )
-    ex = hashed.select("token", F.explode(buckets).alias("rb")).select(
-        "token", F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
-    )
+    ex = _cms_buckets(hashed, ["token"], F.col("h1"), F.col("h2"), depth, width)
     counters = ex.groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
     # top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     # heaps, no vocab-sized single-task sort); the rank window then
     # runs over k rows only
     w = Window.orderBy(F.col("true_cnt").desc(), F.col("token").asc())
     true_top = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("true_cnt"))
+        token_counts(base, text_col, lowercase=True, n="true_cnt")
         .orderBy(F.col("true_cnt").desc(), F.col("token").asc())
         .limit(k)
         .withColumn("rank", F.row_number().over(w))
     )
     # per-token buckets recomputed on the k-row side, then the tiny
     # counter table broadcasts into the min-over-rows lookup
-    th = F.md5("token")
-    t1 = F.conv(F.substring(th, 1, 15), 16, 10).cast("long") % M
-    t2 = F.conv(F.substring(th, 16, 15), 16, 10).cast("long") % M
-    tb = true_top.select(
-        "rank",
-        "token",
-        "true_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        ((t1 + F.lit(i) * t2) % M % width).alias("bucket"),
-                    )
-                    for i in range(1, depth + 1)
-                ]
-            )
-        ).alias("rb"),
-    ).select(
-        "rank", "token", "true_cnt",
-        F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"),
+    tb = _cms_buckets(
+        true_top, ["rank", "token", "true_cnt"], _cms_hash(1), _cms_hash(16), depth, width
     )
     return (
         tb.join(F.broadcast(counters), ["row", "bucket"])
@@ -1228,13 +1189,9 @@ def contamination_fuzzy(
     bands = minhash_bands(sig, id_col)
     is_bench = (F.col(id_col) % bench_mod) == 0
     bench_b = bands.where(is_bench)
-    cap_w = Window.partitionBy("band", "band_sig").orderBy(F.col(id_col).asc())
-    train_b = (
-        bands.where(~is_bench)
-        .withColumn("_rn", F.row_number().over(cap_w))
-        .where(F.col("_rn") <= bucket_cap)
-        .drop("_rn")
-    )
+    train_b = top_k_per(
+        bands.where(~is_bench), ["band", "band_sig"], bucket_cap, F.col(id_col).asc()
+    ).drop("rk")
     cand = (
         bench_b.alias("q")
         .join(
@@ -1387,33 +1344,17 @@ def softdedup_weights(
     unique to the doc).
 
     Scale shape: identical to :func:`~..operators.textstats
-    .ngram_coverage` — per-doc DISTINCT shingles digest to md5 in the
-    scan projection (exchanges carry 32-byte digests, never text), the
-    (id, digest) relation repartitions by digest ONCE feeding both the
-    df groupBy and the df⋈shingles join (exchange reuse), and the
-    per-doc mean is one map-side-combined groupBy.  Inverted-index
+    .ngram_coverage` — the shared :func:`~.dedup._shingle_df` stage
+    (distinct shingle digests with their document frequency, one
+    digest exchange feeding both the df count and the join back), then
+    the per-doc mean is one map-side-combined groupBy.  Inverted-index
     statistic — no candidate pair space.
 
     Determinism: ``avg_df`` and ``weight`` are ratios of exact bigint
     sums, rounded 6 dp — engine-portable by construction.
     """
-    sh = (
-        ensure_parallelism(docs)
-        # pre-seed the join side's isnotnull inference so both
-        # consumers share one exchange (see ngram_coverage)
-        .filter(F.col(id_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(shingles(tokens(text_col, lowercase=True), n))
-            ).alias("shingle"),
-        )
-        .select(F.col(id_col), F.md5("shingle").alias("digest"))
-        .repartition("digest")
-    )
-    df_tbl = sh.groupBy("digest").agg(F.count(id_col).alias("df"))
     per_doc = (
-        sh.join(df_tbl, "digest")
+        _shingle_df(docs, text_col, id_col, n)
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
@@ -1593,10 +1534,9 @@ def unigram_kl(
 
     Returns (source, n_tokens, n_types, kl) ordered by source.
     """
-    tok = docs.select(
-        F.col(group_col).alias("grp"), F.explode(tokens(F.col(text_col))).alias("t")
+    slice_counts = token_counts(
+        docs.withColumnRenamed(group_col, "grp"), text_col, "grp", token="t", n="cs"
     )
-    slice_counts = tok.groupBy("grp", "t").agg(F.count(F.lit(1)).alias("cs"))
     # the tokenize aggregate feeds the corpus rollup, the slice totals
     # and the in-support join — materialize once so the docstring's
     # "ONE tokenize pass" is what the engine executes (round-11 audit)
@@ -1688,8 +1628,6 @@ def split_stratified_exact(
 
     Returns (doc_id, <group_col>, split) ordered by doc_id.
     """
-    if len(weights) != len(names) or sum(weights) != 100:
-        raise ValueError("weights must match names and sum to 100")
     h = F.md5(F.col(id_col).cast("string"))
     w = Window.partitionBy(group_col).orderBy(h, id_col)
     wn = Window.partitionBy(group_col)
@@ -1703,13 +1641,7 @@ def split_stratified_exact(
             / F.count(F.lit(1)).over(wn)
         ).alias("pct"),
     )
-    cut = 0
-    expr = None
-    for wt, nm in zip(weights[:-1], names[:-1]):
-        cut += wt
-        cond = F.col("pct") < cut
-        expr = F.when(cond, nm) if expr is None else expr.when(cond, nm)
-    split = expr.otherwise(names[-1]) if expr is not None else F.lit(names[-1])
+    split = _split_of(F.col("pct"), weights, names)
     return base.select(id_col, group_col, split.alias("split")).orderBy(id_col)
 
 
@@ -1742,7 +1674,7 @@ def textrank_keywords(
     Returns the top-``k`` (token, rank_micro, pr) by (rank desc,
     token asc) — a deterministic total order.
     """
-    tk = docs.select(tokens(F.col(text_col), lowercase=True).alias("tk"))
+    tk = docs.select(tokens(text_col, lowercase=True).alias("tk"))
     freq = tk.select(F.explode("tk").alias("t")).groupBy("t").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1750,11 +1682,8 @@ def textrank_keywords(
     pairs = (
         tk.select(
             F.explode(
-                F.transform(
-                    F.slice("tk", 1, F.greatest(F.size("tk") - 1, F.lit(0))),
-                    lambda x, i: F.struct(
-                        x.alias("doc_a"), F.element_at("tk", i + 2).alias("doc_b")
-                    ),
+                _adjacent(
+                    F.col("tk"), lambda a, b: F.struct(a.alias("doc_a"), b.alias("doc_b"))
                 )
             ).alias("p")
         )
@@ -1793,15 +1722,10 @@ def inverted_index(
     Returns (token, df, sample_postings) ordered by (df desc, token)
     limited to the 100 most frequent tokens.
     """
-    pairs = (
-        docs.select(F.col(id_col), F.explode(tokens(F.col(text_col), lowercase=True)).alias("t"))
-        .distinct()
-    )
-    w = Window.partitionBy("t").orderBy(id_col)
-    ranked = pairs.withColumn("rn", F.row_number().over(w))
+    pairs = token_rows(docs, text_col, id_col, lowercase=True, token="t").distinct()
     dfreq = pairs.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     sampled = (
-        ranked.filter(F.col("rn") <= sample_k)
+        top_k_per(pairs, ["t"], sample_k, F.asc(id_col))
         .groupBy("t")
         .agg(
             F.concat_ws(
@@ -1842,14 +1766,10 @@ def source_vocab_overlap(
     Returns ``(source_a, source_b, common, n_a, n_b, jaccard)`` with
     source_a < source_b.
     """
-    v = (
-        ensure_parallelism(docs)
-        .select(
-            F.col(source_col).alias("s"),
-            F.explode(tokens(text_col, lowercase=True)).alias("w"),
-        )
-        .distinct()
-    )
+    v = token_rows(
+        ensure_parallelism(docs), text_col, F.col(source_col).alias("s"),
+        lowercase=True, token="w",
+    ).distinct()
     sizes = v.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("nv"))
     a, b = v.alias("a"), v.alias("b")
     inter = (
@@ -1912,7 +1832,7 @@ def heaps_fit(
 
     Returns one row: (n_points, beta, log_k) — 6 dp.
     """
-    tok = docs.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
+    tok = token_rows(docs, text_col, id_col, token="t")
     first_seen = tok.groupBy("t").agg(F.min(id_col).alias("fd"))
     per_doc = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("nt"))
     qs = [i / n_checkpoints for i in range(1, n_checkpoints + 1)]
@@ -2087,13 +2007,8 @@ def token_dispersion(
     token-keyed rollup, a 1-row N broadcast, and the k-row heap —
     no global sort.  Returns ``(token, total_count, doc_freq, vmr)``.
     """
-    per_doc = (
-        ensure_parallelism(docs)
-        .select(
-            F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("t")
-        )
-        .groupBy(id_col, "t")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    per_doc = token_counts(
+        ensure_parallelism(docs), text_col, id_col, lowercase=True, token="t", n="c"
     )
     per_tok = per_doc.groupBy("t").agg(
         F.sum("c").cast("long").alias("total_count"),
@@ -2129,6 +2044,16 @@ def token_dispersion(
 #: stats rollup, so the choice is deterministic; both paths produce
 #: bit-identical output (hash-verified at sf0.001/0.01/0.1).
 JSD_FANOUT_LIMIT = 64_000_000
+
+
+def _jsd_term_nano(csa: Column, csb: Column) -> Column:
+    """One token's JS-divergence term in integer NANO units, for
+    counts ``csa``/``csb`` in the pair's two slices (add-one smoothed
+    over the corpus vocabulary ``v``; slice totals ``na``/``nb``)."""
+    pa = (csa + 1.0) / (F.col("na") + F.col("v"))
+    pb = (csb + 1.0) / (F.col("nb") + F.col("v"))
+    m = (pa + pb) / 2
+    return F.round((0.5 * pa * F.log(pa / m) + 0.5 * pb * F.log(pb / m)) * 1e9).cast("long")
 
 
 def _jsd_finish(per_pair: DataFrame) -> DataFrame:
@@ -2193,10 +2118,9 @@ def js_divergence(
     ``(source_a, source_b, n_a, n_b, union_types, jsd)`` ordered by
     the pair.
     """
-    tok = docs.select(
-        F.col(group_col).alias("grp"), F.explode(tokens(F.col(text_col))).alias("t")
+    sc = token_counts(
+        docs.withColumnRenamed(group_col, "grp"), text_col, "grp", token="t", n="cs"
     )
-    sc = tok.groupBy("grp", "t").agg(F.count(F.lit(1)).cast("long").alias("cs"))
     # materialize the tokenize aggregate ONCE: lazy checkpoint — the
     # rollup collect below is the first action and writes the blocks,
     # the final pair job re-reads them (storage is vocabulary-scale,
@@ -2264,12 +2188,7 @@ def js_divergence(
             )
             .join(F.broadcast(pairs), ["ga", "gb"])
         )
-        pa = (F.col("csa") + 1.0) / (F.col("na") + F.col("v"))
-        pb = (F.col("csb") + 1.0) / (F.col("nb") + F.col("v"))
-        m = (pa + pb) / 2
-        term_nano = F.round(
-            (0.5 * pa * F.log(pa / m) + 0.5 * pb * F.log(pb / m)) * 1e9
-        ).cast("long")
+        term_nano = _jsd_term_nano(F.col("csa"), F.col("csb"))
         per_pair = both.groupBy("ga", "gb").agg(
             F.max("na").alias("na"),
             F.max("nb").alias("nb"),
@@ -2293,14 +2212,6 @@ def js_divergence(
     # never touch tokens at all: Σ_{t∈a} T(cₐ,0) = Σ_c hist_a(c)·T(c,0)
     # over the count-of-counts histogram (Zipf-tiny), joined to a
     # broadcast (pair, role) table.  union_types = Vₐ + V_b − |a∩b|.
-    def _term_nano(csa, csb) -> Column:
-        pa = (csa + 1.0) / (F.col("na") + F.col("v"))
-        pb = (csb + 1.0) / (F.col("nb") + F.col("v"))
-        m = (pa + pb) / 2
-        return F.round(
-            (0.5 * pa * F.log(pa / m) + 0.5 * pb * F.log(pb / m)) * 1e9
-        ).cast("long")
-
     grouped = sc.groupBy("t").agg(
         F.sort_array(F.collect_list(F.struct("grp", "cs"))).alias("gs")
     )
@@ -2327,9 +2238,9 @@ def js_divergence(
     madj = matched.groupBy("ga", "gb").agg(
         F.count(F.lit(1)).cast("long").alias("n_match"),
         F.sum(
-            _term_nano(F.col("csa"), F.col("csb"))
-            - _term_nano(F.col("csa"), F.lit(0))
-            - _term_nano(F.lit(0), F.col("csb"))
+            _jsd_term_nano(F.col("csa"), F.col("csb"))
+            - _jsd_term_nano(F.col("csa"), F.lit(0))
+            - _jsd_term_nano(F.lit(0), F.col("csb"))
         ).cast("long").alias("adj_nano"),
     )
     # count-of-counts histogram: ONE scan of the checkpointed blocks
@@ -2353,10 +2264,10 @@ def js_divergence(
         .groupBy("ga", "gb")
         .agg(
             F.sum(
-                F.when(F.col("is_a"), F.col("nt") * _term_nano(F.col("cs"), F.lit(0))).otherwise(zero)
+                F.when(F.col("is_a"), F.col("nt") * _jsd_term_nano(F.col("cs"), F.lit(0))).otherwise(zero)
             ).cast("long").alias("sa_nano"),
             F.sum(
-                F.when(~F.col("is_a"), F.col("nt") * _term_nano(F.lit(0), F.col("cs"))).otherwise(zero)
+                F.when(~F.col("is_a"), F.col("nt") * _jsd_term_nano(F.lit(0), F.col("cs"))).otherwise(zero)
             ).cast("long").alias("sb_nano"),
             F.sum(F.when(F.col("is_a"), F.col("nt")).otherwise(zero)).cast("long").alias("va"),
             F.sum(F.when(~F.col("is_a"), F.col("nt")).otherwise(zero)).cast("long").alias("vb"),

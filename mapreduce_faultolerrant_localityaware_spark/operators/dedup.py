@@ -30,6 +30,8 @@ row-at-a-time.  Operator families:
 
 Shared stages, each written once: ``_shingle_rows`` (the
 tokenize → shingle explode), ``shingle_hashes`` (its 60-bit md5 hash),
+``_shingle_digests`` (distinct shingle md5 digests) and
+``_shingle_df`` (the same with their document frequency),
 ``_minhash`` (Kirsch-Mitzenmacher signatures), ``bucket_pairs``
 (all-pairs / star expansion inside a bucket), ``_attach`` (per-doc
 columns onto both sides of a pair), ``_shingle_sets`` +
@@ -38,9 +40,10 @@ columns onto both sides of a pair), ``_shingle_sets`` +
 + ``_common_shingles`` (inverted index), ``_simhash_bands`` +
 ``simhash_pair_bands`` (SimHash banding) and ``content_hash``.  Other
 modules call them, not copies: ``bucket_pairs`` (similarity),
-``shingle_hashes``/``_shingle_rows`` (corpus), ``content_hash``
-(textstats, streaming) and ``simhash_pair_bands``/``_simhash_bands``
-(streaming/enrich_stream.py).
+``shingle_hashes``/``_shingle_rows`` (corpus), ``_shingle_df``
+(corpus, textstats), ``_hex60``/``MINHASH_MOD`` (corpus's Count-Min
+sketch), ``content_hash`` (textstats, streaming) and
+``simhash_pair_bands``/``_simhash_bands`` (streaming/enrich_stream.py).
 
 All hashes are md5-derived, so they are deterministic,
 engine-portable (hash-matchable against a DuckDB oracle) and seedable
@@ -83,6 +86,36 @@ def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
     return ensure_parallelism(docs).select(
         F.col(id_col), F.explode(shingles(tokens(text_col, lowercase=True), n)).alias("shingle")
     )
+
+
+def _shingle_digests(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, digest): each doc's DISTINCT word ``n``-gram shingles as md5
+    hex digests, so exchanges downstream carry 32-byte digests, never
+    text.  Callers repartition it once and read that exchange from two
+    branches; the ``isNotNull`` pre-seed keeps the branches' subplans
+    identical (a join would infer it on ONE branch only, and Catalyst
+    would then recompute the scan+explode per branch)."""
+    return (
+        ensure_parallelism(docs)
+        .filter(F.col(id_col).isNotNull())
+        .select(
+            F.col(id_col),
+            F.explode(F.array_distinct(shingles(tokens(text_col, lowercase=True), n))).alias(
+                "shingle"
+            ),
+        )
+        .select(F.col(id_col), F.md5("shingle").alias("digest"))
+    )
+
+
+def _shingle_df(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(digest, id, df): :func:`_shingle_digests` with each digest's
+    document frequency.  One digest exchange feeds both the df count and
+    the join back (exchange reuse); ``count(id)``, not ``count(*)``,
+    keeps the id in the df branch so the two subplans match, and ids
+    are never NULL, so the counts agree."""
+    sh = _shingle_digests(docs, text_col, id_col, n).repartition("digest")
+    return sh.join(sh.groupBy("digest").agg(F.count(id_col).alias("df")), "digest")
 
 
 def _hex60(digest: str, pos: int) -> str:
@@ -789,24 +822,10 @@ def dedup_pipeline(
     # cardinality to intersection on raw shingles) — and the
     # (id, digest) relation repartitions by id ONCE so the signature
     # aggregation and the verify-set rebuild sit on the SAME exchange
-    # (ReuseExchange; the ngram_coverage pattern, including the
-    # isNotNull pre-seed that keeps the join branch's subplan
-    # identical).  Exchanges downstream carry digests and ids only,
-    # never text.
-    sh = (
-        ensure_parallelism(docs)
-        .filter(F.col(id_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(shingles(tokens(text_col, lowercase=True), n))
-            ).alias("shingle"),
-        )
-        .select(F.col(id_col), F.md5("shingle").alias("dg"))
-        .repartition(id_col)
-    )
-    cand = _lsh_pairs(_minhash(sh, id_col, "dg"), id_col, max_bucket_allpairs)
-    edges = _verify_jaccard(cand, _shingle_sets(sh, id_col, "dg"), id_col, threshold).select(
+    # (ReuseExchange, the ngram_coverage pattern; see _shingle_digests).
+    sh = _shingle_digests(docs, text_col, id_col, n).repartition(id_col)
+    cand = _lsh_pairs(_minhash(sh, id_col, "digest"), id_col, max_bucket_allpairs)
+    edges = _verify_jaccard(cand, _shingle_sets(sh, id_col, "digest"), id_col, threshold).select(
         "doc_a", "doc_b"
     )
     labels = connected_components(edges, max_iter=max_iter).withColumnRenamed("doc_id", id_col)

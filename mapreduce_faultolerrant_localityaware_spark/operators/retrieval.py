@@ -25,10 +25,13 @@ Scale shape (the reason this module exists as written):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..functions.vectors import lit_double_array
 
 
 def bm25_topk(
@@ -91,12 +94,8 @@ def bm25_topk(
         )
         contribs.append(idf * tf * (k1 + 1.0) / (tf + k1 * norm))
         hits.append(F.when(tf > 0, 1).otherwise(0))
-    score = contribs[0]
-    for c in contribs[1:]:
-        score = score + c
-    n_hit = hits[0]
-    for h in hits[1:]:
-        n_hit = n_hit + h
+    score = sum(contribs[1:], contribs[0])
+    n_hit = sum(hits[1:], hits[0])
     return (
         scored.select(
             "doc_id",
@@ -213,9 +212,20 @@ def ndcg_discounts(k: int) -> list[float]:
     transcendental — the cross-engine log2-ULP hazard the
     js_divergence nano-rounding discipline works around is removed at
     the source for this bounded table."""
-    import math
-
     return [1.0 / math.log2(p + 1) for p in range(1, k + 1)]
+
+
+def _ranked_runs(runs: DataFrame, query_col: str, score_col, rel_col, id_col):
+    """(base, wr): the run as ``(q, s, rel, i)`` rows, and its per-query
+    rank order (score DESC, id ASC) — a PARTITIONED window, never a
+    global sort."""
+    base = runs.select(
+        F.col(query_col).alias("q"),
+        score_col.alias("s"),
+        rel_col.cast("long").alias("rel"),
+        id_col.alias("i"),
+    )
+    return base, Window.partitionBy("q").orderBy(F.desc("s"), F.asc("i"))
 
 
 def ndcg_at_k(
@@ -243,18 +253,9 @@ def ndcg_at_k(
 
     Returns one row ``(n_queries, mean_ndcg)``.
     """
-    d = ndcg_discounts(k)
-    base = runs.select(
-        F.col(query_col).alias("q"),
-        score_col.alias("s"),
-        rel_col.cast("long").alias("rel"),
-        id_col.alias("i"),
-    )
-    wr = Window.partitionBy("q").orderBy(F.desc("s"), F.asc("i"))
+    base, wr = _ranked_runs(runs, query_col, score_col, rel_col, id_col)
     wi = Window.partitionBy("q").orderBy(F.desc("rel"), F.desc("s"), F.asc("i"))
-    from ..functions.vectors import lit_double_array
-
-    disc = lit_double_array(d)
+    disc = lit_double_array(ndcg_discounts(k))
     ranked = base.select(
         "q",
         "rel",
@@ -307,13 +308,7 @@ def retrieval_metrics_at_k(
     independent), and each mean is one final division.  Returns one
     row ``(n_queries, mrr, recall_at_k, precision_at_k)``.
     """
-    base = runs.select(
-        F.col(query_col).alias("q"),
-        score_col.alias("s"),
-        rel_col.cast("long").alias("rel"),
-        id_col.alias("i"),
-    )
-    wr = Window.partitionBy("q").orderBy(F.desc("s"), F.asc("i"))
+    base, wr = _ranked_runs(runs, query_col, score_col, rel_col, id_col)
     ranked = base.select("q", "rel", F.row_number().over(wr).alias("rn"))
     per_q = ranked.groupBy("q").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),

@@ -40,6 +40,7 @@ from ..functions.vectors import (
     lit_long_array,
 )
 from .dedup import bucket_pairs
+from .relational import top_k_per
 
 
 def _xm_sql(vec_col: str, dim: int) -> str:
@@ -84,9 +85,8 @@ def _cos_scored(pairs: DataFrame, id_col: str, *cols) -> DataFrame:
 def _top_k(scored: DataFrame, k: int, score: str = "cos_sim", drop_score: bool = False) -> DataFrame:
     """The ``k`` best rows per query under the total order (``score``
     DESC, neighbor_id ASC); ``drop_score`` also drops the score."""
-    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
     drop = ("rk", score) if drop_score else ("rk",)
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop(*drop)
+    return top_k_per(scored, ["query_id"], k, F.desc(score), F.asc("neighbor_id")).drop(*drop)
 
 
 def ann_bruteforce(
@@ -1124,11 +1124,7 @@ def embedding_outliers(
     scored = v.join(F.broadcast(cent), label_col).select(
         label_col, F.col(id_col), F.round(dist, 6).alias("dist")
     )
-    w = Window.partitionBy(label_col).orderBy(F.desc("dist"), F.asc(id_col))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-    )
+    return top_k_per(scored, [label_col], k, F.desc("dist"), F.asc(id_col))
 
 
 def dedup_semantic(

@@ -2,6 +2,12 @@
 counting, document fingerprinting.  Training-data-pipeline extensions
 of the reference's tokenizer (core/map_reduce.go:543-546); every
 signal is a built-in-functions composition (codegen'd, no UDFs).
+
+Shared stages, each written once and called here, not copied: the
+tokenizer ``tokens`` and the ``words``/``lines``/``shingles`` splits
+(functions/text.py), ``token_rows``/``token_counts`` (the word count's
+map side and combine, operators/wordcount.py), ``top_k_per``
+(relational) and ``_shingle_df`` (dedup).
 """
 
 from __future__ import annotations
@@ -9,9 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import EN_STOPWORDS, IT_STOPWORDS, stopword_hits, tokens
+from ..functions.text import (
+    EN_STOPWORDS,
+    IT_STOPWORDS,
+    lines,
+    shingles,
+    stopword_hits,
+    tokens,
+    words,
+)
+from ._materialize import materialize_once
 from ._parallel import ensure_parallelism
-from .dedup import content_hash
+from .dedup import _shingle_df, content_hash
+from .relational import top_k_per
+from .wordcount import token_counts, token_rows
 
 # Per-language marker stopword sets for the n-gram/stopword-ratio
 # language-ID heuristic.  Deterministic and tiny on purpose.
@@ -28,7 +45,7 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     """Per-doc token counting: reference-semantics word tokens (Q2),
     whitespace tokens (the usual LLM-data proxy), and char length."""
     tk = tokens(text_col)
-    ws = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit(""))
+    ws = words(F.col(text_col))
     return docs.select(
         F.col(id_col),
         F.size(tk).alias("n_tokens"),
@@ -84,9 +101,7 @@ def _rep_sizes(docs: DataFrame, text_col: str, n: int = 3, extra: list | None = 
     the two-stage shape evaluates it ONCE per row — measured 8.7 s →
     3.2 s at sf0.1 for repetition_ratio (the one-stage form re-built
     the array per reference)."""
-    from ..functions.text import shingles as _shingles
-
-    sh = _shingles(tokens(text_col, lowercase=True), n)
+    sh = shingles(tokens(text_col, lowercase=True), n)
     cols = list(extra) if extra else []
     # the array gets its OWN projection: higher-order functions are
     # CodegenFallback (interpreted, no subexpression elimination), so
@@ -224,10 +239,7 @@ def entropy_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     Returns ``doc_id, n_tokens, n_types, entropy, ttr`` for docs with
     at least one token.
     """
-    tk = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("token")
-    )
-    counts = tk.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("cnt"))
+    counts = token_counts(ensure_parallelism(docs), text_col, id_col, lowercase=True, n="cnt")
     s_micro = F.sum(F.round(F.col("cnt") * F.log2("cnt") * 1e6).cast("long"))
     n_tok = F.sum("cnt")
     return counts.groupBy(id_col).agg(
@@ -252,7 +264,7 @@ def sentence_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
     words_per = F.transform(
         sents,
-        lambda s: F.size(F.filter(F.split(F.trim(s), r"\s+"), lambda t: t != F.lit(""))),
+        lambda s: F.size(words(F.trim(s))),
     )
     n_sent = F.size(sents)
     total_words = F.aggregate(words_per, F.lit(0), lambda a, x: a + x)
@@ -377,53 +389,27 @@ def ngram_coverage(
     template text even when no single pair of docs crosses a near-dup
     threshold, which is exactly what per-pair dedup misses.
 
-    Scale shape: per-doc DISTINCT shingles digest to md5 in the scan
-    projection, so every exchange carries 32-byte digests only —
-    never text.  The (id, digest) relation is explicitly repartitioned
-    by digest ONCE and that single exchange feeds BOTH consumers
-    (the popularity groupBy needs no further shuffle, and the
-    popularity⋈shingles join is already co-partitioned on digest), so
-    the corpus is tokenized/exploded exactly once — without the
-    explicit repartition Catalyst recomputes the whole scan+explode
-    map stage per consumer (verified at runtime: the executed
-    adaptive plan carries a `ReusedExchange` for the second branch;
-    the INITIAL plan still prints both — see PLANS.md header).  No
-    candidate pair space exists at all
-    (this is an inverted-index statistic, not a join).
+    Scale shape: the shared :func:`~.dedup._shingle_df` stage — per-doc
+    DISTINCT shingles digest to md5 in the scan projection, so every
+    exchange carries 32-byte digests only, never text, and the
+    (id, digest) relation is repartitioned by digest ONCE, that one
+    exchange feeding both the popularity groupBy and the
+    popularity⋈shingles join (co-partitioned on digest).  The corpus is
+    tokenized/exploded exactly once: the executed (adaptive) plan reads
+    the second branch through a ``ReusedExchange``, while the initial
+    plan that ``explain()`` prints before execution still shows both
+    branches.  No candidate pair space exists at all (this is an
+    inverted-index statistic, not a join).
 
     Returns ``id_col, n_shingles, n_dup, dup_frac`` for every doc
     (docs shorter than ``n`` tokens report 0 shingles, dup_frac 0).
     """
-    from ..functions.text import shingles, tokens
-
-    sh = (
-        ensure_parallelism(docs)
-        # pre-seed the isnotnull(doc_id) the join side would infer:
-        # without it Catalyst adds the filter to ONE consumer branch
-        # only, diverging the subplans and killing exchange reuse
-        .filter(F.col(id_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(shingles(tokens(text_col, lowercase=True), n))
-            ).alias("shingle"),
-        )
-        .select(F.col(id_col), F.md5("shingle").alias("digest"))
-        .repartition("digest")
-    )
-    # count(doc_id) not count(*): referencing doc_id keeps this
-    # branch's projection identical to the join branch's, so both sit
-    # over the SAME digest exchange and ReuseExchange fires (count(*)
-    # lets Catalyst prune doc_id here, diverging the subplans — the
-    # exact exchange-reuse pitfall tfidf_top_terms documents).
-    # doc_id is never null, so the counts are equal.
-    pop = sh.groupBy("digest").agg(F.count(id_col).alias("n_docs"))
     per_doc = (
-        sh.join(pop, "digest")
+        _shingle_df(docs, text_col, id_col, n)
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.sum((F.col("n_docs") >= 2).cast("long")).alias("n_dup"),
+            F.sum((F.col("df") >= 2).cast("long")).alias("n_dup"),
         )
     )
     base = docs.select(id_col)
@@ -479,22 +465,20 @@ def gopher_rules(
     zero shuffles, no UDFs.  Unreadable (NULL) docs fail as
     ``too_few_words`` rather than silently passing.
     """
-    from ..functions.text import tokens
-
     t = F.col(text_col)
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != F.lit(""))
-    n_words = F.size(words)
+    ws = words(t)
+    n_words = F.size(ws)
     # sum of word lengths == chars left after removing all whitespace
     word_chars = F.length(F.regexp_replace(t, r"\s", ""))
-    lines = F.filter(F.split(t, "\n"), lambda l: F.trim(l) != F.lit(""))
-    n_lines = F.size(lines)
+    ls = lines(t)
+    n_lines = F.size(ls)
     # symbol-to-word: '#' chars plus '...'/'…' ellipses per word
     n_hash = F.length(t) - F.length(F.regexp_replace(t, "#", ""))
     n_ell3 = (F.length(t) - F.length(F.regexp_replace(t, r"\.\.\.", ""))) / 3
     n_ellu = F.length(t) - F.length(F.regexp_replace(t, "…", ""))
-    n_bullet = F.size(F.filter(lines, lambda l: l.rlike(r"^\s*[•‣▪*-]")))
-    n_ell_lines = F.size(F.filter(lines, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
-    n_alpha = F.size(F.filter(words, lambda w: w.rlike(r"\p{L}")))
+    n_bullet = F.size(F.filter(ls, lambda l: l.rlike(r"^\s*[•‣▪*-]")))
+    n_ell_lines = F.size(F.filter(ls, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
+    n_alpha = F.size(F.filter(ws, lambda w: w.rlike(r"\p{L}")))
     tk = tokens(text_col, lowercase=True)
     stops = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
     n_stop = F.size(F.filter(stops, lambda s: F.array_contains(tk, s)))
@@ -557,14 +541,11 @@ def c4_line_filter(
     on the codegen path), zero shuffles, no UDFs.
     """
     t = F.col(text_col)
-    word_count = lambda s: F.size(  # noqa: E731 — local expression builder
-        F.filter(F.split(s, r"\s+"), lambda w: w != F.lit(""))
-    )
-    lines = F.filter(F.split(t, "\n"), lambda l: F.trim(l) != F.lit(""))
+    ls = lines(t)
     kept = F.filter(
-        lines,
+        ls,
         lambda l: l.rlike(r'[.!?"]\s*$')
-        & (word_count(l) >= min_line_words)
+        & (F.size(words(l)) >= min_line_words)
         & ~F.lower(l).contains("javascript"),
     )
     n_kept = F.size(kept)
@@ -572,9 +553,9 @@ def c4_line_filter(
     has_lorem = F.lower(t).contains("lorem ipsum")
     return ensure_parallelism(docs).select(
         F.col(id_col),
-        F.coalesce(F.size(lines), F.lit(0)).cast("long").alias("n_lines"),
+        F.coalesce(F.size(ls), F.lit(0)).cast("long").alias("n_lines"),
         F.coalesce(n_kept, F.lit(0)).cast("long").alias("n_kept"),
-        F.coalesce(word_count(F.array_join(kept, "\n")), F.lit(0))
+        F.coalesce(F.size(words(F.array_join(kept, "\n"))), F.lit(0))
         .cast("long")
         .alias("n_clean_words"),
         F.coalesce(has_brace.cast("int"), F.lit(0)).alias("has_brace"),
@@ -614,22 +595,14 @@ def gopher_repetition(
     explode → partial-agged (doc,bigram) count → per-doc top-1 window
     — one shuffle carrying (id, bigram) pairs, no pair space.
     """
-    from pyspark.sql import Window
-
-    from ..functions.text import shingles, tokens
-
-    t = F.col(text_col)
-    lines = F.filter(F.split(t, "\n"), lambda l: F.trim(l) != F.lit(""))
-    nl = F.size(lines)
-    dl = F.array_distinct(lines)
-    line_chars = F.aggregate(
-        lines, F.lit(0).cast("long"), lambda a, l: a + F.length(l)
-    )
+    ls = lines(F.col(text_col))
+    nl = F.size(ls)
+    dl = F.array_distinct(ls)
+    line_chars = F.aggregate(ls, F.lit(0).cast("long"), lambda a, l: a + F.length(l))
     extra_chars = F.aggregate(
         dl,
         F.lit(0).cast("long"),
-        lambda a, d: a
-        + (F.size(F.filter(lines, lambda x: x == d)) - 1) * F.length(d),
+        lambda a, d: a + (F.size(F.filter(ls, lambda x: x == d)) - 1) * F.length(d),
     )
     tk = tokens(text_col, lowercase=True)
     base = ensure_parallelism(docs).select(
@@ -647,9 +620,8 @@ def gopher_repetition(
         .groupBy(id_col, "bg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("c"), F.asc("bg"))
-    top = cnt.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
-    return base.drop("tk").join(top.drop("rk"), id_col, "left").select(
+    top = top_k_per(cnt, [id_col], 1, F.desc("c"), F.asc("bg")).drop("rk")
+    return base.drop("tk").join(top, id_col, "left").select(
         F.col(id_col),
         "n_lines",
         "dup_line_frac",
@@ -832,11 +804,9 @@ def readability_scores(
     Returns ``(doc_id, n_words, n_sentences, n_syllables, flesch,
     fk_grade)``.
     """
-    words = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
-    )
+    ws = words(F.col(text_col))
     syl_per = F.transform(
-        words,
+        ws,
         lambda w: F.greatest(
             F.lit(1),
             F.size(F.regexp_extract_all(F.lower(w), F.lit(r"[aeiouy]+"), F.lit(0))),
@@ -845,7 +815,7 @@ def readability_scores(
     sents = F.filter(
         F.split(F.col(text_col), r"[.!?]+"), lambda s: F.trim(s) != F.lit("")
     )
-    nw = F.size(words).cast("long")
+    nw = F.size(ws).cast("long")
     ns = F.size(sents).cast("long")
     nsyl = F.aggregate(syl_per, F.lit(0), lambda a, x: a + x).cast("long")
     wps = F.try_divide(nw.cast("double"), F.nullif(ns.cast("double"), F.lit(0.0)))
@@ -932,11 +902,10 @@ def tokenizer_fertility(
     ``(lang, n_docs, n_words, n_tokens, fertility, chars_per_token)``
     ordered by language.
     """
-    toks = tokens(F.col(text_col))
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != F.lit(""))
+    toks = tokens(text_col)
     per = docs.groupBy(F.col(group_col).alias("lang")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(words)).cast("long").alias("n_words"),
+        F.sum(F.size(words(F.col(text_col)))).cast("long").alias("n_words"),
         F.sum(F.size(toks)).cast("long").alias("n_tokens"),
         F.sum(
             F.aggregate(
@@ -995,9 +964,7 @@ def feature_hash(
     ``(bucket, n_tokens, n_distinct_tokens, n_docs, mass_share)``
     ordered by bucket.
     """
-    tok = docs.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("t")
-    )
+    tok = token_rows(docs, text_col, F.col(id_col).alias("doc"), token="t")
     b = F.pmod(
         F.conv(F.substring(F.md5(F.col("t")), 1, 12), 16, 10).cast("long"),
         F.lit(n_buckets),
@@ -1005,8 +972,6 @@ def feature_hash(
     bt = tok.select(b.alias("b"), "t", "doc")
     # the bucketed token relation feeds the per-token counts AND the
     # distinct-doc rollup — materialize once so tokenize runs once
-    from ._materialize import materialize_once
-
     bt = materialize_once(bt)
     per_token = bt.groupBy("b", "t").agg(F.count(F.lit(1)).cast("long").alias("c"))
     per_bucket = per_token.groupBy("b").agg(

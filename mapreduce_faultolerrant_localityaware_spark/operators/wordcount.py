@@ -24,15 +24,44 @@ The two-level combining the reference implements by hand is Spark's
 partial aggregation — visible in .explain() as HashAggregate(partial)
 before the Exchange.  Ties in the sort are broken by word ASC for
 determinism (SURVEY Q4: the reference's tie order is Go-map random).
+
+The map side and the combine are the engine's shared token stages,
+written once here: ``token_rows`` (one row per token, keeping some
+columns) and ``token_counts`` (the map-side-combined count of those
+rows per key).  Every token statistic — tf-idf, entropy, Zipf and
+Heaps fits, BPE vocabularies, sketches, KL/JS divergence, the
+streaming word count — is this word count keyed by more columns, and
+calls them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ._parallel import ensure_parallelism
+
+
+def token_rows(
+    df: DataFrame, text_col: str, *keep: Column | str, lowercase: bool = False, token: str = "token"
+) -> DataFrame:
+    """``(*keep, token)``: one row per token of ``text_col`` (the
+    tokenize + explode map side), carrying the ``keep`` columns."""
+    return df.select(*keep, F.explode(tokens(text_col, lowercase)).alias(token))
+
+
+def token_counts(
+    df: DataFrame, text_col: str, *keys: str, lowercase: bool = False, token: str = "token", n: str = "n"
+) -> DataFrame:
+    """``(*keys, token, n)``: occurrences of each token per ``keys``
+    group — partial-aggregated before the shuffle, so a hot token
+    crosses the exchange once per partition, not once per occurrence."""
+    return (
+        token_rows(df, text_col, *keys, lowercase=lowercase, token=token)
+        .groupBy(*keys, token)
+        .agg(F.count(F.lit(1)).alias(n))
+    )
 
 
 def wordcount_from_text(text_df: DataFrame, text_col: str = "value", sort: bool = True) -> DataFrame:
@@ -40,11 +69,7 @@ def wordcount_from_text(text_df: DataFrame, text_col: str = "value", sort: bool 
 
     ``sort=True`` mirrors SORT_FINAL (configurations/config.json:3).
     """
-    out = (
-        ensure_parallelism(text_df).select(F.explode(tokens(text_col)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
+    out = token_counts(ensure_parallelism(text_df), text_col, token="word", n="count")
     if sort:
         out = out.orderBy(F.desc("count"), F.asc("word"))
     return out

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..operators.wordcount import token_counts
 
 
 def streaming_wordcount(lines: DataFrame, text_col: str = "value") -> DataFrame:
@@ -24,11 +24,7 @@ def streaming_wordcount(lines: DataFrame, text_col: str = "value") -> DataFrame:
 
         q = streaming_wordcount(stream).writeStream.outputMode("update")...
     """
-    return (
-        lines.select(F.explode(tokens(text_col)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
+    return token_counts(lines, text_col, token="word", n="count")
 
 
 def windowed_event_counts(

@@ -268,3 +268,40 @@ def test_domain_cap_null_source(spark):
     # null source is its own group (groupBy semantics), capped like any
     srcs = {r["source"]: r["doc_id"] for r in out}
     assert srcs == {None: 2, "s": 3}
+
+
+def test_mixture_shares_of_a_tokenless_corpus_are_null(spark):
+    # digits and an empty string: no letter tokens anywhere, so the
+    # token shares (and mixture weights) are 0/0 — NULL, not an ANSI
+    # DIVIDE_BY_ZERO
+    from mapreduce_faultolerrant_localityaware_spark.operators import corpus
+
+    df = spark.createDataFrame(
+        [(1, "123", "a", "en"), (2, "", "b", "it")], ["doc_id", "text", "source", "lang"]
+    )
+    rep = {r["source"]: r for r in corpus.mixture_report(df).collect()}
+    assert {s: (r["n_tokens"], r["doc_share"], r["token_share"]) for s, r in rep.items()} == {
+        "a": (0, 0.5, None),
+        "b": (0, 0.5, None),
+    }
+    wts = corpus.mixture_weights(df).collect()
+    assert sorted((r["source"], r["n_tokens"], r["token_share"], r["weight"], r["boost"]) for r in wts) == [
+        ("a", 0, None, None, None),
+        ("b", 0, None, None, None),
+    ]
+
+
+@pytest.mark.parametrize("name", ["body text", "we`ird", "select"])
+def test_tokens_of_any_column_name(spark, name):
+    # the tokenizer is one SQL parse, so the column name is quoted into
+    # it: a name with a space, a backtick or a reserved word tokenizes
+    # exactly like the same data under a plain name
+    from mapreduce_faultolerrant_localityaware_spark.functions.text import tokens
+
+    df = _docs(spark, [(1, "Don't stop, 2nd più"), (2, ""), (3, None)])
+    for lowercase in (False, True):
+        plain = [r[0] for r in df.orderBy("doc_id").select(tokens("text", lowercase)).collect()]
+        odd = df.withColumnRenamed("text", name).orderBy("doc_id")
+        got = [r[0] for r in odd.select(tokens(name, lowercase)).collect()]
+        assert got == plain
+    assert plain[0] == ["don", "t", "stop", "nd", "più"] and plain[1] == [] and plain[2] is None

@@ -26,8 +26,15 @@ sink round-trip and streaming queries write under
 ``sparkgraft_scratch__/stream-_``: a per-process ``mkdtemp`` root and a
 per-request counter, see ``_scratch.py``), and two session-wide
 counters renumbered in order of first appearance within each plan:
-lambda variables (``lambda x_241`` → ``lambda x_0``) and common
+lambda variables (``lambda x_241`` → ``lambda v_0``) and common
 subexpression aliases (``_common_expr_7`` → ``_common_expr_0``).
+Every lambda variable is renamed, whatever its name, and first by
+position: the arguments of each ``lambdafunction`` become
+``l<nesting depth>_<index>``.  pyspark's Column API generates ``x_<n>``
+names from a session-wide counter, while a lambda parsed from SQL
+keeps its written name (``lambda x``, the same in every copy), so the
+same function built either way normalises alike, however many copies
+of it a plan holds.
 Operator numbers ``(7)`` are kept: they are positional, not per-run.
 
 Two plan differences are not code changes:
@@ -65,22 +72,57 @@ _IDS = (
     (re.compile(r"sparkgraft_scratch_\w+(/[\w.-]+?-)\d+"), r"sparkgraft_scratch__\1_"),
 )
 _COUNTERS = (
-    re.compile(r"\b(lambda \w+?)_\d+\b"),
-    re.compile(r"\b(_common_expr)_\d+\b"),
+    (re.compile(r"\blambda \w+"), "lambda v"),
+    (re.compile(r"\b_common_expr_\d+\b"), "_common_expr"),
 )
+_LAMBDA_FN = "lambdafunction("
+#: the argument list that ends a printed ``lambdafunction(body, args..., hidden)``
+_LAMBDA_ARGS = re.compile(r"((?:, lambda \w+#\d+\w*)+), (?:true|false)$")
+
+
+def _close_paren(text: str, start: int) -> int:
+    """Index of the ``)`` that closes the ``(`` just before ``start``, or -1."""
+    depth = 1
+    for i in range(start, len(text)):
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        if depth == 0:
+            return i
+    return -1
+
+
+def _bind_lambdas(text: str, depth: int = 0) -> str:
+    """``text`` with the arguments of each ``lambdafunction`` renamed by
+    nesting depth and position (``lambda l<depth>_<i>``), innermost
+    first, so a lambda prints the same whatever its variables were
+    called."""
+    out, i = [], 0
+    while (j := text.find(_LAMBDA_FN, i)) >= 0:
+        k = _close_paren(text, j + len(_LAMBDA_FN))
+        if k < 0:
+            break
+        body = _bind_lambdas(text[j + len(_LAMBDA_FN) : k], depth + 1)
+        args = _LAMBDA_ARGS.search(body)
+        # a variable is its name AND expression id: an inner lambda may
+        # shadow an outer one's name, never its id
+        for n, (name, xid) in enumerate(
+            re.findall(r"lambda (\w+)#(\d+)", args.group(1)) if args else []
+        ):
+            body = re.sub(rf"\blambda {name}#{xid}(?!\d)", f"lambda l{depth}_{n}#{xid}", body)
+        out.append(text[i:j] + _LAMBDA_FN + body + ")")
+        i = k + 1
+    return "".join(out) + text[i:]
 
 
 def normalise(plan: str) -> str:
-    """``plan`` with its per-run expression, RDD and plan ids blanked
-    and its lambda variables and common-expression aliases renumbered
-    from 0."""
+    """``plan`` with its per-run expression, RDD and plan ids blanked,
+    its lambda variables bound by position and its common-expression
+    aliases renumbered from 0."""
+    plan = _bind_lambdas(plan)
     for pat, repl in _IDS:
         plan = pat.sub(repl, plan)
-    for pat in _COUNTERS:
+    for pat, stem in _COUNTERS:
         seen: dict[str, str] = {}
-        plan = pat.sub(
-            lambda m: seen.setdefault(m.group(0), f"{m.group(1)}_{len(seen)}"), plan
-        )
+        plan = pat.sub(lambda m: seen.setdefault(m.group(0), f"{stem}_{len(seen)}"), plan)
     return plan
 
 
