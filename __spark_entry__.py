@@ -35,6 +35,7 @@ from mapreduce_faultolerrant_localityaware_spark.operators import (
     corpus,
     dedup,
     events as events_ops,
+    graph,
     multimodal,
     relational,
     retrieval,
@@ -673,10 +674,8 @@ def _q_graph_label_prop(spark, sf):
     """Fixed-round deterministic label propagation over the SimHash
     near-dup graph — community structure one level finer than
     connected components."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import label_propagation
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return label_propagation(pairs.select("doc_a", "doc_b"), rounds=3)
+    return graph.label_propagation(pairs.select("doc_a", "doc_b"), rounds=3)
 
 
 # ---- dedup ----
@@ -1528,22 +1527,14 @@ def _q_graph_degree_hist(spark, sf):
     """Degree distribution of the supplier—part supply graph
     (operators/graph.py:degree_histogram): two integer-pair shuffles,
     the first diagnostic for hub-aware strategies."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        degree_histogram,
-    )
-
-    return degree_histogram(_edges_supplier_part(spark, sf))
+    return graph.degree_histogram(_edges_supplier_part(spark, sf))
 
 
 def _q_graph_assortativity(spark, sf):
     """Newman degree assortativity of the supplier—part graph
     (operators/graph.py:assortativity): exact-BIGINT Pearson terms
     over symmetrized edge ends, one float op at the end."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        assortativity,
-    )
-
-    return assortativity(_edges_supplier_part(spark, sf))
+    return graph.assortativity(_edges_supplier_part(spark, sf))
 
 
 def _q_streaming_cdc_apply(spark, sf):
@@ -3517,10 +3508,8 @@ def _q_dedup_pipeline(spark, sf):
 def _q_dedup_clusters(spark, sf):
     """Near-dup clusters: MinHash-LSH candidate pairs → connected
     components (iterative min-label propagation)."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import connected_components
-
     pairs = dedup.dedup_minhash_candidates(scan(spark, sf, "documents"))
-    return connected_components(pairs)
+    return graph.connected_components(pairs)
 
 
 def _q_dedup_clusters_two_phase(spark, sf):
@@ -3528,21 +3517,15 @@ def _q_dedup_clusters_two_phase(spark, sf):
     SoCC'14) — the O(log² n)-round scale path; labels (component min)
     must be identical to min-label propagation, so it shares the
     dedup_clusters oracle."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        connected_components_two_phase,
-    )
-
     pairs = dedup.dedup_minhash_candidates(scan(spark, sf, "documents"))
-    return connected_components_two_phase(pairs)
+    return graph.connected_components_two_phase(pairs)
 
 
 def _q_triangle_count(spark, sf):
     """Cluster-density diagnostic: triangle count over the SimHash
     near-dup pair graph (degree-oriented wedge enumeration)."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import triangle_count
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return triangle_count(pairs)
+    return graph.triangle_count(pairs)
 
 
 def _q_dedup_rep_pagerank(spark, sf):
@@ -3552,20 +3535,12 @@ def _q_dedup_rep_pagerank(spark, sf):
     min-id election that picks the doc most representative of the
     cluster.  The candidate pipeline materializes ONCE (truncated
     lineage) and feeds both the components loop and the rank loop."""
-    from mapreduce_faultolerrant_localityaware_spark.operators._materialize import (
-        materialize_once,
-    )
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        connected_components,
-        pagerank,
-    )
-
     pairs = dedup.dedup_simhash_pairs(
         scan(spark, sf, "documents"), max_hamming=3
     ).select("doc_a", "doc_b")
-    pairs = materialize_once(pairs)
-    labels = connected_components(pairs)
-    pr = pagerank(pairs, iters=5)
+    pairs = graph.materialize_once(pairs)
+    labels = graph.connected_components(pairs)
+    pr = graph.pagerank(pairs, iters=5)
     j = labels.join(pr, labels["doc_id"] == pr["node"]).select(
         "doc_id", "cluster_id", "rank_micro"
     )
@@ -3588,21 +3563,17 @@ def _q_dedup_rep_pagerank(spark, sf):
 def _q_graph_pagerank(spark, sf):
     """Integer fixed-point PageRank over the SimHash near-dup graph —
     bit-reproducible centrality for canonical-doc election."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import pagerank
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return pagerank(pairs, iters=5)
+    return graph.pagerank(pairs, iters=5)
 
 
 def _q_graph_bfs(spark, sf):
     """Contamination-radius BFS: min hop distance (≤3) from the seed
     docs (doc_id % 97 == 0) over the SimHash near-dup pair graph."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import bfs_hops
-
     docs = scan(spark, sf, "documents")
     pairs = dedup.dedup_simhash_pairs(docs, max_hamming=3)
     seeds = docs.select("doc_id").where(F.col("doc_id") % 97 == 0)
-    return bfs_hops(pairs, seeds, max_hops=3)
+    return graph.bfs_hops(pairs, seeds, max_hops=3)
 
 
 def _q_interval_merge(spark, sf):
@@ -3622,20 +3593,16 @@ def _q_interval_merge(spark, sf):
 def _q_graph_kcore(spark, sf):
     """Fixed-round 2-core peeling over the SimHash near-dup graph:
     surviving nodes sit in densely boilerplated regions."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import kcore_peel
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return kcore_peel(pairs.select("doc_a", "doc_b"), k=2, rounds=4)
+    return graph.kcore_peel(pairs.select("doc_a", "doc_b"), k=2, rounds=4)
 
 
 def _q_graph_common_neighbors(spark, sf):
     """Common-neighbors / Adamic-Adar link prediction over the SimHash
     near-dup graph: shared-neighbor evidence for pairs no band matched
     directly (shared low-degree neighbors weigh most)."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import common_neighbors
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return common_neighbors(pairs.select("doc_a", "doc_b"))
+    return graph.common_neighbors(pairs.select("doc_a", "doc_b"))
 
 
 def _q_approx_distinct(spark, sf):
@@ -3855,8 +3822,6 @@ def _q_graph_msf(spark, sf):
     no SQL oracle (rows-only in the driver gate); exactness is pinned
     by tests/test_boruvka.py's pure-Python Kruskal cross-check on the
     same graph with the identical (w, a, b) tiebreak."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import boruvka_msf
-
     li = scan(spark, sf, "lineitem")
     edges = (
         li.select(
@@ -3867,7 +3832,7 @@ def _q_graph_msf(spark, sf):
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
     )
-    return boruvka_msf(edges)
+    return graph.boruvka_msf(edges)
 
 
 def _q_ab_test(spark, sf):
@@ -4157,12 +4122,8 @@ def _q_graph_clustering(spark, sf):
     (operators/graph.py:clustering_coefficient): 3T/wedges from the
     degree-oriented triangle machinery, exact BIGINT wedge mass,
     single tagged-union aggregate."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        clustering_coefficient,
-    )
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return clustering_coefficient(pairs)
+    return graph.clustering_coefficient(pairs)
 
 
 def _q_price_volume_decomposition(spark, sf):
@@ -4415,10 +4376,8 @@ def _q_graph_jaccard_neighbors(spark, sf):
     """Neighborhood-Jaccard link prediction over the SimHash near-dup
     graph (operators/graph.py:neighborhood_jaccard): wedge-counted
     intersections, inclusion-exclusion unions on exact degrees."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import neighborhood_jaccard
-
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return neighborhood_jaccard(pairs.select("doc_a", "doc_b"))
+    return graph.neighborhood_jaccard(pairs.select("doc_a", "doc_b"))
 
 
 def _q_js_divergence(spark, sf):
@@ -4607,10 +4566,6 @@ def _q_graph_modularity(spark, sf):
     k-row community table.  Edges = distinct (cust, supp) pairs from
     orders⋈lineitem; supplier nodes offset into their own namespace;
     both community maps are broadcastable dimension tables."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
-        modularity,
-    )
-
     orders = scan(spark, sf, "orders")
     li = scan(spark, sf, "lineitem")
     cust = scan(spark, sf, "customer")
@@ -4633,7 +4588,7 @@ def _q_graph_modularity(spark, sf):
             F.col("s_nationkey").cast("long").alias("comm"),
         )
     )
-    return modularity(edges, comms)
+    return graph.modularity(edges, comms)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -26,17 +26,94 @@ Both converge with ONE materializing job per round: the convergence
 signal is computed inside the same pass that produces the round's
 output (a ``chg`` flag / edge-set digest aggregated from the
 checkpointed blocks, never a second join against the previous state).
+
+Every operator reads its edge list through the same few stages, each
+written once below as one SQL parse (the MapReduce edge-list rounds
+of connected components, triangles and degree statistics):
+``_sym_edges`` (both directions of each non-loop edge, once),
+``_undirected`` (the canonical ``u < v`` edge), ``_attach_both`` (a
+per-node value joined onto both endpoints), ``_wedge_pairs`` +
+``_flag_linked`` (the common-neighbour pairs of the link predictors)
+and ``_triangle_counts`` (one tagged-union aggregate).  Three stages
+stay apart on purpose: ``boruvka_msf``'s weighted canonical edge keeps
+the cheapest parallel edge, so it aggregates instead of deduplicating;
+``_star``'s symmetric view has no loop filter or distinct, and a
+distinct there would add an Exchange per round; ``_truncate_lineage``
+keeps its name because ``perfbench/tracing.py`` hooks it.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import _quoted
 from ._materialize import Rounds, materialize_once, release_checkpoint
 
 # the per-round barrier under the name perfbench/tracing.py wraps
 _truncate_lineage = materialize_once
+
+
+def _sym_edges(pairs: DataFrame, src: str, dst: str, directed: bool = False) -> DataFrame:
+    """``(s, d)``: each non-loop edge once per direction (once in all if
+    ``directed``); self-loops and NULL endpoints are dropped."""
+    s, d = _quoted(src), _quoted(dst)
+    out = pairs.selectExpr(f"{s} AS s", f"{d} AS d")
+    if not directed:
+        out = out.unionByName(pairs.selectExpr(f"{d} AS s", f"{s} AS d"))
+    # the filter after the distinct: between the two it would keep the
+    # optimizer from merging an upstream distinct union (the MinHash
+    # candidates) into this one, a shuffle more; it is pushed down anyway
+    return out.distinct().filter("s != d")
+
+
+def _undirected(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(u, v)``: each non-loop undirected edge once, ``u < v``; an
+    edge with a NULL endpoint is dropped (``least``/``greatest`` skip
+    NULLs, so it becomes a loop)."""
+    s, d = _quoted(src), _quoted(dst)
+    return (
+        pairs.selectExpr(f"least({s}, {d}) AS u", f"greatest({s}, {d}) AS v")
+        .filter("u != v")
+        .distinct()
+    )
+
+
+def _attach_both(
+    x: DataFrame, table: DataFrame, key: str, value: str, prefix: str, ends=("u", "v")
+) -> DataFrame:
+    """``x`` with ``table``'s ``value`` of each endpoint column ``e`` in
+    ``ends`` joined on as ``<prefix><e>`` (one equi-join per end)."""
+    for e in ends:
+        x = x.join(table.selectExpr(f"{key} AS {e}", f"{value} AS {prefix}{e}"), e)
+    return x
+
+
+def _wedge_pairs(sym: DataFrame, min_common: int, *scores, weights=None) -> DataFrame:
+    """``(a, b, n_common, *scores)`` for each node pair ``a < b`` with at
+    least ``min_common`` common neighbours in ``sym`` (``_sym_edges``):
+    the wedge rays ``(n = centre, a)``, joined to ``weights`` on ``n``
+    when given, self-joined on the centre, counted per pair."""
+    rays = sym.selectExpr("d AS n", "s AS a")
+    if weights is not None:
+        rays = rays.join(weights, "n")
+    wedges = rays.alias("l").join(rays.selectExpr("n", "a AS b").alias("r"), "n").filter("a < b")
+    return (
+        wedges.groupBy("a", "b")
+        .agg(F.expr("CAST(count(1) AS BIGINT) AS n_common"), *scores)
+        .filter(f"n_common >= {int(min_common)}")
+    )
+
+
+def _flag_linked(pairs: DataFrame, sym: DataFrame, *cols: str) -> DataFrame:
+    """``(node_a, node_b, *cols, already_linked)``: ``already_linked`` is
+    1 where the pair ``(a, b)`` is itself an edge of ``sym``, else 0."""
+    linked = _undirected(sym, "s", "d").selectExpr("u AS a", "v AS b", "1 AS already_linked")
+    return pairs.join(linked, ["a", "b"], "left").selectExpr(
+        "a AS node_a", "b AS node_b", *cols, "coalesce(already_linked, 0) AS already_linked"
+    )
 
 
 def connected_components(
@@ -51,7 +128,9 @@ def connected_components(
     cluster_id is the minimum node id reachable from ``id``.
 
     Only nodes that appear in at least one edge are returned
-    (singletons have no duplicates to cluster).
+    (singletons have no duplicates to cluster); self-loops and edges
+    with a NULL endpoint are dropped first, as in
+    :func:`connected_components_two_phase`, so both return the same rows.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass without
     convergence (a silently-truncated propagation would return WRONG
@@ -70,10 +149,8 @@ def connected_components(
     (s3a://, hdfs://) on a real cluster.
     """
     rounds = Rounds(pairs.sparkSession, "labels", journal_dir)
-    fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    rev = pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    edges = rounds.once("edges", fwd.unionByName(rev).distinct())
-    init = edges.select(F.col("a").alias("id")).distinct().select(
+    edges = rounds.once("edges", _sym_edges(pairs, src, dst))
+    init = edges.select(F.col("s").alias("id")).distinct().select(
         "id", F.col("id").alias("label"), F.lit(True).alias("chg")
     )
     rnd, labels = rounds.resume(max_iter, init)
@@ -84,9 +161,9 @@ def connected_components(
         cur = labels.drop("chg")
         nbr_min = (
             edges.join(
-                cur.select(F.col("id").alias("b"), F.col("label").alias("nbr_label")), "b"
+                cur.select(F.col("id").alias("d"), F.col("label").alias("nbr_label")), "d"
             )
-            .groupBy("a")
+            .groupBy("s")
             .agg(F.min("nbr_label").alias("min_nbr"))
         )
         # the chg flag rides along in the SAME join pass that produces
@@ -94,7 +171,7 @@ def connected_components(
         # count below reads its blocks (no second join job).
         labels = rounds.cut(
             rnd,
-            cur.join(nbr_min, cur.id == nbr_min.a, "left").select(
+            cur.join(nbr_min, cur.id == nbr_min.s, "left").select(
                 cur.id,
                 F.least(cur.label, F.coalesce(F.col("min_nbr"), cur.label)).alias("label"),
                 (F.coalesce(F.col("min_nbr"), cur.label) < cur.label).alias("chg"),
@@ -136,14 +213,7 @@ def connected_components_two_phase(
 
     Output schema matches ``connected_components``: (doc_id, cluster_id).
     """
-    edges = (
-        pairs.select(
-            F.least(F.col(src), F.col(dst)).alias("u"), F.greatest(F.col(src), F.col(dst)).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    edges = materialize_once(edges)
+    edges = materialize_once(_undirected(pairs, src, dst))
     all_nodes = materialize_once(
         edges.select(F.col("u").alias("id"))
         .unionByName(edges.select(F.col("v").alias("id")))
@@ -174,11 +244,7 @@ def connected_components_two_phase(
             out = joined.filter(F.col("nbr") <= F.col("x")).select(
                 F.col("nbr").alias("a"), F.col("m").alias("b")
             ).unionByName(joined.select(F.col("x").alias("a"), F.col("m").alias("b")))
-        return (
-            out.filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .distinct()
-        )
+        return _undirected(out, "a", "b")
 
     prev = _digest(edges)
     prev_ckpt = edges
@@ -229,19 +295,27 @@ def triangle_count(
 
     Returns one row: (n_nodes, n_edges, n_triangles).
     """
+    return _triangle_counts(pairs, src, dst)
+
+
+def _triangle_counts(pairs: DataFrame, src: str, dst: str, wedges: bool = False) -> DataFrame:
+    """One row ``(n_nodes, n_edges, n_triangles[, wedges])`` WITHOUT
+    joining 1-row frames (a join would plan a nested loop): each count
+    source is tagged, unioned and conditional-aggregated once.
+    ``wedges`` is the exact BIGINT Σᵥ deg(v)(deg(v)−1)/2."""
     e, deg, closed = _edges_degrees_triangles(pairs, src, dst)
-    # one-row summary WITHOUT joining 1-row frames (a join would plan
-    # a nested loop): tag each count source and conditional-aggregate
-    tagged = (
-        deg.select(F.lit("node").alias("kind"))
-        .unionByName(e.select(F.lit("edge").alias("kind")))
-        .unionByName(closed.select(F.lit("tri").alias("kind")))
+    wedge = [("wedge", deg, "(deg * (deg - 1)) div 2")] if wedges else []
+    branches = [("node", deg, "1"), *wedge, ("edge", e, "1"), ("tri", closed, "1")]
+    tagged = reduce(
+        DataFrame.unionByName,
+        (df.selectExpr(f"'{k}' AS kind", f"CAST({v} AS BIGINT) AS val") for k, df, v in branches),
     )
-    return tagged.agg(
-        F.count(F.when(F.col("kind") == "node", 1)).alias("n_nodes"),
-        F.count(F.when(F.col("kind") == "edge", 1)).alias("n_edges"),
-        F.count(F.when(F.col("kind") == "tri", 1)).alias("n_triangles"),
-    )
+    counts = [
+        f"count(CASE WHEN kind = '{k}' THEN 1 END) AS n_{name}"
+        for k, name in (("node", "nodes"), ("edge", "edges"), ("tri", "triangles"))
+    ]
+    wedge_sum = "CAST(coalesce(sum(CASE WHEN kind = 'wedge' THEN val END), 0) AS BIGINT) AS wedges"
+    return tagged.selectExpr(*counts, *([wedge_sum] if wedges else []))
 
 
 def _edges_degrees_triangles(pairs: DataFrame, src: str, dst: str):
@@ -249,17 +323,12 @@ def _edges_degrees_triangles(pairs: DataFrame, src: str, dst: str):
     edge set, per-node degrees, and the closed-wedge (triangle) rows —
     each triangle appears exactly once.  See :func:`triangle_count`
     for the orientation argument (out-degree capped at O(sqrt(m)))."""
-    e = (
-        pairs.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
     # the edge set feeds the degree build, the orientation join, the
     # wedge-closing semi-join and the summary union — and the PAIRS
     # input is usually itself an LSH/minhash pipeline; materialize both
     # bounded frames once so none of those branches re-derives them
     # (scan_multiplicity counted 28 corpus scans here before this)
-    e = materialize_once(e)
+    e = materialize_once(_undirected(pairs, src, dst))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -267,10 +336,7 @@ def _edges_degrees_triangles(pairs: DataFrame, src: str, dst: str):
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     deg = materialize_once(deg)
-    ed = (
-        e.join(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")), "u")
-        .join(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")), "v")
-    )
+    ed = _attach_both(e, deg, "node", "deg", "d")
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
@@ -279,11 +345,9 @@ def _edges_degrees_triangles(pairs: DataFrame, src: str, dst: str):
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
     )
     o2 = oriented.select(F.col("a").alias("a2"), F.col("b").alias("c"))
-    wedges = (
-        oriented.join(o2, (F.col("a") == F.col("a2")) & (F.col("b") < F.col("c")))
-        .select(
-            F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")
-        )
+    # b < c, so (b, c) is already the canonical (u, v) of the closing edge
+    wedges = oriented.join(o2, (F.col("a") == F.col("a2")) & (F.col("b") < F.col("c"))).select(
+        F.col("b").alias("u"), F.col("c").alias("v")
     )
     closed = wedges.join(e, ["u", "v"], "left_semi")
     return e, deg, closed
@@ -311,42 +375,10 @@ def clustering_coefficient(
     Returns one row ``(n_nodes, n_edges, n_triangles, wedges,
     global_cc)``.
     """
-    e, deg, closed = _edges_degrees_triangles(pairs, src, dst)
-    wedge_mass = F.expr("(deg * (deg - 1)) div 2").cast("long")
-    tagged = (
-        deg.select(F.lit("node").alias("kind"), F.lit(1).cast("long").alias("val"))
-        .unionByName(
-            deg.select(F.lit("wedge").alias("kind"), wedge_mass.alias("val"))
-        )
-        .unionByName(
-            e.select(F.lit("edge").alias("kind"), F.lit(1).cast("long").alias("val"))
-        )
-        .unionByName(
-            closed.select(
-                F.lit("tri").alias("kind"), F.lit(1).cast("long").alias("val")
-            )
-        )
-    )
-    g = tagged.agg(
-        F.count(F.when(F.col("kind") == "node", 1)).cast("long").alias("n_nodes"),
-        F.count(F.when(F.col("kind") == "edge", 1)).cast("long").alias("n_edges"),
-        F.count(F.when(F.col("kind") == "tri", 1)).cast("long").alias("n_triangles"),
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "wedge", F.col("val"))), F.lit(0)
-        ).cast("long").alias("wedges"),
-    )
-    return g.select(
-        "n_nodes",
-        "n_edges",
-        "n_triangles",
-        "wedges",
-        F.round(
-            F.try_divide(
-                3.0 * F.col("n_triangles").cast("double"),
-                F.nullif(F.col("wedges").cast("double"), F.lit(0.0)),
-            ),
-            6,
-        ).alias("global_cc"),
+    return _triangle_counts(pairs, src, dst, wedges=True).selectExpr(
+        "*",
+        "round(try_divide(CAST(n_triangles AS DOUBLE) * 3.0D,"
+        " nullif(CAST(wedges AS DOUBLE), 0.0D)), 6) AS global_cc",
     )
 
 
@@ -377,12 +409,7 @@ def bfs_hops(
     # materialize the (possibly expensive) edge derivation ONCE —
     # every round re-references `edges`, and without truncation each
     # round's lazy plan would re-run the upstream pair pipeline.
-    edges = materialize_once(
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    edges = materialize_once(_sym_edges(pairs, src, dst))
     seed_col = seeds.columns[0]
     seen = seeds.select(F.col(seed_col).alias("node")).distinct().withColumn(
         "hops", F.lit(0)
@@ -390,8 +417,8 @@ def bfs_hops(
     frontier = seen.select("node")
     for h in range(1, max_hops + 1):
         nbrs = (
-            frontier.join(edges, frontier["node"] == edges["u"])
-            .select(F.col("v").alias("node"))
+            frontier.join(edges, frontier["node"] == edges["s"])
+            .select(F.col("d").alias("node"))
             .distinct()
         )
         # truncate the (small) frontier each round: `seen` and `new`
@@ -445,13 +472,7 @@ def pagerank(
     Returns ``node, rank_micro (bigint), pr (double, 6dp)``.
     """
     rounds = Rounds(pairs.sparkSession, "ranks", journal_dir)
-    sym = rounds.once(
-        "edges",
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct(),
-    )
+    sym = rounds.once("edges", _sym_edges(pairs, src, dst))
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n"))
     # init + teleport are integer functions of N, broadcast as a
@@ -524,12 +545,7 @@ def label_propagation(
 
     Returns ``node, label`` for every node with at least one edge.
     """
-    edges = materialize_once(
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    edges = materialize_once(_sym_edges(pairs, src, dst))
     labels = edges.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -580,12 +596,7 @@ def kcore_peel(
     Returns ``node, core_deg`` for nodes still present after
     ``rounds`` peels, with their degree in the surviving subgraph.
     """
-    edges = materialize_once(
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    edges = materialize_once(_sym_edges(pairs, src, dst))
     for _ in range(rounds):
         deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
         keep = deg.filter(F.col("c") >= k).select("s")
@@ -625,50 +636,19 @@ def common_neighbors(
     in dedup graphs because LSH bucket caps bound degrees; the final
     groupBy(a,b) is partial-agged.  No all-pairs space.
     """
-    sym = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
     # consumed by degrees, both wedge-ray branches and the edge set —
     # materialize once (the pairs input is an LSH pipeline upstream)
-    sym = materialize_once(sym)
-    deg = sym.groupBy("d").agg(F.count(F.lit(1)).alias("deg"))
+    sym = materialize_once(_sym_edges(pairs, src, dst))
     # per-center micro contribution, attached once to the (n -> a) rays
-    rays = sym.select(F.col("d").alias("n"), F.col("s").alias("a")).join(
-        deg.select(
-            F.col("d").alias("n"),
-            F.when(
-                F.col("deg") >= 2,
-                F.round(1e6 / F.log(F.col("deg").cast("double"))).cast("long"),
-            )
-            .otherwise(F.lit(0))
-            .alias("aa_micro"),
-        ),
-        "n",
+    aa = sym.groupBy("d").agg(F.count(F.lit(1)).alias("deg")).selectExpr(
+        "d AS n",
+        "CASE WHEN deg >= 2 THEN CAST(round(1000000.0D / ln(CAST(deg AS DOUBLE))) AS BIGINT)"
+        " ELSE 0 END AS aa_micro",
     )
-    wedges = (
-        rays.alias("l")
-        .join(
-            rays.select(F.col("n"), F.col("a").alias("b")).alias("r"), "n"
-        )
-        .filter(F.col("a") < F.col("b"))
+    scored = _wedge_pairs(
+        sym, min_common, F.expr("round(sum(aa_micro) / 1000000.0D, 6) AS adamic_adar"), weights=aa
     )
-    scored = wedges.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_common"),
-        F.round(F.sum("aa_micro") / 1e6, 6).alias("adamic_adar"),
-    ).filter(F.col("n_common") >= min_common)
-    edge_set = sym.select(
-        F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
-    ).distinct().withColumn("already_linked", F.lit(1))
-    return scored.join(edge_set, ["a", "b"], "left").select(
-        F.col("a").alias("node_a"),
-        F.col("b").alias("node_b"),
-        "n_common",
-        "adamic_adar",
-        F.coalesce("already_linked", F.lit(0)).alias("already_linked"),
-    )
+    return _flag_linked(scored, sym, "n_common", "adamic_adar")
 
 
 def degree_histogram(
@@ -688,14 +668,8 @@ def degree_histogram(
     of integers — nothing here grows with edge payload width, so the
     100 TB shape is the classic two-round MapReduce degree count.
     """
-    sym = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if not directed:
-        sym = sym.unionByName(
-            edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-        )
     deg = (
-        sym.filter(F.col("s") != F.col("d"))
-        .distinct()
+        _sym_edges(edges, src, dst, directed)
         .groupBy("s")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
@@ -734,48 +708,26 @@ def assortativity(
     # two orientation projections of the old unionByName).  Degrees
     # come from one explode of both ends; all sums are exact BIGINTs,
     # bit-identical to the symmetrized form in any order.
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e = materialize_once(e)
+    e = materialize_once(_undirected(edges, src, dst))
     deg = (
-        e.select(F.explode(F.array("a", "b")).alias("u"))
-        .groupBy("u")
+        e.select(F.explode(F.array("u", "v")).alias("node"))
+        .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
-    pairs = (
-        e.join(deg.select(F.col("u").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("u").alias("b"), F.col("deg").alias("db")), "b")
-        .select("da", "db")
+    s = _attach_both(e, deg, "node", "deg", "d").selectExpr(
+        "CAST(count(1) * 2 AS BIGINT) AS n",
+        "CAST(sum(du + dv) AS BIGINT) AS sx",
+        "CAST(sum(du + dv) AS BIGINT) AS sy",
+        "CAST(sum(du * dv) * 2 AS BIGINT) AS sxy",
+        "CAST(sum(du * du + dv * dv) AS BIGINT) AS sxx",
+        "CAST(sum(du * du + dv * dv) AS BIGINT) AS syy",
     )
-    s = pairs.agg(
-        (F.count(F.lit(1)) * 2).cast("long").alias("n"),
-        F.sum(F.col("da") + F.col("db")).cast("long").alias("sx"),
-        F.sum(F.col("da") + F.col("db")).cast("long").alias("sy"),
-        (F.sum(F.col("da") * F.col("db")) * 2).cast("long").alias("sxy"),
-        F.sum(F.col("da") * F.col("da") + F.col("db") * F.col("db"))
-        .cast("long")
-        .alias("sxx"),
-        F.sum(F.col("da") * F.col("da") + F.col("db") * F.col("db"))
-        .cast("long")
-        .alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    cov = F.col("sxy") * n - sx * sy
-    varx = F.col("sxx") * n - sx * sx
-    vary = F.col("syy") * n - sy * sy
     # try_divide: a degree-regular graph has zero degree variance —
     # the coefficient is undefined (NULL), not an ANSI error
-    return s.select(
-        F.col("n").alias("n_edge_ends"),
-        F.round(
-            F.try_divide(cov, F.sqrt(varx.cast("double") * vary.cast("double"))), 6
-        ).alias("assortativity"),
+    return s.selectExpr(
+        "n AS n_edge_ends",
+        "round(try_divide(sxy * n - sx * sy, sqrt(CAST(sxx * n - sx * sx AS DOUBLE)"
+        " * CAST(syy * n - sy * sy AS DOUBLE))), 6) AS assortativity",
     )
 
 
@@ -831,11 +783,7 @@ def boruvka_msf(
     prev_comp_ckpt = None
     converged = False
     for _ in range(max_iter):
-        lab = (
-            e.join(comp.select(F.col("id").alias("a"), F.col("c").alias("ca")), "a")
-            .join(comp.select(F.col("id").alias("b"), F.col("c").alias("cb")), "b")
-            .filter(F.col("ca") != F.col("cb"))
-        )
+        lab = _attach_both(e, comp, "id", "c", "c", ("a", "b")).filter("ca != cb")
         # each cross edge offers itself to BOTH endpoint components
         offers = lab.select(F.col("ca").alias("comp"), "w", "a", "b").unionByName(
             lab.select(F.col("cb").alias("comp"), "w", "a", "b")
@@ -867,11 +815,7 @@ def boruvka_msf(
         # Θ(|components|) (monotone weights elect a chain), so the
         # contraction uses the two-phase star CC: O(log²) rounds
         # regardless of chain length.
-        comp_edges = (
-            elected.join(comp.select(F.col("id").alias("a"), F.col("c").alias("ca")), "a")
-            .join(comp.select(F.col("id").alias("b"), F.col("c").alias("cb")), "b")
-            .select("ca", "cb")
-        )
+        comp_edges = _attach_both(elected, comp, "id", "c", "c", ("a", "b")).select("ca", "cb")
         merged = connected_components_two_phase(comp_edges, src="ca", dst="cb")
         new_comp = materialize_once(
             comp.join(
@@ -893,11 +837,7 @@ def boruvka_msf(
         # max_iter exhausted without an empty election round: a
         # silently partial forest is corruption, not a result — verify
         # no cross-component edges remain, else fail loudly.
-        remaining = (
-            e.join(comp.select(F.col("id").alias("a"), F.col("c").alias("ca")), "a")
-            .join(comp.select(F.col("id").alias("b"), F.col("c").alias("cb")), "b")
-            .filter(F.col("ca") != F.col("cb"))
-        )
+        remaining = _attach_both(e, comp, "id", "c", "c", ("a", "b")).filter("ca != cb")
         if not remaining.isEmpty():
             raise RuntimeError(
                 f"boruvka_msf did not converge in max_iter={max_iter} rounds "
@@ -944,43 +884,18 @@ def neighborhood_jaccard(
     table against the node-domain degree table (hit twice via the
     a-key and b-key join, both key-partitioned).  No all-pairs space.
     """
-    sym = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
     # consumed by degrees, both wedge-ray branches and the edge set —
     # materialize once (the pairs input is an LSH pipeline upstream)
-    sym = materialize_once(sym)
+    sym = materialize_once(_sym_edges(pairs, src, dst))
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    rays = sym.select(F.col("d").alias("n"), F.col("s").alias("a"))
-    wedges = (
-        rays.alias("l")
-        .join(rays.select(F.col("n"), F.col("a").alias("b")).alias("r"), "n")
-        .filter(F.col("a") < F.col("b"))
-    )
-    common = wedges.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_common")
-    ).filter(F.col("n_common") >= min_common)
-    scored = (
-        common.join(deg.select(F.col("s").alias("a"), F.col("deg").alias("deg_a")), "a")
-        .join(deg.select(F.col("s").alias("b"), F.col("deg").alias("deg_b")), "b")
-    )
-    edge_set = sym.select(
-        F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
-    ).distinct().withColumn("already_linked", F.lit(1))
-    union_sz = F.col("deg_a") + F.col("deg_b") - F.col("n_common")
-    return scored.join(edge_set, ["a", "b"], "left").select(
-        F.col("a").alias("node_a"),
-        F.col("b").alias("node_b"),
+    scored = _attach_both(_wedge_pairs(sym, min_common), deg, "s", "deg", "deg_", ("a", "b"))
+    return _flag_linked(
+        scored,
+        sym,
         "n_common",
         "deg_a",
         "deg_b",
-        F.round(
-            F.col("n_common").cast("double") / union_sz.cast("double"), 6
-        ).alias("jaccard"),
-        F.coalesce("already_linked", F.lit(0)).alias("already_linked"),
+        "round(CAST(n_common AS DOUBLE) / CAST(deg_a + deg_b - n_common AS DOUBLE), 6) AS jaccard",
     )
 
 
@@ -1019,21 +934,10 @@ def modularity(
     q_c)`` ordered by community, where sum(q_c) is the partition's
     modularity.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
     cmap = communities.select(
         F.col(node).alias("nid"), F.col(comm).alias("c")
     ).distinct()
-    tagged = (
-        und.join(cmap.select(F.col("nid").alias("u"), F.col("c").alias("cu")), "u")
-        .join(cmap.select(F.col("nid").alias("v"), F.col("c").alias("cv")), "v")
-    )
+    tagged = _attach_both(_undirected(edges, src, dst), cmap, "nid", "c", "c")
     ii = (F.col("cu") == F.col("cv")).cast("long")
     ends = tagged.select(
         F.explode(

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapreduce_faultolerrant_localityaware_spark.operators import dedup, relational, textstats
+from mapreduce_faultolerrant_localityaware_spark.operators import dedup, graph, relational, textstats
 from mapreduce_faultolerrant_localityaware_spark.operators.wordcount import wordcount_from_text
 
 _SCHEMA = T.StructType(
@@ -305,3 +305,51 @@ def test_tokens_of_any_column_name(spark, name):
         got = [r[0] for r in odd.select(tokens(name, lowercase)).collect()]
         assert got == plain
     assert plain[0] == ["don", "t", "stop", "nd", "più"] and plain[1] == [] and plain[2] is None
+
+
+@pytest.mark.parametrize("edges", [[(1, 1), (2, 3)], [(None, 4), (2, 3)]], ids=["loop", "null"])
+def test_connected_components_variants_agree(spark, edges):
+    # both drop self-loops and NULL endpoints, so a node reached only
+    # through one is not clustered by either
+    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+    one = sorted(tuple(r) for r in graph.connected_components(df).collect())
+    two = sorted(tuple(r) for r in graph.connected_components_two_phase(df).collect())
+    assert one == two == [(2, 2), (3, 2)]
+
+
+# two triangles joined by a bridge, a pendant and a separate edge;
+# weights are distinct so the spanning forest is unique
+_GRAPH = [(1, 2, 4), (2, 3, 2), (1, 3, 7), (3, 4, 1), (4, 5, 5), (5, 6, 3), (6, 4, 6),
+          (6, 7, 8), (8, 9, 9)]
+# the same graph once more: reversed copies, exact duplicates and
+# self-loops on nodes that already have an edge
+_NOISY = (_GRAPH + [(d, s, w) for s, d, w in _GRAPH[::2]] + _GRAPH[1::3]
+          + [(1, 1, 0), (4, 4, 0), (9, 9, 0)])
+_UNDIRECTED_OPS = {
+    "connected_components": lambda e: graph.connected_components(e, "src", "dst"),
+    "connected_components_two_phase": (
+        lambda e: graph.connected_components_two_phase(e, "src", "dst")),
+    "triangle_count": lambda e: graph.triangle_count(e, "src", "dst"),
+    "clustering_coefficient": lambda e: graph.clustering_coefficient(e, "src", "dst"),
+    "bfs_hops": lambda e: graph.bfs_hops(
+        e, e.sparkSession.range(1, 2), max_hops=3, src="src", dst="dst"),
+    "pagerank": lambda e: graph.pagerank(e, iters=5, src="src", dst="dst"),
+    "label_propagation": lambda e: graph.label_propagation(e, rounds=3, src="src", dst="dst"),
+    "kcore_peel": lambda e: graph.kcore_peel(e, k=2, rounds=4, src="src", dst="dst"),
+    "common_neighbors": lambda e: graph.common_neighbors(e, "src", "dst"),
+    "neighborhood_jaccard": lambda e: graph.neighborhood_jaccard(e, "src", "dst"),
+    "degree_histogram": lambda e: graph.degree_histogram(e, "src", "dst"),
+    "assortativity": lambda e: graph.assortativity(e, "src", "dst"),
+    "boruvka_msf": lambda e: graph.boruvka_msf(e, "src", "dst", "w"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_UNDIRECTED_OPS))
+def test_graph_ops_ignore_orientation_duplicates_and_loops(spark, op):
+    def rows(edges):
+        df = spark.createDataFrame(edges, "src bigint, dst bigint, w bigint")
+        return sorted(tuple(r) for r in _UNDIRECTED_OPS[op](df).collect())
+
+    clean = rows(_GRAPH)
+    assert clean
+    assert rows(_NOISY) == clean

@@ -4,10 +4,26 @@ so that two dumps of the same query — from two commits, two sessions
 or two scale factors of the same shape — diff to nothing and a diff
 shows only a real change of plan, result or construction cost.
 
-Each file holds the plan followed by two lines:
+Each file holds the plan, then the plan of every frame the query cut
+while it was built (an eager ``materialize_once``: a checkpoint in a
+graph round loop, a multi-consumer frame), each under a
+``== cut <i> ==`` header in cut order, then two lines:
 
     rows=<n> sha1=<digest of the sorted row reprs>
     py4j=<non-"m" py4j commands of a second construction>
+
+A cut's consumers read its checkpointed blocks, so the final plan
+shows only a scan of the checkpointed RDD where the cut frame's stages
+were; without the cut plans a change to those stages would diff
+clean.  The cuts are recorded by wrapping ``materialize_once`` in
+every package module during the first construction only (every
+module-level name bound to it is rebound, as ``perfbench/tracing.py``
+does), so ``py4j`` still counts the query alone.
+
+A query whose construction or collection raises (an unknown name
+included) gets a file holding one ``error=<type>: <message>`` line
+(the message's first line); the tool goes on with the next query and
+exits 1 at the end.
 
 ``py4j`` counts the commands Python sends to the JVM while the
 query's ``_q_`` function runs a second time in the warm session (the
@@ -151,7 +167,58 @@ class _Py4jCounter:
         return self.n
 
 
-def main() -> None:
+class _CutRecorder:
+    """Collects the normalised plan of every frame ``materialize_once``
+    cuts while recording; the wrapper is bound in every package module
+    only for the duration of :meth:`record`."""
+
+    def __init__(self, mode) -> None:
+        from mapreduce_faultolerrant_localityaware_spark.operators import _materialize
+
+        self.mode, self.plans = mode, []
+        self.orig = _materialize.materialize_once
+
+        def materialize_once(df, *args, **kwargs):
+            self.plans.append(self.explain(df))
+            return self.orig(df, *args, **kwargs)
+
+        self.wrapper = materialize_once
+
+    def explain(self, df) -> str:
+        return normalise(df._jdf.queryExecution().explainString(self.mode))
+
+    @staticmethod
+    def _rebind(old, new) -> None:
+        pkg = "mapreduce_faultolerrant_localityaware_spark"
+        for name, mod in list(sys.modules.items()):
+            if mod is None or not (name.startswith(pkg) or name == "__spark_entry__"):
+                continue
+            for attr, val in list(vars(mod).items()):
+                if val is old:
+                    setattr(mod, attr, new)
+
+    def record(self, fn):
+        self.plans = []
+        self._rebind(self.orig, self.wrapper)
+        try:
+            return fn()
+        finally:
+            self._rebind(self.wrapper, self.orig)
+
+
+def _dump(spark, qs, name, sf_dir, py4j, cuts) -> str:
+    """The dump file's text for query ``name``."""
+    df = cuts.record(lambda: qs[name](spark, sf_dir))
+    text = cuts.explain(df)
+    for i, plan in enumerate(cuts.plans, 1):
+        text += f"\n== cut {i} ==\n{plan}"
+    rows = sorted(repr(r) for r in df.collect())
+    digest = hashlib.sha1("\n".join(rows).encode()).hexdigest()
+    calls = py4j.count(lambda: qs[name](spark, sf_dir))
+    return text + f"\nrows={len(rows)} sha1={digest}\npy4j={calls}\n"
+
+
+def main() -> int:
     import __spark_entry__ as entry_mod
     from mapreduce_faultolerrant_localityaware_spark.session import get_spark
 
@@ -161,22 +228,25 @@ def main() -> None:
     spark = get_spark("dump-named-plans")
     py4j = _Py4jCounter(spark)
     qs = entry_mod.queries()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
+    cuts = _CutRecorder(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+    failed = 0
     for name in names:
-        df = qs[name](spark, sf_dir)
-        plan = normalise(df._jdf.queryExecution().explainString(mode))
-        rows = sorted(repr(r) for r in df.collect())
-        digest = hashlib.sha1("\n".join(rows).encode()).hexdigest()
-        calls = py4j.count(lambda: qs[name](spark, sf_dir))
+        try:
+            text = _dump(spark, qs, name, sf_dir, py4j, cuts)
+        except Exception as exc:  # noqa: BLE001 — recorded, then the next query
+            failed += 1
+            msg = (str(exc).strip().splitlines() or [""])[0]
+            text = f"error={type(exc).__name__}: {msg}\n"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
-            fh.write(f"\nrows={len(rows)} sha1={digest}\npy4j={calls}\n")
-        print(f"wrote {path} ({len(plan.splitlines())} plan lines, "
-              f"rows={len(rows)}, py4j={calls})")
+            fh.write(text)
+        print(f"wrote {path} ({len(text.splitlines())} lines, {text.splitlines()[-1]})")
+    if failed:
+        print(f"{failed} of {len(names)} queries failed", file=sys.stderr)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
