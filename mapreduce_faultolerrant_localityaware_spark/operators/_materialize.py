@@ -32,7 +32,7 @@ form is 20–25 % faster end to end (roc_auc 1.88→1.47 s, kruskal_wallis
 action (js_divergence's rollup collect), which writes the blocks
 without a race.  Builders that time ``query_fn(spark, sf)`` still
 charge all the work to the query; plan-only tools (pin_exchanges,
-dump_plans) execute these small subtrees at the test SF.
+dump_named_plans) execute these small subtrees at the test SF.
 
 Reliable checkpoint when the session has a checkpoint dir (blocks are
 files on shared storage and survive executor death), localCheckpoint

@@ -30,7 +30,7 @@ checkpointed blocks, never a second join against the previous state).
 Every operator reads its edge list through the same few stages, each
 written once below as one SQL parse (the MapReduce edge-list rounds
 of connected components, triangles and degree statistics):
-``_sym_edges`` (both directions of each non-loop edge, once),
+``_sym_edges`` (each non-loop edge once per direction, in one pass),
 ``_undirected`` (the canonical ``u < v`` edge), ``_attach_both`` (a
 per-node value joined onto both endpoints), ``_wedge_pairs`` +
 ``_flag_linked`` (the common-neighbour pairs of the link predictors)
@@ -60,9 +60,14 @@ def _sym_edges(pairs: DataFrame, src: str, dst: str, directed: bool = False) -> 
     """``(s, d)``: each non-loop edge once per direction (once in all if
     ``directed``); self-loops and NULL endpoints are dropped."""
     s, d = _quoted(src), _quoted(dst)
-    out = pairs.selectExpr(f"{s} AS s", f"{d} AS d")
-    if not directed:
-        out = out.unionByName(pairs.selectExpr(f"{d} AS s", f"{s} AS d"))
+    if directed:
+        out = pairs.selectExpr(f"{s} AS s", f"{d} AS d")
+    else:
+        # both orientations from one pass over ``pairs`` (a union of two
+        # projections would plan the whole upstream twice)
+        out = pairs.selectExpr(
+            f"inline(array(struct({s} AS s, {d} AS d), struct({d} AS s, {s} AS d)))"
+        )
     # the filter after the distinct: between the two it would keep the
     # optimizer from merging an upstream distinct union (the MinHash
     # candidates) into this one, a shuffle more; it is pushed down anyway

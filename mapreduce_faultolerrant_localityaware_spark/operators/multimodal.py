@@ -3,8 +3,8 @@ columns with typed metadata, processed via Arrow-batched Pandas UDFs
 (``mapInPandas``).
 
 The container has no image/audio codecs, so the DECODE step is
-stubbed: ``decode_image_stub`` produces a deterministic fake feature
-vector from the bytes (sha256-seeded) and the real-codec path raises
+stubbed: ``_stub_from_digest`` produces a deterministic fake feature
+vector from the bytes' sha256 and the real-codec path raises
 NotImplementedError behind ``use_real_codecs=True``.  Everything
 around the stub — schema, batch iteration, partition-parallel
 execution, output typing — is the real Spark plumbing a production
@@ -60,18 +60,12 @@ def attach_media_meta(df: DataFrame, blob_col: str = "blob", id_col: str = "medi
     )
 
 
-def decode_image_stub(data: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic fake decode: sha256-derived (width, height,
-    FEATURE_DIM floats in [0,1)).  Stands in for PIL/libjpeg — the
-    real implementation swaps ONLY this function.
-    """
-    return _stub_from_digest(hashlib.sha256(data).digest())
-
-
 def _stub_from_digest(digest: bytes) -> tuple[int, int, list[float]]:
-    """Stub decode from an already-computed sha256 digest — lets
-    :func:`decode_media` hash each payload ONCE for both the decode
-    and the sha256 metadata column (round 12)."""
+    """Deterministic fake decode from a payload's sha256 digest:
+    (width, height, FEATURE_DIM floats in [0,1)).  Stands in for
+    PIL/libjpeg — the real implementation swaps ONLY this function;
+    :func:`decode_media` hashes each payload once for both this and
+    the sha256 metadata column."""
     width = 64 + digest[0] % 192
     height = 64 + digest[1] % 192
     # round k/65536 to 6 dp HALF-UP via exact integer arithmetic:
@@ -104,14 +98,10 @@ def decode_media(
     cols = [f.name for f in DECODED_SCHEMA.fields]
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # columnar batch assembly + ONE sha256 per blob (round 12,
-        # guide §4.2): the row-dict form hashed each payload twice —
-        # once inside decode_image_stub and once for the hex digest,
-        # the same digest — and paid pandas' list-of-dicts row
-        # materialization per batch.  decode_image_stub itself is
-        # unchanged (its digest-derived arithmetic is the oracle
-        # contract); only the duplicate hash and the per-row dict
-        # plumbing are gone.
+        # columnar batch assembly + ONE sha256 per blob: the digest
+        # feeds both the stub decode (its digest-derived arithmetic is
+        # the oracle contract) and the hex sha256 column, with no
+        # per-row dict materialization.
         for pdf in batches:
             ids, types, lens, shas, ws, hs, fs = [], [], [], [], [], [], []
             for mid, blob in zip(pdf[id_col], pdf[blob_col]):
@@ -165,7 +155,7 @@ def resize_media(
     """Resize step over DECODED media: rescale the feature vector by
     the area ratio target/(width·height) — the deterministic stand-in
     for a real bilinear resample (which would swap only the per-row
-    kernel, exactly like ``decode_image_stub``).
+    kernel, exactly like ``_stub_from_digest``).
 
     Runs entirely JVM-side on the decode output (higher-order array
     transform, codegen'd): the Python/Arrow boundary is crossed once at

@@ -1,8 +1,11 @@
 """Dump ``explain("formatted")`` for named queries to files, with the
 per-run ids normalised, plus each query's rows and construction cost,
-so that two dumps of the same query — from two commits, two sessions
-or two scale factors of the same shape — diff to nothing and a diff
-shows only a real change of plan, result or construction cost.
+so that two dumps of the same query — from two commits, two sessions,
+two hosts or two scale factors of the same shape — diff to nothing and
+a diff shows only a real change of plan, result or construction cost.
+``--ledger`` writes the same record for every ``bench.HEADLINE`` query
+as one JSON file, the committed ``tests/ledger_sf0.001.json`` that
+``tests/test_ledger.py`` rebuilds and compares.
 
 Each file holds the plan, then the plan of every frame the query cut
 while it was built (an eager ``materialize_once``: a checkpoint in a
@@ -10,7 +13,7 @@ graph round loop, a multi-consumer frame), each under a
 ``== cut <i> ==`` header in cut order, then two lines:
 
     rows=<n> sha1=<digest of the sorted row reprs>
-    py4j=<non-"m" py4j commands of a second construction>
+    py4j=<non-"m" py4j commands of a second construction> construct_jobs=<n>
 
 A cut's consumers read its checkpointed blocks, so the final plan
 shows only a scan of the checkpointed RDD where the cut frame's stages
@@ -29,14 +32,27 @@ exits 1 at the end.
 query's ``_q_`` function runs a second time in the warm session (the
 first construction pays one-off costs such as schema resolution);
 ``m`` commands (py4j object releases) follow the Python garbage
-collector, not the code, and are left out.  The digest hashes every collected
-row, so it also covers queries whose oracle check is rows-only.
+collector, not the code, and are left out.  ``construct_jobs`` counts
+the Spark jobs the first construction starts itself (its own job
+group, read from ``statusTracker()``): the eager ``materialize_once``
+barriers and driver collects.  The jobs adaptive execution submits for
+each query stage inside them are left out: how many it submits follows
+timing (a stage a sibling already runs is not submitted again; one
+graph query measured 173–175 with every plan the same).  The first
+construction also pays one-off jobs, so the count depends on the
+queries built before it in the process.  The digest hashes every
+collected row, so it also covers queries whose oracle check is
+rows-only.
 
+The session has 8 shuffle partitions (the test session's), whatever
+the core count, so the text does not depend on the host.
 Normalised: expression ids (``o_orderkey#123L`` → ``o_orderkey#_L``),
 RDD ids and creation sites (``MapPartitionsRDD[109] at localCheckpoint
 at NativeMethodAccessorImpl.java:0`` → ``MapPartitionsRDD[_] at
 localCheckpoint at _``; the site depends on what ran before), exchange
-plan ids (``[plan_id=42]`` → ``[plan_id=_]``), the scratch paths that
+plan ids (``[plan_id=42]`` → ``[plan_id=_]``), the round-robin
+partition count (``RoundRobinPartitioning(_)``: ``ensure_parallelism``
+sizes it from the core count), the scratch paths that
 sink round-trip and streaming queries write under
 (``sparkgraft_scratch_k3j9x2ab/stream-2`` →
 ``sparkgraft_scratch__/stream-_``: a per-process ``mkdtemp`` root and a
@@ -61,11 +77,25 @@ Two plan differences are not code changes:
   can follow the session's expression-id history, so a query dumped
   after a changed query may print a different Expand order than the
   same query dumped alone.  Re-dump such a query alone before calling
-  the difference a change.
+  the difference a change.  The ledger builds its queries in sorted
+  order in a fresh process, so its history is always the same.
+
+The ledger maps each headliner to ``plan_sha1`` (the sha1 of the
+plan-and-cuts text above), ``rows``, ``rows_sha1``, ``py4j`` and
+``construct_jobs``; wall times stay out, they are not deterministic.
+It is written only if every headliner builds and collects: on any
+error the tool names the failures, exits 1 and leaves PATH untouched.
+A change that moves a plan or a result re-pins the ledger with the
+command below and gives the reason in CHANGES.md, as a change to
+``tests/*_budget.json`` does; ``py4j`` and ``construct_jobs`` may fall
+without a re-pin.
 
 Usage: python tools/dump_named_plans.py OUT_DIR SUFFIX q1 q2 ...
        (files land at OUT_DIR/<q>_<SUFFIX>.txt; sf dir from
         $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.01)
+       python tools/dump_named_plans.py --ledger PATH
+       (sf dir as above; re-pin with $SPARK_GRAFT_SF_DIR set to the
+        sf0.001 test data and PATH tests/ledger_sf0.001.json)
 
 Compare two dumps with ``diff -r OLD_DIR NEW_DIR`` (same SUFFIX).
 """
@@ -73,6 +103,7 @@ Compare two dumps with ``diff -r OLD_DIR NEW_DIR`` (same SUFFIX).
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import sys
@@ -85,6 +116,7 @@ _IDS = (
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
     (re.compile(r"(RDD\[_\] at \w+ at )[^\s,]+:\d+"), r"\1_"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
+    (re.compile(r"RoundRobinPartitioning\(\d+\)"), "RoundRobinPartitioning(_)"),
     (re.compile(r"sparkgraft_scratch_\w+(/[\w.-]+?-)\d+"), r"sparkgraft_scratch__\1_"),
 )
 _COUNTERS = (
@@ -130,9 +162,9 @@ def _bind_lambdas(text: str, depth: int = 0) -> str:
 
 
 def normalise(plan: str) -> str:
-    """``plan`` with its per-run expression, RDD and plan ids blanked,
-    its lambda variables bound by position and its common-expression
-    aliases renumbered from 0."""
+    """``plan`` with its per-run expression, RDD and plan ids and its
+    round-robin partition count blanked, its lambda variables bound by
+    position and its common-expression aliases renumbered from 0."""
     plan = _bind_lambdas(plan)
     for pat, repl in _IDS:
         plan = pat.sub(repl, plan)
@@ -206,47 +238,112 @@ class _CutRecorder:
             self._rebind(self.wrapper, self.orig)
 
 
-def _dump(spark, qs, name, sf_dir, py4j, cuts) -> str:
-    """The dump file's text for query ``name``."""
-    df = cuts.record(lambda: qs[name](spark, sf_dir))
+#: the call site of the jobs adaptive execution submits from its own
+#: threads, one per query stage; how many it submits follows timing (a
+#: stage a sibling already runs is not submitted again)
+_AQE_SITE = "withThreadLocalCaptured"
+
+
+def _driver_jobs(sc, group: str) -> int:
+    """Jobs of ``group`` the driver code started itself (checkpoint
+    barriers, collects): a job's result stage has its highest stage id
+    and is named after the call that started the job."""
+    # job-start events reach statusTracker() through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st, n = sc.statusTracker(), 0
+    for jid in st.getJobIdsForGroup(group):
+        info = st.getJobInfo(jid)
+        stage = info and st.getStageInfo(max(info.stageIds))
+        n += bool(stage) and _AQE_SITE not in stage.name
+    return n
+
+
+def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
+    """Query ``name``'s plan-and-cuts text, rows, row digest, py4j calls
+    and construction jobs (those started under job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = cuts.record(lambda: qs[name](spark, sf_dir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = _driver_jobs(sc, group)
     text = cuts.explain(df)
     for i, plan in enumerate(cuts.plans, 1):
         text += f"\n== cut {i} ==\n{plan}"
     rows = sorted(repr(r) for r in df.collect())
-    digest = hashlib.sha1("\n".join(rows).encode()).hexdigest()
-    calls = py4j.count(lambda: qs[name](spark, sf_dir))
-    return text + f"\nrows={len(rows)} sha1={digest}\npy4j={calls}\n"
+    return {
+        "plan": text,
+        "rows": len(rows),
+        "rows_sha1": hashlib.sha1("\n".join(rows).encode()).hexdigest(),
+        "py4j": py4j.count(lambda: qs[name](spark, sf_dir)),
+        "construct_jobs": jobs,
+    }
+
+
+def _dump_text(rec: dict) -> str:
+    """The dump file's text for one :func:`_record`."""
+    return (
+        f"{rec['plan']}\nrows={rec['rows']} sha1={rec['rows_sha1']}\n"
+        f"py4j={rec['py4j']} construct_jobs={rec['construct_jobs']}\n"
+    )
+
+
+def _write_ledger(path: str, recs: dict) -> None:
+    """``recs`` as the ledger JSON, each plan text as its sha1."""
+    ledger = {
+        name: {k: v for k, v in rec.items() if k != "plan"}
+        | {"plan_sha1": hashlib.sha1(rec["plan"].encode()).hexdigest()}
+        for name, rec in recs.items()
+    }
+    with open(path, "w") as fh:
+        json.dump(ledger, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
 
 def main() -> int:
     import __spark_entry__ as entry_mod
+    from bench import HEADLINE
     from mapreduce_faultolerrant_localityaware_spark.session import get_spark
 
-    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    ledger = sys.argv[1] == "--ledger"
+    names = sorted(HEADLINE) if ledger else sys.argv[3:]
+    if not ledger:
+        out_dir, suffix = sys.argv[1], sys.argv[2]
+        os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump-named-plans")
+    spark = get_spark("dump-named-plans", shuffle_partitions=8)
     py4j = _Py4jCounter(spark)
     qs = entry_mod.queries()
     cuts = _CutRecorder(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-    failed = 0
-    for name in names:
+    recs, failed = {}, []
+    for i, name in enumerate(names):
         try:
-            text = _dump(spark, qs, name, sf_dir, py4j, cuts)
+            recs[name] = _record(spark, qs, name, sf_dir, py4j, cuts, f"dump-named-plans-{i}")
+            text = _dump_text(recs[name])
         except Exception as exc:  # noqa: BLE001 — recorded, then the next query
-            failed += 1
+            failed.append(name)
             msg = (str(exc).strip().splitlines() or [""])[0]
             text = f"error={type(exc).__name__}: {msg}\n"
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
+        if ledger:
+            print(f"{name}: {text.splitlines()[-1]}")
+            continue
+        out = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(out, "w") as fh:
             fh.write(text)
-        print(f"wrote {path} ({len(text.splitlines())} lines, {text.splitlines()[-1]})")
+        print(f"wrote {out} ({len(text.splitlines())} lines, {text.splitlines()[-1]})")
     if failed:
-        print(f"{failed} of {len(names)} queries failed", file=sys.stderr)
-    return 1 if failed else 0
-
+        print(f"{len(failed)} of {len(names)} queries failed: {' '.join(failed)}", file=sys.stderr)
+        if ledger:
+            print(f"{sys.argv[2]} left untouched", file=sys.stderr)
+        return 1
+    if ledger:
+        _write_ledger(sys.argv[2], recs)
+        print(f"wrote {sys.argv[2]} ({len(recs)} queries)")
+    return 0
 
 if __name__ == "__main__":
     sys.exit(main())
