@@ -7,9 +7,9 @@ Three uses share it:
   stage across plan branches — a frame consumed by k sibling branches
   (a scalar min/max attach, a cell totals aggregate, a join-back)
   compiles into k copies of its subtree, and the base table is SCANNED
-  k times per execution (tools/scan_multiplicity.py audits the whole
-  surface).  :func:`materialize_once` checkpoints such a frame so it
-  computes EXACTLY ONCE and every consumer reads its blocks.
+  k times per execution (``tests/ledger_sf0.001.json`` pins every
+  query's scans).  :func:`materialize_once` checkpoints such a frame
+  so it computes EXACTLY ONCE and every consumer reads its blocks.
 * **Per-round barriers of iterative loops** (graph label propagation,
   PageRank, BPE merges): the same eager checkpoint resets the plan each
   round so it cannot grow without bound; :func:`release_checkpoint`
@@ -31,8 +31,8 @@ form is 20–25 % faster end to end (roc_auc 1.88→1.47 s, kruskal_wallis
 ``eager=False`` is for a frame whose first consumer is a single driver
 action (js_divergence's rollup collect), which writes the blocks
 without a race.  Builders that time ``query_fn(spark, sf)`` still
-charge all the work to the query; plan-only tools (pin_exchanges,
-dump_named_plans) execute these small subtrees at the test SF.
+charge all the work to the query; the plan tool (dump_named_plans)
+executes these small subtrees at the test SF.
 
 Reliable checkpoint when the session has a checkpoint dir (blocks are
 files on shared storage and survive executor death), localCheckpoint

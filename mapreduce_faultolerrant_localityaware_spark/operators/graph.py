@@ -61,17 +61,18 @@ def _sym_edges(pairs: DataFrame, src: str, dst: str, directed: bool = False) -> 
     ``directed``); self-loops and NULL endpoints are dropped."""
     s, d = _quoted(src), _quoted(dst)
     if directed:
-        out = pairs.selectExpr(f"{s} AS s", f"{d} AS d")
-    else:
-        # both orientations from one pass over ``pairs`` (a union of two
-        # projections would plan the whole upstream twice)
-        out = pairs.selectExpr(
-            f"inline(array(struct({s} AS s, {d} AS d), struct({d} AS s, {s} AS d)))"
-        )
-    # the filter after the distinct: between the two it would keep the
-    # optimizer from merging an upstream distinct union (the MinHash
-    # candidates) into this one, a shuffle more; it is pushed down anyway
-    return out.distinct().filter("s != d")
+        # the filter after the distinct: between the two it would keep the
+        # optimizer from merging an upstream distinct union (the MinHash
+        # candidates) into this one, a shuffle more; it is pushed down anyway
+        return pairs.selectExpr(f"{s} AS s", f"{d} AS d").distinct().filter("s != d")
+    # both orientations from one pass over ``pairs`` (a union of two
+    # projections would plan the whole upstream twice); the filter goes
+    # before the ``inline``, which it cannot pass to reach the scan
+    return (
+        pairs.filter(f"{s} != {d}")
+        .selectExpr(f"inline(array(struct({s} AS s, {d} AS d), struct({d} AS s, {s} AS d)))")
+        .distinct()
+    )
 
 
 def _undirected(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -332,7 +333,7 @@ def _edges_degrees_triangles(pairs: DataFrame, src: str, dst: str):
     # wedge-closing semi-join and the summary union — and the PAIRS
     # input is usually itself an LSH/minhash pipeline; materialize both
     # bounded frames once so none of those branches re-derives them
-    # (scan_multiplicity counted 28 corpus scans here before this)
+    # (a plan-scan audit counted 28 corpus scans here before this)
     e = materialize_once(_undirected(pairs, src, dst))
     deg = (
         e.select(F.col("u").alias("node"))

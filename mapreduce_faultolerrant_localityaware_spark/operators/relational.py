@@ -192,7 +192,10 @@ def join_salted(
     Results are identical to ``big.join(skewed_small, key, how)``.
     """
     salted_big = big.withColumn("__salt", (F.rand(seed=7) * salt_buckets).cast("int"))
-    salts = big.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
+    # one split: a k-row broadcast, and a plan that does not print the core count
+    salts = big.sparkSession.range(salt_buckets, numPartitions=1).select(
+        F.col("id").cast("int").alias("__salt")
+    )
     replicated = skewed_small.crossJoin(F.broadcast(salts))
     return salted_big.join(replicated, [key, "__salt"], how).drop("__salt")
 
@@ -1202,9 +1205,9 @@ def bucketed_cum_counts(
     under DESC — see the cell-0 coalesce below).  Cost note: the
     domain frame feeds THREE consumers (the min/max scalar, the cell
     totals, the join-back), and AQE does NOT reuse a shared aggregate
-    stage across branches (measured, round 11 —
-    tools/scan_multiplicity.py counted the rank family's callers at
-    4–30 base-table scans per query), so ``per`` is lazily
+    stage across branches (measured, round 11 — a plan-scan audit
+    counted the rank family's callers at 4–30 base-table scans per
+    query), so ``per`` is lazily
     checkpointed here: the first action computes the domain collapse
     ONCE and every branch reads the persisted blocks.  The storage
     footprint is the NARROW domain table — (order, tiebreaks, counts)

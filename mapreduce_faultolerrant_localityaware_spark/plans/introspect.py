@@ -18,21 +18,20 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-#: physical node names whose per-plan counts are pinned by the
-#: committed exchange budget (tests/exchange_budget.json).  Exchange =
-#: a real shuffle, BroadcastExchange = a broadcast build, ReusedExchange
-#: = a shared shuffle/broadcast output — a refactor that breaks reuse
-#: (same Exchange count, one fewer ReusedExchange) re-executes a whole
-#: subtree and must show up in the budget diff.
+#: physical node names whose per-plan counts the ledger pins
+#: (tests/ledger_sf0.001.json, ``exchanges``).  Exchange = a real
+#: shuffle, BroadcastExchange = a broadcast build, ReusedExchange = a
+#: shared shuffle/broadcast output — a refactor that breaks reuse (same
+#: Exchange count, one fewer ReusedExchange) re-executes a whole
+#: subtree and must show up in the ledger diff.
 EXCHANGE_NODES = ("Exchange", "BroadcastExchange", "ReusedExchange")
 
 
-def exchange_counts(df: DataFrame) -> dict[str, int]:
-    """Count shuffle/broadcast/reuse nodes in the formatted physical
-    plan.  Formatted explain lists each physical node exactly once in
-    the numbered details section (``(5) Exchange``), so counting those
+def exchange_counts(plan: str) -> dict[str, int]:
+    """Count shuffle/broadcast/reuse nodes in a FORMATTED physical plan.
+    Formatted explain lists each physical node exactly once in the
+    numbered details section (``(5) Exchange``), so counting those
     lines counts nodes, not tree-rendering duplicates."""
-    plan = formatted_plan(df)
     return {
         node: len(re.findall(rf"^\(\d+\) {node}\b", plan, re.M))
         for node in EXCHANGE_NODES
@@ -350,7 +349,7 @@ def assert_no_python_udf(df: DataFrame) -> None:
 
 def scan_counts_from_plan(plan: str) -> dict[str, int]:
     """Per-table parquet-scan counts from a FORMATTED physical plan —
-    the scan-multiplicity ratchet's measurement (round 11b).
+    the ledger's ``scans`` field (round 11b).
 
     AQE does not reuse a shared aggregate stage across sibling plan
     branches, so every duplicated subtree re-scans its base table; a

@@ -7,12 +7,12 @@
 - `CartesianProduct` must never appear; unbounded `BroadcastNestedLoopJoin`
   is allowed only where a broadcast theta-join is the intended design
   (banded range join, brute-force ANN scoring).
+
+Each query's Exchange and parquet-scan counts are pinned by the ledger
+(``tests/test_ledger.py``), not here.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 
@@ -20,14 +20,11 @@ import __spark_entry__ as entry_mod
 from mapreduce_faultolerrant_localityaware_spark.plans import formatted_plan
 from mapreduce_faultolerrant_localityaware_spark.plans.introspect import (
     bnlj_build_sides,
-    exchange_counts,
     is_domain_collapsed,
     is_row_bounded,
     subtree_sketch,
     unpartitioned_windows,
 )
-
-pytestmark = [pytest.mark.slow]
 
 #: queries whose plans intentionally contain a broadcast nested-loop
 #: join (tiny broadcast side × theta predicate)
@@ -273,63 +270,10 @@ def test_boundedness_prover_accepts_scalar_attach(spark, sf_dir):
         assert is_row_bounded(build), subtree_sketch(build)
 
 
-#: committed per-query exchange budget (regenerate with
-#: ``python tools/pin_exchanges.py`` — at the SAME sf as this test run,
-#: since join-strategy choice reads file-size stats)
-_BUDGET_PATH = os.path.join(os.path.dirname(__file__), "exchange_budget.json")
-with open(_BUDGET_PATH) as _fh:
-    _BUDGET = json.load(_fh)
-
-
-@pytest.mark.parametrize("name", [q for q in _QUERIES if q not in SKIP])
-def test_exchange_budget(spark, sf_dir, name):
-    """Exchange-count ratchet: a refactor that adds a shuffle (or loses
-    a broadcast/reuse) to ANY query fails here, not in the next bench —
-    the mechanical version of the plan-audit discipline that caught
-    attribution_multi_touch's double interval-join in round 8.  An
-    intentional plan change regenerates tests/exchange_budget.json in
-    the same commit (tools/pin_exchanges.py [query ...])."""
-    assert name in _BUDGET, (
-        f"{name} has no committed exchange budget — run "
-        "`python tools/pin_exchanges.py {name}` and commit the diff"
-    )
-    got = exchange_counts(entry_mod.queries()[name](spark, sf_dir))
-    assert got == _BUDGET[name], (
-        f"{name}: exchange counts changed {_BUDGET[name]} -> {got}; if "
-        "intentional, regenerate with `python tools/pin_exchanges.py "
-        f"{name}` and commit tests/exchange_budget.json in the same commit"
-    )
-
-
-_SCAN_BUDGET_PATH = os.path.join(os.path.dirname(__file__), "scan_budget.json")
-_SCAN_BUDGET: dict[str, int] = {}
-if os.path.exists(_SCAN_BUDGET_PATH):
-    with open(_SCAN_BUDGET_PATH) as _fh:
-        _SCAN_BUDGET = json.load(_fh)
-
-
 @pytest.mark.parametrize("name", [q for q in _QUERIES if q not in SKIP])
 def test_plan_hygiene(spark, sf_dir, name):
     df = entry_mod.queries()[name](spark, sf_dir)
     plan = formatted_plan(df)
-    # scan-multiplicity ratchet (round 11b): AQE does not dedupe
-    # sibling plan branches, so every duplicated subtree re-scans its
-    # base table — at 100 TB that's a full corpus read per duplicate.
-    # The committed budget pins each query's total parquet-scan count;
-    # a refactor that adds (or removes) a scan must regenerate it in
-    # the same commit: `python tools/scan_multiplicity.py --json NAME`.
-    from mapreduce_faultolerrant_localityaware_spark.plans.introspect import (
-        scan_counts_from_plan,
-    )
-
-    if name in _SCAN_BUDGET:
-        got_scans = sum(scan_counts_from_plan(plan).values())
-        assert got_scans == _SCAN_BUDGET[name], (
-            f"{name}: parquet-scan count changed "
-            f"{_SCAN_BUDGET[name]} -> {got_scans}; if intentional, "
-            f"regenerate with `python tools/scan_multiplicity.py --json "
-            f"{name}` and commit tests/scan_budget.json in the same commit"
-        )
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
     assert "ArrowEvalPython" not in plan, f"{name}: scalar Python UDF in plan"
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"

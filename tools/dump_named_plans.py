@@ -3,8 +3,8 @@ per-run ids normalised, plus each query's rows and construction cost,
 so that two dumps of the same query — from two commits, two sessions,
 two hosts or two scale factors of the same shape — diff to nothing and
 a diff shows only a real change of plan, result or construction cost.
-``--ledger`` writes the same record for every ``bench.HEADLINE`` query
-as one JSON file, the committed ``tests/ledger_sf0.001.json`` that
+``--ledger`` writes the same record for every ``queries()`` entry as
+one JSON file, the committed ``tests/ledger_sf0.001.json`` that
 ``tests/test_ledger.py`` rebuilds and compares.
 
 Each file holds the plan, then the plan of every frame the query cut
@@ -39,10 +39,11 @@ barriers and driver collects.  The jobs adaptive execution submits for
 each query stage inside them are left out: how many it submits follows
 timing (a stage a sibling already runs is not submitted again; one
 graph query measured 173–175 with every plan the same).  The first
-construction also pays one-off jobs, so the count depends on the
-queries built before it in the process.  The digest hashes every
-collected row, so it also covers queries whose oracle check is
-rows-only.
+``scan()`` of a table in a process starts a schema-inference job and
+later scans start none, so the tool resolves every ``scans.TABLES``
+schema in the sf dir before the first query: no query's count depends
+on the queries built before it.  The digest hashes every collected
+row, so it also covers queries whose oracle check is rows-only.
 
 The session has 8 shuffle partitions (the test session's), whatever
 the core count, so the text does not depend on the host.
@@ -73,22 +74,25 @@ Two plan differences are not code changes:
 - ``try_divide(a, b)`` prints as ``(a / b)``, so swapping ``/`` for
   ``F.try_divide`` leaves the plan text unchanged (the py4j count
   still moves);
-- the Expand order of a distinct aggregate (``count(DISTINCT ...)``)
-  can follow the session's expression-id history, so a query dumped
-  after a changed query may print a different Expand order than the
-  same query dumped alone.  Re-dump such a query alone before calling
-  the difference a change.  The ledger builds its queries in sorted
-  order in a fresh process, so its history is always the same.
+- the Expand of a distinct aggregate (``count(DISTINCT ...)``, the
+  Expand whose output holds ``gid``) orders its groups by expression-id
+  hash.  Expression ids follow the process's history, which adaptive
+  execution's re-plans make timing-dependent, so even two fresh builds
+  of the same queries in the same order can print different orders.
 
-The ledger maps each headliner to ``plan_sha1`` (the sha1 of the
-plan-and-cuts text above), ``rows``, ``rows_sha1``, ``py4j`` and
-``construct_jobs``; wall times stay out, they are not deterministic.
-It is written only if every headliner builds and collects: on any
-error the tool names the failures, exits 1 and leaves PATH untouched.
-A change that moves a plan or a result re-pins the ledger with the
-command below and gives the reason in CHANGES.md, as a change to
-``tests/*_budget.json`` does; ``py4j`` and ``construct_jobs`` may fall
-without a re-pin.
+The ledger maps each query to ``plan_sha1`` (the sha1 of the
+plan-and-cuts text above; ``null`` when that text holds a distinct
+aggregate's Expand, whose order is not reproducible), ``rows``,
+``rows_sha1``, ``py4j``, ``construct_jobs``, ``exchanges`` (the final
+plan's ``Exchange``, ``BroadcastExchange`` and ``ReusedExchange``
+counts) and ``scans`` (the final plan's parquet scans per table: a cut
+frame's consumers read its blocks, not the table); wall times stay
+out, they are not deterministic.  It is written only if every query
+builds and collects: on any error the tool names the failures, exits 1
+and leaves PATH untouched.  A change that moves a plan, a count or a
+result re-pins the whole ledger with the command below and gives the
+reason in CHANGES.md; ``py4j`` and ``construct_jobs`` may fall without
+a re-pin.
 
 Usage: python tools/dump_named_plans.py OUT_DIR SUFFIX q1 q2 ...
        (files land at OUT_DIR/<q>_<SUFFIX>.txt; sf dir from
@@ -111,6 +115,11 @@ import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mapreduce_faultolerrant_localityaware_spark.plans.introspect import (  # noqa: E402
+    exchange_counts,
+    scan_counts_from_plan,
+)
+
 _IDS = (
     (re.compile(r"#\d+"), "#_"),
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
@@ -123,6 +132,9 @@ _COUNTERS = (
     (re.compile(r"\blambda \w+"), "lambda v"),
     (re.compile(r"\b_common_expr_\d+\b"), "_common_expr"),
 )
+#: a distinct aggregate's Expand (its output holds ``gid``), whose
+#: group order follows the expression-id history
+_DISTINCT_EXPAND = re.compile(r"^\(\d+\) Expand\n(?:.+\n)*?Arguments: .*\bgid#", re.M)
 _LAMBDA_FN = "lambdafunction("
 #: the argument list that ends a printed ``lambdafunction(body, args..., hidden)``
 _LAMBDA_ARGS = re.compile(r"((?:, lambda \w+#\d+\w*)+), (?:true|false)$")
@@ -259,8 +271,9 @@ def _driver_jobs(sc, group: str) -> int:
 
 
 def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
-    """Query ``name``'s plan-and-cuts text, rows, row digest, py4j calls
-    and construction jobs (those started under job group ``group``)."""
+    """Query ``name``'s plan-and-cuts text, rows, row digest, py4j calls,
+    construction jobs (those started under job group ``group``) and its
+    final plan's Exchange and per-table parquet-scan counts."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -269,9 +282,8 @@ def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = _driver_jobs(sc, group)
-    text = cuts.explain(df)
-    for i, plan in enumerate(cuts.plans, 1):
-        text += f"\n== cut {i} ==\n{plan}"
+    final = cuts.explain(df)
+    text = final + "".join(f"\n== cut {i} ==\n{plan}" for i, plan in enumerate(cuts.plans, 1))
     rows = sorted(repr(r) for r in df.collect())
     return {
         "plan": text,
@@ -279,6 +291,8 @@ def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
         "rows_sha1": hashlib.sha1("\n".join(rows).encode()).hexdigest(),
         "py4j": py4j.count(lambda: qs[name](spark, sf_dir)),
         "construct_jobs": jobs,
+        "exchanges": exchange_counts(final),
+        "scans": scan_counts_from_plan(final),
     }
 
 
@@ -294,7 +308,11 @@ def _write_ledger(path: str, recs: dict) -> None:
     """``recs`` as the ledger JSON, each plan text as its sha1."""
     ledger = {
         name: {k: v for k, v in rec.items() if k != "plan"}
-        | {"plan_sha1": hashlib.sha1(rec["plan"].encode()).hexdigest()}
+        | {
+            "plan_sha1": None
+            if _DISTINCT_EXPAND.search(rec["plan"])
+            else hashlib.sha1(rec["plan"].encode()).hexdigest()
+        }
         for name, rec in recs.items()
     }
     with open(path, "w") as fh:
@@ -304,18 +322,21 @@ def _write_ledger(path: str, recs: dict) -> None:
 
 def main() -> int:
     import __spark_entry__ as entry_mod
-    from bench import HEADLINE
     from mapreduce_faultolerrant_localityaware_spark.session import get_spark
+    from mapreduce_faultolerrant_localityaware_spark.sources.scans import TABLES, scan
 
+    qs = entry_mod.queries()
     ledger = sys.argv[1] == "--ledger"
-    names = sorted(HEADLINE) if ledger else sys.argv[3:]
+    names = sorted(qs) if ledger else sys.argv[3:]
     if not ledger:
         out_dir, suffix = sys.argv[1], sys.argv[2]
         os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark("dump-named-plans", shuffle_partitions=8)
     py4j = _Py4jCounter(spark)
-    qs = entry_mod.queries()
+    # each table's one schema-inference job, before any query's group
+    for table in TABLES:
+        scan(spark, sf_dir, table)
     cuts = _CutRecorder(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
