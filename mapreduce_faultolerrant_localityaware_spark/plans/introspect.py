@@ -4,7 +4,8 @@ These assertions encode the properties that matter at 100 TB and are
 invisible in small-data correctness tests: filters reaching the
 parquet scan, dimension joins going broadcast, hot paths staying
 inside whole-stage codegen (no Python UDF).  Tests call these so a
-regression in plan shape fails CI, not the cluster bill.
+regression in plan shape fails CI, not the cluster bill; the ledger
+(tests/ledger_sf0.001.json) pins every query's `plan_hazards` tags.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -46,8 +48,10 @@ def exchange_counts(plan: str) -> dict[str, int]:
 # a literal-pinned id filter (the ≤k-row ANN query side), or driver-created
 # k-row data (salt Range, parallelized band table).  `is_row_bounded` walks
 # the physical tree and PROVES that shape, so a refactor can't silently turn
-# a "1-row scalar attach" into a real cross product — the whitelist in
-# tests/test_plan_hygiene.py is enforced structurally, not by comment.
+# a "1-row scalar attach" into a real cross product: `plan_hazards` tags
+# an unproven side `bnlj_unbounded`, which no query may carry, so the
+# BNLJ_OK whitelist in tests/test_plan_hygiene.py is enforced
+# structurally, not by comment.
 
 #: row-preserving / row-reducing wrappers: bounded iff all children bounded.
 #: Generate multiplies by the exploded-array length — bounded input stays
@@ -168,8 +172,9 @@ def unpartitioned_windows(df: DataFrame):
 #: span — the accepted time-series posture), literal-modulus buckets,
 #: and 1–2-char prefixes (≤ 256 values).  Everything else — in
 #: particular a RAW scan column, however low-cardinality the tester's
-#: data happens to be — must be whitelisted per-query with a proof
-#: comment (tests/test_plan_hygiene.py DOMAIN_OK): round 10's prover
+#: data happens to be — is tagged `window_domain` by `plan_hazards` and
+#: must be whitelisted per-query with a proof comment
+#: (tests/test_plan_hygiene.py DOMAIN_OK): round 10's prover
 #: accepted ANY Aggregate, which let a `groupBy(score)` over continuous
 #: parquet doubles prove "domain-collapsed" while being row-sized.
 #: every alternative is ANCHORED: the bounded function must BE the
@@ -297,9 +302,9 @@ def is_domain_collapsed(node, allow_any_aggregate: bool = False) -> bool:
     aggregate — `groupBy(score)` over near-unique continuous values IS
     row-sized (the round-10 residual).  Queries whose grouping domain
     is bounded by DATA SEMANTICS the plan cannot show (ISO language
-    codes, a source-name domain) pass ``allow_any_aggregate=True`` via
-    a per-query whitelist with a proof comment
-    (tests/test_plan_hygiene.py DOMAIN_OK)."""
+    codes, a source-name domain) pass only ``allow_any_aggregate=True``:
+    `plan_hazards` tags them `window_domain`, allowed only with a
+    per-query proof comment (tests/test_plan_hygiene.py DOMAIN_OK)."""
     name = node.nodeName()
     if "Aggregate" in name:
         return allow_any_aggregate or _grouping_keys_bounded(node)
@@ -315,12 +320,40 @@ def is_domain_collapsed(node, allow_any_aggregate: bool = False) -> bool:
     return all(is_domain_collapsed(c, allow_any_aggregate) for c in kids)
 
 
-def subtree_sketch(node, depth: int = 0, max_lines: int = 40) -> str:
-    """Human-readable node sketch for assertion messages."""
-    lines = ["  " * depth + node.nodeName()]
-    for child in _plan_children(node):
-        lines.append(subtree_sketch(child, depth + 1, max_lines))
-    return "\n".join(lines)[: max_lines * 80]
+def plan_hazards(df: DataFrame, plan: str) -> list[str]:
+    """The scale hazards of ``df``, whose formatted plan is ``plan``, as
+    a sorted list of tags:
+
+    - ``python_udf``: a row or scalar Python UDF (``BatchEvalPython``,
+      ``ArrowEvalPython``); Python runs only via mapInPandas by design;
+    - ``cartesian``: a ``CartesianProduct``;
+    - ``bnlj``: a ``BroadcastNestedLoopJoin``;
+    - ``bnlj_unbounded``: a BNLJ build side `is_row_bounded` cannot prove;
+    - ``window_domain``: an unpartitioned window whose input
+      `is_domain_collapsed` proves only with ``allow_any_aggregate``;
+    - ``window_unbounded``: one whose input it cannot prove at all;
+    - ``complex_output``: an array, map or struct output column, which
+      the external result gate cannot canonicalise.
+
+    The ledger pins these per query; tests/test_plan_hygiene.py allows
+    ``bnlj`` and ``window_domain`` only on its whitelists and the other
+    tags nowhere."""
+    tags = set()
+    if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
+        tags.add("python_udf")
+    if "CartesianProduct" in plan:
+        tags.add("cartesian")
+    if "BroadcastNestedLoopJoin" in plan:
+        tags.add("bnlj")
+    if not all(is_row_bounded(build) for _, build in bnlj_build_sides(df)):
+        tags.add("bnlj_unbounded")
+    for _, child in unpartitioned_windows(df):
+        if not is_domain_collapsed(child):
+            lenient = is_domain_collapsed(child, allow_any_aggregate=True)
+            tags.add("window_domain" if lenient else "window_unbounded")
+    if any(isinstance(f.dataType, (ArrayType, MapType, StructType)) for f in df.schema.fields):
+        tags.add("complex_output")
+    return sorted(tags)
 
 
 def assert_pushed_filters(df: DataFrame, *needles: str) -> None:

@@ -1,13 +1,16 @@
 """The per-query ledger: each ``queries()`` entry's normalised plan
 (cuts included), rows, row digest, construction py4j calls,
-construction jobs, Exchange counts and per-table parquet scans at
-sf0.001, pinned in ``tests/ledger_sf0.001.json`` by
+construction jobs, Exchange counts, per-table parquet scans and plan
+hazards at sf0.001, pinned in ``tests/ledger_sf0.001.json`` by
 ``tools/dump_named_plans.py --ledger`` and rebuilt here in a fresh
-process.
+process: the one whole-surface build of a verify.
 
-Plans, rows and counts must match exactly; py4j calls and construction
-jobs may fall but never rise.  A change that moves a plan, a count or
-a result re-pins the ledger and gives the reason in CHANGES.md.
+Plans, rows, counts and hazards must match exactly; py4j calls and
+construction jobs may fall but never rise.  A change that moves a
+plan, a count, a hazard or a result re-pins the ledger and gives the
+reason in CHANGES.md.  The pinned hazards must also pass
+``tests/test_plan_hygiene.py`` (its BNLJ_OK and DOMAIN_OK whitelists)
+and ``tests/test_no_complex_outputs.py``, which read the pin.
 """
 
 from __future__ import annotations
@@ -24,9 +27,8 @@ import __spark_entry__ as entry_mod
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _TOOL = os.path.join(_REPO, "tools", "dump_named_plans.py")
-_LEDGER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "ledger_sf0.001.json")
 #: fields that must match the pinned ledger exactly
-_EXACT = ("plan_sha1", "rows", "rows_sha1", "exchanges", "scans")
+_EXACT = ("plan_sha1", "rows", "rows_sha1", "exchanges", "scans", "hazards")
 #: construction costs that may fall but never rise
 _CEILING = ("py4j", "construct_jobs")
 
@@ -61,13 +63,11 @@ def test_normalise_is_host_independent():
     assert normalise(four) != normalise(other)
 
 
-def test_ledger(sf_dir, tmp_path):
+def test_ledger(sf_dir, tmp_path, ledger):
     """A fresh build of the ledger matches ``tests/ledger_sf0.001.json``."""
     if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
         pytest.skip(f"the ledger is pinned at sf0.001, not {sf_dir}")
-    with open(_LEDGER) as fh:
-        pinned = json.load(fh)
-    differ = sorted(set(pinned) ^ set(entry_mod.queries()))
+    differ = sorted(set(ledger) ^ set(entry_mod.queries()))
     assert not differ, f"the ledger's queries differ from queries() in {differ}: re-pin it"
     out = tmp_path / "ledger.json"
     proc = subprocess.run(
@@ -91,14 +91,21 @@ def test_ledger(sf_dir, tmp_path):
         "--ledger tests/ledger_sf0.001.json"
     )
     problems = []
-    for name in sorted(pinned):
+    for name in sorted(ledger):
         for field in _EXACT + _CEILING:
-            old, new = pinned[name][field], got[name][field]
+            old, new = ledger[name][field], got[name][field]
             if new != old and (field in _EXACT or new > old):
+                policy = (
+                    "; after the re-pin, tests/test_plan_hygiene.py allows `bnlj` "
+                    "only in BNLJ_OK and `window_domain` only in DOMAIN_OK, and "
+                    "no other tag anywhere"
+                    if field == "hazards"
+                    else ""
+                )
                 problems.append(
                     f"{name}: {field} {old} -> {new}; show the plan with "
                     f"`SPARK_GRAFT_SF_DIR={sf_dir} python tools/dump_named_plans.py "
                     f"OUT SUFFIX {name}`; if intended, re-pin with `{repin}` and "
-                    "give the reason in CHANGES.md"
+                    f"give the reason in CHANGES.md{policy}"
                 )
     assert not problems, "\n".join(problems)

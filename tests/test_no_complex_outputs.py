@@ -5,32 +5,23 @@ sort over all columns; array/map/struct cells are unhashable there and
 err the gate (round-6 driver artifact: ``tokens_to_ids``).  Library
 APIs are free to return arrays — the QUERY surface must serialize them
 (comma-joined strings) before returning.  This test pins that contract
-for every ``queries()`` entry so the class of bug cannot recur.
+for every ``queries()`` entry so the class of bug cannot recur, on the
+``complex_output`` tag the ledger pins for it (``hazards``;
+``tests/test_ledger.py`` makes a fresh build equal the pin, so no query
+is built here).
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql.types import ArrayType, MapType, StructType
 
 import __spark_entry__ as entry_mod
 
-#: iterative driver-loop queries execute eagerly when built; their
-#: schemas are checked too (cheap at sf0.001) — no skips: the whole
-#: point is zero complex-typed outputs anywhere on the surface.
-_QUERIES = sorted(entry_mod.queries())
 
-
-@pytest.mark.parametrize("name", _QUERIES)
-def test_no_complex_typed_output(spark, sf_dir, name):
-    df = entry_mod.queries()[name](spark, sf_dir)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    assert not bad, (
-        f"{name}: complex-typed output column(s) {bad} — the external "
-        "gate cannot canonicalize these; serialize (array_join) in the "
-        "query wrapper and array_to_string(...) in the oracle SQL"
+@pytest.mark.parametrize("name", sorted(entry_mod.queries()))
+def test_no_complex_typed_output(ledger, name):
+    assert "complex_output" not in ledger[name]["hazards"], (
+        f"{name}: complex-typed output column(s) — the external gate "
+        "cannot canonicalize these; serialize (array_join) in the query "
+        "wrapper and array_to_string(...) in the oracle SQL"
     )

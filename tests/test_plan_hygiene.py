@@ -1,15 +1,22 @@
-"""Plan hygiene across the ENTIRE declared query surface: every
-`queries()` entry is explained and scanned for scale anti-patterns.
+"""Plan hygiene across the ENTIRE declared query surface, checked on
+the ``hazards`` tags (``introspect.plan_hazards``) that the ledger
+pins for every ``queries()`` entry (``tests/ledger_sf0.001.json``).
+``tests/test_ledger.py`` makes a fresh build equal that pin, so no
+query is built here; only the prover controls below touch Spark.
 
-- `BatchEvalPython` / `ArrowEvalPython` (row/scalar Python UDFs) must
-  never appear — Python is allowed only via mapInPandas
-  (`MapInPandas` nodes, multimodal decode) by design.
-- `CartesianProduct` must never appear; unbounded `BroadcastNestedLoopJoin`
-  is allowed only where a broadcast theta-join is the intended design
-  (banded range join, brute-force ANN scoring).
+- ``python_udf`` (row/scalar Python UDFs) must never appear — Python is
+  allowed only via mapInPandas (`MapInPandas` nodes, multimodal
+  decode) by design.
+- ``cartesian`` must never appear; ``bnlj`` (a broadcast nested-loop
+  join) only in BNLJ_OK, and ``bnlj_unbounded`` (a build side not
+  provably row-bounded) nowhere.
+- ``window_domain`` (an unpartitioned window over an input bounded
+  only by data semantics) only in DOMAIN_OK, and ``window_unbounded``
+  nowhere.
 
-Each query's Exchange and parquet-scan counts are pinned by the ledger
-(``tests/test_ledger.py``), not here.
+A change that adds a hazard fails here after its re-pin: dump the
+plan with ``tools/dump_named_plans.py OUT SUFFIX <query>``.  The
+``complex_output`` tag is checked by ``tests/test_no_complex_outputs.py``.
 """
 
 from __future__ import annotations
@@ -18,27 +25,21 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from mapreduce_faultolerrant_localityaware_spark.plans import formatted_plan
-from mapreduce_faultolerrant_localityaware_spark.plans.introspect import (
-    bnlj_build_sides,
-    is_domain_collapsed,
-    is_row_bounded,
-    subtree_sketch,
-    unpartitioned_windows,
-)
+from mapreduce_faultolerrant_localityaware_spark.plans.introspect import plan_hazards
 
-#: queries whose plans intentionally contain a broadcast nested-loop
-#: join (tiny broadcast side × theta predicate)
-#: (join_skew_salted: the salt-replication crossJoin of the small side
-#: against the broadcast salt range is the operator's mechanism)
-# queries whose plan deliberately contains a BroadcastNestedLoopJoin:
-# banded/broadcast comparisons, and tfidf's single-row corpus-size
-# attach (a broadcast of one scalar row, not a cartesian hazard).
-#: queries whose BNLJ is a deliberate 1-row/tiny broadcast replication
-#: (round 6: the scalar-subquery queries trade their session-global
-#: temp views for a one-row broadcast cross join — same physical work
-#: a Subquery node does, now visible as a 1-row BNLJ; ann_pq broadcasts
-#: the query side against a `!=` predicate like ann_bruteforce/ann_sq8)
-BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_salted",
+#: queries whose plan deliberately holds a BroadcastNestedLoopJoin
+#: (tagged ``bnlj``): a broadcast theta join (range_join's band;
+#: ann_bruteforce's scoring against the k-row query side, which ann_pq
+#: and ann_sq8 broadcast against a `!=` predicate), join_skew_salted's
+#: crossJoin of the small side against its broadcast salt range (the
+#: operator's mechanism), or a 1-row scalar attach such as
+#: tfidf_top_terms' corpus size (round 6: the scalar-subquery queries
+#: trade their session-global temp views for a one-row broadcast cross
+#: join, the work a Subquery node does, visible as a 1-row BNLJ).
+#: Every build side must still prove a scale-independent row bound
+#: (``bnlj_unbounded`` is allowed nowhere), and the set must equal the
+#: ``bnlj``-tagged ledger entries, so a stale name fails too.
+BNLJ_OK = {"range_join", "ann_bruteforce", "join_skew_salted",
            # ann_range_search is ann_bruteforce's radius sibling — the
            # same intended broadcast theta join (k-row query side)
            "ann_range_search",
@@ -79,9 +80,6 @@ BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_sal
            # decayed_sum broadcasts its 1-row max-ts anchor (scalar
            # attach, same shape as lm_score's vocabulary size)
            "decayed_sum",
-           # simjoin_cosine attaches its 1-row corpus count for idf
-           # (the same tfidf_top_terms scalar-broadcast pattern)
-           "simjoin_cosine",
            # bm25_search attaches its 1-row corpus stats (N, avgdl,
            # per-term df) as a broadcast scalar join
            "bm25_search",
@@ -98,10 +96,10 @@ BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_sal
            # and ann_bruteforce (broadcast theta scoring) — both
            # individually whitelisted shapes
            "rrf_fusion",
-           # embedding_covariance / pca_project attach the 1-row
-           # (n, component-sums) marginal as a broadcast scalar join
+           # embedding_covariance attaches the 1-row (n,
+           # component-sums) marginal as a broadcast scalar join
            # (tfidf-style attach); unigram_kl its 1-row corpus total
-           "embedding_covariance", "pca_project", "unigram_kl",
+           "embedding_covariance", "unigram_kl",
            # psi_drift attaches three 1-row scalars (time midpoint,
            # decile edges, totals) as broadcast cross joins;
            # histogram_equidepth its 1-row percentile-edge aggregate;
@@ -110,10 +108,9 @@ BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_sal
            "psi_drift", "histogram_equidepth", "textrank_keywords",
            # revenue_concentration attaches its 1-row grand-total and
            # 1-row key-count aggregates as broadcast scalars;
-           # ks_test its 1-row time-midpoint and per-side totals;
            # heaps_fit's prefix totals are intended broadcast theta
            # joins against the 20-row percentile-cutoff list
-           "revenue_concentration", "ks_test", "heaps_fit",
+           "revenue_concentration", "heaps_fit",
            # round 8: chisq_independence attaches its 1-row grand
            # total N to the domain-sized contingency table;
            # benford_digits its 1-row value count to the ≤9-row digit
@@ -128,13 +125,10 @@ BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_sal
            # session-count denominator (all scalar attaches)
            "mutual_information", "session_rules",
            # round 9b: survival_km attaches its 1-row corpus max-date
-           # and 1-row user-total aggregates; mannwhitney_u its 1-row
-           # tie-correction sum; cuped_adjust its 1-row time-midpoint;
-           # runs_test its 1-row day count and 1-row doubled median;
-           # rfm_segments its 1-row max-date anchor — all the
-           # tfidf-style scalar-attach shape, structurally proven below
-           "survival_km", "mannwhitney_u", "cuped_adjust", "runs_test",
-           "rfm_segments",
+           # and 1-row user-total aggregates; cuped_adjust its 1-row
+           # time-midpoint; runs_test its 1-row day count and 1-row
+           # doubled median — all the tfidf-style scalar-attach shape
+           "survival_km", "cuped_adjust", "runs_test",
            # kendall_tau attaches its 1-row pair-count, tie-correction
            # and n aggregates (scalar attaches; the pair expansion
            # itself is the in-row wedge from a 1-row aggregate)
@@ -157,18 +151,11 @@ BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_sal
            # chance-mass aggregates; wilson_ci its 1-row distinct-user
            # total; referential_audit joins three pairs of 1-row
            # child/orphan count aggregates — all the tfidf-style
-           # scalar-attach shape, structurally proven below
+           # scalar-attach shape
            "calibration_table", "cohens_kappa", "wilson_ci",
            "referential_audit",
-           # round 11: bucketed_cum_counts attaches its 1-row (min,
-           # max) cell-boundary aggregate as a broadcast scalar join —
-           # every rank-discipline query now carries that shape
-           # (structurally proven ≤1 row below, like every other
-           # scalar attach)
-           "roc_auc", "roc_auc_continuous", "levene_test",
-           "lift_table", "k_anonymity", "percent_rank_global",
            # round 11b: more 1-row scalar attaches, all global
-           # aggregates structurally proven ≤1 row below —
+           # aggregates —
            # logrank_test attaches its 1-row cohort totals (twice:
            # at-risk offsets and the final O/E/V rollup);
            # ab_sequential its 1-row grand-total for the information
@@ -178,29 +165,21 @@ BNLJ_OK = {"range_join", "ann_bruteforce", "dedup_ngram_jaccard", "join_skew_sal
            "logrank_test", "ab_sequential", "simpsons_check",
            "feature_hash", "graph_modularity"}
 
-#: iterative driver-loop queries — plan is per-round, explain of the
-#: final labels frame is a checkpoint scan, nothing to audit
-SKIP = {"dedup_clusters"}
-
-#: queries allowed an UNPARTITIONED window over a NON-collapsed input.
-#: Deliberately empty (round 10): every legitimate unpartitioned window
-#: in the engine runs over an aggregated / k-row input and passes
-#: `is_domain_collapsed` structurally — the round-9 roc_auc /
-#: mannwhitney_u / lift_table / rfm_segments single-partition row sorts
-#: were rewritten to the distinct-value-collapse / exact_ntile patterns
-#: rather than whitelisted.  Add a name here ONLY with a comment proving
-#: the input is domain-sized in a way the prover cannot see.
-UNPART_WINDOW_OK: set[str] = set()
-
 #: round 11: the STRICT prover no longer accepts ANY Aggregate as
 #: "domain-collapsed" — a `groupBy(score)` over near-unique continuous
 #: values is row-sized (the round-10 residual; the rank family now
 #: runs on `bucketed_cum_counts`, whose only unpartitioned window
 #: aggregates on spark_partition_id() and proves bounded structurally).
 #: Queries here window over a grouped aggregate whose domain is bounded
-#: by DATA SEMANTICS the physical plan cannot show; each entry carries
-#: the cardinality proof.  An entry whose plan stops containing an
-#: unpartitioned window should be removed (asserted non-vacuous below).
+#: by DATA SEMANTICS the physical plan cannot show (tagged
+#: ``window_domain``); each entry carries the cardinality proof, and the
+#: set must equal the ``window_domain``-tagged ledger entries.  No query
+#: may window, unpartitioned, over an input not even the lenient prover
+#: accepts (``window_unbounded``): every legitimate unpartitioned window
+#: runs over an aggregated / k-row input — the round-9 roc_auc /
+#: mannwhitney_u / lift_table / rfm_segments single-partition row sorts
+#: were rewritten to the distinct-value-collapse / exact_ntile patterns
+#: rather than exempted.
 DOMAIN_OK: dict[str, str] = {
     "ann_index_drift": (
         "windows over the per-CELL occupancy table: cell ids come from "
@@ -234,12 +213,69 @@ DOMAIN_OK: dict[str, str] = {
     ),
 }
 
-_QUERIES = sorted(entry_mod.queries())
+
+#: tags no query may carry
+_NEVER = {
+    "python_udf": "row-at-a-time or scalar Python UDF in plan",
+    "cartesian": "cartesian product in plan",
+    "bnlj_unbounded": "a BNLJ build side is not provably row-bounded",
+    "window_unbounded": (
+        "unpartitioned window over an input the prover cannot bound — use "
+        "bucketed_cum_counts / the exact_ntile pattern"
+    ),
+}
+
+
+def _hazards(df) -> list[str]:
+    return plan_hazards(df, formatted_plan(df))
+
+
+def _tagged(ledger, tag) -> set[str]:
+    return {name for name, entry in ledger.items() if tag in entry["hazards"]}
+
+
+@pytest.mark.parametrize("name", sorted(entry_mod.queries()))
+def test_plan_hygiene(ledger, name):
+    tags = ledger[name]["hazards"]
+    bad = [f"{tag}: {why}" for tag, why in _NEVER.items() if tag in tags]
+    if "bnlj" in tags and name not in BNLJ_OK:
+        bad.append("bnlj: unexpected nested-loop join; a deliberate one needs a BNLJ_OK entry")
+    if "window_domain" in tags and name not in DOMAIN_OK:
+        bad.append(
+            "window_domain: unpartitioned window over an input the strict "
+            "prover cannot bound; annotate DOMAIN_OK with a cardinality proof"
+        )
+    assert not bad, f"{name}: " + "; ".join(bad)
+
+
+def test_bnlj_ok_entries_not_vacuous(ledger):
+    """BNLJ_OK names exactly the queries whose plan holds a BNLJ: a
+    stale entry (the join rewritten away) would let one back in
+    unreviewed."""
+    tagged = _tagged(ledger, "bnlj")
+    assert tagged == BNLJ_OK, (
+        f"stale BNLJ_OK entries: {sorted(BNLJ_OK - tagged)}; "
+        f"BNLJs not in BNLJ_OK: {sorted(tagged - BNLJ_OK)}"
+    )
+
+
+def test_domain_ok_entries_not_vacuous(ledger):
+    """DOMAIN_OK names exactly the queries whose plan holds an
+    unpartitioned window the STRICT prover rejects, each with a proof.
+    A stale entry (query rewritten onto bucketed_cum_counts) weakens
+    the sweep and must be removed."""
+    for name, proof in sorted(DOMAIN_OK.items()):
+        assert proof.strip(), f"{name}: DOMAIN_OK entry without a proof"
+    tagged = _tagged(ledger, "window_domain")
+    assert tagged == set(DOMAIN_OK), (
+        f"stale DOMAIN_OK entries: {sorted(set(DOMAIN_OK) - tagged)}; "
+        f"domain-bounded windows not in DOMAIN_OK: {sorted(tagged - set(DOMAIN_OK))}"
+    )
 
 
 def test_boundedness_prover_rejects_unbounded_broadcast(spark, sf_dir):
     """The structural prover must FAIL a genuinely unbounded broadcast side
-    — otherwise the whitelist assertion above is vacuous."""
+    — otherwise the ``bnlj_unbounded`` rule above is vacuous."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -248,13 +284,7 @@ def test_boundedness_prover_rejects_unbounded_broadcast(spark, sf_dir):
         F.broadcast(docs.alias("b")),
         F.col("a.doc_id") < F.col("b.doc_id"),
     )
-    sides = list(bnlj_build_sides(bad))
-    assert sides, "expected a BroadcastNestedLoopJoin in the probe plan"
-    for _, build in sides:
-        assert not is_row_bounded(build), (
-            "prover accepted an unbounded parquet-scan broadcast side:\n"
-            + subtree_sketch(build)
-        )
+    assert _hazards(bad) == ["bnlj", "bnlj_unbounded"]
 
 
 def test_boundedness_prover_accepts_scalar_attach(spark, sf_dir):
@@ -263,47 +293,7 @@ def test_boundedness_prover_accepts_scalar_attach(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     scalar = docs.agg(F.count("*").alias("n"))
-    good = docs.crossJoin(F.broadcast(scalar))
-    sides = list(bnlj_build_sides(good))
-    assert sides, "expected a BroadcastNestedLoopJoin in the probe plan"
-    for _, build in sides:
-        assert is_row_bounded(build), subtree_sketch(build)
-
-
-@pytest.mark.parametrize("name", [q for q in _QUERIES if q not in SKIP])
-def test_plan_hygiene(spark, sf_dir, name):
-    df = entry_mod.queries()[name](spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    assert "ArrowEvalPython" not in plan, f"{name}: scalar Python UDF in plan"
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-    if name not in BNLJ_OK:
-        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: unexpected nested-loop join"
-    else:
-        # the whitelist is enforced structurally, not by comment (round 8):
-        # every BNLJ build side must PROVE a scale-independent row bound —
-        # a global aggregate (≤1 row), a literal-pinned id filter (≤k query
-        # rows), or driver-created k-row data. A whitelisted query whose
-        # refactor broadcasts an unbounded side fails here, not on-cluster.
-        for bnlj, build in bnlj_build_sides(df):
-            assert is_row_bounded(build), (
-                f"{name}: BNLJ build side is not provably row-bounded:\n"
-                + subtree_sketch(build)
-            )
-    # unpartitioned-window guard (round 10): a WindowExec with an empty
-    # partition spec single-partition-sorts its WHOLE input — fine over
-    # a group-domain / k-row table (ks_test's distinct-value CDF, day
-    # series, bucket rollups; all prove `is_domain_collapsed`), a
-    # 100 TB scale-killer over raw rows (the round-9 roc_auc family).
-    if name not in UNPART_WINDOW_OK:
-        lenient = name in DOMAIN_OK
-        for win, child in unpartitioned_windows(df):
-            assert is_domain_collapsed(child, allow_any_aggregate=lenient), (
-                f"{name}: unpartitioned window over an input the strict "
-                "prover cannot bound — use bucketed_cum_counts / the "
-                "exact_ntile pattern, or annotate DOMAIN_OK with a "
-                "cardinality proof:\n" + subtree_sketch(child)
-            )
+    assert _hazards(docs.crossJoin(F.broadcast(scalar))) == ["bnlj"]
 
 
 def test_window_guard_rejects_naive_global_ntile(spark, sf_dir):
@@ -317,18 +307,16 @@ def test_window_guard_rejects_naive_global_ntile(spark, sf_dir):
     naive = docs.select(
         F.ntile(10).over(Window.orderBy("doc_id")).alias("bucket"), "doc_id"
     )
-    hits = list(unpartitioned_windows(naive))
-    assert hits, "expected an unpartitioned WindowExec in the probe plan"
-    assert all(not is_domain_collapsed(child) for _, child in hits), (
-        "guard accepted a naive global ntile over a raw table"
-    )
+    assert _hazards(naive) == ["window_unbounded"]
 
 
 def test_window_guard_accepts_domain_collapsed(spark, sf_dir):
     """And it must PASS the engine's accepted shapes: a cumulative
     window over an aggregate grouped on a provably bounded-image key
     (a calendar truncation — day domain), and bucketed_cum_counts'
-    bucket-offset window (aggregate on spark_partition_id())."""
+    bucket-offset window (aggregate on spark_partition_id()).  The
+    first shape projected to an array column is tagged
+    ``complex_output`` and nothing else."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -341,19 +329,14 @@ def test_window_guard_accepts_domain_collapsed(spark, sf_dir):
         F.count(F.lit(1)).alias("n")
     )
     cum = per.select("d", F.sum("n").over(Window.orderBy("d")).alias("cum_n"))
-    hits = list(unpartitioned_windows(cum))
-    assert hits, "expected an unpartitioned WindowExec in the probe plan"
-    for _, child in hits:
-        assert is_domain_collapsed(child), subtree_sketch(child)
+    assert _hazards(cum) == []
+    assert _hazards(cum.select(F.array("cum_n").alias("a"))) == ["complex_output"]
 
     dom = events.groupBy(F.col("value").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("t")
     )
     bucketed = bucketed_cum_counts(dom, "v", [("t", "ct")], with_totals=True)
-    hits = list(unpartitioned_windows(bucketed))
-    assert hits, "expected the bucket-offset WindowExec in the probe plan"
-    for _, child in hits:
-        assert is_domain_collapsed(child), subtree_sketch(child)
+    assert _hazards(bucketed) == []
 
 
 def test_window_guard_rejects_nonreducing_aggregate(spark, sf_dir):
@@ -362,7 +345,9 @@ def test_window_guard_rejects_nonreducing_aggregate(spark, sf_dir):
     (`groupBy(score)` over parquet doubles) must NOT prove
     'domain-collapsed' — the distinct-value 'domain' of a continuous
     score is row-sized, and an unpartitioned cumulative window over it
-    is the round-10 residual funnel."""
+    is the round-10 residual funnel.  Only the lenient prover accepts
+    it, so it is tagged ``window_domain``: allowed only with a DOMAIN_OK
+    proof."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -373,26 +358,4 @@ def test_window_guard_rejects_nonreducing_aggregate(spark, sf_dir):
     naive = per.select(
         "v", F.sum("t").over(Window.orderBy("v")).alias("cum")
     )
-    hits = list(unpartitioned_windows(naive))
-    assert hits, "expected an unpartitioned WindowExec in the probe plan"
-    assert all(not is_domain_collapsed(child) for _, child in hits), (
-        "strict prover accepted a non-reducing aggregate funnel"
-    )
-
-
-def test_domain_ok_entries_not_vacuous(spark, sf_dir):
-    """Every DOMAIN_OK annotation must still be needed: its query's
-    plan contains an unpartitioned window the STRICT prover rejects.
-    A stale entry (query rewritten onto bucketed_cum_counts) weakens
-    the sweep and must be removed."""
-    for name, proof in sorted(DOMAIN_OK.items()):
-        assert proof.strip(), f"{name}: DOMAIN_OK entry without a proof"
-        df = entry_mod.queries()[name](spark, sf_dir)
-        needs = any(
-            not is_domain_collapsed(child)
-            for _, child in unpartitioned_windows(df)
-        )
-        assert needs, (
-            f"{name}: DOMAIN_OK entry is stale — the strict prover now "
-            "accepts every unpartitioned window in its plan"
-        )
+    assert _hazards(naive) == ["window_domain"]

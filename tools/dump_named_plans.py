@@ -85,14 +85,19 @@ plan-and-cuts text above; ``null`` when that text holds a distinct
 aggregate's Expand, whose order is not reproducible), ``rows``,
 ``rows_sha1``, ``py4j``, ``construct_jobs``, ``exchanges`` (the final
 plan's ``Exchange``, ``BroadcastExchange`` and ``ReusedExchange``
-counts) and ``scans`` (the final plan's parquet scans per table: a cut
-frame's consumers read its blocks, not the table); wall times stay
-out, they are not deterministic.  It is written only if every query
-builds and collects: on any error the tool names the failures, exits 1
-and leaves PATH untouched.  A change that moves a plan, a count or a
-result re-pins the whole ledger with the command below and gives the
-reason in CHANGES.md; ``py4j`` and ``construct_jobs`` may fall without
-a re-pin.
+counts), ``scans`` (the final plan's parquet scans per table: a cut
+frame's consumers read its blocks, not the table) and ``hazards`` (the
+built frame's ``introspect.plan_hazards`` tags, computed before it is
+collected: Python UDFs, Cartesian products, broadcast nested-loop joins
+and whether their build sides are bounded, unpartitioned windows over
+an unproven input, complex-typed output columns;
+``tests/test_plan_hygiene.py`` checks them against its whitelists);
+wall times stay out, they are not deterministic.  It is written only
+if every query builds and collects: on any error the tool names the
+failures, exits 1 and leaves PATH untouched.  A change that moves a
+plan, a count, a hazard or a result re-pins the whole ledger with the
+command below and gives the reason in CHANGES.md; ``py4j`` and
+``construct_jobs`` may fall without a re-pin.
 
 Usage: python tools/dump_named_plans.py OUT_DIR SUFFIX q1 q2 ...
        (files land at OUT_DIR/<q>_<SUFFIX>.txt; sf dir from
@@ -117,6 +122,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_faultolerrant_localityaware_spark.plans.introspect import (  # noqa: E402
     exchange_counts,
+    formatted_plan,
+    plan_hazards,
     scan_counts_from_plan,
 )
 
@@ -216,10 +223,10 @@ class _CutRecorder:
     cuts while recording; the wrapper is bound in every package module
     only for the duration of :meth:`record`."""
 
-    def __init__(self, mode) -> None:
+    def __init__(self) -> None:
         from mapreduce_faultolerrant_localityaware_spark.operators import _materialize
 
-        self.mode, self.plans = mode, []
+        self.plans = []
         self.orig = _materialize.materialize_once
 
         def materialize_once(df, *args, **kwargs):
@@ -228,8 +235,9 @@ class _CutRecorder:
 
         self.wrapper = materialize_once
 
-    def explain(self, df) -> str:
-        return normalise(df._jdf.queryExecution().explainString(self.mode))
+    @staticmethod
+    def explain(df) -> str:
+        return normalise(formatted_plan(df))
 
     @staticmethod
     def _rebind(old, new) -> None:
@@ -272,8 +280,9 @@ def _driver_jobs(sc, group: str) -> int:
 
 def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
     """Query ``name``'s plan-and-cuts text, rows, row digest, py4j calls,
-    construction jobs (those started under job group ``group``) and its
-    final plan's Exchange and per-table parquet-scan counts."""
+    construction jobs (those started under job group ``group``), its
+    final plan's Exchange and per-table parquet-scan counts and the
+    built frame's plan hazards."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -284,6 +293,7 @@ def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
     jobs = _driver_jobs(sc, group)
     final = cuts.explain(df)
     text = final + "".join(f"\n== cut {i} ==\n{plan}" for i, plan in enumerate(cuts.plans, 1))
+    hazards = plan_hazards(df, final)
     rows = sorted(repr(r) for r in df.collect())
     return {
         "plan": text,
@@ -293,6 +303,7 @@ def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
         "construct_jobs": jobs,
         "exchanges": exchange_counts(final),
         "scans": scan_counts_from_plan(final),
+        "hazards": hazards,
     }
 
 
@@ -337,9 +348,7 @@ def main() -> int:
     # each table's one schema-inference job, before any query's group
     for table in TABLES:
         scan(spark, sf_dir, table)
-    cuts = _CutRecorder(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    cuts = _CutRecorder()
     recs, failed = {}, []
     for i, name in enumerate(names):
         try:
