@@ -71,20 +71,16 @@ def _q_wordcount(spark, sf):
 
 def _q_filter_project(spark, sf):
     li = scan(spark, sf, "lineitem")
-    filtered = relational.filter_(
-        li,
+    filtered = li.filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_quantity") > 10),
+        & (F.col("l_quantity") > 10)
     )
-    return relational.project(
-        filtered,
-        {
-            "l_orderkey": "l_orderkey",
-            "l_linenumber": F.col("l_linenumber").cast("long"),
-            "revenue": F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6),
-            "l_returnflag": "l_returnflag",
-        },
+    return filtered.select(
+        F.col("l_orderkey").alias("l_orderkey"),
+        F.col("l_linenumber").cast("long").alias("l_linenumber"),
+        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias("revenue"),
+        F.col("l_returnflag").alias("l_returnflag"),
     )
 
 
@@ -117,34 +113,36 @@ def _q_group_agg_distinct(spark, sf):
 
 def _q_sort_limit(spark, sf):
     orders = scan(spark, sf, "orders")
-    top = relational.top_k(orders, 100, F.desc("o_totalprice"), F.asc("o_orderkey"))
+    top = orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")).limit(100)
     return top.select("o_orderkey", "o_totalprice")
 
 
 def _q_distinct(spark, sf):
-    return relational.distinct(scan(spark, sf, "lineitem"), ["l_returnflag", "l_linestatus"])
+    return scan(spark, sf, "lineitem").select("l_returnflag", "l_linestatus").distinct()
 
 
 def _q_union(spark, sf):
-    cust = relational.project(
-        scan(spark, sf, "customer"),
-        {"src": F.lit("customer"), "name": "c_name", "acctbal": "c_acctbal", "nationkey": F.col("c_nationkey").cast("long")},
+    cust = scan(spark, sf, "customer").select(
+        F.lit("customer").alias("src"),
+        F.col("c_name").alias("name"),
+        F.col("c_acctbal").alias("acctbal"),
+        F.col("c_nationkey").cast("long").alias("nationkey"),
     )
-    supp = relational.project(
-        scan(spark, sf, "supplier"),
-        {"src": F.lit("supplier"), "name": "s_name", "acctbal": "s_acctbal", "nationkey": F.col("s_nationkey").cast("long")},
+    supp = scan(spark, sf, "supplier").select(
+        F.lit("supplier").alias("src"),
+        F.col("s_name").alias("name"),
+        F.col("s_acctbal").alias("acctbal"),
+        F.col("s_nationkey").cast("long").alias("nationkey"),
     )
-    return relational.union(cust, supp)
+    return cust.unionByName(supp)
 
 
 def _q_join_broadcast(spark, sf):
     cust = scan(spark, sf, "customer")
     nation = scan(spark, sf, "nation")
     region = scan(spark, sf, "region")
-    j = relational.join(
-        cust, nation, cust.c_nationkey == nation.n_nationkey, broadcast_right=True
-    )
-    j = relational.join(j, region, j.n_regionkey == region.r_regionkey, broadcast_right=True)
+    j = cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+    j = j.join(F.broadcast(region), j.n_regionkey == region.r_regionkey)
     return relational.group_agg(
         j, ["r_name"], {"n_cust": ("count_star", None), "avg_bal": ("avg", "c_acctbal")}
     )
@@ -153,7 +151,7 @@ def _q_join_broadcast(spark, sf):
 def _q_join_large(spark, sf):
     orders = scan(spark, sf, "orders")
     li = scan(spark, sf, "lineitem")
-    j = relational.join(li, orders, li.l_orderkey == orders.o_orderkey)
+    j = li.join(orders, li.l_orderkey == orders.o_orderkey)
     return relational.group_agg(
         j,
         ["o_orderpriority"],
@@ -167,14 +165,14 @@ def _q_join_large(spark, sf):
 def _q_join_semi(spark, sf):
     cust = scan(spark, sf, "customer")
     orders = scan(spark, sf, "orders")
-    j = relational.join(cust, orders, cust.c_custkey == orders.o_custkey, how="left_semi")
+    j = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
     return relational.group_agg(j, ["c_mktsegment"], {"n_cust": ("count_star", None)})
 
 
 def _q_join_anti(spark, sf):
     cust = scan(spark, sf, "customer")
     orders = scan(spark, sf, "orders")
-    j = relational.join(cust, orders, cust.c_custkey == orders.o_custkey, how="left_anti")
+    j = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
     return j.select("c_custkey", "c_name")
 
 
@@ -225,7 +223,7 @@ def _q_events_tumbling(spark, sf):
 
 
 def _q_repartition_agg(spark, sf):
-    li = relational.repartition(scan(spark, sf, "lineitem"), 8, "l_returnflag")
+    li = scan(spark, sf, "lineitem").repartition(8, F.col("l_returnflag"))
     return relational.group_agg(li, ["l_returnflag"], {"sum_qty": ("sum", "l_quantity")})
 
 
@@ -257,7 +255,7 @@ def _q_intersect(spark, sf):
     orders = scan(spark, sf, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    return relational.intersect(f, o)
+    return f.intersect(o)
 
 
 def _q_intersect_all(spark, sf):
@@ -281,13 +279,13 @@ def _q_except_all(spark, sf):
 def _q_except(spark, sf):
     cust = scan(spark, sf, "customer").select(F.col("c_custkey").alias("custkey"))
     with_orders = scan(spark, sf, "orders").select(F.col("o_custkey").alias("custkey")).distinct()
-    return relational.except_(cust, with_orders)
+    return cust.exceptAll(with_orders)
 
 
 def _q_join_part(spark, sf):
     li = scan(spark, sf, "lineitem")
     part = scan(spark, sf, "part").filter(F.col("p_size") < 20)
-    j = relational.join(li, part, li.l_partkey == part.p_partkey, broadcast_right=True)
+    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     return relational.group_agg(
         j,
         ["p_brand"],
@@ -1114,13 +1112,15 @@ def _q_csv_roundtrip(spark, sf):
     oracle reads the original parquet, so any serialization drift
     (quoting, types, header) breaks the hash."""
     from mapreduce_faultolerrant_localityaware_spark._scratch import scratch_dir
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
-    from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan_csv
 
     nation = scan(spark, sf, "nation")
     path = scratch_dir("csv") + "/nation"
-    sinks.write_csv(nation, path)
-    back = scan_csv(spark, path, schema="n_nationkey INT, n_name STRING, n_regionkey INT")
+    nation.write.mode("overwrite").option("header", "true").option("sep", ",").csv(path)
+    back = (
+        spark.read.option("header", "true")
+        .schema("n_nationkey INT, n_name STRING, n_regionkey INT")
+        .csv(path)
+    )
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"), F.min("n_name").alias("first_name"))
@@ -1134,11 +1134,10 @@ def _q_orc_roundtrip(spark, sf):
     so any type/value drift through the ORC encode/decode (decimal,
     string, date handling) breaks the hash."""
     from mapreduce_faultolerrant_localityaware_spark._scratch import scratch_dir
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
 
     supp = scan(spark, sf, "supplier")
     path = scratch_dir("orc") + "/supplier"
-    sinks.write_orc(supp, path)
+    supp.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return (
         back.groupBy("s_nationkey")
@@ -1156,13 +1155,11 @@ def _q_json_roundtrip(spark, sf):
     JSON sink, re-scan with an explicit schema (production posture —
     inference is an extra full read), aggregate."""
     from mapreduce_faultolerrant_localityaware_spark._scratch import scratch_dir
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
-    from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan_json
 
     region = scan(spark, sf, "region")
     path = scratch_dir("json") + "/region"
-    sinks.write_json(region, path)
-    back = scan_json(spark, path, schema="r_regionkey INT, r_name STRING")
+    region.write.mode("overwrite").json(path)
+    back = spark.read.schema("r_regionkey INT, r_name STRING").json(path)
     return back.select(
         F.col("r_regionkey").cast("long").alias("r_regionkey"), "r_name"
     ).orderBy("r_regionkey")
@@ -1187,11 +1184,10 @@ def _q_partitioned_roundtrip(spark, sf):
     through the partition encode/decode (escaping, type) breaks the
     hash."""
     from mapreduce_faultolerrant_localityaware_spark._scratch import scratch_dir
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
 
     orders = scan(spark, sf, "orders")
     path = scratch_dir("part") + "/orders"
-    sinks.write_parquet(orders, path, partition_by=["o_orderpriority"])
+    orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
     # explicit schema: a zero-row write leaves no partition dirs to
     # infer from — the read must stay schema-stable (empty sweep); on
     # real data the provided schema matches what inference produced
@@ -1617,7 +1613,7 @@ def _q_streaming_enrich(spark, sf):
     cust = scan(spark, sf, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment"
     )
-    joined = streaming_ops.enrich_stream(stream, cust, "user_id", how="inner").select(
+    joined = stream.join(F.broadcast(cust), "user_id", "inner").select(
         "event_id", "user_id", "event_type", "c_name", "c_mktsegment"
     )
     return streaming_ops.run_to_batch(joined, spark, output_mode="append")
@@ -2860,7 +2856,7 @@ def _q_tpch_q18(spark, sf):
         cust, orders.o_custkey == cust.c_custkey
     )
     out = j.select("c_name", "o_orderkey", "o_totalprice", "sum_qty")
-    return relational.top_k(out, 100, F.desc("o_totalprice"), F.asc("o_orderkey"))
+    return out.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")).limit(100)
 
 
 def _q_multimodal_phash(spark, sf):
@@ -3044,7 +3040,7 @@ def _q_tpch_q10(spark, sf):
     agg = j.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue")
     )
-    return relational.top_k(agg, 20, F.desc("revenue"), F.asc("c_custkey"))
+    return agg.orderBy(F.desc("revenue"), F.asc("c_custkey")).limit(20)
 
 
 def _q_tpch_q14(spark, sf):
@@ -3092,7 +3088,7 @@ def _q_tpch_q3(spark, sf):
     agg = j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6).alias("revenue")
     )
-    return relational.top_k(agg, 10, F.desc("revenue"), F.asc("l_orderkey"))
+    return agg.orderBy(F.desc("revenue"), F.asc("l_orderkey")).limit(10)
 
 
 def _q_tpch_q1(spark, sf):
@@ -3150,9 +3146,9 @@ def _q_tpch_q2(spark, sf):
         "s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
         F.round("unit_cost", 6).alias("unit_cost"),
     )
-    return relational.top_k(
-        out, 100, F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"), F.asc("p_partkey")
-    )
+    return out.orderBy(
+        F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"), F.asc("p_partkey")
+    ).limit(100)
 
 
 def _q_tpch_q8(spark, sf):
@@ -3417,7 +3413,7 @@ def _q_tpch_q21(spark, sf):
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )
-    return relational.top_k(out, 100, F.desc("numwait"), F.asc("s_name"))
+    return out.orderBy(F.desc("numwait"), F.asc("s_name")).limit(100)
 
 
 def _q_tpch_q22(spark, sf):

@@ -9,9 +9,10 @@ tokenize, two-level map-side combine, hash partition, shuffle,
 locality-aware reduce placement, final aggregation, sort, sink,
 worker/master fault tolerance — is a built-in of Spark.  This package
 therefore exposes the reference's *query semantics* (scan → tokenize /
-project / filter → group-aggregate → sort → limit → sink) as thin,
-tested, idiomatic DataFrame operators and delegates execution,
-shuffle, AQE and recovery to Spark wholesale.
+project / filter → group-aggregate → sort → limit → sink) as
+idiomatic DataFrame operators, Spark's own calls wherever one call
+does the job, and delegates execution, shuffle, AQE and recovery to
+Spark wholesale.
 
 Layout:
   session        SparkSession factory (AQE on, sane local defaults)

@@ -43,7 +43,7 @@ from .dedup import (
     shingle_hashes,
 )
 from .graph import pagerank
-from .relational import top_k, top_k_per
+from .relational import top_k_per
 from .wordcount import token_counts, token_rows
 
 def tfidf_top_terms(
@@ -141,7 +141,7 @@ def bigram_counts(
     tk = tokens(text_col, lowercase=True)
     grams = ensure_parallelism(docs).select(F.explode(_bigrams(tk)).alias("bigram"))
     counts = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("n"))
-    return top_k(counts, k, F.desc("n"), F.asc("bigram"))
+    return counts.orderBy(F.desc("n"), F.asc("bigram")).limit(k)
 
 
 def contamination_check(
@@ -839,7 +839,7 @@ def pmi_collocations(
             ),
         )
     )
-    out = top_k(scored, k, F.desc("pmi_raw"), F.asc("w1"), F.asc("w2"))
+    out = scored.orderBy(F.desc("pmi_raw"), F.asc("w1"), F.asc("w2")).limit(k)
     return out.select(
         "w1",
         "w2",

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import lit_double_array
 from ._materialize import materialize_once
-from .relational import bucketed_cum_counts, equidepth_bins, exact_ntile
+from .relational import _floor_div, bucketed_cum_counts, equidepth_bins, exact_ntile
 
 
 def _cents(col: str) -> Column:
@@ -2093,22 +2093,6 @@ def cohort_ltv(
             ).alias("ltv_per_user"),
         )
     )
-
-
-def _floor_div(a, b):
-    """Exact integer FLOOR division as a Column expression — BOTH
-    Spark's ``div`` and DuckDB's integer ``//`` truncate toward zero
-    (verified: -7 // 3 = -2 in DuckDB), diverging from mathematical
-    floor on negative numerators; the pmod-adjusted form is exact for
-    any sign, and oracles mirror it with an explicit -1 CASE
-    correction on inexact negative dividends (the attribution
-    floor-division lesson, generalized).  The division runs in
-    DECIMAL(38,0) — the pmod-adjusted numerator divides EVENLY, and a
-    double intermediate would misround quotients beyond 2⁵³ (verified:
-    (1e17+7) div 3 is off by 3 in the double path)."""
-    return (
-        (a - F.pmod(a, b)).cast("decimal(38,0)") / b.cast("decimal(38,0)")
-    ).cast("long")
 
 
 def theil_sen(

@@ -4,8 +4,7 @@ columns with typed metadata, processed via Arrow-batched Pandas UDFs
 
 The container has no image/audio codecs, so the DECODE step is
 stubbed: ``_stub_from_digest`` produces a deterministic fake feature
-vector from the bytes' sha256 and the real-codec path raises
-NotImplementedError behind ``use_real_codecs=True``.  Everything
+vector from the bytes' sha256.  Everything
 around the stub — schema, batch iteration, partition-parallel
 execution, output typing — is the real Spark plumbing a production
 decode would use unchanged.
@@ -85,16 +84,8 @@ def decode_media(
     blob_col: str = "blob",
     id_col: str = "media_id",
     media_type: str = "image",
-    use_real_codecs: bool = False,
 ) -> DataFrame:
-    """binary column → decoded features via mapInPandas (Arrow batches).
-
-    ``use_real_codecs=True`` is the production path — unavailable in
-    this container (no PIL/ffmpeg), so it raises.
-    """
-    if use_real_codecs:
-        raise NotImplementedError("real image/audio codecs not available in this environment; use the stub path")
-
+    """binary column → decoded features via mapInPandas (Arrow batches)."""
     cols = [f.name for f in DECODED_SCHEMA.fields]
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,17 +1,18 @@
-"""Relational operator layer — the generalized operator surface of
-SURVEY §2.3 (filter / project / group_agg / sort / limit / union /
-distinct / repartition / top-k) plus joins and windows, each a thin
-typed wrapper over the DataFrame API so Catalyst owns the physical
-strategy (pushdown, pruning, broadcast vs sort-merge, AQE).
+"""Relational operator layer — the part of SURVEY §2.3's operator
+surface that is more than one Spark call: grouped, salted, pivoted and
+cubed aggregation, per-group top-k, the salted join, and the window,
+sampling, profiling and audit kernels below.  Filter, project, sort,
+limit, union, distinct, repartition, intersect, except and join are
+Spark's own DataFrame methods, and query builders call them directly,
+so Catalyst owns the physical strategy (pushdown, pruning, broadcast
+vs sort-merge, AQE).
 
-These wrappers deliberately add *nothing* on top of Spark's operators
-except a stable, testable API: the reference's versions of these
-mechanics (map-side combine core/map_reduce.go:548-550 +
-core/workerStruct.go:254-293, hash partition core/utils.go:353-363,
-shuffle core/map_reduce.go:442-520, final sum core/map_reduce.go:150-216,
-sort core/utils.go:367-381) are subsumed by HashAggregate/Exchange/Sort.
+The reference's versions of these mechanics (map-side combine
+core/map_reduce.go:548-550 + core/workerStruct.go:254-293, hash
+partition core/utils.go:353-363, shuffle core/map_reduce.go:442-520,
+final sum core/map_reduce.go:150-216, sort core/utils.go:367-381) are
+subsumed by HashAggregate/Exchange/Sort.
 """
-
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
@@ -30,16 +31,6 @@ _AGG_FNS = {
     "count_distinct": lambda c: F.countDistinct(c),
     "approx_count_distinct": lambda c: F.approx_count_distinct(c),
 }
-
-
-def project(df: DataFrame, exprs: Mapping[str, Column | str]) -> DataFrame:
-    """Named projection; values may be columns/expressions or column names."""
-    cols = [(F.col(v) if isinstance(v, str) else v).alias(k) for k, v in exprs.items()]
-    return df.select(*cols)
-
-
-def filter_(df: DataFrame, predicate: Column | str) -> DataFrame:
-    return df.filter(predicate)
 
 
 def group_agg(
@@ -62,22 +53,6 @@ def group_agg(
     return df.groupBy(*keys).agg(*agg_cols) if keys else df.agg(*agg_cols)
 
 
-def sort(df: DataFrame, *order: Column) -> DataFrame:
-    """Total sort. Callers should supply a full tiebreak (SURVEY Q4)."""
-    return df.orderBy(*order)
-
-
-def limit(df: DataFrame, n: int) -> DataFrame:
-    return df.limit(n)
-
-
-def top_k(df: DataFrame, n: int, *order: Column) -> DataFrame:
-    """orderBy+limit → Spark plans TakeOrderedAndProject: per-partition
-    top-n then a driver merge of n·partitions rows — no total sort, no
-    full shuffle. This is the scale-safe top-k."""
-    return df.orderBy(*order).limit(n)
-
-
 def top_k_per(df: DataFrame, by: Sequence[Column | str], k: int, *order: Column) -> DataFrame:
     """The ``k`` first rows of each ``by`` group under ``order`` (give
     a total order), numbered 1..k in the BIGINT column ``rk``.  One hash
@@ -87,25 +62,6 @@ def top_k_per(df: DataFrame, by: Sequence[Column | str], k: int, *order: Column)
     # the filter as SQL text: one py4j call instead of ~25 for the
     # Column form, same plan (the optimizer unwraps the widening cast)
     return df.withColumn("rk", F.row_number().over(w).cast("long")).filter(f"rk <= {int(k)}")
-
-
-def union(*dfs: DataFrame) -> DataFrame:
-    """Union by column name (reference analog: input-file concatenation,
-    core/utils.go:331)."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def distinct(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    return (df.select(*cols) if cols else df).distinct()
-
-
-def repartition(df: DataFrame, n: int, *cols: str) -> DataFrame:
-    """Explicit hash repartition (reference O2/O6 — with a *correct*
-    key hash, unlike the length-only HashKeyReducerSum, SURVEY Q1)."""
-    return df.repartition(n, *[F.col(c) for c in cols]) if cols else df.repartition(n)
 
 
 #: aggs that decompose as agg(agg(parts)) — safe for salted two-phase
@@ -138,14 +94,6 @@ def group_agg_salted(
     phase1 = group_agg(salted, [*keys, "__salt"], aggs)
     refold = {out: (_DECOMPOSABLE[fn], out) for out, (fn, _) in aggs.items()}
     return group_agg(phase1, list(keys), refold)
-
-
-def intersect(df: DataFrame, other: DataFrame) -> DataFrame:
-    return df.intersect(other)
-
-
-def except_(df: DataFrame, other: DataFrame) -> DataFrame:
-    return df.exceptAll(other)
 
 
 def pivot(
@@ -198,24 +146,6 @@ def join_salted(
     )
     replicated = skewed_small.crossJoin(F.broadcast(salts))
     return salted_big.join(replicated, [key, "__salt"], how).drop("__salt")
-
-
-def join(
-    df: DataFrame,
-    other: DataFrame,
-    on,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Join with optional explicit broadcast of the right side.
-
-    Catalyst auto-broadcasts below autoBroadcastJoinThreshold; the
-    explicit hint is for dimension tables whose smallness Catalyst
-    can't prove (e.g. after filters). The reference has no joins at
-    all (SURVEY §2.2) — this is part of the generalized surface.
-    """
-    right = F.broadcast(other) if broadcast_right else other
-    return df.join(right, on, how)
 
 
 def sample_stratified(
@@ -1129,12 +1059,17 @@ def gini_index(
     )
 
 
-def _pos_div(a: Column, b: Column) -> Column:
-    """Exact integer floor division for NON-NEGATIVE operands as a
-    Column: the pmod-adjusted numerator divides evenly, and the
-    division runs in DECIMAL(38,0) so quotients stay exact beyond 2⁵³
-    (the events._floor_div lesson; this copy drops the negative-sign
-    handling because every ntile rank/size here is ≥ 0)."""
+def _floor_div(a, b):
+    """Exact integer FLOOR division as a Column expression — BOTH
+    Spark's ``div`` and DuckDB's integer ``//`` truncate toward zero
+    (verified: -7 // 3 = -2 in DuckDB), diverging from mathematical
+    floor on negative numerators; the pmod-adjusted form is exact for
+    any sign, and oracles mirror it with an explicit -1 CASE
+    correction on inexact negative dividends (the attribution
+    floor-division lesson, generalized).  The division runs in
+    DECIMAL(38,0) — the pmod-adjusted numerator divides EVENLY, and a
+    double intermediate would misround quotients beyond 2⁵³ (verified:
+    (1e17+7) div 3 is off by 3 in the double path)."""
     return (
         (a - F.pmod(a, b)).cast("decimal(38,0)") / b.cast("decimal(38,0)")
     ).cast("long")
@@ -1422,7 +1357,7 @@ def exact_ntile(
         "__v",
         "__t",
         "__cb",
-        _pos_div(F.col("__n"), F.lit(n_tiles)).alias("__bsz"),
+        _floor_div(F.col("__n"), F.lit(n_tiles)).alias("__bsz"),
         F.pmod(F.col("__n"), F.lit(n_tiles)).cast("long").alias("__rem"),
     )
 
@@ -1431,8 +1366,8 @@ def exact_ntile(
         # ceil via (x + d − 1) div d; greatest() keeps the untaken
         # __bsz = 0 branch from dividing by zero.
         big = F.col("__rem") * (F.col("__bsz") + 1)
-        first = _pos_div(rn + F.col("__bsz"), F.col("__bsz") + 1)
-        rest = F.col("__rem") + _pos_div(
+        first = _floor_div(rn + F.col("__bsz"), F.col("__bsz") + 1)
+        rest = F.col("__rem") + _floor_div(
             rn - big + F.col("__bsz") - 1, F.greatest(F.col("__bsz"), F.lit(1))
         )
         return F.when(rn <= big, first).otherwise(rest)

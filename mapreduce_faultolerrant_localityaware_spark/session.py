@@ -16,6 +16,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of the host's physical memory, capped at 16g: the heap
+    grows lazily toward its limit, so a flat 16g lets one long session
+    take most of a small host."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, phys // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "mapreduce_faultolerrant_localityaware_spark",
     master: str | None = None,
@@ -46,7 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # reliable-checkpoint files (graph rounds, js_divergence's

@@ -1,24 +1,16 @@
-from .scans import TABLES, scan, scan_csv, scan_json, scan_text, scan_tokens
+from .scans import TABLES, scan, scan_text, scan_tokens
 from .sinks import (
     format_tokens,
     write_bucketed,
-    write_csv,
-    write_json,
-    write_parquet,
     write_tokens,
 )
 
 __all__ = [
     "TABLES",
     "scan",
-    "scan_csv",
-    "scan_json",
     "scan_text",
     "scan_tokens",
     "format_tokens",
     "write_bucketed",
-    "write_csv",
-    "write_json",
-    "write_parquet",
     "write_tokens",
 ]

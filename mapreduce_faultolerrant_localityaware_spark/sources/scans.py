@@ -11,6 +11,12 @@ hdfs://, file://) replace the hand-rolled S3 wrapper.  We deliberately
 do NOT replicate byte-range chunking that cuts words in half — the
 reference's own test treats those artifacts as noise (SURVEY Q3);
 line-based reading gives the intended semantics.
+
+CSV, JSON and ORC inputs are read with Spark's own ``spark.read``
+(give an explicit ``.schema``: inference is an extra full read).  This
+module holds the scans that add something to it: ``scan`` (the schema
+catalog and the events ``ts`` normalisation), ``scan_text`` and
+``scan_tokens`` (the reference's ``K->V`` format).
 """
 
 from __future__ import annotations
@@ -149,33 +155,6 @@ def scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         ensure_nanos_readable(spark, path)
         return _normalize_events_ts(_read_parquet(spark, path))
     return _read_parquet(spark, os.path.join(sf_dir, f"{table}.parquet"))
-
-
-def scan_csv(spark: SparkSession, paths: str | list[str], schema=None, header: bool = True) -> DataFrame:
-    """CSV source.  Always pass an explicit schema in production —
-    inference is an extra full read of the input."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(paths)
-
-
-def scan_json(spark: SparkSession, paths: str | list[str], schema=None) -> DataFrame:
-    """JSON-lines source; same explicit-schema guidance as CSV."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(paths)
-
-
-def scan_orc(spark: SparkSession, paths: str | list[str], schema=None) -> DataFrame:
-    """ORC source; columnar with predicate pushdown, like parquet."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(paths)
 
 
 def scan_tokens(spark: SparkSession, path: str) -> DataFrame:

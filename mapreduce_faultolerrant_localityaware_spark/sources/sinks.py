@@ -6,6 +6,11 @@ lines joined by CRLF to ``outTokens.list``
 an optional master-side collect (core/map_reduce.go:619-635).  At
 100 TB a driver collect is forbidden — the distributed text write is
 the default; ``format_tokens`` exists for small/test outputs only.
+
+Parquet, CSV, JSON and ORC outputs are Spark's own
+``df.write.mode("overwrite")`` calls.  This module holds the
+reference's ``K->V`` format and the layout writers (range-clustered,
+bucketed, Z-order) with their file statistics and compaction.
 """
 
 from __future__ import annotations
@@ -29,31 +34,6 @@ def format_tokens(rows, sep: str = "\r\n") -> str:
     (core/utils.go:720).  Test/small-output use only.
     """
     return sep.join(f"{k}->{v}" for k, v in rows)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).option("sep", sep).csv(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    """JSON-lines sink (one object per row, one file per partition)."""
-    df.write.mode("overwrite").json(path)
-
-
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """ORC sink — the other columnar interchange format (Hive
-    ecosystems); same pushdown/pruning properties as parquet."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
 
 
 def write_clustered(

@@ -1,7 +1,5 @@
 from .enrich_stream import (
-    dedup_stream,
     deduped_update_counts,
-    enrich_stream,
     fuzzy_dedup_stream,
     incremental_dedup_stream,
     interval_join_streams,
@@ -26,9 +24,7 @@ from .wordcount_stream import (
 
 __all__ = [
     "IdempotentBatchSink",
-    "dedup_stream",
     "deduped_update_counts",
-    "enrich_stream",
     "fuzzy_dedup_stream",
     "incremental_dedup_stream",
     "interval_join_streams",

@@ -1,13 +1,11 @@
-"""Streaming enrichment operators: stream-static join, sliding-window
-aggregation, and watermarked streaming deduplication.
+"""Streaming enrichment operators: sliding-window aggregation,
+deduplicated update-mode counts, interval joins and streaming
+near-duplicate filters.
 
 All are incremental variants of the batch surface (the reference is
 batch-only, SURVEY §1.4); each keeps bounded state under unbounded
 input — the property that matters when the stream is a firehose:
 
-- stream-static join: the static dimension is broadcast per
-  micro-batch (re-resolved each batch, so slowly-changing dims pick up
-  updates); the stream side never shuffles for the join.
 - sliding windows: state is windows-per-slide within the watermark
   horizon — memory is O(keys × windows_in_horizon).
 - streaming dedup: `dropDuplicatesWithinWatermark` keeps one state
@@ -15,6 +13,10 @@ input — the property that matters when the stream is a firehose:
   dedup under unbounded input with bounded memory, the streaming
   analog of the reference's replay guard (core/map_reduce.go:167-182,
   which dedups re-sent chunk shares by id).
+
+A stream-static join is Spark's own ``stream.join(F.broadcast(dim),
+on, how)``: the static dimension is broadcast per micro-batch, so the
+stream side never shuffles for the join.
 """
 
 from __future__ import annotations
@@ -29,17 +31,6 @@ from ..operators.dedup import (
     simhash,
     simhash_pair_bands,
 )
-
-
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static equi-join; the static side is broadcast so the
-    streaming side's micro-batches never shuffle."""
-    return events.join(F.broadcast(dim), on, how)
 
 
 def sliding_event_counts(
@@ -63,16 +54,6 @@ def sliding_event_counts(
             "n_events",
         )
     )
-
-
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Exactly-once-per-key emission within the watermark horizon."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def deduped_update_counts(

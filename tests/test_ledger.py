@@ -74,7 +74,7 @@ def test_ledger(sf_dir, tmp_path, ledger):
         [sys.executable, _TOOL, "--ledger", str(out)],
         cwd=_REPO,
         # a 2 GB driver heap keeps the whole-surface build near 2.6 GB of
-        # RSS; under the session's 16 GB default it grows past 5.8 GB
+        # RSS, on any host; under a 16 GB heap it grew past 5.8 GB
         env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_DRIVER_MEM="2g"),
         capture_output=True,
         text=True,

@@ -39,11 +39,6 @@ def test_decode_media_stub_schema_and_determinism(media_df):
         assert 64 <= rows1[k]["width"] < 256
 
 
-def test_decode_media_real_codecs_unavailable(media_df):
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(media_df, use_real_codecs=True)
-
-
 def test_frame_sample_plan_explodes(media_df):
     out = multimodal.frame_sample_plan(media_df, every_n=1)
     counts = {r["media_id"]: r["n"] for r in out.groupBy("media_id").agg(F.count("*").alias("n")).collect()}

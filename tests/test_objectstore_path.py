@@ -23,7 +23,6 @@ import tempfile
 from pyspark.sql import functions as F
 
 from mapreduce_faultolerrant_localityaware_spark.operators.wordcount import wordcount_from_text
-from mapreduce_faultolerrant_localityaware_spark.sources import sinks
 from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 
 
@@ -45,15 +44,15 @@ def test_engine_sinks_and_scans_over_nonlocal_scheme(spark, sf_dir):
         root = _mount(spark, tmp, "objstorea")
         nation = scan(spark, sf_dir, "nation")
 
-        # plain parquet round-trip through the engine sink
-        sinks.write_parquet(nation, f"{root}/nation")
+        # plain parquet round-trip
+        nation.write.mode("overwrite").parquet(f"{root}/nation")
         back = spark.read.parquet(f"{root}/nation")
         assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
 
         # hive-partitioned layout (the 100 TB lake primitive) on the
         # non-local scheme: partition pruning must still see the dirs
         orders = scan(spark, sf_dir, "orders")
-        sinks.write_parquet(orders, f"{root}/orders", partition_by=["o_orderpriority"])
+        orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(f"{root}/orders")
         urgent = (
             spark.read.parquet(f"{root}/orders")
             .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -68,7 +67,7 @@ def test_engine_sinks_and_scans_over_nonlocal_scheme(spark, sf_dir):
         # an engine QUERY over data scanned from the non-local scheme
         # equals the same query over the original file:// table
         docs = scan(spark, sf_dir, "documents")
-        sinks.write_parquet(docs, f"{root}/documents")
+        docs.write.mode("overwrite").parquet(f"{root}/documents")
         wc_obj = wordcount_from_text(spark.read.parquet(f"{root}/documents"), "text", sort=False)
         wc_loc = wordcount_from_text(docs, "text", sort=False)
         assert sorted(map(tuple, wc_obj.collect())) == sorted(map(tuple, wc_loc.collect()))
@@ -168,7 +167,6 @@ MOCKS3_SCRIPT = textwrap.dedent(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
     from mapreduce_faultolerrant_localityaware_spark.operators.graph import (
         connected_components,
@@ -179,7 +177,7 @@ MOCKS3_SCRIPT = textwrap.dedent(
         # the credentials contract: no creds -> initialize() must fail
         # BEFORE any data moves, like S3A with no provider chain
         try:
-            sinks.write_parquet(nation, "mocks3://bucket/nation")
+            nation.write.mode("overwrite").parquet("mocks3://bucket/nation")
         except Exception as e:
             msg = str(e)
             assert "credentials" in msg, msg[:500]
@@ -187,14 +185,14 @@ MOCKS3_SCRIPT = textwrap.dedent(
             sys.exit(0)
         raise AssertionError("write without credentials unexpectedly succeeded")
 
-    # engine sink -> engine read round-trip over the bucket scheme
-    sinks.write_parquet(nation, "mocks3://bucket/nation")
+    # parquet write -> read round-trip over the bucket scheme
+    nation.write.mode("overwrite").parquet("mocks3://bucket/nation")
     back = spark.read.parquet("mocks3://bucket/nation")
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
 
     # hive-partitioned layout + partition discovery on the bucket
     orders = scan(spark, sf_dir, "orders")
-    sinks.write_parquet(orders, "mocks3://bucket/orders", partition_by=["o_orderpriority"])
+    orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet("mocks3://bucket/orders")
     urgent = (spark.read.parquet("mocks3://bucket/orders")
               .filter(F.col("o_orderpriority") == "1-URGENT").count())
     assert urgent == orders.filter(F.col("o_orderpriority") == "1-URGENT").count()

@@ -1,4 +1,4 @@
-"""Operator-layer tests: relational wrappers, dedup, similarity,
+"""Operator-layer tests: relational operators, dedup, similarity,
 textstats — semantics on small data plus plan-shape guardrails
 (pushdown / broadcast / no-Python-UDF) that encode the 100 TB
 properties correctness tests can't see.
@@ -15,6 +15,7 @@ from mapreduce_faultolerrant_localityaware_spark.operators import (
     similarity,
     textstats,
 )
+from mapreduce_faultolerrant_localityaware_spark.operators.relational import _floor_div
 from mapreduce_faultolerrant_localityaware_spark.plans import (
     assert_broadcast_join,
     assert_no_python_udf,
@@ -44,9 +45,17 @@ def test_group_agg_all_fns(spark):
     assert rows["b"]["av"] == 2.0 and rows["b"]["mn"] == 2.0 and rows["b"]["mx"] == 2.0
 
 
+def test_floor_div_exact(spark):
+    # floor, not truncation, on a negative numerator; exact beyond 2**53
+    cases = [(7, 3, 2), (-7, 3, -3), (-6, 3, -2), (10**17 + 7, 3, 33333333333333335)]
+    df = spark.createDataFrame([(a, b) for a, b, _ in cases], "a long, b long")
+    got = [r["q"] for r in df.select(_floor_div(F.col("a"), F.col("b")).alias("q")).collect()]
+    assert got == [q for _, _, q in cases]
+
+
 def test_top_k_uses_take_ordered(spark, sf_dir):
     orders = scan(spark, sf_dir, "orders")
-    top = relational.top_k(orders, 5, F.desc("o_totalprice"), F.asc("o_orderkey"))
+    top = orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")).limit(5)
     plan = top._jdf.queryExecution().executedPlan().toString()
     # orderBy+limit must plan as TakeOrderedAndProject — per-partition
     # top-n + driver merge, never a total sort (the scale-safe shape)
@@ -63,22 +72,22 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
 def test_dim_join_goes_broadcast(spark, sf_dir):
     cust = scan(spark, sf_dir, "customer")
     nation = scan(spark, sf_dir, "nation")
-    j = relational.join(cust, nation, cust.c_nationkey == nation.n_nationkey, broadcast_right=True)
+    j = cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
     assert_broadcast_join(j)
 
 
 def test_union_distinct_limit(spark):
     a = spark.createDataFrame([(1,), (2,)], ["x"])
     b = spark.createDataFrame([(2,), (3,)], ["x"])
-    u = relational.union(a, b)
+    u = a.unionByName(b)
     assert u.count() == 4
-    assert sorted(r["x"] for r in relational.distinct(u).collect()) == [1, 2, 3]
-    assert relational.limit(u, 2).count() == 2
+    assert sorted(r["x"] for r in u.distinct().collect()) == [1, 2, 3]
+    assert u.limit(2).count() == 2
 
 
 def test_repartition_key_partitioning(spark):
     df = spark.createDataFrame([(i, i % 3) for i in range(100)], ["x", "k"])
-    rp = relational.repartition(df, 6, "k")
+    rp = df.repartition(6, F.col("k"))
     assert rp.rdd.getNumPartitions() == 6
     # same key never straddles partitions (correct hash partitioning —
     # the property the reference's length-only hash also had, SURVEY Q1)

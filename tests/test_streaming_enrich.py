@@ -7,11 +7,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from mapreduce_faultolerrant_localityaware_spark.streaming import (
-    dedup_stream,
-    enrich_stream,
-    sliding_event_counts,
-)
+from mapreduce_faultolerrant_localityaware_spark.streaming import sliding_event_counts
 import pytest
 
 pytestmark = [pytest.mark.slow, pytest.mark.streaming]
@@ -35,7 +31,7 @@ def test_enrich_stream_static_join(spark):
         spark.readStream.format("rate").option("rowsPerSecond", "50").load()
         .select((F.col("value") % 3).alias("key"), F.col("timestamp").alias("ts"))
     )
-    out = enrich_stream(src, dim, "key")
+    out = src.join(F.broadcast(dim), "key", "left")
     q = out.writeStream.format("memory").queryName("enr_out").outputMode("append").start()
     try:
         ok = _run_until(q, lambda: spark.table("enr_out").count() > 10)
@@ -69,7 +65,7 @@ def test_dedup_stream_drops_repeats(spark):
         spark.readStream.format("rate").option("rowsPerSecond", "100").load()
         .select((F.col("value") % 5).alias("k"), F.col("timestamp").alias("ts"))
     )
-    out = dedup_stream(src, ["k"], watermark="10 minutes")
+    out = src.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(["k"])
     q = out.writeStream.format("memory").queryName("dd_out").outputMode("append").start()
     try:
         ok = _run_until(q, lambda: spark.table("dd_out").count() >= 5)

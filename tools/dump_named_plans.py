@@ -13,15 +13,16 @@ graph round loop, a multi-consumer frame), each under a
 ``== cut <i> ==`` header in cut order, then two lines:
 
     rows=<n> sha1=<digest of the sorted row reprs>
-    py4j=<non-"m" py4j commands of a second construction> construct_jobs=<n>
+    py4j=<non-"m" py4j commands of the construction> construct_jobs=<n>
 
 A cut's consumers read its checkpointed blocks, so the final plan
 shows only a scan of the checkpointed RDD where the cut frame's stages
 were; without the cut plans a change to those stages would diff
 clean.  The cuts are recorded by wrapping ``materialize_once`` in
-every package module during the first construction only (every
-module-level name bound to it is rebound, as ``perfbench/tracing.py``
-does), so ``py4j`` still counts the query alone.
+every package module while the query is built (every module-level
+name bound to it is rebound, as ``perfbench/tracing.py`` does); the
+py4j counter is paused while a cut's plan is printed, so ``py4j``
+still counts the query alone.
 
 A query whose construction or collection raises (an unknown name
 included) gets a file holding one ``error=<type>: <message>`` line
@@ -29,12 +30,11 @@ included) gets a file holding one ``error=<type>: <message>`` line
 exits 1 at the end.
 
 ``py4j`` counts the commands Python sends to the JVM while the
-query's ``_q_`` function runs a second time in the warm session (the
-first construction pays one-off costs such as schema resolution);
-``m`` commands (py4j object releases) follow the Python garbage
-collector, not the code, and are left out.  ``construct_jobs`` counts
-the Spark jobs the first construction starts itself (its own job
-group, read from ``statusTracker()``): the eager ``materialize_once``
+query's ``_q_`` function runs, once per query; ``m`` commands (py4j
+object releases) follow the Python garbage collector, not the code,
+and are left out.  ``construct_jobs`` counts the Spark jobs the
+construction starts itself (its own job group, read from
+``statusTracker()``): the eager ``materialize_once``
 barriers and driver collects.  The jobs adaptive execution submits for
 each query stage inside them are left out: how many it submits follows
 timing (a stage a sibling already runs is not submitted again; one
@@ -209,13 +209,14 @@ class _Py4jCounter:
 
         client.send_command = send_command
 
-    def count(self, fn) -> int:
+    def count(self, fn):
+        """``fn()`` and the number of commands it sent."""
         self.n, self.on = 0, True
         try:
-            fn()
+            out = fn()
         finally:
             self.on = False
-        return self.n
+        return out, self.n
 
 
 class _CutRecorder:
@@ -223,14 +224,19 @@ class _CutRecorder:
     cuts while recording; the wrapper is bound in every package module
     only for the duration of :meth:`record`."""
 
-    def __init__(self) -> None:
+    def __init__(self, py4j: _Py4jCounter) -> None:
         from mapreduce_faultolerrant_localityaware_spark.operators import _materialize
 
         self.plans = []
         self.orig = _materialize.materialize_once
 
         def materialize_once(df, *args, **kwargs):
-            self.plans.append(self.explain(df))
+            # printing the plan is the tool's own traffic, not the query's
+            on, py4j.on = py4j.on, False
+            try:
+                self.plans.append(self.explain(df))
+            finally:
+                py4j.on = on
             return self.orig(df, *args, **kwargs)
 
         self.wrapper = materialize_once
@@ -286,7 +292,7 @@ def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        df = cuts.record(lambda: qs[name](spark, sf_dir))
+        df, calls = py4j.count(lambda: cuts.record(lambda: qs[name](spark, sf_dir)))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -299,7 +305,7 @@ def _record(spark, qs, name, sf_dir, py4j, cuts, group) -> dict:
         "plan": text,
         "rows": len(rows),
         "rows_sha1": hashlib.sha1("\n".join(rows).encode()).hexdigest(),
-        "py4j": py4j.count(lambda: qs[name](spark, sf_dir)),
+        "py4j": calls,
         "construct_jobs": jobs,
         "exchanges": exchange_counts(final),
         "scans": scan_counts_from_plan(final),
@@ -348,7 +354,7 @@ def main() -> int:
     # each table's one schema-inference job, before any query's group
     for table in TABLES:
         scan(spark, sf_dir, table)
-    cuts = _CutRecorder()
+    cuts = _CutRecorder(py4j)
     recs, failed = {}, []
     for i, name in enumerate(names):
         try:
