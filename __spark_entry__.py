@@ -86,28 +86,22 @@ def _q_filter_project(spark, sf):
 
 def _q_group_agg(spark, sf):
     li = scan(spark, sf, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
-    return relational.group_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        {
-            "sum_qty": ("sum", "l_quantity"),
-            "sum_base_price": ("sum", "l_extendedprice"),
-            "sum_disc_price": ("sum", F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-            "avg_qty": ("avg", "l_quantity"),
-            "avg_price": ("avg", "l_extendedprice"),
-            "min_qty": ("min", "l_quantity"),
-            "max_qty": ("max", "l_quantity"),
-            "count_order": ("count_star", None),
-        },
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        F.sum("l_quantity").alias("sum_qty"),
+        F.sum("l_extendedprice").alias("sum_base_price"),
+        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
+        F.avg("l_quantity").alias("avg_qty"),
+        F.avg("l_extendedprice").alias("avg_price"),
+        F.min("l_quantity").alias("min_qty"),
+        F.max("l_quantity").alias("max_qty"),
+        F.count(F.lit(1)).alias("count_order"),
     )
 
 
 def _q_group_agg_distinct(spark, sf):
     orders = scan(spark, sf, "orders")
-    return relational.group_agg(
-        orders,
-        ["o_orderpriority"],
-        {"n_cust": ("count_distinct", "o_custkey"), "n_orders": ("count_star", None)},
+    return orders.groupBy("o_orderpriority").agg(
+        F.countDistinct("o_custkey").alias("n_cust"), F.count(F.lit(1)).alias("n_orders")
     )
 
 
@@ -143,8 +137,8 @@ def _q_join_broadcast(spark, sf):
     region = scan(spark, sf, "region")
     j = cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
     j = j.join(F.broadcast(region), j.n_regionkey == region.r_regionkey)
-    return relational.group_agg(
-        j, ["r_name"], {"n_cust": ("count_star", None), "avg_bal": ("avg", "c_acctbal")}
+    return j.groupBy("r_name").agg(
+        F.count(F.lit(1)).alias("n_cust"), F.avg("c_acctbal").alias("avg_bal")
     )
 
 
@@ -152,13 +146,9 @@ def _q_join_large(spark, sf):
     orders = scan(spark, sf, "orders")
     li = scan(spark, sf, "lineitem")
     j = li.join(orders, li.l_orderkey == orders.o_orderkey)
-    return relational.group_agg(
-        j,
-        ["o_orderpriority"],
-        {
-            "revenue": ("sum", F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-            "n_items": ("count_star", None),
-        },
+    return j.groupBy("o_orderpriority").agg(
+        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+        F.count(F.lit(1)).alias("n_items"),
     )
 
 
@@ -166,7 +156,7 @@ def _q_join_semi(spark, sf):
     cust = scan(spark, sf, "customer")
     orders = scan(spark, sf, "orders")
     j = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-    return relational.group_agg(j, ["c_mktsegment"], {"n_cust": ("count_star", None)})
+    return j.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n_cust"))
 
 
 def _q_join_anti(spark, sf):
@@ -224,13 +214,18 @@ def _q_events_tumbling(spark, sf):
 
 def _q_repartition_agg(spark, sf):
     li = scan(spark, sf, "lineitem").repartition(8, F.col("l_returnflag"))
-    return relational.group_agg(li, ["l_returnflag"], {"sum_qty": ("sum", "l_quantity")})
+    return li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("sum_qty"))
 
 
 def _q_pivot(spark, sf):
     li = scan(spark, sf, "lineitem")
-    out = relational.pivot(li, "l_returnflag", "l_linestatus", ["F", "O"], "sum_qty", "sum", "l_quantity")
-    # single-agg pivot names columns by pivot value alone ("F", "O")
+    # explicit pivot values: Spark would otherwise run a job to find them;
+    # a single-agg pivot names columns by pivot value alone ("F", "O")
+    out = (
+        li.groupBy("l_returnflag")
+        .pivot("l_linestatus", ["F", "O"])
+        .agg(F.sum("l_quantity").alias("sum_qty"))
+    )
     return out.select(
         "l_returnflag",
         F.col("F").alias("f_sum_qty"),
@@ -240,8 +235,8 @@ def _q_pivot(spark, sf):
 
 def _q_cube(spark, sf):
     li = scan(spark, sf, "lineitem")
-    out = relational.cube_agg(
-        li, ["l_returnflag", "l_linestatus"], {"sum_qty": ("sum", "l_quantity"), "n_rows": ("count_star", None)}
+    out = li.cube("l_returnflag", "l_linestatus").agg(
+        F.sum("l_quantity").alias("sum_qty"), F.count(F.lit(1)).alias("n_rows")
     )
     return out.select(
         F.coalesce(F.col("l_returnflag"), F.lit("ALL")).alias("returnflag"),
@@ -286,10 +281,9 @@ def _q_join_part(spark, sf):
     li = scan(spark, sf, "lineitem")
     part = scan(spark, sf, "part").filter(F.col("p_size") < 20)
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    return relational.group_agg(
-        j,
-        ["p_brand"],
-        {"revenue": ("sum", F.col("l_extendedprice") * (1 - F.col("l_discount"))), "n_items": ("count_star", None)},
+    return j.groupBy("p_brand").agg(
+        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+        F.count(F.lit(1)).alias("n_items"),
     )
 
 
@@ -325,21 +319,25 @@ def _q_subquery_above_avg(spark, sf):
     orders = scan(spark, sf, "orders")
     cust_avg = orders.groupBy("o_custkey").agg(F.avg("o_totalprice").alias("cust_avg"))
     j = orders.join(cust_avg, "o_custkey").filter(F.col("o_totalprice") > F.col("cust_avg"))
-    return relational.group_agg(j, ["o_orderpriority"], {"n_above": ("count_star", None)})
+    return j.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_above"))
 
 
 def _q_events_json(spark, sf):
-    ev = events_ops.extract_json_prop(scan(spark, sf, "events"))
-    return relational.group_agg(
-        ev, ["event_type"], {"sum_k": ("sum", "k"), "n_k": ("count", "k")}
+    ev = scan(spark, sf, "events").withColumn(
+        "k", F.get_json_object(F.col("props"), "$.k").cast("long")
     )
+    return ev.groupBy("event_type").agg(F.sum("k").alias("sum_k"), F.count("k").alias("n_k"))
 
 
 def _q_events_variant(spark, sf):
     """Same property pulled through the VARIANT encode→typed-get path
     instead of get_json_object, with a selective predicate on the
     extracted value — results must match the plain-JSON oracle."""
-    ev = events_ops.variant_prop(scan(spark, sf, "events"))
+    # parse_json encodes the document once per row; a query reading many
+    # properties pays one parse, not one JSON pass per extracted path
+    ev = scan(spark, sf, "events").withColumn(
+        "k", F.try_variant_get(F.parse_json(F.col("props")), "$.k", "long")
+    )
     return (
         ev.filter(F.col("k") >= 50)
         .groupBy("event_type")
@@ -351,7 +349,10 @@ def _q_events_variant(spark, sf):
 
 
 def _q_window_lag(spark, sf):
-    ev = events_ops.with_lag(scan(spark, sf, "events"))
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev = scan(spark, sf, "events").withColumn("prev_value", F.lag("value").over(w))
     return ev.select("event_id", "user_id", F.round(F.col("prev_value"), 6).alias("prev_value"))
 
 
@@ -2330,10 +2331,8 @@ def _q_range_join(spark, sf):
         ["band", "lo", "hi"],
     )
     j = temporal.range_join(orders, bands, "o_totalprice", "lo", "hi")
-    return relational.group_agg(
-        j,
-        ["band"],
-        {"n_orders": ("count_star", None), "sum_price": ("sum", "o_totalprice")},
+    return j.groupBy("band").agg(
+        F.count(F.lit(1)).alias("n_orders"), F.sum("o_totalprice").alias("sum_price")
     ).withColumn("sum_price", F.round("sum_price", 2))
 
 
@@ -3488,8 +3487,8 @@ def _q_join_skew_salted(spark, sf):
     li = scan(spark, sf, "lineitem")
     supp = scan(spark, sf, "supplier").withColumnRenamed("s_suppkey", "l_suppkey")
     j = relational.join_salted(li, supp, "l_suppkey", salt_buckets=4)
-    return relational.group_agg(
-        j, ["s_name"], {"n_items": ("count_star", None), "sum_qty": ("sum", "l_quantity")}
+    return j.groupBy("s_name").agg(
+        F.count(F.lit(1)).alias("n_items"), F.sum("l_quantity").alias("sum_qty")
     )
 
 
@@ -3604,12 +3603,11 @@ def _q_graph_common_neighbors(spark, sf):
 def _q_approx_distinct(spark, sf):
     """HyperLogLog++ distinct estimation — approximate by design, so no
     value-exact SQL oracle (driver records the weaker rows-only check);
-    tests/test_operators.py asserts the estimate within rsd of exact."""
+    tests/test_graph_salt_sinks.py asserts the estimate within rsd of exact."""
     orders = scan(spark, sf, "orders")
-    return relational.group_agg(
-        orders,
-        ["o_orderpriority"],
-        {"n_cust_approx": ("approx_count_distinct", "o_custkey"), "n_orders": ("count_star", None)},
+    return orders.groupBy("o_orderpriority").agg(
+        F.approx_count_distinct("o_custkey").alias("n_cust_approx"),
+        F.count(F.lit(1)).alias("n_orders"),
     )
 
 

@@ -1,16 +1,16 @@
 """Event-stream and statistical-test batch operators.
 
-Families: event shaping (JSON/VARIANT properties, lag windows, gap
-sessions and their stats, rules and paths, funnels, patterns, Markov
-transitions, attribution); users and cohorts (growth, actives, LTV,
-survival, log-rank); anomaly and drift (z-score, MAD, Hampel, CUSUM,
-changepoint, PSI, KS, Benford); series (ACF, cross-correlation,
-smoothers, seasonality, forecast, Durbin-Watson, runs, Theil-Sen,
-isotonic); experiments (A/B, SRM, CUPED, diff-in-diff, Welch,
-Mann-Whitney, power, delta method, BH, sequential, off-policy);
-association and k-sample tests (chi-square, Cramér's V, MI, Spearman,
-Kendall, ANOVA, Kruskal-Wallis, Levene, Cochran-Armitage); model
-evaluation (ROC-AUC, lift, calibration, Wilson) and sketch rollups.
+Families: event shaping (gap sessions and their stats, rules and
+paths, funnels, patterns, Markov transitions, attribution); users and
+cohorts (growth, actives, LTV, survival, log-rank); anomaly and drift
+(z-score, MAD, Hampel, CUSUM, changepoint, PSI, KS, Benford); series
+(ACF, cross-correlation, smoothers, seasonality, forecast,
+Durbin-Watson, runs, Theil-Sen, isotonic); experiments (A/B, SRM, CUPED,
+diff-in-diff, Welch, Mann-Whitney, power, delta method, BH,
+sequential, off-policy); association and k-sample tests (chi-square,
+Cramér's V, MI, Spearman, Kendall, ANOVA, Kruskal-Wallis, Levene,
+Cochran-Armitage); model evaluation (ROC-AUC, lift, calibration,
+Wilson) and sketch rollups.
 
 Each test is one pass of mergeable exact-integer sums (values in
 cents, :func:`_cents`), then a closed form on a one-row or
@@ -138,37 +138,6 @@ def _split_at_midpoint(events: DataFrame, value_col: str, ts_col: str) -> DataFr
     return base.join(F.broadcast(bounds)).select(
         "c", (F.col("t") < F.col("tmid")).alias("is_ref")
     )
-
-
-def extract_json_prop(
-    events: DataFrame, prop_path: str = "$.k", props_col: str = "props", out: str = "k"
-) -> DataFrame:
-    """Pull a typed scalar out of a JSON properties column."""
-    return events.withColumn(out, F.get_json_object(F.col(props_col), prop_path).cast("long"))
-
-
-def variant_prop(
-    events: DataFrame, prop_path: str = "$.k", props_col: str = "props", out: str = "k"
-) -> DataFrame:
-    """Open-schema property access via the VARIANT type (Spark 4):
-    ``parse_json`` binary-encodes the document once and
-    ``try_variant_get`` does typed path access on the encoded form —
-    at lake scale the parse cost is paid per ROW at ingest/scan, not
-    per extracted path per query, which is the difference between one
-    and N Jackson passes when a query touches many properties of a
-    wide event document."""
-    v = F.parse_json(F.col(props_col))
-    return events.withColumn(out, F.try_variant_get(v, prop_path, "long"))
-
-
-def with_lag(
-    events: DataFrame,
-    value_col: str = "value",
-    user_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-) -> DataFrame:
-    w = Window.partitionBy(user_col).orderBy(*order_cols)
-    return events.withColumn("prev_value", F.lag(value_col).over(w))
 
 
 def sessionize(
@@ -2787,7 +2756,7 @@ def welch_ttest(
     try_divide/nullif, not an ANSI error.
 
     Scale shape: ONE partial-agged global aggregate carrying six
-    conditional sums — the group_agg shape, no window, no join.
+    conditional sums, no window, no join.
     Returns one row ``(n_a, n_b, mean_a, mean_b, t_stat, df_ws)``.
     """
     is_a = F.col(group_col) == group_a

@@ -56,15 +56,10 @@ from ._materialize import Rounds, materialize_once, release_checkpoint
 _truncate_lineage = materialize_once
 
 
-def _sym_edges(pairs: DataFrame, src: str, dst: str, directed: bool = False) -> DataFrame:
-    """``(s, d)``: each non-loop edge once per direction (once in all if
-    ``directed``); self-loops and NULL endpoints are dropped."""
+def _sym_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(s, d)``: each non-loop edge once per direction; self-loops and
+    NULL endpoints are dropped."""
     s, d = _quoted(src), _quoted(dst)
-    if directed:
-        # the filter after the distinct: between the two it would keep the
-        # optimizer from merging an upstream distinct union (the MinHash
-        # candidates) into this one, a shuffle more; it is pushed down anyway
-        return pairs.selectExpr(f"{s} AS s", f"{d} AS d").distinct().filter("s != d")
     # both orientations from one pass over ``pairs`` (a union of two
     # projections would plan the whole upstream twice); the filter goes
     # before the ``inline``, which it cannot pass to reach the scan
@@ -219,7 +214,8 @@ def connected_components_two_phase(
 
     Output schema matches ``connected_components``: (doc_id, cluster_id).
     """
-    edges = materialize_once(_undirected(pairs, src, dst))
+    cuts = Rounds(pairs.sparkSession, "edges")
+    edges = cuts.cut(0, _undirected(pairs, src, dst))
     all_nodes = materialize_once(
         edges.select(F.col("u").alias("id"))
         .unionByName(edges.select(F.col("v").alias("id")))
@@ -253,11 +249,8 @@ def connected_components_two_phase(
         return _undirected(out, "a", "b")
 
     prev = _digest(edges)
-    prev_ckpt = edges
-    for _ in range(max_iter):
-        edges = materialize_once(_star(_star(edges, large=True), large=False))
-        release_checkpoint(prev_ckpt)  # contracted edge set materialized; old blocks dead
-        prev_ckpt = edges
+    for i in range(1, max_iter + 1):
+        edges = cuts.cut(i, _star(_star(edges, large=True), large=False))
         cur = _digest(edges)
         if cur == prev:
             break
@@ -555,21 +548,23 @@ def label_propagation(
     labels = edges.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for _ in range(rounds):
+    cuts = Rounds(pairs.sparkSession, "labels")
+    for i in range(1, rounds + 1):
         votes = (
             edges.join(labels, edges["d"] == labels["node"])
             .select(F.col("s"), F.col("label"))
             .groupBy("s", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = materialize_once(
+        labels = cuts.cut(
+            i,
             votes.groupBy("s")
             .agg(
                 (
                     F.max(F.struct(F.col("c"), (-F.col("label")).alias("neg")))["neg"] * -1
                 ).alias("label")
             )
-            .select(F.col("s").alias("node"), "label")
+            .select(F.col("s").alias("node"), "label"),
         )
     return labels.select("node", F.col("label").cast("long").alias("label"))
 
@@ -602,14 +597,16 @@ def kcore_peel(
     Returns ``node, core_deg`` for nodes still present after
     ``rounds`` peels, with their degree in the surviving subgraph.
     """
-    edges = materialize_once(_sym_edges(pairs, src, dst))
-    for _ in range(rounds):
+    cuts = Rounds(pairs.sparkSession, "edges")
+    edges = cuts.cut(0, _sym_edges(pairs, src, dst))
+    for i in range(1, rounds + 1):
         deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
         keep = deg.filter(F.col("c") >= k).select("s")
-        edges = materialize_once(
+        edges = cuts.cut(
+            i,
             edges.join(keep, "s", "left_semi").join(
                 keep.withColumnRenamed("s", "d"), "d", "left_semi"
-            )
+            ),
         )
     return (
         edges.groupBy("s")
@@ -661,21 +658,20 @@ def degree_histogram(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    directed: bool = False,
 ) -> DataFrame:
     """Degree distribution of a graph: ``(degree, n_nodes)`` — the
     first diagnostic run on any web/citation/dup graph (power-law tail
     => hub-aware strategies like the LSH bucket caps; a spike at k =>
     a template/mirror family).
 
-    ``directed=False`` counts distinct neighbors per node over the
-    symmetrized edge list; self-loops are dropped.  Two partial-agged
-    shuffles (node -> degree, degree -> count), each carrying a pair
-    of integers — nothing here grows with edge payload width, so the
-    100 TB shape is the classic two-round MapReduce degree count.
+    Counts distinct neighbors per node over the symmetrized edge list;
+    self-loops are dropped.  Two partial-agged shuffles (node ->
+    degree, degree -> count), each carrying a pair of integers —
+    nothing here grows with edge payload width, so the 100 TB shape is
+    the classic two-round MapReduce degree count.
     """
     deg = (
-        _sym_edges(edges, src, dst, directed)
+        _sym_edges(edges, src, dst)
         .groupBy("s")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )

@@ -1,56 +1,26 @@
 """Relational operator layer — the part of SURVEY §2.3's operator
-surface that is more than one Spark call: grouped, salted, pivoted and
-cubed aggregation, per-group top-k, the salted join, and the window,
-sampling, profiling and audit kernels below.  Filter, project, sort,
-limit, union, distinct, repartition, intersect, except and join are
-Spark's own DataFrame methods, and query builders call them directly,
-so Catalyst owns the physical strategy (pushdown, pruning, broadcast
-vs sort-merge, AQE).
+surface that is more than one Spark call: per-group top-k, the salted
+join, and the window, sampling, profiling and audit kernels below.
+Filter, project, sort, limit, union, distinct, repartition, intersect,
+except, join and grouped, pivoted and cubed aggregation are Spark's own
+DataFrame methods, and query builders call them directly, so Catalyst
+owns the physical strategy (pushdown, pruning, broadcast vs
+sort-merge, partial aggregation, AQE).
 
 The reference's versions of these mechanics (map-side combine
 core/map_reduce.go:548-550 + core/workerStruct.go:254-293, hash
 partition core/utils.go:353-363, shuffle core/map_reduce.go:442-520,
 final sum core/map_reduce.go:150-216, sort core/utils.go:367-381) are
-subsumed by HashAggregate/Exchange/Sort.
+subsumed by HashAggregate/Exchange/Sort: the partial HashAggregate is
+the combiner, so a hot aggregation key sends at most one row per map
+task to its reducer and needs no salt.
 """
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-#: agg name → builder. group_agg(keys, {"out": ("sum", "col")})
-_AGG_FNS = {
-    "count": lambda c: F.count(c),
-    "count_star": lambda _: F.count(F.lit(1)),
-    "sum": lambda c: F.sum(c),
-    "min": lambda c: F.min(c),
-    "max": lambda c: F.max(c),
-    "avg": lambda c: F.avg(c),
-    "count_distinct": lambda c: F.countDistinct(c),
-    "approx_count_distinct": lambda c: F.approx_count_distinct(c),
-}
-
-
-def group_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Mapping[str, tuple[str, Column | str | None]],
-) -> DataFrame:
-    """Grouped aggregation: ``aggs`` maps output name → (fn, input).
-
-    Partial (map-side) + final aggregation is automatic — this is the
-    generalization of the reference's two combiner levels and its
-    Reduce sum (SURVEY O5/O8/O10).
-    """
-    agg_cols = []
-    for out, (fn, inp) in aggs.items():
-        if fn not in _AGG_FNS:
-            raise KeyError(f"unknown agg {fn!r}; have {sorted(_AGG_FNS)}")
-        col = F.col(inp) if isinstance(inp, str) else inp
-        agg_cols.append(_AGG_FNS[fn](col).alias(out))
-    return df.groupBy(*keys).agg(*agg_cols) if keys else df.agg(*agg_cols)
 
 
 def top_k_per(df: DataFrame, by: Sequence[Column | str], k: int, *order: Column) -> DataFrame:
@@ -62,65 +32,6 @@ def top_k_per(df: DataFrame, by: Sequence[Column | str], k: int, *order: Column)
     # the filter as SQL text: one py4j call instead of ~25 for the
     # Column form, same plan (the optimizer unwraps the widening cast)
     return df.withColumn("rk", F.row_number().over(w).cast("long")).filter(f"rk <= {int(k)}")
-
-
-#: aggs that decompose as agg(agg(parts)) — safe for salted two-phase
-_DECOMPOSABLE = {"sum": "sum", "count": "sum", "count_star": "sum", "min": "min", "max": "max"}
-
-
-def group_agg_salted(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Mapping[str, tuple[str, Column | str | None]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for SKEWED group keys: pre-aggregate on
-    (keys, random salt) — spreading one hot key over ``salt_buckets``
-    reducers — then re-aggregate on keys alone.
-
-    The second shuffle carries only keys × salt_buckets rows, so the
-    hot key's cost is split ~evenly.  Only decomposable aggs (sum,
-    count, min, max) qualify; avg/count_distinct need rewriting as
-    sum/count pairs by the caller.  For garden-variety skew prefer AQE
-    skew handling (on by default in session.py); this operator is for
-    the pathological key that dominates a partition by itself — the
-    situation the reference *creates* by hashing only on key length
-    (SURVEY Q1).
-    """
-    for out, (fn, _) in aggs.items():
-        if fn not in _DECOMPOSABLE:
-            raise ValueError(f"agg {fn!r} ({out}) is not decomposable for salting")
-    salted = df.withColumn("__salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    phase1 = group_agg(salted, [*keys, "__salt"], aggs)
-    refold = {out: (_DECOMPOSABLE[fn], out) for out, (fn, _) in aggs.items()}
-    return group_agg(phase1, list(keys), refold)
-
-
-def pivot(
-    df: DataFrame,
-    group_key: str,
-    pivot_col: str,
-    pivot_values: Sequence[str],
-    agg_name: str,
-    agg_fn: str,
-    agg_input: str,
-) -> DataFrame:
-    """Pivot with EXPLICIT values — never let Spark scan for distinct
-    pivot values (that's an extra job over the full input at scale)."""
-    agg = _AGG_FNS[agg_fn](F.col(agg_input)).alias(agg_name)
-    return df.groupBy(group_key).pivot(pivot_col, list(pivot_values)).agg(agg)
-
-
-def cube_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Mapping[str, tuple[str, Column | str | None]],
-) -> DataFrame:
-    agg_cols = []
-    for out, (fn, inp) in aggs.items():
-        col = F.col(inp) if isinstance(inp, str) else inp
-        agg_cols.append(_AGG_FNS[fn](col).alias(out))
-    return df.cube(*keys).agg(*agg_cols)
 
 
 def join_salted(
@@ -173,9 +84,9 @@ def sample_stratified(
 def key_skew_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
     """Heavy-hitter diagnostic for a join/aggregation key: the top-k
     keys by row count with their corpus share — the report that decides
-    whether a key needs salting (`salted_agg`/`join_skew_salted`)
-    before a 100 TB shuffle, and the batch analog of AQE's runtime
-    skew detection.
+    whether a join key needs salting (:func:`join_salted`) before a
+    100 TB shuffle, and the batch analog of AQE's runtime skew
+    detection.
 
     Shape: one partial-agged groupBy carries (key, count); the grand
     total is a 1-row aggregate broadcast back (deliberate 1-row
@@ -1719,7 +1630,7 @@ def k_anonymity(
     percentage is the single final division.
 
     Scale shape: one shuffle to the equivalence-class domain table,
-    one 1-row rollup — the same two-exchange shape as group_agg, at
+    one 1-row rollup — the same two-exchange shape as a grouped count, at
     any corpus size.  Returns one row ``(n_rows, n_classes,
     k_anonymity, l_diversity, n_rows_below_k, pct_below_k)``.
     """

@@ -1,9 +1,5 @@
 from .scans import TABLES, scan, scan_text, scan_tokens
-from .sinks import (
-    format_tokens,
-    write_bucketed,
-    write_tokens,
-)
+from .sinks import format_tokens, write_tokens
 
 __all__ = [
     "TABLES",
@@ -11,6 +7,5 @@ __all__ = [
     "scan_text",
     "scan_tokens",
     "format_tokens",
-    "write_bucketed",
     "write_tokens",
 ]

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapreduce_faultolerrant_localityaware_spark.operators import dedup, graph, relational, textstats
+from mapreduce_faultolerrant_localityaware_spark.operators import dedup, graph, textstats
 from mapreduce_faultolerrant_localityaware_spark.operators.wordcount import wordcount_from_text
 
 _SCHEMA = T.StructType(
@@ -93,7 +93,7 @@ def test_group_agg_null_keys(spark):
     )
     got = {
         r["k"]: r["s"]
-        for r in relational.group_agg(df, ["k"], {"s": ("sum", "v")}).collect()
+        for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()
     }
     assert got == {None: 3.0, "a": 3.0}  # null is one group (SQL semantics)
 
@@ -108,7 +108,7 @@ def test_empty_input_frames(spark):
     empty = _docs(spark, [])
     assert wordcount_from_text(empty, "text").count() == 0
     assert dedup.dedup_exact(empty).count() == 0
-    assert relational.group_agg(empty, ["doc_id"], {"n": ("count_star", None)}).count() == 0
+    assert empty.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).count() == 0
 
 
 def test_bpe_token_stats_edges(spark):

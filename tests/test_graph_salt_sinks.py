@@ -1,16 +1,16 @@
 """Tests: connected components (vs a pure-Python union-find oracle),
-salted join equivalence, approx_count_distinct accuracy, and the new
-sink formats."""
+salted join equivalence, approx_count_distinct accuracy, the CSV,
+JSON and ORC sinks, and the round loops' checkpoint release."""
 
 from __future__ import annotations
 
-import glob
-
+import pytest
 from pyspark.sql import functions as F
 
-from mapreduce_faultolerrant_localityaware_spark.operators import relational
+from mapreduce_faultolerrant_localityaware_spark.operators import _materialize, graph, relational
+from mapreduce_faultolerrant_localityaware_spark.operators._materialize import materialize_once
 from mapreduce_faultolerrant_localityaware_spark.operators.graph import connected_components
-from mapreduce_faultolerrant_localityaware_spark.sources import scans, sinks
+from mapreduce_faultolerrant_localityaware_spark.sources import scans
 
 
 def _uf_components(edges):
@@ -95,34 +95,63 @@ def test_orc_sink_roundtrip(spark, sf_dir, tmp_path):
     assert "PushedFilters: [IsNotNull(s_suppkey), EqualTo(s_suppkey,7)]" in plan
 
 
-def test_write_bucketed_layout(spark, sf_dir, tmp_path):
-    supp = scans.scan(spark, sf_dir, "supplier")
-    try:
-        sinks.write_bucketed(supp, "supp_bt", str(tmp_path / "supp_bt"), "s_suppkey", 4)
-        # bucket-suffixed files (part-*_0000N) present, readable, complete;
-        # empty buckets write no file, so expect ≥2 distinct buckets
-        files = glob.glob(str(tmp_path / "supp_bt" / "*.parquet"))
-        buckets = {f.rsplit("_", 1)[1].split(".")[0] for f in files}
-        assert len(buckets) >= 2
-        assert spark.table("supp_bt").count() == supp.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS supp_bt")
+def _chain(spark, n: int, *extra: tuple):
+    """The path 0 - 1 - ... - n, plus the ``extra`` edges."""
+    edges = [(i, i + 1) for i in range(n)] + list(extra)
+    return spark.createDataFrame(edges, "doc_a long, doc_b long")
 
 
-def test_cc_releases_checkpoint_blocks(spark):
-    """Each propagation round frees the previous round's localCheckpoint
-    blocks: a long chain (many rounds) must leave at most the FINAL
-    labels checkpoint cached, not one relation per round."""
+#: each round loop, as a call whose loop runs more rounds as ``n`` grows
+_ROUND_LOOPS = {
+    # min-label propagation: one round per hop of the chain
+    "connected_components": lambda spark, n: connected_components(_chain(spark, n), max_iter=30),
+    # star contraction: O(log² n) rounds, so the chain grows as 2**n
+    "connected_components_two_phase": lambda spark, n: graph.connected_components_two_phase(
+        _chain(spark, 2**n)
+    ),
+    "label_propagation": lambda spark, n: graph.label_propagation(_chain(spark, 6), rounds=n),
+    # a path ending in the triangle 4-5-6: the 2-core never peels empty
+    "kcore_peel": lambda spark, n: graph.kcore_peel(_chain(spark, 6, (6, 4)), rounds=n),
+}
+
+
+def _left_cached(spark, monkeypatch, name: str, n: int) -> int:
+    """RDDs that ``name``'s loop at ``n`` leaves cached.  Every frame
+    the loop cuts is held alive meanwhile: the ContextCleaner frees an
+    unreachable one after a JVM GC, at no fixed time, so only the
+    operator's own release may free blocks here."""
+    kept = []
+
+    def keep(df, *args, **kwargs):
+        kept.append(materialize_once(df, *args, **kwargs))
+        return kept[-1]
+
+    monkeypatch.setattr(_materialize, "materialize_once", keep)
+    monkeypatch.setattr(graph, "materialize_once", keep)
     sc = spark.sparkContext
 
-    def n_cached():
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    def cached() -> set:
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
-    )
-    before = n_cached()
-    out = connected_components(pairs, max_iter=30)
-    assert all(r["cluster_id"] == 0 for r in out.collect())
-    leaked = n_cached() - before
-    assert leaked <= 1, f"checkpoint blocks leaked: {leaked} extra cached RDDs"
+    before = cached()
+    try:
+        _ROUND_LOOPS[name](spark, n).collect()
+        return len(cached() - before)
+    finally:
+        monkeypatch.undo()
+
+
+def test_cc_releases_checkpoint_blocks(spark, monkeypatch):
+    """Each propagation round frees the previous round's localCheckpoint
+    blocks: a long chain (many rounds) must leave only the FINAL labels
+    checkpoint cached, not one relation per round."""
+    left = [_left_cached(spark, monkeypatch, "connected_components", n) for n in (2, 8)]
+    assert left == [1, 1], f"checkpoint blocks leaked: {left} cached RDDs at 2 and 8 rounds"
+
+
+@pytest.mark.parametrize("name", sorted(set(_ROUND_LOOPS) - {"connected_components"}))
+def test_round_loops_release_checkpoint_blocks(spark, monkeypatch, name):
+    """A round loop frees each superseded round's blocks, so the RDDs it
+    leaves cached do not grow with its round count."""
+    left = [_left_cached(spark, monkeypatch, name, n) for n in (2, 8)]
+    assert left[0] == left[1], f"{name} leaves {left} cached RDDs at 2 and 8 rounds"

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from mapreduce_faultolerrant_localityaware_spark.operators import (
     dedup,
-    relational,
     similarity,
     textstats,
 )
@@ -22,27 +21,6 @@ from mapreduce_faultolerrant_localityaware_spark.plans import (
     assert_pushed_filters,
 )
 from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
-
-
-def test_group_agg_all_fns(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("b", 2.0), ("a", 1.0)], ["k", "v"]
-    )
-    out = relational.group_agg(
-        df,
-        ["k"],
-        {
-            "n": ("count_star", None),
-            "s": ("sum", "v"),
-            "mn": ("min", "v"),
-            "mx": ("max", "v"),
-            "av": ("avg", "v"),
-            "nd": ("count_distinct", "v"),
-        },
-    )
-    rows = {r["k"]: r for r in out.collect()}
-    assert rows["a"]["n"] == 3 and rows["a"]["s"] == 5.0 and rows["a"]["nd"] == 2
-    assert rows["b"]["av"] == 2.0 and rows["b"]["mn"] == 2.0 and rows["b"]["mx"] == 2.0
 
 
 def test_floor_div_exact(spark):

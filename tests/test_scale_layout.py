@@ -6,7 +6,6 @@ tables (written under /tmp; the read-only testdata is untouched):
   produce a plan whose scan lists only matching partitions
 - bucketed co-located join: two tables bucketed on the join key must
   join with NO shuffle exchange
-- salted aggregation: identical results to plain group_agg under skew
 - RDD two-level-combine parity: the reference's explicit combiner
   pipeline (SURVEY O5/O8/O10) equals the DataFrame plan's output
 """
@@ -19,7 +18,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from mapreduce_faultolerrant_localityaware_spark.operators import relational
 from mapreduce_faultolerrant_localityaware_spark.operators.wordcount import (
     wordcount_from_text,
     wordcount_rdd,
@@ -74,23 +72,6 @@ def test_bucketed_join_no_shuffle(spark, sf_dir, tmpdir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
-def test_salted_agg_matches_plain(spark, sf_dir):
-    li = scan(spark, sf_dir, "lineitem")
-    aggs = {"sum_qty": ("sum", "l_quantity"), "n": ("count_star", None), "mx": ("max", "l_extendedprice")}
-    plain = {tuple(r[:1]): r[1:] for r in relational.group_agg(li, ["l_returnflag"], aggs).collect()}
-    salted = {tuple(r[:1]): r[1:] for r in relational.group_agg_salted(li, ["l_returnflag"], aggs).collect()}
-    assert plain.keys() == salted.keys()
-    for k in plain:
-        assert plain[k][1] == salted[k][1] and plain[k][2] == salted[k][2]
-        assert abs(plain[k][0] - salted[k][0]) < 1e-6
-
-
-def test_salted_agg_rejects_nondecomposable(spark, sf_dir):
-    li = scan(spark, sf_dir, "lineitem")
-    with pytest.raises(ValueError, match="not decomposable"):
-        relational.group_agg_salted(li, ["l_returnflag"], {"a": ("avg", "l_quantity")})
 
 
 def test_rdd_combiner_parity(spark, sf_dir):
@@ -229,61 +210,3 @@ def test_runtime_bloom_filter_join(spark, sf_dir):
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             "10GB",
         )
-
-
-def test_zorder_ranked_prunes_skewed_domains(spark, tmpdir):
-    """Raw-value interleaving fails on skewed/unequal-width domains
-    (one dimension dominates the high bits); equi-depth rank
-    bucketization first restores both-axis pruning.  x is a heavy
-    power-law id, y is a tiny-range category code."""
-    import random
-
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
-
-    rng = random.Random(7)
-    rows = [(int(rng.paretovariate(1.2) * 100), rng.randrange(16)) for _ in range(20000)]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    path = f"{tmpdir}/zorder_ranked"
-    sinks.write_zorder_ranked(df, path, "x", "y", bits=8, n_files=16)
-    back = spark.read.parquet(path)
-    assert back.count() == len(rows)
-    stats = (
-        back.withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg(F.min("x"), F.max("x"), F.min("y"), F.max("y"))
-        .collect()
-    )
-    n_files = len(stats)
-    assert n_files >= 8
-    # a selective range on EACH axis must be prunable by min/max stats
-    x_lo, x_hi = 100, 150          # dense low end of the pareto ids
-    y_lo, y_hi = 0, 3              # quarter of the category codes
-    x_hit = sum(1 for r in stats if r["min(x)"] <= x_hi and r["max(x)"] >= x_lo)
-    y_hit = sum(1 for r in stats if r["min(y)"] <= y_hi and r["max(y)"] >= y_lo)
-    assert x_hit < n_files
-    assert y_hit < n_files
-
-
-def test_compaction_and_table_stats(spark, tmpdir):
-    """Small-file compaction rewrites an over-fragmented table into
-    row-count-sized files, preserving every row; table_stats exposes
-    the per-file manifest both before (many tiny files) and after."""
-    from mapreduce_faultolerrant_localityaware_spark.sources import sinks
-
-    df = spark.range(0, 10000).withColumn("v", F.col("id") % 7)
-    frag = f"{tmpdir}/fragmented"
-    df.repartition(64).write.mode("overwrite").parquet(frag)  # 64 tiny files
-    before = sinks.table_stats(spark, frag, ["id"]).collect()
-    assert len(before) == 64
-    assert sum(r["n_rows"] for r in before) == 10000
-
-    compacted = f"{tmpdir}/compacted"
-    n_out = sinks.compact_files(spark, frag, compacted, target_rows_per_file=5000)
-    assert n_out == 2
-    after = sinks.table_stats(spark, compacted, ["id"]).collect()
-    assert len(after) == 2
-    assert sum(r["n_rows"] for r in after) == 10000
-    # row-preserving: same multiset of ids
-    a = spark.read.parquet(frag).groupBy("v").count().collect()
-    b = spark.read.parquet(compacted).groupBy("v").count().collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
