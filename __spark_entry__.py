@@ -10,7 +10,10 @@ derived from the module's ``_q_<name>`` functions.
 To add a query, define ``_q_<name>``, then add its ``oracle_sql()``
 entry or a ``NO_ORACLE`` reason (tests/test_artifact_freshness.py),
 then regenerate the CORRECTNESS artifacts (tools/check_oracle.py
---json).
+--json).  A new operator takes no option that its query does not set:
+it uses its query's column names and thresholds as literals
+(tests/test_artifact_freshness.py fails on a defaulted parameter that
+no call sets).
 
 Column-name + type parity rules used throughout: every computed
 column is aliased identically on both sides; integer outputs are cast
@@ -357,7 +360,7 @@ def _q_window_lag(spark, sf):
 
 
 def _q_sessionize(spark, sf):
-    ev = events_ops.sessionize(scan(spark, sf, "events"), gap_minutes=30)
+    ev = events_ops.sessionize(scan(spark, sf, "events"))
     return ev.select("event_id", "user_id", "session_id")
 
 
@@ -568,14 +571,14 @@ def _q_decayed_sum(spark, sf):
     anchored at max(ts) — integer-micro deterministic contributions."""
     from mapreduce_faultolerrant_localityaware_spark.operators.temporal import decayed_sum
 
-    return decayed_sum(scan(spark, sf, "events"), half_life_hours=24.0)
+    return decayed_sum(scan(spark, sf, "events"))
 
 
 def _q_sample_weighted(spark, sf):
     """Deterministic weighted downsampling: keep with probability
     min(1, n_tokens/100) via an md5-uniform of the key — reproducible,
     append-stable, engine-portable."""
-    return corpus.sample_weighted(scan(spark, sf, "documents"), scale_tokens=100)
+    return corpus.sample_weighted(scan(spark, sf, "documents"))
 
 
 def _q_quality_gate(spark, sf):
@@ -840,7 +843,7 @@ def _q_streaming_fuzzy_dedup(spark, sf):
         F.col("doc_id") % 5 == 0
     )
     base = scan(spark, sf, "documents").where(F.col("doc_id") % 5 != 0)
-    out = streaming_ops.fuzzy_dedup_stream(delta, base, max_hamming=3)
+    out = streaming_ops.fuzzy_dedup_stream(delta, base)
     return streaming_ops.run_to_batch(out, spark, output_mode="append")
 
 
@@ -914,7 +917,7 @@ def _q_streaming_join(spark, sf):
     ev = streaming_ops.stream_table(spark, sf, "events")
     clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = ev.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
-    joined = interval_join_streams(clicks, views, on="user_id", tolerance="5 minutes")
+    joined = interval_join_streams(clicks, views)
     out = joined.select(
         F.col("l.event_id").alias("click_id"),
         F.col("l.user_id").alias("user_id"),
@@ -947,8 +950,7 @@ def _q_streaming_join_outer(spark, sf):
     clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = ev.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
     joined = interval_join_streams(
-        clicks, views, on="user_id", tolerance="5 minutes",
-        watermark="10 minutes", how="leftOuter",
+        clicks, views, how="leftOuter",
     )
     out = joined.select(
         F.col("l.event_id").alias("click_id"),
@@ -1046,7 +1048,7 @@ def _q_ann_recall_report(spark, sf):
     """Recall@5 of the IVF index vs exact brute force per query."""
     emb = scan(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    return similarity.ann_recall_report(emb, queries_df, k=5)
+    return similarity.ann_recall_report(emb, queries_df)
 
 
 def _q_ann_hard_negatives(spark, sf):
@@ -1060,7 +1062,7 @@ def _q_ann_hard_negatives(spark, sf):
 def _q_ann_ivf(spark, sf):
     emb = scan(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    return similarity.ann_ivf(emb, queries_df, k=5)
+    return similarity.ann_ivf(emb, queries_df)
 
 
 def _q_ann_ivf_kmeans(spark, sf):
@@ -1070,7 +1072,7 @@ def _q_ann_ivf_kmeans(spark, sf):
     # recall>=0.9-vs-bruteforce bar.
     emb = scan(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    return similarity.ann_ivf_kmeans(emb, queries_df, k=5, n_cells=10, nprobe=2)
+    return similarity.ann_ivf_kmeans(emb, queries_df, n_cells=10, nprobe=2)
 
 
 def _q_ann_incremental(spark, sf):
@@ -1085,7 +1087,7 @@ def _q_ann_incremental(spark, sf):
     fresh = emb.filter(F.col("vec_id") % 10 == 0)
     queries_df = emb.filter(F.col("vec_id") < 8)
     return similarity.ann_incremental(
-        base, fresh, queries_df, k=5, n_cells=10, nprobe=2
+        base, fresh, queries_df, n_cells=10, nprobe=2
     )
 
 
@@ -1172,7 +1174,7 @@ def _q_ann_ivfpq(spark, sf):
     (two iterative fits); recall>=0.9 pytest vs bruteforce."""
     emb = scan(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    return similarity.ann_ivfpq(emb, queries_df, k=5)
+    return similarity.ann_ivfpq(emb, queries_df)
 
 
 def _q_partitioned_roundtrip(spark, sf):
@@ -1331,7 +1333,7 @@ def _q_streaming_sessionize(spark, sf):
     )
 
     stream = streaming_ops.stream_table(spark, sf, "events").select("user_id", "ts")
-    sess = sessionize_stream(stream, gap_minutes=30)
+    sess = sessionize_stream(stream)
     updates = streaming_ops.run_to_batch(sess, spark, output_mode="update")
     return (
         updates.groupBy("user_id", "session_start_us")
@@ -1351,7 +1353,7 @@ def _q_streaming_session_window(spark, sf):
     gaps-and-islands sessionization (break at gap >= 30 min, end =
     last event + gap)."""
     stream = streaming_ops.stream_table(spark, sf, "events")
-    sess = streaming_ops.session_window_counts(stream, gap="30 minutes")
+    sess = streaming_ops.session_window_counts(stream)
     out = streaming_ops.run_to_batch(sess, spark)
     return out.select(
         "user_id",
@@ -1379,7 +1381,7 @@ def _q_streaming_sessionize_flush(spark, sf):
     )
 
     stream = streaming_ops.stream_table(spark, sf, "events").select("user_id", "ts")
-    sess = sessionize_stream(stream, gap_minutes=30, timeout=True, watermark="30 minutes")
+    sess = sessionize_stream(stream, timeout=True)
     updates = streaming_ops.run_to_batch(sess, spark, output_mode="update")
     return (
         updates.groupBy("user_id", "session_start_us")
@@ -1468,7 +1470,7 @@ def _q_streaming_idempotent_sink(spark, sf):
         )
 
     streaming_ops.run_idempotent_replay(
-        spark, in_dir, schema, out, agg, output_mode="update", crash_batch_id=1
+        spark, in_dir, schema, out, agg, output_mode="update"
     )
     return streaming_ops.read_latest_per_key(spark, out, ["event_type"])
 
@@ -1498,7 +1500,7 @@ def _q_events_pattern(spark, sf):
     stream runs exactly view -> click -> purchase with no intervening
     event — one window pass, no self-joins."""
     ev = scan(spark, sf, "events")
-    return events_ops.pattern_match(ev, pattern=("view", "click", "purchase"))
+    return events_ops.pattern_match(ev)
 
 
 def _q_rolling_median(spark, sf):
@@ -1593,9 +1595,7 @@ def _q_streaming_late_data(spark, sf):
     ev = scan(spark, sf, "events").select("event_id", "ts", "event_type", "value")
     in_dir = streaming_ops.stage_three_batch_input(spark, ev)
     schema = spark.read.parquet(in_dir).schema
-    agg = streaming_ops.late_window_counts(
-        spark, in_dir, schema, window_len="1 hour", delay="1 hour"
-    )
+    agg = streaming_ops.late_window_counts(spark, in_dir, schema)
     out = streaming_ops.run_to_batch(agg, spark, output_mode="append")
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -1624,7 +1624,7 @@ def _q_streaming_ohlc(spark, sf):
     """Streaming OHLC bars — identical associative aggregation to the
     batch resample_ohlc, run over watermarked tumbling windows."""
     stream = streaming_ops.stream_table(spark, sf, "events")
-    bars = streaming_ops.ohlc_stream(stream, window="1 day", watermark="1 day")
+    bars = streaming_ops.ohlc_stream(stream)
     return streaming_ops.run_to_batch(bars, spark)
 
 
@@ -1633,7 +1633,7 @@ def _q_streaming_quality_filter(spark, sf):
     score+filter per arriving doc; the accumulated append output must
     equal the batch filter."""
     stream = streaming_ops.stream_table(spark, sf, "documents")
-    kept = streaming_ops.quality_filter_stream(stream, threshold=0.5).withColumn(
+    kept = streaming_ops.quality_filter_stream(stream).withColumn(
         "n_tokens", F.col("n_tokens").cast("long")
     )
     return streaming_ops.run_to_batch(kept, spark, output_mode="append")
@@ -1738,20 +1738,20 @@ def _q_pareto_front(spark, sf):
     ).filter(F.col("x") > 0).select(
         "doc_id", "x", F.expr("nd * 1000000L div x").alias("y")
     )
-    return pareto_front(pts, "x", "y", "doc_id")
+    return pareto_front(pts)
 
 
 def _q_ngram_novelty(spark, sf):
     """Per-doc trigram novelty vs earlier corpus: md5-long shingle
     keys, first-seen via one min-aggregate exchange, integer-micro
     novelty ratio."""
-    return corpus.ngram_novelty(scan(spark, sf, "documents"), n=3)
+    return corpus.ngram_novelty(scan(spark, sf, "documents"))
 
 
 def _q_mad_outliers(spark, sf):
     """Per-event-type median/MAD robust outlier profile over exact
     cent-scaled integers (bit-stable medians at q=0.5)."""
-    return events_ops.mad_outliers(scan(spark, sf, "events"), threshold=3.0)
+    return events_ops.mad_outliers(scan(spark, sf, "events"))
 
 
 def _q_mmr_diversify(spark, sf):
@@ -1760,7 +1760,7 @@ def _q_mmr_diversify(spark, sf):
     Rows-only (greedy has no SQL form); pytest-pinned vs a pure-python
     reference."""
     return similarity.mmr_diversify(
-        scan(spark, sf, "embeddings"), query_id=0, shortlist=32, k=8, lam=0.7
+        scan(spark, sf, "embeddings"), query_id=0, shortlist=32, k=8
     )
 
 
@@ -1849,7 +1849,7 @@ def _q_heaps_fit(spark, sf):
     """Heaps'-law vocabulary-growth fit: first-appearance doc per
     type + exact doc-id percentile cutoffs (no global ntile), log-log
     OLS as a fixed-order in-row fold."""
-    return corpus.heaps_fit(scan(spark, sf, "documents"), n_checkpoints=20)
+    return corpus.heaps_fit(scan(spark, sf, "documents"))
 
 
 def _q_user_growth(spark, sf):
@@ -1876,9 +1876,7 @@ def _q_sample_weighted_k(spark, sf):
     """Efraimidis–Spirakis exact-k weighted sample with an md5-derived
     uniform: −ln(u)/w keys, k smallest win via a TakeOrdered heap —
     deterministic weighted sampling without replacement."""
-    return relational.sample_weighted_k(
-        scan(spark, sf, "documents"), k=50, weight_col="n_chars"
-    )
+    return relational.sample_weighted_k(scan(spark, sf, "documents"))
 
 
 def _q_join_cardinality(spark, sf):
@@ -1922,16 +1920,14 @@ def _q_textrank_keywords(spark, sf):
     """Corpus-level TextRank: integer fixed-point PageRank over the
     word-adjacency graph (rare words pruned first), reusing the
     bit-reproducible graph.pagerank under an unrolled-CTE oracle."""
-    return corpus.textrank_keywords(scan(spark, sf, "documents"), min_count=5, k=20)
+    return corpus.textrank_keywords(scan(spark, sf, "documents"), k=20)
 
 
 def _q_histogram_equidepth(spark, sf):
     """Equi-depth histogram of l_extendedprice: exact-percentile edges
     from one 1-row aggregate, map-side binning, no global sort or
     raw-row ntile window."""
-    return relational.histogram_equidepth(
-        scan(spark, sf, "lineitem"), "l_extendedprice", n_bins=10, scale=100
-    )
+    return relational.histogram_equidepth(scan(spark, sf, "lineitem"), "l_extendedprice")
 
 
 def _q_split_stratified_exact(spark, sf):
@@ -1945,21 +1941,21 @@ def _q_psi_drift(spark, sf):
     """Population Stability Index, first vs second half of the time
     range: reference-decile bins from exact integer percentiles,
     add-half smoothed terms, ln only over exact ratios."""
-    return events_ops.psi_drift(scan(spark, sf, "events"), n_bins=10)
+    return events_ops.psi_drift(scan(spark, sf, "events"))
 
 
 def _q_session_stats(spark, sf):
     """Session-level rollup (count, exact duration, value) in ONE
     exchange: the rollup groups by a superset of sessionize's window
     key, so the data is already co-located."""
-    return events_ops.session_stats(scan(spark, sf, "events"), gap_minutes=30)
+    return events_ops.session_stats(scan(spark, sf, "events"))
 
 
 def _q_active_users(spark, sf):
     """DAU + exact rolling 7-day WAU: distinct (user, day) pairs
     first, then a bounded 7-way fan-out on the pair table — never a
     self-join or a distinct-over-window on raw events."""
-    return events_ops.active_users(scan(spark, sf, "events"), window_days=7)
+    return events_ops.active_users(scan(spark, sf, "events"))
 
 
 def _q_dedup_overlap_matrix(spark, sf):
@@ -1979,7 +1975,7 @@ def _q_events_cusum(spark, sf):
     """Per-user CUSUM upward-drift monitor: recursive max(0, C+dev)
     computed exactly via prefix-sum minus running-min, integer micro
     arithmetic throughout."""
-    return events_ops.cusum_drift(scan(spark, sf, "events"), threshold=50.0)
+    return events_ops.cusum_drift(scan(spark, sf, "events"))
 
 
 def _q_twap(spark, sf):
@@ -2289,7 +2285,7 @@ def _q_resample_ohlc(spark, sf):
     """Per-(user, day) open/high/low/close downsampling with total
     (ts, event_id) ordering for deterministic open/close."""
     ev = scan(spark, sf, "events")
-    out = temporal.resample_ohlc(ev, unit="day")
+    out = temporal.resample_ohlc(ev)
     return out.select(
         "user_id",
         F.date_format("bucket", "yyyy-MM-dd").alias("day"),
@@ -2737,7 +2733,7 @@ def _q_bpe_encode(spark, sf):
 
 def _q_pmi_collocations(spark, sf):
     """Top-100 collocations by PMI with a min-count-5 support floor."""
-    return corpus.pmi_collocations(scan(spark, sf, "documents"), k=100, min_count=5)
+    return corpus.pmi_collocations(scan(spark, sf, "documents"))
 
 
 def _q_modality_alignment(spark, sf):
@@ -2924,7 +2920,7 @@ def _q_ann_pq(spark, sf):
     bruteforce held by tests/test_ann_kmeans.py."""
     emb = scan(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    return similarity.ann_pq(emb, queries_df, k=5)
+    return similarity.ann_pq(emb, queries_df)
 
 
 def _q_tpch_q5(spark, sf):
@@ -3568,7 +3564,7 @@ def _q_graph_bfs(spark, sf):
     docs = scan(spark, sf, "documents")
     pairs = dedup.dedup_simhash_pairs(docs, max_hamming=3)
     seeds = docs.select("doc_id").where(F.col("doc_id") % 97 == 0)
-    return graph.bfs_hops(pairs, seeds, max_hops=3)
+    return graph.bfs_hops(pairs, seeds)
 
 
 def _q_interval_merge(spark, sf):
@@ -3589,7 +3585,7 @@ def _q_graph_kcore(spark, sf):
     """Fixed-round 2-core peeling over the SimHash near-dup graph:
     surviving nodes sit in densely boilerplated regions."""
     pairs = dedup.dedup_simhash_pairs(scan(spark, sf, "documents"), max_hamming=3)
-    return graph.kcore_peel(pairs.select("doc_a", "doc_b"), k=2, rounds=4)
+    return graph.kcore_peel(pairs.select("doc_a", "doc_b"), rounds=4)
 
 
 def _q_graph_common_neighbors(spark, sf):
@@ -3643,7 +3639,7 @@ def _q_hampel_outliers(spark, sf):
     (operators/events.py:hampel_outliers): rolling median ± 3 rolling
     MADs on the trailing 7-row frame, integer-exact flag test."""
     ev = scan(spark, sf, "events")
-    return events_ops.hampel_outliers(ev, n=7, k=3)
+    return events_ops.hampel_outliers(ev, n=7)
 
 
 def _q_window_distinct(spark, sf):
@@ -3677,8 +3673,7 @@ def _q_streaming_join_full(spark, sf):
     clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = ev.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
     joined = interval_join_streams(
-        clicks, views, on="user_id", tolerance="5 minutes",
-        watermark="10 minutes", how="fullOuter",
+        clicks, views, how="fullOuter",
     )
     out = joined.select(
         F.col("l.event_id").alias("click_id"),
@@ -3707,8 +3702,7 @@ def _q_streaming_join_agg(spark, sf):
     clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = ev.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
     joined = interval_join_streams(
-        clicks, views, on="user_id", tolerance="5 minutes",
-        watermark="10 minutes", how="inner",
+        clicks, views, how="inner",
     )
     agg = (
         joined.select(
@@ -4395,7 +4389,7 @@ def _q_forecast_baseline(spark, sf):
     (operators/events.py:forecast_baseline): exact-date seasonal join,
     MASE and sMAPE from exact daily cent sums."""
     ev = scan(spark, sf, "events")
-    return events_ops.forecast_baseline(ev, "ts", "value", season=7)
+    return events_ops.forecast_baseline(ev, "ts", "value")
 
 
 def _q_delta_method_ratio(spark, sf):
@@ -4418,7 +4412,7 @@ def _q_bh_significance(spark, sf):
     tests (operators/events.py:bh_significance): exact integer cells,
     shared erf-polynomial p-values, k-row step-up windows."""
     ev = scan(spark, sf, "events")
-    return events_ops.bh_significance(ev, "event_type", "value", alpha=0.05)
+    return events_ops.bh_significance(ev, "event_type", "value")
 
 
 def _q_hll_rollup(spark, sf):

@@ -74,11 +74,12 @@ def release_checkpoint(df: DataFrame) -> None:
     reach the checkpointed internal RDD through the plan's LogicalRDD
     node.  Best-effort, and a no-op on any other frame (a journal
     read-back included): on a reflection mismatch the blocks simply
-    age out via GC.
+    age out via GC.  Four py4j round trips: the Dataset's analyzed
+    plan, its node name, its RDD and the unpersist.
     """
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan = df._jdf.logicalPlan()
+        if plan.nodeName() == "LogicalRDD":
             plan.rdd().unpersist(False)
     except Exception:
         pass

@@ -46,12 +46,7 @@ from .graph import pagerank
 from .relational import top_k_per
 from .wordcount import token_counts, token_rows
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-``k`` TF-IDF terms.
 
     tf = term count / doc length; idf = ln((N+1)/(df+1)) + 1 (the
@@ -78,7 +73,7 @@ def tfidf_top_terms(
     N attaches as a broadcast single-row join (one scalar shipped to
     every executor — no session-global view, no cartesian blowup).
     """
-    counts = token_counts(ensure_parallelism(docs), text_col, id_col, lowercase=True, n="tf")
+    counts = token_counts(ensure_parallelism(docs), "text", "doc_id", lowercase=True, n="tf")
     # the tf>=1 filter is a semantic no-op (counts are >=1 by
     # construction) that REFERENCES tf: without it Catalyst prunes tf
     # and rewrites this two-level aggregate into a distinct-style agg
@@ -91,7 +86,7 @@ def tfidf_top_terms(
     )
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
 
-    w_doc = Window.partitionBy(id_col)
+    w_doc = Window.partitionBy("doc_id")
     scored = (
         counts.join(dfreq, "token")
         .withColumn("dl", F.sum("tf").over(w_doc))
@@ -102,8 +97,8 @@ def tfidf_top_terms(
             * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
         )
     )
-    return top_k_per(scored, [id_col], k, F.desc("tfidf_raw"), F.asc("token")).select(
-        F.col(id_col),
+    return top_k_per(scored, ["doc_id"], k, F.desc("tfidf_raw"), F.asc("token")).select(
+        F.col("doc_id"),
         "token",
         "tf",
         "df",
@@ -127,33 +122,22 @@ def _bigrams(tk: Column) -> Column:
     return _adjacent(tk, lambda a, b: F.concat_ws(" ", a, b))
 
 
-def bigram_counts(
-    docs: DataFrame,
-    k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_counts(docs: DataFrame, k: int = 100) -> DataFrame:
     """Corpus top-``k`` bigram counts — the n-gram LM / collocation
     statistic.  Bigram construction happens inside the token array
     (one codegen'd pass, zero shuffle); the only exchange carries
     (bigram, partial count) thanks to map-side combine, and the top-k
     is TakeOrderedAndProject (per-partition heads, no total sort)."""
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     grams = ensure_parallelism(docs).select(F.explode(_bigrams(tk)).alias("bigram"))
     counts = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("bigram")).limit(k)
 
 
-def contamination_check(
-    docs: DataFrame,
-    bench_mod: int = 50,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def contamination_check(docs: DataFrame) -> DataFrame:
     """Benchmark-contamination scan: for each held-out "benchmark" doc
-    (``doc_id % bench_mod == 0`` — a deterministic stand-in for a real
-    eval set), the fraction of its word ``n``-gram shingles that also
+    (``doc_id % 50 == 0`` — a deterministic stand-in for a real
+    eval set), the fraction of its word 3-gram shingles that also
     occur anywhere in the training corpus (the remaining docs).
 
     Returns (doc_id, n_shingles, n_hit, containment) — containment
@@ -166,21 +150,21 @@ def contamination_check(
     table; the modulo split keeps the operator self-contained and
     oracle-checkable on one input.
     """
-    sh = _shingle_rows(docs, text_col, id_col, n).distinct()
-    is_bench = (F.col(id_col) % bench_mod) == 0
+    sh = _shingle_rows(docs, "text", "doc_id", 3).distinct()
+    is_bench = (F.col("doc_id") % 50) == 0
     bench = sh.filter(is_bench)
     train = sh.filter(~is_bench).select("shingle").distinct()
 
-    totals = bench.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    totals = bench.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
         bench.join(train, "shingle", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit"))
     )
     return (
-        totals.join(hits, id_col, "left")
+        totals.join(hits, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_shingles",
             F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
             F.round(F.coalesce("n_hit", F.lit(0)) / F.col("n_shingles"), 6).alias(
@@ -194,8 +178,6 @@ def pack_sequences(
     docs: DataFrame,
     budget: int = 2048,
     n_streams: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sequence packing — assign each document to a fixed-token-budget
     pack (the pretraining step that concatenates short docs into full
@@ -215,30 +197,25 @@ def pack_sequences(
     never span streams, each stream fills independently.  One shuffle
     (by stream), one sort (by id within stream), all codegen'd.
     """
-    n_tok = F.size(tokens(text_col, lowercase=True))
+    n_tok = F.size(tokens("text", lowercase=True))
     base = ensure_parallelism(docs).select(
-        F.col(id_col), n_tok.cast("long").alias("n_tokens"),
-        (F.col(id_col) % n_streams).cast("long").alias("stream"),
+        F.col("doc_id"), n_tok.cast("long").alias("n_tokens"),
+        (F.col("doc_id") % n_streams).cast("long").alias("stream"),
     )
-    w = Window.partitionBy("stream").orderBy(id_col)
+    w = Window.partitionBy("stream").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
     # bin by the prefix BEFORE this doc: a doc that crosses the budget
     # boundary finishes its current pack rather than opening a new one
     bin_ = F.floor((cum - F.col("n_tokens")) / F.lit(budget))
     return base.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "stream",
         (F.col("stream") * F.lit(2**32) + bin_).cast("long").alias("pack_id"),
     )
 
 
-def mixture_report(
-    docs: DataFrame,
-    by: tuple = ("source", "lang"),
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def mixture_report(docs: DataFrame) -> DataFrame:
     """Data-mixture audit — per-(source, lang) document and token
     volumes with corpus shares: the report a pretraining pipeline runs
     before (and after) re-balancing its mix.
@@ -247,14 +224,15 @@ def mixture_report(
     n_tokens); the share-of-total windows run over the AGGREGATED
     output, whose cardinality is |sources| × |langs| — a few hundred
     rows at any corpus size, so the unpartitioned window is safe."""
-    keys = [F.col(c) for c in by]
+    keys = [F.col("source"), F.col("lang")]
     agg = ensure_parallelism(docs).groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(tokens(text_col, lowercase=True))).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens("text", lowercase=True))).cast("long").alias("n_tokens"),
     )
     w = Window.partitionBy()
     return agg.select(
-        *by,
+        "source",
+        "lang",
         "n_docs",
         "n_tokens",
         F.round(F.col("n_docs") / F.sum("n_docs").over(w), 6).alias("doc_share"),
@@ -266,12 +244,7 @@ def mixture_report(
     )
 
 
-def mixture_weights(
-    docs: DataFrame,
-    alpha: float = 0.7,
-    by: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def mixture_weights(docs: DataFrame, alpha: float = 0.7) -> DataFrame:
     """Temperature-scaled mixture re-weighting — the multinomial
     sampling weights w_s ∝ p_s^alpha (p_s = source token share) that
     multilingual/multi-domain pretraining uses to up-sample small
@@ -290,19 +263,19 @@ def mixture_weights(
     ``n_docs, n_tokens, token_share, weight, boost`` (boost =
     weight/token_share, the relative over/under-sampling factor the
     data loader applies)."""
-    agg = ensure_parallelism(docs).groupBy(by).agg(
+    agg = ensure_parallelism(docs).groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(tokens(text_col, lowercase=True))).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens("text", lowercase=True))).cast("long").alias("n_tokens"),
     )
     w = Window.partitionBy()
     # a corpus with no tokens has no shares or weights (NULL), not an
     # ANSI DIVIDE_BY_ZERO
     share = F.try_divide(F.col("n_tokens"), F.sum("n_tokens").over(w))
     w_nano = F.round(F.pow(share, F.lit(alpha)) * 1e9).cast("long")
-    scored = agg.select(by, "n_docs", "n_tokens", share.alias("p"), w_nano.alias("wn"))
+    scored = agg.select("source", "n_docs", "n_tokens", share.alias("p"), w_nano.alias("wn"))
     weight = F.try_divide(F.col("wn"), F.sum("wn").over(w))
     return scored.select(
-        by,
+        "source",
         "n_docs",
         "n_tokens",
         F.round("p", 6).alias("token_share"),
@@ -313,15 +286,9 @@ def mixture_weights(
     )
 
 
-def mixture_sample(
-    docs: DataFrame,
-    budget_tokens: int = 1500,
-    by: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def mixture_sample(docs: DataFrame, budget_tokens: int = 1500) -> DataFrame:
     """Token-budget mixture sampling — materialize a target data mix by
-    taking, per ``by`` group (source/domain), documents in a
+    taking, per ``source`` group (source/domain), documents in a
     DETERMINISTIC pseudo-random order until the group's token budget is
     exhausted (greedy prefix: a doc survives iff the running total
     through it stays ≤ budget).  This is the selection step a
@@ -349,24 +316,24 @@ def mixture_sample(
     single-window formulation, cum_tokens included.
     """
     base = docs.select(
-        F.col(id_col),
-        F.col(by),
-        F.size(tokens(text_col, lowercase=True)).cast("long").alias("n_tokens"),
-        F.md5(F.concat(F.lit("mix:"), F.col(id_col).cast("string"))).alias("rank_key"),
+        F.col("doc_id"),
+        F.col("source"),
+        F.size(tokens("text", lowercase=True)).cast("long").alias("n_tokens"),
+        F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))).alias("rank_key"),
     ).withColumn("bucket", F.substring("rank_key", 1, 2))
-    btot = base.groupBy(by, "bucket").agg(F.sum("n_tokens").alias("btok"))
-    wb = Window.partitionBy(by).orderBy("bucket")
+    btot = base.groupBy("source", "bucket").agg(F.sum("n_tokens").alias("btok"))
+    wb = Window.partitionBy("source").orderBy("bucket")
     live = (
         btot.withColumn("offset", F.sum("btok").over(wb) - F.col("btok"))
         .where(F.col("offset") <= budget_tokens)
-        .select(by, "bucket", "offset")
+        .select("source", "bucket", "offset")
     )
-    w2 = Window.partitionBy(by, "bucket").orderBy("rank_key", id_col)
+    w2 = Window.partitionBy("source", "bucket").orderBy("rank_key", "doc_id")
     return (
-        base.join(F.broadcast(live), [by, "bucket"])
+        base.join(F.broadcast(live), ["source", "bucket"])
         .withColumn("cum_tokens", F.col("offset") + F.sum("n_tokens").over(w2))
         .where(F.col("cum_tokens") <= budget_tokens)
-        .select(id_col, by, "n_tokens", "cum_tokens")
+        .select("doc_id", "source", "n_tokens", "cum_tokens")
     )
 
 
@@ -383,12 +350,7 @@ def _split_of(pct: Column, weights: tuple, names: tuple) -> Column:
     return expr.otherwise(names[-1]) if expr is not None else F.lit(names[-1])
 
 
-def split_assign(
-    docs: DataFrame,
-    weights: tuple = (90, 5, 5),
-    names: tuple = ("train", "val", "test"),
-    key_col: str = "doc_id",
-) -> DataFrame:
+def split_assign(docs: DataFrame, weights: tuple = (90, 5, 5)) -> DataFrame:
     """Deterministic train/val/test split assignment — the step every
     training pipeline runs last, and the one where nondeterminism is
     catastrophic (a doc drifting between train and test across reruns
@@ -399,23 +361,17 @@ def split_assign(
     properties .sample()/rand() cannot give.
 
     Scale shape: one map-side expression per row, zero shuffles, zero
-    RNG state.  Returns ``key_col, bucket, split``.
+    RNG state.  Returns ``doc_id, bucket, split``.
     """
     bucket = (
-        F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("long")
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
         % 100
     )
-    split = _split_of(bucket, weights, names)
-    return docs.select(F.col(key_col), bucket.alias("bucket"), split.alias("split"))
+    split = _split_of(bucket, weights, ("train", "val", "test"))
+    return docs.select(F.col("doc_id"), bucket.alias("bucket"), split.alias("split"))
 
 
-def split_leakage_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    weights: tuple = (90, 5, 5),
-    names: tuple = ("train", "val", "test"),
-) -> DataFrame:
+def split_leakage_report(docs: DataFrame) -> DataFrame:
     """Cross-split near-duplicate audit — the eval-integrity check a
     training pipeline runs after splitting: MinHash-LSH candidate
     pairs joined against the deterministic split assignment, counted
@@ -432,13 +388,17 @@ def split_leakage_report(
 
     Returns ``split_a, split_b, n_pairs``.
     """
-    pairs = dedup_minhash_candidates(docs, text_col=text_col, id_col=id_col)
-    splits = split_assign(docs, weights=weights, names=names, key_col=id_col).select(
-        F.col(id_col), F.col("split")
+    pairs = dedup_minhash_candidates(docs)
+    splits = split_assign(docs, weights=(90, 5, 5)).select(
+        F.col("doc_id"), F.col("split")
     )
     j = (
-        pairs.join(splits.withColumnRenamed(id_col, "doc_a").withColumnRenamed("split", "sa"), "doc_a")
-        .join(splits.withColumnRenamed(id_col, "doc_b").withColumnRenamed("split", "sb"), "doc_b")
+        pairs.join(
+            splits.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("split", "sa"), "doc_a"
+        )
+        .join(
+            splits.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("split", "sb"), "doc_b"
+        )
     )
     return (
         j.select(
@@ -450,12 +410,7 @@ def split_leakage_report(
     )
 
 
-def tokens_to_ids(
-    docs: DataFrame,
-    vocab_size: int = 1000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tokens_to_ids(docs: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """Vocabulary-indexed encoding — the last text-side step before
     tensors: build the top-``vocab_size`` corpus vocabulary (count
     desc, token asc — fully deterministic) and rewrite every document
@@ -474,15 +429,15 @@ def tokens_to_ids(
     Returns ``doc_id, n_tokens, ids`` for docs with >= 1 token.
     """
     tk = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col, lowercase=True)).alias("pos", "token"),
+        F.col("doc_id"),
+        F.posexplode(tokens("text", lowercase=True)).alias("pos", "token"),
     )
     counts = tk.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     top = counts.orderBy(F.desc("n"), F.asc("token")).limit(vocab_size)
     w = Window.orderBy(F.desc("n"), F.asc("token"))
     vocab = top.withColumn("tok_id", F.row_number().over(w)).select("token", "tok_id")
     joined = tk.join(F.broadcast(vocab), "token", "left")
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.transform(
             F.sort_array(F.collect_list(F.struct("pos", "tok_id"))),
@@ -491,11 +446,7 @@ def tokens_to_ids(
     )
 
 
-def lm_bigram_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lm_bigram_score(docs: DataFrame) -> DataFrame:
     """Per-doc cross-entropy under an add-one-smoothed corpus bigram
     LM — the SQL-able analog of perplexity filtering (CCNet-style
     pipelines drop docs whose LM score says "not natural language";
@@ -523,14 +474,14 @@ def lm_bigram_score(
     Returns ``doc_id, n_bigrams, h_bits`` for docs with >= 1 bigram.
     """
     pairs_arr = _adjacent(
-        tokens(text_col, lowercase=True),
+        tokens("text", lowercase=True),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
     per = (
         ensure_parallelism(docs)
-        .select(F.col(id_col), F.explode(pairs_arr).alias("p"))
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .groupBy(id_col, "w1", "w2")
+        .select(F.col("doc_id"), F.explode(pairs_arr).alias("p"))
+        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     # the per-doc bigram relation feeds the model aggregates AND the
@@ -556,7 +507,7 @@ def lm_bigram_score(
     )
     return (
         per.join(scored, ["w1", "w2"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("cnt").cast("long").alias("n_bigrams"),
             F.round(
@@ -566,13 +517,7 @@ def lm_bigram_score(
     )
 
 
-def chunk_overlap(
-    docs: DataFrame,
-    size: int = 64,
-    stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_overlap(docs: DataFrame, size: int = 64, stride: int = 48) -> DataFrame:
     """Overlapping-window chunking — the embedding/RAG preparation
     step: split each document into ``size``-token chunks starting
     every ``stride`` tokens (overlap = size - stride preserves
@@ -587,7 +532,7 @@ def chunk_overlap(
     """
     if stride <= 0 or size <= 0 or stride > size:
         raise ValueError("need 0 < stride <= size")
-    tk = tokens(text_col, lowercase=False)
+    tk = tokens("text", lowercase=False)
     n = F.size(tk)
     # chunk start positions (1-based): 1, 1+stride, ... while start <= n;
     # guard empty docs (sequence(1, 0) would descend)
@@ -613,9 +558,9 @@ def chunk_overlap(
     )
     return (
         ensure_parallelism(docs)
-        .select(F.col(id_col), F.explode(chunks).alias("c"))
+        .select(F.col("doc_id"), F.explode(chunks).alias("c"))
         .select(
-            id_col,
+            "doc_id",
             F.col("c.chunk_idx").cast("long").alias("chunk_idx"),
             F.col("c.chunk").alias("chunk"),
             F.col("c.n_tokens").cast("long").alias("n_tokens"),
@@ -638,12 +583,7 @@ def _ols_fit(x: Column, y: Column) -> tuple[Column, Column]:
     return slope, F.try_divide(sy - slope * sx, k)
 
 
-def zipf_fit(
-    docs: DataFrame,
-    top_n: int = 200,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def zipf_fit(docs: DataFrame, top_n: int = 200) -> DataFrame:
     """Zipf-law fit over the corpus token-frequency distribution: the
     least-squares slope of ln(freq) vs ln(rank) for the top ``top_n``
     tokens.  Natural language sits near slope -1; a corpus drifting
@@ -661,7 +601,7 @@ def zipf_fit(
     Returns one row: ``n_points, slope, intercept`` (6 dp; the fit is
     NULL below two points).
     """
-    counts = token_counts(ensure_parallelism(docs), text_col, lowercase=True)
+    counts = token_counts(ensure_parallelism(docs), "text", lowercase=True)
     top = counts.orderBy(F.desc("n"), F.asc("token")).limit(top_n)
     arr = F.sort_array(
         F.collect_list(F.struct((-F.col("n")).alias("negn"), F.col("token")))
@@ -678,16 +618,10 @@ def zipf_fit(
     )
 
 
-def domain_cap(
-    docs: DataFrame,
-    cap: int = 100,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    quality_col: str = "n_chars",
-) -> DataFrame:
+def domain_cap(docs: DataFrame, cap: int = 100) -> DataFrame:
     """Per-source document cap — the crawl-pipeline rule "keep at most
     ``cap`` docs per domain", applied deterministically: within each
-    source, docs rank by ``quality_col`` DESC then ``id_col`` ASC (a
+    source, docs rank by ``n_chars`` DESC then ``doc_id`` ASC (a
     total order, so reruns and engines agree), and only ranks <= cap
     survive.  Dolma/RefinedWeb-style domain throttling that stops one
     mega-site from dominating the training mixture.
@@ -701,19 +635,15 @@ def domain_cap(
     row never shuffles — only (id, source, quality) ride the exchange;
     callers re-attach text by joining the returned ids.
 
-    Returns ``id_col, source_col, quality_col, src_rank`` for kept
+    Returns ``doc_id, source, n_chars, src_rank`` for kept
     docs.
     """
-    slim = ensure_parallelism(docs).select(id_col, source_col, quality_col)
-    top = top_k_per(slim, [source_col], cap, F.desc(quality_col), F.asc(id_col))
+    slim = ensure_parallelism(docs).select("doc_id", "source", "n_chars")
+    top = top_k_per(slim, ["source"], cap, F.desc("n_chars"), F.asc("doc_id"))
     return top.withColumnRenamed("rk", "src_rank")
 
 
-def shard_assign(
-    docs: DataFrame,
-    n_shards: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shard_assign(docs: DataFrame, n_shards: int = 16) -> DataFrame:
     """Deterministic global shuffle + shard assignment — the step that
     turns a curated corpus into training shards: every doc gets a
     shard (md5-bucket of its id: uniform, engine-portable, no RNG
@@ -736,14 +666,14 @@ def shard_assign(
     broadcast offset.  Only (digest, id) pairs ride the exchange;
     writing shard files is then ``partitionBy(shard)`` on this frame.
 
-    Returns ``id_col, shard, pos``.
+    Returns ``doc_id, shard, pos``.
     """
-    digest = F.md5(F.col(id_col).cast("string"))
+    digest = F.md5(F.col("doc_id").cast("string"))
     shard = (F.conv(F.substring(digest, 1, 8), 16, 10).cast("long") % n_shards).alias(
         "shard"
     )
     h = ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         digest.alias("digest"),
         shard,
         F.substring(digest, 1, 2).alias("bucket"),
@@ -759,7 +689,7 @@ def shard_assign(
         "bucket",
         (F.sum("cnt").over(w_off) - F.col("cnt")).alias("offset"),
     )
-    w_in = Window.partitionBy("shard", "bucket").orderBy(F.asc("digest"), F.asc(id_col))
+    w_in = Window.partitionBy("shard", "bucket").orderBy(F.asc("digest"), F.asc("doc_id"))
     # null-safe join: a NULL id digests to NULL shard/bucket, and the
     # (NULL, NULL) offsets group must still match so the row keeps a
     # (NULL-shard) manifest entry instead of silently vanishing —
@@ -773,28 +703,23 @@ def shard_assign(
             & F.col("_h.bucket").eqNullSafe(F.col("_o.bucket")),
         )
         .select(
-            F.col(f"_h.{id_col}").alias(id_col),
+            F.col("_h.doc_id").alias("doc_id"),
             F.col("_h.shard").alias("shard"),
             F.col("_h.digest").alias("digest"),
             F.col("_h.bucket").alias("bucket"),
             F.col("_o.offset").alias("offset"),
         )
         .withColumn("pos", (F.row_number().over(w_in) + F.col("offset")).cast("long"))
-        .select(id_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    k: int = 100,
-    min_count: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-``k`` collocations by pointwise mutual information — the
+def pmi_collocations(docs: DataFrame) -> DataFrame:
+    """Top-100 collocations by pointwise mutual information — the
     classic "which word pairs belong together" corpus statistic
     (phrase detection for tokenizer/embedding vocab decisions):
     ``pmi = ln( (c12/B) / ((c1/U)(c2/U)) )`` over adjacent lowercased
-    token bigrams, with a ``min_count`` support floor so rare-pair
+    token bigrams, with a support floor of 5 so rare-pair
     noise (PMI's known failure mode) never ranks.
 
     Shape at scale: unigram and bigram counts are two partial-agged
@@ -807,12 +732,12 @@ def pmi_collocations(
     Returns ``w1, w2, n_pair, pmi`` (6 dp), pmi-desc.
     """
     base = ensure_parallelism(docs)
-    uni = token_counts(base, text_col, lowercase=True, token="w", n="c")
+    uni = token_counts(base, "text", lowercase=True, token="w", n="c")
     # vocabulary-sized count tables each feed a scalar total and a
     # join side — materialize both so each tokenize pass runs once
     uni = materialize_once(uni)
     bcounts = (
-        base.select(F.explode(_bigrams(tokens(text_col, lowercase=True))).alias("bg"))
+        base.select(F.explode(_bigrams(tokens("text", lowercase=True))).alias("bg"))
         .select(
             F.split_part("bg", F.lit(" "), F.lit(1)).alias("w1"),
             F.split_part("bg", F.lit(" "), F.lit(2)).alias("w2"),
@@ -821,7 +746,7 @@ def pmi_collocations(
         .agg(F.count(F.lit(1)).alias("c12"))
     )
     bcounts = materialize_once(bcounts)
-    big = bcounts.filter(F.col("c12") >= min_count)
+    big = bcounts.filter(F.col("c12") >= 5)
     # both totals derive from the COUNT tables (vocabulary-sized), not
     # from a second corpus pass — the bigram explode runs exactly once
     u_total = uni.agg(F.sum("c").alias("u_total"))
@@ -839,7 +764,7 @@ def pmi_collocations(
             ),
         )
     )
-    out = scored.orderBy(F.desc("pmi_raw"), F.asc("w1"), F.asc("w2")).limit(k)
+    out = scored.orderBy(F.desc("pmi_raw"), F.asc("w1"), F.asc("w2")).limit(100)
     return out.select(
         "w1",
         "w2",
@@ -867,12 +792,7 @@ def _apply_merge(a: str, b: str) -> Column:
     ).alias("syms")
 
 
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_train(docs: DataFrame, n_merges: int = 10) -> DataFrame:
     """Byte-pair-encoding merge training — the tokenizer-fitting loop
     itself (Sennrich et al. 2016), distributed the way every real BPE
     trainer is: ONE corpus pass builds the (word, freq) vocabulary,
@@ -900,7 +820,7 @@ def bpe_train(
     """
     spark = docs.sparkSession
     rounds = Rounds(spark, "vocab")
-    words = token_counts(ensure_parallelism(docs), text_col, lowercase=True, token="w", n="freq")
+    words = token_counts(ensure_parallelism(docs), "text", lowercase=True, token="w", n="freq")
     vocab = rounds.cut(0, words.select("freq", _chars("w")))
     merges: list[tuple] = []
     for step in range(1, n_merges + 1):
@@ -933,12 +853,7 @@ def bpe_train(
     )
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply trained BPE merge rules (from :func:`bpe_train`) to the
     corpus and report per-doc subword statistics — the tokenizer
     FERTILITY metric (subwords per word) every pretraining data audit
@@ -953,9 +868,9 @@ def bpe_encode(
     (model parameters, like k-means centroids); pass
     ``[(r["left"], r["right"]) for r in bpe_train(...).collect()]``.
 
-    Returns ``id_col, n_words, n_subwords, fertility`` (6 dp).
+    Returns ``doc_id, n_words, n_subwords, fertility`` (6 dp).
     """
-    tk = token_rows(ensure_parallelism(docs), text_col, id_col, lowercase=True, token="w")
+    tk = token_rows(ensure_parallelism(docs), "text", "doc_id", lowercase=True, token="w")
     vocab = tk.select("w").distinct().select("w", _chars("w"))
     # each cut releases the one it supersedes; the LAST one stays
     # alive — the returned lazy frame reads it
@@ -967,19 +882,19 @@ def bpe_encode(
         if step % 4 == 0:
             vocab = rounds.cut(step, vocab)
     encoded = vocab.select("w", F.size("syms").alias("n_sub"))
-    per_doc = tk.join(F.broadcast(encoded), "w").groupBy(id_col).agg(
+    per_doc = tk.join(F.broadcast(encoded), "w").groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum("n_sub").cast("long").alias("n_subwords"),
     )
     return per_doc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_words",
         "n_subwords",
         F.round(F.col("n_subwords") / F.col("n_words"), 6).alias("fertility"),
     )
 
 
-def heavy_hitters(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataFrame:
+def heavy_hitters(docs: DataFrame, k: int = 50) -> DataFrame:
     """Frequent-token estimation in BOUNDED memory — the Misra-Gries /
     mergeable-summary sketch (Agarwal et al., "Mergeable Summaries",
     PODS'12): each partition maintains at most ``k`` counters; when a
@@ -1003,7 +918,7 @@ def heavy_hitters(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataF
     Returns ``rank, token, est_count`` for the top ``k`` surviving
     tokens (rank by est_count desc, token asc).
     """
-    toks = token_rows(ensure_parallelism(docs), text_col, lowercase=True)
+    toks = token_rows(ensure_parallelism(docs), "text", lowercase=True)
 
     def mg(batches):
         import pandas as pd
@@ -1025,15 +940,10 @@ def heavy_hitters(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataF
     )
 
 
-def sample_weighted(
-    docs: DataFrame,
-    scale_tokens: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sample_weighted(docs: DataFrame) -> DataFrame:
     """Deterministic weighted downsampling — keep each doc with
     probability proportional to a per-doc weight (here: token count
-    capped at ``scale_tokens``, the "prefer substantial documents"
+    capped at 100, the "prefer substantial documents"
     curation heuristic).  The accept test is ``u < w`` where ``u`` is
     an md5-uniform of the KEY — a pure function, so the sample is
     reproducible across runs/engines/layouts and stable under data
@@ -1042,18 +952,20 @@ def sample_weighted(
 
     Zero shuffle, one codegen'd projection + filter.
 
-    Returns kept docs: ``id_col, n_tokens, w, u`` (6 dp).
+    Returns kept docs: ``doc_id, n_tokens, w, u`` (6 dp).
     """
-    n_tok = F.size(tokens(text_col, lowercase=True))
-    w = F.least(F.lit(1.0), n_tok / F.lit(float(scale_tokens)))
+    n_tok = F.size(tokens("text", lowercase=True))
+    w = F.least(F.lit(1.0), n_tok / F.lit(100.0))
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("sw:"), F.col(id_col).cast("string"))), 1, 8), 16, 10)
+        F.conv(
+            F.substring(F.md5(F.concat(F.lit("sw:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10
+        )
         .cast("long")
         / F.lit(4294967296.0)
     )
     return (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             n_tok.cast("long").alias("n_tokens"),
             F.round(w, 6).alias("w"),
             F.round(u, 6).alias("u"),
@@ -1088,13 +1000,7 @@ def _cms_buckets(
     )
 
 
-def cms_counts(
-    docs: DataFrame,
-    k: int = 20,
-    text_col: str = "text",
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
+def cms_counts(docs: DataFrame, k: int = 20, width: int = 1024) -> DataFrame:
     """Count-Min Sketch token-frequency estimation (Cormode &
     Muthukrishnan, J.Algorithms'05) with an exact-count audit — the
     ORDER-INDEPENDENT counterpart of :func:`heavy_hitters`: Misra-Gries
@@ -1104,14 +1010,14 @@ def cms_counts(
     deterministic and hash-matchable against a SQL oracle — a sketch
     the correctness gate can fully verify.
 
-    Shape: one token pass → ``depth`` md5-derived bucket ids per
+    Shape: one token pass → 4 md5-derived bucket ids per
     instance (Kirsch-Mitzenmacher g_i = h1 + i·h2, the same derivation
-    as MinHash) → partial-agged groupBy to a ``depth×width`` counter
+    as MinHash) → partial-agged groupBy to a ``4×width`` counter
     table (tiny, broadcastable).  Estimates: est(token) = min over
     rows of its bucket's counter — an OVER-count bound (est ≥ true,
     pytest-asserted), within ε·N with probability 1-δ for
     width=e/ε, depth=ln(1/δ).  At 100 TB the counter table is still
-    depth×width integers — the whole point of sketching the stream —
+    4×width integers — the whole point of sketching the stream —
     while the exact audit column (true_cnt) is the vocab-sized groupBy
     a production pipeline would skip.
 
@@ -1119,17 +1025,17 @@ def cms_counts(
     ``rank, token, true_cnt, cms_est``.
     """
     base = ensure_parallelism(docs)
-    hashed = token_rows(base, text_col, lowercase=True).select(
+    hashed = token_rows(base, "text", lowercase=True).select(
         "token", _cms_hash(1).alias("h1"), _cms_hash(16).alias("h2")
     )
-    ex = _cms_buckets(hashed, ["token"], F.col("h1"), F.col("h2"), depth, width)
+    ex = _cms_buckets(hashed, ["token"], F.col("h1"), F.col("h2"), 4, width)
     counters = ex.groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
     # top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     # heaps, no vocab-sized single-task sort); the rank window then
     # runs over k rows only
     w = Window.orderBy(F.col("true_cnt").desc(), F.col("token").asc())
     true_top = (
-        token_counts(base, text_col, lowercase=True, n="true_cnt")
+        token_counts(base, "text", lowercase=True, n="true_cnt")
         .orderBy(F.col("true_cnt").desc(), F.col("token").asc())
         .limit(k)
         .withColumn("rank", F.row_number().over(w))
@@ -1137,7 +1043,7 @@ def cms_counts(
     # per-token buckets recomputed on the k-row side, then the tiny
     # counter table broadcasts into the min-over-rows lookup
     tb = _cms_buckets(
-        true_top, ["rank", "token", "true_cnt"], _cms_hash(1), _cms_hash(16), depth, width
+        true_top, ["rank", "token", "true_cnt"], _cms_hash(1), _cms_hash(16), 4, width
     )
     return (
         tb.join(F.broadcast(counters), ["row", "bucket"])
@@ -1152,14 +1058,7 @@ def cms_counts(
     )
 
 
-def contamination_fuzzy(
-    docs: DataFrame,
-    bench_mod: int = 50,
-    bucket_cap: int = 64,
-    est_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def contamination_fuzzy(docs: DataFrame) -> DataFrame:
     """NEAR-duplicate benchmark decontamination — the fuzzy companion
     to :func:`contamination_check` (which only catches verbatim
     shingle overlap).  Real eval leakage is usually lightly rewritten,
@@ -1171,9 +1070,9 @@ def contamination_fuzzy(
     bench/train split happens on the 12-integer signatures, never on
     text), then a cross-side equi-join on (band, band_sig).  Hot
     buckets (mass boilerplate) are capped DETERMINISTICALLY: each
-    bucket keeps its ``bucket_cap`` lowest train ids (row_number, both
+    bucket keeps its 64 lowest train ids (row_number, both
     engines agree), bounding the join fan-out at
-    ``bucket_cap × bench_bucket_size`` while keeping the flag
+    ``64 × bench_bucket_size`` while keeping the flag
     conservative-correct for any bucket whose cap survivors include a
     near-dup.  Estimated Jaccard = matching minhash fraction — no
     second text pass to verify (callers chain dedup_ngram_jaccard on
@@ -1182,15 +1081,15 @@ def contamination_fuzzy(
     Returns one row per benchmark doc: (doc_id, n_candidates,
     best_est, contaminated) — clean docs report 0 / 0.0 / false.
     """
-    sig = minhash_signatures(docs, text_col, id_col)
+    sig = minhash_signatures(docs, "text", "doc_id")
     # signatures feed the band explode and both estimator sides —
     # materialize the 12-int-per-doc frame once (round-11 scan audit)
     sig = materialize_once(sig)
-    bands = minhash_bands(sig, id_col)
-    is_bench = (F.col(id_col) % bench_mod) == 0
+    bands = minhash_bands(sig, "doc_id")
+    is_bench = (F.col("doc_id") % 50) == 0
     bench_b = bands.where(is_bench)
     train_b = top_k_per(
-        bands.where(~is_bench), ["band", "band_sig"], bucket_cap, F.col(id_col).asc()
+        bands.where(~is_bench), ["band", "band_sig"], 64, F.col("doc_id").asc()
     ).drop("rk")
     cand = (
         bench_b.alias("q")
@@ -1200,8 +1099,8 @@ def contamination_fuzzy(
             & (F.col("q.band_sig") == F.col("t.band_sig")),
         )
         .select(
-            F.col(f"q.{id_col}").alias("bench_id"),
-            F.col(f"t.{id_col}").alias("train_id"),
+            F.col("q.doc_id").alias("bench_id"),
+            F.col("t.doc_id").alias("train_id"),
         )
         .distinct()
     )
@@ -1210,8 +1109,8 @@ def contamination_fuzzy(
         m = F.when(F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}"), 1).otherwise(0)
         matches = m if matches is None else matches + m
     est = (
-        cand.join(sig.alias("sa"), F.col("bench_id") == F.col(f"sa.{id_col}"))
-        .join(sig.alias("sb"), F.col("train_id") == F.col(f"sb.{id_col}"))
+        cand.join(sig.alias("sa"), F.col("bench_id") == F.col("sa.doc_id"))
+        .join(sig.alias("sb"), F.col("train_id") == F.col("sb.doc_id"))
         .select(
             "bench_id",
             (matches.cast("double") / NUM_HASHES).alias("est_j"),
@@ -1221,36 +1120,30 @@ def contamination_fuzzy(
         F.count(F.lit(1)).alias("n_candidates"),
         F.max("est_j").alias("best_est"),
     )
-    bench_ids = docs.where(is_bench).select(F.col(id_col).alias("bench_id"))
+    bench_ids = docs.where(is_bench).select(F.col("doc_id").alias("bench_id"))
     return (
         bench_ids.join(per_bench, "bench_id", "left")
         .select(
-            F.col("bench_id").alias(id_col),
+            F.col("bench_id").alias("doc_id"),
             F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
             F.round(F.coalesce("best_est", F.lit(0.0)), 6).alias("best_est"),
-            (F.coalesce("best_est", F.lit(0.0)) >= est_threshold).alias("contaminated"),
+            (F.coalesce("best_est", F.lit(0.0)) >= 0.5).alias("contaminated"),
         )
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target_mod: int = 50,
-    n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_weights(docs: DataFrame) -> DataFrame:
     """DSIR-style data-selection importance weights (Xie et al., "Data
     Selection for Language Models via Importance Resampling"): score
     every raw-pool doc by how target-domain-like its hashed bigram
     features are — avg log p_target(f)/p_raw(f) — then resample with
     these weights (chain :func:`sample_weighted`).  Target docs are
-    ``doc_id % target_mod == 0`` (the same held-out-domain stand-in the
+    ``doc_id % 50 == 0`` (the same held-out-domain stand-in the
     contamination checks use); the rest are the raw pool being scored.
 
     Scale shape: one tokenize pass (bigrams built in-array) →
     (doc, bucket) explode; the two n-gram distributions collapse to a
-    ``n_buckets``-row table (groupBy + 1-row side totals — bounded by
+    4096-row table (groupBy + 1-row side totals — bounded by
     the bucket count, NEVER vocabulary), which joins back as a
     BROADCAST; the per-doc sum is one map-side-combined groupBy.
 
@@ -1262,20 +1155,20 @@ def dsir_weights(
     """
     buck = (
         F.conv(F.substring(F.md5(F.col("bigram")), 1, 15), 16, 10).cast("long")
-        % n_buckets
+        % 4096
     )
     feats = ensure_parallelism(docs).select(
-        F.col(id_col),
-        ((F.col(id_col) % target_mod) == 0).alias("is_target"),
-        F.explode(_bigrams(tokens(text_col, lowercase=True))).alias("bigram"),
-    ).select(id_col, "is_target", buck.alias("bucket"))
+        F.col("doc_id"),
+        ((F.col("doc_id") % 50) == 0).alias("is_target"),
+        F.explode(_bigrams(tokens("text", lowercase=True))).alias("bigram"),
+    ).select("doc_id", "is_target", buck.alias("bucket"))
     # (doc, bucket) occurrence counts FIRST: both downstream consumers
     # (the bucket distributions and the per-doc scoring) read this one
     # aggregation, so exchange reuse evaluates the tokenize → bigram →
     # explode pipeline once (the tfidf_top_terms pattern) — and the
     # shuffle carries one row per (doc, distinct bucket), not per
     # bigram occurrence.
-    g = feats.groupBy(id_col, "is_target", "bucket").agg(
+    g = feats.groupBy("doc_id", "is_target", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     counts = g.groupBy("bucket").agg(
@@ -1285,12 +1178,12 @@ def dsir_weights(
     totals = counts.agg(
         F.sum("ct").alias("tt"), F.sum("cr").alias("tr")
     )
-    # log p_target/p_raw with add-one smoothing over n_buckets cells,
+    # log p_target/p_raw with add-one smoothing over 4096 cells,
     # frozen to integer micro-units in the (broadcast) bucket table.
     ratio_micro = F.round(
         (
-            F.log((F.col("ct") + 1.0) / (F.col("tt") + F.lit(float(n_buckets))))
-            - F.log((F.col("cr") + 1.0) / (F.col("tr") + F.lit(float(n_buckets))))
+            F.log((F.col("ct") + 1.0) / (F.col("tt") + F.lit(4096.0)))
+            - F.log((F.col("cr") + 1.0) / (F.col("tr") + F.lit(4096.0)))
         )
         * 1e6
     ).cast("long")
@@ -1305,14 +1198,14 @@ def dsir_weights(
     raw = F.when(F.col("is_target"), F.lit(0)).otherwise(F.col("cnt"))
     return (
         g.join(F.broadcast(table), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(raw).alias("n_feats"),
             F.sum(raw * F.col("lr_micro")).alias("lr_sum_micro"),
         )
         .where(F.col("n_feats") > 0)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_feats"),
             F.col("lr_sum_micro"),
             # round to integer micro FIRST: sum/n hits exact .5 halves
@@ -1328,12 +1221,7 @@ def dsir_weights(
     )
 
 
-def softdedup_weights(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def softdedup_weights(docs: DataFrame, n: int = 8) -> DataFrame:
     """SoftDeDup reweighting (He et al. 2024): instead of REMOVING
     near-duplicate documents, down-weight each doc by the corpus-wide
     "commonness" of its word ``n``-grams — docs made of boilerplate
@@ -1354,15 +1242,15 @@ def softdedup_weights(
     sums, rounded 6 dp — engine-portable by construction.
     """
     per_doc = (
-        _shingle_df(docs, text_col, id_col, n)
-        .groupBy(id_col)
+        _shingle_df(docs, "text", "doc_id", n)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
             F.sum("df").cast("long").alias("sum_df"),
         )
     )
-    return docs.select(id_col).join(per_doc, id_col, "left").select(
-        F.col(id_col),
+    return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce("n_shingles", F.lit(0)).cast("long").alias("n_shingles"),
         F.when(
             F.coalesce("n_shingles", F.lit(0)) > 0,
@@ -1378,15 +1266,10 @@ def softdedup_weights(
     )
 
 
-def ccnet_buckets(
-    docs: DataFrame,
-    by: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ccnet_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020): rank
     every doc by its LM score within its group (CCNet buckets per
-    language; here per ``by`` column) and split into head / middle /
+    language; here per ``source`` column) and split into head / middle /
     tail thirds — the standard curriculum/selection signal ("train on
     head+middle, drop tail").  The LM is the engine-native corpus
     bigram model of :func:`lm_bigram_score` standing in for the
@@ -1401,15 +1284,15 @@ def ccnet_buckets(
     sort of (id, score) pairs only, and the group key keeps partitions
     independent.
     """
-    scored = lm_bigram_score(docs, text_col=text_col, id_col=id_col)
-    src = docs.select(F.col(id_col), F.col(by))
-    j = src.join(scored, id_col)  # docs with >= 1 bigram
+    scored = lm_bigram_score(docs)
+    src = docs.select(F.col("doc_id"), F.col("source"))
+    j = src.join(scored, "doc_id")  # docs with >= 1 bigram
     nt = F.ntile(3).over(
-        Window.partitionBy(by).orderBy(F.asc("h_bits"), F.asc(id_col))
+        Window.partitionBy("source").orderBy(F.asc("h_bits"), F.asc("doc_id"))
     )
     return j.select(
-        F.col(id_col),
-        F.col(by),
+        F.col("doc_id"),
+        F.col("source"),
         F.col("n_bigrams"),
         F.col("h_bits"),
         nt.alias("tier"),
@@ -1419,14 +1302,9 @@ def ccnet_buckets(
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document n-gram novelty against everything EARLIER in the
-    corpus (by ascending ``id_col``): the fraction of a doc's distinct
+    corpus (by ascending ``doc_id``): the fraction of a doc's distinct
     word n-grams whose first corpus occurrence is this doc.  The
     streaming-ingest curation signal — a crawl batch whose novelty
     collapses toward 0 is re-crawling what the corpus already holds
@@ -1446,36 +1324,30 @@ def ngram_novelty(
     at least one shingle; novelty_micro = n_novel*1e6 div n_shingles —
     integer floor-division microunits, bit-stable across engines.
     """
-    sh = shingle_hashes(docs, text_col, id_col, n).distinct()
-    first = sh.groupBy("h").agg(F.min(id_col).alias("first_id"))
+    sh = shingle_hashes(docs, "text", "doc_id", 3).distinct()
+    first = sh.groupBy("h").agg(F.min("doc_id").alias("first_id"))
     return (
         sh.join(first, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum(
-                F.when(F.col("first_id") == F.col(id_col), 1).otherwise(0)
+                F.when(F.col("first_id") == F.col("doc_id"), 1).otherwise(0)
             ).alias("n_novel"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_novel",
             F.expr("n_novel * 1000000L div n_shingles").alias("novelty_micro"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def quantile_normalize(
-    docs: DataFrame,
-    score_col: str = "n_chars",
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    buckets: int = 10,
-) -> DataFrame:
+def quantile_normalize(docs: DataFrame) -> DataFrame:
     """Quantile-normalize a per-document quality signal WITHIN each
-    group: percent-rank of ``score_col`` inside ``group_col`` plus the
+    group: percent-rank of ``n_chars`` inside ``lang`` plus the
     equi-depth bucket (decile by default).  This is how heterogeneous
     quality scores become comparable across languages/sources before a
     global keep-fraction is applied — raw thresholds systematically
@@ -1486,27 +1358,23 @@ def quantile_normalize(
     ((rank-1)/(n-1)) rounded at the edge — deterministic under ties
     because ties share a rank by definition.
 
-    Returns (doc_id, <group_col>, score, pr, bucket) ordered by doc_id.
+    Returns (doc_id, lang, score, pr, bucket) ordered by doc_id.
     """
     base = docs.select(
-        F.col(id_col),
-        F.col(group_col),
-        F.col(score_col).cast("long").alias("score"),
+        F.col("doc_id"),
+        F.col("lang"),
+        F.col("n_chars").cast("long").alias("score"),
     )
-    w_rank = Window.partitionBy(group_col).orderBy("score")
-    w_tile = Window.partitionBy(group_col).orderBy("score", id_col)
+    w_rank = Window.partitionBy("lang").orderBy("score")
+    w_tile = Window.partitionBy("lang").orderBy("score", "doc_id")
     return (
         base.withColumn("pr", F.round(F.percent_rank().over(w_rank), 6))
-        .withColumn("bucket", F.ntile(buckets).over(w_tile).cast("long"))
-        .orderBy(id_col)
+        .withColumn("bucket", F.ntile(10).over(w_tile).cast("long"))
+        .orderBy("doc_id")
     )
 
 
-def unigram_kl(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def unigram_kl(docs: DataFrame) -> DataFrame:
     """Per-slice distribution drift: exact KL(slice ‖ corpus) over the
     add-one-smoothed unigram token distributions — the cheap monitor
     that catches a crawl source going off-distribution (spam bursts,
@@ -1535,7 +1403,7 @@ def unigram_kl(
     Returns (source, n_tokens, n_types, kl) ordered by source.
     """
     slice_counts = token_counts(
-        docs.withColumnRenamed(group_col, "grp"), text_col, "grp", token="t", n="cs"
+        docs.withColumnRenamed("source", "grp"), "text", "grp", token="t", n="cs"
     )
     # the tokenize aggregate feeds the corpus rollup, the slice totals
     # and the in-support join — materialize once so the docstring's
@@ -1595,22 +1463,16 @@ def unigram_kl(
     )
     return (
         out.select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             F.col("ns").cast("long").alias("n_tokens"),
             F.col("types").cast("long").alias("n_types"),
             F.round(F.col("in_support_nano") / 1e9 + tail, 6).alias("kl"),
         )
-        .orderBy(group_col)
+        .orderBy("source")
     )
 
 
-def split_stratified_exact(
-    docs: DataFrame,
-    weights: tuple = (80, 10, 10),
-    names: tuple = ("train", "val", "test"),
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def split_stratified_exact(docs: DataFrame) -> DataFrame:
     """EXACT-count stratified split: within EACH stratum the split sizes
     hit the requested proportions to ±1 row, unlike the hash split
     (:func:`split_assign`) whose per-stratum fractions drift ~1/√n —
@@ -1626,32 +1488,26 @@ def split_stratified_exact(
     split absorbs the remainder.  One exchange (the stratum window);
     the count attaches via the same window, no second pass.
 
-    Returns (doc_id, <group_col>, split) ordered by doc_id.
+    Returns (doc_id, lang, split) ordered by doc_id.
     """
-    h = F.md5(F.col(id_col).cast("string"))
-    w = Window.partitionBy(group_col).orderBy(h, id_col)
-    wn = Window.partitionBy(group_col)
+    h = F.md5(F.col("doc_id").cast("string"))
+    w = Window.partitionBy("lang").orderBy(h, "doc_id")
+    wn = Window.partitionBy("lang")
     # row_number is INT: lift to LONG before *100 or strata beyond
     # ~21M rows overflow 32-bit arithmetic
     base = docs.select(
-        F.col(id_col),
-        F.col(group_col),
+        F.col("doc_id"),
+        F.col("lang"),
         (
             (F.row_number().over(w).cast("long") - 1) * 100
             / F.count(F.lit(1)).over(wn)
         ).alias("pct"),
     )
-    split = _split_of(F.col("pct"), weights, names)
-    return base.select(id_col, group_col, split.alias("split")).orderBy(id_col)
+    split = _split_of(F.col("pct"), (80, 10, 10), ("train", "val", "test"))
+    return base.select("doc_id", "lang", split.alias("split")).orderBy("doc_id")
 
 
-def textrank_keywords(
-    docs: DataFrame,
-    min_count: int = 5,
-    k: int = 20,
-    iters: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
+def textrank_keywords(docs: DataFrame, k: int = 20) -> DataFrame:
     """Corpus-level TextRank keyword extraction (Mihalcea/Tarau 2004,
     lifted from per-document to corpus scope): PageRank over the
     word-adjacency graph — a word is central when it co-occurs with
@@ -1662,7 +1518,7 @@ def textrank_keywords(
     Built by composition: ONE shared token-array frame feeds both
     branches — the vocabulary counts (explode → groupBy) and the
     adjacent-pair edges (built INSIDE the array, zero shuffle until
-    the pair distinct); rare words (< ``min_count``) drop before the
+    the pair distinct); rare words (< 5) drop before the
     graph so the node set is vocabulary-bounded, and the ranking
     reuses :func:`graph.pagerank` — the SAME bit-reproducible integer
     fixed-point iteration already under the unrolled-CTE oracle, so
@@ -1674,11 +1530,11 @@ def textrank_keywords(
     Returns the top-``k`` (token, rank_micro, pr) by (rank desc,
     token asc) — a deterministic total order.
     """
-    tk = docs.select(tokens(text_col, lowercase=True).alias("tk"))
+    tk = docs.select(tokens("text", lowercase=True).alias("tk"))
     freq = tk.select(F.explode("tk").alias("t")).groupBy("t").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    keep = freq.filter(F.col("cnt") >= min_count).select("t")
+    keep = freq.filter(F.col("cnt") >= 5).select("t")
     pairs = (
         tk.select(
             F.explode(
@@ -1692,7 +1548,7 @@ def textrank_keywords(
         .join(keep.withColumnRenamed("t", "doc_a"), "doc_a")
         .join(keep.withColumnRenamed("t", "doc_b"), "doc_b")
     )
-    pr = pagerank(pairs, iters=iters)
+    pr = pagerank(pairs, iters=5)
     return (
         pr.select(F.col("node").alias("token"), "rank_micro", "pr")
         .orderBy(F.desc("rank_micro"), F.asc("token"))
@@ -1700,19 +1556,14 @@ def textrank_keywords(
     )
 
 
-def inverted_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sample_k: int = 10,
-) -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Inverted-index summary: per token its document frequency and
-    the first ``sample_k`` posting doc-ids — the IR structure BM25 and
+    the first 10 posting doc-ids — the IR structure BM25 and
     every keyword search sit on, materialized the lake way (a table
     keyed by token, not an in-memory index).
 
     Scale discipline: postings are SAMPLED via a per-token window
-    rank (each token keeps its ``sample_k`` smallest doc ids) BEFORE
+    rank (each token keeps its 10 smallest doc ids) BEFORE
     any collect_list, so no aggregation buffer ever holds a stopword's
     full posting list (collect_set per token is the classic OOM).  The
     document frequency comes from the same distinct (token, doc) pair
@@ -1722,14 +1573,14 @@ def inverted_index(
     Returns (token, df, sample_postings) ordered by (df desc, token)
     limited to the 100 most frequent tokens.
     """
-    pairs = token_rows(docs, text_col, id_col, lowercase=True, token="t").distinct()
+    pairs = token_rows(docs, "text", "doc_id", lowercase=True, token="t").distinct()
     dfreq = pairs.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     sampled = (
-        top_k_per(pairs, ["t"], sample_k, F.asc(id_col))
+        top_k_per(pairs, ["t"], 10, F.asc("doc_id"))
         .groupBy("t")
         .agg(
             F.concat_ws(
-                ",", F.transform(F.sort_array(F.collect_list(id_col)), lambda x: x.cast("string"))
+                ",", F.transform(F.sort_array(F.collect_list("doc_id")), lambda x: x.cast("string"))
             ).alias("sample_postings")
         )
     )
@@ -1741,11 +1592,7 @@ def inverted_index(
     )
 
 
-def source_vocab_overlap(
-    docs: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_vocab_overlap(docs: DataFrame) -> DataFrame:
     """Pairwise vocabulary Jaccard between corpus sources — the
     mixing-audit that says which feeds are near-copies of each other
     BEFORE a mixture weighting (dsir_weights / mixture_sample) treats
@@ -1767,7 +1614,7 @@ def source_vocab_overlap(
     source_a < source_b.
     """
     v = token_rows(
-        ensure_parallelism(docs), text_col, F.col(source_col).alias("s"),
+        ensure_parallelism(docs), "text", F.col("source").alias("s"),
         lowercase=True, token="w",
     ).distinct()
     sizes = v.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("nv"))
@@ -1807,12 +1654,7 @@ def source_vocab_overlap(
     )
 
 
-def heaps_fit(
-    docs: DataFrame,
-    n_checkpoints: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def heaps_fit(docs: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary-growth fit — the companion gauge to
     :func:`zipf_fit`: distinct types V(n) against cumulative tokens n
     follows V ≈ K·n^β (β ≈ 0.4–0.6 for natural language); a flat
@@ -1827,17 +1669,17 @@ def heaps_fit(
     ONE 1-row aggregate (a global ntile over the doc table would put
     every doc in one partition — the anti-pattern
     histogram_equidepth documents).  The log-log OLS runs over the
-    ≤ ``n_checkpoints`` points as a fixed-order in-row fold (the
+    ≤ 20 points as a fixed-order in-row fold (the
     zipf_fit discipline).
 
     Returns one row: (n_points, beta, log_k) — 6 dp.
     """
-    tok = token_rows(docs, text_col, id_col, token="t")
-    first_seen = tok.groupBy("t").agg(F.min(id_col).alias("fd"))
-    per_doc = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("nt"))
-    qs = [i / n_checkpoints for i in range(1, n_checkpoints + 1)]
+    tok = token_rows(docs, "text", "doc_id", token="t")
+    first_seen = tok.groupBy("t").agg(F.min("doc_id").alias("fd"))
+    per_doc = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nt"))
+    qs = [i / 20 for i in range(1, 21)]
     cuts_row = per_doc.agg(
-        *[F.percentile(id_col, F.lit(q)).alias(f"c{i}") for i, q in enumerate(qs)]
+        *[F.percentile("doc_id", F.lit(q)).alias(f"c{i}") for i, q in enumerate(qs)]
     )
     cuts = cuts_row.select(
         F.posexplode(F.array(*[F.col(f"c{i}") for i in range(len(qs))])).alias(
@@ -1845,11 +1687,11 @@ def heaps_fit(
         )
     )
     # per-cutoff totals: two semi-aggregations against the broadcast
-    # cutoff list (n_checkpoints-way fan-out on domain-sized tables)
+    # cutoff list (20-way fan-out on domain-sized tables)
     fs = first_seen.join(F.broadcast(cuts), F.col("fd") <= F.col("cut")).groupBy(
         "tile", "cut"
     ).agg(F.count(F.lit(1)).alias("v"))
-    ns = per_doc.join(F.broadcast(cuts), F.col(id_col) <= F.col("cut")).groupBy(
+    ns = per_doc.join(F.broadcast(cuts), F.col("doc_id") <= F.col("cut")).groupBy(
         "tile"
     ).agg(F.sum("nt").alias("n"))
     pts = (
@@ -1872,13 +1714,7 @@ def heaps_fit(
     )
 
 
-def token_budget_sample(
-    docs: DataFrame,
-    budget_tokens: int = 20_000,
-    source_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_budget_sample(docs: DataFrame, budget_tokens: int = 20_000) -> DataFrame:
     """Balanced-mixture sampling to a TOKEN budget: give every source
     an equal share of ``budget_tokens`` and keep each source's docs
     with probability ``min(1, share / source_token_mass)`` — the
@@ -1905,9 +1741,9 @@ def token_budget_sample(
     comparison is integer-only.  Returns one row per doc:
     ``(doc_id, source, n_tokens, keep)``.
     """
-    n_tok = F.size(tokens(text_col, lowercase=True)).cast("long")
+    n_tok = F.size(tokens("text", lowercase=True)).cast("long")
     base = ensure_parallelism(docs).select(
-        F.col(id_col), F.col(source_col).alias("source"), n_tok.alias("n_tokens")
+        F.col("doc_id"), F.col("source").alias("source"), n_tok.alias("n_tokens")
     )
     totals = base.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     n_src = totals.agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
@@ -1926,11 +1762,11 @@ def token_budget_sample(
             ).cast("long"),
         ).alias("p_permillion"),
     )
-    u = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10).cast(
+    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
         "long"
     ) % 1_000_000
     return base.join(F.broadcast(thresh), "source").select(
-        id_col,
+        "doc_id",
         "source",
         "n_tokens",
         (u < F.col("p_permillion")).alias("keep"),
@@ -1982,12 +1818,7 @@ def class_diversity(
     )
 
 
-def token_dispersion(
-    docs: DataFrame,
-    top_k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_dispersion(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Burstiness profile of the corpus's top-k tokens: the
     variance-to-mean ratio (VMR) of per-document counts — ~1 for
     Poisson-scattered function words, ≫1 for bursty topical terms that
@@ -2008,7 +1839,7 @@ def token_dispersion(
     no global sort.  Returns ``(token, total_count, doc_freq, vmr)``.
     """
     per_doc = token_counts(
-        ensure_parallelism(docs), text_col, id_col, lowercase=True, token="t", n="c"
+        ensure_parallelism(docs), "text", "doc_id", lowercase=True, token="t", n="c"
     )
     per_tok = per_doc.groupBy("t").agg(
         F.sum("c").cast("long").alias("total_count"),
@@ -2076,12 +1907,7 @@ def _jsd_finish(per_pair: DataFrame) -> DataFrame:
     ).orderBy("source_a", "source_b")
 
 
-def js_divergence(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    fanout_limit: int = JSD_FANOUT_LIMIT,
-) -> DataFrame:
+def js_divergence(docs: DataFrame, fanout_limit: int = JSD_FANOUT_LIMIT) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between every two corpus
     slices' unigram token distributions — the SYMMETRIC, bounded
     ([0, ln 2]) companion to :func:`unigram_kl` (KL ranks each slice
@@ -2119,7 +1945,7 @@ def js_divergence(
     the pair.
     """
     sc = token_counts(
-        docs.withColumnRenamed(group_col, "grp"), text_col, "grp", token="t", n="cs"
+        docs.withColumnRenamed("source", "grp"), "text", "grp", token="t", n="cs"
     )
     # materialize the tokenize aggregate ONCE: lazy checkpoint — the
     # rollup collect below is the first action and writes the blocks,

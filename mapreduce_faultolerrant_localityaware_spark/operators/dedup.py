@@ -346,8 +346,6 @@ MAX_BUCKET_ALLPAIRS = 256
 
 def dedup_minhash_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket_allpairs: int = MAX_BUCKET_ALLPAIRS,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash-LSH banding.
@@ -374,8 +372,8 @@ def dedup_minhash_candidates(
 
     Output: (doc_a, doc_b) distinct, a < b.
     """
-    sig = minhash_signatures(docs, text_col, id_col)
-    return _lsh_pairs(sig, id_col, max_bucket_allpairs)
+    sig = minhash_signatures(docs, "text", "doc_id")
+    return _lsh_pairs(sig, "doc_id", max_bucket_allpairs)
 
 
 def _lsh_pairs(sig: DataFrame, id_col: str, max_bucket_allpairs: int) -> DataFrame:
@@ -394,8 +392,6 @@ def _lsh_pairs(sig: DataFrame, id_col: str, max_bucket_allpairs: int) -> DataFra
 
 def lsh_bucket_stats(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket_allpairs: int = MAX_BUCKET_ALLPAIRS,
 ) -> DataFrame:
     """Per-band LSH bucket-size diagnostics — the observability half of
@@ -405,7 +401,7 @@ def lsh_bucket_stats(
     degrade to star expansion).  Pure aggregate: never materializes id
     arrays, so it is safe to run on adversarial corpora first.
     """
-    bands = minhash_bands(minhash_signatures(docs, text_col, id_col), id_col)
+    bands = minhash_bands(minhash_signatures(docs, "text", "doc_id"), "doc_id")
     sizes = bands.groupBy("band", "band_sig").agg(F.count(F.lit(1)).alias("n"))
     return (
         sizes.filter(F.col("n") > 1)
@@ -420,14 +416,14 @@ def lsh_bucket_stats(
     )
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup on normalized text: one representative (min id) +
     duplicate count per distinct content hash.  Shuffles digests, not text.
     """
     return (
-        docs.select(F.col(id_col), content_hash(text_col))
+        docs.select(F.col("doc_id"), content_hash("text"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
@@ -452,7 +448,7 @@ def _simhash_vote(h, b: int):
     return F.when(hit, F.lit(1)).otherwise(F.lit(-1))
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """64-bit SimHash fingerprint per doc (token-frequency-weighted bit vote).
 
     64 bits is the industry-standard width: a 32-bit space is
@@ -518,7 +514,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
             ).cast("int"),
         )
 
-    hs = F.transform(tokens(text_col, lowercase=True), lambda t: F.md5(t))
+    hs = F.transform(tokens("text", lowercase=True), lambda t: F.md5(t))
     if bits == 64:
         hs = F.transform(
             hs,
@@ -531,7 +527,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
         def votes(h):
             return F.array(*[_simhash_vote(h, b) for b in range(bits)])
 
-    base = ensure_parallelism(docs).select(F.col(id_col), hs.alias("hs"))
+    base = ensure_parallelism(docs).select(F.col("doc_id"), hs.alias("hs"))
     counts = F.aggregate(
         "hs",
         F.array_repeat(F.lit(0), bits),
@@ -543,7 +539,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return base.select(F.col(id_col), packed.alias("simhash"))
+    return base.select(F.col("doc_id"), packed.alias("simhash"))
 
 
 #: Shingles appearing in more than this many documents are excluded
@@ -556,9 +552,6 @@ MAX_SHINGLE_DF = 10_000
 
 def dedup_ngram_jaccard(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
@@ -578,38 +571,34 @@ def dedup_ngram_jaccard(
     Jaccard, which slightly UNDER-estimates — conservative) intact;
     the df histogram is observable via the same groupBy.
     """
-    sh, capped = _distinct_shingles(docs, text_col, id_col, n, max_shingle_df)
+    sh, capped = _distinct_shingles(docs, "text", "doc_id", 3, max_shingle_df)
     return (
-        _common_shingles(capped, sh, id_col)
+        _common_shingles(capped, sh, "doc_id")
         .withColumn("jaccard", _jaccard("na", "nb"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def dedup_embedding_cosine(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.4,
-) -> DataFrame:
+def dedup_embedding_cosine(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold, blocked by
-    ``block_col`` (cluster/partition id) so the self-join is an
+    ``label`` (cluster/partition id) so the self-join is an
     equi-join per block, not n².  The blocking column is the IVF-style
     coarse quantizer cell; with no precomputed cells, substitute an
     LSH sign-bucket.  See similarity.ann_ivf for the search analog.
     """
     e = emb.select(
-        F.col(id_col), F.col(block_col).alias("blk"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id"),
+        F.col("label").alias("blk"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     a, b = e.alias("a"), e.alias("b")
     return (
         a.join(b, "blk")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
             F.round(cosine_similarity(F.col("a.v"), F.col("b.v")), 6).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
@@ -655,8 +644,6 @@ def dedup_simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     max_bucket: int = MAX_BUCKET_ALLPAIRS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup pairs from banded SimHash fingerprints: band the
     64-bit fingerprint into SIMHASH_BANDS byte buckets, candidate
@@ -676,13 +663,13 @@ def dedup_simhash_pairs(
     functions inside the bucket row, and verification before the
     dedup ``distinct()`` so only surviving pairs shuffle again.
     """
-    sig = simhash(docs, text_col=text_col, id_col=id_col)
+    sig = simhash(docs)
     bands = sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "simhash",
         F.posexplode(_simhash_bands(8, SIMHASH_BANDS)).alias("band", "bv"),
     )
-    member = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sim"))
+    member = F.struct(F.col("doc_id").alias("id"), F.col("simhash").alias("sim"))
     buckets = (
         bands.groupBy("band", "bv")
         .agg(F.sort_array(F.collect_set(member)).alias("ms"))
@@ -703,12 +690,7 @@ def dedup_simhash_pairs(
     )
 
 
-def dedup_chunks(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 20,
-) -> DataFrame:
+def dedup_chunks(docs: DataFrame, chunk_tokens: int = 20) -> DataFrame:
     """Corpus-wide chunk-level exact dedup (the C4/CCNet "line dedup"
     pass, generalized to fixed ``chunk_tokens``-token chunks because the
     synthetic corpus has no line structure): every distinct chunk keeps
@@ -728,7 +710,7 @@ def dedup_chunks(
     Returns one row per input doc: ``doc_id, n_chunks, n_kept,
     text_dedup`` (empty string when every chunk was seen earlier).
     """
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     n_chunks = F.ceil(F.size(tk) / F.lit(chunk_tokens)).cast("int")
     # NB: F.sequence(0, -1) is DESCENDING, not empty — guard zero-token docs.
     idxs = F.when(F.size(tk) > 0, F.sequence(F.lit(0), n_chunks - 1)).otherwise(
@@ -738,20 +720,20 @@ def dedup_chunks(
         idxs,
         lambda i: F.array_join(F.slice(tk, i * chunk_tokens + 1, chunk_tokens), " "),
     )
-    base = docs.select(F.col(id_col), chunk_arr.alias("chunks"))
+    base = docs.select(F.col("doc_id"), chunk_arr.alias("chunks"))
     chunks = base.select(
-        id_col, F.posexplode_outer("chunks").alias("chunk_idx", "chunk")
+        "doc_id", F.posexplode_outer("chunks").alias("chunk_idx", "chunk")
     )
     hashed = chunks.where(F.col("chunk").isNotNull()).select(
-        id_col, "chunk_idx", F.md5("chunk").alias("h")
+        "doc_id", "chunk_idx", F.md5("chunk").alias("h")
     )
     winners = (
         hashed.groupBy("h")
-        .agg(F.min(F.struct(id_col, "chunk_idx")).alias("w"))
-        .select(F.col(f"w.{id_col}").alias(id_col), F.col("w.chunk_idx").alias("chunk_idx"))
+        .agg(F.min(F.struct("doc_id", "chunk_idx")).alias("w"))
+        .select(F.col("w.doc_id").alias("doc_id"), F.col("w.chunk_idx").alias("chunk_idx"))
     )
-    kept = chunks.join(winners, [id_col, "chunk_idx"])
-    reassembled = kept.groupBy(id_col).agg(
+    kept = chunks.join(winners, ["doc_id", "chunk_idx"])
+    reassembled = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
         F.array_join(
             F.transform(
@@ -761,24 +743,16 @@ def dedup_chunks(
             " ",
         ).alias("text_dedup"),
     )
-    totals = base.select(id_col, F.size("chunks").cast("long").alias("n_chunks"))
-    return totals.join(reassembled, id_col, "left").select(
-        id_col,
+    totals = base.select("doc_id", F.size("chunks").cast("long").alias("n_chunks"))
+    return totals.join(reassembled, "doc_id", "left").select(
+        "doc_id",
         "n_chunks",
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
         F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
     )
 
 
-def dedup_pipeline(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_bucket_allpairs: int = MAX_BUCKET_ALLPAIRS,
-    max_iter: int = 20,
-) -> DataFrame:
+def dedup_pipeline(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """The END-TO-END near-dup dedup pass a training pipeline actually
     runs, composed from this module's stages: MinHash-LSH candidate
     pairs → exact n-gram-Jaccard verification of ONLY those pairs →
@@ -795,7 +769,7 @@ def dedup_pipeline(
     Stage shape at 100 TB, and why nothing is computed twice:
       * candidates: one LSH bucketing groupBy (see
         dedup_minhash_candidates — O(n·bands) shuffle, star-expansion
-        skew guard above ``max_bucket_allpairs``).
+        skew guard above ``MAX_BUCKET_ALLPAIRS``).
       * verify: LSH leaves O(n) candidate pairs, so each side's
         DISTINCT shingle set attaches by equi-join and the Jaccard is
         in-row ``array_intersect`` work — never an inverted-index
@@ -823,32 +797,27 @@ def dedup_pipeline(
     # (id, digest) relation repartitions by id ONCE so the signature
     # aggregation and the verify-set rebuild sit on the SAME exchange
     # (ReuseExchange, the ngram_coverage pattern; see _shingle_digests).
-    sh = _shingle_digests(docs, text_col, id_col, n).repartition(id_col)
-    cand = _lsh_pairs(_minhash(sh, id_col, "digest"), id_col, max_bucket_allpairs)
-    edges = _verify_jaccard(cand, _shingle_sets(sh, id_col, "digest"), id_col, threshold).select(
-        "doc_a", "doc_b"
-    )
-    labels = connected_components(edges, max_iter=max_iter).withColumnRenamed("doc_id", id_col)
+    sh = _shingle_digests(docs, "text", "doc_id", 3).repartition("doc_id")
+    cand = _lsh_pairs(_minhash(sh, "doc_id", "digest"), "doc_id", MAX_BUCKET_ALLPAIRS)
+    edges = _verify_jaccard(
+        cand, _shingle_sets(sh, "doc_id", "digest"), "doc_id", threshold
+    ).select("doc_a", "doc_b")
+    labels = connected_components(edges, max_iter=20).withColumnRenamed("doc_id", "doc_id")
     clus = (
-        docs.select(F.col(id_col))
-        .join(labels, id_col, "left")
-        .select(F.col(id_col), F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
+        docs.select(F.col("doc_id"))
+        .join(labels, "doc_id", "left")
+        .select(F.col("doc_id"), F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"))
     )
     sizes = clus.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_cluster"))
     return clus.join(sizes, "cluster_id").select(
-        id_col,
+        "doc_id",
         "cluster_id",
         "n_cluster",
-        (F.col(id_col) == F.col("cluster_id")).alias("keep"),
+        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
     )
 
 
-def dedup_incremental(
-    base: DataFrame,
-    delta: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_incremental(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental exact dedup of a NEW batch against an EXISTING
     corpus — the steady-state shape of a production ingestion pipeline
     (each crawl snapshot dedups against everything already accepted,
@@ -865,30 +834,24 @@ def dedup_incremental(
     Returns one row per delta doc: ``doc_id, in_base, keep``.
     """
     bh = (
-        base.select(content_hash(text_col))
+        base.select(content_hash("text"))
         .groupBy("content_hash")
         .agg(F.count(F.lit(1)).alias("n_base"))
     )
-    dh = delta.select(F.col(id_col), content_hash(text_col))
-    first_in_delta = dh.groupBy("content_hash").agg(F.min(id_col).alias("first_id"))
+    dh = delta.select(F.col("doc_id"), content_hash("text"))
+    first_in_delta = dh.groupBy("content_hash").agg(F.min("doc_id").alias("first_id"))
     return (
         dh.join(first_in_delta, "content_hash")
         .join(bh, "content_hash", "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("n_base").isNotNull().alias("in_base"),
-            (F.col("n_base").isNull() & (F.col(id_col) == F.col("first_id"))).alias("keep"),
+            (F.col("n_base").isNull() & (F.col("doc_id") == F.col("first_id"))).alias("keep"),
         )
     )
 
 
-def substring_spans(
-    docs: DataFrame,
-    window: int = 12,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def substring_spans(docs: DataFrame, window: int = 12, min_docs: int = 2) -> DataFrame:
     """Exact repeated-substring detection at token granularity — the
     span-level dedup pass of Lee et al. 2021 ("Deduplicating Training
     Data Makes Language Models Better"): a ``window``-token span whose
@@ -925,16 +888,16 @@ def substring_spans(
     ``doc_id, n_windows, dup_windows, dup_ratio`` where dup_windows
     counts window POSITIONS whose digest occurs in >= min_docs docs.
     """
-    wins = _shingle_rows(docs, text_col, id_col, window).select(
-        id_col, F.md5("shingle").alias("wh")
+    wins = _shingle_rows(docs, "text", "doc_id", window).select(
+        "doc_id", F.md5("shingle").alias("wh")
     )
-    per = wins.groupBy(id_col, "wh").agg(F.count(F.lit(1)).alias("cnt"))
+    per = wins.groupBy("doc_id", "wh").agg(F.count(F.lit(1)).alias("cnt"))
     # per carries one row per DISTINCT (doc, digest), so count(*) per
     # digest IS the distinct-doc count — no countDistinct shuffle.
     nd = F.count(F.lit(1)).over(Window.partitionBy("wh"))
     flagged = per.withColumn("is_dup", (nd >= min_docs).cast("int"))
     dup = F.sum(F.when(F.col("is_dup") == 1, F.col("cnt")).otherwise(0))
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.sum("cnt").cast("long").alias("n_windows"),
         dup.cast("long").alias("dup_windows"),
         F.round(dup / F.sum("cnt"), 6).alias("dup_ratio"),
@@ -945,8 +908,6 @@ def dedup_editdist(
     docs: DataFrame,
     max_dist: int = 64,
     max_hamming: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Edit-distance-verified near-duplicate pairs: SimHash banding
     proposes candidates, exact Levenshtein over the normalized text
@@ -967,10 +928,9 @@ def dedup_editdist(
     (rounded 6 dp) is the normalized similarity a filter thresholds.
     """
     cand = dedup_simhash_pairs(
-        docs, max_hamming=max_hamming, text_col=text_col, id_col=id_col
-    ).select("doc_a", "doc_b")
-    norm = docs.select(F.col(id_col), normalized_text(text_col).alias("nt"))
-    joined = _attach(cand, norm, id_col, {"nt": "ta"}, {"nt": "tb"})
+        docs, max_hamming=max_hamming).select("doc_a", "doc_b")
+    norm = docs.select(F.col("doc_id"), normalized_text("text").alias("nt"))
+    joined = _attach(cand, norm, "doc_id", {"nt": "ta"}, {"nt": "tb"})
     dist = F.levenshtein("ta", "tb")
     longest = F.greatest(F.length("ta"), F.length("tb"))
     return (
@@ -994,8 +954,6 @@ def dedup_incremental_fuzzy(
     base: DataFrame,
     delta: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Fuzzy incremental dedup — the NEAR-dup counterpart of
     :func:`dedup_incremental`: each new-batch (delta) doc is checked
@@ -1026,7 +984,7 @@ def dedup_incremental_fuzzy(
     """
 
     def bands_of(docs, side):
-        sig = simhash(docs, text_col=text_col, id_col=id_col)
+        sig = simhash(docs)
         # materialization-by-aggregation: the fingerprint is a PROJECTED
         # expression, and Catalyst collapses projections straight
         # through exchanges — without this barrier the hamming filter
@@ -1035,8 +993,8 @@ def dedup_incremental_fuzzy(
         # aggregate's outputs cannot be collapsed into, stay
         # recomputable on executor loss (unlike a checkpoint), and the
         # exchange ships only (id, fingerprint).
-        sig = sig.groupBy(id_col).agg(F.max("simhash").alias("simhash"))
-        return simhash_pair_bands(sig, id_col, side, max_hamming)
+        sig = sig.groupBy("doc_id").agg(F.max("simhash").alias("simhash"))
+        return simhash_pair_bands(sig, "doc_id", side, max_hamming)
 
     db = bands_of(delta, "delta")
     bb = bands_of(base, "base")
@@ -1050,21 +1008,17 @@ def dedup_incremental_fuzzy(
         .agg(F.count(F.lit(1)).alias("n_matches"))
     )
     return (
-        delta.select(F.col(id_col))
-        .join(matches.withColumnRenamed("delta_id", id_col), id_col, "left")
+        delta.select(F.col("doc_id"))
+        .join(matches.withColumnRenamed("delta_id", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
             (F.coalesce("n_matches", F.lit(0)) == 0).alias("keep"),
         )
     )
 
 
-def dedup_exact_keep_best(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_exact_keep_best(docs: DataFrame) -> DataFrame:
     """Exact dedup electing the BEST copy, not the arbitrary min-id
     one: within each normalized-content group the representative is
     the longest raw text (the most complete crawl of the page),
@@ -1079,29 +1033,23 @@ def dedup_exact_keep_best(
 
     Returns ``doc_id, content_hash, n_copies, keep``.
     """
-    h = docs.select(F.col(id_col), content_hash(text_col), F.length(text_col).alias("len"))
+    h = docs.select(F.col("doc_id"), content_hash("text"), F.length("text").alias("len"))
     elected = h.groupBy("content_hash").agg(
         F.count(F.lit(1)).cast("long").alias("n_copies"),
         (
-            F.max(F.struct(F.col("len"), (-F.col(id_col)).alias("negid")))["negid"]
+            F.max(F.struct(F.col("len"), (-F.col("doc_id")).alias("negid")))["negid"]
             * -1
         ).alias("best_id"),
     )
     return h.join(elected, "content_hash").select(
-        id_col,
+        "doc_id",
         "content_hash",
         "n_copies",
-        (F.col(id_col) == F.col("best_id")).alias("keep"),
+        (F.col("doc_id") == F.col("best_id")).alias("keep"),
     )
 
 
-def minhash_accuracy_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_bucket_allpairs: int = MAX_BUCKET_ALLPAIRS,
-) -> DataFrame:
+def minhash_accuracy_report(docs: DataFrame, n: int = 3) -> DataFrame:
     """Estimator-quality audit for the MinHash pipeline — the dedup
     analog of ann_recall_report: for every LSH candidate pair, the
     MinHash-ESTIMATED Jaccard (fraction of equal signature
@@ -1124,19 +1072,19 @@ def minhash_accuracy_report(
     # n-gram signatures being audited (a dedup_minhash_candidates call
     # here would hardwire its own 3-gram signatures regardless of
     # ``n``, auditing an estimator that never produced the pairs)
-    sig = minhash_signatures(docs, text_col, id_col, n)
+    sig = minhash_signatures(docs, "text", "doc_id", n)
     # the signature table feeds candidate generation AND both
     # estimator-attach sides — materialize the 12-int-per-doc frame
     # once so the minhash pipeline runs once (round-11 scan audit)
     sig = materialize_once(sig)
-    cand = _lsh_pairs(sig, id_col, max_bucket_allpairs)
+    cand = _lsh_pairs(sig, "doc_id", MAX_BUCKET_ALLPAIRS)
     sides = [{f"mh{i}": f"{s}{i}" for i in range(NUM_HASHES)} for s in "ab"]
     sh_sets = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.array_distinct(shingles(tokens(text_col, lowercase=True), n)).alias("shs"),
+        F.col("doc_id"),
+        F.array_distinct(shingles(tokens("text", lowercase=True), n)).alias("shs"),
     )
     j = _attach(
-        _attach(cand, sig, id_col, *sides), sh_sets, id_col, {"shs": "sh_a"}, {"shs": "sh_b"}
+        _attach(cand, sig, "doc_id", *sides), sh_sets, "doc_id", {"shs": "sh_a"}, {"shs": "sh_b"}
     )
     matches = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(NUM_HASHES)
@@ -1153,13 +1101,7 @@ def minhash_accuracy_report(
     )
 
 
-def set_similarity_join_prefix(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
+def set_similarity_join_prefix(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     """EXACT Jaccard similarity join via prefix filtering (the
     AllPairs / PPJoin family — Bayardo et al., WWW'07; Xiao et al.,
     WWW'08).  Returns every pair with n-gram-shingle Jaccard ≥
@@ -1201,15 +1143,15 @@ def set_similarity_join_prefix(
     # is the dominant shuffle.  The hashed shingle set feeds the df
     # window chain AND the verify sets — materialize once (round-11
     # scan audit).
-    sh = materialize_once(shingle_hashes(docs, text_col, id_col, n).distinct())
+    sh = materialize_once(shingle_hashes(docs, "text", "doc_id", 3).distinct())
     # df as a COUNT WINDOW over the shingle partition, not a separate
     # groupBy + join-back: one exchange on shingle serves both the df
     # computation and the (doc, shingle, df) attribution (same fusion
     # as dedup_substring — the join-back shape re-shuffles sh a second
     # time and splits the consumer tree).
     with_df = sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
-    pref = _ordered_sets(with_df, id_col).select(
-        F.col(id_col),
+    pref = _ordered_sets(with_df, "doc_id").select(
+        F.col("doc_id"),
         F.col("n_sh"),
         F.posexplode(_prefix(threshold)).alias("pos", "pshingle"),
     )
@@ -1219,10 +1161,10 @@ def set_similarity_join_prefix(
     matched = (
         a.join(b, F.col("a.pshingle") == F.col("b.pshingle"))
         .filter(_lengths_ok("a.n_sh", "b.n_sh", threshold))
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             F.col("a.n_sh").alias("na"),
             F.col("b.n_sh").alias("nb"),
             (F.col("a.pos") + 1).alias("ia"),
@@ -1262,7 +1204,7 @@ def set_similarity_join_prefix(
     # verify sets come straight from sh (collect_set over the reused
     # (doc, h) exchange), NOT from the ordered sets: the verify branch
     # then skips the df window+sort entirely.
-    return _verify_jaccard(cand, _shingle_sets(sh, id_col), id_col, threshold).select(
+    return _verify_jaccard(cand, _shingle_sets(sh, "doc_id"), "doc_id", threshold).select(
         "doc_a", "doc_b", "jaccard"
     )
 
@@ -1316,19 +1258,13 @@ def _snm_window_pairs(
 
 def dedup_sorted_neighborhood(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    key_len: int = 24,
-    window: int = 4,
-    n: int = 3,
-    threshold: float = 0.5,
     passes: tuple = ("prefix",),
 ) -> DataFrame:
     """Sorted-neighborhood near-dup blocking (Hernández & Stolfo,
     SIGMOD'95): sort the corpus by a normalized-text prefix key, then
-    compare only records within ``window`` positions of each other in
+    compare only records within 4 positions of each other in
     the global sort order; survivors are verified on exact n-gram
-    Jaccard ≥ ``threshold``.  The third blocking family next to
+    Jaccard ≥ 0.5.  The third blocking family next to
     LSH banding (probabilistic) and prefix filtering (exact):
     sorted-neighborhood catches near-dups that share a PREFIX even
     when token-set overlap alone would need a lower threshold, with a
@@ -1350,22 +1286,22 @@ def dedup_sorted_neighborhood(
     prefix-summed with a single window over ≤256² rows), pass 2 ranks
     within buckets in parallel and adds the broadcast offset.
     Neighborhood pairing is then an equi-join on rank blocks of size
-    ``window`` (a pair ≤ window apart spans at most two adjacent
+    4 (a pair ≤ 4 apart spans at most two adjacent
     blocks, so each left row carries its block id and the successor's
     — two join keys, no range join), and only candidate ids ride the
     verify join.
     """
     keys = {
-        "prefix": F.expr(f"substring({_normalized_or_empty(text_col)}, 1, {key_len})"),
+        "prefix": F.expr(f"substring({_normalized_or_empty('text')}, 1, 24)"),
         "sorted": F.substring(
-            F.concat_ws(" ", F.sort_array(tokens(text_col, lowercase=True))),
+            F.concat_ws(" ", F.sort_array(tokens("text", lowercase=True))),
             1,
-            key_len,
+            24,
         ),
     }
     cand = None
     for p in passes:
-        pairs = _snm_window_pairs(docs, keys[p], id_col, window)
+        pairs = _snm_window_pairs(docs, keys[p], "doc_id", 4)
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.distinct()
     # candidate ids feed both verify joins; the hashed shingle sets
@@ -1378,16 +1314,13 @@ def dedup_sorted_neighborhood(
     # explode → project → collect_set shape at sf0.1.  The extra
     # exchange ships (doc, 8-byte hash) pairs only, and the verify
     # join below then ships 8-byte set elements instead of strings.
-    sets = materialize_once(_shingle_sets(shingle_hashes(docs, text_col, id_col, n), id_col))
-    return _verify_jaccard(cand, sets, id_col, threshold).select("doc_a", "doc_b", "jaccard")
+    sets = materialize_once(_shingle_sets(shingle_hashes(docs, "text", "doc_id", 3), "doc_id"))
+    return _verify_jaccard(cand, sets, "doc_id", 0.5).select("doc_a", "doc_b", "jaccard")
 
 
 def dedup_incremental_jaccard(
     base: DataFrame,
     delta: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.7,
 ) -> DataFrame:
     """EXACT-Jaccard incremental dedup — the third member of the
@@ -1415,14 +1348,14 @@ def dedup_incremental_jaccard(
     # build and the prefix explode — materialize the (id, 8-byte hash)
     # frames once (round-11 scan audit)
     bh, dh = (
-        materialize_once(shingle_hashes(d, text_col, id_col, n).distinct()) for d in (base, delta)
+        materialize_once(shingle_hashes(d, "text", "doc_id", 3).distinct()) for d in (base, delta)
     )
     dfb = bh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
 
     def prefixes(rel: DataFrame, side: str) -> DataFrame:
         withdf = rel.join(dfb, "h", "left").withColumn("df", F.coalesce("df", F.lit(0)))
-        return _ordered_sets(withdf, id_col).select(
-            F.col(id_col).alias(f"{side}_id"),
+        return _ordered_sets(withdf, "doc_id").select(
+            F.col("doc_id").alias(f"{side}_id"),
             F.col("n_sh").alias(f"{side}_n"),
             F.explode(_prefix(threshold)).alias("ph"),
         )
@@ -1437,33 +1370,27 @@ def dedup_incremental_jaccard(
     matches = (
         _verify_jaccard(
             cand,
-            _shingle_sets(dh, id_col),
-            id_col,
+            _shingle_sets(dh, "doc_id"),
+            "doc_id",
             threshold,
             ("d_id", "b_id"),
-            _shingle_sets(bh, id_col),
+            _shingle_sets(bh, "doc_id"),
         )
         .groupBy("d_id")
         .agg(F.count(F.lit(1)).alias("n_matches"))
     )
     return (
-        delta.select(F.col(id_col))
-        .join(matches.withColumnRenamed("d_id", id_col), id_col, "left")
+        delta.select(F.col("doc_id"))
+        .join(matches.withColumnRenamed("d_id", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
         )
         .withColumn("keep", F.col("n_matches") == 0)
     )
 
 
-def simjoin_cosine(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.3,
-    n: int = 3,
-) -> DataFrame:
+def simjoin_cosine(docs: DataFrame, threshold: float = 0.3) -> DataFrame:
     """TF-IDF cosine similarity self-join over n-gram SHINGLE features
     — the WEIGHTED counterpart of the Jaccard joins, with Bayardo et
     al.'s (WWW'07) L2 suffix-norm prefix filter for candidate
@@ -1507,8 +1434,8 @@ def simjoin_cosine(
     commutative, so map iteration order is irrelevant).
     """
     counts = (
-        shingle_hashes(docs, text_col, id_col, n)
-        .groupBy(id_col, "h")
+        shingle_hashes(docs, "text", "doc_id", 3)
+        .groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     # df via a COUNT window over the term partition instead of a
@@ -1530,42 +1457,42 @@ def simjoin_cosine(
         counts.withColumn("df", F.count(F.lit(1)).over(w_df))
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "h",
             "df",
             (F.col("tf") * idf_q).alias("w"),
         )
     )
     weighted = materialize_once(weighted)
-    norms = weighted.groupBy(id_col).agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
+    norms = weighted.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
     # prefix cut: reverse-cumulative normalized mass ≥ t² keeps the
     # row in the prefix (descending global order ⇒ the running sum at
     # a row is exactly the suffix norm² from that row to the tail)
     w_suffix = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy(F.desc("df"), F.desc("h"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     pref = (
-        weighted.join(norms, id_col)
+        weighted.join(norms, "doc_id")
         .withColumn(
             "suffix2",
             F.sum((F.col("w") * F.col("w")) / F.col("n2")).over(w_suffix),
         )
         .filter(F.col("suffix2") >= F.lit(threshold * threshold) - F.lit(_EPS))
-        .select(id_col, "h")
+        .select("doc_id", "h")
     )
     pref = materialize_once(pref)
     a, b = pref.alias("a"), pref.alias("b")
     cand = (
         a.join(b, F.col("a.h") == F.col("b.h"))
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
     )
-    dmaps = weighted.groupBy(id_col).agg(
+    dmaps = weighted.groupBy("doc_id").agg(
         F.map_from_entries(F.collect_list(F.struct("h", "w"))).alias("m")
     )
     dot = F.aggregate(
@@ -1583,9 +1510,9 @@ def simjoin_cosine(
     )
     return (
         _attach(
-            _attach(cand, dmaps, id_col, {"m": "ma"}, {"m": "mb"}).withColumn("dot", dot),
+            _attach(cand, dmaps, "doc_id", {"m": "ma"}, {"m": "mb"}).withColumn("dot", dot),
             norms,
-            id_col,
+            "doc_id",
             {"n2": "na2"},
             {"n2": "nb2"},
         )
@@ -1600,12 +1527,7 @@ def simjoin_cosine(
     )
 
 
-def dedup_overlap_matrix(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def dedup_overlap_matrix(docs: DataFrame) -> DataFrame:
     """Cross-source duplicate overlap matrix: for every source pair
     (a <= b), how many distinct normalized-content digests appear in
     BOTH — the audit that tells you which crawl dumps/mirrors are
@@ -1624,7 +1546,7 @@ def dedup_overlap_matrix(
     Returns (source_a, source_b, n_shared) for a <= b, ordered.
     """
     ds = (
-        docs.select(content_hash(text_col), F.col(source_col).alias("src"))
+        docs.select(content_hash("text"), F.col("source").alias("src"))
         .distinct()
     )
     per_digest = ds.groupBy("content_hash").agg(
@@ -1653,8 +1575,6 @@ def dedup_overlap_matrix(
 
 def simjoin_containment(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int = MAX_SHINGLE_DF,
@@ -1683,8 +1603,8 @@ def simjoin_containment(
     # the capped relation feeds the capped-universe sizes and both
     # self-join sides — materialize it too (round-11 scan audit: 8
     # corpus scans)
-    sh = materialize_once(_distinct_shingles(docs, text_col, id_col, n, max_shingle_df)[1])
-    scored = _common_shingles(sh, sh, id_col).select(
+    sh = materialize_once(_distinct_shingles(docs, "text", "doc_id", n, max_shingle_df)[1])
+    scored = _common_shingles(sh, sh, "doc_id").select(
         "doc_a",
         "doc_b",
         "common",

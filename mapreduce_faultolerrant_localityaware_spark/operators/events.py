@@ -140,15 +140,9 @@ def _split_at_midpoint(events: DataFrame, value_col: str, ts_col: str) -> DataFr
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Assign gap-based session ids per user: a new session starts when
-    the time since the previous event exceeds ``gap_minutes``.
+    the time since the previous event exceeds 30 minutes.
 
     Both windows share the same partitioning (user) and ordering, so
     Spark plans ONE exchange + sort and evaluates lag and the running
@@ -159,25 +153,19 @@ def sessionize(
     # (not a pre-projected unix_micros column): the exchange then
     # carries only columns it already needs, and the micros conversion
     # happens once post-shuffle — measured 0.45 s → 0.38 s at sf0.1.
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    gap = F.unix_micros(F.col(ts_col)) - F.unix_micros(prev_ts)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag(F.col("ts")).over(w)
+    gap = F.unix_micros(F.col("ts")) - F.unix_micros(prev_ts)
     new_session = F.when(
-        prev_ts.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1
+        prev_ts.isNull() | (gap > 30 * 60 * 1_000_000), 1
     ).otherwise(0)
-    running = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak).rowsBetween(
+    running = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return events.withColumn("session_id", F.sum(new_session).over(running).cast("long"))
 
 
-def funnel(
-    events: DataFrame,
-    steps: tuple = ("signup", "click", "purchase"),
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel(events: DataFrame) -> DataFrame:
     """Ordered conversion funnel: users who performed step 1, then
     step 2 AFTER their first step 1, then step 3 after THAT step 2 —
     each step anchored at the earliest qualifying event (first-touch
@@ -193,33 +181,28 @@ def funnel(
 
     Returns one row: ``n_<step>`` user counts per step.
     """
-    per_user = events.groupBy(user_col).agg(
-        F.sort_array(F.collect_list(F.struct(ts_col, type_col))).alias("evs")
+    steps = ("signup", "click", "purchase")
+    per_user = events.groupBy("user_id").agg(
+        F.sort_array(F.collect_list(F.struct("ts", "event_type"))).alias("evs")
     )
     anchors: list = []
     for i, step in enumerate(steps):
         if i == 0:
-            cand = F.filter("evs", lambda e: e[type_col] == step)
+            cand = F.filter("evs", lambda e: e["event_type"] == step)
         else:
             prev = anchors[i - 1]
             cand = F.filter(
-                "evs", lambda e: (e[type_col] == step) & (e[ts_col] >= prev)
+                "evs", lambda e: (e["event_type"] == step) & (e["ts"] >= prev)
             )
         # try_element_at: an empty candidate list (step never reached)
         # is NULL, not an ANSI out-of-bounds error
-        anchors.append(F.try_element_at(cand, F.lit(1))[ts_col])
+        anchors.append(F.try_element_at(cand, F.lit(1))["ts"])
     return per_user.agg(
         *[F.count(a).alias(f"n_{s}") for s, a in zip(steps, anchors)]
     )
 
 
-def zscore_outliers(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    threshold: float = 2.0,
-) -> DataFrame:
+def zscore_outliers(events: DataFrame) -> DataFrame:
     """Per-key z-score anomaly flagging — the metrics-pipeline outlier
     pass (a user's event value far outside their own distribution).
 
@@ -237,8 +220,8 @@ def zscore_outliers(
 
     Returns flagged events only: ``event_id, key, value, z``.
     """
-    cents = _cents(value_col)
-    w = Window.partitionBy(key_col)
+    cents = _cents("value")
+    w = Window.partitionBy("user_id")
     n = F.count(F.lit(1)).over(w)
     s1 = F.sum(cents).over(w)
     s2 = F.sum(cents * cents).over(w)
@@ -247,28 +230,22 @@ def zscore_outliers(
     std = F.sqrt(var)
     # zero-variance keys (incl. singletons) flag nothing: NULL z falls
     # out of the threshold filter (ANSI mode would error on /0)
-    z = F.when(std > 0.0, (F.col(value_col) - mean) / std)
+    z = F.when(std > 0.0, (F.col("value") - mean) / std)
     return (
-        events.select(F.col(id_col), F.col(key_col), F.col(value_col), z.alias("z"))
-        .filter(F.abs(F.col("z")) > threshold)
-        .select(id_col, key_col, F.round(value_col, 6).alias(value_col), F.round("z", 6).alias("z"))
+        events.select(F.col("event_id"), F.col("user_id"), F.col("value"), z.alias("z"))
+        .filter(F.abs(F.col("z")) > 2.0)
+        .select(
+            "event_id", "user_id", F.round("value", 6).alias("value"), F.round("z", 6).alias("z")
+        )
     )
 
 
-def cusum_drift(
-    events: DataFrame,
-    threshold: float = 50.0,
-    slack: float = 0.0,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def cusum_drift(events: DataFrame) -> DataFrame:
     """Per-key CUSUM upward-drift detection — the sequential
     change-point monitor (Page 1954) a metrics pipeline runs to catch
     "this key's values shifted" that a z-score on single points
-    misses.  ``C_t = max(0, C_{t-1} + (x_t − mean_k − slack))``,
-    drift flagged when any ``C_t`` exceeds ``threshold``.
+    misses.  ``C_t = max(0, C_{t-1} + (x_t − mean_k))`` (zero slack),
+    drift flagged when any ``C_t`` exceeds 50.0.
 
     The recursion is NOT a window fold: ``C_t = S_t − min(0,
     min_{i≤t} S_i)`` for the deviation prefix sum ``S`` — so two
@@ -281,41 +258,36 @@ def cusum_drift(
     equi-join, one (key)-partitioned window pass ordered (ts, id),
     one final groupBy.  No collect, no recursion, no pair space.
     """
-    vm = F.round(F.col(value_col) * 1e6).cast("long")
+    vm = F.round(F.col("value") * 1e6).cast("long")
     staged = events.select(
-        F.col(key_col), F.col(ts_col), F.col(id_col), vm.alias("vm")
+        F.col("user_id"), F.col("ts"), F.col("event_id"), vm.alias("vm")
     )
-    means = staged.groupBy(key_col).agg(
+    means = staged.groupBy("user_id").agg(
         F.floor(F.sum("vm") / F.count(F.lit(1))).cast("long").alias("mean_m")
     )
-    slack_m = int(round(slack * 1e6))
-    thr_m = int(round(threshold * 1e6))
-    j = staged.join(means, key_col)
-    w = Window.partitionBy(key_col).orderBy(ts_col, id_col).rowsBetween(
+    slack_m = 0
+    thr_m = 50_000_000
+    j = staged.join(means, "user_id")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     s = F.sum(F.col("vm") - F.col("mean_m") - F.lit(slack_m)).over(w)
     # two projections: a window function cannot nest inside another,
     # but both share the same (key, ts, id) sort so Spark plans ONE
     # exchange + sort and stacks the second window on the first
-    pre = j.select(F.col(key_col), F.col(ts_col), F.col(id_col), s.alias("s"))
+    pre = j.select(F.col("user_id"), F.col("ts"), F.col("event_id"), s.alias("s"))
     run = pre.select(
-        F.col(key_col),
+        F.col("user_id"),
         (F.col("s") - F.least(F.lit(0), F.min("s").over(w))).alias("cusum_m"),
     )
-    return run.groupBy(key_col).agg(
+    return run.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.round(F.max("cusum_m") / 1e6, 6).alias("max_cusum"),
         (F.max("cusum_m") > thr_m).cast("int").alias("drift"),
     )
 
 
-def mad_outliers(
-    events: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    threshold: float = 3.0,
-) -> DataFrame:
+def mad_outliers(events: DataFrame) -> DataFrame:
     """Robust per-key outlier profile via median absolute deviation —
     the heavy-tail-safe sibling of :func:`zscore_outliers` (mean/std
     are themselves dragged by the outliers they're meant to flag; the
@@ -336,34 +308,28 @@ def mad_outliers(
     Returns (key, n_events, median_value, mad_value, n_outliers)
     ordered by key.
     """
-    w = Window.partitionBy(key_col)
+    w = Window.partitionBy("event_type")
     base = events.select(
-        F.col(key_col), _cents(value_col).alias("cents")
+        F.col("event_type"), _cents("value").alias("cents")
     )
     d = base.withColumn("med", F.percentile("cents", F.lit(0.5)).over(w))
     d = d.withColumn("dev", F.abs(F.col("cents") - F.col("med")))
     d = d.withColumn("mad", F.percentile("dev", F.lit(0.5)).over(w))
     return (
-        d.groupBy(key_col)
+        d.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.max("med") / 100.0, 6).alias("median_value"),
             F.round(F.max("mad") / 100.0, 6).alias("mad_value"),
             F.sum(
-                F.when(F.col("dev") > F.lit(threshold) * F.col("mad"), 1).otherwise(0)
+                F.when(F.col("dev") > F.lit(3.0) * F.col("mad"), 1).otherwise(0)
             ).alias("n_outliers"),
         )
-        .orderBy(key_col)
+        .orderBy("event_type")
     )
 
 
-def markov_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def markov_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: for each (current type → next type) pair, the observed
     count and the conditional probability P(next | current) — the
@@ -382,12 +348,12 @@ def markov_transitions(
     Returns (cur_type, next_type, n, p) ordered by (cur_type,
     next_type).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
-            F.col(user_col),
-            F.col(type_col).alias("cur_type"),
-            F.lead(type_col).over(w).alias("next_type"),
+            F.col("user_id"),
+            F.col("event_type").alias("cur_type"),
+            F.lead("event_type").over(w).alias("next_type"),
         )
         .filter(F.col("next_type").isNotNull())
     )
@@ -401,12 +367,7 @@ def markov_transitions(
     )
 
 
-def group_regression(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def group_regression(events: DataFrame) -> DataFrame:
     """Per-key ordinary-least-squares trend: regress the metric on
     time within each key — slope (cents/minute), intercept, and r² —
     the per-segment trend extraction behind burn-rate alerts and
@@ -427,14 +388,14 @@ def group_regression(
     Returns (key, n, slope, intercept, r2) ordered by key; slope/r²
     NULL for keys with zero time variance.
     """
-    w = Window.partitionBy(key_col)
-    mins = F.min(F.unix_micros(F.col(ts_col))).over(w)
+    w = Window.partitionBy("event_type")
+    mins = F.min(F.unix_micros(F.col("ts"))).over(w)
     base = events.select(
-        F.col(key_col),
-        F.floor((F.unix_micros(F.col(ts_col)) - mins) / 60_000_000).alias("x"),
-        _cents(value_col).alias("y"),
+        F.col("event_type"),
+        F.floor((F.unix_micros(F.col("ts")) - mins) / 60_000_000).alias("x"),
+        _cents("value").alias("y"),
     )
-    agg = base.groupBy(key_col).agg(
+    agg = base.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
@@ -455,20 +416,15 @@ def group_regression(
     intercept = (sy - slope * sx) / n / 100.0  # back to value units
     r2 = (cov_n * cov_n) / (varx_n * vary_n)
     return agg.select(
-        F.col(key_col),
+        F.col("event_type"),
         F.col("n").cast("long").alias("n"),
         F.round(F.when(varx_n > 0, slope), 6).alias("slope"),
         F.round(F.when(varx_n > 0, intercept), 6).alias("intercept"),
         F.round(F.when((varx_n > 0) & (vary_n > 0), r2), 6).alias("r2"),
-    ).orderBy(key_col)
+    ).orderBy("event_type")
 
 
-def interarrival_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def interarrival_stats(events: DataFrame) -> DataFrame:
     """Per-user inter-arrival-time profile: gap count, exact mean,
     exact median, and max gap in whole seconds — the activity-rhythm
     signal behind engagement scoring and bot detection (humans are
@@ -485,33 +441,27 @@ def interarrival_stats(
     Returns (user_id, n_gaps, mean_gap_s, median_gap_s, max_gap_s)
     for users with ≥ 2 events, ordered by user.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     g = events.select(
-        F.col(user_col),
+        F.col("user_id"),
         F.floor(
-            (F.unix_micros(F.col(ts_col)) - F.unix_micros(F.lag(ts_col).over(w)))
+            (F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w)))
             / 1_000_000
         ).alias("gap_s"),
     ).filter(F.col("gap_s").isNotNull())
     return (
-        g.groupBy(user_col)
+        g.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_gaps"),
             F.round(F.sum("gap_s") / F.count(F.lit(1)), 6).alias("mean_gap_s"),
             (F.percentile("gap_s", F.lit(0.5)) * 1.0).alias("median_gap_s"),
             F.max("gap_s").cast("long").alias("max_gap_s"),
         )
-        .orderBy(user_col)
+        .orderBy("user_id")
     )
 
 
-def session_stats(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Session-level rollup on top of :func:`sessionize`: per (user,
     session) the event count, exact integer-second duration, and total
     value — the table every engagement dashboard and LTV model reads
@@ -527,49 +477,44 @@ def session_stats(
     Returns (user_id, session_id, n_events, duration_s, sum_cents)
     ordered by (user_id, session_id).
     """
-    s = sessionize(events, gap_minutes, user_col, ts_col, id_col)
+    s = sessionize(events)
     return (
-        s.groupBy(user_col, "session_id")
+        s.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.floor(
-                (F.max(F.unix_micros(F.col(ts_col))) - F.min(F.unix_micros(F.col(ts_col))))
+                (F.max(F.unix_micros(F.col("ts"))) - F.min(F.unix_micros(F.col("ts"))))
                 / 1_000_000
             ).cast("long").alias("duration_s"),
             F.sum(_cents("value")).alias("sum_cents"),
         )
-        .orderBy(user_col, "session_id")
+        .orderBy("user_id", "session_id")
     )
 
 
-def active_users(
-    events: DataFrame,
-    window_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Daily active users plus the exact rolling ``window_days``-day
+def active_users(events: DataFrame) -> DataFrame:
+    """Daily active users plus the exact rolling 7-day
     distinct-user count — the DAU/WAU pair, computed the way exact
     rolling distincts must be at scale: collapse to DISTINCT
     (user, day) FIRST (one hash aggregate over pairs, tiny vs raw
-    events), then explode each pair into the ``window_days`` trailing
+    events), then explode each pair into the 7 trailing
     windows it contributes to — a bounded fan-out on the already-
     deduplicated pair table, never a self-join or a window over raw
     rows.  Window days with no events are absent (the data defines
     the calendar).
 
     Returns (day, dau, wau) ordered by day; ``wau`` counts distinct
-    users over [day − window_days + 1, day] among days ≥ the first
+    users over [day − 6, day] among days ≥ the first
     observed day + nothing before data start is fabricated.
     """
     pairs = events.select(
-        F.col(user_col).alias("u"), F.date_trunc("day", F.col(ts_col)).alias("d")
+        F.col("user_id").alias("u"), F.date_trunc("day", F.col("ts")).alias("d")
     ).distinct()
     dau = pairs.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("dau"))
     fan = pairs.select(
         "u",
         F.explode(
-            F.sequence(F.lit(0), F.lit(window_days - 1))
+            F.sequence(F.lit(0), F.lit(6))
         ).alias("off"),
         F.col("d"),
     ).select("u", F.date_add(F.col("d"), F.col("off")).cast("timestamp").alias("wd"))
@@ -587,12 +532,7 @@ def active_users(
 
 
 
-def psi_drift(
-    events: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    n_bins: int = 10,
-) -> DataFrame:
+def psi_drift(events: DataFrame) -> DataFrame:
     """Population Stability Index between the first and second half of
     the time range — THE standard production drift monitor for numeric
     features (credit-risk lineage: PSI < 0.1 stable, 0.1–0.25 watch,
@@ -611,12 +551,12 @@ def psi_drift(
     counts, ordered by bin; total PSI = sum of psi_term (left to the
     reader/alert so bins stay auditable).
     """
-    tagged = _split_at_midpoint(events, value_col, ts_col)
+    tagged = _split_at_midpoint(events, "value", "ts")
     # reference-decile edges + binning via the shared equi-depth core
     # (relational.equidepth_bins — exact integer percentiles, map-side
     # comparison chain, no sort)
     binned = equidepth_bins(
-        tagged, tagged.filter("is_ref"), "c", n_bins
+        tagged, tagged.filter("is_ref"), "c", 10
     ).select("bin", "is_ref")
     counts = binned.groupBy("bin").agg(
         F.sum(F.col("is_ref").cast("long")).alias("n_ref"),
@@ -627,8 +567,8 @@ def psi_drift(
     )
     j = counts.join(F.broadcast(tot))
     # add-half smoothing keeps empty bins finite; ratios over exact ints
-    pr = (F.col("n_ref") + 0.5) / (F.col("tr") + 0.5 * n_bins)
-    pc = (F.col("n_cmp") + 0.5) / (F.col("tc") + 0.5 * n_bins)
+    pr = (F.col("n_ref") + 0.5) / (F.col("tr") + 0.5 * 10)
+    pc = (F.col("n_cmp") + 0.5) / (F.col("tc") + 0.5 * 10)
     return j.select(
         F.col("bin").cast("long").alias("bin"),
         F.col("n_ref").cast("long"),
@@ -637,11 +577,7 @@ def psi_drift(
     ).orderBy("bin")
 
 
-def ks_test(
-    events: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
+def ks_test(events: DataFrame) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov distance between the first
     and second half of the time range — the distribution-free drift
     test that complements :func:`psi_drift` (PSI needs binning; KS is
@@ -666,7 +602,7 @@ def ks_test(
     value on ties).  ``d_stat`` is NULL when a half is empty (every
     event at one timestamp, or a single event).
     """
-    tagged = _split_at_midpoint(events, value_col, ts_col)
+    tagged = _split_at_midpoint(events, "value", "ts")
     per_val = tagged.groupBy("c").agg(
         F.sum(F.col("is_ref").cast("long")).alias("r"),
         F.sum((~F.col("is_ref")).cast("long")).alias("q"),
@@ -705,11 +641,7 @@ def ks_test(
     )
 
 
-def user_growth(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def user_growth(events: DataFrame) -> DataFrame:
     """User growth curve: per day, how many users appear for the
     FIRST time and the cumulative registered-user count — the
     companion to :func:`active_users` (DAU says who showed up; this
@@ -722,8 +654,8 @@ def user_growth(
 
     Returns (day, new_users, cum_users) ordered by day.
     """
-    first = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.min(F.date_trunc("day", F.col(ts_col))).alias("d")
+    first = events.groupBy(F.col("user_id").alias("u")).agg(
+        F.min(F.date_trunc("day", F.col("ts"))).alias("d")
     )
     daily = first.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("new_users"))
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -734,14 +666,7 @@ def user_growth(
     ).orderBy("day")
 
 
-def conversion_latency(
-    events: DataFrame,
-    from_type: str = "signup",
-    to_type: str = "purchase",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def conversion_latency(events: DataFrame) -> DataFrame:
     """Time-to-convert distribution: for each user with a ``from``
     event, the latency to their first ``to`` event AFTER it
     (first-touch anchoring, like :func:`funnel`), summarized as exact
@@ -756,18 +681,18 @@ def conversion_latency(
     Returns one row: (n_from, n_converted, mean_s, median_s, p90_s,
     max_s) — latency fields NULL when nobody converts.
     """
-    per_user = events.filter(F.col(type_col).isin(from_type, to_type)).groupBy(
-        user_col
-    ).agg(F.sort_array(F.collect_list(F.struct(ts_col, type_col))).alias("evs"))
+    per_user = events.filter(F.col("event_type").isin("signup", "purchase")).groupBy(
+        "user_id"
+    ).agg(F.sort_array(F.collect_list(F.struct("ts", "event_type"))).alias("evs"))
     first_from = F.try_element_at(
-        F.filter("evs", lambda e: e[type_col] == from_type), F.lit(1)
-    )[ts_col]
+        F.filter("evs", lambda e: e["event_type"] == "signup"), F.lit(1)
+    )["ts"]
     first_to = F.try_element_at(
         F.filter(
-            "evs", lambda e: (e[type_col] == to_type) & (e[ts_col] >= first_from)
+            "evs", lambda e: (e["event_type"] == "purchase") & (e["ts"] >= first_from)
         ),
         F.lit(1),
-    )[ts_col]
+    )["ts"]
     lat = per_user.select(
         first_from.alias("f"),
         F.floor(
@@ -784,17 +709,10 @@ def conversion_latency(
     )
 
 
-def pattern_match(
-    events: DataFrame,
-    pattern: tuple[str, ...] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    id_col: str = "event_id",
-) -> DataFrame:
+def pattern_match(events: DataFrame) -> DataFrame:
     """MATCH_RECOGNIZE-style STRICT-adjacency sequence detection: emit
     one row per position where a user's event stream, in event-time
-    order, runs exactly ``pattern[0], pattern[1], ..., pattern[k-1]``
+    order, runs exactly ``view, click, purchase``
     with NO other event of that user in between (the strict contiguity
     the SQL standard spells ``PATTERN (A B C)`` without reluctant
     gaps).
@@ -810,30 +728,24 @@ def pattern_match(
     ordered-reduce idea (SURVEY §2.1 O12 sort) to ordered pattern
     detection.  Returns ``(user_id, step0_id, step1_id, ...)``.
     """
-    w = Window.partitionBy(user_col).orderBy(*order_cols)
+    pattern = ("view", "click", "purchase")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     leads = events.select(
-        user_col,
-        F.col(id_col).alias("step0_id"),
-        F.col(type_col).alias("_t0"),
-        *[F.lead(id_col, i).over(w).alias(f"step{i}_id") for i in range(1, len(pattern))],
-        *[F.lead(type_col, i).over(w).alias(f"_t{i}") for i in range(1, len(pattern))],
+        "user_id",
+        F.col("event_id").alias("step0_id"),
+        F.col("event_type").alias("_t0"),
+        *[F.lead("event_id", i).over(w).alias(f"step{i}_id") for i in range(1, len(pattern))],
+        *[F.lead("event_type", i).over(w).alias(f"_t{i}") for i in range(1, len(pattern))],
     )
     cond = F.lit(True)
     for i, p in enumerate(pattern):
         cond = cond & (F.col(f"_t{i}") == p)
     return leads.filter(cond).select(
-        user_col, *[f"step{i}_id" for i in range(len(pattern))]
+        "user_id", *[f"step{i}_id" for i in range(len(pattern))]
     )
 
 
-def rolling_median(
-    events: DataFrame,
-    value_col: str = "value",
-    user_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    id_col: str = "event_id",
-    n: int = 5,
-) -> DataFrame:
+def rolling_median(events: DataFrame, n: int = 5) -> DataFrame:
     """Exact rolling median over the trailing ``n``-row frame per user
     (``ROWS BETWEEN n-1 PRECEDING AND CURRENT ROW``).
 
@@ -846,11 +758,11 @@ def rolling_median(
     hash-matches at 6 dp).
     """
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(*order_cols)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
         .rowsBetween(-(n - 1), Window.currentRow)
     )
-    vals = F.sort_array(F.collect_list(value_col).over(w))
+    vals = F.sort_array(F.collect_list("value").over(w))
     sz = F.size(vals)
     mid_hi = (sz / 2 + 1).cast("int")  # upper middle (1-based)
     # sz == 0 (every value in the frame NULL — collect_list skips
@@ -874,7 +786,7 @@ def rolling_median(
         / 2
     )
     return events.select(
-        user_col, id_col, F.round(median, 6).alias("roll_median")
+        "user_id", "event_id", F.round(median, 6).alias("roll_median")
     )
 
 
@@ -1032,14 +944,10 @@ def autocorr(
 
 def hampel_outliers(
     events: DataFrame,
-    value_col: str = "value",
-    user_col: str = "user_id",
     order_cols: tuple[str, ...] = ("ts", "event_id"),
-    id_col: str = "event_id",
     n: int = 7,
-    k: int = 3,
 ) -> DataFrame:
-    """Hampel filter: flag points more than ``k`` rolling MADs from
+    """Hampel filter: flag points more than 3 rolling MADs from
     the rolling median over the trailing ``n``-row frame per user —
     the robust outlier detector that, unlike a z-score
     (:func:`zscore_outliers`' family), is immune to the outliers
@@ -1059,11 +967,11 @@ def hampel_outliers(
     ``(user_id, event_id, roll_median, roll_mad, is_outlier)``.
     """
     w = (
-        Window.partitionBy(user_col)
+        Window.partitionBy("user_id")
         .orderBy(*order_cols)
         .rowsBetween(-(n - 1), Window.currentRow)
     )
-    c = _cents(value_col)
+    c = _cents("value")
 
     def med2_of(arr):
         sz = F.size(arr)
@@ -1083,41 +991,31 @@ def hampel_outliers(
 
     vals = F.sort_array(F.collect_list(c).over(w))
     with_med = events.select(
-        user_col, id_col, c.alias("c"), vals.alias("vals")
+        "user_id", "event_id", c.alias("c"), vals.alias("vals")
     ).select(
-        user_col, id_col, "c", "vals", med2_of(F.col("vals")).alias("med2")
+        "user_id", "event_id", "c", "vals", med2_of(F.col("vals")).alias("med2")
     )
     devs = F.sort_array(
         F.transform(F.col("vals"), lambda v: F.abs(2 * v - F.col("med2")))
     )
     scored = with_med.select(
-        user_col, id_col, "c", "med2", med2_of(devs).alias("mad4")
+        "user_id", "event_id", "c", "med2", med2_of(devs).alias("mad4")
     )
     return scored.select(
-        user_col,
-        id_col,
+        "user_id",
+        "event_id",
         F.round(F.col("med2") / 200.0, 6).alias("roll_median"),
         F.round(F.col("mad4") / 400.0, 6).alias("roll_mad"),
-        (2 * F.abs(2 * F.col("c") - F.col("med2")) > k * F.col("mad4"))
+        (2 * F.abs(2 * F.col("c") - F.col("med2")) > 3 * F.col("mad4"))
         .cast("long")
         .alias("is_outlier"),
     )
 
 
-def attribution_multi_touch(
-    events: DataFrame,
-    conversion_type: str = "purchase",
-    touch_types: tuple[str, ...] = ("view", "click"),
-    lookback_days: int = 7,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def attribution_multi_touch(events: DataFrame) -> DataFrame:
     """Multi-touch marketing attribution: each conversion's value is
     credited to the touch events (views/clicks) by the same user in
-    the ``lookback_days`` window strictly before it — LINEAR credit
+    the 7-day window strictly before it — LINEAR credit
     (value/n to each touch) plus first-touch / last-touch counts, the
     three models every growth team runs side by side.
 
@@ -1140,21 +1038,21 @@ def attribution_multi_touch(
     linear_value)`` with linear_value in dollars (6 dp from the exact
     milli-cent sum).
     """
-    conv = events.filter(F.col(type_col) == conversion_type).select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).alias("cts"),
-        F.col(id_col).alias("cid"),
-        _cents(value_col).alias("vc"),
+    conv = events.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("u"),
+        F.col("ts").alias("cts"),
+        F.col("event_id").alias("cid"),
+        _cents("value").alias("vc"),
     )
-    touch = events.filter(F.col(type_col).isin(*touch_types)).select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("channel"),
-        F.col(ts_col).alias("tts"),
-        F.col(id_col).alias("tid"),
+    touch = events.filter(F.col("event_type").isin("view", "click")).select(
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("channel"),
+        F.col("ts").alias("tts"),
+        F.col("event_id").alias("tid"),
     )
     pairs = conv.join(touch, "u").filter(
         (F.col("tts") < F.col("cts"))
-        & (F.col("tts") >= F.col("cts") - F.expr(f"INTERVAL {lookback_days} DAYS"))
+        & (F.col("tts") >= F.col("cts") - F.expr("INTERVAL 7 DAYS"))
     )
     wc = Window.partitionBy("cid")
     wf = Window.partitionBy("cid").orderBy("tts", "tid")
@@ -1291,16 +1189,11 @@ def crosscorr(
     )
 
 
-def ab_test(
-    events: DataFrame,
-    conversion_type: str = "purchase",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def ab_test(events: DataFrame) -> DataFrame:
     """Two-proportion A/B test summary: users split into arms by a
     deterministic assignment (``user_id % 2`` — the parity split every
     replayable experiment framework can reproduce), conversion = the
-    user emitted ≥ 1 ``conversion_type`` event, and the pooled
+    user emitted ≥ 1 ``purchase`` event, and the pooled
     two-proportion z-statistic
 
         z = (p_b − p_a) / sqrt(p·(1−p)·(1/n_a + 1/n_b))
@@ -1317,11 +1210,11 @@ def ab_test(
     ANSI error.  Returns one row ``(n_a, n_b, conv_a, conv_b, rate_a,
     rate_b, z_stat)``.
     """
-    per_user = events.groupBy(user_col).agg(
-        F.max((F.col(type_col) == conversion_type).cast("int")).alias("conv")
+    per_user = events.groupBy("user_id").agg(
+        F.max((F.col("event_type") == "purchase").cast("int")).alias("conv")
     )
     arms = per_user.select(
-        (F.col(user_col) % 2).alias("arm"), F.col("conv")
+        (F.col("user_id") % 2).alias("arm"), F.col("conv")
     ).groupBy().agg(
         F.sum((F.col("arm") == 0).cast("long")).alias("n_a"),
         F.sum((F.col("arm") == 1).cast("long")).alias("n_b"),
@@ -1352,10 +1245,7 @@ def ab_test(
     )
 
 
-def srm_check(
-    events: DataFrame,
-    user_col: str = "user_id",
-) -> DataFrame:
+def srm_check(events: DataFrame) -> DataFrame:
     """Sample-ratio-mismatch check — the A/B-test HEALTH gate run
     before reading any metric (:func:`ab_test`'s prerequisite): under
     the 50/50 parity assignment the arm sizes are Binomial(n, ½), and
@@ -1372,7 +1262,7 @@ def srm_check(
     ``try_divide``: an empty experiment (n = 0) is NULL, not an ANSI
     error.  Returns one row (n_a, n_b, srm_chi2, mismatch).
     """
-    arms = events.select(F.col(user_col).alias("u")).distinct().groupBy().agg(
+    arms = events.select(F.col("user_id").alias("u")).distinct().groupBy().agg(
         F.sum((F.col("u") % 2 == 0).cast("long")).alias("n_a"),
         F.sum((F.col("u") % 2 == 1).cast("long")).alias("n_b"),
     )
@@ -1456,13 +1346,7 @@ def seasonal_decompose(
     )
 
 
-def isotonic_fit(
-    events: DataFrame,
-    key_col: str = "event_type",
-    x_col: str = "ts",
-    value_col: str = "value",
-    n_buckets: int = 24,
-) -> DataFrame:
+def isotonic_fit(events: DataFrame) -> DataFrame:
     """Per-key isotonic regression via PAVA (pool adjacent violators):
     the monotone-non-decreasing step function closest (weighted L2) to
     the per-bucket means — the shape-constrained fit behind calibration
@@ -1471,7 +1355,7 @@ def isotonic_fit(
 
     Distributed split: the corpus-sized work is ONE partial-agged
     groupBy to (key, bucket, Σcents, n) — exact BIGINT sums — and only
-    the DOMAIN-sized bucket table (≤ n_buckets rows per key) crosses
+    the DOMAIN-sized bucket table (≤ 24 rows per key) crosses
     into Arrow for the sequential PAVA pool, which accumulates the
     pooled (Σ, n) as exact Python integers (arbitrary precision) and
     divides once per block at the end.  The fit is therefore exact
@@ -1479,18 +1363,18 @@ def isotonic_fit(
     PAVA itself is not SQL-expressible, so the driver gate records
     rows-only and tests/test_round8b_ops.py pins hand-computed pools.
 
-    ``x_col`` buckets by hour-of-day.  Returns ``(key, bucket, n,
+    ``ts`` buckets by hour-of-day.  Returns ``(key, bucket, n,
     bucket_mean, fit)`` — fit is the isotonic step value.
     """
     import pandas as pd
 
-    cents = _cents(value_col)
+    cents = _cents("value")
     # a NULL value is a missing observation, not a zero: filter before
     # aggregating so an all-NULL bucket vanishes instead of feeding
     # NaN sums into the integer PAVA pool (degenerate-surface sweep, r9)
     per = events.filter(cents.isNotNull()).groupBy(
-        F.col(key_col).alias("key"),
-        F.hour(x_col).cast("long").alias("bucket"),
+        F.col("event_type").alias("key"),
+        F.hour("ts").cast("long").alias("bucket"),
     ).agg(
         F.sum(cents).alias("s"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1603,13 +1487,7 @@ def mutual_information(
     )
 
 
-def session_rules(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    min_sessions: int = 2,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def session_rules(events: DataFrame, min_sessions: int = 2) -> DataFrame:
     """Session-scoped association rules A→B: among sessions containing
     event type A, how often does B also occur (confidence), and how
     much more often than B's base rate (lift) — market-basket rules
@@ -1624,9 +1502,11 @@ def session_rules(
     integers.  Returns ``(antecedent, consequent, n_both, n_ante,
     n_cons, n_sessions, confidence, lift)``.
     """
-    sess = sessionize(events, gap_minutes=gap_minutes, user_col=user_col)
+    sess = sessionize(events)
     basket = sess.select(
-        F.col(user_col).alias("u"), F.col("session_id").alias("sid"), F.col(type_col).alias("t")
+        F.col("user_id").alias("u"),
+        F.col("session_id").alias("sid"),
+        F.col("event_type").alias("t"),
     ).distinct()
     # the session-type basket feeds the session count, the per-type
     # margins and both self-join sides — materialize once (round-11
@@ -1864,12 +1744,7 @@ def _parity_pre_post_sums(
     return per_user, arm_sums
 
 
-def cuped_adjust(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def cuped_adjust(events: DataFrame) -> DataFrame:
     """CUPED variance reduction for the parity A/B split
     (:func:`ab_test`'s assignment): each user's PRE-period value sum is
     the control covariate x, the post-period sum is the outcome y,
@@ -1893,7 +1768,7 @@ def cuped_adjust(
     global 1-row moment aggregate.  Returns one row ``(n_a, n_b,
     theta, lift_raw, lift_cuped, var_reduction)``.
     """
-    per_user, arm_sums = _parity_pre_post_sums(events, user_col, ts_col, value_col)
+    per_user, arm_sums = _parity_pre_post_sums(events, "user_id", "ts", "value")
     xd = F.col("x").cast("decimal(19,0)")
     yd = F.col("y").cast("decimal(19,0)")
     g = per_user.groupBy().agg(
@@ -2129,14 +2004,9 @@ def theil_sen(
     )
 
 
-def ewma_smooth(
-    series: DataFrame,
-    date_col: str,
-    value_col: str,
-    k: int = 16,
-) -> DataFrame:
+def ewma_smooth(series: DataFrame, date_col: str, value_col: str) -> DataFrame:
     """Exponentially-weighted moving average with α = 1/2 over the
-    last ``k`` observations — the standard operational smoother,
+    last 16 observations — the standard operational smoother,
     expressed EXACTLY: weights are powers of two ``2^(k−1−j)`` for lag
     j, so the weighted numerator and the present-lag-only denominator
     are exact BIGINT sums (the tail beyond k lags carries weight
@@ -2155,9 +2025,9 @@ def ewma_smooth(
     v = F.col(value_col).cast("long")
     num = F.lit(0).cast("long")
     den = F.lit(0).cast("long")
-    for j in range(k):
+    for j in range(16):
         lagged = F.lag(v, j).over(w)
-        weight = 1 << (k - 1 - j)
+        weight = 1 << (15 - j)
         num = num + F.coalesce(lagged * weight, F.lit(0))
         den = den + F.when(lagged.isNotNull(), F.lit(weight)).otherwise(F.lit(0))
     return series.select(
@@ -2309,17 +2179,8 @@ def mh_odds_ratio(
     )
 
 
-def session_paths(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    path_len: int = 3,
-    top_k: int = 20,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Top-k session entry paths — the first ``path_len`` event types
+def session_paths(events: DataFrame) -> DataFrame:
+    """Top-k session entry paths — the first 3 event types
     of each gap-session joined into a path string ("view>click>
     purchase"), counted across sessions: the Sankey/user-flow read
     that tells a product team HOW sessions start, beyond
@@ -2335,36 +2196,20 @@ def session_paths(
 
     Scale shape: ONE user-keyed window exchange (sessionize + the
     in-session rank share it), a (session)-keyed groupBy whose rows
-    carry ≤ path_len structs, the path-domain groupBy, and the k-row
+    carry ≤ 3 structs, the path-domain groupBy, and the k-row
     heap.  Returns ``(path, n_sessions, share)``.
     """
-    wu = Window.partitionBy(user_col).orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
-    gap_us = gap_minutes * 60 * 1_000_000
-    new_sess = (
-        F.coalesce(
-            (
-                F.unix_micros(F.col(ts_col))
-                - F.unix_micros(F.lag(ts_col).over(wu))
-            )
-            > gap_us,
-            F.lit(True),
-        )
-    ).cast("long")
-    sess = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("t"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("eid"),
-        F.sum(new_sess).over(
-            Window.partitionBy(user_col)
-            .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("sid"),
+    sess = sessionize(events).select(
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("t"),
+        F.col("ts"),
+        F.col("event_id").alias("eid"),
+        F.col("session_id").alias("sid"),
     )
     ws = Window.partitionBy("u", "sid").orderBy(F.col("ts").asc(), F.col("eid").asc())
     ranked = sess.select(
         "u", "sid", "t", F.row_number().over(ws).alias("rn")
-    ).filter(F.col("rn") <= path_len)
+    ).filter(F.col("rn") <= 3)
     per_sess = ranked.groupBy("u", "sid").agg(
         F.array_join(
             F.transform(
@@ -2379,7 +2224,7 @@ def session_paths(
     tot = counts.agg(F.coalesce(F.sum("n_sessions"), F.lit(0)).alias("n_total"))
     return (
         counts.orderBy(F.col("n_sessions").desc(), F.col("path").asc())
-        .limit(top_k)
+        .limit(20)
         .join(F.broadcast(tot))
         .select(
             "path",
@@ -2395,12 +2240,7 @@ def session_paths(
     )
 
 
-def price_volume_decomposition(
-    lineitem: DataFrame,
-    date_col: str = "l_shipdate",
-    price_col: str = "l_extendedprice",
-    qty_col: str = "l_quantity",
-) -> DataFrame:
+def price_volume_decomposition(lineitem: DataFrame) -> DataFrame:
     """Month-over-month revenue-change waterfall: ΔRev split into a
     PRICE effect ((p₂−p₁)·q₁), a VOLUME effect (p₁·(q₂−q₁)), and the
     joint residual ((p₂−p₁)·(q₂−q₁)) — the Laspeyres decomposition
@@ -2420,10 +2260,10 @@ def price_volume_decomposition(
     volume_effect, joint_effect)`` — effects in dollars, 6 dp.
     """
     monthly = lineitem.groupBy(
-        (F.year(date_col) * 12 + F.month(date_col)).cast("long").alias("m")
+        (F.year("l_shipdate") * 12 + F.month("l_shipdate")).cast("long").alias("m")
     ).agg(
-        F.sum(_cents(price_col)).cast("long").alias("rev"),
-        F.sum(F.col(qty_col).cast("long")).cast("long").alias("q"),
+        F.sum(_cents("l_extendedprice")).cast("long").alias("rev"),
+        F.sum(F.col("l_quantity").cast("long")).cast("long").alias("q"),
     )
     w = Window.orderBy("m")
     cur = monthly.select(
@@ -2452,11 +2292,7 @@ def price_volume_decomposition(
     )
 
 
-def new_vs_returning(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def new_vs_returning(events: DataFrame) -> DataFrame:
     """Per-day new-vs-returning active-user split — the growth
     accounting read on every product dashboard (is today's activity
     fresh acquisition or the existing base?): a user is NEW on their
@@ -2470,7 +2306,7 @@ def new_vs_returning(
     ``(d, n_new, n_returning, new_share)`` per active day.
     """
     ud = events.select(
-        F.col(user_col).alias("u"), F.to_date(ts_col).alias("d")
+        F.col("user_id").alias("u"), F.to_date("ts").alias("d")
     ).distinct()
     first = ud.select(
         "u", "d", F.min("d").over(Window.partitionBy("u")).alias("first_d")
@@ -2619,12 +2455,7 @@ def lift_table(
     )
 
 
-def wilson_ci(
-    events: DataFrame,
-    type_col: str = "event_type",
-    user_col: str = "user_id",
-    z: float = 1.96,
-) -> DataFrame:
+def wilson_ci(events: DataFrame) -> DataFrame:
     """Per-event-type user-reach share with a Wilson score confidence
     interval — the interval every experimentation dashboard should
     draw instead of the Wald ±z√(p̂(1−p̂)/n) (which collapses to a
@@ -2645,21 +2476,21 @@ def wilson_ci(
     Returns ``(event_type, n_users, n_total, share, ci_lo, ci_hi)``.
     """
     pairs = events.select(
-        F.col(type_col).alias("t"), F.col(user_col).alias("u")
+        F.col("event_type").alias("t"), F.col("user_id").alias("u")
     ).distinct()
     per = pairs.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("k"))
     tot = pairs.agg(F.count_distinct("u").cast("long").alias("n"))
     j = per.join(F.broadcast(tot))
     kd, nd = F.col("k").cast("double"), F.col("n").cast("double")
     p = kd / nd
-    z2 = F.lit(float(z) * float(z))
+    z2 = F.lit(1.96 * 1.96)
     denom = F.lit(1.0) + z2 / nd
     center = p + z2 / (2.0 * nd)
-    half = F.lit(float(z)) * F.sqrt(
+    half = F.lit(1.96) * F.sqrt(
         p * (F.lit(1.0) - p) / nd + z2 / (4.0 * nd * nd)
     )
     return j.select(
-        F.col("t").alias(type_col),
+        F.col("t").alias("event_type"),
         F.col("k").alias("n_users"),
         F.col("n").alias("n_total"),
         F.round(p, 6).alias("share"),
@@ -2907,12 +2738,7 @@ def growth_accounting(
     )
 
 
-def diff_in_diff(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def diff_in_diff(events: DataFrame) -> DataFrame:
     """Difference-in-differences estimator on the parity split with
     the corpus-midpoint period boundary (:func:`cuped_adjust`'s
     layout): DiD = (ȳ_B,post − ȳ_B,pre) − (ȳ_A,post − ȳ_A,pre) — the
@@ -2928,7 +2754,7 @@ def diff_in_diff(
     Returns one row ``(n_a, n_b, pre_a, pre_b, post_a, post_b,
     did)`` — means in dollars, 6 dp.
     """
-    per_user, arm_sums = _parity_pre_post_sums(events, user_col, ts_col, value_col)
+    per_user, arm_sums = _parity_pre_post_sums(events, "user_id", "ts", "value")
     g = per_user.groupBy().agg(*arm_sums)
 
     def mean(s, cnt):
@@ -3285,12 +3111,7 @@ def cochran_armitage(
     )
 
 
-def power_sample_size(
-    events: DataFrame,
-    user_col: str = "user_id",
-    event_type_col: str = "event_type",
-    convert_type: str = "purchase",
-) -> DataFrame:
+def power_sample_size(events: DataFrame) -> DataFrame:
     """Two-proportion power analysis on the observed experiment: given
     the parity A/B split's measured conversion rates (:func:`ab_test`'s
     cells), the required per-arm sample size to detect the OBSERVED
@@ -3312,8 +3133,8 @@ def power_sample_size(
     one groupBy(arm) to 2 rows, one 2-row pivot rollup.  Returns one
     row ``(n_a, n_b, p_a, p_b, n_required_per_arm, mde_at_current_n)``.
     """
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.max((F.col(event_type_col) == convert_type).cast("long")).alias("conv")
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
+        F.max((F.col("event_type") == "purchase").cast("long")).alias("conv")
     )
     arm = per_user.select(
         (F.col("u") % 2 == 0).cast("long").alias("is_a"), "conv"
@@ -3351,21 +3172,16 @@ def power_sample_size(
     )
 
 
-def forecast_baseline(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    season: int = 7,
-) -> DataFrame:
+def forecast_baseline(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     """Seasonal-naive forecast backtest over the daily series: predict
-    each day with the value ``season`` days EARLIER and score the
+    each day with the value 7 days EARLIER and score the
     baseline with MASE (mean |error| scaled by the in-sample naive-1
     |step|) and sMAPE — the two scale-free accuracy numbers every
     forecasting bake-off reports first, and the floor any real model
     must beat before it ships.
 
     Exactness: daily values are exact cent BIGINTs from one groupBy;
-    the seasonal forecast joins on the EXACT calendar date −``season``
+    the seasonal forecast joins on the EXACT calendar date −7
     (an equi-join — a row-offset lag silently mispredicts across gap
     days); absolute errors and the naive-1 denominator are exact
     BIGINTs; sMAPE's per-day ratio and the two final divisions are the
@@ -3387,7 +3203,7 @@ def forecast_baseline(
         "d", "v", F.lag("v").over(wd).alias("prev")
     )
     fc = daily.select(
-        F.date_add(F.col("d"), season).alias("d"), F.col("v").alias("yhat")
+        F.date_add(F.col("d"), 7).alias("d"), F.col("v").alias("yhat")
     )
     joined = with_prev.join(fc, "d", "left")
     err = F.abs(F.col("v") - F.col("yhat"))
@@ -3427,11 +3243,7 @@ def forecast_baseline(
     )
 
 
-def delta_method_ratio(
-    events: DataFrame,
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def delta_method_ratio(events: DataFrame) -> DataFrame:
     """Ratio-metric A/B readout with delta-method standard errors:
     the metric is value-per-EVENT aggregated per USER (Σx_i/Σy_i over
     the arm), whose naive per-event variance is WRONG because events
@@ -3450,8 +3262,8 @@ def delta_method_ratio(
     one groupBy(arm) to 2 rows, one 2-row pivot rollup.  Returns one
     row ``(n_a, n_b, ratio_a, ratio_b, diff, z_stat)``.
     """
-    cents = _cents(value_col)
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
+    cents = _cents("value")
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
         F.sum(cents).cast("long").alias("x"),
         F.count(F.lit(1)).cast("long").alias("y"),
     )
@@ -3501,12 +3313,7 @@ def delta_method_ratio(
     )
 
 
-def bh_significance(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    alpha: float = 0.05,
-) -> DataFrame:
+def bh_significance(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Benjamini-Hochberg FDR screen over a FAMILY of per-segment
     two-proportion tests — the multiple-comparisons step every
     segment-drilldown dashboard skips at its peril: with k segments at
@@ -3597,7 +3404,7 @@ def bh_significance(
         F.count(F.lit(1)).over(m).cast("long").alias("m"),
     )
     hit = F.when(
-        F.col("p_raw") <= F.col("bh_rank") * F.lit(alpha) / F.col("m"),
+        F.col("p_raw") <= F.col("bh_rank") * F.lit(0.05) / F.col("m"),
         F.col("bh_rank"),
     )
     with_max = ranked.select(
@@ -3620,17 +3427,12 @@ def bh_significance(
     ).orderBy("bh_rank")
 
 
-def hll_rollup(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    lg_k: int = 12,
-) -> DataFrame:
+def hll_rollup(events: DataFrame) -> DataFrame:
     """Mergeable-sketch rollup: per-DAY HyperLogLog sketches of the
     user set, re-aggregated into per-WEEK distinct-user estimates by
     UNIONING THE SKETCHES — never re-touching the raw rows.  This is
     the pattern that makes distinct counts tractable at 100 TB: the
-    expensive pass materializes one ~2^lg_k-byte sketch per day
+    expensive pass materializes one ~2^12-byte sketch per day
     (normally persisted to the lake), and every coarser rollup —
     weeks, months, arbitrary date ranges, the whole corpus — is a
     byte-level register-max merge of those sketches
@@ -3639,7 +3441,7 @@ def hll_rollup(
     once per granularity.
 
     Apache-DataSketches HLL is order-independent (register max), so
-    the estimates are DETERMINISTIC for a given input and lg_k — the
+    the estimates are DETERMINISTIC for a given input and lg_k=12 — the
     output is stable across partial-agg orders — but DuckDB's
     approx_count_distinct is a different sketch, so the driver gate is
     rows-only by design; the accuracy pin (estimate within 4% of
@@ -3653,8 +3455,8 @@ def hll_rollup(
     week ``(week, n_days, est_users)`` plus a ``week = NULL`` all-time
     row, ordered with the all-time row last.
     """
-    daily = events.groupBy(F.to_date(ts_col).alias("d")).agg(
-        F.hll_sketch_agg(F.col(user_col), F.lit(lg_k)).alias("sk")
+    daily = events.groupBy(F.to_date("ts").alias("d")).agg(
+        F.hll_sketch_agg(F.col("user_id"), F.lit(12)).alias("sk")
     )
     weekly = daily.groupBy(F.date_trunc("week", F.col("d")).cast("date").alias("week")).agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
@@ -3667,50 +3469,44 @@ def hll_rollup(
     return weekly.unionByName(alltime).orderBy(F.col("week").asc_nulls_last())
 
 
-def quantile_rollup(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    m_grid: int = 100,
-    accuracy: int = 10_000,
-) -> DataFrame:
+def quantile_rollup(events: DataFrame) -> DataFrame:
     """Mergeable QUANTILE rollup — the percentile sibling of
     :func:`hll_rollup`, completing the sketch-rollup posture a 100 TB
     metrics layer needs (distinct counts AND latency/value
     percentiles re-aggregated per period without rescanning raw rows).
 
     The expensive pass builds one bounded summary per DAY: an
-    ``m_grid``-point equi-spaced percentile grid from Spark's
+    100-point equi-spaced percentile grid from Spark's
     Greenwald–Khanna ``percentile_approx`` (per-value rank error
-    ≤ n_d/accuracy) plus the exact day count — the summary a lake
+    ≤ n_d/10000) plus the exact day count — the summary a lake
     would persist next to the day's HLL sketch.  Every coarser
     period — weeks, the whole corpus — then MERGES grids only: each
-    grid point carries mass ``n_d/m_grid``, the pooled points are
-    rank-scanned per period (a window over the day-domain × m_grid
+    grid point carries mass ``n_d/100``, the pooled points are
+    rank-scanned per period (a window over the day-domain × 100
     table — calendar-bounded, never row-bounded), and p50/p95/p99 are
     the smallest pooled values covering the target mass.  Pooled rank
-    error ≤ N/(2·m_grid) + Σn_d/accuracy — ~0.6 % of rank at the
+    error ≤ N/(2·100) + Σn_d/10000 — ~0.6 % of rank at the
     defaults, pinned against exact percentiles in
     tests/test_round11_ops.py (the hll_rollup 3σ-pin pattern).
 
     The mass bookkeeping is exact-integer: point mass is the BIGINT
-    ``n_d`` (per-period total is then ``m_grid·N``), and the
+    ``n_d`` (per-period total is then ``100·N``), and the
     percentile conditions compare ``100·cum ≥ k·tot`` — no float
     ranks.  GK summaries are a different sketch family than DuckDB's
     approx quantiles, so the driver gate is rows-only by design, like
     hll_rollup.
 
     Scale shape: ONE partial-agged groupBy(day) over raw rows (GK
-    buffers bounded by ``accuracy``, never by the value domain), then
-    every rollup touches only the day×m_grid grid table.  Returns per
+    buffers bounded by the accuracy 10000, never by the value domain), then
+    every rollup touches only the day×100 grid table.  Returns per
     week ``(week, n_rows, p50, p95, p99)`` plus a ``week = NULL``
     all-time row, ordered with the all-time row last.
     """
-    cents = _cents(value_col)
-    probs = lit_double_array([(i + 0.5) / m_grid for i in range(m_grid)])
-    daily = events.groupBy(F.to_date(ts_col).alias("d")).agg(
+    cents = _cents("value")
+    probs = lit_double_array([(i + 0.5) / 100 for i in range(100)])
+    daily = events.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("long").alias("n_d"),
-        F.percentile_approx(cents, probs, F.lit(accuracy)).alias("qs"),
+        F.percentile_approx(cents, probs, F.lit(10_000)).alias("qs"),
     )
     pts = daily.select("d", "n_d", F.posexplode("qs").alias("idx", "q"))
 
@@ -3736,7 +3532,7 @@ def quantile_rollup(
             )
 
         return cum.groupBy(*part_cols).agg(
-            (F.max("tot") / m_grid).cast("long").alias("n_rows"),
+            (F.max("tot") / 100).cast("long").alias("n_rows"),
             F.round(pick(50) / 100.0, 6).alias("p50"),
             F.round(pick(95) / 100.0, 6).alias("p95"),
             F.round(pick(99) / 100.0, 6).alias("p99"),
@@ -3751,13 +3547,7 @@ def quantile_rollup(
     return weekly.unionByName(alltime).orderBy(F.col("week").asc_nulls_last())
 
 
-def logrank_test(
-    events: DataFrame,
-    death_type: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def logrank_test(events: DataFrame) -> DataFrame:
     """Two-group log-rank test on time-to-first-conversion — the
     survival-curve companion to :func:`survival_km` (KM says WHAT the
     curves look like; log-rank says whether the two cohorts' hazard is
@@ -3781,9 +3571,9 @@ def logrank_test(
     over rows (the prover's DATE-key discipline).  Returns one row
     ``(n_a, n_b, deaths_a, deaths_b, o_minus_e, var_lr, chi2)``.
     """
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
         F.min(
-            F.when(F.col(type_col) == death_type, F.to_date(ts_col))
+            F.when(F.col("event_type") == "purchase", F.to_date("ts"))
         ).alias("dd")
     )
     per_user = per_user.select(
@@ -3851,12 +3641,7 @@ def logrank_test(
     )
 
 
-def info_gain(
-    events: DataFrame,
-    target_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def info_gain(events: DataFrame) -> DataFrame:
     """Information gain (mutual information, nats) of the event type
     against three candidate calendar/value features — the feature-
     selection readout (which cheap feature most reduces label
@@ -3877,15 +3662,15 @@ def info_gain(
     ``(feature, n, h_y, h_x, h_xy, info_gain, ig_ratio)`` ordered by
     info_gain desc.
     """
-    y = F.col(target_col).cast("string")
+    y = F.col("event_type").cast("string")
     feats = [
-        ("dow", F.dayofweek(F.col(ts_col)).cast("string")),
-        ("hour6", (F.floor(F.hour(F.col(ts_col)) / 6)).cast("string")),
+        ("dow", F.dayofweek(F.col("ts")).cast("string")),
+        ("hour6", (F.floor(F.hour(F.col("ts")) / 6)).cast("string")),
         (
             "value_band",
-            F.when(F.col(value_col) < 0, "neg")
-            .when(F.col(value_col) < 10, "low")
-            .when(F.col(value_col) < 100, "mid")
+            F.when(F.col("value") < 0, "neg")
+            .when(F.col("value") < 10, "low")
+            .when(F.col("value") < 100, "mid")
             .otherwise("high"),
         ),
     ]
@@ -3938,17 +3723,10 @@ def info_gain(
     ).orderBy(F.col("info_gain").desc(), F.col("feature").asc())
 
 
-def ab_sequential(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    z_alpha: float = 2.963,
-) -> DataFrame:
+def ab_sequential(events: DataFrame) -> DataFrame:
     """Group-sequential A/B monitoring: the per-day cumulative
     two-proportion z-statistic against an O'Brien-Fleming-style
-    spending boundary ``z_alpha / sqrt(information fraction)`` — the
+    spending boundary ``2.963 / sqrt(information fraction)`` — the
     peek-every-day readout that says WHEN (if ever) the experiment
     could have stopped without inflating false positives, the
     always-valid companion to the fixed-horizon :func:`ab_test`.
@@ -3969,10 +3747,10 @@ def ab_sequential(
     """
     ud = (
         events.select(
-            F.to_date(ts_col).alias("d"),
-            F.pmod(F.col(user_col), F.lit(2)).cast("int").alias("g"),
-            F.col(user_col).alias("u"),
-            F.when(F.col(type_col) == conv_type, 1).otherwise(0).alias("cv"),
+            F.to_date("ts").alias("d"),
+            F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("g"),
+            F.col("user_id").alias("u"),
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("cv"),
         )
         .groupBy("d", "g", "u")
         .agg(F.max("cv").alias("cv"))
@@ -4007,7 +3785,7 @@ def ab_sequential(
     se = F.sqrt(p * (F.lit(1.0) - p) * (F.lit(1.0) / na + F.lit(1.0) / nb))
     z = F.when(se > 0, (xb / nb - xa / na) / se).otherwise(F.lit(0.0))
     frac = (na + nb) / F.col("n_tot").cast("double")
-    bound = F.lit(float(z_alpha)) / F.sqrt(frac)
+    bound = F.lit(2.963) / F.sqrt(frac)
     return cum.join(F.broadcast(tot)).select(
         "d",
         "n_a",
@@ -4020,14 +3798,7 @@ def ab_sequential(
     ).orderBy("d")
 
 
-def offpolicy_eval(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    clip: int = 20,
-    n_contexts: int = 4,
-) -> DataFrame:
+def offpolicy_eval(events: DataFrame) -> DataFrame:
     """Off-policy evaluation of a candidate action policy from logged
     interaction data — the counterfactual readout an RLHF/bandit data
     pipeline runs before any online test: IPS (inverse-propensity
@@ -4051,10 +3822,10 @@ def offpolicy_eval(
     ess)``.
     """
     base = events.select(
-        F.pmod(F.col(user_col), F.lit(n_contexts)).cast("int").alias("x"),
-        F.col(type_col).alias("a"),
+        F.pmod(F.col("user_id"), F.lit(4)).cast("int").alias("x"),
+        F.col("event_type").alias("a"),
         F.greatest(
-            _cents(value_col), F.lit(0)
+            _cents("value"), F.lit(0)
         ).alias("r"),
     )
     prop = base.groupBy("x", "a").agg(F.count(F.lit(1)).cast("long").alias("c_xa"))
@@ -4065,7 +3836,7 @@ def offpolicy_eval(
     )
     w6 = F.round(
         F.least(
-            F.lit(float(clip)),
+            F.lit(20.0),
             target * F.col("c_x").cast("double") / F.col("c_xa").cast("double"),
         )
         * F.lit(1e6)
@@ -4078,7 +3849,7 @@ def offpolicy_eval(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(F.col("w6") > 0, 1).otherwise(0)).cast("long").alias("n_matched"),
         F.sum(
-            F.when(F.col("w6") == F.lit(clip * 1_000_000), 1).otherwise(0)
+            F.when(F.col("w6") == F.lit(20 * 1_000_000), 1).otherwise(0)
         )
         .cast("long")
         .alias("n_clip"),
@@ -4115,13 +3886,7 @@ def offpolicy_eval(
     )
 
 
-def simpsons_check(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def simpsons_check(events: DataFrame) -> DataFrame:
     """Simpson's-paradox audit: does any segment's A-vs-B conversion
     direction contradict the pooled direction?  The aggregation-bias
     tripwire every experiment readout should run before trusting a
@@ -4140,9 +3905,9 @@ def simpsons_check(
     segment.
     """
     base = events.select(
-        F.dayofweek(F.col(ts_col)).cast("int").alias("seg"),
-        F.pmod(F.col(user_col), F.lit(2)).cast("int").alias("g"),
-        F.when(F.col(type_col) == conv_type, 1).otherwise(0).alias("cv"),
+        F.dayofweek(F.col("ts")).cast("int").alias("seg"),
+        F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("g"),
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("cv"),
     )
     per = base.groupBy("seg").agg(
         F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).cast("long").alias("n_a"),

@@ -196,7 +196,6 @@ def connected_components_two_phase(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al. SoCC'14) — O(log² n) rounds regardless of graph
@@ -249,7 +248,7 @@ def connected_components_two_phase(
         return _undirected(out, "a", "b")
 
     prev = _digest(edges)
-    for i in range(1, max_iter + 1):
+    for i in range(1, 51):
         edges = cuts.cut(i, _star(_star(edges, large=True), large=False))
         cur = _digest(edges)
         if cur == prev:
@@ -257,7 +256,7 @@ def connected_components_two_phase(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected_components_two_phase did not converge in {max_iter} rounds"
+            "connected_components_two_phase did not converge in 50 rounds"
         )
 
     # converged: edges form stars (component-min, member).  Singleton
@@ -384,12 +383,11 @@ def clustering_coefficient(
 def bfs_hops(
     pairs: DataFrame,
     seeds: DataFrame,
-    max_hops: int = 3,
     src: str = "doc_a",
     dst: str = "doc_b",
 ) -> DataFrame:
     """Multi-source bounded-depth BFS over an undirected edge list:
-    the minimum hop count (≤ ``max_hops``) from any seed node — "how
+    the minimum hop count (≤ 3) from any seed node — "how
     close is this doc to a known-bad seed" over the near-dup graph,
     the contamination-radius / blocklist-expansion query of a corpus
     pipeline.  All-integer semantics: exactly reproducible, no FP.
@@ -398,7 +396,7 @@ def bfs_hops(
     CURRENT frontier by one equi-join against the (symmetrized) edge
     list, then anti-joins out already-visited nodes so a node's first
     visit — necessarily at its minimum distance — is its only visit.
-    Rounds = ``max_hops`` (a small constant), so lineage stays bounded
+    Rounds = 3 (a small constant), so lineage stays bounded
     without checkpointing; per-round cost is one shuffle of the
     frontier×degree expansion, never the whole graph.
 
@@ -414,7 +412,7 @@ def bfs_hops(
         "hops", F.lit(0)
     )
     frontier = seen.select("node")
-    for h in range(1, max_hops + 1):
+    for h in range(1, 4):
         nbrs = (
             frontier.join(edges, frontier["node"] == edges["s"])
             .select(F.col("d").alias("node"))
@@ -566,12 +564,13 @@ def label_propagation(
             )
             .select(F.col("s").alias("node"), "label"),
         )
+    if rounds > 0:
+        release_checkpoint(edges)  # the last round's labels are cut: edges are dead
     return labels.select("node", F.col("label").cast("long").alias("label"))
 
 
 def kcore_peel(
     pairs: DataFrame,
-    k: int = 2,
     rounds: int = 6,
     src: str = "doc_a",
     dst: str = "doc_b",
@@ -601,7 +600,7 @@ def kcore_peel(
     edges = cuts.cut(0, _sym_edges(pairs, src, dst))
     for i in range(1, rounds + 1):
         deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
-        keep = deg.filter(F.col("c") >= k).select("s")
+        keep = deg.filter(F.col("c") >= 2).select("s")
         edges = cuts.cut(
             i,
             edges.join(keep, "s", "left_semi").join(
@@ -619,10 +618,9 @@ def common_neighbors(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    min_common: int = 1,
 ) -> DataFrame:
     """Common-neighbors / Adamic-Adar link prediction over the
-    near-dup graph: for every node pair sharing >= ``min_common``
+    near-dup graph: for every node pair sharing >= 1
     neighbors, the shared-neighbor count and the Adamic-Adar score
     Σ 1/ln(deg(n)) — the classic "these two docs are probably dups
     even though no band matched them" second-pass signal (a shared
@@ -649,16 +647,12 @@ def common_neighbors(
         " ELSE 0 END AS aa_micro",
     )
     scored = _wedge_pairs(
-        sym, min_common, F.expr("round(sum(aa_micro) / 1000000.0D, 6) AS adamic_adar"), weights=aa
+        sym, 1, F.expr("round(sum(aa_micro) / 1000000.0D, 6) AS adamic_adar"), weights=aa
     )
     return _flag_linked(scored, sym, "n_common", "adamic_adar")
 
 
-def degree_histogram(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def degree_histogram(edges: DataFrame) -> DataFrame:
     """Degree distribution of a graph: ``(degree, n_nodes)`` — the
     first diagnostic run on any web/citation/dup graph (power-law tail
     => hub-aware strategies like the LSH bucket caps; a spike at k =>
@@ -671,7 +665,7 @@ def degree_histogram(
     the classic two-round MapReduce degree count.
     """
     deg = (
-        _sym_edges(edges, src, dst)
+        _sym_edges(edges, "src", "dst")
         .groupBy("s")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
@@ -681,11 +675,7 @@ def degree_histogram(
     )
 
 
-def assortativity(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of (deg(u), deg(v)) over the symmetrized edge-end
     pairs.  r > 0: hubs link to hubs (social nets); r < 0: hubs link
@@ -710,7 +700,7 @@ def assortativity(
     # two orientation projections of the old unionByName).  Degrees
     # come from one explode of both ends; all sums are exact BIGINTs,
     # bit-identical to the symmetrized form in any order.
-    e = materialize_once(_undirected(edges, src, dst))
+    e = materialize_once(_undirected(edges, "src", "dst"))
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -733,13 +723,7 @@ def assortativity(
     )
 
 
-def boruvka_msf(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    max_iter: int = 25,
-) -> DataFrame:
+def boruvka_msf(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Borůvka minimum spanning forest — THE parallel MST algorithm
     (each round every component grabs its cheapest outgoing edge, so
     components at least halve per round: ≤ log₂(n) rounds, each a
@@ -769,9 +753,9 @@ def boruvka_msf(
     """
     e = materialize_once(
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-            F.col(weight).cast("long").alias("w"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
+            F.col("w").cast("long").alias("w"),
         )
         .filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
@@ -866,10 +850,9 @@ def neighborhood_jaccard(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    min_common: int = 1,
 ) -> DataFrame:
     """Neighborhood-Jaccard link prediction over the near-dup graph:
-    for every node pair sharing >= ``min_common`` neighbors,
+    for every node pair sharing >= 1 neighbor,
     ``|N(a)∩N(b)| / |N(a)∪N(b)|`` — the normalized companion to
     :func:`common_neighbors` (raw shared-neighbor counts favor hubs;
     Jaccard asks what FRACTION of their combined neighborhoods
@@ -890,7 +873,7 @@ def neighborhood_jaccard(
     # materialize once (the pairs input is an LSH pipeline upstream)
     sym = materialize_once(_sym_edges(pairs, src, dst))
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    scored = _attach_both(_wedge_pairs(sym, min_common), deg, "s", "deg", "deg_", ("a", "b"))
+    scored = _attach_both(_wedge_pairs(sym, 1), deg, "s", "deg", "deg_", ("a", "b"))
     return _flag_linked(
         scored,
         sym,
@@ -901,14 +884,7 @@ def neighborhood_jaccard(
     )
 
 
-def modularity(
-    edges: DataFrame,
-    communities: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    comm: str = "comm",
-) -> DataFrame:
+def modularity(edges: DataFrame, communities: DataFrame) -> DataFrame:
     """Newman-Girvan modularity of a given node partition on the
     undirected simple graph — per community
     ``Q_c = L_c/m − (D_c/(2m))²`` and its exact integer carriers: the
@@ -937,9 +913,9 @@ def modularity(
     modularity.
     """
     cmap = communities.select(
-        F.col(node).alias("nid"), F.col(comm).alias("c")
+        F.col("node").alias("nid"), F.col("comm").alias("c")
     ).distinct()
-    tagged = _attach_both(_undirected(edges, src, dst), cmap, "nid", "c", "c")
+    tagged = _attach_both(_undirected(edges, "src", "dst"), cmap, "nid", "c", "c")
     ii = (F.col("cu") == F.col("cv")).cast("long")
     ends = tagged.select(
         F.explode(

@@ -48,14 +48,14 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def attach_media_meta(df: DataFrame, blob_col: str = "blob", id_col: str = "media_id") -> DataFrame:
+def attach_media_meta(df: DataFrame) -> DataFrame:
     """Typed metadata for a binary column — pure built-ins (codegen'd):
     length + sha256 stay JVM-side; no Python touches the bytes."""
     return df.select(
-        F.col(id_col),
-        F.col(blob_col),
-        F.length(F.col(blob_col)).cast("long").alias("byte_len"),
-        F.lower(F.sha2(F.col(blob_col), 256)).alias("sha256"),
+        F.col("media_id"),
+        F.col("blob"),
+        F.length(F.col("blob")).cast("long").alias("byte_len"),
+        F.lower(F.sha2(F.col("blob"), 256)).alias("sha256"),
     )
 
 
@@ -79,12 +79,7 @@ def _stub_from_digest(digest: bytes) -> tuple[int, int, list[float]]:
     return width, height, feats
 
 
-def decode_media(
-    df: DataFrame,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
-    media_type: str = "image",
-) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """binary column → decoded features via mapInPandas (Arrow batches)."""
     cols = [f.name for f in DECODED_SCHEMA.fields]
 
@@ -95,7 +90,7 @@ def decode_media(
         # per-row dict materialization.
         for pdf in batches:
             ids, types, lens, shas, ws, hs, fs = [], [], [], [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
+            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
                 if blob is None:
                     # NULL payload = missing media object: nothing to
                     # decode, emit nothing (degenerate-surface sweep, r9)
@@ -104,7 +99,7 @@ def decode_media(
                 digest = hashlib.sha256(data).digest()
                 w, h, feats = _stub_from_digest(digest)
                 ids.append(int(mid))
-                types.append(media_type)
+                types.append("image")
                 lens.append(len(data))
                 shas.append(digest.hex())
                 ws.append(w)
@@ -124,25 +119,21 @@ def decode_media(
                 columns=cols,
             )
 
-    return df.select(id_col, blob_col).mapInPandas(_decode, DECODED_SCHEMA)
+    return df.select("media_id", "blob").mapInPandas(_decode, DECODED_SCHEMA)
 
 
-def frame_sample_plan(df: DataFrame, blob_col: str = "blob", id_col: str = "media_id", every_n: int = 10) -> DataFrame:
+def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame-sampling *plumbing*: emits one row per sampled frame
     index (codec-free — frame count faked from byte_len).  Shows the
     explode-shaped output schema a real sampler would produce."""
-    n_frames = (F.length(F.col(blob_col)) / 1024 + 1).cast("int")
+    n_frames = (F.length(F.col("blob")) / 1024 + 1).cast("int")
     return df.select(
-        F.col(id_col),
+        F.col("media_id"),
         F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))).alias("frame_idx"),
     )
 
 
-def resize_media(
-    decoded: DataFrame,
-    target_w: int = 32,
-    target_h: int = 32,
-) -> DataFrame:
+def resize_media(decoded: DataFrame) -> DataFrame:
     """Resize step over DECODED media: rescale the feature vector by
     the area ratio target/(width·height) — the deterministic stand-in
     for a real bilinear resample (which would swap only the per-row
@@ -153,13 +144,13 @@ def resize_media(
     decode; every downstream media transform stays in the JVM — the
     composition a production pipeline wants (decode once, derive many).
     """
-    ratio = F.lit(float(target_w * target_h)) / (
+    ratio = F.lit(1024.0) / (
         F.col("width").cast("double") * F.col("height").cast("double")
     )
     return decoded.select(
         "media_id",
-        F.lit(target_w).alias("resized_w"),
-        F.lit(target_h).alias("resized_h"),
+        F.lit(32).alias("resized_w"),
+        F.lit(32).alias("resized_h"),
         F.transform("features", lambda x: F.round(x * ratio, 6)).alias("features_resized"),
     )
 
@@ -188,12 +179,7 @@ def phash_fingerprint(decoded: DataFrame) -> DataFrame:
     return decoded.select(F.col("media_id"), acc.cast("long").alias("phash"))
 
 
-def modality_alignment(
-    docs: DataFrame,
-    emb: DataFrame,
-    doc_id: str = "doc_id",
-    vec_id: str = "vec_id",
-) -> DataFrame:
+def modality_alignment(docs: DataFrame, emb: DataFrame) -> DataFrame:
     """Cross-modality referential audit: which documents have an
     embedding row and which vectors are orphaned — the first check a
     multimodal/RAG pipeline runs after an embedding batch job, since
@@ -211,8 +197,8 @@ def modality_alignment(
     # key-based classification would count that text row as
     # 'vector_only' (it has to fall somewhere) — the indicator is
     # non-null exactly when the side's ROW is present.
-    d = docs.select(F.col(doc_id).alias("dk"), F.lit(1).alias("has_d"))
-    e = emb.select(F.col(vec_id).alias("ek"), F.lit(1).alias("has_e"))
+    d = docs.select(F.col("doc_id").alias("dk"), F.lit(1).alias("has_d"))
+    e = emb.select(F.col("vec_id").alias("ek"), F.lit(1).alias("has_e"))
     j = d.join(e, d["dk"] == e["ek"], "full_outer")
     status = (
         F.when(F.col("has_d").isNotNull() & F.col("has_e").isNotNull(), "matched")

@@ -39,7 +39,6 @@ def join_salted(
     skewed_small: DataFrame,
     key: str,
     salt_buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-mitigated equi-join: salt the big side's key with a random
     bucket and replicate the small side once per bucket, so one hot key
@@ -56,7 +55,7 @@ def join_salted(
         F.col("id").cast("int").alias("__salt")
     )
     replicated = skewed_small.crossJoin(F.broadcast(salts))
-    return salted_big.join(replicated, [key, "__salt"], how).drop("__salt")
+    return salted_big.join(replicated, [key, "__salt"], "inner").drop("__salt")
 
 
 def sample_stratified(
@@ -246,8 +245,6 @@ def bloom_semi_audit(
     build: DataFrame,
     fact_key: str,
     build_key: str,
-    m_bits: int = 16384,
-    k: int = 3,
 ) -> DataFrame:
     """Explicit Bloom-filter semi-join reduction with false-positive
     accounting — the map-side shuffle reducer a 100 TB fact⋈dim plan
@@ -260,7 +257,7 @@ def bloom_semi_audit(
 
     Determinism: bit positions come from md5(key) hex substrings (the
     engine's content-addressed hashing discipline); the filter packs
-    into ``m_bits/32`` 32-bit words held in ONE array row (bit 63
+    into 16384/32 = 512 32-bit words held in ONE array row (bit 63
     issues avoided by construction), aggregated with bit_or — an
     associative, order-free reduction — and broadcast as a 1-row
     cross join.  Probe is element_at + bit test per hash: pure
@@ -269,16 +266,16 @@ def bloom_semi_audit(
     Returns one audit row: ``n_fact, n_bloom_pass, n_exact,
     n_false_pos, fp_rate``.
     """
-    n_words = m_bits // 32
+    n_words = 512  # 16384 bits
 
     def positions(key_col):
         h = F.md5(F.col(key_col).cast("string"))
         return [
             (
                 F.conv(F.substring(h, 1 + 8 * i, 8), 16, 10).cast("long")
-                % m_bits
+                % 16384
             )
-            for i in range(k)
+            for i in range(3)
         ]
 
     bits = (
@@ -324,7 +321,7 @@ def bloom_semi_audit(
             )
             != 0
         )
-        for i in range(k)
+        for i in range(3)
     ]
     passed_expr = tests[0]
     for t in tests[1:]:
@@ -501,19 +498,14 @@ def equidepth_bins(apply_df: DataFrame, edge_df: DataFrame, col: str, n_bins: in
     return j.withColumn("bin", b)
 
 
-def histogram_equidepth(
-    df: DataFrame,
-    value_col: str,
-    n_bins: int = 10,
-    scale: int = 100,
-) -> DataFrame:
+def histogram_equidepth(df: DataFrame, value_col: str) -> DataFrame:
     """Equi-DEPTH histogram: bins hold (approximately) equal row
     counts with data-driven edges — the summary that stays readable
     under heavy skew, where equi-width bins collapse into one giant
     bar (and what engines themselves keep as column statistics).
 
     Scale + determinism: edges are exact percentiles of the
-    ``scale``-scaled integer values (one 1-row aggregate — an exact
+    100-scaled integer values (one 1-row aggregate — an exact
     value, integer or .5 midpoint), binning is a map-side comparison
     chain against that broadcast row, and the rollup is one
     partial-agged groupBy on the bin id.  No global sort, no ntile
@@ -523,30 +515,23 @@ def histogram_equidepth(
     Returns (bin, n, lo, hi) — observed min/max inside each bin,
     values back in original units — ordered by bin.
     """
-    v = F.round(F.col(value_col) * scale).cast("long")
+    v = F.round(F.col(value_col) * 100).cast("long")
     base = df.select(v.alias("v"))
     return (
-        equidepth_bins(base, base, "v", n_bins)
+        equidepth_bins(base, base, "v", 10)
         .select("bin", "v")
         .groupBy("bin")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.min("v") / scale, 6).alias("lo"),
-            F.round(F.max("v") / scale, 6).alias("hi"),
+            F.round(F.min("v") / 100, 6).alias("lo"),
+            F.round(F.max("v") / 100, 6).alias("hi"),
         )
         .select(F.col("bin").cast("long").alias("bin"), "n", "lo", "hi")
         .orderBy("bin")
     )
 
 
-def cdc_apply(
-    log: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    op_col: str = "op",
-    value_col: str = "value",
-) -> DataFrame:
+def cdc_apply(log: DataFrame) -> DataFrame:
     """Apply a change-data-capture log: per key, replay ordered
     upsert/delete operations and keep the FINAL state — the batch
     materialization every CDC mirror (Debezium→lake) runs, and the
@@ -563,20 +548,20 @@ def cdc_apply(
     a delete, ordered by key.
     """
     packed = F.struct(
-        F.unix_micros(F.col(ts_col)).alias("t"),
-        F.col(id_col).alias("i"),
-        F.col(op_col).alias("o"),
-        F.round(F.col(value_col) * 100).cast("long").alias("cents"),
+        F.unix_micros(F.col("ts")).alias("t"),
+        F.col("event_id").alias("i"),
+        F.col("op").alias("o"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    last = log.groupBy(key_col).agg(F.max(packed).alias("m"))
+    last = log.groupBy("user_id").agg(F.max(packed).alias("m"))
     return (
         last.filter(F.col("m.o") != "delete")
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.timestamp_micros(F.col("m.t")).alias("last_ts"),
             F.round(F.col("m.cents") / 100.0, 6).alias("last_value"),
         )
-        .orderBy(key_col)
+        .orderBy("user_id")
     )
 
 
@@ -612,14 +597,9 @@ def join_cardinality(
     )
 
 
-def revenue_concentration(
-    orders: DataFrame,
-    key_col: str = "o_custkey",
-    value_col: str = "o_totalprice",
-    threshold_pct: int = 80,
-) -> DataFrame:
+def revenue_concentration(orders: DataFrame) -> DataFrame:
     """Pareto concentration curve: how many top entities cover
-    ``threshold_pct``% of total value — the 80/20 report behind
+    80% of total value — the 80/20 report behind
     account-risk and storage-tiering decisions (and, on a corpus,
     "how few domains contribute 80% of tokens").
 
@@ -636,8 +616,8 @@ def revenue_concentration(
 
     Returns one row: (n_keys, n_top, top_share_pct, total_value).
     """
-    per = orders.groupBy(F.col(key_col).alias("k")).agg(
-        F.sum(F.round(F.col(value_col) * 100).cast("long")).alias("cents")
+    per = orders.groupBy(F.col("o_custkey").alias("k")).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
     )
     run = bucketed_cum_counts(
         per,
@@ -653,8 +633,8 @@ def revenue_concentration(
     # products keep maximal int64 headroom at extreme totals
     import math
 
-    g = math.gcd(threshold_pct, 100)
-    num, den = threshold_pct // g, 100 // g
+    g = math.gcd(80, 100)
+    num, den = 80 // g, 100 // g
     needed = run.filter(
         (F.col("cum") - F.col("cents")) * den < F.lit(num) * F.col("tot")
     )
@@ -668,12 +648,7 @@ def revenue_concentration(
     )
 
 
-def sample_weighted_k(
-    df: DataFrame,
-    k: int = 50,
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sample_weighted_k(df: DataFrame) -> DataFrame:
     """EXACT-k weighted sampling without replacement — the
     Efraimidis–Spirakis A-Res scheme with a deterministic md5-derived
     uniform instead of an RNG: each row gets key = −ln(u)/w and the k
@@ -695,21 +670,21 @@ def sample_weighted_k(
     selection key.
     """
     # u in (0,1): 48 md5 bits / 2^48, never exactly 0 (offset by 1)
-    u48 = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 12), 16, 10).cast(
+    u48 = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10).cast(
         "long"
     )
     u = (u48 + 1.0) / float(1 << 48)
     ln_micro = F.round(-F.log(u) * 1e6).cast("long")
-    key = ln_micro / F.col(weight_col).cast("double")
+    key = ln_micro / F.col("n_chars").cast("double")
     return (
         df.select(
-            F.col(id_col),
-            F.col(weight_col).cast("long").alias("weight"),
+            F.col("doc_id"),
+            F.col("n_chars").cast("long").alias("weight"),
             F.round(key, 6).alias("sel_key"),
         )
         .filter(F.col("weight") > 0)
-        .orderBy("sel_key", id_col)
-        .limit(k)
+        .orderBy("sel_key", "doc_id")
+        .limit(50)
     )
 
 
@@ -1305,12 +1280,7 @@ def exact_ntile(
     return joined.withColumn(out_col, bucket.cast("long")).drop(*helper)
 
 
-def percent_rank_global(
-    df: DataFrame,
-    value_col: Column,
-    id_col: Column,
-    out_col: str = "pct_rank",
-) -> DataFrame:
+def percent_rank_global(df: DataFrame, value_col: Column, id_col: Column) -> DataFrame:
     """Exact global ``percent_rank()`` for EVERY row — quantile
     normalization, the preprocessing step behind calibration curves,
     rank-transformed features, and cross-corpus score alignment.
@@ -1328,7 +1298,7 @@ def percent_rank_global(
     yields 0.0 (the SQL convention), not a division error.
 
     Returns the input's ``__id``/``__v`` projections plus
-    ``out_col``, 6-dp rounded.
+    ``pct_rank``, 6-dp rounded.
     """
     base = df.select(id_col.alias("__id"), value_col.alias("__v"))
     per = base.groupBy("__v").agg(F.count(F.lit(1)).cast("long").alias("__t"))
@@ -1353,17 +1323,11 @@ def percent_rank_global(
     # columns would resolve to one side and compare trivially true)
     dom = dom.withColumnRenamed("__v", "__vd")
     return base.join(dom, F.col("__v").eqNullSafe(F.col("__vd"))).select(
-        "__id", "__v", F.round(pr, 6).alias(out_col)
+        "__id", "__v", F.round(pr, 6).alias("pct_rank")
     )
 
 
-def rfm_segments(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    value_col: str = "o_totalprice",
-    n_tiles: int = 5,
-) -> DataFrame:
+def rfm_segments(orders: DataFrame) -> DataFrame:
     """RFM segmentation — the classic customer-value grid: per
     customer, Recency (days since last order), Frequency (order
     count), Monetary (total spend), each scored into quintiles
@@ -1395,12 +1359,12 @@ def rfm_segments(
     form: 4 checkpoint barriers → 2, 22 exchanges → 8, and the
     orders scan count is unchanged (1).
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    mx = orders.agg(F.max(F.to_date(date_col)).alias("max_d"))
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    mx = orders.agg(F.max(F.to_date("o_orderdate")).alias("max_d"))
     per = (
-        orders.groupBy(F.col(cust_col).alias("cust"))
+        orders.groupBy(F.col("o_custkey").alias("cust"))
         .agg(
-            F.max(F.to_date(date_col)).alias("last_d"),
+            F.max(F.to_date("o_orderdate")).alias("last_d"),
             F.count(F.lit(1)).cast("long").alias("freq"),
             F.sum(cents).cast("long").alias("mon"),
         )
@@ -1428,7 +1392,7 @@ def rfm_segments(
     # NULL recency (a customer whose dates all parse to NULL): the
     # pre-stacking form ordered rec DESC, which puts NULLs LAST; the
     # negated ascending order would flip them FIRST (bucket 1 instead
-    # of n_tiles — ADVICE r11).  Coalesce to LONG_MAX: every real
+    # of 5 — ADVICE r11).  Coalesce to LONG_MAX: every real
     # -rec is ≤ 0, so the sentinel sorts strictly after all values and
     # NULL-rec customers form one tie group at the end — exactly the
     # replaced NULLS LAST placement, bit-identical buckets.
@@ -1447,7 +1411,7 @@ def rfm_segments(
     )
     scored = exact_ntile(
         stacked,
-        n_tiles,
+        5,
         F.col("__mv"),
         F.col("cust"),
         ascending=True,

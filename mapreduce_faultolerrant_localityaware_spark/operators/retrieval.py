@@ -34,21 +34,13 @@ from ..functions.text import tokens
 from ..functions.vectors import lit_double_array
 
 
-def bm25_topk(
-    docs: DataFrame,
-    terms: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
     """Top-``k`` documents by BM25 score for the bag-of-words query
     ``terms`` (Robertson/Sparck-Jones idf with the +1 floor, the
     Lucene form — always positive, so adding a matching term never
     lowers a score).
 
-    Ranking compares RAW doubles with ``id_col`` as the tie-break, so
+    Ranking compares RAW doubles with ``doc_id`` as the tie-break, so
     any two engines that agree on IEEE arithmetic produce the same
     ordering; the emitted score is rounded to 6 dp for hash-stable
     comparison.  Documents matching no term are dropped (score 0).
@@ -57,7 +49,7 @@ def bm25_topk(
     """
     if not terms:
         raise ValueError("bm25_topk needs at least one query term")
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
 
     # one in-array pass per term: tf_i = count of exact matches.  The
     # factory pins the loop variable; a `term=t` default would make
@@ -70,7 +62,7 @@ def bm25_topk(
         F.size(F.filter(tk, _eq(t))).alias(f"tf_{i}") for i, t in enumerate(terms)
     ]
     base = docs.select(
-        F.col(id_col).alias("doc_id"), F.size(tk).alias("dl"), *tf_cols
+        F.col("doc_id").alias("doc_id"), F.size(tk).alias("dl"), *tf_cols
     )
     # single-row corpus stats: N, avgdl, df per term.  count(*) over
     # the same pass (NOT a second scan) — exchange-free partial aggs.
@@ -83,7 +75,7 @@ def bm25_topk(
         ],
     )
     scored = base.join(F.broadcast(stats))
-    norm = 1.0 - b + b * F.col("dl") / F.col("avgdl")
+    norm = 1.0 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")
     contribs = []
     hits = []
     for i in range(len(terms)):
@@ -92,7 +84,7 @@ def bm25_topk(
             (F.col("n_docs") - F.col(f"df_{i}") + 0.5) / (F.col(f"df_{i}") + 0.5)
             + 1.0
         )
-        contribs.append(idf * tf * (k1 + 1.0) / (tf + k1 * norm))
+        contribs.append(idf * tf * (1.2 + 1.0) / (tf + 1.2 * norm))
         hits.append(F.when(tf > 0, 1).otherwise(0))
     score = sum(contribs[1:], contribs[0])
     n_hit = sum(hits[1:], hits[0])
@@ -152,20 +144,14 @@ def bm25_oracle_sql(terms: list[str], k: int, k1: float, b: float, tok_sql: str)
     """
 
 
-def rrf_fuse(
-    lexical: DataFrame,
-    semantic: DataFrame,
-    k: int = 20,
-    c: int = 60,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def rrf_fuse(lexical: DataFrame, semantic: DataFrame, k: int = 20) -> DataFrame:
     """Reciprocal-rank fusion of a lexical and a semantic ranking —
     the standard hybrid-retrieval combiner (Cormack et al., the
     1/(c+rank) form every production RAG stack uses to merge BM25
     with embedding search without score calibration).
 
-    ``lexical`` must carry (id_col, score) and ``semantic``
-    (id_col, cos_sim); each side is ranked independently by
+    ``lexical`` must carry (doc_id, score) and ``semantic``
+    (doc_id, cos_sim); each side is ranked independently by
     (score DESC, id ASC) — a total order, so ranks are deterministic
     — and fused with a FULL OUTER join: a document present in only
     one list still scores 1/(c+rank) from that list.
@@ -181,27 +167,27 @@ def rrf_fuse(
     RRF scores are sums of exact binary rationals' IEEE quotients, so
     both engines agree bit-for-bit; rounded to 9 dp for the hash gate.
     """
-    wl = Window.orderBy(F.desc("score"), F.asc(id_col))
-    ws = Window.orderBy(F.desc("cos_sim"), F.asc(id_col))
+    wl = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    ws = Window.orderBy(F.desc("cos_sim"), F.asc("doc_id"))
     lex = lexical.select(
-        id_col, F.row_number().over(wl).cast("long").alias("lex_rank")
+        "doc_id", F.row_number().over(wl).cast("long").alias("lex_rank")
     )
     sem = semantic.select(
-        id_col, F.row_number().over(ws).cast("long").alias("sem_rank")
+        "doc_id", F.row_number().over(ws).cast("long").alias("sem_rank")
     )
-    fused = lex.join(sem, id_col, "full_outer").select(
-        id_col,
+    fused = lex.join(sem, "doc_id", "full_outer").select(
+        "doc_id",
         "lex_rank",
         "sem_rank",
         (
-            F.coalesce(1.0 / (F.lit(c) + F.col("lex_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (F.lit(c) + F.col("sem_rank")), F.lit(0.0))
+            F.coalesce(1.0 / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
+            + F.coalesce(1.0 / (F.lit(60) + F.col("sem_rank")), F.lit(0.0))
         ).alias("_raw"),
     )
     return (
-        fused.orderBy(F.desc("_raw"), F.asc(id_col))
+        fused.orderBy(F.desc("_raw"), F.asc("doc_id"))
         .limit(k)
-        .select(id_col, "lex_rank", "sem_rank", F.round("_raw", 9).alias("rrf"))
+        .select("doc_id", "lex_rank", "sem_rank", F.round("_raw", 9).alias("rrf"))
     )
 
 

@@ -27,12 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pareto_front(
-    points: DataFrame,
-    x_col: str = "x",
-    y_col: str = "y",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pareto_front(points: DataFrame) -> DataFrame:
     """2-D maximize/maximize skyline over integer metric columns.
 
     A point p is ON the front iff no other point q dominates it
@@ -52,8 +47,8 @@ def pareto_front(
     independent formulation, so the gate cross-checks the rewrite.
     """
     per_x = (
-        points.groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("rep_id"))
+        points.groupBy(F.col("x").alias("x"), F.col("y").alias("y"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("rep_id"))
         .groupBy("x")
         .agg(
             F.max_by(

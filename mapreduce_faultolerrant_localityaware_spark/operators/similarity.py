@@ -89,29 +89,23 @@ def _top_k(scored: DataFrame, k: int, score: str = "cos_sim", drop_score: bool =
     return top_k_per(scored, ["query_id"], k, F.desc(score), F.asc("neighbor_id")).drop(*drop)
 
 
-def ann_bruteforce(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ann_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k of ``queries`` against ``emb`` (self excluded).
 
     Returns (query_id, neighbor_id, cos_sim) with a total tiebreak
     (sim DESC, neighbor ASC) so results are deterministic.
     """
-    q = _query_side(queries, id_col, vec_col)
-    pairs = _prep(emb, id_col, vec_col).join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-    return _top_k(_cos_scored(pairs, id_col), k)
+    q = _query_side(queries, "vec_id", "embedding")
+    pairs = _prep(emb, "vec_id", "embedding").join(
+        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+    )
+    return _top_k(_cos_scored(pairs, "vec_id"), k)
 
 
 def ann_range_search(
     emb: DataFrame,
     queries: DataFrame,
     threshold: float = 0.2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine RANGE search: every corpus vector within
     ``cos_sim >= threshold`` of each query (self excluded) — the
@@ -127,26 +121,21 @@ def ann_range_search(
     corpus.  Zero-norm vectors score NULL cosine and never pass the
     threshold.  Returns (query_id, neighbor_id, cos_sim).
     """
-    q = _query_side(queries, id_col, vec_col)
-    pairs = _prep(emb, id_col, vec_col).join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-    return _cos_scored(pairs, id_col).filter(F.col("cos_sim") >= threshold)
+    q = _query_side(queries, "vec_id", "embedding")
+    pairs = _prep(emb, "vec_id", "embedding").join(
+        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+    )
+    return _cos_scored(pairs, "vec_id").filter(F.col("cos_sim") >= threshold)
 
 
-def kmeans_fit(
-    emb: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 8,
-    train_per_centroid: int = 256,
-) -> list[list[float]]:
+def kmeans_fit(emb: DataFrame, k: int = 10, max_iter: int = 8) -> list[list[float]]:
     """Deterministic Lloyd's k-means over an embedding column — the
     coarse quantizer for IVF.  Returns k centroids (python lists; the
     model is k×d scalars — driver-sized by definition, like any ML
     model parameters).
 
     Distributed shape: the fit trains on a DETERMINISTIC sample of
-    ``k × train_per_centroid`` vectors (lowest id-hashes — ONE
+    ``k × 256`` vectors (lowest id-hashes — ONE
     TakeOrderedAndProject pass over the corpus: per-partition heaps,
     k-row driver merge), the standard quantizer-training posture
     (FAISS trains on ~256 points per centroid).  The sample is
@@ -165,7 +154,7 @@ def kmeans_fit(
     """
     if k <= 0:
         raise ValueError("kmeans_fit needs k > 0")
-    X = _train_sample(emb, id_col, vec_col, k * train_per_centroid)
+    X = _train_sample(emb, "vec_id", "embedding", k * 256)
     if X is None:
         # empty corpus: a 1-centroid dim-1 placeholder model — callers
         # only use it to shape score/assign expressions, which never
@@ -268,18 +257,13 @@ def _probe_cells(vec, centroids, nprobe: int):
     ).alias("cell")
 
 
-def assign_cells(
-    emb: DataFrame,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(emb: DataFrame, centroids) -> DataFrame:
     """Attach the nearest-centroid cell id: (id, v, cell).
 
     ``centroids``: python k×d list or a prebuilt
     :func:`_centroid_matrix` column (callers with several assign/probe
     expressions share one literal codebook column)."""
-    return _prep(emb, id_col, vec_col).withColumn(
+    return _prep(emb, "vec_id", "embedding").withColumn(
         "cell", _nearest_cell(F.col("v"), centroids)
     )
 
@@ -300,12 +284,8 @@ def _ivf_search(
 def ann_ivf_kmeans(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     n_cells: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 8,
 ) -> DataFrame:
     """IVF with a REAL fitted coarse quantizer: k-means cells replace
     the precomputed ``label`` column of :func:`ann_ivf`, so raw
@@ -318,23 +298,19 @@ def ann_ivf_kmeans(
     assignment is precomputed once (write cell as a partition column)
     and only the probe join runs per query batch.
     """
-    centroids = kmeans_fit(emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
+    centroids = kmeans_fit(emb, k=n_cells, max_iter=8)
     mat = _centroid_matrix(centroids)  # one shared literal codebook column
-    corpus = assign_cells(emb, mat, id_col, vec_col)
+    corpus = assign_cells(emb, mat)
     probe = _probe_cells(F.col("v"), mat, nprobe)
-    return _ivf_search(corpus, queries, probe, k, id_col, vec_col)
+    return _ivf_search(corpus, queries, probe, 5, "vec_id", "embedding")
 
 
 def ann_incremental(
     emb: DataFrame,
     new_batch: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     n_cells: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 8,
 ) -> DataFrame:
     """Incremental IVF index maintenance — the serving-side sibling of
     dedup_incremental: a NEW batch of embeddings joins the index by
@@ -358,14 +334,14 @@ def ann_incremental(
     corpus is the pytest bar, like its fitted siblings.
     """
     centroids = kmeans_fit(
-        emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter
+        emb, k=n_cells, max_iter=8
     )
     mat = _centroid_matrix(centroids)  # one shared literal codebook column
-    base = assign_cells(emb, mat, id_col, vec_col)
-    fresh = assign_cells(new_batch, mat, id_col, vec_col)
+    base = assign_cells(emb, mat)
+    fresh = assign_cells(new_batch, mat)
     corpus = base.unionByName(fresh)
     probe = _probe_cells(F.col("v"), mat, nprobe)
-    return _ivf_search(corpus, queries, probe, k, id_col, vec_col)
+    return _ivf_search(corpus, queries, probe, 5, "vec_id", "embedding")
 
 
 def index_drift_report(
@@ -427,112 +403,89 @@ def index_drift_report(
     ).orderBy("cell")
 
 
-def ann_ivf(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-) -> DataFrame:
+def ann_ivf(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-pruned cosine top-k: candidates restricted to the query's
-    coarse cell (equi-join on ``cell_col``), then exact re-rank.
+    coarse cell (equi-join on ``label``), then exact re-rank.
     ~|cells|× cheaper than brute force; recall bounded by cell quality.
     """
-    corpus = _prep(emb, id_col, vec_col, [cell_col])
+    corpus = _prep(emb, "vec_id", "embedding", ["label"])
     return _ivf_search(
-        corpus, queries, F.col(cell_col), k, id_col, vec_col, cell_col, extra=[cell_col]
+        corpus, queries, F.col("label"), 5, "vec_id", "embedding", "label", extra=["label"]
     )
 
 
-def embedding_norms(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def embedding_norms(emb: DataFrame) -> DataFrame:
     """Per-vector hygiene stats — the sanity pass a pipeline runs
     before ANN indexing / cosine dedup: dimensionality, L2 norm,
     largest-magnitude component, positive-component count.  All
     array-native inside the row (zero shuffle, codegen'd); floats are
     cast to double BEFORE arithmetic so the SQL oracle reproduces the
     sums bit-for-bit at 6 dp."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     sumsq = F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
     return emb.select(
-        F.col(id_col),
-        F.size(vec_col).cast("long").alias("dim"),
+        F.col("vec_id"),
+        F.size("embedding").cast("long").alias("dim"),
         F.round(F.sqrt(sumsq), 6).alias("l2_norm"),
         F.round(F.array_max(F.transform(v, F.abs)), 6).alias("max_abs"),
         F.size(F.filter(v, lambda x: x > 0)).cast("long").alias("n_pos"),
     )
 
 
-def srp_planes(n_bits: int = 16, dim: int = 64, seed: str = "srp") -> list[list[float]]:
+def srp_planes() -> list[list[float]]:
     """Deterministic signed-random-projection hyperplanes: component
     (b, d) derives from md5(seed:b:d) mapped to [-1, 1).  Model
-    constants (n_bits x dim floats) — computed once on the driver and
+    constants (16 x 64 floats) — computed once on the driver and
     inlined as literals on BOTH engines, like the k-means centroids."""
     import hashlib
 
     return [
         [
-            (int(hashlib.md5(f"{seed}:{b}:{d}".encode()).hexdigest()[:8], 16) / 2**32)
+            (int(hashlib.md5(f"srp:{b}:{d}".encode()).hexdigest()[:8], 16) / 2**32)
             * 2.0
             - 1.0
-            for d in range(dim)
+            for d in range(64)
         ]
-        for b in range(n_bits)
+        for b in range(16)
     ]
 
 
-def srp_fingerprint(
-    emb: DataFrame,
-    n_bits: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``n_bits``-bit SRP fingerprint per vector: bit b = sign of the
+def srp_fingerprint(emb: DataFrame) -> DataFrame:
+    """16-bit SRP fingerprint per vector: bit b = sign of the
     dot product with deterministic hyperplane b.  P(bits agree) =
     1 − θ/π for angle θ, so hamming distance estimates the angle —
     the cosine analogue of SimHash.  Pure per-row expression (zero
     shuffle), SINGLE traversal: the plane matrix is transposed into a
     per-dimension literal table, so one ``aggregate`` pass over the
-    vector accumulates all n_bits dots at once (``acc[b] += x·P[b][d]``
-    via ``zip_with``) instead of n_bits separate array walks.  Float
+    vector accumulates all 16 dots at once (``acc[b] += x·P[b][d]``
+    via ``zip_with``) instead of 16 separate array walks.  Float
     additions stay in dimension order 0..d-1 per dot — bit-identical
     to per-plane summation, so the SQL oracle's ``list_dot_product``
     reproduces it exactly."""
-    planes = srp_planes(n_bits=n_bits, dim=dim)
-    # transposed literal table: entry d = [P[0][d] .. P[n_bits-1][d]]
+    planes = srp_planes()
+    # transposed literal table: entry d = [P[0][d] .. P[15][d]]
     # (one expr call — the unrolled F.lit form cost ~3.9 s of py4j
     # per construction at 64×16, round-11 optimization pass)
     plane_cols = lit_double_matrix(
-        [[planes[b][d] for b in range(n_bits)] for d in range(dim)]
+        [[planes[b][d] for b in range(16)] for d in range(64)]
     )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     zipped = F.zip_with(v, plane_cols, lambda x, pc: F.struct(x.alias("x"), pc.alias("pc")))
     dots = F.aggregate(
         zipped,
-        F.array_repeat(F.lit(0.0), n_bits),
+        F.array_repeat(F.lit(0.0), 16),
         lambda acc, s: F.zip_with(acc, s["pc"], lambda a, p: a + s["x"] * p),
     )
-    powers = lit_long_array([1 << b for b in range(n_bits)])
+    powers = lit_long_array([1 << b for b in range(16)])
     packed = F.aggregate(
         F.zip_with(dots, powers, lambda d, p: F.when(d > 0, p).otherwise(F.lit(0).cast("long"))),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return emb.select(F.col(id_col), F.col(vec_col), packed.alias("srp"))
+    return emb.select(F.col("vec_id"), F.col("embedding"), packed.alias("srp"))
 
 
-def dedup_embedding_srp(
-    emb: DataFrame,
-    cos_threshold: float = 0.3,
-    n_bits: int = 16,
-    dim: int = 64,
-    max_bucket: int = 256,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def dedup_embedding_srp(emb: DataFrame, max_bucket: int = 256) -> DataFrame:
     """Embedding near-dup pairs via SRP-LSH banding — the cosine-space
     scale path that needs NO pre-existing blocking column (contrast
     ``dedup_embedding``'s grid cells / ``ann_ivf``'s fitted cells):
@@ -548,11 +501,11 @@ def dedup_embedding_srp(
     O(|bucket|) output) instead of being dropped, and the full vectors
     attaching exactly once, after the id-pair ``distinct()``, for the
     exact-cosine verify."""
-    sig = srp_fingerprint(emb, n_bits=n_bits, dim=dim, id_col=id_col, vec_col=vec_col)
-    half = n_bits // 2
+    sig = srp_fingerprint(emb)
+    half = 8
     mask = (1 << half) - 1
     bands = sig.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.posexplode(
             F.array(
                 F.col("srp").bitwiseAND(F.lit(mask)),
@@ -562,12 +515,12 @@ def dedup_embedding_srp(
     )
     buckets = (
         bands.groupBy("band", "bv")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_set("vec_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     cand = bucket_pairs(buckets, "ids", "vec_a", "vec_b", max_bucket).distinct()
-    va = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
+    va = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
+    vb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
     cos = cosine_similarity(
         F.transform("va", lambda x: x.cast("double")),
         F.transform("vb", lambda x: x.cast("double")),
@@ -576,16 +529,11 @@ def dedup_embedding_srp(
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
         .select("vec_a", "vec_b", F.round(cos, 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= cos_threshold)
+        .filter(F.col("cos_sim") >= 0.3)
     )
 
 
-def embedding_quantize(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-) -> DataFrame:
+def embedding_quantize(emb: DataFrame, dim: int | None = None) -> DataFrame:
     """Symmetric per-dimension int8 quantization of an embedding
     column — the 4× memory/IO compression an ANN index applies before
     serving (scalar quantization, the SQ8 baseline of the FAISS/IVF
@@ -598,35 +546,35 @@ def embedding_quantize(
     reaches the driver or the shuffle — at 100 TB the second pass is a
     pure map stage.
 
-    Returns ``id_col, qvec (array<int>), mae (double)``; all arithmetic
+    Returns ``vec_id, qvec (array<int>), mae (double)``; all arithmetic
     is double-precision in dimension order on both engines so the FP
     folds are bit-reproducible against the oracle.
     """
     if dim is None:
         # one-scalar schema probe (array length isn't in the schema);
         # same driver-side model-state exception as the k-means fit
-        dim = emb.select(F.size(vec_col).alias("n")).limit(1).collect()[0]["n"]
+        dim = emb.select(F.size("embedding").alias("n")).limit(1).collect()[0]["n"]
     # slice to dim so an explicit dim SHORTER than the stored vectors
     # truncates cleanly instead of null-poisoning qvec/mae (element_at
     # past the scales array returns NULL — round-5 advice)
-    v = F.slice(F.col(vec_col).cast("array<double>"), 1, dim)
+    v = F.slice(F.col("embedding").cast("array<double>"), 1, dim)
     # per-dim scales: d independent max aggregates in ONE pass, packed
     # with one expr parse (round 12 — agg_array_expr)
     scales = emb.agg(
         agg_array_expr(
-            f"max(abs(element_at(slice(cast(`{vec_col}` as array<double>),"
+            "max(abs(element_at(slice(cast(`embedding` as array<double>),"
             f" 1, {dim}), {{i}})))",
             dim,
         ).alias("scales")
     )
-    joined = emb.select(F.col(id_col), v.alias("v")).crossJoin(F.broadcast(scales))
+    joined = emb.select(F.col("vec_id"), v.alias("v")).crossJoin(F.broadcast(scales))
     s_at = lambda i: F.element_at("scales", i + F.lit(1))
     qexpr = F.transform(
         "v",
         lambda x, i: F.when(s_at(i) == 0.0, F.lit(0))
         .otherwise(F.round(x / s_at(i) * 127).cast("int")),
     )
-    with_q = joined.select(id_col, "v", "scales", qexpr.alias("qvec"))
+    with_q = joined.select("vec_id", "v", "scales", qexpr.alias("qvec"))
     errs = F.transform(
         "v",
         lambda x, i: F.abs(
@@ -637,15 +585,13 @@ def embedding_quantize(
         ),
     )
     mae = F.aggregate(errs, F.lit(0.0), lambda acc, e: acc + e) / F.lit(float(dim))
-    return with_q.select(id_col, "qvec", F.round(mae, 6).alias("mae"))
+    return with_q.select("vec_id", "qvec", F.round(mae, 6).alias("mae"))
 
 
 def ann_sq8(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Quantized-corpus ANN: brute-force top-k over int8-quantized
@@ -660,56 +606,48 @@ def ann_sq8(
     neighbor ASC).  The integer scores make the result engine-exact —
     no FP summation-order caveats anywhere.
 
-    ``queries`` must be a subset of ``emb`` (selected by ``id_col``):
+    ``queries`` must be a subset of ``emb`` (selected by ``vec_id``):
     both sides are quantized with the CORPUS scales — quantizing the
     query batch with its own max|x| would score in a different space.
     """
-    corpus = embedding_quantize(emb, vec_col=vec_col, id_col=id_col, dim=dim).select(
-        id_col, "qvec"
+    corpus = embedding_quantize(emb, dim=dim).select(
+        "vec_id", "qvec"
     )
     qside = corpus.join(
-        queries.select(id_col), id_col, "left_semi"
-    ).select(F.col(id_col).alias("query_id"), F.col("qvec").alias("q_qvec"))
+        queries.select("vec_id"), "vec_id", "left_semi"
+    ).select(F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec"))
     score = F.aggregate(
         F.zip_with("qvec", "q_qvec", lambda a, b: a * b),
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    scored = corpus.join(F.broadcast(qside), F.col(id_col) != F.col("query_id")).select(
+    scored = corpus.join(F.broadcast(qside), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         score.cast("long").alias("score"),
     )
     return _top_k(scored, k, "score")
 
 
-def pq_fit(
-    emb: DataFrame,
-    m: int = 4,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 8,
-    train_per_centroid: int = 256,
-) -> list[list[list[float]]]:
+def pq_fit(emb: DataFrame, m: int = 4, max_iter: int = 8) -> list[list[list[float]]]:
     """Product-quantization codebooks: split d dims into ``m`` disjoint
-    subspaces and fit ``n_codes`` centroids in EACH — m independent
-    (n_codes × d/m) codebooks, m·n_codes·d/m scalars total:
+    subspaces and fit 16 centroids in EACH — m independent
+    (16 × d/m) codebooks, m·16·d/m scalars total:
     driver-sized model state, the standard 100-TB ANN serving format
     (a code is m bytes where the vector was 4·d).
 
     Like :func:`kmeans_fit`, the m sub-fits train on ONE deterministic
-    sample of ``n_codes × train_per_centroid`` lowest-id-hash vectors
+    sample of ``16 × 256`` lowest-id-hash vectors
     (one TakeOrderedAndProject corpus pass, collected once) and run
     Lloyd on the driver in numpy — the previous cluster-side joint
-    loop was Catalyst-bound (re-analyzing m×n_codes literal-centroid
+    loop was Catalyst-bound (re-analyzing m×16 literal-centroid
     expression trees per iteration, ~5 s/iteration at m=8), not
     data-bound.  The corpus-wide pq_encode stays cluster-side.
     Determinism: id-hash sample order, argmin low-index ties, numpy
     double reductions in fixed sample order — repeated fits are
     bit-identical.
     """
-    probe = emb.select(F.size(vec_col).alias("n")).limit(1).collect()
+    probe = emb.select(F.size("embedding").alias("n")).limit(1).collect()
     if not probe or probe[0]["n"] is None:
         # empty corpus: m one-code dim-1 placeholder books — encode
         # expressions shaped from them never evaluate over zero rows
@@ -719,18 +657,13 @@ def pq_fit(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     ds = dim // m
-    X = _train_sample(emb, id_col, vec_col, n_codes * train_per_centroid)
+    X = _train_sample(emb, "vec_id", "embedding", 16 * 256)
     if X is None:
         return [[[0.0] * ds] for _ in range(m)]
-    return [_lloyd(X[:, j * ds : (j + 1) * ds], n_codes, max_iter) for j in range(m)]
+    return [_lloyd(X[:, j * ds : (j + 1) * ds], 16, max_iter) for j in range(m)]
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Encode each vector as ``m`` sub-codes + its reconstruction
     norm²: (id, codes array<int>, rnorm2).
 
@@ -740,7 +673,7 @@ def pq_encode(
     a literal table lookup (pure map stage, no shuffle).
     """
     ds = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     # one transform over the literal m×n_codes×ds cube, not m unrolled
     # _nearest_cell branches (round-11 optimization pass: the unrolled
     # form built the codebook literals through per-element py4j calls
@@ -754,13 +687,13 @@ def pq_encode(
     norms_lit = lit_double_matrix(
         [[float(sum(x * x for x in c)) for c in book] for book in codebooks]
     )
-    coded = emb.select(F.col(id_col), codes.alias("codes"))
+    coded = emb.select(F.col("vec_id"), codes.alias("codes"))
     rnorm2 = F.aggregate(
         F.zip_with("codes", norms_lit, lambda c, tbl: F.element_at(tbl, c + F.lit(1))),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    return coded.select(F.col(id_col), "codes", rnorm2.alias("rnorm2"))
+    return coded.select(F.col("vec_id"), "codes", rnorm2.alias("rnorm2"))
 
 
 def _pq_search(
@@ -831,34 +764,24 @@ def _pq_search(
     return _top_k(exact, k)
 
 
-def ann_pq(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 16,
-    rerank: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 4,
-) -> DataFrame:
+def ann_pq(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Product-quantization ANN with ADC scoring and exact re-rank —
     the natural upgrade of :func:`ann_sq8` and the standard serving
     shape for 100-TB vector corpora (FAISS IVF-PQ's PQ half).
 
     Two stages:
-      * ADC shortlist: each query precomputes an m×n_codes lookup
+      * ADC shortlist: each query precomputes an m×16 lookup
         table of subspace dot products against the codebooks (a pure
         expression on the broadcast query side), then every corpus
         CODE row scores with m table lookups — the scan reads m bytes
         per vector instead of 4·d, the 64×-compression advantage that
         makes exhaustive candidate generation affordable; top
-        ``k·rerank`` survive per query (window, total tiebreak).
+        ``k·16`` survive per query (window, total tiebreak).
         Approximate cosine = ADC dot / (‖q‖·‖x̂‖) with the exact
         reconstruction norm from :func:`pq_encode`.
-      * exact re-rank: the shortlist (|Q|·k·rerank rows) equi-joins
+      * exact re-rank: the shortlist (|Q|·k·16 rows) equi-joins
         the true vectors by id and re-scores with exact cosine — the
-        recall knob is ``rerank``, the cost knob is that only the
+        recall knob is the re-rank factor 16, the cost knob is that only the
         shortlist ever touches full-precision floats.
 
     Output schema/tiebreak matches ann_bruteforce: (query_id,
@@ -867,30 +790,20 @@ def ann_pq(
 
     Default knobs are tuned for the synthetic ISOTROPIC unit vectors
     (like the IVF tests note, label/geometry carry no cluster
-    structure, so recall ~ shortlist fraction and ``rerank`` must be
+    structure, so recall ~ shortlist fraction and the re-rank factor must be
     generous); real clustered corpora reach the same recall with far
     smaller shortlists.
     """
-    books = pq_fit(emb, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
-    enc = pq_encode(emb, books, id_col=id_col, vec_col=vec_col)
-    return _pq_search(emb, enc, queries, books, k, rerank, id_col, vec_col)
+    books = pq_fit(emb, m=8, max_iter=4)
+    enc = pq_encode(emb, books)
+    return _pq_search(
+        emb, enc, queries, books, k=5, rerank=16, id_col="vec_id", vec_col="embedding"
+    )
 
 
-def ann_ivfpq(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 8,
-    nprobe: int = 6,
-    m: int = 8,
-    n_codes: int = 16,
-    rerank: int = 24,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 4,
-) -> DataFrame:
+def ann_ivfpq(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF + PQ composed — the full serving ladder: a coarse k-means
-    quantizer PRUNES (equi-join on the query's ``nprobe`` nearest
+    quantizer PRUNES (equi-join on the query's 6 nearest
     cells), PQ-ADC SCORES only the surviving m-byte codes, and the
     exact re-rank touches only the shortlist's full-precision vectors.
     At 100 TB this is the standard vector-serving layout: cell id as a
@@ -904,29 +817,23 @@ def ann_ivfpq(
     quality knob on the same plan shape, not a different plan.
 
     Both models are the existing deterministic fits; candidates per
-    query ≈ |corpus|·nprobe/n_cells, ADC cost is m lookups per
-    candidate, re-rank cost k·rerank exact cosines.  Output matches
+    query ≈ |corpus|·6/8, ADC cost is m lookups per
+    candidate, re-rank cost k·24 exact cosines.  Output matches
     ann_bruteforce.  Recall compounds BOTH prune and quantization
     losses, so the isotropic-data defaults are generous (see ann_pq).
     """
-    centroids = kmeans_fit(emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
-    books = pq_fit(emb, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col, max_iter=max_iter)
-    enc = pq_encode(emb, books, id_col=id_col, vec_col=vec_col).join(
-        assign_cells(emb, centroids, id_col, vec_col).select(id_col, "cell"), id_col
+    centroids = kmeans_fit(emb, k=8, max_iter=4)
+    books = pq_fit(emb, m=8, max_iter=4)
+    enc = pq_encode(emb, books).join(
+        assign_cells(emb, centroids).select("vec_id", "cell"), "vec_id"
     )
     return _pq_search(
-        emb, enc, queries, books, k, rerank, id_col, vec_col, centroids, nprobe
+        emb, enc, queries, books, k=5, rerank=24, id_col="vec_id", vec_col="embedding",
+        centroids=centroids, nprobe=6,
     )
 
 
-def hard_negatives(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Contrastive hard-negative mining: for each query vector, the
     top-``k`` most-similar corpus vectors with a DIFFERENT label — the
     pairs that sit closest to the decision boundary, which is exactly
@@ -942,22 +849,15 @@ def hard_negatives(
     Returns (query_id, neighbor_id, neighbor_label, cos_sim),
     tiebroken (sim DESC, neighbor ASC) for determinism.
     """
-    corpus = _prep(emb, id_col, vec_col, extra=[label_col])
+    corpus = _prep(emb, "vec_id", "embedding", extra=["label"])
     q = _query_side(
-        queries, id_col, vec_col, F.col(label_col).alias("qlabel"), extra=[label_col]
+        queries, "vec_id", "embedding", F.col("label").alias("qlabel"), extra=["label"]
     )
-    pairs = corpus.join(F.broadcast(q), F.col(label_col) != F.col("qlabel"))
-    return _top_k(_cos_scored(pairs, id_col, F.col(label_col).alias("neighbor_label")), k)
+    pairs = corpus.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
+    return _top_k(_cos_scored(pairs, "vec_id", F.col("label").alias("neighbor_label")), k)
 
 
-def ann_recall_report(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-) -> DataFrame:
+def ann_recall_report(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Recall audit of the IVF index against exact brute force — the
     measurement every ANN deployment runs before trusting its index
     (an index whose recall silently degrades poisons every downstream
@@ -970,12 +870,11 @@ def ann_recall_report(
     sides share the corpus scan; the overlap join is per-query
     k-bounded.
     """
-    bf = ann_bruteforce(emb, queries, k=k, id_col=id_col, vec_col=vec_col).select(
+    bf = ann_bruteforce(emb, queries, k=5).select(
         "query_id", F.col("neighbor_id").alias("bf_id")
     )
     ivf = ann_ivf(
-        emb, queries, k=k, id_col=id_col, vec_col=vec_col, cell_col=cell_col
-    ).select("query_id", F.col("neighbor_id").alias("ivf_id"))
+        emb, queries).select("query_id", F.col("neighbor_id").alias("ivf_id"))
     hits = (
         bf.join(ivf, (bf["query_id"] == ivf["query_id"]) & (F.col("bf_id") == F.col("ivf_id")))
         .groupBy(bf["query_id"].alias("query_id"))
@@ -1072,13 +971,7 @@ def embedding_dim_stats(
     )
 
 
-def embedding_outliers(
-    emb: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def embedding_outliers(emb: DataFrame, k: int = 5) -> DataFrame:
     """Embedding-space outlier detection: per label, the ``k`` vectors
     farthest (L2) from their class centroid — mislabeled or off-
     distribution examples, the embedding-side analog of quality_gate.
@@ -1097,10 +990,10 @@ def embedding_outliers(
 
     Returns ``label, vec_id, dist, rk`` (dist 6-dp rounded).
     """
-    v = _prep(emb, id_col, vec_col, extra=[label_col])
+    v = _prep(emb, "vec_id", "embedding", extra=["label"])
     comps = (
-        v.select(label_col, F.posexplode("v").alias("pos", "val"))
-        .groupBy(label_col, "pos")
+        v.select("label", F.posexplode("v").alias("pos", "val"))
+        .groupBy("label", "pos")
         .agg(
             F.sum(F.round(F.col("val") * 1e6).cast("long")).alias("s"),
             F.count(F.lit(1)).alias("n"),
@@ -1108,11 +1001,11 @@ def embedding_outliers(
     )
     cent = (
         comps.select(
-            label_col, "pos", (F.col("s") / 1e6 / F.col("n")).alias("c")
+            "label", "pos", (F.col("s") / 1e6 / F.col("n")).alias("c")
         )
-        .groupBy(label_col)
+        .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(label_col, F.transform("pc", lambda x: x["c"]).alias("cv"))
+        .select("label", F.transform("pc", lambda x: x["c"]).alias("cv"))
     )
     dist = F.sqrt(
         F.aggregate(
@@ -1121,23 +1014,19 @@ def embedding_outliers(
             lambda acc, x: acc + x,
         )
     )
-    scored = v.join(F.broadcast(cent), label_col).select(
-        label_col, F.col(id_col), F.round(dist, 6).alias("dist")
+    scored = v.join(F.broadcast(cent), "label").select(
+        "label", F.col("vec_id"), F.round(dist, 6).alias("dist")
     )
-    return top_k_per(scored, [label_col], k, F.desc("dist"), F.asc(id_col))
+    return top_k_per(scored, ["label"], k, F.desc("dist"), F.asc("vec_id"))
 
 
 def dedup_semantic(
     emb: DataFrame,
     threshold: float = 0.95,
     n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 4,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al.): fit a k-means
-    quantizer, block the corpus by its ``n_probe`` nearest cells, and
+    quantizer, block the corpus by its 2 nearest cells, and
     emit blocked pairs with cosine ≥ ``threshold`` — the curation step
     that removes semantically-redundant documents a text-level
     near-dup pass cannot see.  Callers chain
@@ -1151,7 +1040,7 @@ def dedup_semantic(
     happens on (id,id) BEFORE vectors re-attach, so the multi-probe
     fan-out ships integers only.  Like every clustering-blocked
     dedup, pairs whose probe sets never intersect are MISSED by
-    design — recall/cost knobs are n_cells and n_probe (the paper
+    design — recall/cost knobs are n_cells and the 2 probed cells (the paper
     dedups within k=50k clusters at web scale; multi-probe recovers
     boundary-straddling pairs); the pytest pins recall vs the exact
     all-pairs truth set on the test corpus.
@@ -1161,27 +1050,27 @@ def dedup_semantic(
     other fitted-quantizer ops.
     """
     centroids = kmeans_fit(
-        emb, k=n_cells, id_col=id_col, vec_col=vec_col, max_iter=max_iter
+        emb, k=n_cells, max_iter=4
     )
-    base = _prep(emb, id_col, vec_col)
-    probes = base.select(F.col(id_col), _probe_cells(F.col("v"), centroids, n_probe))
+    base = _prep(emb, "vec_id", "embedding")
+    probes = base.select(F.col("vec_id"), _probe_cells(F.col("v"), centroids, 2))
     a, b = probes.alias("a"), probes.alias("b")
     pairs = (
         a.join(b, "cell")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
         )
         .distinct()
     )
-    vecs = base.select(id_col, "v")
+    vecs = base.select("vec_id", "v")
     return (
         pairs.join(
-            vecs.select(F.col(id_col).alias("vec_a"), F.col("v").alias("va")), "vec_a"
+            vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va")), "vec_a"
         )
         .join(
-            vecs.select(F.col(id_col).alias("vec_b"), F.col("v").alias("vb")), "vec_b"
+            vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb")), "vec_b"
         )
         .select(
             "vec_a",
@@ -1196,11 +1085,6 @@ def dedup_semantic_pipeline(
     emb: DataFrame,
     threshold: float = 0.95,
     n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 4,
-    cc_max_iter: int = 20,
 ) -> DataFrame:
     """End-to-end SemDeDup: :func:`dedup_semantic` candidate pairs →
     connected components → min-id representative election — the
@@ -1218,40 +1102,33 @@ def dedup_semantic_pipeline(
     """
     from .graph import connected_components
 
-    pairs = dedup_semantic(
-        emb, threshold, n_cells, n_probe, id_col, vec_col, max_iter
-    )
+    pairs = dedup_semantic(emb, threshold, n_cells)
     labels = connected_components(
-        pairs, src="vec_a", dst="vec_b", max_iter=cc_max_iter
-    ).select(F.col("doc_id").alias(id_col), "cluster_id")
+        pairs, src="vec_a", dst="vec_b", max_iter=20
+    ).select(F.col("doc_id").alias("vec_id"), "cluster_id")
     clus = (
-        emb.select(F.col(id_col))
-        .join(labels, id_col, "left")
+        emb.select(F.col("vec_id"))
+        .join(labels, "vec_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
+            F.col("vec_id"),
+            F.coalesce("cluster_id", F.col("vec_id")).alias("cluster_id"),
         )
     )
     sizes = clus.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_cluster")
     )
     return clus.join(sizes, "cluster_id").select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("cluster_id"),
         F.col("n_cluster"),
-        (F.col(id_col) == F.col("cluster_id")).cast("int").alias("keep"),
+        (F.col("vec_id") == F.col("cluster_id")).cast("int").alias("keep"),
     )
 
 
-def rp_project_audit(
-    emb: DataFrame,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def rp_project_audit(emb: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss random-projection audit — the
     dimensionality-reduction step an embedding pipeline takes before
-    sharding an index, VALIDATED the way JL promises: project d→``k``
+    sharding an index, VALIDATED the way JL promises: project d→16
     with a deterministic ±1/√k sign matrix and report, per adjacent
     id pair, original vs projected L2 distance and the distortion
     ``|d_proj/d_orig − 1|``.  Aggregate the distortion column to
@@ -1274,12 +1151,12 @@ def rp_project_audit(
     """
     import hashlib
 
-    base = _prep(emb, id_col, vec_col)
+    base = _prep(emb, "vec_id", "embedding")
     # empty corpus: dim-1 placeholder — the sign-matrix literals shaped
     # from it never evaluate over zero rows (schema-stable empty)
     head = base.select("v").first()
     d = len(head["v"]) if head is not None and head["v"] is not None else 1
-    inv_sqrt_k = 1.0 / (k ** 0.5)
+    inv_sqrt_k = 1.0 / (16 ** 0.5)
     # content-addressed ±1 signs, identical to the oracle's md5 rule
     signs = [
         [
@@ -1287,7 +1164,7 @@ def rp_project_audit(
             else -1.0
             for i in range(d)
         ]
-        for j in range(k)
+        for j in range(16)
     ]
     signs_mat = lit_double_matrix(signs)
     proj = F.array(
@@ -1302,16 +1179,16 @@ def rp_project_audit(
                 lambda acc, t: acc + t,
             )
             * inv_sqrt_k
-            for j in range(k)
+            for j in range(16)
         ]
     )
-    pv = base.select(F.col(id_col), F.col("v"), proj.alias("y"))
+    pv = base.select(F.col("vec_id"), F.col("v"), proj.alias("y"))
     a = pv.select(
-        F.col(id_col).alias("vec_a"), F.col("v").alias("va"), F.col("y").alias("ya")
+        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("y").alias("ya")
     )
     b = pv.select(
-        (F.col(id_col) - 1).alias("vec_a"),
-        F.col(id_col).alias("vec_b"),
+        (F.col("vec_id") - 1).alias("vec_a"),
+        F.col("vec_id").alias("vec_b"),
         F.col("v").alias("vb"),
         F.col("y").alias("yb"),
     )
@@ -1340,9 +1217,6 @@ def mmr_diversify(
     query_id: int = 0,
     shortlist: int = 32,
     k: int = 8,
-    lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell/Goldstein):
     from the cosine top-``shortlist`` of ``query_id``, greedily pick
@@ -1370,14 +1244,13 @@ def mmr_diversify(
     import numpy as np
 
     short = ann_bruteforce(
-        emb, emb.filter(F.col(id_col) == query_id), k=shortlist,
-        id_col=id_col, vec_col=vec_col,
+        emb, emb.filter(F.col("vec_id") == query_id), k=shortlist,
     ).select(F.col("neighbor_id").alias("_id"), "cos_sim").filter(
         # zero-norm vectors score NULL cosine (undefined): they cannot
         # be ranked, so they never enter the greedy shortlist
         F.col("cos_sim").isNotNull()
     )
-    vecs = _prep(emb, id_col, vec_col).withColumnRenamed(id_col, "_id")
+    vecs = _prep(emb, "vec_id", "embedding").withColumnRenamed("vec_id", "_id")
     rows = (
         short.join(vecs, "_id")
         .orderBy(F.desc("cos_sim"), F.asc("_id"))
@@ -1404,7 +1277,7 @@ def mmr_diversify(
         best_i, best_obj = None, None
         for i in remaining:
             penalty = max((sims[i][j] for j in selected), default=0.0)
-            obj = lam * rel[i] - (1.0 - lam) * penalty
+            obj = 0.7 * rel[i] - (1.0 - 0.7) * penalty
             # strict > keeps the earliest (lowest-id, shortlist order)
             # candidate on ties
             if best_obj is None or obj > best_obj:
@@ -1417,12 +1290,7 @@ def mmr_diversify(
     )
 
 
-def embedding_centroids(
-    emb: DataFrame,
-    dim: int | None = None,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_centroids(emb: DataFrame, dim: int | None = None) -> DataFrame:
     """Per-label centroid profile of an embedding table — the cluster
     summary consumed by SemDeDup-style pruning, IVF coarse-quantizer
     seeding, and domain-drift dashboards (compare this month's source
@@ -1439,35 +1307,31 @@ def embedding_centroids(
     Returns (label, dim (1-based), n, centroid) ordered by (label, dim).
     """
     if dim is None:
-        dim = _infer_dim(emb, vec_col)
+        dim = _infer_dim(emb, "embedding")
     # n must count the rows the sums actually saw: a NULL/short vector
     # contributes nothing to Σxᵢ, and counting it would silently treat
     # it as the zero vector (biased centroid, oracle divergence)
     agg = (
-        emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim))
-        .groupBy(label_col)
+        emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") >= dim))
+        .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            agg_array_expr(f"sum({_xm_sql(vec_col, dim)})", dim).alias("s"),
+            agg_array_expr(f"sum({_xm_sql('embedding', dim)})", dim).alias("s"),
         )
     )
     return agg.select(
-        F.col(label_col),
+        F.col("label"),
         "n",
         F.posexplode("s").alias("i", "sm"),
     ).select(
-        F.col(label_col),
+        F.col("label"),
         (F.col("i") + 1).cast("long").alias("dim"),
         F.col("n").cast("long").alias("n"),
         F.round(F.col("sm") / F.col("n") / 1e6, 6).alias("centroid"),
-    ).orderBy(label_col, "dim")
+    ).orderBy("label", "dim")
 
 
-def embedding_covariance(
-    emb: DataFrame,
-    dim: int | None = None,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_covariance(emb: DataFrame, dim: int | None = None) -> DataFrame:
     """Exact d×d covariance matrix of an embedding column, computed
     the way a 100 TB vector table demands: per-Arrow-batch integer
     Gram products (numpy ``X.T @ X`` — BLAS inside each partition, d²
@@ -1497,13 +1361,13 @@ def embedding_covariance(
     import pandas as pd
 
     if dim is None:
-        dim = _infer_dim(emb, vec_col)
-    v = F.slice(F.col(vec_col).cast("array<double>"), 1, dim)
+        dim = _infer_dim(emb, "embedding")
+    v = F.slice(F.col("embedding").cast("array<double>"), 1, dim)
     # NULL/short vectors cannot contribute a full row to the Gram —
     # drop them up front (list(None) would crash the Arrow worker,
     # ragged arrays would break the int64 matmul)
     milli = emb.filter(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim)
+        F.col("embedding").isNotNull() & (F.size("embedding") >= dim)
     ).select(F.transform(v, lambda x: F.round(x * 1e3).cast("long")).alias("xm"))
 
     def gram(batches):
@@ -1557,13 +1421,7 @@ def embedding_covariance(
     ).orderBy("i", "j")
 
 
-def pca_project(
-    emb: DataFrame,
-    k: int = 4,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pca_project(emb: DataFrame, k: int = 4) -> DataFrame:
     """Project embeddings onto their top-``k`` principal components —
     the dimensionality-reduction pass in front of cheap clustering,
     visualization, and drift monitors over a 100 TB vector corpus.
@@ -1587,9 +1445,8 @@ def pca_project(
     """
     import numpy as np
 
-    if dim is None:
-        dim = _infer_dim(emb, vec_col)
-    cov_rows = embedding_covariance(emb, dim=dim, vec_col=vec_col).collect()
+    dim = _infer_dim(emb, "embedding")
+    cov_rows = embedding_covariance(emb, dim=dim).collect()
     C = np.zeros((dim, dim), dtype=np.float64)
     for r in cov_rows:  # d² driver rows — model-sized, not data-sized
         if r["cov"] is None:
@@ -1609,7 +1466,7 @@ def pca_project(
     # centroid (for mean-centering) from the same exact integer sums
     m = emb.agg(
         F.count(F.lit(1)).alias("n"),
-        agg_array_expr(f"sum({_xm_sql(vec_col, dim)})", dim).alias("s"),
+        agg_array_expr(f"sum({_xm_sql('embedding', dim)})", dim).alias("s"),
     ).collect()[0]
     # empty corpus: zero mean — the projection expressions shaped from
     # it never evaluate over zero rows (schema-stable empty output)
@@ -1618,7 +1475,7 @@ def pca_project(
     else:
         mean = [m["s"][i] / m["n"] / 1e6 for i in range(dim)]
 
-    v = F.slice(F.col(vec_col).cast("array<double>"), 1, dim)
+    v = F.slice(F.col("embedding").cast("array<double>"), 1, dim)
     centered = F.zip_with(
         v, lit_double_array(mean), lambda x, mu: x - mu
     )
@@ -1633,18 +1490,13 @@ def pca_project(
             F.struct(F.lit(p).cast("long").alias("pc"), F.round(score, 6).alias("score"))
         )
     return (
-        emb.select(F.col(id_col), F.explode(F.array(*rows)).alias("z"))
-        .select(id_col, F.col("z.pc").alias("pc"), F.col("z.score").alias("score"))
-        .orderBy(id_col, "pc")
+        emb.select(F.col("vec_id"), F.explode(F.array(*rows)).alias("z"))
+        .select("vec_id", F.col("z.pc").alias("pc"), F.col("z.score").alias("score"))
+        .orderBy("vec_id", "pc")
     )
 
 
-def centroid_cosine_matrix(
-    emb: DataFrame,
-    dim: int | None = None,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_cosine_matrix(emb: DataFrame, dim: int | None = None) -> DataFrame:
     """Label×label cosine similarity of class centroids — the
     embedding-space confusion map (which classes' regions overlap),
     read before trusting :func:`hard_negatives`' labels or SemDeDup's
@@ -1666,13 +1518,13 @@ def centroid_cosine_matrix(
     rows.  Returns ``(label_a, label_b, n_a, n_b, cosine)``.
     """
     if dim is None:
-        dim = _infer_dim(emb, vec_col)
+        dim = _infer_dim(emb, "embedding")
     per = (
-        emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim))
-        .groupBy(F.col(label_col).alias("lbl"))
+        emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") >= dim))
+        .groupBy(F.col("label").alias("lbl"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            agg_array_expr(f"sum({_xm_sql(vec_col, dim)})", dim).alias("s"),
+            agg_array_expr(f"sum({_xm_sql('embedding', dim)})", dim).alias("s"),
         )
     )
     packed = per.groupBy().agg(
@@ -1717,18 +1569,11 @@ def centroid_cosine_matrix(
     )
 
 
-def contamination_embedding(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    holdout_mod: int = 10,
-    threshold: float = 0.3,
-) -> DataFrame:
+def contamination_embedding(emb: DataFrame, threshold: float = 0.3) -> DataFrame:
     """Embedding-level test-set decontamination — the semantic sibling
     of the n-gram :func:`~..operators.dedup.contamination` screens:
     which TRAINING vectors sit within cosine ``threshold`` of any
-    held-out eval vector (``id % holdout_mod == 0``)?  n-gram overlap
+    held-out eval vector (``id % 10 == 0``)?  n-gram overlap
     misses paraphrases; embedding cosine is the screen that catches a
     benchmark answer reworded into the training set (the SemDeDup /
     data-contamination literature's standard second pass).
@@ -1738,7 +1583,7 @@ def contamination_embedding(
     or down-weight.  Cosines round to 6 dp before the threshold so
     both engines agree at the boundary.
 
-    Scale shape: the same ``block_col`` equi-join discipline as
+    Scale shape: the same ``label`` equi-join discipline as
     :func:`~..operators.dedup.dedup_embedding_cosine` — the
     train×eval comparison runs per coarse-quantizer cell, never n².
     At 100 TB the blocking column is the fitted IVF cell
@@ -1747,12 +1592,12 @@ def contamination_embedding(
     groupBy(train id) is the only row-scale shuffle.
     """
     e = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(block_col).alias("blk"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("vid"),
+        F.col("label").alias("blk"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
-    test = e.filter(F.col("vid") % holdout_mod == 0)
-    train = e.filter(F.col("vid") % holdout_mod != 0)
+    test = e.filter(F.col("vid") % 10 == 0)
+    train = e.filter(F.col("vid") % 10 != 0)
     cos = F.round(cosine_similarity(F.col("t.v"), F.col("q.v")), 6)
     hits = (
         train.alias("t")

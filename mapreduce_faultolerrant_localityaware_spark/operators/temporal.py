@@ -97,23 +97,16 @@ def range_join(
     value: Column | str,
     lo: str,
     hi: str,
-    how: str = "inner",
 ) -> DataFrame:
     """Join a fact table to a (small) interval dimension on
     ``lo <= value < hi``. The bands side is broadcast — the fact table
     never shuffles and the predicate runs map-side."""
     v = F.col(value) if isinstance(value, str) else value
     cond = (v >= bands[lo]) & (v < bands[hi])
-    return fact.join(F.broadcast(bands), cond, how)
+    return fact.join(F.broadcast(bands), cond, "inner")
 
 
-def resample_ffill(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    unit: str = "hour",
-) -> DataFrame:
+def resample_ffill(events: DataFrame) -> DataFrame:
     """Resample an irregular event stream onto a regular per-key time
     grid with forward-fill — the gap-filling step before any
     fixed-step time-series model.
@@ -128,41 +121,32 @@ def resample_ffill(
     range); the fill window sorts each key's buckets once —
     per-key-bounded, no global sort, no cross product.
     """
-    bucket = F.date_trunc(unit, F.col(ts_col))
-    per = events.groupBy(F.col(key_col), bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n"), F.sum(value_col).alias("v")
+    bucket = F.date_trunc("hour", F.col("ts"))
+    per = events.groupBy(F.col("user_id"), bucket.alias("bucket")).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
     )
-    bounds = per.groupBy(key_col).agg(
+    bounds = per.groupBy("user_id").agg(
         F.min("bucket").alias("mn"), F.max("bucket").alias("mx")
     )
     grid = bounds.select(
-        key_col,
-        F.explode(F.sequence("mn", "mx", F.expr(f"INTERVAL 1 {unit.upper()}"))).alias(
-            "bucket"
-        ),
+        "user_id",
+        F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))).alias("bucket"),
     )
-    j = grid.join(per, [key_col, "bucket"], "left")
+    j = grid.join(per, ["user_id", "bucket"], "left")
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return j.select(
-        key_col,
+        "user_id",
         F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket"),
         F.coalesce("n", F.lit(0)).alias("n_events"),
         F.round(F.last("v", ignorenulls=True).over(w), 6).alias("v_filled"),
     )
 
 
-def resample_ohlc(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    unit: str = "day",
-) -> DataFrame:
+def resample_ohlc(events: DataFrame) -> DataFrame:
     """Time-bucket downsampling to open/high/low/close + count — the
     canonical numeric-series summarization (finance bars, sensor
     rollups, metric downsampling before retention).
@@ -176,15 +160,15 @@ def resample_ohlc(
     all that moves regardless of corpus size (a window/first-last
     formulation would shuffle every event row instead).
     """
-    bucket = F.date_trunc(unit, F.col(ts_col))
+    bucket = F.date_trunc("day", F.col("ts"))
     s = F.struct(
-        F.col(ts_col).alias("ts"), F.col(id_col).alias("eid"), F.col(value_col).alias("v")
+        F.col("ts").alias("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
     )
-    return events.groupBy(F.col(key_col), bucket.alias("bucket")).agg(
+    return events.groupBy(F.col("user_id"), bucket.alias("bucket")).agg(
         F.round(F.min(s)["v"], 6).alias("open"),
         F.round(F.max(s)["v"], 6).alias("close"),
-        F.round(F.min(value_col), 6).alias("low"),
-        F.round(F.max(value_col), 6).alias("high"),
+        F.round(F.min("value"), 6).alias("low"),
+        F.round(F.max("value"), 6).alias("high"),
         F.count(F.lit(1)).cast("long").alias("n_events"),
     )
 
@@ -192,7 +176,6 @@ def resample_ohlc(
 def scd2_intervals(
     updates: DataFrame,
     key_col: str,
-    ts_col: str = "ts",
     attr_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Slowly-changing-dimension type-2 history: turn a stream of
@@ -212,24 +195,19 @@ def scd2_intervals(
 
     attrs = [F.col(c) for c in attr_cols]
     w = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).asc(), F.struct(*attrs).asc() if attrs else F.lit(1)
+        F.col("ts").asc(), F.struct(*attrs).asc() if attrs else F.lit(1)
     )
-    nxt = F.lead(ts_col).over(w)
+    nxt = F.lead("ts").over(w)
     return updates.select(
         F.col(key_col),
-        F.col(ts_col).alias("valid_from"),
+        F.col("ts").alias("valid_from"),
         nxt.alias("valid_to"),
         nxt.isNull().alias("is_current"),
         *attrs,
     )
 
 
-def interval_merge(
-    intervals: DataFrame,
-    key_col: str = "user_id",
-    start_col: str = "s",
-    end_col: str = "e",
-) -> DataFrame:
+def interval_merge(intervals: DataFrame) -> DataFrame:
     """Merge overlapping/touching intervals per key — the classic
     gaps-and-islands coalesce (session stitching, validity-range
     compaction, on-call coverage): intervals sort by start within the
@@ -244,36 +222,30 @@ def interval_merge(
     Interval arithmetic is integer (caller supplies epoch-micro
     longs), so the oracle comparison is exact.
 
-    Returns ``key_col, island (long), s, e, n_merged`` — one row per
+    Returns ``user_id, island (long), s, e, n_merged`` — one row per
     merged interval.
     """
-    order = [F.asc(start_col), F.asc(end_col)]
-    w = Window.partitionBy(key_col).orderBy(*order)
+    order = [F.asc("s"), F.asc("e")]
+    w = Window.partitionBy("user_id").orderBy(*order)
     # running max of END over all PRIOR rows (exclude current)
-    prev_max_end = F.max(end_col).over(
+    prev_max_end = F.max("e").over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     new_island = F.when(
-        prev_max_end.isNull() | (F.col(start_col) > prev_max_end), 1
+        prev_max_end.isNull() | (F.col("s") > prev_max_end), 1
     ).otherwise(0)
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     with_island = intervals.withColumn(
         "island", F.sum(new_island).over(run).cast("long")
     )
-    return with_island.groupBy(key_col, "island").agg(
-        F.min(start_col).alias(start_col),
-        F.max(end_col).alias(end_col),
+    return with_island.groupBy("user_id", "island").agg(
+        F.min("s").alias("s"),
+        F.max("e").alias("e"),
         F.count(F.lit(1)).cast("long").alias("n_merged"),
     )
 
 
-def decayed_sum(
-    events: DataFrame,
-    half_life_hours: float = 24.0,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def decayed_sum(events: DataFrame) -> DataFrame:
     """Exponentially time-decayed per-key aggregation — the
     recency-weighted engagement/feature score every ranking and
     feature-store pipeline computes: each event contributes
@@ -290,15 +262,15 @@ def decayed_sum(
     aggregation is ONE map-side-combined groupBy(key).  Returns
     ``key, n_events, decayed_value`` (6 dp).
     """
-    anchor = events.agg(F.max(ts_col).alias("_anchor"))
-    age_h = (F.unix_micros(F.col("_anchor")) - F.unix_micros(F.col(ts_col))) / 3.6e9
+    anchor = events.agg(F.max("ts").alias("_anchor"))
+    age_h = (F.unix_micros(F.col("_anchor")) - F.unix_micros(F.col("ts"))) / 3.6e9
     contrib = F.round(
-        F.col(value_col) * F.pow(F.lit(0.5), age_h / half_life_hours) * 1e6
+        F.col("value") * F.pow(F.lit(0.5), age_h / 24.0) * 1e6
     ).cast("long")
     return (
         events.crossJoin(F.broadcast(anchor))
-        .select(F.col(key_col), contrib.alias("c"))
-        .groupBy(key_col)
+        .select(F.col("user_id"), contrib.alias("c"))
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.round(F.sum("c") / 1e6, 6).alias("decayed_value"),
@@ -306,13 +278,7 @@ def decayed_sum(
     )
 
 
-def resample_interp(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    unit: str = "hour",
-) -> DataFrame:
+def resample_interp(events: DataFrame) -> DataFrame:
     """Resample onto a regular per-key grid with LINEAR INTERPOLATION —
     the gap-fill a numeric sensor/metric series wants where
     :func:`resample_ffill` would step: a missing bucket gets
@@ -331,28 +297,26 @@ def resample_interp(
     frames over one per-key sort (Spark evaluates the preceding and
     following frames in one window stage).
     """
-    bucket = F.date_trunc(unit, F.col(ts_col))
-    per = events.groupBy(F.col(key_col), bucket.alias("bucket")).agg(
+    bucket = F.date_trunc("hour", F.col("ts"))
+    per = events.groupBy(F.col("user_id"), bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col(value_col) * 1e6).cast("long")).alias("vm"),
+        F.sum(F.round(F.col("value") * 1e6).cast("long")).alias("vm"),
     )
-    bounds = per.groupBy(key_col).agg(
+    bounds = per.groupBy("user_id").agg(
         F.min("bucket").alias("mn"), F.max("bucket").alias("mx")
     )
     grid = bounds.select(
-        key_col,
-        F.explode(F.sequence("mn", "mx", F.expr(f"INTERVAL 1 {unit.upper()}"))).alias(
-            "bucket"
-        ),
+        "user_id",
+        F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))).alias("bucket"),
     )
-    j = grid.join(per, [key_col, "bucket"], "left")
+    j = grid.join(per, ["user_id", "bucket"], "left")
     wb = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     wf = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
@@ -376,7 +340,7 @@ def resample_interp(
     # round's HALF_UP diverges between engines on the binary double —
     # round-to-int first is exact-half-aware on both (away from zero)
     return j.select(
-        key_col,
+        "user_id",
         F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket"),
         F.coalesce("n", F.lit(0)).cast("long").alias("n_events"),
         (F.col("vm").isNotNull()).cast("int").alias("observed"),
@@ -388,8 +352,6 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     payload: Sequence[str] | None = None,
 ) -> DataFrame:
     """Nearest-in-time as-of join: each left row takes whichever of
@@ -409,17 +371,17 @@ def asof_join_nearest(
     payload = (
         list(payload)
         if payload is not None
-        else [c for c in right.columns if c not in keys and c != right_ts]
+        else [c for c in right.columns if c not in keys and c != "ts"]
     )
-    r2 = right.withColumn("__rts", F.col(right_ts))
+    r2 = right.withColumn("__rts", F.col("ts"))
     pay2 = payload + ["__rts"]
     lcols = list(left.columns)
-    b = asof_join(left, r2, keys, left_ts, right_ts, pay2, direction="backward")
-    f = asof_join(left, r2, keys, left_ts, right_ts, pay2, direction="forward")
+    b = asof_join(left, r2, keys, "ts", "ts", pay2, direction="backward")
+    f = asof_join(left, r2, keys, "ts", "ts", pay2, direction="forward")
     b = b.select(*lcols, *[F.col(c).alias(f"__b_{c}") for c in pay2])
     f = f.select(*lcols, *[F.col(c).alias(f"__f_{c}") for c in pay2])
     j = b.join(f, lcols, "full_outer")
-    t = F.unix_micros(F.col(left_ts))
+    t = F.unix_micros(F.col("ts"))
     d_b = t - F.unix_micros(F.col("__b___rts"))
     d_f = F.unix_micros(F.col("__f___rts")) - t
     take_b = F.col("__f___rts").isNull() | (
@@ -438,15 +400,8 @@ def asof_join_nearest(
     )
 
 
-def time_weighted_avg(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    unit: str = "day",
-) -> DataFrame:
-    """Time-weighted average per key per ``unit`` bucket — the
+def time_weighted_avg(events: DataFrame) -> DataFrame:
+    """Time-weighted average per key per ``day`` bucket — the
     irregular-series summarizer (TimescaleDB ``time_weight``) a plain
     AVG gets wrong: each observation holds its value until the next
     one (last-observation-carried-forward), so its weight is the time
@@ -464,30 +419,30 @@ def time_weighted_avg(
     timestamp (ordered (ts, id) — total order), then one
     partial-agged groupBy.  No grid explode, no pair space.
     """
-    bucket = F.date_trunc(unit, F.col(ts_col))
-    w = Window.partitionBy(key_col, "bucket").orderBy(ts_col, id_col)
-    nxt = F.lead(F.col(ts_col)).over(w)
-    bucket_end = F.col("bucket") + F.expr(f"INTERVAL 1 {unit.upper()}")
+    bucket = F.date_trunc("day", F.col("ts"))
+    w = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
+    nxt = F.lead(F.col("ts")).over(w)
+    bucket_end = F.col("bucket") + F.expr("INTERVAL 1 DAY")
     dur_ms = F.floor(
         (
             F.unix_micros(F.coalesce(nxt, bucket_end))
-            - F.unix_micros(F.col(ts_col))
+            - F.unix_micros(F.col("ts"))
         )
         / 1000
     ).cast("long")
     staged = events.select(
-        F.col(key_col),
+        F.col("user_id"),
         bucket.alias("bucket"),
-        F.col(ts_col),
-        F.col(id_col),
-        F.round(F.col(value_col) * 1000).cast("long").alias("vmil"),
+        F.col("ts"),
+        F.col("event_id"),
+        F.round(F.col("value") * 1000).cast("long").alias("vmil"),
     ).select(
-        key_col,
+        "user_id",
         "bucket",
         "vmil",
         dur_ms.alias("dur_ms"),
     )
-    return staged.groupBy(key_col, "bucket").agg(
+    return staged.groupBy("user_id", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.when(
             F.sum("dur_ms") > 0,
@@ -500,7 +455,7 @@ def time_weighted_avg(
         ).alias("twap"),
         F.round(F.sum("vmil") / F.count(F.lit(1)) / 1000, 6).alias("plain_avg"),
     ).select(
-        key_col,
+        "user_id",
         F.date_format("bucket", "yyyy-MM-dd").alias("day"),
         "n_events",
         "twap",

@@ -41,16 +41,16 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Per-doc token counting: reference-semantics word tokens (Q2),
     whitespace tokens (the usual LLM-data proxy), and char length."""
-    tk = tokens(text_col)
-    ws = words(F.col(text_col))
+    tk = tokens("text")
+    ws = words(F.col("text"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(tk).alias("n_tokens"),
         F.size(ws).alias("n_ws_tokens"),
-        F.length(text_col).alias("n_chars_m"),
+        F.length("text").alias("n_chars_m"),
     )
 
 
@@ -61,20 +61,20 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 BPE_ISH_RE = r"'[sdmt]|'ll|'ve|'re| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
 
 
-def bpe_token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bpe_token_stats(docs: DataFrame) -> DataFrame:
     """BPE-pre-tokenizer piece counting — the token-budget estimator a
     training pipeline runs before the (expensive) real BPE merge step.
     Counts all pieces, non-whitespace pieces, and chars-per-piece
     (≈ the corpus' bytes-per-token compression proxy).  Pure JVM regex
     on the codegen path — one pass, no shuffle."""
-    pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_RE), 0)
+    pieces = F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_RE), 0)
     nonws = F.filter(pieces, lambda p: F.trim(p) != F.lit(""))
     n_nonws = F.size(nonws)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(pieces).cast("long").alias("n_pieces"),
         n_nonws.cast("long").alias("n_nonws_pieces"),
-        F.when(n_nonws > 0, F.round(F.length(text_col) / n_nonws, 6)).alias("chars_per_piece"),
+        F.when(n_nonws > 0, F.round(F.length("text") / n_nonws, 6)).alias("chars_per_piece"),
     )
 
 
@@ -93,7 +93,7 @@ def _composite_quality(text_col: str):
     return n_tok, letters, stop_ratio, nonletter_ratio, score
 
 
-def _rep_sizes(docs: DataFrame, text_col: str, n: int = 3, extra: list | None = None):
+def _rep_sizes(docs: DataFrame, text_col: str, extra: list | None = None):
     """Project (``extra`` columns, _nt, _nd) = shingle total/distinct
     counts in a DEDICATED lower projection.  The shingle array is
     expensive and every consumer needs it 2-3 times; CollapseProject
@@ -101,7 +101,7 @@ def _rep_sizes(docs: DataFrame, text_col: str, n: int = 3, extra: list | None = 
     the two-stage shape evaluates it ONCE per row — measured 8.7 s →
     3.2 s at sf0.1 for repetition_ratio (the one-stage form re-built
     the array per reference)."""
-    sh = shingles(tokens(text_col, lowercase=True), n)
+    sh = shingles(tokens(text_col, lowercase=True), 3)
     cols = list(extra) if extra else []
     # the array gets its OWN projection: higher-order functions are
     # CodegenFallback (interpreted, no subexpression elimination), so
@@ -116,16 +116,16 @@ def _rep_sizes(docs: DataFrame, text_col: str, n: int = 3, extra: list | None = 
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality signals: mean token length, stopword ratio,
     non-letter (punct/digit/space) char ratio, and a composite score.
     The composite mirrors the usual pretraining-filter shape (bounded
     0..1, higher = more prose-like).
     """
-    n_tok, letters, stop_ratio, nonletter_ratio, score = _composite_quality(text_col)
+    n_tok, letters, stop_ratio, nonletter_ratio, score = _composite_quality("text")
     mean_len = letters / n_tok
     return ensure_parallelism(docs).filter(n_tok > 0).select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tokens"),
         F.round(mean_len, 6).alias("mean_token_len"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
@@ -134,19 +134,19 @@ def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-hit language ID over LANG_MARKERS; 'und' when no
     marker fires.  Ties resolve deterministically to the EARLIEST
     language in LANG_MARKERS order (matching the DuckDB oracle)."""
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     hit_cols = [stopword_hits(tk, ws).alias(f"hits_{lang}") for lang, ws in LANG_MARKERS.items()]
     langs = list(LANG_MARKERS)
-    scored = ensure_parallelism(docs).select(F.col(id_col), *hit_cols)
+    scored = ensure_parallelism(docs).select(F.col("doc_id"), *hit_cols)
     best = F.greatest(*[F.col(f"hits_{lg}") for lg in langs])
     pred = F.lit("und")
     for lg in reversed(langs):  # earlier langs win ties via later override
         pred = F.when((F.col(f"hits_{lg}") == best) & (best > 0), F.lit(lg)).otherwise(pred)
-    return scored.select(F.col(id_col), pred.alias("lang_pred"), best.alias("marker_hits"))
+    return scored.select(F.col("doc_id"), pred.alias("lang_pred"), best.alias("marker_hits"))
 
 
 #: RE2- and Java-compatible patterns (no lookaround/backrefs) so the
@@ -166,17 +166,17 @@ def _pii_counts(text_col: str):
     return url_scrubbed, n_emails, n_urls
 
 
-def scrub_text(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def scrub_text(docs: DataFrame) -> DataFrame:
     """PII/link scrubbing — the redaction pass of a training-data
     pipeline: count and replace emails and URLs with placeholder
     tokens.  Pure per-row regex on the codegen path.  URLs are
     replaced first and emails are COUNTED on the URL-scrubbed text,
     so an address-shaped substring inside a URL is attributed to the
     URL only — counts always agree with the replacements."""
-    url_scrubbed, n_emails, n_urls = _pii_counts(text_col)
+    url_scrubbed, n_emails, n_urls = _pii_counts("text")
     clean = F.regexp_replace(url_scrubbed, EMAIL_RE, "<EMAIL>")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.cast("long").alias("n_emails"),
         n_urls.cast("long").alias("n_urls"),
         F.md5(clean).alias("clean_md5"),
@@ -184,33 +184,31 @@ def scrub_text(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
-def repetition_ratio(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Within-document repetition: 1 − distinct/total word ``n``-gram
+def repetition_ratio(docs: DataFrame) -> DataFrame:
+    """Within-document repetition: 1 − distinct/total word 3-gram
     shingles — the boilerplate/spam/degenerate-generation signal of a
     pretraining quality filter (high ratio = the doc repeats itself).
     Entirely array-native (shingle → distinct → size inside the row):
     zero shuffle, codegen'd end to end."""
     nt, nd = F.col("_nt"), F.col("_nd")
-    return _rep_sizes(docs, text_col, n, extra=[F.col(id_col)]).select(
-        F.col(id_col),
+    return _rep_sizes(docs, "text", extra=[F.col("doc_id")]).select(
+        F.col("doc_id"),
         nt.cast("long").alias("n_shingles"),
         nd.cast("long").alias("n_distinct"),
         F.when(nt > 0, F.round(1 - nd / nt.cast("double"), 6)).alias("rep_ratio"),
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Content fingerprints: ``dedup.content_hash`` (md5 of the
     normalized text, NULL read as the empty text — exact identity)
     plus a coarse structural sketch (min/max token hash — a 2-hash
     min-wise sketch usable for cheap similarity pre-grouping)."""
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     hashed = F.transform(tk, lambda t: F.md5(t))
     return docs.select(
-        F.col(id_col),
-        content_hash(text_col).alias("content_md5"),
+        F.col("doc_id"),
+        content_hash("text").alias("content_md5"),
         F.array_min(hashed).alias("min_token_hash"),
         F.array_max(hashed).alias("max_token_hash"),
     )
@@ -250,7 +248,7 @@ def entropy_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def sentence_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def sentence_stats(docs: DataFrame) -> DataFrame:
     """Per-doc sentence segmentation stats — the structural quality
     signal (docs with no sentence boundaries, or absurdly long/short
     sentences, are lists/tables/logs, not prose).  Split on [.!?]+
@@ -260,7 +258,7 @@ def sentence_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     Returns ``doc_id, n_sentences, mean_sentence_words,
     max_sentence_words`` (mean/max NULL for docs with no sentence)."""
     sents = F.filter(
-        F.split(F.col(text_col), r"[.!?]+"), lambda s: F.trim(s) != F.lit("")
+        F.split(F.col("text"), r"[.!?]+"), lambda s: F.trim(s) != F.lit("")
     )
     words_per = F.transform(
         sents,
@@ -269,7 +267,7 @@ def sentence_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     n_sent = F.size(sents)
     total_words = F.aggregate(words_per, F.lit(0), lambda a, x: a + x)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_sent.cast("long").alias("n_sentences"),
         F.when(n_sent > 0, F.round(total_words / n_sent, 6)).alias("mean_sentence_words"),
         F.when(n_sent > 0, F.array_max(words_per)).cast("long").alias("max_sentence_words"),
@@ -288,8 +286,7 @@ def _doc_signals(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.round(1 - F.col("_nd") / F.col("_nt").cast("double"), 6),
     )
     sized = _rep_sizes(
-        ensure_parallelism(docs), text_col, 3,
-        extra=[F.col(id_col), F.col(text_col)],
+        ensure_parallelism(docs), text_col, extra=[F.col(id_col), F.col(text_col)],
     )
     per_row = sized.select(
         F.col(id_col),
@@ -306,15 +303,7 @@ def _doc_signals(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return per_row.join(ent, id_col, "left")
 
 
-def quality_gate(
-    docs: DataFrame,
-    min_tokens: int = 10,
-    min_quality: float = 0.5,
-    max_rep: float = 0.3,
-    min_entropy: float = 2.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_gate(docs: DataFrame) -> DataFrame:
     """Composite keep/drop verdict — the single gate a pretraining
     pipeline actually applies, combining the individual signals this
     module computes: minimum length, heuristic prose quality,
@@ -334,23 +323,23 @@ def quality_gate(
     explode → two-groupBy aggregation; one doc_id equi-join marries
     them.  Nothing corpus-global, no windows, no pair space.
     """
-    j = _doc_signals(docs, text_col, id_col)
+    j = _doc_signals(docs, "text", "doc_id")
     reasons = F.concat_ws(
         ",",
-        F.when(F.col("n_tokens") < min_tokens, F.lit("too_short")),
-        F.when(F.col("q") < min_quality, F.lit("low_quality")),
-        F.when(F.col("rep") > max_rep, F.lit("repetitive")),
-        F.when(F.col("ent") < min_entropy, F.lit("low_entropy")),
+        F.when(F.col("n_tokens") < 10, F.lit("too_short")),
+        F.when(F.col("q") < 0.5, F.lit("low_quality")),
+        F.when(F.col("rep") > 0.3, F.lit("repetitive")),
+        F.when(F.col("ent") < 2.0, F.lit("low_entropy")),
     )
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_tokens"),
         (reasons == "").cast("int").alias("passed"),
         F.when(reasons == "", F.lit("ok")).otherwise(reasons).alias("reasons"),
     )
 
 
-def pii_report(docs: DataFrame, text_col: str = "text", by: str = "source") -> DataFrame:
+def pii_report(docs: DataFrame) -> DataFrame:
     """Per-source PII/link exposure audit — the aggregate view of
     scrub_text's per-doc counts: how many documents in each source
     carry emails/URLs and the total match counts.  The triage report
@@ -361,13 +350,13 @@ def pii_report(docs: DataFrame, text_col: str = "text", by: str = "source") -> D
 
     Scale shape: per-row regex counts fold into ONE map-side-combined
     groupBy(source) — a |sources|-row output at any corpus size."""
-    _scrubbed, n_emails, n_urls = _pii_counts(text_col)
+    _scrubbed, n_emails, n_urls = _pii_counts("text")
     per_row = ensure_parallelism(docs).select(
-        F.col(by),
+        F.col("source"),
         n_emails.cast("long").alias("ne"),
         n_urls.cast("long").alias("nu"),
     )
-    return per_row.groupBy(by).agg(
+    return per_row.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum((F.col("ne") > 0).cast("long")).alias("n_docs_email"),
         F.sum("ne").alias("n_emails"),
@@ -376,12 +365,7 @@ def pii_report(docs: DataFrame, text_col: str = "text", by: str = "source") -> D
     )
 
 
-def ngram_coverage(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_coverage(docs: DataFrame, n: int = 8) -> DataFrame:
     """Duplicate-n-gram coverage — the corpus-level quality signal the
     Dolma/RefinedWeb pipelines threshold on: for each doc, the
     fraction of its distinct word ``n``-grams that also occur in at
@@ -401,20 +385,20 @@ def ngram_coverage(
     branches.  No candidate pair space exists at all (this is an
     inverted-index statistic, not a join).
 
-    Returns ``id_col, n_shingles, n_dup, dup_frac`` for every doc
+    Returns ``doc_id, n_shingles, n_dup, dup_frac`` for every doc
     (docs shorter than ``n`` tokens report 0 shingles, dup_frac 0).
     """
     per_doc = (
-        _shingle_df(docs, text_col, id_col, n)
-        .groupBy(id_col)
+        _shingle_df(docs, "text", "doc_id", n)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
             F.sum((F.col("df") >= 2).cast("long")).alias("n_dup"),
         )
     )
-    base = docs.select(id_col)
-    return base.join(per_doc, id_col, "left").select(
-        F.col(id_col),
+    base = docs.select("doc_id")
+    return base.join(per_doc, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce("n_shingles", F.lit(0)).cast("long").alias("n_shingles"),
         F.coalesce("n_dup", F.lit(0)).cast("long").alias("n_dup"),
         F.when(
@@ -436,16 +420,7 @@ GOPHER_STOPWORDS: tuple[str, ...] = (
 def gopher_rules(
     docs: DataFrame,
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_word_len: float = 3.0,
-    max_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_ratio: float = 0.9,
-    max_ellipsis_ratio: float = 0.3,
-    min_alpha_ratio: float = 0.8,
     min_stop_hits: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Gopher quality rules (Rae et al. 2021, §A1.1) — the published
     heuristic battery MassiveWeb was filtered with, and still the
@@ -465,7 +440,7 @@ def gopher_rules(
     zero shuffles, no UDFs.  Unreadable (NULL) docs fail as
     ``too_few_words`` rather than silently passing.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     ws = words(t)
     n_words = F.size(ws)
     # sum of word lengths == chars left after removing all whitespace
@@ -479,12 +454,12 @@ def gopher_rules(
     n_bullet = F.size(F.filter(ls, lambda l: l.rlike(r"^\s*[•‣▪*-]")))
     n_ell_lines = F.size(F.filter(ls, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
     n_alpha = F.size(F.filter(ws, lambda w: w.rlike(r"\p{L}")))
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     stops = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
     n_stop = F.size(F.filter(stops, lambda s: F.array_contains(tk, s)))
 
     sig = ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(n_words, F.lit(0)).cast("long").alias("n_words"),
         F.when(n_words > 0, F.round(word_chars / n_words, 6)).alias("mean_word_len"),
         F.when(n_words > 0, F.round((n_hash + n_ell3 + n_ellu) / n_words, 6)).alias(
@@ -500,16 +475,16 @@ def gopher_rules(
     reasons = F.concat_ws(
         ",",
         F.when(F.col("n_words") < min_words, F.lit("too_few_words")),
-        F.when(F.col("n_words") > max_words, F.lit("too_many_words")),
+        F.when(F.col("n_words") > 100_000, F.lit("too_many_words")),
         F.when(
-            (F.col("mean_word_len") < min_word_len)
-            | (F.col("mean_word_len") > max_word_len),
+            (F.col("mean_word_len") < 3.0)
+            | (F.col("mean_word_len") > 10.0),
             F.lit("word_len"),
         ),
-        F.when(F.col("symbol_ratio") > max_symbol_ratio, F.lit("symbols")),
-        F.when(F.col("bullet_ratio") > max_bullet_ratio, F.lit("bullet_lines")),
-        F.when(F.col("ellipsis_ratio") > max_ellipsis_ratio, F.lit("ellipsis_lines")),
-        F.when(F.col("alpha_ratio") < min_alpha_ratio, F.lit("low_alpha")),
+        F.when(F.col("symbol_ratio") > 0.1, F.lit("symbols")),
+        F.when(F.col("bullet_ratio") > 0.9, F.lit("bullet_lines")),
+        F.when(F.col("ellipsis_ratio") > 0.3, F.lit("ellipsis_lines")),
+        F.when(F.col("alpha_ratio") < 0.8, F.lit("low_alpha")),
         F.when(F.col("stop_hits") < min_stop_hits, F.lit("few_stopwords")),
     )
     return sig.select(
@@ -523,8 +498,6 @@ def c4_line_filter(
     docs: DataFrame,
     min_line_words: int = 5,
     min_kept_lines: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """C4 line-level cleaning report (Raffel et al. 2020, §2.2): a
     line survives iff it ends in terminal punctuation (.!?"), has at
@@ -540,7 +513,7 @@ def c4_line_filter(
     Scale shape: entirely in-row (nested higher-order array lambdas
     on the codegen path), zero shuffles, no UDFs.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     ls = lines(t)
     kept = F.filter(
         ls,
@@ -552,7 +525,7 @@ def c4_line_filter(
     has_brace = t.contains("{")
     has_lorem = F.lower(t).contains("lorem ipsum")
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(F.size(ls), F.lit(0)).cast("long").alias("n_lines"),
         F.coalesce(n_kept, F.lit(0)).cast("long").alias("n_kept"),
         F.coalesce(F.size(words(F.array_join(kept, "\n"))), F.lit(0))
@@ -570,11 +543,7 @@ def c4_line_filter(
     )
 
 
-def gopher_repetition(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def gopher_repetition(docs: DataFrame) -> DataFrame:
     """Gopher repetition filters (Rae et al. 2021 §A1.1, the half of
     the battery :func:`gopher_rules` doesn't cover): duplicate-LINE
     fraction, the character mass sitting in repeated line occurrences,
@@ -595,7 +564,7 @@ def gopher_repetition(
     explode → partial-agged (doc,bigram) count → per-doc top-1 window
     — one shuffle carrying (id, bigram) pairs, no pair space.
     """
-    ls = lines(F.col(text_col))
+    ls = lines(F.col("text"))
     nl = F.size(ls)
     dl = F.array_distinct(ls)
     line_chars = F.aggregate(ls, F.lit(0).cast("long"), lambda a, l: a + F.length(l))
@@ -604,9 +573,9 @@ def gopher_repetition(
         F.lit(0).cast("long"),
         lambda a, d: a + (F.size(F.filter(ls, lambda x: x == d)) - 1) * F.length(d),
     )
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     base = ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(nl, F.lit(0)).cast("long").alias("n_lines"),
         F.when(nl > 0, F.round(1 - F.size(dl) / nl, 6)).alias("dup_line_frac"),
         F.when(line_chars > 0, F.round(extra_chars / line_chars, 6)).alias(
@@ -616,13 +585,13 @@ def gopher_repetition(
         tk.alias("tk"),
     )
     cnt = (
-        base.select(F.col(id_col), F.explode(shingles(F.col("tk"), 2)).alias("bg"))
-        .groupBy(id_col, "bg")
+        base.select(F.col("doc_id"), F.explode(shingles(F.col("tk"), 2)).alias("bg"))
+        .groupBy("doc_id", "bg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    top = top_k_per(cnt, [id_col], 1, F.desc("c"), F.asc("bg")).drop("rk")
-    return base.drop("tk").join(top, id_col, "left").select(
-        F.col(id_col),
+    top = top_k_per(cnt, ["doc_id"], 1, F.desc("c"), F.asc("bg")).drop("rk")
+    return base.drop("tk").join(top, "doc_id", "left").select(
+        F.col("doc_id"),
         "n_lines",
         "dup_line_frac",
         "dup_line_char_frac",
@@ -636,7 +605,7 @@ def gopher_repetition(
     )
 
 
-def unicode_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def unicode_stats(docs: DataFrame) -> DataFrame:
     """Encoding-health audit — the mojibake/corruption signal a crawl
     pipeline checks before trusting a source: per doc, counts of
     non-ASCII characters, C0 control characters (excluding tab/LF/CR,
@@ -652,16 +621,16 @@ def unicode_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     Returns ``doc_id, n_chars, n_non_ascii, n_control, n_replacement,
     non_ascii_ratio`` (ratio 6 dp, NULL for empty docs).
     """
-    n_chars = F.length(text_col)
-    n_non_ascii = F.length(F.regexp_replace(F.col(text_col), r"[\x00-\x7F]", ""))
+    n_chars = F.length("text")
+    n_non_ascii = F.length(F.regexp_replace(F.col("text"), r"[\x00-\x7F]", ""))
     # count control chars directly: remove everything that is NOT a
     # C0 control (minus tab/LF/CR) and measure what remains
     n_control = F.length(
-        F.regexp_replace(F.col(text_col), r"[^\x00-\x08\x0B\x0C\x0E-\x1F]", "")
+        F.regexp_replace(F.col("text"), r"[^\x00-\x08\x0B\x0C\x0E-\x1F]", "")
     )
-    n_repl = F.length(F.regexp_replace(F.col(text_col), "[^�]", ""))
+    n_repl = F.length(F.regexp_replace(F.col("text"), "[^�]", ""))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.cast("long").alias("n_chars"),
         n_non_ascii.cast("long").alias("n_non_ascii"),
         n_control.cast("long").alias("n_control"),
@@ -670,19 +639,11 @@ def unicode_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def quality_logit(
-    docs: DataFrame,
-    bias: float = -3.0,
-    w_quality: float = 3.0,
-    w_nonrep: float = 1.5,
-    w_entropy: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_logit(docs: DataFrame) -> DataFrame:
     """Model-based quality scoring — the classifier-filter family
     (fastText quality models, DCLM/FineWeb-Edu educational scorers)
     as a deterministic logistic model over the engine's own signals:
-    ``z = bias + w_quality·q + w_nonrep·(1−rep) + w_entropy·ent``,
+    ``z = −3 + 3·q + 1.5·(1−rep) + 0.5·ent``,
     ``score = σ(z)``.  The weights are a documented fixed stand-in
     for externally-trained coefficients (swap in real ones without
     touching the plan); unreadable signals contribute zero, so a NULL
@@ -701,10 +662,8 @@ def quality_logit(
     projection + the entropy aggregation + one doc_id equi-join; the
     logit itself is free.
     """
-    b10, wq10, wr10, we10 = (
-        int(round(w * 10)) for w in (bias, w_quality, w_nonrep, w_entropy)
-    )
-    j = _doc_signals(docs, text_col, id_col)
+    b10, wq10, wr10, we10 = -30, 30, 15, 5  # the weights in tenths
+    j = _doc_signals(docs, "text", "doc_id")
     qm = F.round(F.coalesce(F.col("q"), F.lit(0.0)) * 1e6).cast("long")
     repm = F.round(F.coalesce(F.col("rep"), F.lit(1.0)) * 1e6).cast("long")
     entm = F.round(F.coalesce(F.col("ent"), F.lit(0.0)) * 1e6).cast("long")
@@ -719,7 +678,7 @@ def quality_logit(
         j.withColumn("z", z)
         .withColumn("score", score)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_tokens"),
             "z",
             "score",
@@ -734,17 +693,17 @@ PHONE_RE = r"\+?\d{3}[- ]\d{3}[- ]\d{4}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
-def pii_extended(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_extended(docs: DataFrame) -> DataFrame:
     """Extended per-doc PII exposure: emails, URLs, phone numbers, and
     IPv4 literals.  Phones and IPs are counted on the URL-scrubbed
     text — the same attribution rule scrub_text established (a digit
     run inside a URL belongs to the URL, not to a phone count).  Pure
     per-row regex counting on the codegen path, zero shuffle."""
-    url_scrubbed, n_emails, n_urls = _pii_counts(text_col)
+    url_scrubbed, n_emails, n_urls = _pii_counts("text")
     n_phones = F.size(F.regexp_extract_all(url_scrubbed, F.lit(PHONE_RE), 0))
     n_ipv4 = F.size(F.regexp_extract_all(url_scrubbed, F.lit(IPV4_RE), 0))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.cast("long").alias("n_emails"),
         n_urls.cast("long").alias("n_urls"),
         n_phones.cast("long").alias("n_phones"),
@@ -755,14 +714,14 @@ def pii_extended(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def html_clean(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def html_clean(docs: DataFrame) -> DataFrame:
     """Crawl-side HTML cleaning: strip tags, decode the five core
     entities, collapse whitespace — the minimal text-extraction pass
     between raw crawl HTML and every quality/dedup operator upstream.
     Emits the tag count plus md5/length of the cleaned text (the
     digest posture of scrub_text: downstream exchanges never need the
     text itself).  Pure per-row regex chain, codegen'd, zero shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_tags = F.size(F.regexp_extract_all(t, F.lit(r"<[^>]+>"), 0))
     stripped = F.regexp_replace(t, r"<[^>]+>", " ")
     decoded = stripped
@@ -776,16 +735,14 @@ def html_clean(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         decoded = F.replace(decoded, F.lit(ent), F.lit(ch))
     clean = F.trim(F.regexp_replace(decoded, r"\s+", " "))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tags.cast("long").alias("n_tags"),
         F.md5(clean).alias("clean_md5"),
         F.length(clean).cast("long").alias("clean_len"),
     )
 
 
-def readability_scores(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def readability_scores(docs: DataFrame) -> DataFrame:
     """Per-doc Flesch Reading Ease + Flesch-Kincaid grade level — the
     classic prose-complexity signals a curriculum/data-mixture
     pipeline bins on (children's books vs academic text need different
@@ -804,7 +761,7 @@ def readability_scores(
     Returns ``(doc_id, n_words, n_sentences, n_syllables, flesch,
     fk_grade)``.
     """
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     syl_per = F.transform(
         ws,
         lambda w: F.greatest(
@@ -813,7 +770,7 @@ def readability_scores(
         ),
     )
     sents = F.filter(
-        F.split(F.col(text_col), r"[.!?]+"), lambda s: F.trim(s) != F.lit("")
+        F.split(F.col("text"), r"[.!?]+"), lambda s: F.trim(s) != F.lit("")
     )
     nw = F.size(ws).cast("long")
     ns = F.size(sents).cast("long")
@@ -821,7 +778,7 @@ def readability_scores(
     wps = F.try_divide(nw.cast("double"), F.nullif(ns.cast("double"), F.lit(0.0)))
     spw = F.try_divide(nsyl.cast("double"), F.nullif(nw.cast("double"), F.lit(0.0)))
     return ensure_parallelism(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         nw.alias("n_words"),
         ns.alias("n_sentences"),
         nsyl.alias("n_syllables"),
@@ -830,9 +787,7 @@ def readability_scores(
     )
 
 
-def lang_mixture(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def lang_mixture(docs: DataFrame) -> DataFrame:
     """Per-doc code-switching / mixed-language detection over the
     :data:`LANG_MARKERS` stopword batteries — the refinement of
     :func:`lang_id`'s single winner: a doc whose SECOND language's
@@ -848,13 +803,13 @@ def lang_mixture(
     Returns ``(doc_id, lang_top, lang_second, hits_top, hits_second,
     mixed)`` — lang_second NULL when no second language fires.
     """
-    tk = tokens(text_col, lowercase=True)
+    tk = tokens("text", lowercase=True)
     langs = list(LANG_MARKERS)
     hit_cols = [
         stopword_hits(tk, ws).cast("long").alias(f"hits_{lang}")
         for lang, ws in LANG_MARKERS.items()
     ]
-    scored = ensure_parallelism(docs).select(F.col(id_col), *hit_cols)
+    scored = ensure_parallelism(docs).select(F.col("doc_id"), *hit_cols)
     # tiebreak by LANG_MARKERS position (oi), matching lang_id's
     # earliest-language-wins rule — NOT alphabetical lang order
     ranked = F.array_sort(
@@ -873,7 +828,7 @@ def lang_mixture(
     h1 = (-top1["nh"]).cast("long")
     h2 = (-top2["nh"]).cast("long")
     return scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(h1 > 0, top1["lg"]).otherwise(F.lit("und")).alias("lang_top"),
         F.when(h2 > 0, top2["lg"]).alias("lang_second"),
         h1.alias("hits_top"),
@@ -882,11 +837,7 @@ def lang_mixture(
     )
 
 
-def tokenizer_fertility(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "lang",
-) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     """Per-language tokenizer fertility: regex tokens per whitespace
     word, plus characters per token — THE comparative readout of
     tokenizer evals (Scao et al., BLOOM; a language whose fertility is
@@ -902,10 +853,10 @@ def tokenizer_fertility(
     ``(lang, n_docs, n_words, n_tokens, fertility, chars_per_token)``
     ordered by language.
     """
-    toks = tokens(text_col)
-    per = docs.groupBy(F.col(group_col).alias("lang")).agg(
+    toks = tokens("text")
+    per = docs.groupBy(F.col("lang").alias("lang")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(words(F.col(text_col)))).cast("long").alias("n_words"),
+        F.sum(F.size(words(F.col("text")))).cast("long").alias("n_words"),
         F.sum(F.size(toks)).cast("long").alias("n_tokens"),
         F.sum(
             F.aggregate(
@@ -935,14 +886,9 @@ def tokenizer_fertility(
     ).orderBy("lang")
 
 
-def feature_hash(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def feature_hash(docs: DataFrame) -> DataFrame:
     """Hashing-trick featurizer audit: project the unbounded token
-    vocabulary onto ``n_buckets`` fixed feature slots via an
+    vocabulary onto 64 fixed feature slots via an
     md5-derived bucket id — the fixed-width featurization every
     vocabulary-free text model (Vowpal-Wabbit-style linear models,
     sketch features for dedup/quality classifiers) runs at corpus
@@ -951,8 +897,8 @@ def feature_hash(
     Reports, per bucket: total token mass, distinct tokens folded in
     (the collision load the model actually absorbs), document
     frequency, and the share of total mass — exactly the table you
-    read to size ``n_buckets`` before training.  The bucket id is
-    ``md5(token)``'s first 48 bits mod n_buckets, reproducible
+    read to size 64 before training.  The bucket id is
+    ``md5(token)``'s first 48 bits mod 64, reproducible
     bit-identically in ANSI SQL (the roc_auc_continuous idiom), never
     a JVM-internal hash.
 
@@ -964,10 +910,10 @@ def feature_hash(
     ``(bucket, n_tokens, n_distinct_tokens, n_docs, mass_share)``
     ordered by bucket.
     """
-    tok = token_rows(docs, text_col, F.col(id_col).alias("doc"), token="t")
+    tok = token_rows(docs, "text", F.col("doc_id").alias("doc"), token="t")
     b = F.pmod(
         F.conv(F.substring(F.md5(F.col("t")), 1, 12), 16, 10).cast("long"),
-        F.lit(n_buckets),
+        F.lit(64),
     ).cast("int")
     bt = tok.select(b.alias("b"), "t", "doc")
     # the bucketed token relation feeds the per-token counts AND the

@@ -82,7 +82,7 @@ def wordcount(spark, paths: str | list[str], sort: bool = True) -> DataFrame:
     return wordcount_from_text(scan_text(spark, paths), "value", sort=sort)
 
 
-def wordcount_rdd(text_df: DataFrame, text_col: str = "value") -> DataFrame:
+def wordcount_rdd(text_df: DataFrame) -> DataFrame:
     """RDD formulation mirroring the reference's explicit two-level
     combine, for parity demonstration (the DataFrame plan above is the
     production path — Catalyst plans the identical shape automatically):
@@ -127,7 +127,7 @@ def wordcount_rdd(text_df: DataFrame, text_col: str = "value") -> DataFrame:
         return iter(counts.items())
 
     counted = (
-        text_df.select(text_col)
+        text_df.select("value")
         .rdd.mapPartitions(combine_partition)
         .reduceByKey(lambda a, b: a + b)  # level-2 combine + final sum
     )

@@ -225,7 +225,7 @@ def _named_expr_strings(node):
     return out
 
 
-def _grouping_keys_bounded(agg_node, depth: int = 0) -> bool:
+def _grouping_keys_bounded(agg_node) -> bool:
     """True iff every grouping expression of this physical Aggregate has
     a provably bounded image: a global aggregate (no keys), a key that
     matches `_BOUNDED_KEY` directly, or an attribute whose DEFINING

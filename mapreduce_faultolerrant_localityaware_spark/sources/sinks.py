@@ -20,21 +20,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_tokens(df: DataFrame, path: str, key: str = "word", value: str = "count") -> None:
+def write_tokens(df: DataFrame, path: str) -> None:
     """Distributed write of ``K->V`` lines (reference sink format, SURVEY Q5).
 
     One part-file per partition — no driver materialization.
     """
-    out = df.select(F.concat_ws("->", F.col(key).cast("string"), F.col(value).cast("string")).alias("value"))
+    out = df.select(
+        F.concat_ws("->", F.col("word").cast("string"), F.col("count").cast("string")).alias("value")
+    )
     out.write.mode("overwrite").text(path)
 
 
-def format_tokens(rows, sep: str = "\r\n") -> str:
+def format_tokens(rows) -> str:
     """Driver-side serialization of collected (key, value) rows to the
     reference's exact on-disk format: ``K->V`` joined by CRLF
     (core/utils.go:720).  Test/small-output use only.
     """
-    return sep.join(f"{k}->{v}" for k, v in rows)
+    return "\r\n".join(f"{k}->{v}" for k, v in rows)
 
 
 def write_clustered(
@@ -73,10 +75,10 @@ def zvalue(x, y, bits: int = 16):
     return z
 
 
-def zvalue_sql(x: str, y: str, bits: int = 16) -> str:
+def zvalue_sql(x: str, y: str) -> str:
     """The exact SQL rendering of :func:`zvalue` for the DuckDB oracle."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"

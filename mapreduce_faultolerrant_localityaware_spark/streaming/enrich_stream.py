@@ -35,8 +35,6 @@ from ..operators.dedup import (
 
 def sliding_event_counts(
     events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
     window_len: str = "10 minutes",
     slide: str = "5 minutes",
     watermark: str = "30 minutes",
@@ -44,13 +42,13 @@ def sliding_event_counts(
     """Sliding-window counts: each event lands in window_len/slide
     overlapping windows; watermark bounds retained window state."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_len, slide).alias("win"), F.col(key_col))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window_len, slide).alias("win"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            key_col,
+            "event_type",
             "n_events",
         )
     )
@@ -60,7 +58,6 @@ def deduped_update_counts(
     events: DataFrame,
     keys: list[str],
     group_col: str,
-    ts_col: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Deduped UPDATE-mode counts — the everyday ingestion dashboard
@@ -79,7 +76,7 @@ def deduped_update_counts(
     materialized final state is ``max`` per group (see the
     ``streaming_dedup_update`` gate query).
     """
-    deduped = events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
     return deduped.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_unique")
     )
@@ -88,17 +85,13 @@ def deduped_update_counts(
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
-    on: str = "user_id",
-    ts_col: str = "ts",
-    tolerance: str = "5 minutes",
-    watermark: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-STREAM interval join: pair left/right events with the
-    same key whose timestamps lie within ``tolerance`` of each other.
+    same key whose timestamps lie within ``5 minutes`` of each other.
     Both sides are watermarked and the join condition is
     time-range-bounded, so each side's buffered state is only the
-    watermark+tolerance horizon — the requirement for an unbounded
+    watermark+5-minute horizon — the requirement for an unbounded
     run (without the range bound Spark would have to buffer a whole
     stream forever; it rejects such joins in append mode).
 
@@ -109,7 +102,7 @@ def interval_join_streams(
     emit eagerly like inner; an UNMATCHED left row emits null-extended
     only when the watermark closes its join window — i.e. when the
     global eviction watermark (min of both sides' max event time,
-    minus ``watermark``) passes ``l.ts + tolerance``, proving no
+    minus ``10 minutes``) passes ``l.ts + 5 minutes``, proving no
     future right row can match.  Left rows whose window the final
     watermark never closes remain in state and are NOT emitted — the
     bounded-replay consequence of the same contract that keeps state
@@ -117,45 +110,40 @@ def interval_join_streams(
     the watermark-advancing batch AFTER the data batch; availableNow
     replays include that no-data batch, so a single-file bounded
     replay is deterministic: matched ∪ {unmatched left with
-    l.ts + tolerance < min(max_l, max_r) − watermark} (boundary pinned
+    l.ts + 5 min < min(max_l, max_r) − 10 min} (boundary pinned
     by tests/test_streaming_join_outer.py).
 
     ``how="fullOuter"``: the leftOuter contract applied to BOTH sides
     — matched pairs emit eagerly; an unmatched row on EITHER side
     emits null-extended once the eviction watermark strictly passes
-    its join-window end (``side.ts + tolerance < w``), and rows whose
+    its join-window end (``side.ts + 5 minutes < w``), and rows whose
     window the final watermark never closes stay in state, unemitted
     (both boundaries pinned by tests/test_streaming_join_outer.py).
 
     A bounded replay equals the batch join of the same inputs ONLY
     when the replay arrives in a single micro-batch (or in event-time
     order across micro-batches): with multiple unordered
-    micro-batches, a row more than ``watermark`` older than the
+    micro-batches, a row more than ``10 minutes`` older than the
     observed max event time can be evicted before its partner arrives,
     silently dropping that pair — exactly the late-data loss the
     watermark contract defines.  Drive bounded replays with
     availableNow + one-file-per-batch ordering (as run_to_batch does),
-    or widen ``watermark`` to cover the input's worst-case disorder.
+    or widen the ``10 minutes`` watermark to cover the input's worst-case disorder.
     """
-    lw = left.withWatermark(ts_col, watermark).alias("l")
-    rw = right.withWatermark(ts_col, watermark).alias("r")
+    lw = left.withWatermark("ts", "10 minutes").alias("l")
+    rw = right.withWatermark("ts", "10 minutes").alias("r")
     return lw.join(
         rw,
         F.expr(
-            f"l.{on} = r.{on} AND "
-            f"r.{ts_col} BETWEEN l.{ts_col} - INTERVAL {tolerance}"
-            f" AND l.{ts_col} + INTERVAL {tolerance}"
+            "l.user_id = r.user_id AND "
+            "r.ts BETWEEN l.ts - INTERVAL 5 minutes"
+            " AND l.ts + INTERVAL 5 minutes"
         ),
         how,
     )
 
 
-def incremental_dedup_stream(
-    delta: DataFrame,
-    base: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup_stream(delta: DataFrame, base: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.dedup.dedup_incremental``: a
     STREAM of newly crawled documents dedups against the STATIC
     accepted corpus — the steady-state shape of a production ingestion
@@ -175,28 +163,22 @@ def incremental_dedup_stream(
 
     Returns ``content_hash, keep_id, n_delta``.
     """
-    bh = base.select(content_hash(text_col)).distinct()
-    dh = delta.select(F.col(id_col), content_hash(text_col))
+    bh = base.select(content_hash("text")).distinct()
+    dh = delta.select(F.col("doc_id"), content_hash("text"))
     return (
         dh.join(F.broadcast(bh), "content_hash", "left_anti")
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_delta"),
         )
     )
 
 
-def fuzzy_dedup_stream(
-    delta: DataFrame,
-    base: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def fuzzy_dedup_stream(delta: DataFrame, base: DataFrame) -> DataFrame:
     """Streaming twin of ``dedup_incremental_fuzzy``: a STREAM of new
     documents SimHash-matches against the STATIC accepted corpus,
-    emitting every (delta, base) near-dup pair within ``max_hamming``
+    emitting every (delta, base) near-dup pair within Hamming distance 3
     — and it is fully STATELESS, so it runs in append mode with zero
     streaming state: instead of a stateful pair-distinct, each pair is
     emitted exactly once by keeping only its FIRST matching band,
@@ -213,12 +195,12 @@ def fuzzy_dedup_stream(
     up live), and the 16-bit adjacent-band keys bound bucket fan-out
     exactly as in the batch operator.
     """
-    base_sig = simhash(base, text_col=text_col, id_col=id_col).groupBy(id_col).agg(
+    base_sig = simhash(base).groupBy("doc_id").agg(
         F.max("simhash").alias("simhash")
     )
-    bb = simhash_pair_bands(base_sig, id_col, "base", max_hamming)
+    bb = simhash_pair_bands(base_sig, "doc_id", "base", 3)
     db = simhash_pair_bands(
-        simhash(delta, text_col=text_col, id_col=id_col), id_col, "delta", max_hamming
+        simhash(delta), "doc_id", "delta", 3
     )
     j = db.join(F.broadcast(bb), ["band", "bv"])
     hamming = F.bit_count(F.col("delta_sim").bitwiseXOR(F.col("base_sim")))
@@ -229,7 +211,7 @@ def fuzzy_dedup_stream(
     )
     first_band = F.array_position(band_eq, True) - 1
     return (
-        j.filter(hamming <= max_hamming)
+        j.filter(hamming <= 3)
         .filter(F.col("band") == first_band)
         .select(
             "delta_id",

@@ -144,11 +144,10 @@ def run_idempotent_replay(
     out_dir: str,
     build_query,
     output_mode: str = "update",
-    crash_batch_id: int | None = 1,
 ) -> IdempotentBatchSink:
     """Drive ``build_query(stream_df)`` over the pinned multi-file input
     (one file per micro-batch), through the idempotent sink, with an
-    injected crash-after-commit at ``crash_batch_id`` and a restart from
+    injected crash-after-commit at batch 1 and a restart from
     the same checkpoint — the deterministic replay harness.
 
     Returns the sink; its ``attempts`` log shows the replayed batch
@@ -156,7 +155,7 @@ def run_idempotent_replay(
     """
     ckpt = os.path.join(out_dir, "_ckpt")
     sink = IdempotentBatchSink(out_dir)
-    fb = sink if crash_batch_id is None else CrashAfterCommit(sink, crash_batch_id)
+    fb = CrashAfterCommit(sink, 1)
 
     def start():
         stream = (
@@ -177,9 +176,7 @@ def run_idempotent_replay(
     try:
         q.awaitTermination()
     except Exception:
-        if crash_batch_id is None:
-            raise
-        # the injected crash: offsets for crash_batch_id never
+        # the injected crash: offsets for batch 1 never
         # committed, so the restart below REPLAYS that transaction.
         q = start()
         q.awaitTermination()

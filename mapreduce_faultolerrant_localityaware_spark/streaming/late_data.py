@@ -81,15 +81,9 @@ def stage_three_batch_input(spark: SparkSession, events: DataFrame) -> str:
     return in_dir
 
 
-def late_window_counts(
-    spark: SparkSession,
-    in_dir: str,
-    schema,
-    window_len: str = "1 hour",
-    delay: str = "1 hour",
-) -> DataFrame:
+def late_window_counts(spark: SparkSession, in_dir: str, schema) -> DataFrame:
     """Append-mode tumbling counts over the staged three-batch input:
-    one file per micro-batch, watermark ``delay``, integer-cent sums
+    one file per micro-batch, ``1 hour`` watermark, integer-cent sums
     for hash-stable output.  Emits ONLY finalized windows; rows from
     the last batch whose window the two-batches-back watermark already
     passed are dropped — the bounded-state contract that makes this
@@ -104,8 +98,8 @@ def late_window_counts(
     if ts_type != "timestamp":
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        stream.withWatermark("ts", delay)
-        .groupBy(F.window(F.col("ts"), window_len).alias("win"), F.col("event_type"))
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window(F.col("ts"), "1 hour").alias("win"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),

@@ -58,12 +58,7 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    timeout: bool = False,
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, timeout: bool = False) -> DataFrame:
     """Streaming ``DataFrame[user_id, ts, ...]`` → per-user session rows.
 
     Emits the open session (closed=False) on every update and a final
@@ -71,7 +66,7 @@ def sessionize_stream(
     when the event-time watermark passes ``last_seen + gap`` with no
     further key activity (idle-key flush).
     """
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
 
     def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (user_id,) = key
@@ -115,7 +110,7 @@ def sessionize_stream(
 
     grouped = events
     if timeout:
-        grouped = events.withWatermark("ts", watermark)
+        grouped = events.withWatermark("ts", "30 minutes")
     mode = GroupStateTimeout.EventTimeTimeout if timeout else GroupStateTimeout.NoTimeout
     return grouped.groupBy("user_id").applyInPandasWithState(
         fold, OUTPUT_SCHEMA, STATE_SCHEMA, "update", mode

@@ -29,8 +29,6 @@ def streaming_wordcount(lines: DataFrame, text_col: str = "value") -> DataFrame:
 
 def windowed_event_counts(
     events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
     window_len: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
@@ -40,32 +38,26 @@ def windowed_event_counts(
     memory under unbounded input (the scale-critical property).
     """
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_len).alias("win"), F.col(key_col))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window_len).alias("win"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            key_col,
+            "event_type",
             "n_events",
             "sum_value",
         )
     )
 
 
-def session_window_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def session_window_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """NATIVE session-window aggregation — ``F.session_window`` with a
     dynamic gap close, the built-in sibling of the custom
     applyInPandasWithState sessionizer (sessionize_stream.py): Spark's
     state store merges overlapping AND adjacent per-event windows
     ``[t, t+gap)`` itself, so a session is a maximal run of events
-    with consecutive gaps of AT MOST ``gap`` (an event landing exactly
+    with consecutive gaps of AT MOST ``30 minutes`` (an event landing exactly
     at the previous session's end EXTENDS it — empirically pinned in
     tests/test_streaming_session_window.py; the break is strictly
     greater), start = min event time, end = max event time + gap.
@@ -78,9 +70,9 @@ def session_window_counts(
     gaps-and-islands sessionization of the same input — the oracle.
     """
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark("ts", watermark)
         .groupBy(
-            F.session_window(F.col(ts_col), gap).alias("win"), F.col(key_col)
+            F.session_window(F.col("ts"), "30 minutes").alias("win"), F.col("user_id")
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -89,40 +81,30 @@ def session_window_counts(
         .select(
             F.col("win.start").alias("session_start"),
             F.col("win.end").alias("session_end"),
-            key_col,
+            "user_id",
             "n_events",
             "sum_value",
         )
     )
 
 
-def quality_filter_stream(
-    docs: DataFrame, threshold: float = 0.5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_filter_stream(docs: DataFrame) -> DataFrame:
     """Streaming ingestion-time quality gate: score each arriving doc
     with the batch quality heuristics (same expression tree —
     textstats.quality_score works unchanged on a streaming relation
     because it is a pure stateless projection) and pass only docs at
-    or above ``threshold``.  The shape every live crawl pipeline
+    or above 0.5.  The shape every live crawl pipeline
     runs: filter at ingest, BEFORE anything is stored or shuffled —
     stateless, so it needs no watermark, no state store, and scales
     as a pure map over arriving files.
     """
     from ..operators.textstats import quality_score
 
-    scored = quality_score(docs, text_col=text_col, id_col=id_col)
-    return scored.filter(F.col("quality") >= threshold)
+    scored = quality_score(docs)
+    return scored.filter(F.col("quality") >= 0.5)
 
 
-def ohlc_stream(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    window: str = "1 day",
-    watermark: str = "1 day",
-) -> DataFrame:
+def ohlc_stream(events: DataFrame) -> DataFrame:
     """Streaming OHLC bars: the SAME associative struct-min/max
     aggregation as the batch ``temporal.resample_ohlc``, over
     watermarked tumbling windows — because every per-bucket statistic
@@ -133,21 +115,21 @@ def ohlc_stream(
     bounds how many windows stay open.
     """
     s = F.struct(
-        F.col(ts_col).alias("ts"), F.col(id_col).alias("eid"), F.col(value_col).alias("v")
+        F.col("ts").alias("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
     )
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"), F.col(key_col))
+        events.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day").alias("win"), F.col("user_id"))
         .agg(
             F.round(F.min(s)["v"], 6).alias("open"),
             F.round(F.max(s)["v"], 6).alias("close"),
-            F.round(F.min(value_col), 6).alias("low"),
-            F.round(F.max(value_col), 6).alias("high"),
+            F.round(F.min("value"), 6).alias("low"),
+            F.round(F.max("value"), 6).alias("high"),
             F.count(F.lit(1)).cast("long").alias("n_events"),
         )
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
-            key_col,
+            "user_id",
             "open",
             "close",
             "low",

@@ -47,7 +47,7 @@ def test_ann_incremental_recall_vs_bruteforce_merged(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 8)
     exact = similarity.ann_bruteforce(emb, queries, k=5).collect()
     approx = similarity.ann_incremental(
-        base, fresh, queries, k=5, n_cells=8, nprobe=6
+        base, fresh, queries, n_cells=8, nprobe=6
     ).collect()
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
     found = {(r["query_id"], r["neighbor_id"]) for r in approx}

@@ -38,7 +38,7 @@ def test_ann_ivf_kmeans_recall_vs_bruteforce(spark, sf_dir):
     emb = scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = similarity.ann_bruteforce(emb, queries, k=5).collect()
-    approx = similarity.ann_ivf_kmeans(emb, queries, k=5, n_cells=8, nprobe=6).collect()
+    approx = similarity.ann_ivf_kmeans(emb, queries, n_cells=8, nprobe=6).collect()
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
     found = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(truth & found) / len(truth)
@@ -54,7 +54,7 @@ def test_ann_ivf_kmeans_nprobe_monotone(spark, sf_dir):
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
 
     def recall(nprobe):
-        got = similarity.ann_ivf_kmeans(emb, queries, k=5, n_cells=8, nprobe=nprobe).collect()
+        got = similarity.ann_ivf_kmeans(emb, queries, n_cells=8, nprobe=nprobe).collect()
         return len(truth & {(r["query_id"], r["neighbor_id"]) for r in got}) / len(truth)
 
     r2, r8 = recall(2), recall(8)
@@ -67,7 +67,7 @@ def test_ann_ivf_kmeans_plan_shape(spark, sf_dir):
 
     emb = scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    plan = formatted_plan(similarity.ann_ivf_kmeans(emb, queries, k=5))
+    plan = formatted_plan(similarity.ann_ivf_kmeans(emb, queries))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     # probe join is an equi-join on cell with the query side broadcast
@@ -77,15 +77,15 @@ def test_ann_ivf_kmeans_plan_shape(spark, sf_dir):
 
 def test_pq_fit_deterministic_and_shaped(spark, sf_dir):
     emb = scan(spark, sf_dir, "embeddings")
-    b1 = similarity.pq_fit(emb, m=8, n_codes=16, max_iter=2)
-    b2 = similarity.pq_fit(emb, m=8, n_codes=16, max_iter=2)
+    b1 = similarity.pq_fit(emb, m=8, max_iter=2)
+    b2 = similarity.pq_fit(emb, m=8, max_iter=2)
     assert b1 == b2  # bit-identical: no RNG, index-order sums
     assert len(b1) == 8 and len(b1[0]) == 16 and len(b1[0][0]) == 8
 
 
 def test_pq_encode_codes_and_exact_rnorm(spark, sf_dir):
     emb = scan(spark, sf_dir, "embeddings")
-    books = similarity.pq_fit(emb, m=8, n_codes=16, max_iter=2)
+    books = similarity.pq_fit(emb, m=8, max_iter=2)
     enc = similarity.pq_encode(emb, books).collect()
     assert len(enc) == emb.count()
     row = enc[0]
@@ -105,7 +105,7 @@ def test_ann_pq_recall_vs_bruteforce(spark, sf_dir):
     emb = scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = similarity.ann_bruteforce(emb, queries, k=5).collect()
-    approx = similarity.ann_pq(emb, queries, k=5).collect()
+    approx = similarity.ann_pq(emb, queries).collect()
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
     found = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(truth & found) / len(truth)
@@ -127,7 +127,7 @@ def test_ann_ivfpq_recall_vs_bruteforce(spark, sf_dir):
     emb = scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = similarity.ann_bruteforce(emb, queries, k=5).collect()
-    approx = similarity.ann_ivfpq(emb, queries, k=5).collect()
+    approx = similarity.ann_ivfpq(emb, queries).collect()
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
     found = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(truth & found) / len(truth)

@@ -6,10 +6,14 @@ Regenerate with:
 
     python tools/check_oracle.py --json CORRECTNESS_local_r<N>_sf0.001.json /root/testdata/sf0.001
     python tools/check_oracle.py --json CORRECTNESS_local_r<N>_sf0.01.json  /root/testdata/sf0.01
+
+The same static pass over the repo's source also fails on a package
+function option that no call in the repo sets.
 """
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -160,3 +164,70 @@ def test_bench_artifact_covers_headline_list():
     assert not unknown, f"HEADLINE names not in queries(): {sorted(unknown)}"
     # the artifact's own consistency: totals recompute from the map
     assert abs(report["value"] - round(sum(report["queries"].values()), 3)) < 0.01
+
+
+# deployment settings a cluster launch passes to get_spark, not operator
+# options: the repo's own callers all run local[...]
+UNSET_OPTION_ALLOW = {"session.get_spark:master"}
+PKG = "mapreduce_faultolerrant_localityaware_spark"
+
+
+def _repo_trees():
+    paths = [os.path.join(REPO, "__spark_entry__.py"), os.path.join(REPO, "bench.py")]
+    for top in (PKG, "tools", "perfbench", "tests"):
+        paths += glob.glob(os.path.join(REPO, top, "**", "*.py"), recursive=True)
+    for path in paths:
+        with open(path) as f:
+            yield os.path.relpath(path, REPO), ast.parse(f.read())
+
+
+def _package_defs(mod, node, prefix="", cls=None):
+    """(name, callee name, def, is_method) for every function in ``node``."""
+    for ch in ast.iter_child_nodes(node):
+        if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            static = any(getattr(d, "id", None) == "staticmethod" for d in ch.decorator_list)
+            callee = cls if cls and ch.name == "__init__" else ch.name
+            yield f"{mod}.{prefix}{ch.name}", callee, ch, bool(cls) and not static
+            yield from _package_defs(mod, ch, f"{prefix}{ch.name}.")
+        elif isinstance(ch, ast.ClassDef):
+            yield from _package_defs(mod, ch, f"{prefix}{ch.name}.", ch.name)
+        else:
+            yield from _package_defs(mod, ch, prefix, cls)
+
+
+def test_every_operator_option_is_set_by_some_call():
+    """A defaulted parameter that no call in the repo sets is a setting
+    nothing exercises: the function should use the value.  A call sets
+    a parameter by keyword, by position, or by passing ``*args`` or
+    ``**kwargs``; calls are matched by the callee's name (a class call
+    is its ``__init__``), so a name shared with another function can
+    only hide an unset option, never invent one."""
+    defs, calls = [], {}
+    for rel, tree in _repo_trees():
+        if rel.startswith(PKG + os.sep):
+            mod = rel[len(PKG) + 1:-3].replace(os.sep, ".")
+            defs += _package_defs(mod, tree)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                calls.setdefault(name, []).append(n)
+    unset = []
+    for qual, callee, fn, is_method in defs:
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        first = len(pos) - len(a.defaults)
+        options = [(p.arg, i - is_method) for i, p in enumerate(pos) if i >= first]
+        options += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for name, idx in options:
+            if not any(
+                any(isinstance(x, ast.Starred) for x in c.args)
+                or any(k.arg in (None, name) for k in c.keywords)
+                or (idx is not None and len(c.args) > idx)
+                for c in calls.get(callee, [])
+            ):
+                unset.append(f"{qual}:{name}")
+    unset = sorted(set(unset) - UNSET_OPTION_ALLOW)
+    assert not unset, (
+        f"{len(unset)} defaulted parameters that no call sets (use the value "
+        f"instead): {unset}"
+    )

@@ -52,7 +52,7 @@ def test_contamination_duplicate_is_fully_contained(spark):
             (2, "totally different training text here"),
         ],
     )
-    rows = {r["doc_id"]: r for r in corpus.contamination_check(df, bench_mod=50).collect()}
+    rows = {r["doc_id"]: r for r in corpus.contamination_check(df).collect()}
     assert rows[0]["containment"] == 1.0
     assert rows[50]["containment"] == 0.0
     assert rows[50]["n_hit"] == 0

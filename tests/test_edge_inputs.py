@@ -332,15 +332,15 @@ _UNDIRECTED_OPS = {
     "triangle_count": lambda e: graph.triangle_count(e, "src", "dst"),
     "clustering_coefficient": lambda e: graph.clustering_coefficient(e, "src", "dst"),
     "bfs_hops": lambda e: graph.bfs_hops(
-        e, e.sparkSession.range(1, 2), max_hops=3, src="src", dst="dst"),
+        e, e.sparkSession.range(1, 2), src="src", dst="dst"),
     "pagerank": lambda e: graph.pagerank(e, iters=5, src="src", dst="dst"),
     "label_propagation": lambda e: graph.label_propagation(e, rounds=3, src="src", dst="dst"),
-    "kcore_peel": lambda e: graph.kcore_peel(e, k=2, rounds=4, src="src", dst="dst"),
+    "kcore_peel": lambda e: graph.kcore_peel(e, rounds=4, src="src", dst="dst"),
     "common_neighbors": lambda e: graph.common_neighbors(e, "src", "dst"),
     "neighborhood_jaccard": lambda e: graph.neighborhood_jaccard(e, "src", "dst"),
-    "degree_histogram": lambda e: graph.degree_histogram(e, "src", "dst"),
-    "assortativity": lambda e: graph.assortativity(e, "src", "dst"),
-    "boruvka_msf": lambda e: graph.boruvka_msf(e, "src", "dst", "w"),
+    "degree_histogram": lambda e: graph.degree_histogram(e),
+    "assortativity": lambda e: graph.assortativity(e),
+    "boruvka_msf": lambda e: graph.boruvka_msf(e),
 }
 
 

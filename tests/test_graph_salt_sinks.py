@@ -143,10 +143,12 @@ def _left_cached(spark, monkeypatch, name: str, n: int) -> int:
 
 def test_cc_releases_checkpoint_blocks(spark, monkeypatch):
     """Each propagation round frees the previous round's localCheckpoint
-    blocks: a long chain (many rounds) must leave only the FINAL labels
-    checkpoint cached, not one relation per round."""
-    left = [_left_cached(spark, monkeypatch, "connected_components", n) for n in (2, 8)]
-    assert left == [1, 1], f"checkpoint blocks leaked: {left} cached RDDs at 2 and 8 rounds"
+    blocks, and the edge cut is freed once the last round's labels are
+    cut: connected components and label propagation must leave only the
+    FINAL labels checkpoint cached, not one relation per round."""
+    for name in ("connected_components", "label_propagation"):
+        left = [_left_cached(spark, monkeypatch, name, n) for n in (2, 8)]
+        assert left == [1, 1], f"{name} leaves {left} cached RDDs at 2 and 8 rounds"
 
 
 @pytest.mark.parametrize("name", sorted(set(_ROUND_LOOPS) - {"connected_components"}))

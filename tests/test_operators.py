@@ -136,7 +136,7 @@ def test_ann_bruteforce_self_nearest(spark):
 def test_ann_ivf_prunes_to_cell(spark):
     data = [(0, [1.0, 0.0], 0), (1, [0.99, 0.01], 0), (2, [1.0, 0.01], 1)]
     df = spark.createDataFrame(data, ["vec_id", "embedding", "label"])
-    out = similarity.ann_ivf(df, df.filter(F.col("vec_id") == 0), k=5)
+    out = similarity.ann_ivf(df, df.filter(F.col("vec_id") == 0))
     assert [r["neighbor_id"] for r in out.collect()] == [1]  # cell 1 pruned
 
 

@@ -474,7 +474,7 @@ def test_forecast_baseline_worked_example(spark):
     vals = [10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 16.0, 12.0, 11.0]
     rows = [(dt.datetime(2024, 1, 1 + i, 12, 0), v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "ts timestamp, value double")
-    r = ev.forecast_baseline(df, "ts", "value", season=7).collect()[0]
+    r = ev.forecast_baseline(df, "ts", "value").collect()[0]
     cents = [int(v * 100) for v in vals]
     errs = [abs(cents[7] - cents[0]), abs(cents[8] - cents[1])]
     naive = [abs(cents[i] - cents[i - 1]) for i in range(1, 9)]

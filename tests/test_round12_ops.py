@@ -96,7 +96,7 @@ def test_rfm_null_recency_nulls_last(spark):
     assert per.where(F.col("o_custkey") == 99).collect()[0]["last_d"] is None
     # the null-recency customer must take the HIGHEST r_score present
     # for its tie position (sorted last in the negated ascending order)
-    seg = rfm_segments(orders, n_tiles=5)
+    seg = rfm_segments(orders)
     assert seg.agg(F.sum("n_customers")).collect()[0][0] == 21
     # reference: the pre-stacking per-metric form — SQL ntile with
     # rec DESC **NULLS LAST** (tiny input, a test-only window is fine)

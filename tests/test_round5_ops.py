@@ -137,7 +137,7 @@ def test_interval_join_streams_equals_batch(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src + "*")
     clicks = stream.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = stream.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
-    joined = interval_join_streams(clicks, views, on="user_id", tolerance="5 minutes")
+    joined = interval_join_streams(clicks, views)
     out = run_to_batch(
         joined.select(
             F.col("l.event_id").alias("click_id"), F.col("r.event_id").alias("view_id")
@@ -196,7 +196,7 @@ def test_resize_media_area_ratio(spark):
     df = spark.createDataFrame([(1, bytearray(b"hello"))], ["media_id", "blob"])
     decoded = decode_media(df)
     w, h, feats = decoded.select("width", "height", "features").collect()[0]
-    out = resize_media(decoded, target_w=32, target_h=32).collect()[0]
+    out = resize_media(decoded).collect()[0]
     assert out["resized_w"] == 32 and out["resized_h"] == 32
     ratio = 1024.0 / (w * h)
     assert all(
@@ -250,7 +250,7 @@ def test_bfs_hops_path_graph(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["doc_a", "doc_b"]
     )
     seeds = spark.createDataFrame([(1,), (10,), (99,)], ["doc_id"])
-    got = {r["node"]: r["hops"] for r in bfs_hops(pairs, seeds, max_hops=3).collect()}
+    got = {r["node"]: r["hops"] for r in bfs_hops(pairs, seeds).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 10: 0, 11: 1, 99: 0}
     # node 5 is 4 hops out — beyond the horizon, absent
     assert 5 not in got

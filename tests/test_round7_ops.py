@@ -220,12 +220,12 @@ def test_kcore_peel_known_structure(spark):
     clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     chain = [(4, 5), (5, 6), (6, 7)]
     df = spark.createDataFrame(clique + chain, ["doc_a", "doc_b"])
-    out = {r["node"]: r["core_deg"] for r in kcore_peel(df, k=2, rounds=4).collect()}
+    out = {r["node"]: r["core_deg"] for r in kcore_peel(df, rounds=4).collect()}
     assert set(out) == {1, 2, 3, 4}
     assert all(d == 3 for d in out.values())  # clique degrees intact
 
     # one round only: just the leaf (7) peels, the chain tail survives
-    one = {r["node"] for r in kcore_peel(df, k=2, rounds=1).collect()}
+    one = {r["node"] for r in kcore_peel(df, rounds=1).collect()}
     assert one == {1, 2, 3, 4, 5, 6}
 
 
@@ -554,7 +554,7 @@ def test_decayed_sum_halves_per_half_life(spark):
         (2, t0 - dt.timedelta(hours=48), 8.0),
     ]
     df = spark.createDataFrame(rows, ["user_id", "ts", "value"])
-    out = {r["user_id"]: r for r in decayed_sum(df, half_life_hours=24.0).collect()}
+    out = {r["user_id"]: r for r in decayed_sum(df).collect()}
     assert out[1]["decayed_value"] == 15.0  # 10 + 10/2
     assert out[2]["decayed_value"] == 2.0   # 8 / 4
     assert out[1]["n_events"] == 2
@@ -884,12 +884,12 @@ def test_snm_multikey_catches_prefix_divergent_dups(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     single = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.dedup_sorted_neighborhood(docs, threshold=0.5).collect()
+        for r in dedup.dedup_sorted_neighborhood(docs).collect()
     }
     multi = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.dedup_sorted_neighborhood(
-            docs, threshold=0.5, passes=("prefix", "sorted")
+            docs, passes=("prefix", "sorted")
         ).collect()
     }
     assert (1, 2) not in single  # 8 fillers separate them in prefix order
@@ -1451,7 +1451,7 @@ def test_streaming_fuzzy_dedup_matches_batch_operator(spark, sf_dir):
         F.col("doc_id") % 5 == 0
     )
     feed = streaming_ops.run_to_batch(
-        streaming_ops.fuzzy_dedup_stream(delta_s, base_b, max_hamming=3),
+        streaming_ops.fuzzy_dedup_stream(delta_s, base_b),
         spark,
         output_mode="append",
     ).collect()
@@ -1512,7 +1512,7 @@ def test_cusum_drift_identity_matches_recursion(spark):
             rows.append((eid, u, base + timedelta(minutes=i), v))
             eid += 1
     df = spark.createDataFrame(rows, ["event_id", "user_id", "ts", "value"])
-    out = {r["user_id"]: r for r in cusum_drift(df, threshold=50.0).collect()}
+    out = {r["user_id"]: r for r in cusum_drift(df).collect()}
 
     def ref_max_cusum(vals):
         mean = sum(int(round(v * 1e6)) for v in vals) // len(vals)
@@ -1601,7 +1601,7 @@ def test_rrf_fuse_hand_ranks(spark):
     sem = spark.createDataFrame(
         [(11, 0.9), (13, 0.8)], ["doc_id", "cos_sim"]
     )
-    rows = rrf_fuse(lex, sem, k=10, c=60).collect()
+    rows = rrf_fuse(lex, sem, k=10).collect()
     by_id = {r["doc_id"]: r for r in rows}
     assert by_id[11]["lex_rank"] == 2 and by_id[11]["sem_rank"] == 1
     assert abs(by_id[11]["rrf"] - round(1 / 62 + 1 / 61, 9)) < 1e-12
@@ -1625,7 +1625,7 @@ def test_ngram_novelty_first_doc_fully_novel(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r["doc_id"]: r for r in corpus.ngram_novelty(df, n=3).collect()}
+    out = {r["doc_id"]: r for r in corpus.ngram_novelty(df).collect()}
     assert out[1]["novelty_micro"] == 1_000_000
     assert out[2]["novelty_micro"] == 0
     assert out[3]["n_shingles"] == 4 and out[3]["n_novel"] == 3
@@ -1647,7 +1647,7 @@ def test_mad_outliers_exact_median(spark):
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    out = events_ops.mad_outliers(df, threshold=3.0).collect()
+    out = events_ops.mad_outliers(df).collect()
     assert len(out) == 1
     r = out[0]
     assert r["median_value"] == 3.5
@@ -1665,7 +1665,7 @@ def test_mmr_diversify_matches_pure_python_reference(spark, sf_dir):
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 
     emb = scan(spark, sf_dir, "embeddings")
-    got = similarity.mmr_diversify(emb, query_id=0, shortlist=16, k=6, lam=0.7).collect()
+    got = similarity.mmr_diversify(emb, query_id=0, shortlist=16, k=6).collect()
 
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows])
@@ -1844,7 +1844,7 @@ def test_unigram_kl_zero_for_identical_slices(spark):
         [(1, "a", "alpha beta gamma"), (2, "b", "alpha beta gamma")],
         "doc_id LONG, source STRING, text STRING",
     )
-    out = corpus.unigram_kl(df, group_col="source").collect()
+    out = corpus.unigram_kl(df).collect()
     assert len(out) == 2
     for r in out:
         # identical slice and corpus distributions (same support, same
@@ -2016,7 +2016,7 @@ def test_split_stratified_exact_proportions(spark, sf_dir):
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 
     docs = scan(spark, sf_dir, "documents")
-    out = corpus.split_stratified_exact(docs, weights=(80, 10, 10))
+    out = corpus.split_stratified_exact(docs)
     per = {
         (r["lang"], r["split"]): r["n"]
         for r in out.groupBy("lang", "split").agg(F.count("*").alias("n")).collect()
@@ -2031,7 +2031,7 @@ def test_split_stratified_exact_proportions(spark, sf_dir):
     # deterministic across invocations
     a = {(r["doc_id"], r["split"]) for r in out.collect()}
     b = {(r["doc_id"], r["split"])
-         for r in corpus.split_stratified_exact(docs, weights=(80, 10, 10)).collect()}
+         for r in corpus.split_stratified_exact(docs).collect()}
     assert a == b
 
 
@@ -2048,7 +2048,7 @@ def test_psi_drift_detects_injected_shift(spark):
     df = spark.createDataFrame(
         rows, "event_id LONG, user_id LONG, event_type STRING, ts STRING, value DOUBLE"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out = events_ops.psi_drift(df, n_bins=10).collect()
+    out = events_ops.psi_drift(df).collect()
     total = sum(r["psi_term"] for r in out)
     assert total > 0.25, f"PSI {total} did not flag an obvious shift"
     assert all(r["psi_term"] >= -1e-9 for r in out)  # terms are nonnegative
@@ -2058,7 +2058,7 @@ def test_psi_drift_detects_injected_shift(spark):
     df2 = spark.createDataFrame(
         same, "event_id LONG, user_id LONG, event_type STRING, ts STRING, value DOUBLE"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out2 = events_ops.psi_drift(df2, n_bins=10).collect()
+    out2 = events_ops.psi_drift(df2).collect()
     assert sum(r["psi_term"] for r in out2) < 0.1
 
 
@@ -2075,7 +2075,7 @@ def test_textrank_prefers_connected_words_over_plain_frequency(spark):
     for _ in range(30):
         docs.append((len(docs), "loop pair loop pair"))
     df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
-    out = corpus.textrank_keywords(df, min_count=5, k=5).collect()
+    out = corpus.textrank_keywords(df, k=5).collect()
     ranks = {r["token"]: r["rank_micro"] for r in out}
     assert "hub" in ranks
     assert ranks["hub"] == max(ranks.values())  # centrality wins
@@ -2086,7 +2086,7 @@ def test_histogram_equidepth_balanced_counts(spark, sf_dir):
     from mapreduce_faultolerrant_localityaware_spark.sources.scans import scan
 
     li = scan(spark, sf_dir, "lineitem")
-    out = relational.histogram_equidepth(li, "l_extendedprice", n_bins=10).collect()
+    out = relational.histogram_equidepth(li, "l_extendedprice").collect()
     total = li.count()
     assert len(out) == 10
     assert sum(r["n"] for r in out) == total
@@ -2135,7 +2135,7 @@ def test_revenue_concentration_tiny(spark):
     df = spark.createDataFrame(
         [(1, 80.0), (2, 15.0), (3, 5.0)], "o_custkey LONG, o_totalprice DOUBLE"
     )
-    r = relational.revenue_concentration(df, threshold_pct=80).collect()[0]
+    r = relational.revenue_concentration(df).collect()[0]
     assert (r["n_keys"], r["n_top"], r["total_value"]) == (3, 1, 100.0)
     assert r["top_share_pct"] == 80.0
 
@@ -2145,7 +2145,7 @@ def test_inverted_index_sampling_caps_postings(spark):
 
     docs = [(i, "common word" if i < 50 else "rare gem") for i in range(60)]
     df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
-    got = {r["token"]: r for r in corpus.inverted_index(df, sample_k=10).collect()}
+    got = {r["token"]: r for r in corpus.inverted_index(df).collect()}
     assert got["common"]["df"] == 50
     posts = got["common"]["sample_postings"].split(",")
     assert posts == [str(i) for i in range(10)]  # 10 smallest ids only
@@ -2199,7 +2199,7 @@ def test_sample_weighted_k_is_exact_k_and_weight_biased(spark):
     # 200 light docs (w=1) + 200 heavy docs (w=100): heavies dominate
     rows = [(i, 1 if i < 200 else 100) for i in range(400)]
     df = spark.createDataFrame(rows, "doc_id LONG, n_chars LONG")
-    out = relational.sample_weighted_k(df, k=50, weight_col="n_chars").collect()
+    out = relational.sample_weighted_k(df).collect()
     assert len(out) == 50
     heavy = sum(1 for r in out if r["doc_id"] >= 200)
     assert heavy >= 45   # P[heavy] ~ 100/101 per slot

@@ -65,7 +65,7 @@ def test_pattern_match_strict_adjacency(spark):
         rows, "event_id long, user_id long, ts timestamp, event_type string"
     )
     out = sorted(
-        tuple(r) for r in pattern_match(ev, ("view", "click", "purchase")).collect()
+        tuple(r) for r in pattern_match(ev).collect()
     )
     assert out == [(1, 1, 2, 3), (3, 9, 10, 11)]
 

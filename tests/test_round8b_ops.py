@@ -77,12 +77,9 @@ def test_hampel_flags_spike_not_shift(spark):
     vals = [10.0, 10.0, 10.0, 10.0, 99.0, 10.0, 10.0, 10.0]
     rows = [(1, i, float(v)) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "user_id long, event_id long, value double")
-    # hampel expects (value, user, order...) with default ts ordering —
-    # reuse event_id as both order key and id
-    out = hampel_outliers(
-        df, value_col="value", user_col="user_id",
-        order_cols=("event_id",), id_col="event_id", n=5, k=3,
-    )
+    # hampel reads (user_id, event_id, value) and orders by ts by
+    # default: reuse event_id as the order key
+    out = hampel_outliers(df, order_cols=("event_id",), n=5)
     flags = {r["event_id"]: r["is_outlier"] for r in out.collect()}
     assert flags[4] == 1  # the spike
     assert all(v == 0 for k_, v in flags.items() if k_ != 4)
@@ -95,10 +92,7 @@ def test_hampel_zero_mad_tie_rule(spark):
     value does not (strict >)."""
     rows = [(1, i, 10.0) for i in range(4)] + [(1, 4, 10.01)]
     df = spark.createDataFrame(rows, "user_id long, event_id long, value double")
-    out = hampel_outliers(
-        df, value_col="value", user_col="user_id",
-        order_cols=("event_id",), id_col="event_id", n=5, k=3,
-    )
+    out = hampel_outliers(df, order_cols=("event_id",), n=5)
     flags = {r["event_id"]: r["is_outlier"] for r in out.collect()}
     assert flags == {0: 0, 1: 0, 2: 0, 3: 0, 4: 1}
 

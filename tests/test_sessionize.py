@@ -27,7 +27,7 @@ def test_batch_sessionize_gap_splits(spark):
         (4, 200, _ts(0), 1.0),                           # other user, own session 1
     ]
     df = spark.createDataFrame(rows, ["event_id", "user_id", "ts", "value"])
-    out = {r["event_id"]: r["session_id"] for r in sessionize(df, gap_minutes=30).collect()}
+    out = {r["event_id"]: r["session_id"] for r in sessionize(df).collect()}
     assert out == {1: 1, 2: 1, 3: 2, 4: 1}
 
 
@@ -46,7 +46,7 @@ def test_streaming_sessionize_boundary_semantics(spark, tmp_path):
     src = str(tmp_path / "events_edge")
     spark.createDataFrame(rows, "user_id long, ts timestamp").write.parquet(src)
     stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    updates = M.run_to_batch(sessionize_stream(stream, gap_minutes=30), spark, "update")
+    updates = M.run_to_batch(sessionize_stream(stream), spark, "update")
     final = {
         (r["user_id"], r["session_start_us"]): (r["session_end_us"], r["n_events"])
         for r in updates.groupBy("user_id", "session_start_us")
@@ -71,7 +71,7 @@ def test_streaming_sessionize_stateful(spark):
         (F.col("value") % 3).alias("user_id"), F.col("timestamp").alias("ts")
     )
     q = (
-        sessionize_stream(events, gap_minutes=30)
+        sessionize_stream(events)
         .writeStream.format("memory")
         .queryName("sess_out")
         .outputMode("update")
@@ -139,7 +139,7 @@ def test_streaming_sessionize_event_time_timeout_flushes_idle_key(spark, tmp_pat
         .parquet(in_dir)
     )
     out = M.run_to_batch(
-        sessionize_stream(stream, gap_minutes=30, timeout=True, watermark="30 minutes"),
+        sessionize_stream(stream, timeout=True),
         spark,
         "update",
     )

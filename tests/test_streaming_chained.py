@@ -68,8 +68,7 @@ def test_join_then_window_agg_boundary_strict(spark):
     ls = spark.readStream.schema(schema).parquet(ldir)
     rs = spark.readStream.schema(schema).parquet(rdir)
     j = interval_join_streams(
-        ls, rs, on="user_id", tolerance="5 minutes", watermark="10 minutes",
-        how="inner",
+        ls, rs, how="inner",
     )
     agg = (
         j.select(F.col("l.ts").alias("cts"))

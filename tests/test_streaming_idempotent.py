@@ -56,7 +56,7 @@ def test_replay_after_commit_is_deduped(spark, sf_dir, tmp_path):
 
     sink = run_idempotent_replay(
         spark, in_dir, schema, str(tmp_path / "out"), pipe,
-        output_mode="append", crash_batch_id=1,
+        output_mode="append",
     )
     # the replay happened and was deduped: batch 1 attempted twice,
     # second attempt skipped
@@ -133,7 +133,7 @@ def test_update_mode_upsert_reader_latest_wins(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "upd")
     run_idempotent_replay(
-        spark, in_dir, schema, out, agg, output_mode="update", crash_batch_id=1,
+        spark, in_dir, schema, out, agg, output_mode="update",
     )
     got = {
         r["event_type"]: r["n"]

@@ -60,7 +60,7 @@ def _run(spark, left_rows, right_rows, how="leftOuter"):
     ls = spark.readStream.schema(schema).parquet(ldir)
     rs = spark.readStream.schema(schema).parquet(rdir)
     j = interval_join_streams(
-        ls, rs, on="user_id", tolerance="5 minutes", watermark="10 minutes", how=how
+        ls, rs, how=how
     )
     out = j.select(
         F.col("l.event_id").alias("left_id"),

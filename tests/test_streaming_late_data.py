@@ -63,7 +63,7 @@ def test_late_drop_and_emission_boundaries(spark):
         shutil.move(part, dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
     schema = spark.read.parquet(in_dir).schema
-    agg = late_window_counts(spark, in_dir, schema, window_len="1 hour", delay="1 hour")
+    agg = late_window_counts(spark, in_dir, schema)
     out = run_to_batch(agg, spark, output_mode="append")
     got = {
         (r["window_start"].strftime("%H:%M"), r["n_events"]) for r in out.collect()

@@ -69,9 +69,7 @@ def test_session_merge_and_expiry_boundaries(spark):
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    agg = session_window_counts(
-        stream, gap="30 minutes", watermark="1 hour"
-    )
+    agg = session_window_counts(stream, watermark="1 hour")
     out = run_to_batch(agg, spark, output_mode="append")
     got = {
         (

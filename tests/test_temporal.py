@@ -193,7 +193,7 @@ def test_resample_ohlc_deterministic_open_close(spark):
         (5, 2, t0, 7.0),
     ]
     df = spark.createDataFrame(rows, ["event_id", "user_id", "ts", "value"])
-    out = {r["user_id"]: r for r in temporal.resample_ohlc(df, unit="day").collect()}
+    out = {r["user_id"]: r for r in temporal.resample_ohlc(df).collect()}
     r1 = out[1]
     assert (r1["open"], r1["close"], r1["low"], r1["high"], r1["n_events"]) == (
         10.0, 20.0, 5.0, 20.0, 4,
