@@ -297,41 +297,20 @@ def mixture_sample(docs: DataFrame, budget_tokens: int = 1500) -> DataFrame:
     order-independent of the input layout — no RNG, no seed drift
     across retries (the reference has no sampling surface at all).
 
-    100 TB shape — bucketed TWO-PASS, never a single-task sort of a
-    giant group: the rank order (rank_key, id) is coarsened into 256
-    buckets by the rank hash's first byte, so
-      * pass 1 aggregates per-(group, bucket) token totals — a tiny
-        relation (|groups|·256 rows) whose within-group prefix sum
-        gives each bucket's starting offset;
-      * buckets whose offset already exceeds the budget are dropped
-        BEFORE any sort (the broadcast join below) — with a small
-        budget against a billion-doc group, ~all of the group never
-        sorts at all;
-      * pass 2 computes the exact running total as bucket offset +
-        a bucket-LOCAL running sum, windowed by (group, bucket) —
-        256-way parallel per group instead of one task holding the
-        whole group.
-    The bucket boundaries respect the rank order (a hash-prefix bucket
-    is a contiguous rank range), so the output is IDENTICAL to the
-    single-window formulation, cum_tokens included.
+    Shape: one running-sum window partitioned by ``source`` and
+    ordered by (rank_key, doc_id) — one shuffle on the group key, each
+    group sorted once in its own task — then a filter on the running
+    total.  Returns ``doc_id, source, n_tokens, cum_tokens``.
     """
     base = docs.select(
         F.col("doc_id"),
         F.col("source"),
         F.size(tokens("text", lowercase=True)).cast("long").alias("n_tokens"),
         F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))).alias("rank_key"),
-    ).withColumn("bucket", F.substring("rank_key", 1, 2))
-    btot = base.groupBy("source", "bucket").agg(F.sum("n_tokens").alias("btok"))
-    wb = Window.partitionBy("source").orderBy("bucket")
-    live = (
-        btot.withColumn("offset", F.sum("btok").over(wb) - F.col("btok"))
-        .where(F.col("offset") <= budget_tokens)
-        .select("source", "bucket", "offset")
     )
-    w2 = Window.partitionBy("source", "bucket").orderBy("rank_key", "doc_id")
+    w = Window.partitionBy("source").orderBy("rank_key", "doc_id")
     return (
-        base.join(F.broadcast(live), ["source", "bucket"])
-        .withColumn("cum_tokens", F.col("offset") + F.sum("n_tokens").over(w2))
+        base.withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .where(F.col("cum_tokens") <= budget_tokens)
         .select("doc_id", "source", "n_tokens", "cum_tokens")
     )
@@ -654,17 +633,11 @@ def shard_assign(docs: DataFrame, n_shards: int = 16) -> DataFrame:
     which is what SGD wants and what a seeded ``.orderBy(rand())``
     cannot reproduce across engines.
 
-    Scale shape — the bucketed two-pass (same discipline as
-    mixture_sample): a naive ``row_number() OVER (PARTITION BY
-    shard)`` funnels each shard through ONE task (N/n_shards rows —
-    terabytes at 100 TB).  Instead the digest's first two hex chars
-    form a PREFIX bucket (256 per shard: lexicographic digest order ==
-    (bucket, digest) order by construction), pass 1 counts per
-    (shard, bucket) — n_shards·256 tiny rows, prefix-summed with a
-    window over that tiny frame — and pass 2 ranks within
-    (shard, bucket) (n_shards·256 parallel groups) and adds the
-    broadcast offset.  Only (digest, id) pairs ride the exchange;
-    writing shard files is then ``partitionBy(shard)`` on this frame.
+    Shape: one ``row_number()`` window partitioned by shard and
+    ordered by (digest, doc_id) — only (id, digest, shard) rows ride
+    the one exchange; writing shard files is then ``partitionBy(shard)``
+    on this frame.  A NULL id digests to a NULL shard, which is its own
+    window partition, so the row keeps a (NULL-shard) manifest entry.
 
     Returns ``doc_id, shard, pos``.
     """
@@ -672,46 +645,9 @@ def shard_assign(docs: DataFrame, n_shards: int = 16) -> DataFrame:
     shard = (F.conv(F.substring(digest, 1, 8), 16, 10).cast("long") % n_shards).alias(
         "shard"
     )
-    h = ensure_parallelism(docs).select(
-        F.col("doc_id"),
-        digest.alias("digest"),
-        shard,
-        F.substring(digest, 1, 2).alias("bucket"),
-    )
-    counts = h.groupBy("shard", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    w_off = (
-        Window.partitionBy("shard")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = counts.select(
-        "shard",
-        "bucket",
-        (F.sum("cnt").over(w_off) - F.col("cnt")).alias("offset"),
-    )
-    w_in = Window.partitionBy("shard", "bucket").orderBy(F.asc("digest"), F.asc("doc_id"))
-    # null-safe join: a NULL id digests to NULL shard/bucket, and the
-    # (NULL, NULL) offsets group must still match so the row keeps a
-    # (NULL-shard) manifest entry instead of silently vanishing —
-    # matching the oracle's row_number over the NULL partition.
-    # offsets derives from h, so alias both sides (self-join lineage).
-    hf, of = h.alias("_h"), F.broadcast(offsets).alias("_o")
-    return (
-        hf.join(
-            of,
-            F.col("_h.shard").eqNullSafe(F.col("_o.shard"))
-            & F.col("_h.bucket").eqNullSafe(F.col("_o.bucket")),
-        )
-        .select(
-            F.col("_h.doc_id").alias("doc_id"),
-            F.col("_h.shard").alias("shard"),
-            F.col("_h.digest").alias("digest"),
-            F.col("_h.bucket").alias("bucket"),
-            F.col("_o.offset").alias("offset"),
-        )
-        .withColumn("pos", (F.row_number().over(w_in) + F.col("offset")).cast("long"))
-        .select("doc_id", "shard", "pos")
-    )
+    h = ensure_parallelism(docs).select(F.col("doc_id"), digest.alias("digest"), shard)
+    w = Window.partitionBy("shard").orderBy(F.asc("digest"), F.asc("doc_id"))
+    return h.select("doc_id", "shard", F.row_number().over(w).cast("long").alias("pos"))
 
 
 def pmi_collocations(docs: DataFrame) -> DataFrame:
@@ -1743,7 +1679,7 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int = 20_000) -> DataFra
     """
     n_tok = F.size(tokens("text", lowercase=True)).cast("long")
     base = ensure_parallelism(docs).select(
-        F.col("doc_id"), F.col("source").alias("source"), n_tok.alias("n_tokens")
+        F.col("doc_id"), F.col("source"), n_tok.alias("n_tokens")
     )
     totals = base.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     n_src = totals.agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
@@ -1867,16 +1803,6 @@ def token_dispersion(docs: DataFrame, top_k: int = 20) -> DataFrame:
     )
 
 
-#: js_divergence path dispatch: the pair-broadcast fan-out generates
-#: (S−1)·Σ_g V_g rows per side (2 ln() per union token — compute-lean,
-#: shuffle-heavy); above this bound the token-keyed decomposition
-#: (S·V rows shuffled once, ~3× the ln() per matched token) wins on
-#: shuffle bytes.  The exact fan-out is known driver-side from the
-#: stats rollup, so the choice is deterministic; both paths produce
-#: bit-identical output (hash-verified at sf0.001/0.01/0.1).
-JSD_FANOUT_LIMIT = 64_000_000
-
-
 def _jsd_term_nano(csa: Column, csb: Column) -> Column:
     """One token's JS-divergence term in integer NANO units, for
     counts ``csa``/``csb`` in the pair's two slices (add-one smoothed
@@ -1887,27 +1813,7 @@ def _jsd_term_nano(csa: Column, csb: Column) -> Column:
     return F.round((0.5 * pa * F.log(pa / m) + 0.5 * pb * F.log(pb / m)) * 1e9).cast("long")
 
 
-def _jsd_finish(per_pair: DataFrame) -> DataFrame:
-    """Shared js_divergence tail: fold the analytic both-absent term
-    onto the per-pair exact sums and shape the output.  ``per_pair``
-    carries (ga, gb, na, nb, v, union_types, s_nano)."""
-    p0 = 1.0 / (F.col("na") + F.col("v"))
-    q0 = 1.0 / (F.col("nb") + F.col("v"))
-    m0 = (p0 + q0) / 2
-    tail = (F.col("v") - F.col("union_types")) * (
-        0.5 * p0 * F.log(p0 / m0) + 0.5 * q0 * F.log(q0 / m0)
-    )
-    return per_pair.select(
-        F.col("ga").alias("source_a"),
-        F.col("gb").alias("source_b"),
-        F.col("na").cast("long").alias("n_a"),
-        F.col("nb").cast("long").alias("n_b"),
-        "union_types",
-        F.round(F.col("s_nano") / 1e9 + tail, 6).alias("jsd"),
-    ).orderBy("source_a", "source_b")
-
-
-def js_divergence(docs: DataFrame, fanout_limit: int = JSD_FANOUT_LIMIT) -> DataFrame:
+def js_divergence(docs: DataFrame) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between every two corpus
     slices' unigram token distributions — the SYMMETRIC, bounded
     ([0, ln 2]) companion to :func:`unigram_kl` (KL ranks each slice
@@ -1927,22 +1833,18 @@ def js_divergence(docs: DataFrame, fanout_limit: int = JSD_FANOUT_LIMIT) -> Data
     discipline); the tail is one scalar double expression over exact
     ints both engines share.
 
-    Scale shape: ONE tokenize pass, made literal in round 11 — the
-    (grp, token, count) table is CHECKPOINTED (reliable when a
-    checkpoint dir is set, else local — the graph-op posture) before
-    the driver-side codebook collect, so the corpus is scanned once
-    and both the collect and the final pair job read the materialized
-    blocks (round 10 re-evaluated the uncached tokenize+groupBy
-    lineage in each of its two collects AND the final job — three
-    corpus scans); the per-slice totals and the global vocabulary
-    size fold into ONE collected rollup aggregate (one job, not two).
-    The pair table is source-domain-sized (P = S(S−1)/2 pairs,
-    broadcast); each slice's (token, count) rows are hit twice via
-    broadcast pair fan-out (≤ P·V rows, vocabulary-scale, never
-    document-scale), merged with one full-outer shuffle on
-    (pair, token), then partial-agged back to P rows.  Returns
-    ``(source_a, source_b, n_a, n_b, union_types, jsd)`` ordered by
-    the pair.
+    Scale shape: ONE tokenize pass.  The (grp, token, count) table is
+    checkpointed before the driver-side rollup collect (per-slice
+    token totals plus the global vocabulary size V in one job), so the
+    collect and the final pair job both read the materialized blocks.
+    The pair table is source-domain-sized (P = S(S−1)/2 pairs, built
+    driver-side and broadcast).  Each slice's (token, count) rows fan
+    out to every pair they belong to, once per side ((S−1)·Σ V_g rows
+    per side: vocabulary-scale, never document-scale); one full-outer
+    shuffle on (pair, token) merges the two sides, two ``ln()`` per
+    union token, and a partial aggregate folds back to P rows.
+    Returns ``(source_a, source_b, n_a, n_b, union_types, jsd)``
+    ordered by the pair.
     """
     sc = token_counts(
         docs.withColumnRenamed("source", "grp"), "text", "grp", token="t", n="cs"
@@ -1981,143 +1883,41 @@ def js_divergence(docs: DataFrame, fanout_limit: int = JSD_FANOUT_LIMIT) -> Data
     pairs = docs.sparkSession.createDataFrame(
         pair_rows, "ga string, gb string, na long, nb long, v long"
     )
-    # Round-12 dual path.  The round-11 shape fans each slice's
-    # (token, count) rows out to every pair it belongs to — exactly
-    # (S−1)·Σ_g V_g rows per side — and merges the sides with one
-    # full-outer shuffle on (pair, token): 2 ln() per union token,
-    # cheap compute, S²-scale shuffle.  The decomposed shape (below)
-    # shuffles only the S·V-row token table once but pays ~3× the
-    # ln() per matched token.  At sf0.1 (S=20, fan-out ≈ 15M rows)
-    # the fan-out path is 1.7× faster warm (interleaved quiet-window
-    # A/B, round 12); at corpus scale the fan-out's shuffle bytes
-    # dominate and the decomposition wins.  Both operands of the
-    # dispatch are EXACT driver-side numbers from the stats rollup,
-    # so the choice is deterministic, and the two paths are
-    # bit-identical (per-term rounding to NANO longs happens before
-    # any summation; every piece is an exact BIGINT — hash-verified
-    # at all three SFs on both paths).
-    fanout_rows = max(0, len(tt_rows) - 1) * sum(int(r["v"]) for r in tt_rows)
-    if fanout_rows <= fanout_limit:
-        left = sc.join(
-            F.broadcast(pairs.select("ga", "gb")), sc["grp"] == F.col("ga")
-        ).select("ga", "gb", "t", F.col("cs").alias("csa"))
-        right = sc.join(
-            F.broadcast(pairs.select("ga", "gb")), sc["grp"] == F.col("gb")
-        ).select("ga", "gb", "t", F.col("cs").alias("csb"))
-        both = (
-            left.join(right, ["ga", "gb", "t"], "full_outer")
-            .select(
-                "ga",
-                "gb",
-                F.coalesce("csa", F.lit(0)).cast("long").alias("csa"),
-                F.coalesce("csb", F.lit(0)).cast("long").alias("csb"),
-            )
-            .join(F.broadcast(pairs), ["ga", "gb"])
-        )
-        term_nano = _jsd_term_nano(F.col("csa"), F.col("csb"))
-        per_pair = both.groupBy("ga", "gb").agg(
-            F.max("na").alias("na"),
-            F.max("nb").alias("nb"),
-            F.max("v").alias("v"),
-            F.count(F.lit(1)).cast("long").alias("union_types"),
-            F.sum(term_nano).alias("s_nano"),
-        )
-        return _jsd_finish(per_pair)
-
-    # Decomposed token-keyed path (guide §2.3 "aggregate before you
-    # shuffle" / §2.4): the union-token sum splits so no S²-sized
-    # frame is ever shuffled:
-    #
-    #   Σ_{t∈a∪b} T(cₐ,c_b) = Σ_{t∈a∩b} [T(cₐ,c_b) − T(cₐ,0) − T(0,c_b)]
-    #                        + Σ_{t∈a}  T(cₐ,0)  +  Σ_{t∈b} T(0,c_b)
-    #
-    # The a∩b part needs ONE shuffle of the (grp, token, count) rows
-    # keyed by TOKEN: each token's ≤ S (slice, count) entries expand
-    # to ordered pairs IN-TASK (the _lsh_pairs nested-transform shape)
-    # and partial-agg straight back to P rows.  The one-side sums
-    # never touch tokens at all: Σ_{t∈a} T(cₐ,0) = Σ_c hist_a(c)·T(c,0)
-    # over the count-of-counts histogram (Zipf-tiny), joined to a
-    # broadcast (pair, role) table.  union_types = Vₐ + V_b − |a∩b|.
-    grouped = sc.groupBy("t").agg(
-        F.sort_array(F.collect_list(F.struct("grp", "cs"))).alias("gs")
-    )
-    mp = F.flatten(
-        F.transform(
-            F.col("gs"),
-            lambda a, i: F.transform(
-                F.slice(F.col("gs"), i + 2, F.size(F.col("gs"))),
-                lambda b: F.struct(
-                    a["grp"].alias("ga"),
-                    b["grp"].alias("gb"),
-                    a["cs"].alias("csa"),
-                    b["cs"].alias("csb"),
-                ),
-            ),
-        )
-    )
-    matched = (
-        grouped.where(F.size("gs") > 1)
-        .select(F.explode(mp).alias("p"))
-        .select("p.ga", "p.gb", "p.csa", "p.csb")
-        .join(F.broadcast(pairs), ["ga", "gb"])
-    )
-    madj = matched.groupBy("ga", "gb").agg(
-        F.count(F.lit(1)).cast("long").alias("n_match"),
-        F.sum(
-            _jsd_term_nano(F.col("csa"), F.col("csb"))
-            - _jsd_term_nano(F.col("csa"), F.lit(0))
-            - _jsd_term_nano(F.lit(0), F.col("csb"))
-        ).cast("long").alias("adj_nano"),
-    )
-    # count-of-counts histogram: ONE scan of the checkpointed blocks
-    # serves both pair roles via a driver-built (grp, pair, role) fan
-    # table (2P rows, broadcast)
-    hist = sc.groupBy("grp", "cs").agg(
-        F.count(F.lit(1)).cast("long").alias("nt")
-    )
-    role_rows = [
-        (r[0], r[0], r[1], r[2], r[3], r[4], True) for r in pair_rows
-    ] + [
-        (r[1], r[0], r[1], r[2], r[3], r[4], False) for r in pair_rows
-    ]
-    roles = docs.sparkSession.createDataFrame(
-        role_rows,
-        "grp string, ga string, gb string, na long, nb long, v long, is_a boolean",
-    )
-    zero = F.lit(0).cast("long")
-    side = (
-        hist.join(F.broadcast(roles), "grp")
-        .groupBy("ga", "gb")
-        .agg(
-            F.sum(
-                F.when(F.col("is_a"), F.col("nt") * _jsd_term_nano(F.col("cs"), F.lit(0))).otherwise(zero)
-            ).cast("long").alias("sa_nano"),
-            F.sum(
-                F.when(~F.col("is_a"), F.col("nt") * _jsd_term_nano(F.lit(0), F.col("cs"))).otherwise(zero)
-            ).cast("long").alias("sb_nano"),
-            F.sum(F.when(F.col("is_a"), F.col("nt")).otherwise(zero)).cast("long").alias("va"),
-            F.sum(F.when(~F.col("is_a"), F.col("nt")).otherwise(zero)).cast("long").alias("vb"),
-        )
-    )
-    per_pair = (
-        pairs.join(side, ["ga", "gb"], "left")
-        .join(madj, ["ga", "gb"], "left")
+    left = sc.join(
+        F.broadcast(pairs.select("ga", "gb")), sc["grp"] == F.col("ga")
+    ).select("ga", "gb", "t", F.col("cs").alias("csa"))
+    right = sc.join(
+        F.broadcast(pairs.select("ga", "gb")), sc["grp"] == F.col("gb")
+    ).select("ga", "gb", "t", F.col("cs").alias("csb"))
+    both = (
+        left.join(right, ["ga", "gb", "t"], "full_outer")
         .select(
             "ga",
             "gb",
-            "na",
-            "nb",
-            "v",
-            (
-                F.coalesce("va", zero)
-                + F.coalesce("vb", zero)
-                - F.coalesce("n_match", zero)
-            ).cast("long").alias("union_types"),
-            (
-                F.coalesce("sa_nano", zero)
-                + F.coalesce("sb_nano", zero)
-                + F.coalesce("adj_nano", zero)
-            ).cast("long").alias("s_nano"),
+            F.coalesce("csa", F.lit(0)).cast("long").alias("csa"),
+            F.coalesce("csb", F.lit(0)).cast("long").alias("csb"),
         )
+        .join(F.broadcast(pairs), ["ga", "gb"])
     )
-    return _jsd_finish(per_pair)
+    term_nano = _jsd_term_nano(F.col("csa"), F.col("csb"))
+    per_pair = both.groupBy("ga", "gb").agg(
+        F.max("na").alias("na"),
+        F.max("nb").alias("nb"),
+        F.max("v").alias("v"),
+        F.count(F.lit(1)).cast("long").alias("union_types"),
+        F.sum(term_nano).alias("s_nano"),
+    )
+    p0 = 1.0 / (F.col("na") + F.col("v"))
+    q0 = 1.0 / (F.col("nb") + F.col("v"))
+    m0 = (p0 + q0) / 2
+    tail = (F.col("v") - F.col("union_types")) * (
+        0.5 * p0 * F.log(p0 / m0) + 0.5 * q0 * F.log(q0 / m0)
+    )
+    return per_pair.select(
+        F.col("ga").alias("source_a"),
+        F.col("gb").alias("source_b"),
+        F.col("na").cast("long").alias("n_a"),
+        F.col("nb").cast("long").alias("n_b"),
+        "union_types",
+        F.round(F.col("s_nano") / 1e9 + tail, 6).alias("jsd"),
+    ).orderBy("source_a", "source_b")

@@ -802,7 +802,7 @@ def dedup_pipeline(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     edges = _verify_jaccard(
         cand, _shingle_sets(sh, "doc_id", "digest"), "doc_id", threshold
     ).select("doc_a", "doc_b")
-    labels = connected_components(edges, max_iter=20).withColumnRenamed("doc_id", "doc_id")
+    labels = connected_components(edges, max_iter=20)
     clus = (
         docs.select(F.col("doc_id"))
         .join(labels, "doc_id", "left")
@@ -1278,9 +1278,9 @@ def dedup_sorted_neighborhood(
     boilerplate, reordered clauses) still sort adjacently.  Candidate
     pairs union before one shared verify.
 
-    Scale shape — the global rank is the bucketed two-pass (same
-    discipline as shard_assign): a naive ``row_number() OVER (ORDER BY
-    key)`` funnels 100 TB through ONE task.  Instead the key's 2-char
+    Scale shape — the global rank is a bucketed two-pass: a naive
+    ``row_number() OVER (ORDER BY key)`` has no partition key, so it
+    funnels every row through ONE task.  Instead the key's 2-char
     prefix forms a bucket (lexicographic (bucket, key) order == key
     order by construction), pass 1 counts per bucket (tiny frame,
     prefix-summed with a single window over ≤256² rows), pass 2 ranks

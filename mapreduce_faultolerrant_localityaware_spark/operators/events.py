@@ -265,13 +265,12 @@ def cusum_drift(events: DataFrame) -> DataFrame:
     means = staged.groupBy("user_id").agg(
         F.floor(F.sum("vm") / F.count(F.lit(1))).cast("long").alias("mean_m")
     )
-    slack_m = 0
     thr_m = 50_000_000
     j = staged.join(means, "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    s = F.sum(F.col("vm") - F.col("mean_m") - F.lit(slack_m)).over(w)
+    s = F.sum(F.col("vm") - F.col("mean_m")).over(w)
     # two projections: a window function cannot nest inside another,
     # but both share the same (key, ts, id) sort so Spark plans ONE
     # exchange + sort and stacks the second window on the first

@@ -413,84 +413,20 @@ def corr_matrix(
     )
 
 
-def percentile_edges_bucketed(
-    edge_df: DataFrame, col: str, qs: Sequence[float]
-) -> DataFrame:
-    """1-row frame of EXACT interpolated percentiles of an integer
-    column (``e0..e{m-1}``), computed from bucketed cumulative counts
-    instead of the built-in exact ``percentile`` aggregate.  The
-    built-in buffers a value→count map whose size is the DISTINCT
-    value domain **in one final-aggregation task** — fine for
-    tie-heavy columns, the round-10 continuous-domain caveat in
-    aggregate-buffer form when values are near-unique.  Here the
-    domain collapses to (value, count) rows, cumulative counts come
-    from :func:`bucketed_cum_counts` (fully parallel), and each
-    requested percentile reads its two order statistics with one
-    conditional aggregate.
-
-    Bit-parity: reproduces ``Percentile.getPercentile``'s exact IEEE
-    expression — ``pos = (n−1)·q``; lower/higher order statistics at
-    ``floor(pos)``/``ceil(pos)``; result
-    ``v_lo·(higher−pos) + v_hi·(pos−lower)`` (NOT the algebraically
-    equal ``v_lo + frac·Δ``, which rounds differently) — so swapping
-    it under :func:`equidepth_bins` changes no output bit and the
-    DuckDB oracles keep matching.  NULLs are EXCLUDED before counting
-    (the built-in percentile aggregate skips them; counting the NULL
-    group would inflate n and shift every order statistic).
-    """
-    per = (
-        edge_df.where(F.col(col).isNotNull())
-        .groupBy(F.col(col).alias("__v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("__t"))
-    )
-    cum = bucketed_cum_counts(per, "__v", [("__t", "__ct")], with_totals=True)
-    n = F.col("__ct_tot")
-    lo_rank = (F.col("__ct") - F.col("__t")).cast("long")  # first 0-based rank
-    hi_rank = (F.col("__ct") - 1).cast("long")             # last 0-based rank
-    aggs = [F.max(n).alias("__n")]
-    for i, q in enumerate(qs):
-        pos = (n - 1).cast("double") * F.lit(float(q))
-        lo = F.floor(pos).cast("long")
-        hi = F.ceil(pos).cast("long")
-        aggs.append(
-            F.min(F.when((lo_rank <= lo) & (lo <= hi_rank), F.col("__v")))
-            .cast("double")
-            .alias(f"__vl{i}")
-        )
-        aggs.append(
-            F.min(F.when((lo_rank <= hi) & (hi <= hi_rank), F.col("__v")))
-            .cast("double")
-            .alias(f"__vh{i}")
-        )
-    s = cum.agg(*aggs)
-    outs = []
-    for i, q in enumerate(qs):
-        pos = (F.col("__n") - 1).cast("double") * F.lit(float(q))
-        lo = F.floor(pos).cast("long")
-        hi = F.ceil(pos).cast("long")
-        outs.append(
-            F.when(lo == hi, F.col(f"__vl{i}"))
-            .otherwise(
-                F.col(f"__vl{i}") * (hi.cast("double") - pos)
-                + F.col(f"__vh{i}") * (pos - lo.cast("double"))
-            )
-            .alias(f"e{i}")
-        )
-    return s.select(*outs)
-
-
 def equidepth_bins(apply_df: DataFrame, edge_df: DataFrame, col: str, n_bins: int) -> DataFrame:
     """Shared equi-depth binning core (histogram_equidepth, psi_drift):
-    edges are EXACT percentiles of ``edge_df[col]`` from one 1-row
-    aggregate (:func:`percentile_edges_bucketed` — r11: bucketed
-    order statistics, so a near-unique value domain no longer rides
-    one task's percentile buffer), binning is a map-side comparison
-    chain against the broadcast edge row.  Never a global sort or a
-    raw-row ntile.  Returns ``apply_df`` + ``bin`` (1-based) with the
-    edge columns still attached (select them away).
+    edges ``e0..e{n_bins-2}`` are EXACT interpolated percentiles of
+    ``edge_df[col]`` (NULLs skipped) from ONE array-valued ``percentile``
+    aggregate — one value→count buffer serves every quantile, where one
+    aggregate per quantile would build ``n_bins − 1`` of them.  Binning
+    is a map-side comparison chain against the broadcast 1-row edge
+    frame.  Never a global sort or a raw-row ntile.  Returns
+    ``apply_df`` + ``bin`` (1-based) with the edge columns still
+    attached (select them away).
     """
     qs = [i / n_bins for i in range(1, n_bins)]
-    edges = percentile_edges_bucketed(edge_df, col, qs)
+    pct = edge_df.agg(F.percentile(col, qs).alias("__e"))
+    edges = pct.select(*[F.col("__e")[i].alias(f"e{i}") for i in range(len(qs))])
     j = apply_df.join(F.broadcast(edges))
     b = F.lit(1)
     for i in range(len(qs)):
@@ -977,9 +913,8 @@ def bucketed_cum_counts(
     already shrank the rank family's ordered window to the DOMAIN
     table, but a near-row-cardinality domain (continuous model scores,
     unique monetary cents) still funneled ~N (value, count) rows
-    through ONE cumulative-window task.  This generalizes the
-    :func:`~..operators.corpus.shard_assign` prefix-bucket discipline
-    to an arbitrary NUMERIC total order:
+    through ONE cumulative-window task.  This splits an arbitrary
+    NUMERIC total order into value cells and prefix-sums twice:
 
     1. one 1-row (min, max) aggregate broadcasts back (the tfidf-style
        scalar attach) and every row gets a DETERMINISTIC equi-width
@@ -1177,9 +1112,7 @@ def exact_ntile(
     ``WindowExec: No Partition Defined`` warning); this computes the
     identical bucket (SQL ntile remainder semantics: with N rows the
     first ``N mod n`` buckets get ``N div n + 1`` rows) in two
-    distributed passes, the :func:`~..operators.corpus.shard_assign` /
-    ``histogram_equidepth`` discipline adapted to an arbitrary total
-    order:
+    distributed passes over an arbitrary total order:
 
     1. collapse to the DISTINCT value domain (hash aggregate), then
        compute each value's strictly-below row count ``cb`` and the

@@ -62,7 +62,7 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
         F.size(F.filter(tk, _eq(t))).alias(f"tf_{i}") for i, t in enumerate(terms)
     ]
     base = docs.select(
-        F.col("doc_id").alias("doc_id"), F.size(tk).alias("dl"), *tf_cols
+        F.col("doc_id"), F.size(tk).alias("dl"), *tf_cols
     )
     # single-row corpus stats: N, avgdl, df per term.  count(*) over
     # the same pass (NOT a second scan) — exchange-free partial aggs.

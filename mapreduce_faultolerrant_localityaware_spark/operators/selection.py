@@ -47,7 +47,7 @@ def pareto_front(points: DataFrame) -> DataFrame:
     independent formulation, so the gate cross-checks the rewrite.
     """
     per_x = (
-        points.groupBy(F.col("x").alias("x"), F.col("y").alias("y"))
+        points.groupBy(F.col("x"), F.col("y"))
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("rep_id"))
         .groupBy("x")
         .agg(

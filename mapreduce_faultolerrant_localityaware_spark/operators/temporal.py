@@ -162,7 +162,7 @@ def resample_ohlc(events: DataFrame) -> DataFrame:
     """
     bucket = F.date_trunc("day", F.col("ts"))
     s = F.struct(
-        F.col("ts").alias("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
+        F.col("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
     )
     return events.groupBy(F.col("user_id"), bucket.alias("bucket")).agg(
         F.round(F.min(s)["v"], 6).alias("open"),

@@ -854,7 +854,7 @@ def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     ordered by language.
     """
     toks = tokens("text")
-    per = docs.groupBy(F.col("lang").alias("lang")).agg(
+    per = docs.groupBy(F.col("lang")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(words(F.col("text")))).cast("long").alias("n_words"),
         F.sum(F.size(toks)).cast("long").alias("n_tokens"),

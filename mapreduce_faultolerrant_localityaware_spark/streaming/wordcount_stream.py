@@ -115,7 +115,7 @@ def ohlc_stream(events: DataFrame) -> DataFrame:
     bounds how many windows stay open.
     """
     s = F.struct(
-        F.col("ts").alias("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
+        F.col("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
     )
     return (
         events.withWatermark("ts", "1 day")

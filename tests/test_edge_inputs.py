@@ -244,9 +244,15 @@ def test_round7_ops_on_nulls_and_empties(spark):
     assert cov[1]["n_shingles"] == 0 and cov[1]["dup_frac"] == 0.0
     assert cov[4]["n_shingles"] == 2
 
-    # shard_assign: every doc sharded exactly once, dense positions
-    sa = corpus.shard_assign(df, n_shards=4).collect()
-    assert len(sa) == 4 and len({r["doc_id"] for r in sa}) == 4
+    # shard_assign: every doc sharded exactly once, dense positions —
+    # a NULL id included (its NULL shard is a partition of its own)
+    sa = corpus.shard_assign(df.union(_docs(spark, [(None, "x")])), n_shards=4).collect()
+    assert sorted(r["doc_id"] for r in sa if r["doc_id"] is not None) == [1, 2, 3, 4]
+    assert [(r["shard"], r["pos"]) for r in sa if r["doc_id"] is None] == [(None, 1)]
+    by_shard = {}
+    for r in sa:
+        by_shard.setdefault(r["shard"], []).append(r["pos"])
+    assert all(sorted(p) == list(range(1, len(p) + 1)) for p in by_shard.values())
 
     # bpe_train on a corpus with no repeated pairs: empty merge table
     empty_rules = corpus.bpe_train(_docs(spark, [(1, "ab cd")]), n_merges=5)

@@ -5,6 +5,7 @@ the mechanical bench calibration gate."""
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 
@@ -203,23 +204,40 @@ def test_percent_rank_global_keeps_null_rows(spark):
     assert out[1] == pytest.approx(1 / 3) and out[3] == 1.0
 
 
-def test_percentile_edges_excludes_nulls(spark):
-    """The built-in percentile aggregate skips NULLs; the bucketed
-    replacement must too (counting the NULL group shifts every order
-    statistic)."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.relational import (
-        percentile_edges_bucketed,
-    )
+def _interp_edges(values, n_bins):
+    """Linear-interpolation percentiles of the non-NULL ``values`` at
+    i/n_bins, in Percentile.getPercentile's IEEE form."""
+    v = sorted(x for x in values if x is not None)
+    edges = []
+    for i in range(1, n_bins):
+        pos = (len(v) - 1) * (i / n_bins)
+        lo, hi = math.floor(pos), math.ceil(pos)
+        edges.append(float(v[lo]) if lo == hi else (hi - pos) * v[lo] + (pos - lo) * v[hi])
+    return edges
 
+
+def _check_equidepth_bins(df, n_bins):
+    """equidepth_bins' edges and bins against :func:`_interp_edges`:
+    a row's bin is 1 + the number of edges its value exceeds; a NULL
+    value gets a NULL bin."""
+    from mapreduce_faultolerrant_localityaware_spark.operators.relational import equidepth_bins
+
+    rows = equidepth_bins(df, df, "v", n_bins).collect()
+    edges = _interp_edges([r["v"] for r in rows], n_bins)
+    assert [rows[0][f"e{i}"] for i in range(n_bins - 1)] == edges
+    for r in rows:
+        want = None if r["v"] is None else 1 + sum(r["v"] > e for e in edges)
+        assert r["bin"] == want, (r["v"], r["bin"], want)
+    return edges
+
+
+def test_percentile_edges_excludes_nulls(spark):
+    """NULLs are skipped when the edges are computed (counting them
+    would shift every order statistic) and fall in no bin."""
     df = spark.createDataFrame(
         [(v,) for v in [1, 2, 3, 4, None, None, 5]], "v long"
     )
-    ref = df.agg(
-        *[F.percentile("v", F.lit(q)).alias(f"e{i}") for i, q in enumerate([0.25, 0.5, 0.9])]
-    ).collect()[0]
-    got = percentile_edges_bucketed(df, "v", [0.25, 0.5, 0.9]).collect()[0]
-    for i in range(3):
-        assert ref[f"e{i}"] == got[f"e{i}"]
+    assert _check_equidepth_bins(df, 4) == [2.0, 3.0, 4.0]
 
 
 def test_grouping_key_tracer_rejects_composite_and_id_collision(spark, sf_dir):
@@ -246,16 +264,10 @@ def test_grouping_key_tracer_rejects_composite_and_id_collision(spark, sf_dir):
 
 
 def test_percentile_edges_bucketed_bit_equal(spark, sf_dir):
-    """percentile_edges_bucketed must reproduce the built-in exact
-    `percentile` aggregate BIT-for-bit (it replicates
-    Percentile.getPercentile's IEEE expression, not an algebraic
-    equivalent) — on a tie-heavy domain AND a near-unique one."""
-    from mapreduce_faultolerrant_localityaware_spark.operators.relational import (
-        percentile_edges_bucketed,
-    )
-
+    """equidepth_bins' edges are the exact interpolated percentiles,
+    bit for bit, and its bins follow them — on a tie-heavy domain, a
+    near-unique one, and edges at fractional ranks (n_bins 10 and 7)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    qs = [i / 10 for i in range(1, 10)] + [0.333, 0.007, 0.999]
     for base in (
         ev.select(F.round(F.col("value") * 100).cast("long").alias("v")),
         ev.select(
@@ -264,12 +276,8 @@ def test_percentile_edges_bucketed_bit_equal(spark, sf_dir):
             .alias("v")
         ),
     ):
-        ref = base.agg(
-            *[F.percentile("v", F.lit(q)).alias(f"e{i}") for i, q in enumerate(qs)]
-        ).collect()[0]
-        got = percentile_edges_bucketed(base, "v", qs).collect()[0]
-        for i in range(len(qs)):
-            assert ref[f"e{i}"] == got[f"e{i}"], (qs[i], ref[f"e{i}"], got[f"e{i}"])
+        for n_bins in (10, 7):
+            _check_equidepth_bins(base, n_bins)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,17 @@
-"""Round-12 optimization-pass tests: the js_divergence dual-path
-dispatch, the literal-min/max bucketed_cum_counts cells, NULL handling
+"""Round-12 optimization-pass tests: js_divergence against a
+pure-Python JSD, the literal-min/max bucketed_cum_counts cells, NULL handling
 in the rank machinery (ADVICE r11), the assortativity symmetric-sum
 rewrite, and the non-finite / INT_MIN literal-table edges."""
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
+import re
 import sys
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,7 +30,7 @@ from mapreduce_faultolerrant_localityaware_spark.operators.relational import (
 
 
 # ---------------------------------------------------------------------------
-# js_divergence: both dispatch paths are bit-identical
+# js_divergence against a pure-Python JSD
 # ---------------------------------------------------------------------------
 
 def _jsd_docs(spark):
@@ -42,16 +46,48 @@ def _jsd_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
+def _half_up(x: float, places: int) -> float:
+    """Spark's ``round``: HALF_UP on the double's exact decimal value."""
+    q = Decimal(1).scaleb(-places)
+    return float(Decimal(x).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def _py_jsd(rows):
+    """Pairwise JSD of the slices' unigram counts, add-one smoothed
+    over the corpus vocabulary V: each union token's term rounds to
+    integer nano units before summation, and the V − |union| tokens
+    in neither slice add one closed-form term each."""
+    counts = {}
+    for _, src, text in rows:
+        c = counts.setdefault(src, Counter())
+        c.update(re.findall(r"[^\W\d_]+", text))
+    v = len(set().union(*counts.values()))
+
+    def term(ca, cb, na, nb):
+        pa, pb = (ca + 1.0) / (na + v), (cb + 1.0) / (nb + v)
+        m = (pa + pb) / 2
+        return 0.5 * pa * math.log(pa / m) + 0.5 * pb * math.log(pb / m)
+
+    out = []
+    for a, b in itertools.combinations(sorted(counts), 2):
+        ca, cb = counts[a], counts[b]
+        na, nb = sum(ca.values()), sum(cb.values())
+        union = set(ca) | set(cb)
+        s_nano = sum(int(_half_up(term(ca[t], cb[t], na, nb) * 1e9, 0)) for t in union)
+        tail = (v - len(union)) * term(0, 0, na, nb)
+        out.append((a, b, na, nb, len(union), _half_up(s_nano / 1e9 + tail, 6)))
+    return out
+
+
 def test_js_divergence_paths_identical(spark):
-    """The fan-out path (small corpora) and the token-keyed
-    decomposition (large fan-outs) must agree bit-for-bit: per-term
-    NANO rounding happens before any summation, so both are exact
-    BIGINT sums of the same terms."""
+    """js_divergence equals a pure-Python JSD of the same 120 docs:
+    exact slice totals and union sizes, JSD to its 6 rounded places."""
     docs = _jsd_docs(spark)
-    a = sorted(map(tuple, corpus.js_divergence(docs).collect()))
-    b = sorted(map(tuple, corpus.js_divergence(docs, fanout_limit=0).collect()))
-    assert a == b
-    assert len(a) == 6  # 4 sources -> 6 pairs
+    got = [tuple(r) for r in corpus.js_divergence(docs).collect()]
+    want = _py_jsd(docs.collect())
+    assert len(got) == 6  # 4 sources -> 6 pairs
+    assert [g[:5] for g in got] == [w[:5] for w in want]
+    assert [g[5] for g in got] == pytest.approx([w[5] for w in want], abs=1e-6)
 
 
 # ---------------------------------------------------------------------------
